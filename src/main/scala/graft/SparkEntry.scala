@@ -44,67 +44,6 @@ object SparkEntry {
                                       capDiskBytes: Long)(df: DataFrame): DataFrame =
     if (Tables.bytesOnDisk(s, d, table) <= capDiskBytes) broadcast(df) else df
 
-  /** Scale-adaptive scan fan-out width (r12 optimization round;
-    * width made input-proportional in r13).
-    *
-    * Tier parquet is written as ONE row group per table, so a scan
-    * can never parallelize past the file count no matter how small
-    * `maxPartitionBytes` is — at sf0.1 every corpus HOF pass
-    * (tokenize/shingle/trigram) runs as ONE task on a 32-core box.
-    * Gates whose per-row CPU dominates pass this width to their
-    * operator (or repartition the scan directly): the table's
-    * FS-metadata byte size (no Spark job — the broadcastIfUnder
-    * recipe) says how many scan splits the file CAN yield; when that
-    * is below the core count, fan out, else 0 (= leave the scan
-    * alone). At 100 TB the condition is false by construction —
-    * thousands of splits already fill every core — so the extra
-    * (tiny) exchange exists only in the regime where it costs
-    * microseconds and buys a core-count speedup of the dominant CPU
-    * pass.
-    *
-    * The WIDTH is input-proportional, not `defaultParallelism`
-    * (r12 verdict item 2): pinning every spread to the core count
-    * made the whole sf0.1 bench run FASTER at 8 cores than at 32
-    * (21.4 s vs 28.1 s, driver-measured) — each spread-fed stage
-    * chain paid 32-task waves to move KBs. One task per
-    * [[SpreadChunkBytes]] of on-disk input (clamped to [2, cores])
-    * keeps a tiny tier at single-digit widths while an sf10-sized
-    * tier still saturates the box; at the 8-core driver rerun the
-    * clamp reproduces the old widths, so the scaling comparison
-    * stays apples-to-apples.
-    */
-  private[graft] def scanFanout(s: SparkSession, d: String, table: String): Int = {
-    val bytes = Tables.bytesOnDisk(s, d, table)
-    val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
-    val cores = s.sparkContext.defaultParallelism
-    if (bytes >= cores.toLong * maxSplit) 0
-    else math.max(2L, math.min(cores.toLong, bytes / SpreadChunkBytes + 1L)).toInt
-  }
-
-  /** On-disk bytes per spread task ([[scanFanout]]). 128 KiB of
-    * snappy parquet ≈ a thousand documents ≈ ~100 ms of
-    * tokenize/shingle CPU — deep enough to amortize a task launch
-    * and its downstream stage waves, shallow enough that a 600 KB
-    * tier still spreads 5 wide. Chosen by a measured sweep (r13:
-    * widths 32/19/10/5/3 over the seven documents-spread gates —
-    * width 5 won or tied every query; the old cores-pinned 32 lost
-    * up to 30%). Env-overridable for A/B sweeps (measurement
-    * tooling, not a tuning surface: production scans never take
-    * this path).
-    */
-  private[graft] val SpreadChunkBytes: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_CHUNK").flatMap(_.toLongOption)
-      .filter(_ > 0).getOrElse(131072L)
-
-  /** Round-robin fan-out of a small scan per [[scanFanout]] — identity
-    * when the table already scans wide (the 100 TB case).
-    */
-  private[graft] def spreadIfSmall(s: SparkSession, d: String, table: String)(
-      df: DataFrame): DataFrame = {
-    val n = scanFanout(s, d, table)
-    if (n > 0) df.repartition(n) else df
-  }
-
   /** Engine-portable half-up rounding on non-negative doubles:
     * `floor(x*10^dp + 0.5)/10^dp`. Unlike `round()`, both engines
     * apply identical IEEE ops to the identical binary double, so a
@@ -813,7 +752,7 @@ object SparkEntry {
       // shape); the operator itself is the one-exchange build/merge.
       // The 3-column projection is NOT cached: r10 cached it for the
       // harness's five probes and REGRESSED the gate 1.39x — r11
-      // DevAB at sf10 (hllAB, min-of-3 steady state): full gate
+      // A/B at sf10 (min-of-3 steady state): full gate
       // 3.5-4.1 s uncached vs 3.8-4.0 s cached with an 11.6 s cold
       // first run, because building the columnar cache costs more
       // than the five pushed-down 3-column parquet rescans it saves,
@@ -928,7 +867,7 @@ object SparkEntry {
       Cooccur.pmi(Tables.documents(s, d).select("doc_id", "text"),
         "doc_id", TF.tokens(col("text")),
         minDf = 5, minPairCount = 5, topK = 40,
-        spreadPairGrid = scanFanout(s, d, "documents"))),
+        spreadPairGrid = Spread.scanFanout(s, d, "documents"))),
 
     "q_source_overlap" -> ((s, d) =>
       // cross-source contamination matrix: shared 3-shingles per
@@ -939,7 +878,7 @@ object SparkEntry {
       // fans out only when the tier file is single-split (scanFanout):
       // the native shingle pass is the dominant CPU and must not run
       // as one task on a tiny single-row-group file
-      SourceOverlap.matrix(spreadIfSmall(s, d, "documents")(
+      SourceOverlap.matrix(Spread.ifSmall(s, d, "documents")(
         Tables.documents(s, d)), "source", col("text"), k = 3)),
 
     "q_source_overlap_sketch" -> ((s, d) => {
@@ -959,7 +898,7 @@ object SparkEntry {
       // SourceOverlap.sketchMatrix for pipelines that DON'T carry the
       // exact side. Report is |sources|²-bounded → materialized
       // eagerly, cache released (the SourceOverlap.matrix contract).
-      val docs = spreadIfSmall(s, d, "documents")(Tables.documents(s, d))
+      val docs = Spread.ifSmall(s, d, "documents")(Tables.documents(s, d))
       val bySh = SourceOverlap.shingleSets(docs, "source", col("text"), k = 3)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val exact = SourceOverlap.matrixFromSets(bySh)
@@ -986,7 +925,7 @@ object SparkEntry {
       // matrix SQL (EXTRAS_BASELINE_FROM_ORACLE in tools/baseline.py).
       graft.operators.SourceOverlap.materialized(
         SourceOverlap.sketchMatrix(
-          spreadIfSmall(s, d, "documents")(Tables.documents(s, d)), "source",
+          Spread.ifSmall(s, d, "documents")(Tables.documents(s, d)), "source",
           col("text"), k = 3))),
 
     "q_drift_psi" -> ((s, d) => {
@@ -1090,7 +1029,7 @@ object SparkEntry {
       val raw = graft.pipeline.Medallion.rawFromOrders(s, d)
       val catalog = Tables.customer(s, d).select(col("c_custkey"), col("c_name"))
       graft.pipeline.Medallion.silver(raw, catalog, "c_custkey", "c_name", 2026,
-        dedupSpreadN = scanFanout(s, d, "orders"))
+        dedupSpreadN = Spread.scanFanout(s, d, "orders"))
         .select(col("matricula"), col("estado"),
           date_format(col("fecha_matricula"), "yyyy-MM-dd").as("fecha_matricula"),
           col("clase_identificacion"), col("id_titular"), col("titular_name"),
@@ -1750,7 +1689,7 @@ object SparkEntry {
       // exchange is sized by the vocabulary.
       // eps=1e-3 (7x2000 grid, ~112 KB): the grid a 100 TB run would
       // pick (per-executor-cache-resident; still a ±0.1%·N envelope).
-      // r10 DevAB sf10: sketch pass 0.78-0.85 s at eps=1e-4 → 0.60-
+      // r10 A/B sf10: sketch pass 0.78-0.85 s at eps=1e-4 → 0.60-
       // 0.66 s at 1e-3; exact side 0.49-0.56 s; harness ≈ their sum —
       // the residual vs the 0.31 s oracle is that the CHECK HARNESS
       // runs both passes while the oracle runs only the exact one
@@ -1778,7 +1717,7 @@ object SparkEntry {
       // single-split tier scan; at-scale shape pinned by the regime
       // test
       graft.operators.Dsir.weights(
-        spreadIfSmall(s, d, "documents")(Tables.documents(s, d)), "doc_id",
+        Spread.ifSmall(s, d, "documents")(Tables.documents(s, d)), "doc_id",
         "text", col("lang") === "en")),
 
     "q_dsir_sample" -> ((s, d) =>
@@ -1833,7 +1772,7 @@ object SparkEntry {
       graft.operators.Novelty.report(
         docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L),
         docs.filter(pmod(col("doc_id"), lit(5L)) === 0L),
-        "doc_id", "text", k = 3, spreadN = scanFanout(s, d, "documents"))
+        "doc_id", "text", k = 3, spreadN = Spread.scanFanout(s, d, "documents"))
     }),
 
     "q_bloom_ingest_dedup" -> ((s, d) => {
@@ -1916,7 +1855,7 @@ object SparkEntry {
             "timestamp'2024-02-01 00:00:00')").as("ts"))
       val all = ev.select("event_id", "user_id", "ts").unionByName(bot)
       graft.operators.Burstiness.report(all, "user_id", "ts", "event_id",
-        minGaps = 5, cvBelow = 0.3, spreadN = scanFanout(s, d, "events"))
+        minGaps = 5, cvBelow = 0.3, spreadN = Spread.scanFanout(s, d, "events"))
     }),
 
     "q_mad_outliers" -> ((s, d) => {
@@ -2009,7 +1948,7 @@ object SparkEntry {
 
     "q_token_count" -> ((s, d) =>
       // size-gated spread (r13, the q_quality_score pattern)
-      spreadIfSmall(s, d, "documents")(Tables.documents(s, d))
+      Spread.ifSmall(s, d, "documents")(Tables.documents(s, d))
         .select(col("doc_id"),
           TF.tokenCount(col("text")).as("ws_tokens"),
           TF.bpeTokenCount(col("text")).as("bpe_tokens"))),
@@ -2018,7 +1957,7 @@ object SparkEntry {
       // scan-pure rules pass; the size-gated spread (r13) fans the
       // single-split tier scan out — the 100 TB zero-shuffle contract
       // is pinned by PlanSpec's at-scale regime test
-      spreadIfSmall(s, d, "documents")(Tables.documents(s, d)).select(col("doc_id"),
+      Spread.ifSmall(s, d, "documents")(Tables.documents(s, d)).select(col("doc_id"),
         TF.qualityScore(col("text"), stopwords).as("quality"),
         pround(TF.meanTokenLen(col("text")), 2).as("mean_token_len"),
         pround(TF.alphaRatio(col("text")), 4).as("alpha_ratio"))),
@@ -2052,7 +1991,7 @@ object SparkEntry {
       // rules pass otherwise runs as ONE task off a single-split tier
       // file; at-scale zero-shuffle shape pinned by the regime test
       GopherRules.signals(
-        spreadIfSmall(s, d, "documents")(
+        Spread.ifSmall(s, d, "documents")(
           Tables.documents(s, d).select("doc_id", "text")).unionByName(planted))
     }),
 
@@ -2171,7 +2110,7 @@ object SparkEntry {
       // reproduces bit-for-bit — see QualityClassifier.marginCheck
       // size-gated spread (r13, the q_quality_score pattern)
       graft.operators.QualityClassifier.marginCheck(
-        spreadIfSmall(s, d, "documents")(Tables.documents(s, d)),
+        Spread.ifSmall(s, d, "documents")(Tables.documents(s, d)),
         "doc_id", "text")),
 
     "q_classifier_train_check" -> ((s, d) => {
@@ -2378,7 +2317,7 @@ object SparkEntry {
       // the dominant CPU: fan it out when the tier file is
       // single-split (scanFanout — no-op at scale)
       graft.operators.Bm25.retrievalEval(
-        spreadIfSmall(s, d, "documents")(docs), "doc_id", "text", queries, k = 10)
+        Spread.ifSmall(s, d, "documents")(docs), "doc_id", "text", queries, k = 10)
     }),
 
     "q_tokenizer_fertility" -> ((s, d) => {
@@ -2431,7 +2370,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d)
       graft.operators.BackoffLm.scores(
         docs, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-        spreadTypes = scanFanout(s, d, "documents"))
+        spreadTypes = Spread.scanFanout(s, d, "documents"))
     }),
 
     "q_repetition_stats" -> ((s, d) => {
@@ -2807,7 +2746,7 @@ object SparkEntry {
 
     "q_ngram_jaccard" -> ((s, d) =>
       NgramJaccard.summary(Tables.documents(s, d), "doc_id", "text", k = 3, maxDf = 100,
-        spreadN = scanFanout(s, d, "documents"))),
+        spreadN = Spread.scanFanout(s, d, "documents"))),
 
     "q_dedup_clusters" -> ((s, d) =>
       // pairs → CLUSTERS: alternating large/small-star connected
@@ -2821,7 +2760,7 @@ object SparkEntry {
         Tables.documents(s, d), "doc_id",
         NgramJaccard.pairs(Tables.documents(s, d), "doc_id", "text",
           k = 3, threshold = 0.5, maxDf = 20,
-          spreadN = scanFanout(s, d, "documents")),
+          spreadN = Spread.scanFanout(s, d, "documents")),
         "id_a", "id_b")),
 
     "q_dedup_embedding" -> ((s, d) => {
@@ -2886,7 +2825,7 @@ object SparkEntry {
       // vocabulary join keyed by term (not broadcast — vocab is big at
       // corpus scale), WindowGroupLimit top-k on the 4dp-rounded score
       graft.operators.TfIdf.topTerms(Tables.documents(s, d), "doc_id", "text", k = 3,
-        spreadN = scanFanout(s, d, "documents"))),
+        spreadN = Spread.scanFanout(s, d, "documents"))),
 
     "q_url_dedup" -> ((s, d) => {
       // URL-canonicalization frontier dedup (r11): the corpus has no
@@ -3216,7 +3155,7 @@ object SparkEntry {
       Resample.rolling(
         Tables.events(s, d).select("event_id", "user_id", "ts", "value"),
         Seq("user_id"), "ts", "value", windowSec = 3600,
-        spreadN = scanFanout(s, d, "events"))
+        spreadN = Spread.scanFanout(s, d, "events"))
         .select(col("event_id"), col("user_id"), col("n_window"), col("sum_window"))),
 
     // ===== H. Streaming (batch-equivalent forms) ========================
@@ -3267,7 +3206,7 @@ object SparkEntry {
         turn = concat(col("event_type"), lit(":"),
           floor(col("value") * lit(100.0) + lit(0.5)).cast("long").cast("string")),
         gapMinutes = 30, sep = "\n",
-        spreadN = scanFanout(s, d, "events"))),
+        spreadN = Spread.scanFanout(s, d, "events"))),
 
     "q_sessionize_native" -> ((s, d) =>
       // Spark's built-in session_window: overlapping [ts, ts+gap)

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *  - constant dimensions (zero variance) map to z = 0 rather than a
   *    division blow-up.
   *
-  * Performance floor (r10 DevAB, sf10 = 200k x 64-dim vectors,
+  * Performance floor (r10 A/B, sf10 = 200k x 64-dim vectors,
   * DuckDB oracle 0.30 s): moments pass 0.46 s + z/checksum pass
   * ~0.45 s ≈ 0.9 s total. Both engines run the same TWO full element
   * passes — the residual is Spark's generated-row explode + decimal
@@ -50,7 +50,7 @@ object Standardize {
         // for (ANSI would abort; non-ANSI would wrap to a silent
         // wrong variance). CaseWhen evaluates only the taken branch,
         // so typical-scale features never pay the Int128 multiply
-        // (r10 DevAB, sf10: moments pass 0.55 → 0.46 s). The SUM
+        // (r10 A/B, sf10: moments pass 0.55 → 0.46 s). The SUM
         // stays decimal(38): exact at any corpus size
         sum(when(abs(ix(col("x"))) < lit(3000000000L),
             (ix(col("x")) * ix(col("x"))).cast("decimal(38,0)"))

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.functions.TextFunctions
+import graft.Spread
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -41,16 +42,12 @@ object MinHashLSH {
     */
   def signatures(docs: DataFrame, idCol: String, textCol: String,
                  shingleK: Int = 3, numHashes: Int = 64): DataFrame = {
-    val n = docs.sparkSession.sparkContext.defaultParallelism
     // repartition the RAW text, then shingle: the expensive per-doc
     // expression must run after the exchange, or it executes inside
     // the (possibly single-task) scan stage and the repartition only
-    // spreads already-computed arrays. Guarded (the Decontaminate
-    // pattern, r13): only a scan NARROWER than the cluster pays the
-    // exchange — a well-partitioned 100 TB scan must not round-robin
-    // the full corpus text
+    // spreads already-computed arrays
     val raw = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    (if (raw.rdd.getNumPartitions < n) raw.repartition(n) else raw)
+    Spread.ifNarrow(raw)
       // one native pass tokens → distinct shingle hashes (same bits as
       // array_distinct(transform(shingles, xxhash64)) — see ShingleHash64)
       .select(col("doc_id"), call_function("shingle_hash64",

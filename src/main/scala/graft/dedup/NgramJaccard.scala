@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.functions.TextFunctions
+import graft.Spread
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,13 +33,8 @@ object NgramJaccard {
     */
   def invertedIndex(docs: DataFrame, idCol: String, textCol: String, k: Int,
                     spreadN: Int = 0): DataFrame = {
-    val n = if (spreadN > 0) spreadN
-            else docs.sparkSession.sparkContext.defaultParallelism
-    // guarded spread (the Decontaminate pattern, r13): only a scan
-    // narrower than the cluster pays the raw-text exchange — a
-    // well-partitioned 100 TB scan must not round-robin corpus text
     val raw = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    (if (raw.rdd.getNumPartitions < n) raw.repartition(n) else raw)
+    Spread.ifNarrow(raw, spreadN)
       .select(col("doc_id"), call_function("shingle_hash64",
         TextFunctions.tokens(col("__text")), lit(k)).as("sh"))
       .withColumn("set_size", size(col("sh")).cast("long"))
@@ -67,7 +63,7 @@ object NgramJaccard {
             spreadN: Int = 0): DataFrame = {
     // co-locate postings by shingle ONCE; everything heavy is below
     // this exchange, everything above it is sorts/joins on longs.
-    // spreadN > 0 (small-input regime only — SparkEntry.scanFanout)
+    // spreadN > 0 (small-input regime only — Spread.scanFanout)
     // makes the exchange explicit-width: AQE's size-based coalesce
     // otherwise folds a small tier's postings to ONE partition and
     // the df window + self-join + pair count all run serial.

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Spread
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -69,11 +70,8 @@ object SimHash {
     * heavy per-doc work and must not run inside a single-task scan.
     */
   def fingerprints(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val n = docs.sparkSession.sparkContext.defaultParallelism
-    // guarded spread (the Decontaminate pattern, r13): only a scan
-    // narrower than the cluster pays the raw-text exchange
     val raw = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    (if (raw.rdd.getNumPartitions < n) raw.repartition(n) else raw)
+    Spread.ifNarrow(raw)
       .select(col("doc_id"), simhash("__text").as("simhash"))
   }
 

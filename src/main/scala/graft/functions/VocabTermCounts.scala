@@ -1,8 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -91,13 +93,30 @@ case class VocabTermCountsDyn(left: Expression, right: Expression)
           s"(${l.catalogString}, ${r.catalogString})")
     }
 
-  override def nullSafeEval(tokens: Any, vocab: Any): Any =
-    VocabTermCountsUtil.countsDyn(
-      tokens.asInstanceOf[ArrayData], vocab.asInstanceOf[ArrayData])
+  // NULL tokens → NULL; a NULL vocabulary counts nothing → the empty
+  // map, the literal form's answer for a NULL array literal
+  override def nullable: Boolean = left.nullable
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, v) =>
-      s"${ev.value} = graft.functions.VocabTermCountsUtil.countsDyn($t, $v);")
+  override def eval(input: InternalRow): Any = {
+    val tokens = left.eval(input)
+    if (tokens == null) null
+    else VocabTermCountsUtil.countsDyn(
+      tokens.asInstanceOf[ArrayData], right.eval(input).asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = left.genCode(ctx)
+    val v = right.genCode(ctx)
+    ev.copy(code = code"""
+      ${t.code}
+      boolean ${ev.isNull} = ${t.isNull};
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+      if (!${ev.isNull}) {
+        ${v.code}
+        ${ev.value} = graft.functions.VocabTermCountsUtil.countsDyn(
+          ${t.value}, ${v.isNull} ? null : ${v.value});
+      }""")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VocabTermCountsDyn =
@@ -135,6 +154,7 @@ object VocabTermCountsUtil {
 
   /** See [[VocabTermCountsDyn]]. Shared by interpreted eval and codegen. */
   def countsDyn(tokens: ArrayData, vocab: ArrayData): MapData = {
+    if (vocab == null) return ArrayBasedMapData(Array.empty[Any], Array.empty[Any])
     var c = cached.get()
     if (c == null || !sameContent(c.snapshot, vocab)) {
       val n = vocab.numElements()

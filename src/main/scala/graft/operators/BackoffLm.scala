@@ -120,7 +120,7 @@ object BackoffLm {
     // spreadTypes > 0 re-spreads the type table before the five-join
     // chain: post-shuffle AQE coalescing folds the (small-tier) type
     // frame to one partition and the joins run serial — gates pass a
-    // width only in the small-corpus regime (SparkEntry.scanFanout);
+    // width only in the small-corpus regime (Spread.scanFanout);
     // at scale the frame is huge, AQE keeps parallelism, no extra
     // exchange runs.
     val types = if (spreadTypes > 0) types0.repartition(spreadTypes) else types0

@@ -21,7 +21,7 @@ import graft.functions.Rounding.pround
   * integer moment sums — the [[graft.ann.Standardize]] rule. One key
   * shuffle; the lag and the aggregate share its sort.
   *
-  * Plan A/B (r10 DevAB, sf10 = 10M events, DuckDB oracle 0.35 s):
+  * Plan A/B (r10 A/B, sf10 = 10M events, DuckDB oracle 0.35 s):
   * this window-lag form 1.19 s; a collect_list + sorted-array HOF
   * fold (no window) 1.09 s — rejected: the −8% is bought with
   * per-key in-memory arrays, so one hot key (exactly the bots this
@@ -45,7 +45,7 @@ object Burstiness {
       .orderBy(col(tsCol), col(idCol))
     // spreadN > 0: explicit-width key exchange so AQE's size-based
     // coalesce can't serialize the window+agg on a small tier
-    // (SparkEntry.scanFanout gates it to the small regime; 0 = as-is)
+    // (Spread.scanFanout gates it to the small regime; 0 = as-is)
     val dfS = if (spreadN > 0) df.repartition(spreadN, col(keyCol)) else df
     // whole seconds since the NTZ epoch: timezone-free, DST-immune
     // (timestampdiff truncates toward zero; all event data is

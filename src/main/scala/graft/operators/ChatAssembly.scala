@@ -39,7 +39,7 @@ object ChatAssembly {
     // coalesce folds a small tier's exchange to one partition and the
     // whole lag+sum+collect chain runs serial (measured sf0.1:
     // 0.50 s → 0.36 s). Gates pass a width only in the small-corpus
-    // regime (SparkEntry.scanFanout); 0 keeps the plan untouched.
+    // regime (Spread.scanFanout); 0 keeps the plan untouched.
     val spread = if (spreadN > 0) events.repartition(spreadN, col(userCol))
                  else events
     val sessions = spread

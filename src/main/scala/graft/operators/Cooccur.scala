@@ -52,7 +52,7 @@ object Cooccur {
     *    whole O(k²) grid+count stage runs serial (measured: the grid
     *    stage was 1.5 s of the 1.69 s total, 31 cores idle). Gates
     *    pass a width only in the small-corpus regime
-    *    (SparkEntry.scanFanout); at scale the aggregated frame is
+    *    (Spread.scanFanout); at scale the aggregated frame is
     *    TBs, AQE keeps full parallelism, and no extra exchange runs.
     */
   def pmi(docs: DataFrame, idCol: String, tokensCol: Column,

@@ -36,7 +36,7 @@ object Deduplicator {
     // spreadN > 0: explicit-width key exchange (the window reuses its
     // clustering) so AQE's size-based coalesce can't serialize the
     // sort+rank on a small tier; gates pass a width only in the
-    // small-input regime (SparkEntry.scanFanout), 0 = plan unchanged
+    // small-input regime (Spread.scanFanout), 0 = plan unchanged
     val dfS = if (spreadN > 0) df.repartition(spreadN, keys.map(col): _*) else df
     dfS.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)

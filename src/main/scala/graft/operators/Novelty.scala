@@ -62,7 +62,7 @@ object Novelty {
     // reports the documented zero-gram 0.0 via the coalesce, and
     // explode_outer keeps zero-gram docs (their null hash never
     // matches and is excluded from the novel count).
-    // spreadN > 0 (small-input regime only — SparkEntry.scanFanout)
+    // spreadN > 0 (small-input regime only — Spread.scanFanout)
     // fans the candidate scan out so the shingle pass parallelizes
     // off a single-split tier file; identity at scale.
     val cand = if (spreadN > 0) candidates.repartition(spreadN) else candidates

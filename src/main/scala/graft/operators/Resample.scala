@@ -60,7 +60,7 @@ object Resample {
       .rangeBetween(-windowSec, 0)
     // spreadN > 0: explicit-width key exchange so AQE's size-based
     // coalesce can't serialize the range-frame scan on a small tier
-    // (SparkEntry.scanFanout gates it; 0 = plan unchanged)
+    // (Spread.scanFanout gates it; 0 = plan unchanged)
     val dfS = if (spreadN > 0) df.repartition(spreadN, keyCols.map(col): _*) else df
     dfS.withColumn("__v", floor(col(valueCol) * lit(scale.toDouble) + lit(0.5)).cast("long"))
       .withColumn("n_window", count(lit(1)).over(w))

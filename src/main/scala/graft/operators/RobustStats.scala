@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * |x−med| > 3·1.4826·MAD (the normal-consistency 3σ̂ rule) with no
   * float boundary at all.
   *
-  * Cost decomposition (r10 DevAB): the corpus histogram pass runs at
+  * Cost decomposition (r10 A/B): the corpus histogram pass runs at
   * PARITY with the DuckDB oracle's entire budget (0.28-0.34 s vs
   * 0.32 s at sf10; 0.32-0.40 s at sf30) — the remaining ~0.7 s of the
   * report is five histogram-sized single-task stages (median cum-sum,

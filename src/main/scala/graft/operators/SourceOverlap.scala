@@ -134,7 +134,7 @@ object SourceOverlap {
     * standard sketch-intersection caveat). Output:
     * (src_a, src_b, est_a, est_b, est_shared) for every pair.
     *
-    * Measured (r10 DevAB, sf10, steady-state min): this standalone
+    * Measured (r10 A/B, sf10, steady-state min): this standalone
     * form runs 0.78-0.81 s vs the exact [[matrix]]'s 7.0-7.2 s —
     * ~9x — because it never builds per-shingle source sets and its
     * exchange carries |sources| KB blobs. (r9's bench row read 11.3 s

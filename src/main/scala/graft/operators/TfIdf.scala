@@ -45,7 +45,7 @@ object TfIdf {
     * join, top-k window all hang off this partitioning — measured
     * sf0.1: 0.67 s → 0.49 s). Explicit-N repartitions are exempt from
     * AQE coalescing by design. Gates pass a width only in the
-    * small-corpus regime (SparkEntry.scanFanout); at scale the
+    * small-corpus regime (Spread.scanFanout); at scale the
     * keyed repartition stays AQE-managed, exactly as before.
     */
   def scores(docs: DataFrame, idCol: String, textCol: String,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
+import graft.Spread
 import graft.dedup.MinHashLSH
 import graft.operators.Deduplicator
 
@@ -28,13 +29,8 @@ object CorpusPrep {
   private def scoredFrame(docs: DataFrame, idCol: String, textCol: String,
                           stopwords: Seq[String],
                           langMarkers: Seq[(String, Seq[String])]): DataFrame = {
-    val n = docs.sparkSession.sparkContext.defaultParallelism
     val raw = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    // spread raw text ONLY off a scan narrower than the cluster (the
-    // Decontaminate guard, r13): a well-partitioned 100 TB scan must
-    // not pay a round-robin exchange of the full corpus text
-    val spread = if (raw.rdd.getNumPartitions < n) raw.repartition(n) else raw
-    val cleaned = spread
+    val cleaned = Spread.ifNarrow(raw)
       .select(col("doc_id"), TF.cleanText(col("__text")).as("clean"))
       // materialization barrier: without it CollapseProject inlines the
       // 3-regex clean expression into EVERY stat column below (quality,

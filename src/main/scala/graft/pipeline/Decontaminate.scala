@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.functions.TextFunctions
+import graft.Spread
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -63,13 +64,8 @@ object Decontaminate {
     */
   def stats(train: DataFrame, eval: DataFrame, idCol: String, textCol: String,
             k: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val n = train.sparkSession.sparkContext.defaultParallelism
     val raw = train.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    // widen ONLY a scan that is narrower than the cluster (a local test
-    // file, a single-task source): a well-partitioned 100 TB scan must
-    // not pay a round-robin exchange of the full raw text
-    val spread = if (raw.rdd.getNumPartitions < n) raw.repartition(n) else raw
-    val idx = spread
+    val idx = Spread.ifNarrow(raw)
       .select(col("doc_id"), call_function("shingle_hash64",
         TextFunctions.tokens(col("__text")), lit(k)).as("sh"))
       .select(col("doc_id"), size(col("sh")).cast("long").as("n_shingles"),

@@ -75,7 +75,7 @@ object Events {
     // counts/sums, then fold groups — count(*) over the collapsed
     // frame IS the exact user distinct.
     //
-    // sf30 stage decomposition (r9 verdict item 2; DevAB, min of 3,
+    // sf30 stage decomposition (r9 verdict item 2; A/B, min of 3,
     // DuckDB oracle 0.684 s): bare 4-column scan 0.29 s; the same agg
     // WITHOUT the distinct 0.49 s; count_distinct/Expand 2.32 s; this
     // two-level form 2.38 s; bitmap_construct_agg per 32k-id bucket

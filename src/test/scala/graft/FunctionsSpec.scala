@@ -324,6 +324,23 @@ class FunctionsSpec extends SparkSpec {
     assert(docs.crossJoin(broadcast(emptyRow))
       .select(explode(call_function("vocab_term_counts", col("toks"),
         col("__vocab")))).count() === 0)
+    // NULL vocabulary → the empty map on both forms and on both the
+    // codegen and the interpreted path. Asserted on the map itself:
+    // NULL and an empty map both explode to 0 rows
+    val nullVocab = Seq(Tuple1(Option.empty[Seq[String]])).toDF("__vocab")
+    def maps(vocab: org.apache.spark.sql.Column): Seq[Map[String, Long]] =
+      docs.crossJoin(broadcast(nullVocab))
+        .select(call_function("vocab_term_counts", col("toks"), vocab))
+        .as[Map[String, Long]].collect().toSeq
+    val confs = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    try Seq(Seq("true", "CODEGEN_ONLY"), Seq("false", "NO_CODEGEN")).foreach { mode =>
+      confs.zip(mode).foreach { case (k, v) => spark.conf.set(k, v) }
+      assert(maps(lit(null).cast("array<string>")) === Seq.fill(4)(Map.empty[String, Long]),
+        s"literal form, $mode")
+      assert(maps(col("__vocab")) === Seq.fill(4)(Map.empty[String, Long]),
+        s"column form, $mode")
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("unicodeClean: spaces mapped, zero-width and controls deleted, NFC first") {

@@ -434,7 +434,7 @@ class PlanSpec extends SparkSpec {
     //     exchanges must be ABSENT and these TIGHTER ceilings hold.
     //     A spread leaking into the at-scale plan fails here, not in
     //     a cluster deployment.
-    assert(SparkEntry.scanFanout(spark, sf(), "documents") > 0,
+    assert(Spread.scanFanout(spark, sf(), "documents") > 0,
       "fixture regime flipped: scanFanout = 0 in the spec fixture — " +
         "the golden ceilings above assume the small-input spreads are present")
     val key = "spark.sql.files.maxPartitionBytes"
@@ -445,7 +445,7 @@ class PlanSpec extends SparkSpec {
     try {
       spark.conf.set(key, math.max(1L, minBytes / cores).toString)
       tables.foreach { t =>
-        assert(SparkEntry.scanFanout(spark, sf(), t) == 0,
+        assert(Spread.scanFanout(spark, sf(), t) == 0,
           s"$t still spreads under the at-scale conf")
       }
       val atScale = Seq(

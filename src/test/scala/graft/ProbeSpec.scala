@@ -1,0 +1,23 @@
+package graft
+
+/** [[Probe]] on the sf0.001 fixture: the per-gate measurement the dev
+  * main prints, and its report for a name that is not a gate.
+  */
+class ProbeSpec extends SparkSpec {
+
+  test("Probe.measure: q_token_count has positive times and one exchange") {
+    val r = Probe.measure(spark, sf(), "q_token_count").fold(fail(_), identity)
+    assert(r.secs.size === 3 && r.secs.forall(_ > 0), r.secs)
+    // the small-regime round-robin spread PlanSpec pins for this gate
+    assert(r.exchanges === 1, r.plan)
+    assert(!r.bnlj, r.plan)
+    assert(r.plan.contains("isFinalPlan=true"), r.plan)
+    assert(r.line.startsWith("PROBE q_token_count min="), r.line)
+    assert(r.line.endsWith("exchanges=1 bnlj=false"), r.line)
+  }
+
+  test("Probe.measure reports an unknown gate instead of throwing") {
+    assert(Probe.measure(spark, sf(), "q_no_such_gate") ===
+      Left("PROBE q_no_such_gate UNKNOWN"))
+  }
+}
