@@ -191,11 +191,6 @@ object Bench {
     // PageRank at 10.1 s (10 iterations x 2 exchanges)
     "q_retrieval_eval", "q_pagerank")
 
-  /** Every benched gate name (headliners + extras) — the plan-dump
-    * and optimization-round tooling's canonical list.
-    */
-  private[graft] def benchedNames: Seq[String] = headliners ++ extras
-
   /** Tier-freshness preamble (r9 verdict item 8): the gitignored tier
     * parquet was wiped twice during r9 and the old existence-only gate
     * (`lineitem.parquet` present) let a bench run against stale/small

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, StringTrim, Up
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.functions.{CharDiversityStats, CollectMinK, CosineSimilarity, MinHash64, NfcNormalize, NgramHash64, NgramRepetition, ShingleHash64, SimHash64, TrigramHashBundle, VocabTermCounts, VocabTermCountsDyn}
+import graft.functions.{CharDiversityStats, CollectMinK, CosineSimilarity, MinHash64, NearestCentroid, NfcNormalize, NgramHash64, NgramRepetition, ShingleHash64, SimHash64, TrigramHashBundle, VocabTermCounts, VocabTermCountsDyn}
 
 /** Engine extensions, registered through the public
   * `spark.sql.extensions` hook (GraftSession sets it). Native
@@ -22,6 +22,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
         require(children.size == 2, "cosine_sim(a, b) takes exactly two arguments")
         CosineSimilarity(children.head, children(1))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("nearest_centroid"),
+      new ExpressionInfo(classOf[NearestCentroid].getName, "nearest_centroid"),
+      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+        require(children.size == 2, "nearest_centroid(emb, cents) takes exactly two arguments")
+        NearestCentroid(children.head, children(1))
       }))
     ext.injectFunction((
       FunctionIdentifier("simhash64"),

@@ -61,32 +61,25 @@ object Ivf {
   }
 
   /** Nearest-centroid assignment: ALL centroids ride as one broadcast
-    * 1-row array and the argmax runs as a narrow per-row fold — ZERO
-    * shuffles (r13; §2.4). The previous form crossJoined the centroid
-    * rows (an n×c row blowup) and re-aggregated by vec_id, i.e. every
-    * assignment pass shuffled the full embedding corpus through a
-    * vec_id exchange — pure waste at any scale, since the argmax is a
-    * per-row function. The fold compares (sim, -cluster_id) structs
-    * with Spark's own struct ordering, so ties and NaN resolve exactly
-    * as the old max(struct(...)) aggregate did (ties → smaller
-    * cluster_id; assignment expects non-null, equal-width embeddings).
+    * 1-row array and each row picks its cell with the codegen'd
+    * `nearest_centroid` kernel — a narrow per-row argmax, ZERO
+    * shuffles (r13; §2.4), no per-pair allocation. The kernel ranks
+    * `(cosine, -cluster_id)` with Spark's double ordering: NaN ranks
+    * highest (a zero vector ties every cell at NaN), `-0.0 == 0.0`,
+    * and a tie goes to the smaller cluster_id — the answer of the
+    * interpreted `aggregate` struct fold it replaced, bit for bit
+    * (FunctionsSpec keeps that fold as the reference). `cluster_id`
+    * is NULL for a NULL embedding, an empty centroid set, or when no
+    * centroid has a comparable (equal-width, non-NULL) vector. Each
+    * input row gets one output row: `emb` is expected unique by
+    * vec_id, nothing here dedupes it.
     */
   private def assignTo(emb: DataFrame, cents: DataFrame): DataFrame = {
     val centsRow = cents.agg(
       collect_list(struct(col("cluster_id"), col("centroid"))).as("__cents"))
     emb.crossJoin(broadcast(centsRow))
       .select(col("vec_id"),
-        aggregate(col("__cents"),
-          struct(lit(Double.NegativeInfinity).as("sim"),
-            lit(Int.MinValue).as("neg_cid")),
-          (acc, x) => {
-            val cand = struct(
-              VectorFunctions.cosine(col("emb"), x.getField("centroid")).as("sim"),
-              (-x.getField("cluster_id")).as("neg_cid"))
-            when(cand > acc, cand).otherwise(acc)
-          }).as("best"),
-        col("emb"))
-      .select(col("vec_id"), (-col("best.neg_cid")).cast("int").as("cluster_id"),
+        VectorFunctions.nearestCentroid(col("emb"), col("__cents")).as("cluster_id"),
         col("emb"))
   }
 

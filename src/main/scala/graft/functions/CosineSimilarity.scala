@@ -46,26 +46,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
         s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
   }
 
-  private def getter(et: DataType, arr: String, i: String): String = et match {
-    case FloatType   => s"(double) $arr.getFloat($i)"
-    case DoubleType  => s"$arr.getDouble($i)"
-    case IntegerType => s"(double) $arr.getInt($i)"
-    case LongType    => s"(double) $arr.getLong($i)"
-    case ShortType   => s"(double) $arr.getShort($i)"
-    case ByteType    => s"(double) $arr.getByte($i)"
-    case other => throw new IllegalStateException(s"unsupported element type $other")
-  }
-
-  private def getDouble(et: DataType, arr: ArrayData, i: Int): Double = et match {
-    case FloatType   => arr.getFloat(i).toDouble
-    case DoubleType  => arr.getDouble(i)
-    case IntegerType => arr.getInt(i).toDouble
-    case LongType    => arr.getLong(i).toDouble
-    case ShortType   => arr.getShort(i).toDouble
-    case ByteType    => arr.getByte(i).toDouble
-    case other => throw new IllegalStateException(s"unsupported element type $other")
-  }
-
   override def nullSafeEval(a: Any, b: Any): Any = {
     val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     val n = x.numElements()
@@ -75,8 +55,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
     var i = 0
     while (i < n) {
       if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xi = getDouble(et1, x, i)
-      val yi = getDouble(et2, y, i)
+      val xi = CosineSimilarity.getDouble(et1, x, i)
+      val yi = CosineSimilarity.getDouble(et2, y, i)
       dot += xi * yi; na += xi * xi; nb += yi * yi
       i += 1
     }
@@ -100,8 +80,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
          |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
          |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    double $xi = ${getter(elemType(left), a, i)};
-         |    double $yi = ${getter(elemType(right), b, i)};
+         |    double $xi = ${CosineSimilarity.getter(elemType(left), a, i)};
+         |    double $yi = ${CosineSimilarity.getter(elemType(right), b, i)};
          |    $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
          |  }
          |  if (!${ev.isNull}) {
@@ -114,4 +94,27 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  /** Java source reading element `i` of `arr` as a double. */
+  private[functions] def getter(et: DataType, arr: String, i: String): String = et match {
+    case FloatType   => s"(double) $arr.getFloat($i)"
+    case DoubleType  => s"$arr.getDouble($i)"
+    case IntegerType => s"(double) $arr.getInt($i)"
+    case LongType    => s"(double) $arr.getLong($i)"
+    case ShortType   => s"(double) $arr.getShort($i)"
+    case ByteType    => s"(double) $arr.getByte($i)"
+    case other => throw new IllegalStateException(s"unsupported element type $other")
+  }
+
+  private[functions] def getDouble(et: DataType, arr: ArrayData, i: Int): Double = et match {
+    case FloatType   => arr.getFloat(i).toDouble
+    case DoubleType  => arr.getDouble(i)
+    case IntegerType => arr.getInt(i).toDouble
+    case LongType    => arr.getLong(i).toDouble
+    case ShortType   => arr.getShort(i).toDouble
+    case ByteType    => arr.getByte(i).toDouble
+    case other => throw new IllegalStateException(s"unsupported element type $other")
+  }
 }

@@ -5,11 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Dense-vector column math over `array<float|double>` columns.
   *
-  * Built on higher-order builtins (`zip_with`, `aggregate`,
-  * `transform`) which are codegen'd — no UDF serialization, no
-  * per-row JVM boxing beyond the array itself. All arithmetic is
-  * forced to double so results are reproducible across engines
-  * regardless of the stored element width.
+  * The composable forms are built on higher-order builtins
+  * (`zip_with`, `aggregate`, `transform`): no UDF serialization, but
+  * on Spark 4.1 all three are `CodegenFallback`, so their lambdas run
+  * interpreted, per element, inside an otherwise codegen'd stage.
+  * Hot loops therefore go through the native codegen'd expressions
+  * ([[cosine]], [[nearestCentroid]]). All arithmetic is forced to
+  * double so results are reproducible across engines regardless of
+  * the stored element width.
   */
 object VectorFunctions {
 
@@ -32,6 +35,14 @@ object VectorFunctions {
     * form ANN scoring uses.
     */
   def cosine(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
+
+  /** The `cluster_id` of the centroid nearest `emb` by cosine, from
+    * `cents: array<struct<cluster_id:int, centroid:array<num>>>`
+    * (graft.functions.NearestCentroid, registered by GraftExtensions).
+    * Ties go to the smaller id; NULL when no centroid is comparable.
+    */
+  def nearestCentroid(emb: Column, cents: Column): Column =
+    call_function("nearest_centroid", emb, cents)
 
   /** Cosine rounded for stable cross-engine comparison/ranking. */
   def cosineRounded(a: Column, b: Column, scale: Int = 4): Column =

@@ -69,6 +69,14 @@ class DedupSpec extends SparkSpec {
     assert(recall > 0.2, s"recall=$recall")
   }
 
+  test("IVF index over an empty centroid set assigns NULL, not Int.MinValue") {
+    val emb = Tables.embeddings(spark, sf()).limit(20)
+    val noCents = Seq.empty[(Int, Seq[Double])].toDF("cluster_id", "centroid")
+    val cells = graft.ann.Ivf.index(emb, noCents)
+      .select("cluster_id").as[Option[Int]].collect().toSeq
+    assert(cells == Seq.fill(20)(None), cells)
+  }
+
   test("lshTopK recall against brute force is reasonable") {
     val emb = Tables.embeddings(spark, sf()).cache()
     val q = emb.filter(col("vec_id") < 8)

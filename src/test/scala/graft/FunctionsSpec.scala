@@ -1,10 +1,41 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 
+object FunctionsSpec {
+  case class Cent(cluster_id: Int, centroid: Seq[Double])
+  case class CentOpt(cluster_id: Option[Int], centroid: Option[Seq[Option[Double]]])
+}
+
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
+  import FunctionsSpec.{Cent, CentOpt}
+
+  /** Runs `body` once under whole-stage codegen with no interpreted
+    * fallback and once fully interpreted, restoring the session confs.
+    */
+  private def underBothPaths(body: String => Unit): Unit = {
+    val confs = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    try Seq(Seq("true", "CODEGEN_ONLY"), Seq("false", "NO_CODEGEN")).foreach { mode =>
+      confs.zip(mode).foreach { case (k, v) => spark.conf.set(k, v) }
+      body(mode.last)
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** The r13 IVF cell assignment, an interpreted `aggregate` struct
+    * fold — the reference `nearest_centroid` must reproduce.
+    */
+  private def nearestCentroidFold(emb: Column, cents: Column): Column =
+    (-aggregate(cents,
+      struct(lit(Double.NegativeInfinity).as("sim"), lit(Int.MinValue).as("neg_cid")),
+      (acc, x) => {
+        val cand = struct(VF.cosine(emb, x.getField("centroid")).as("sim"),
+          (-x.getField("cluster_id")).as("neg_cid"))
+        when(cand > acc, cand).otherwise(acc)
+      }).getField("neg_cid")).cast("int")
 
   test("tokens / tokenCount handle empty and multi-space text") {
     val df = Seq("Hello  World", "", "   ", "one").toDF("text")
@@ -104,6 +135,72 @@ class FunctionsSpec extends SparkSpec {
     ).toDF("a", "b")
     val out = edge.select(VF.cosine(col("a"), col("b"))).collect()
     assert(out.forall(_.isNullAt(0)))
+  }
+
+  test("nearest_centroid gives the struct fold's cluster_id on every row") {
+    val rnd = new scala.util.Random(20261017L)
+    val dim = 16
+    def gauss(): Seq[Double] = Seq.fill(dim)(rnd.nextGaussian())
+    val rows: Seq[Seq[Double]] = Seq.fill(400)(gauss()) ++ Seq(
+      Seq.fill(dim)(0.0),                                       // every sim NaN
+      Seq.fill(dim)(-0.0),                                      // NaN again
+      Seq.tabulate(dim)(i => if (i % 2 == 0) -0.0 else 1.0))   // -0.0 components
+    val vecs = rows.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "emb")
+    // Lloyd seeds are corpus rows (the float stored width); refined
+    // centroids are Lloyd means (double). Each set also carries exact
+    // duplicates listed before the smaller id they copy, and a -0.0
+    // centroid.
+    def centSet(base: Seq[Seq[Double]]): Seq[Cent] =
+      Seq(Cent(30, base(3)), Cent(31, base(7))) ++
+        base.zipWithIndex.map { case (c, i) => Cent(i, c) } ++
+        Seq(Cent(12, Seq.tabulate(dim)(i => if (i % 3 == 0) -0.0 else 0.5)))
+    val centSets = Seq(
+      "float seeds" -> (centSet(rows.take(12)), "float"),
+      "double refined" -> (centSet(Seq.fill(12)(gauss())), "double"))
+    underBothPaths { mode =>
+      for ((name, (cents, centWidth)) <- centSets; embWidth <- Seq("float", "double")) {
+        val centsRow = Seq(Tuple1(cents)).toDF("__cents").select(col("__cents").cast(
+          s"array<struct<cluster_id:int,centroid:array<$centWidth>>>").as("__cents"))
+        val out = vecs.select(col("vec_id"), col("emb").cast(s"array<$embWidth>").as("emb"))
+          .crossJoin(broadcast(centsRow))
+          .select(col("vec_id"),
+            VF.nearestCentroid(col("emb"), col("__cents")).as("kernel"),
+            nearestCentroidFold(col("emb"), col("__cents")).as("fold"))
+          .as[(Long, Option[Int], Option[Int])].collect().sortBy(_._1)
+        val label = s"$name centroids, $embWidth vectors, $mode"
+        assert(out.length == rows.length, label)
+        out.foreach { case (id, k, f) => assert(k == f && k.nonEmpty, s"$label: vec $id") }
+        assert(!out.exists(r => r._2.contains(30) || r._2.contains(31)),
+          s"$label: a duplicate must lose its tie to the smaller id")
+        assert(out(400)._2.contains(0) && out(401)._2.contains(0),
+          s"$label: zero vectors tie every cell at NaN, so the smallest id wins")
+        if (name == "float seeds") assert(out(3)._2.contains(3) && out(7)._2.contains(7), label)
+      }
+    }
+  }
+
+  test("nearest_centroid is NULL when no centroid is comparable; NULL parts never win") {
+    val cases: Seq[(Option[Seq[Option[Double]]], Seq[CentOpt], Option[Int])] = {
+      def v(xs: Double*) = Some(xs.map(Some(_)))
+      def c(id: Int, xs: Double*) = CentOpt(Some(id), v(xs: _*))
+      Seq(
+        (v(1, 0), Seq.empty, None),                                  // empty list
+        (None, Seq(c(0, 1, 0)), None),                               // NULL embedding
+        (v(1, 0), Seq(c(0, 1, 0, 0)), None),                         // no equal width
+        (Some(Seq(Some(1.0), None)), Seq(c(0, 1, 0)), None),         // NULL element in emb
+        (v(1, 0), Seq(CentOpt(Some(0), Some(Seq(Some(1.0), None))), c(1, 0, 1)), Some(1)),
+        (v(1, 0), Seq(null, CentOpt(Some(2), None), c(3, 2, 0)), Some(3)),
+        (v(1, 0), Seq(CentOpt(None, v(1, 0)), c(4, 0, 1)), None),    // NULL id wins on sim
+        (v(1, 0), Seq(CentOpt(None, v(1, 0)), c(4, 1, 0)), Some(4)), // ... loses a tie
+        (v(0, 0), Seq(c(5, 1, 0), c(2, 0, 1)), Some(2)))             // NaN tie: smaller id
+    }
+    val df = cases.zipWithIndex.map { case ((e, cs, _), i) => (i, e, cs) }
+      .toDF("i", "emb", "cents")
+    underBothPaths { mode =>
+      val got = df.select(col("i"), VF.nearestCentroid(col("emb"), col("cents")))
+        .as[(Int, Option[Int])].collect().sortBy(_._1).map(_._2).toSeq
+      assert(got == cases.map(_._3), mode)
+    }
   }
 
   test("minhash64 native is bit-identical to the builtin HOF composition") {
@@ -332,15 +429,12 @@ class FunctionsSpec extends SparkSpec {
       docs.crossJoin(broadcast(nullVocab))
         .select(call_function("vocab_term_counts", col("toks"), vocab))
         .as[Map[String, Long]].collect().toSeq
-    val confs = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
-    val saved = confs.map(k => k -> spark.conf.getOption(k))
-    try Seq(Seq("true", "CODEGEN_ONLY"), Seq("false", "NO_CODEGEN")).foreach { mode =>
-      confs.zip(mode).foreach { case (k, v) => spark.conf.set(k, v) }
+    underBothPaths { mode =>
       assert(maps(lit(null).cast("array<string>")) === Seq.fill(4)(Map.empty[String, Long]),
         s"literal form, $mode")
       assert(maps(col("__vocab")) === Seq.fill(4)(Map.empty[String, Long]),
         s"column form, $mode")
-    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
   }
 
   test("unicodeClean: spaces mapped, zero-width and controls deleted, NFC first") {

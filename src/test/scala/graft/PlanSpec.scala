@@ -70,6 +70,14 @@ class PlanSpec extends SparkSpec {
     assert(qe.executedPlan.toString.contains("TakeOrdered"), qe.executedPlan.toString)
   }
 
+  test("IVF: cell assignment runs the nearest_centroid kernel, not an interpreted fold") {
+    val p = plan("q_ann_ivf")
+    assert(p.contains("nearest_centroid("), p)
+    // the r13 form: an `aggregate` lambda over the broadcast centroid
+    // array, which Spark evaluates interpreted (CodegenFallback)
+    assert("aggregate\\(__cents".r.findFirstIn(p).isEmpty, p)
+  }
+
   test("ewma: one daily-agg exchange, map-side partial, no Window at all") {
     val qe = SparkEntry.queries("q_ewma_anomaly")(spark, sf()).queryExecution
     val windows = qe.optimizedPlan.collect {
