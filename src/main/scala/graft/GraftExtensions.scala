@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, StringTrim, Up
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.functions.{CharDiversityStats, CollectMinK, CosineSimilarity, MinHash64, NearestCentroid, NfcNormalize, NgramHash64, NgramRepetition, ShingleHash64, SimHash64, TrigramHashBundle, VocabTermCounts, VocabTermCountsDyn}
+import graft.functions.{CharDiversityStats, CollectMinK, CosineSimilarity, MinHash64, NearestCentroid, NfcNormalize, NgramHash64, NgramRepetition, ShingleHash64, SimHash64, TrigramHashBundle, VectorMean, VocabTermCounts, VocabTermCountsDyn}
 
 /** Engine extensions, registered through the public
   * `spark.sql.extensions` hook (GraftSession sets it). Native
@@ -29,6 +29,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
         require(children.size == 2, "nearest_centroid(emb, cents) takes exactly two arguments")
         NearestCentroid(children.head, children(1))
+      }))
+    ext.injectFunction((
+      FunctionIdentifier("vector_mean"),
+      new ExpressionInfo(classOf[VectorMean].getName, "vector_mean"),
+      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+        require(children.size == 1, "vector_mean(arr) takes exactly one argument")
+        VectorMean(children.head)
       }))
     ext.injectFunction((
       FunctionIdentifier("simhash64"),

@@ -17,20 +17,23 @@ import org.apache.spark.sql.functions._
   *
   * Everything is deterministic: centroid seeds are the top-C vectors
   * by xxhash64(vec_id) (a seedless pseudo-random draw), refined by a
-  * fixed number of Lloyd iterations (mean per cell via posexplode +
-  * groupBy — partial-aggregated, no driver-side math).
+  * fixed number of Lloyd iterations (each cell's mean is one
+  * `vector_mean` aggregate grouped by cluster_id — partial-aggregated
+  * to c·dim sums per partition, one exchange, no driver-side math).
   */
 object Ivf {
 
   /** (cluster_id, centroid: array<double>) — deterministic k-means
-    * with `iters` Lloyd refinements.
+    * with `iters` Lloyd refinements. Each refinement drops a cell no
+    * non-NULL embedding reached, so at most `c` rows come back (none
+    * for an empty corpus).
     */
   def centroids(corpus: DataFrame, c: Int, iters: Int = 2): DataFrame = {
     // keep the STORED element width (float for the testdata corpus):
     // the native cosine casts per element inside its fused loop, so
     // results are bit-identical to an up-front toDouble while every
-    // assignment/pair pass moves half the bytes; Lloyd means still
-    // accumulate in double (Spark's avg) so centroids come out
+    // assignment/pair pass moves half the bytes; Lloyd means
+    // accumulate in double (vector_mean) so centroids come out
     // array<double> after the first refinement either way
     val emb = corpus.select(col("vec_id"), col("embedding").as("emb"))
     // Seed selection: top-c by a pseudo-random hash order. The
@@ -46,15 +49,17 @@ object Ivf {
       .agg(array_sort(collect_list(struct(col("hk"), col("vec_id"), col("emb")))).as("seeds"))
       .select(posexplode(col("seeds")).as(Seq("cluster_id", "seed")))
       .select(col("cluster_id").cast("int").as("cluster_id"), col("seed.emb").as("centroid"))
+    // Lloyd update: each cell's positional mean in ONE cluster-keyed
+    // exchange of c·dim partial sums per partition. A cell only NULL
+    // or empty embeddings reached has no mean (NULL) and is dropped;
+    // rows with no comparable centroid (a NULL cluster_id) form their
+    // own group.
     var i = 0
     while (i < iters) {
-      val assigned = assignTo(emb, cents)
-      cents = assigned
-        .select(col("cluster_id"), posexplode(col("emb")).as(Seq("pos", "x")))
-        .groupBy("cluster_id", "pos").agg(avg("x").as("m"))
+      cents = assignTo(emb, cents)
         .groupBy("cluster_id")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cluster_id"), expr("transform(pm, e -> e.m)").as("centroid"))
+        .agg(VectorFunctions.vectorMean(col("emb")).as("centroid"))
+        .filter(col("centroid").isNotNull)
       i += 1
     }
     cents

@@ -64,6 +64,11 @@ object Pq {
       .filter(col("rn") <= k)
       .select(col("sub"), (col("rn") - 1).cast("int").as("cluster_id"),
         col("svec").as("centroid"))
+    // the means stay on the (sub, cluster, pos) avg chain, not
+    // vector_mean: m·k = 512 groups per task put an object-hash
+    // aggregate on Spark's sort-based path, whose per-row sort of
+    // short subvectors measured slower than this per-element hash
+    // aggregate (8-element rows: 0.17 s → 0.20 s per mean step)
     var i = 0
     while (i < iters) {
       val assigned = assign(sv, cb)

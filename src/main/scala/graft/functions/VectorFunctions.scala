@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   * (`zip_with`, `aggregate`, `transform`): no UDF serialization, but
   * on Spark 4.1 all three are `CodegenFallback`, so their lambdas run
   * interpreted, per element, inside an otherwise codegen'd stage.
-  * Hot loops therefore go through the native codegen'd expressions
-  * ([[cosine]], [[nearestCentroid]]). All arithmetic is forced to
-  * double so results are reproducible across engines regardless of
-  * the stored element width.
+  * Hot loops therefore go through native expressions: the codegen'd
+  * [[cosine]] and [[nearestCentroid]], and the [[vectorMean]]
+  * aggregate. All arithmetic is forced to double so results are
+  * reproducible across engines regardless of the stored element width.
   */
 object VectorFunctions {
 
@@ -43,6 +43,13 @@ object VectorFunctions {
     */
   def nearestCentroid(emb: Column, cents: Column): Column =
     call_function("nearest_centroid", emb, cents)
+
+  /** Positional mean of `array<float|double>` rows per group, as
+    * `array<double>` (graft.functions.VectorMean, registered by
+    * GraftExtensions): element i averages the non-NULL elements i
+    * as Spark's `avg` does; NULL for a group with no elements.
+    */
+  def vectorMean(v: Column): Column = call_function("vector_mean", v)
 
   /** Cosine rounded for stable cross-engine comparison/ranking. */
   def cosineRounded(a: Column, b: Column, scale: Int = 4): Column =

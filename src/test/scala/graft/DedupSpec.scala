@@ -77,6 +77,37 @@ class DedupSpec extends SparkSpec {
     assert(cells == Seq.fill(20)(None), cells)
   }
 
+  test("IVF Lloyd over an empty corpus gives no centroids") {
+    val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    assert(graft.ann.Ivf.centroids(empty, c = 16).count() == 0)
+  }
+
+  test("IVF Lloyd over one row gives that row, widened to double, as the only centroid") {
+    val row = Seq(0.1f, -2.5f, 0.0f, 3.3f)
+    val one = Seq((7L, row)).toDF("vec_id", "embedding")
+    val cents = graft.ann.Ivf.centroids(one, c = 16)
+      .as[(Option[Int], Seq[Double])].collect().toSeq
+    assert(cents == Seq((Some(0), row.map(_.toDouble))), cents)
+  }
+
+  test("IVF Lloyd: a NULL-embedding row creates no centroid") {
+    val corpus = Seq((0L, Some(Seq(1.0f, 0.0f))), (1L, None), (2L, Some(Seq(0.0f, 1.0f))))
+      .toDF("vec_id", "embedding")
+    val cents = graft.ann.Ivf.centroids(corpus, c = 16)
+      .as[(Option[Int], Seq[Double])].collect().toSeq
+    assert(cents.size == 2 && cents.forall(_._1.nonEmpty), cents)
+    assert(cents.map(_._2).toSet == Set(Seq(1.0, 0.0), Seq(0.0, 1.0)), cents)
+  }
+
+  test("SemDeDup over identical vectors keeps only the smallest id") {
+    val same = (0L until 40L).map(i => (100L + i * 3, Seq(0.6f, -0.8f, 0.0f)))
+      .toDF("vec_id", "embedding")
+    val kept = graft.dedup.SemDeDup.verdicts(same, c = 8, eps = 0.95)
+      .as[(Long, Option[Int], Boolean)].collect().toSeq
+    assert(kept.size == 40, kept)
+    assert(kept.filterNot(_._3).map(_._1) == Seq(100L), kept)
+  }
+
   test("lshTopK recall against brute force is reasonable") {
     val emb = Tables.embeddings(spark, sf()).cache()
     val q = emb.filter(col("vec_id") < 8)

@@ -1,29 +1,37 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 
 object FunctionsSpec {
   case class Cent(cluster_id: Int, centroid: Seq[Double])
   case class CentOpt(cluster_id: Option[Int], centroid: Option[Seq[Option[Double]]])
+  type Vec = Option[Seq[Option[Double]]]
 }
 
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
-  import FunctionsSpec.{Cent, CentOpt}
+  import FunctionsSpec.{Cent, CentOpt, Vec}
 
-  /** Runs `body` once under whole-stage codegen with no interpreted
-    * fallback and once fully interpreted, restoring the session confs.
-    */
-  private def underBothPaths(body: String => Unit): Unit = {
-    val confs = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
-    val saved = confs.map(k => k -> spark.conf.getOption(k))
-    try Seq(Seq("true", "CODEGEN_ONLY"), Seq("false", "NO_CODEGEN")).foreach { mode =>
-      confs.zip(mode).foreach { case (k, v) => spark.conf.set(k, v) }
-      body(mode.last)
+  /** Runs `body` with `confs` set, restoring the session confs. */
+  private def withConfs(confs: Seq[(String, String)])(body: => Unit): Unit = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
     } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
+
+  /** Runs `body` once under whole-stage codegen with no interpreted
+    * fallback and once fully interpreted.
+    */
+  private def underBothPaths(body: String => Unit): Unit =
+    Seq(Seq("true", "CODEGEN_ONLY"), Seq("false", "NO_CODEGEN")).foreach { mode =>
+      withConfs(Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode").zip(mode)) {
+        body(mode.last)
+      }
+    }
 
   /** The r13 IVF cell assignment, an interpreted `aggregate` struct
     * fold — the reference `nearest_centroid` must reproduce.
@@ -36,6 +44,16 @@ class FunctionsSpec extends SparkSpec {
           (-x.getField("cluster_id")).as("neg_cid"))
         when(cand > acc, cand).otherwise(acc)
       }).getField("neg_cid")).cast("int")
+
+  /** The Ivf/Pq Lloyd update `vector_mean` replaced: posexplode →
+    * (g, pos) `avg` → `collect_list` re-assembly — the reference
+    * `vector_mean` must reproduce.
+    */
+  private def positionalAvgChain(df: DataFrame, g: String, v: String): DataFrame =
+    df.select(col(g), posexplode(col(v)).as(Seq("pos", "x")))
+      .groupBy(g, "pos").agg(avg("x").as("m"))
+      .groupBy(g).agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
+      .select(col(g), expr("transform(pm, e -> e.m)").as("mean"))
 
   test("tokens / tokenCount handle empty and multi-space text") {
     val df = Seq("Hello  World", "", "   ", "one").toDF("text")
@@ -200,6 +218,85 @@ class FunctionsSpec extends SparkSpec {
       val got = df.select(col("i"), VF.nearestCentroid(col("emb"), col("cents")))
         .as[(Int, Option[Int])].collect().sortBy(_._1).map(_._2).toSeq
       assert(got == cases.map(_._3), mode)
+    }
+  }
+
+  test("vector_mean gives the posexplode/avg/collect_list chain's rows and values") {
+    val rnd = new scala.util.Random(20261018L)
+    def gauss(w: Int): Vec = Some(Seq.fill(w)(Some(rnd.nextGaussian())))
+    def v(xs: Option[Double]*): Vec = Some(xs)
+    val (nan, nz) = (Some(Double.NaN), Some(-0.0))
+    // seven seeded groups (group 6 mixes widths 5–8) plus literal edges
+    val rows: Seq[(Option[Int], Vec)] =
+      (0 until 350).map(i => (Some(i % 7), gauss(if (i % 7 == 6) 5 + i % 4 else 8))) ++ Seq(
+        (Some(7), v(Some(1.0), None, nz)),                  // NULL element, -0.0
+        (Some(7), None),                                     // NULL array
+        (Some(7), v(nz, None, nz, Some(2.5), None)),         // wider; pos 4 only NULL
+        (Some(7), v()),                                      // empty array
+        (Some(8), v(nan, Some(1.0))), (Some(8), v(Some(3.0), nz)),
+        (Some(9), v(nz, nz)),                                // 0.0 + -0.0 = 0.0
+        (Some(10), v(None, None)),                           // only NULL elements
+        (Some(11), None), (Some(11), v()),                   // no element at all
+        (Some(12), None),
+        (None, gauss(8)), (None, v(Some(1.0))))              // NULL key, unequal widths
+    val df = rows.toDF("g", "v").coalesce(1) // one task: input order is row order
+    def bits(x: Double): Long = java.lang.Double.doubleToLongBits(x)
+    def collectSorted(out: DataFrame): Seq[(Option[Int], Vec)] =
+      out.as[(Option[Int], Vec)].collect().toSeq.sortBy(_._1.getOrElse(-1))
+    val aggConfs = Seq(
+      "as-is" -> Seq.empty[(String, String)],
+      "sort-based fallback" -> Seq("spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1"),
+      "sort aggregate" -> Seq("spark.sql.execution.useObjectHashAggregateExec" -> "false"))
+    for ((mode, confs) <- aggConfs; width <- Seq("double", "float"); empty <- Seq(false, true)) {
+      withConfs(confs) {
+        val typed = df.select(col("g"), col("v").cast(s"array<$width>").as("v"))
+        // an RDD scan, not an empty local relation the optimizer folds
+        // away: the aggregate must still run
+        val in = if (!empty) typed else spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], typed.schema)
+        val vm = in.groupBy("g").agg(VF.vectorMean(col("v")).as("mean"))
+        val label = s"$width vectors, $mode${if (empty) ", empty input" else ""}"
+        assert(vm.schema("mean").dataType ==
+          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType, true), label)
+        val plan = vm.queryExecution.executedPlan.toString
+        assert(plan.contains(if (mode == "sort aggregate") "SortAggregate" else "ObjectHashAggregate"),
+          s"$label:\n$plan")
+        val got = collectSorted(vm)
+        val want = collectSorted(positionalAvgChain(in, "g", "v"))
+        // Bit for bit on the hash path. The sort-based paths do not add
+        // a group's rows in input order: after the fallback Spark folds
+        // the rows that follow the switch first and merges the buffer
+        // of the rows before it last, and the radix sort ahead of a
+        // SortAggregate moves a non-NULL-key row to the end for every
+        // NULL-key row it inserts. Float sums are exact in double at
+        // these magnitudes, so any order gives the same bits; a double
+        // sum is reassociated — equal to rounding, not bit for bit.
+        val exact = mode == "as-is" || width == "float"
+        val means = got.filter(_._2.nonEmpty)
+        assert(means.map(_._1) == want.map(_._1), label)
+        means.zip(want).foreach { case ((g, a), (_, b)) =>
+          assert(a.get.size == b.get.size, s"$label: group $g")
+          a.get.zip(b.get).foreach {
+            case (Some(x), Some(y)) => assert(
+              if (exact) bits(x) == bits(y)
+              else (x.isNaN && y.isNaN) || math.abs(x - y) <= 1e-12 * math.max(1.0, math.abs(y)),
+              s"$label: group $g: $x vs $y")
+            case (x, y) => assert(x == y, s"$label: group $g")
+          }
+        }
+        // groups the chain has no row for: no element reached them
+        assert(got.filter(_._2.isEmpty).map(_._1) == (if (empty) Nil else Seq(Some(11), Some(12))),
+          label)
+        if (!empty) {
+          val byKey = got.toMap
+          assert(byKey(Some(7)).get.drop(3) == Seq(Some(2.5), None), label)
+          assert(byKey(Some(8)).get.head.exists(_.isNaN) && byKey(Some(8)).get(1) == Some(0.5),
+            label)
+          assert(byKey(Some(9)).get.map(_.map(bits)) ==
+            Seq.fill(2)(Some(0L)), s"$label: +0.0, never -0.0")
+          assert(byKey(Some(10)).get == Seq(None, None), label)
+        }
+      }
     }
   }
 

@@ -192,6 +192,31 @@ class PlanSpec extends SparkSpec {
       s"corpus-wide unpartitioned window:\n${badWindows.mkString("\n")}")
   }
 
+  test("Lloyd: each iteration is one vector_mean aggregate, no positional avg") {
+    // the update is vector_mean grouped by cell; the (cell, pos) avg
+    // of the posexplode chain it replaced is gone (seeding still
+    // numbers its c seeds with a posexplode — not part of the update)
+    for (q <- Seq("q_ann_ivf", "q_semdedup")) {
+      val p = plan(q)
+      assert(p.contains("vector_mean("), s"$q:\n$p")
+      assert(!p.contains("avg("), s"$q:\n$p")
+    }
+    // shuffles of the bare training plan (2 Lloyd iterations); c = 12
+    // is a cell count no gate caches, so the plan is never an
+    // in-memory scan of an earlier spec's centroids. Ceiling 3: one
+    // cell-keyed exchange per iteration plus one single-partition
+    // exchange collecting iteration 1's centroids for the broadcast.
+    // The posexplode → (cell, pos) avg → collect_list chain planned 5.
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val p = graft.ann.Ivf.centroids(Tables.embeddings(spark, sf()), c = 12)
+      .queryExecution.executedPlan
+    assert(!p.toString.contains("avg("), s"Ivf.centroids:\n$p")
+    val shuffles = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+      def count: Int = collect(p) { case e: ShuffleExchangeExec => e }.size
+    }.count
+    assert(shuffles <= 3, s"Ivf.centroids: $shuffles shuffles > ceiling 3\n$p")
+  }
+
   test("metadata projections prune unused wide columns") {
     val p = plan("q_point_lookup")
     // lookup reads only the projected columns, with the key pushed down
