@@ -130,7 +130,7 @@ object Bench {
   // intra-cell pair grid, rows-only by nature.
   // q_compression_quality joins the extras: zlib is not
   // SQL-expressible, so it has no oracle-engine baseline by nature
-  private val extras = Seq("q_dedup_minhash", "q_semdedup",
+  private[graft] val extras = Seq("q_dedup_minhash", "q_semdedup",
     "q_compression_quality",
     // r10: incremental LSH ingest (index build staged OUTSIDE the
     // timed unit since r11 — the bench measures screen+verify+delta,
