@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.gates.Role
 
 /** Benchmark main: runs the headline workload on SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line {"metric":...,"queries":{...}}.
@@ -24,172 +26,11 @@ import org.apache.spark.sql.SparkSession
   * marks the small tier dirty when the r8 failure mode recurs.
   */
 object Bench {
-  private[graft] val headliners = Seq(
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-    "q_window_dedup", "q_v4_ml_dataset", "q_dedup_exact",
-    "q_ann_bruteforce", "q_token_count",
-    "q_quality_score", "q_event_windows", "q_sessionize",
-    "q_medallion_silver", "q_corpus_prep", "q_asof_join", "q_range_join",
-    "q_window_analytics", "q_dedup_clusters",
-    // round-5 additions: token-shuffle analytics (tf-idf, unigram LM),
-    // passage-grid dedup, rolling range-frame windows
-    "q_tfidf", "q_unigram_logprob", "q_passage_dedup", "q_rolling_agg",
-    // round-9 additions (r8 verdict item 7): the two r8 operators are
-    // corpus-wide shuffles (line-keyed grid; shard window) that had no
-    // bench row at any tier
-    "q_line_dedup", "q_shuffle_corpus",
-    // round-9 operators, same policy — corpus-wide work gets a bench
-    // row from birth: token-budget mixing (two corpus exchanges),
-    // CMS heavy hitters (sketch-per-partition exchange + exact top-k),
-    // DSIR importance weights (one reused token exchange + doc agg),
-    // CCNet quality buckets (histogram exchange + broadcast-join scan).
-    // q_bpe_encode is NOT here: its oracle is a committed fixture
-    // READ, so a DuckDB "baseline" for it would time a file scan,
-    // not the computation.
-    "q_token_budget", "q_heavy_hitters_sketch", "q_dsir_weights",
-    "q_ccnet_buckets",
-    // late-r9 operators, same bench-row-from-birth policy: the Gopher
-    // rule bundle (a full corpus scan pass) and temperature mixture
-    // rates (corpus tokenize + stratum-cardinality derivation)
-    "q_gopher_rules", "q_temperature_mix",
-    // q_bloom_ingest_dedup moved to extras in r12 (verdict item 2):
-    // its index builds are staged like LshIngest's, and the same-work
-    // baseline (DuckDB probing a pre-built digest table) lives under
-    // the baseline's extras — a from-raw headline compare charged
-    // Spark for sketch+digest builds the oracle never performs
-    // final r9 operators, same policy: PMI association mining (two
-    // corpus tokenize passes + a pair-keyed exchange) and the skew
-    // advisor (the counts-only key exchange a prospective join would
-    // pay). q_hll_store_check moved to the correctness gate only in
-    // r11 (verdict item 2): its timed cost was ~85% exact ENVELOPE,
-    // not operator — the operator is benched as q_hll_store (extras)
-    "q_pmi_cooccur", "q_skew_advisor",
-    // cross-source contamination matrix (one shingle-keyed exchange)
-    // and the drift verdict (two corpus scans + B-row exchanges)
-    "q_source_overlap", "q_drift_summary",
-    // fifth-session r9 operators, same bench-row-from-birth policy:
-    // Stupid Backoff LM (two tokenize sides + type-keyed joins),
-    // unicode NFC cleanup (a full regex scan pass), the Zipf
-    // frequency spectrum (one token exchange), and URL domain policy
-    // (host-keyed capped window). q_corpus_stats is NOT here — it
-    // times the same token exchange as q_freq_spectrum.
-    "q_backoff_logprob", "q_unicode_clean", "q_freq_spectrum",
-    "q_domain_policy",
-    // change-point monitoring: the events stream's one corpus-sized
-    // exchange (daily partial agg) + key-partitioned frames
-    "q_change_points",
-    // embedding standardization: the full posexplode moment pass +
-    // broadcast-stats HOF rewrite over every vector.
-    // q_source_overlap_sketch (the exact+sketch check harness) moved
-    // to the correctness gate only in r11 — the benched name is the
-    // standalone sub-exchange operator q_overlap_sketch (extras)
-    "q_embedding_standardize",
-    // MAD robust outliers: one corpus exchange to the value histogram
-    "q_mad_outliers",
-    // burstiness bot screen: one user-keyed exchange, lag + agg
-    // share its sort
-    "q_burstiness",
-    // r10 check harnesses (bench-row-from-birth): the classifier
-    // scoring replay (one tokenize + md5-bucket scan pass) and the
-    // frozen-assignment outlier threshold check (one embeddings pass
-    // + C-row threshold broadcast)
-    "q_classifier_margin_check", "q_outlier_threshold_check",
-    // r10 operators (bench-row-from-birth): keep-best canonical
-    // dedup (digest exchange, WindowGroupLimit partial top-1) and
-    // n-gram novelty (shingle-keyed anti-join, the decontaminate
-    // shape)
-    "q_dedup_keep_best", "q_ngram_novelty",
-    // robust median/IQR scaling: per-dim histogram exchange + keyed
-    // rank windows + broadcast-stats HOF pass
-    "q_robust_scale",
-    // char-diversity gibberish screen: zero-shuffle sorted-run fold
-    "q_char_diversity",
-    // r11 operators (bench-row-from-birth): EWMA volume smoothing
-    // (one daily-agg exchange + bounded prefix folds), chat/SFT
-    // transcript assembly (one user-keyed exchange serving both the
-    // session window and the ordered per-session concat), and URL
-    // frontier dedup (narrow canonicalize pass + one canonical-keyed
-    // exchange)
-    "q_ewma_anomaly", "q_chat_assemble", "q_url_dedup",
-    // r12 operators (bench-row-from-birth): the batch BM25 retrieval
-    // eval (one corpus tokenize+postings pass, semi-join-gated before
-    // any exchange) and vocabulary JS drift (one token exchange, then
-    // vocab-sized frames). q_tokenizer_fertility is NOT here: its
-    // oracle is a committed-fixture READ (the q_bpe_encode class), so
-    // a DuckDB "baseline" would time a file scan, not the computation
-    "q_retrieval_eval", "q_vocab_drift",
-    // r12: URL-graph PageRank — 10 nano-integer power iterations,
-    // two bounded exchanges per round (the canonical iterative job)
-    "q_pagerank")
-
-  // Timed every tier but EXCLUDED from the headline totals: these have
-  // no DuckDB oracle (not SQL-expressible), so including them would make
-  // every Spark-vs-baseline total need a "comparable subset" footnote
-  // (r7 verdict item 8). Reported under "extras" in each tier block.
-  // q_semdedup joins q_dedup_minhash here: embeddings-wide k-means +
-  // intra-cell pair grid, rows-only by nature.
-  // q_compression_quality joins the extras: zlib is not
-  // SQL-expressible, so it has no oracle-engine baseline by nature
-  private[graft] val extras = Seq("q_dedup_minhash", "q_semdedup",
-    "q_compression_quality",
-    // r10: incremental LSH ingest (index build staged OUTSIDE the
-    // timed unit since r11 — the bench measures screen+verify+delta,
-    // the per-batch cost; comparable-WORK DuckDB row recorded under
-    // the baseline's "extras")
-    "q_lsh_ingest_dedup",
-    // r11 (verdict item 2 + r10 overlap-sketch note): the OPERATOR
-    // forms of the two check harnesses — sketch store build+merge+
-    // estimate, and the sub-exchange sketch overlap matrix. Both
-    // rows-only by nature (HLL estimates aren't SQL); both carry
-    // comparable-WORK baselines (DuckDB answering the same question
-    // exactly) under the baseline's "extras"
-    "q_hll_store", "q_overlap_sketch",
-    // r12 staged/approx operator forms (verdict items 2-4) — all
-    // full-or-partial-oracle GATES, benched here because their
-    // baselines need same-work treatment outside the headline total:
-    // bloom ingest probes staged sketch+digest artifacts (baseline:
-    // DuckDB anti-join against a pre-built digest table), the q5
-    // staged map reads a persisted order→nation reduction (baseline:
-    // DuckDB probing the same pre-built map), and the approx event
-    // windows flip the exact-distinct engine floor to HLL (baseline:
-    // DuckDB's own approx_count_distinct)
-    "q_bloom_ingest_dedup", "q5_local_supplier_staged",
-    "q_event_windows_approx")
-
-  // sf30 demonstration tier (r8 verdict item 1; widened per r9 item
-  // 5): every headliner whose sf10 Spark time is >= 2 s — deep enough
-  // that fixed per-job cost is a falling fraction, so the tier
-  // separates engine floors from plan waste (it killed the r8 q3
-  // "amortization" theory and the r9 bloom diagnosis lives on it) —
-  // plus the original floor-adjudicated seven and q_mad_outliers
-  // (whose ~0.7 s post-histogram cost is measured FLAT sf10->sf30,
-  // the amortization demonstrator).
-  private val sf30Subset = Seq(
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-    "q_dedup_exact", "q_ann_bruteforce", "q_event_windows",
-    "q_bloom_ingest_dedup",
-    "q_v4_ml_dataset", "q_token_count", "q_medallion_silver",
-    "q_corpus_prep", "q_asof_join", "q_dedup_clusters", "q_tfidf",
-    "q_unigram_logprob", "q_passage_dedup", "q_dsir_weights",
-    "q_ccnet_buckets", "q_pmi_cooccur", "q_hll_store",
-    "q_source_overlap", "q_overlap_sketch", "q_backoff_logprob",
-    "q_mad_outliers",
-    // r11 (verdict item 4): q_robust_scale exceeded the >=2 s-at-sf10
-    // admission rule from birth but was absent from the sf30 tier;
-    // the staged LSH screen joins for its amortization evidence, and
-    // the chat-assembly newborn qualifies at 2.9 s sf10
-    "q_robust_scale", "q_lsh_ingest_dedup", "q_chat_assemble",
-    // r12 staged/approx forms: benched at the amortization-
-    // demonstration tier from birth (their whole point is the sf30
-    // ratio their from-raw/exact siblings could not reach)
-    "q5_local_supplier_staged", "q_event_windows_approx",
-    // r12 newborns over the >=2 s-at-sf10 admission rule: the batch
-    // retrieval eval at 7.5 s (the synthetic corpus's 31-token
-    // vocabulary makes every query term match most docs — the
-    // worst-case grid BOTH engines pay; the native vocab_term_counts
-    // postings build is what holds it under the oracle engine) and
-    // PageRank at 10.1 s (10 iterations x 2 exchanges)
-    "q_retrieval_eval", "q_pagerank")
+  /** The benched gates, in registry order ([[graft.gates.Role]]). */
+  private[graft] val headliners: Seq[String] =
+    SparkEntry.gates.collect { case g if g.bench == Role.Headline => g.name }
+  private[graft] val extras: Seq[String] =
+    SparkEntry.gates.collect { case g if g.bench == Role.Extra => g.name }
 
   /** Tier-freshness preamble (r9 verdict item 8): the gitignored tier
     * parquet was wiped twice during r9 and the old existence-only gate
@@ -245,11 +86,52 @@ object Bench {
   }
 
   /** Evaluate EVERY output column of every row on the executors
-    * (no driver collect) — the measurement action. See the comment
-    * at the timed call site for why count() must not be used.
+    * (no driver collect) — the measurement action. FULL
+    * materialization, not count(): count() rebuilds the plan as
+    * groupBy().count() and Catalyst then PRUNES every computed column
+    * — a pure-projection query (q_quality_score, q_token_count)
+    * degenerates to a row-count scan while the DuckDB baseline
+    * (fetchall) pays for every value. Measured at sf10:
+    * q_quality_score 0.1 s under count() vs ~9.4 s honestly
+    * materialized.
     */
-  private def exec(df: org.apache.spark.sql.DataFrame): Unit =
+  private[graft] def exec(df: DataFrame): Unit =
     df.queryExecution.toRdd.foreach(_ => ())
+
+  /** The JIT warm-up tier for a run on `dir`: the sf0.001 directory
+    * beside it, if there is one and it is not `dir` itself. Running
+    * each gate there first warms the JIT and whole-stage-codegen
+    * caches (different data files, same generated code).
+    */
+  private[graft] def warmupDir(dir: String): Option[String] = {
+    val here = new java.io.File(dir).getAbsoluteFile
+    val warm = new java.io.File(here.getParentFile, "sf0.001")
+    if (warm.isDirectory && warm != here) Some(warm.getPath) else None
+  }
+
+  /** One timed run of a gate on `dir`: its seconds and the
+    * materialized frame (for its executed plan). Throws what the gate
+    * throws.
+    */
+  private[graft] def timedRun(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame, dir: String): (Double, DataFrame) = {
+    // drop plan-level caches so each run pays the query's full cost
+    // (some pipelines cache internally); repeated runs then control
+    // for CPU noise only, not for cached reuse
+    spark.sharedState.cacheManager.clearCache()
+    // Release the previous runs' shuffle deps and broadcasts so the
+    // ContextCleaner frees their tmpfs files OUTSIDE the timed window.
+    // Without this the 48g AlwaysPreTouch heap almost never GCs, weak
+    // refs never enqueue, and a long bench accumulates every prior
+    // query's shuffle blocks in /dev/shm — measured: q_range_join read
+    // 10.2 s inside the full-tier sequence vs 1.65 s standalone at
+    // sf10, until a System.gc() between runs cured it.
+    System.gc(); Thread.sleep(300)
+    val t0 = System.nanoTime()
+    val df = fn(spark, dir)
+    exec(df)
+    ((System.nanoTime() - t0) / 1e9, df)
+  }
 
   /** One query's guarded measurement. `sec` < 0 marks a failed query;
     * `clean` means the kept attempt ran between two quiet sentinels
@@ -277,7 +159,7 @@ object Bench {
       val om = new com.fasterxml.jackson.databind.ObjectMapper()
       val root = om.readTree(json)
       import scala.jdk.CollectionConverters._
-      Seq("sf01", "sf1", "sf10", "sf30").flatMap { tag =>
+      Seq("sf01", "sf1", "sf10").flatMap { tag =>
         Option(root.get(tag)).map { t =>
           def obj(key: String): Map[String, Double] =
             Option(t.get(key)).map(_.fields().asScala
@@ -343,39 +225,14 @@ object Bench {
     // sentinels landed in gaps — the kept min may still be honest, but
     // the query must not stamp `clean` (late-r9: a poisoned sf10 tier
     // passed every sentinel this way)
-    def attempt(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
+    def attempt(fn: (SparkSession, String) => DataFrame): (Double, Double) = {
       val samples = (1 to runs).map { _ =>
-        // drop plan-level caches so each run pays the query's full
-        // cost (some pipelines cache internally); repeated runs then
-        // control for CPU noise only, not for cached reuse
-        spark.sharedState.cacheManager.clearCache()
-        // Release the previous runs' shuffle deps and broadcasts so
-        // the ContextCleaner frees their tmpfs files OUTSIDE the
-        // timed window. Without this the 48g AlwaysPreTouch heap
-        // almost never GCs, weak refs never enqueue, and a long
-        // bench accumulates every prior query's shuffle blocks in
-        // /dev/shm — measured r9: q_range_join read 10.2 s inside
-        // the full-tier sequence vs 1.65 s standalone at sf10, and
-        // back-to-back sf30 runs of one query degraded 14 s → 24 s
-        // → 34 s until a System.gc() between runs cured both.
-        System.gc(); Thread.sleep(300)
-        val t0 = System.nanoTime()
-        // FULL materialization, not count(): count() rebuilds the plan
-        // as groupBy().count() and Catalyst then PRUNES every computed
-        // column — a pure-projection query (q_quality_score,
-        // q_token_count) degenerates to a row-count scan while the
-        // DuckDB baseline (fetchall) pays for every value. Measured at
-        // sf10: q_quality_score 0.1 s under count() vs ~9.4 s honestly
-        // materialized. toRdd.foreach evaluates every output column on
-        // the executors without collecting to the driver.
-        val ok = try { exec(fn(spark, dir)); true }
-                 catch { case _: Throwable => false }
-        (ok, (System.nanoTime() - t0) / 1e9)
+        try Some(timedRun(spark, fn, dir)._1) catch { case _: Throwable => None }
       }
       // a query that threw must not report its (near-zero) elapsed
       // time as a success — sentinel -1 and a `failed` list instead
-      if (samples.forall(_._1)) {
-        val ts = samples.map(_._2)
+      if (samples.forall(_.isDefined)) {
+        val ts = samples.flatten
         (agg(ts), if (ts.min > 0) ts.max / ts.min else 1.0)
       } else (-1.0, 1.0)
     }
@@ -542,18 +399,19 @@ object Bench {
 
     sentinel(spark) // first call pays JIT for the probe itself: discard
 
-    // Warm JIT + whole-stage-codegen caches by running every headliner
-    // once against the smallest SF (different data files, same generated
-    // code). Steady-state throughput is the number that projects to a
-    // long-running 100 TB job; a cold JVM's first-compile cost does not.
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      (headliners ++ extras).foreach { name =>
-        SparkEntry.queries.get(name).foreach { fn =>
-          try exec(fn(spark, warmDir)) catch { case _: Throwable => () }
+    // Warm JIT + whole-stage-codegen caches by running every benched
+    // gate once on the warm-up tier. Steady-state throughput is the
+    // number that projects to a long-running 100 TB job; a cold JVM's
+    // first-compile cost does not.
+    warmupDir(sfDir) match {
+      case Some(warm) =>
+        (headliners ++ extras).foreach { name =>
+          SparkEntry.queries.get(name).foreach { fn =>
+            try exec(fn(spark, warm)) catch { case _: Throwable => () }
+          }
         }
-      }
-    else spark.read.parquet(s"$sfDir/nation.parquet").count()
+      case None => spark.read.parquet(s"$sfDir/nation.parquet").count()
+    }
 
     // cross-round tripwire reference: the best committed per-query
     // times — git HEAD's BENCH_LAST.json (the reviewed reference; the
@@ -615,16 +473,6 @@ object Bench {
     }
     val sf10Json = sf10Tier.map(t => s""","sf10":{"dir":"$sf10Dir","runs":2,${t.json}${ratioJson(t, "BASELINE_SF10.md")}}""").getOrElse("")
 
-    // ---- optional sf30 tier: the floor-amortization demonstration
-    // (r8 verdict item 1) — only the adjudicated-floor/weak subset,
-    // deep enough that fixed per-job cost is a falling fraction -------------
-    val sf30Dir = sys.env.getOrElse("SPARK_GRAFT_SF30_DIR", "testdata/sf30")
-    val sf30Tier = tierIf(sf30Dir, 300L, "sf30") {
-      runTier(spark, cpus, idleSec, sf30Dir, sf30Subset,
-        runs = 2, _.min, prior.getOrElse("sf30", Map.empty))
-    }
-    val sf30Json = sf30Tier.map(t => s""","sf30":{"dir":"$sf30Dir","runs":2,${t.json}${ratioJson(t, "BASELINE_SF30.md")}}""").getOrElse("")
-
     // ---- cross-tier physical sanity (r8 verdict item 5): same query,
     // more data, must not be faster beyond noise — else the small
     // tier's timing is load noise and the tier is marked dirty.
@@ -633,10 +481,7 @@ object Bench {
     // per-query sentinels all landed in burst gaps — headline-only
     // sanity would have let that pass silently ------------------------------
     def full(t: Tier): Seq[(String, Double)] = t.headline ++ t.extraResults
-    val biggest = sf30Tier.map(t => full(t) ++
-        sf10Tier.map(b => full(b).filterNot(q => sf30Subset.contains(q._1))).getOrElse(Nil))
-      .orElse(sf10Tier.map(full))
-      .orElse(sf1Tier.map(full))
+    val biggest = sf10Tier.map(full).orElse(sf1Tier.map(full))
     val xtier01 = biggest.map(b => BenchGuard.crossTierViolations(full(t0), b)).getOrElse(Nil)
     val xtier1 = (sf1Tier, biggest) match {
       case (Some(t1), Some(b)) => BenchGuard.crossTierViolations(full(t1), b)
@@ -654,11 +499,9 @@ object Bench {
     if (!t0.clean) reasons += "sf01_dirty"
     if (sf1Tier.exists(!_.clean)) reasons += "sf1_dirty"
     if (sf10Tier.exists(!_.clean)) reasons += "sf10_dirty"
-    if (sf30Tier.exists(!_.clean)) reasons += "sf30_dirty"
     if (t0.stagingFailed) reasons += "staging_failed_sf01"
     if (sf1Tier.exists(_.stagingFailed)) reasons += "staging_failed_sf1"
     if (sf10Tier.exists(_.stagingFailed)) reasons += "staging_failed_sf10"
-    if (sf30Tier.exists(_.stagingFailed)) reasons += "staging_failed_sf30"
     if (xtier01.nonEmpty) reasons += "cross_tier_sf01"
     if (xtier1.nonEmpty) reasons += "cross_tier_sf1"
     stale.foreach(t => reasons += s"stale_$t")
@@ -674,7 +517,7 @@ object Bench {
     // full artifact: every tier block, probes, per-query timings
     val reasonsJson = s""","contended_reasons":${arr(reasons.toSeq)},"prior_files":${arr(priorPaths)}"""
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","idle_calibration_sec":$idleSec%.3f,"load_gate":${BenchGuard.LoadFraction * cpus}%.1f,"sentinel_bound_sec":${BenchGuard.SentinelSlack * idleSec}%.3f,"contended":${!allClean}$reasonsJson$staleJson,"sf01":{${t0.json}${ratioJson(t0, "BASELINE.md")}}$sf1Json$sf10Json$sf30Json$xtierJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","idle_calibration_sec":$idleSec%.3f,"load_gate":${BenchGuard.LoadFraction * cpus}%.1f,"sentinel_bound_sec":${BenchGuard.SentinelSlack * idleSec}%.3f,"contended":${!allClean}$reasonsJson$staleJson,"sf01":{${t0.json}${ratioJson(t0, "BASELINE.md")}}$sf1Json$sf10Json$xtierJson}"""
     val out = new java.io.PrintWriter("BENCH_LAST.json")
     try out.println(json) finally out.close()
 
@@ -692,8 +535,7 @@ object Bench {
         f""""$tag":{"total":${x.headline.filter(_._2 >= 0).map(_._2).sum}%.2f,"clean":${x.clean}$ratio}"""
       }
     val tiers = (Seq(tierBrief("sf1", sf1Tier, "BASELINE_SF1.md"),
-      tierBrief("sf10", sf10Tier, "BASELINE_SF10.md"),
-      tierBrief("sf30", sf30Tier, "BASELINE_SF30.md")).flatten ++
+      tierBrief("sf10", sf10Tier, "BASELINE_SF10.md")).flatten ++
       comparable(t0, "BASELINE.md").collect {
         case (_, sp, b) if b > 0 => f""""sf01_ratio":${sp / b}%.2f""" } :+
       s""""xtier_dirty":${(xtier01 ++ xtier1).distinct.size}""").mkString(",")

@@ -155,14 +155,4 @@ object GraftSession {
   }
 
   def get(): SparkSession = builder().getOrCreate()
-
-  /** Apply the graft defaults to an existing session (used by
-    * Verify/Bench whose sessions are built by the driver contract).
-    */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark
-  }
 }

@@ -1,8 +1,6 @@
 package graft
 
-import java.io.File
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
@@ -30,29 +28,16 @@ object Probe {
 
   private val aqe = new AdaptiveSparkPlanHelper {}
 
-  /** A JIT warm-up pass on the sf0.001 tier beside `dir` (if there is
-    * one), then three timed runs on `dir`. Left reports an unknown or
-    * failing gate.
+  /** A JIT warm-up pass on the warm-up tier beside `dir`
+    * ([[Bench.warmupDir]]), then three of Bench's timed runs on `dir`.
+    * Left reports an unknown or failing gate.
     */
   def measure(spark: SparkSession, dir: String, name: String): Either[String, Result] =
     SparkEntry.queries.get(name).toRight(s"PROBE $name UNKNOWN").flatMap { fn =>
-      // FULL materialization, as in Bench: count() would let Catalyst
-      // prune the computed columns the baseline engine pays for
-      def exec(df: DataFrame): DataFrame = { df.queryExecution.toRdd.foreach(_ => ()); df }
-      val here = new File(dir).getAbsoluteFile
-      val warm = new File(here.getParentFile, "sf0.001")
       try {
-        if (warm.isDirectory && warm != here) exec(fn(spark, warm.getPath))
-        val runs = (1 to 3).map { _ =>
-          spark.sharedState.cacheManager.clearCache()
-          // free the prior run's shuffle blocks and broadcasts outside
-          // the timed window (Bench.timeGuarded)
-          System.gc(); Thread.sleep(300)
-          val t0 = System.nanoTime()
-          val df = exec(fn(spark, dir))
-          ((System.nanoTime() - t0) / 1e9, df.queryExecution.executedPlan)
-        }
-        val plan = runs.last._2
+        Bench.warmupDir(dir).foreach(w => Bench.exec(fn(spark, w)))
+        val runs = (1 to 3).map(_ => Bench.timedRun(spark, fn, dir))
+        val plan = runs.last._2.queryExecution.executedPlan
         Right(Result(name, runs.map(_._1),
           aqe.collect(plan) { case e: ShuffleExchangeExec => e }.size,
           aqe.find(plan)(_.isInstanceOf[BroadcastNestedLoopJoinExec]).isDefined,

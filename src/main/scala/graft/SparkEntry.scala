@@ -1,17 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators._
-import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import graft.dedup.{MinHashLSH, NgramJaccard, SemDeDup, SimHash}
-import graft.ann.Knn
-import graft.sources.Readers
-import graft.streaming.Events
+import graft.gates._
+import graft.gates.Fixtures.{ensureBloomBatch, stagePath}
 
-/** Driver contract — one `queries` entry per operator in SURVEY.md §2,
-  * with a DuckDB-runnable oracle for every SQL-expressible one.
+/** Driver contract: the index of the 210 named gates, one per operator
+  * in SURVEY.md §2, 192 of them with a DuckDB-runnable oracle.
+  *
+  * Each gate is declared once, builder and oracle side by side, in its
+  * family's object under `graft.gates`; `queries` and `oracleSql` are
+  * derived from that one list, so adding or retiring a gate touches one
+  * declaration in one family file.
   *
   * Conventions for cross-engine determinism:
   *  - every computed numeric column is explicitly typed (long/double);
@@ -23,117 +24,17 @@ import graft.streaming.Events
   */
 object SparkEntry {
 
-  private val stopwords = Seq("the", "a", "of", "and", "to", "in")
+  /** Every gate, family by family; a name declared twice fails here. */
+  val gates: Seq[Gate] = Gate.registry(
+    Tpch.gates, Sources.gates, Silver.gates, Gold.gates, Dedup.gates,
+    Ann.gates, Multimodal.gates, Pipeline.gates, Text.gates,
+    Tokenizers.gates, Curation.gates, TableOps.gates, Streaming.gates)
 
-  private val Gi = 1L << 30
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gates.map(g => g.name -> g.build).toMap
 
-  /** Size-gated broadcast hint (r8 verdict item 1: the q3/q5 hints
-    * were hard-coded, so the written plan was NOT the one a 100×
-    * run should execute). Emits the hint only while `table`'s
-    * on-disk footprint is under `capDiskBytes`; each call site
-    * derives its cap from the payload the hinted side actually
-    * builds (arithmetic in the site comment, targeting ≤~256 MB
-    * built). Above the cap NO hint is emitted and AQE plans the
-    * join unaided — it keeps the key-shuffled hash join once the
-    * built side outgrows the broadcast ceiling, which is the
-    * correct cluster plan. The gate is one filesystem metadata
-    * call ([[Tables.bytesOnDisk]]): no Spark job, no collect, and
-    * deterministic for a given tier.
-    */
-  private[graft] def broadcastIfUnder(s: SparkSession, d: String, table: String,
-                                      capDiskBytes: Long)(df: DataFrame): DataFrame =
-    if (Tables.bytesOnDisk(s, d, table) <= capDiskBytes) broadcast(df) else df
-
-  /** Engine-portable half-up rounding on non-negative doubles:
-    * `floor(x*10^dp + 0.5)/10^dp`. Unlike `round()`, both engines
-    * apply identical IEEE ops to the identical binary double, so a
-    * value like 4.475 (stored 4.47499…) rounds the same way in Spark
-    * and DuckDB. Used wherever the operand is an exact ratio of
-    * integers (means/rates), where x.xx5 boundaries actually occur.
-    */
-  /** Re-crawl a deterministic 10% of docs under shifted ids: the
-    * 500-doc gate corpora have no naturally planted duplicates
-    * (generator rate is 1/625), so dedup gates would verify a no-op.
-    * Oracles mirror the same UNION ALL.
-    *
-    * The shift is the smallest power of 10 above max(doc_id) — a
-    * fixed +1e6 would silently collide with real ids once a corpus
-    * passes 1M docs — computed as a 1-row broadcast (no driver
-    * round-trip) and identically in the oracle SQL. Powers of 10 up
-    * to 10^15 are exact doubles, and original < re-crawl ordering is
-    * preserved, so min(doc_id) still keeps the first crawl.
-    */
-  private def withRecrawls(docs: DataFrame): DataFrame = {
-    // One materialized scan feeds all three consumers (offset agg, base
-    // branch, recrawl branch) — unstaged, the gate paid three document
-    // scans and benched the planting, not the dedup operator. The cache
-    // is per-gate-run (Bench clears the cache manager between runs).
-    // coalesce/greatest guard: an empty corpus yields NULL max (offset
-    // falls back to 1e6) and a negative max would count its '-' sign as
-    // a digit (clamped to 0 → offset 10, still above every id).
-    val cached = docs.cache()
-    val off = cached.agg(coalesce(pow(lit(10.0),
-      length(greatest(coalesce(max(col("doc_id")), lit(0L)), lit(0L))
-        .cast("string"))).cast("long"), lit(1000000L)).as("__off"))
-    cached.unionByName(cached.filter(pmod(col("doc_id"), lit(10L)) === 3L)
-      .crossJoin(broadcast(off))
-      .withColumn("doc_id", col("doc_id") + col("__off"))
-      .drop("__off"))
-  }
-
-  /** Near-recrawl augmentation for the near-dup gates. Two plantings
-    * over shifted id namespaces (off = smallest power of 10 above
-    * max(doc_id), as in [[withRecrawls]]):
-    *
-    *  - %25==4 docs re-crawl once at id+off with ONE appended token —
-    *    classic near-dup PAIRS (J = s/(s+1) ≈ 1);
-    *  - %50==11 docs plant a 3-node CHAIN at id+2off/+3off/+4off:
-    *    B1 = T+pad1, B2 = T+pad2, C = T+pad1+pad2 with |pad| ≈
-    *    1.2×tokens(T), giving J(B1,C)=J(B2,C)≈0.65 ≥ 0.5 but
-    *    J(B1,B2)≈0.29 < 0.5 (and J(T,B1)≈0.45 — the original stays a
-    *    singleton). Pairwise drop-id_b keeps BOTH B1 and B2; the
-    *    cluster-canonical policy keeps only B1 — the shape that makes
-    *    cluster ≠ pairwise observable in the gate corpus itself.
-    *
-    * Pad tokens are letters-only ("zz<id>x<i>" with digits mapped
-    * a-j) so the quality gate's alpha ratio is unaffected, and unique
-    * per (doc, i) so they never collide across plantings.
-    */
-  private def withNearRecrawls(docs: DataFrame): DataFrame = {
-    val cached = docs.cache()
-    val off = cached.agg(coalesce(pow(lit(10.0),
-      length(greatest(coalesce(max(col("doc_id")), lit(0L)), lit(0L))
-        .cast("string"))).cast("long"), lit(1000000L)).as("__off"))
-    def letters(c: Column): Column =
-      translate(c.cast("string"), "0123456789", "abcdefghij")
-    val g = ceil(lit(1.2) * size(split(trim(lower(col("text"))), "\\s+")))
-      .cast("long")
-    def pad(lo: Column, hi: Column): Column =
-      array_join(transform(sequence(lo, hi),
-        i => concat(lit("zz"), letters(col("doc_id")), lit("x"), letters(i))), " ")
-    def chainBranch(mult: Int, textCol: Column): DataFrame =
-      cached.filter(pmod(col("doc_id"), lit(50L)) === 11L)
-        .withColumn("text", textCol)
-        .crossJoin(broadcast(off))
-        .withColumn("doc_id", col("doc_id") + lit(mult.toLong) * col("__off"))
-        .drop("__off")
-    cached
-      .unionByName(cached.filter(pmod(col("doc_id"), lit(25L)) === 4L)
-        .crossJoin(broadcast(off))
-        .withColumn("doc_id", col("doc_id") + col("__off"))
-        .drop("__off")
-        .withColumn("text", concat(col("text"), lit(" nearly"))))
-      .unionByName(chainBranch(2, concat(col("text"), lit(" "), pad(lit(1L), g))))
-      .unionByName(chainBranch(3, concat(col("text"), lit(" "), pad(g + 1, g * 2))))
-      .unionByName(chainBranch(4, concat(col("text"), lit(" "), pad(lit(1L), g * 2))))
-  }
-
-  private def pround = graft.functions.Rounding.pround _
-  private val langMarkers = Seq(
-    "en" -> Seq("the", "a"),
-    "es" -> Seq("el", "la", "los"),
-    "de" -> Seq("der", "die", "und"),
-    "fr" -> Seq("le", "les", "et"))
+  val oracleSql: Map[String, String] =
+    gates.flatMap(g => g.oracle.map(g.name -> _)).toMap
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. The
     * medallion silver chain is the reference's core workload.
@@ -150,17 +51,6 @@ object SparkEntry {
     * fingerprint-guarded no-ops once staged), so a standalone
     * `queries(name)` call still works anywhere.
     */
-  /** /tmp staging path for a per-tier persisted artifact, keyed by the
-    * data dir's ABSOLUTE path plus the invoking user — a relative
-    * "testdata/sf0.1" from two checkouts (or two users) must not
-    * collide on one /tmp artifact (r11 advice item 3).
-    */
-  private[graft] def stagePath(kind: String, d: String): String = {
-    val abs = new java.io.File(d).getAbsolutePath
-    val user = sys.props.getOrElse("user.name", "u")
-    s"/tmp/graft_${kind}_${user}_${abs.replaceAll("[^a-zA-Z0-9]", "_")}"
-  }
-
   def stageTier(spark: SparkSession, dir: String): Unit = {
     // sourceFp: FS-metadata stamp of the artifact's SOURCE table —
     // the ensure* hot path then costs a few file-attr reads, never a
@@ -178,8 +68,8 @@ object SparkEntry {
       emb.filter(pmod(col("vec_id"), lit(5L)) === 0L),
       stagePath("ivfapp", dir), c = 16,
       sourceFp = Tables.sourceStamp(spark, dir, "embeddings"))
-    // r12: the bloom ingest index (corpus sketch + digest table) and
-    // the q5 order→nation map — the two newly staged-form operators
+    // the bloom ingest index (corpus sketch + digest table) and the
+    // q5 order→nation map
     val est = math.min(math.max(Tables.bytesOnDisk(spark, dir, "documents") / 64L,
       1024L), 1L << 26)
     graft.operators.BloomDedup.ensureIngestIndex(
@@ -191,6666 +81,4 @@ object SparkEntry {
     ensureBloomBatch(spark, dir)
     ()
   }
-
-  /** Stage the bloom gate's incoming batch as parquet — a crawl batch
-    * arrives MATERIALIZED in production, so the per-batch timed unit
-    * reads it rather than re-deriving it from the corpus (two full
-    * text scans that are harness, not operator). The DuckDB baseline
-    * stages the same batch as an untimed setup table, keeping the
-    * compare same-work on both sides.
-    */
-  private def ensureBloomBatch(s: SparkSession, d: String): String = {
-    val path = stagePath("bloombatch", d)
-    val fp = s"src:${Tables.sourceStamp(s, d, "documents").getOrElse("none")}"
-    val marker = java.nio.file.Paths.get(path, "_FINGERPRINT")
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim == fp
-    if (!fresh) {
-      val docs = Tables.documents(s, d).select("doc_id", "text", "source")
-      docs.filter(pmod(col("doc_id"), lit(10L)) === 3L)
-        .unionByName(docs.select(col("doc_id"),
-          concat(lit("fresh "), col("doc_id").cast("string"), lit(" "), col("text"))
-            .as("text"),
-          col("source")))
-        .write.mode("overwrite").parquet(s"$path/batch")
-      java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
-    }
-    s"$path/batch"
-  }
-
-  // ---------------------------------------------------------------
-  // Analytics V1-V4 (reference test/query_gold_validations.sql),
-  // parameterized by input so they run identically over parquet paths
-  // and managed catalog tables.
-  // ---------------------------------------------------------------
-  private def v1(orders: DataFrame, customer: DataFrame): DataFrame =
-    orders
-      .filter(upper(trim(col("o_orderstatus"))) === "O")
-      .join(customer, col("o_custkey") === col("c_custkey"))
-      .groupBy("c_mktsegment")
-      .agg(count_distinct(col("o_custkey")).as("total_active"))
-      .orderBy(col("total_active").desc, col("c_mktsegment").asc)
-
-  private def v2(orders: DataFrame, customer: DataFrame, nation: DataFrame): DataFrame =
-    customer
-      .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
-      .join(orders, col("o_custkey") === col("c_custkey"))
-      .groupBy("n_name")
-      .agg(pround(avg(lit(2026) - year(col("o_orderdate"))), 2).as("avg_age"),
-        count_distinct(col("c_custkey")).as("total_customers"))
-      .filter(col("total_customers") > 5)
-      .orderBy(col("avg_age").desc, col("n_name").asc)
-      .limit(5)
-
-  private def v3(orders: DataFrame, customer: DataFrame): DataFrame =
-    orders
-      .join(customer, col("o_custkey") === col("c_custkey"))
-      .groupBy("c_mktsegment")
-      .agg(
-        count_distinct(when(upper(trim(col("o_orderstatus"))) === "O", col("o_custkey")))
-          .as("active_customers"),
-        count_distinct(col("o_custkey")).as("total_customers"))
-      .withColumn("rate_pct",
-        pround(col("active_customers") * lit(100.0) / col("total_customers"), 2))
-      .orderBy(col("rate_pct").desc, col("c_mktsegment").asc)
-
-  private def v4(orders: DataFrame, customer: DataFrame): DataFrame = {
-    val base = orders
-      .join(customer, col("o_custkey") === col("c_custkey"))
-      .filter(col("o_orderstatus").isin("O", "F", "P") && col("o_totalprice").isNotNull)
-      .select("c_custkey", "c_mktsegment", "o_orderkey", "o_orderdate", "o_totalprice")
-    Deduplicator.latestWins(base, Seq("c_custkey"), "o_orderdate", Some("o_orderkey"))
-      .select(
-        col("c_custkey"), col("c_mktsegment"),
-        year(col("o_orderdate")).cast("long").as("last_order_year"),
-        when(year(col("o_orderdate")) >= 1998, 1L).otherwise(0L).as("renovo"),
-        when(col("o_totalprice") < 50000, "small")
-          .when(col("o_totalprice") < 150000, "medium")
-          .otherwise("large").as("value_segment"),
-        (lit(2026) - year(col("o_orderdate"))).cast("long").as("years_since_order"))
-  }
-
-  // Shared between q_fuzzy_match and q_entity_clusters so the two
-  // queries (and their DuckDB oracles) can't silently desynchronize.
-  private def partNameReps(parts: DataFrame): DataFrame =
-    parts.groupBy("p_name").agg(min("p_partkey").as("rep"))
-  private def partNameFuzzyPairs(reps: DataFrame): DataFrame =
-    graft.operators.FuzzyJoin.pairs(reps, "rep", "p_name",
-      substring_index(col("p_name"), " ", 1), maxDist = 3)
-
-  // ---------------------------------------------------------------
-  // Query catalog
-  // ---------------------------------------------------------------
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ===== F. TPC-H-style headliners =====================================
-    "q1_pricing_summary" -> ((s, d) => {
-      Tables.lineitem(s, d)
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp_ntz"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-          round(avg("l_quantity"), 2).as("avg_qty"),
-          round(avg("l_discount"), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-    }),
-
-    "q3_shipping_priority" -> ((s, d) => {
-      val c = Tables.customer(s, d).filter(upper(trim(col("c_mktsegment"))) === "BUILDING")
-      val o = Tables.orders(s, d).filter(col("o_orderdate") < lit("1998-03-15").cast("timestamp_ntz"))
-      val l = Tables.lineitem(s, d).filter(col("l_shipdate") > lit("1998-03-15").cast("timestamp_ntz"))
-      // BUILDING customers broadcast into the date-filtered orders
-      // (the only broadcast left in this query — ~20% of customer,
-      // one join key + date column built; size-gated below so a 100×
-      // customer falls back to AQE's key-shuffled join). Group on
-      // the RAW 8-byte timestamp, not a formatted string (the r7
-      // plan's per-row date_format string grouping key was an sf10
-      // cost); o_orderdate is functionally dependent on l_orderkey
-      // so the groups are identical, and the string render runs on
-      // 10 rows after the TakeOrdered.
-      //
-      // History: r8 broadcast the c⨝o side into lineitem too and
-      // attributed the residual vs DuckDB to "fixed broadcast driver
-      // round-trips that amortize at cluster scale". The r9 sf30
-      // tier DISPROVED the amortization half: co grows linearly with
-      // SF (~10% of orders), so its single-threaded broadcast build
-      // grows too — the measured fit was time ≈ 1.4 s + 2.5×DuckDB's
-      // per-byte cost, a ratio that never falls below ~2.5. The
-      // shuffled form (below) removed the linear broadcast term.
-      val co = broadcastIfUnder(s, d, "customer", 2 * Gi)(c)
-        .join(o, col("c_custkey") === col("o_custkey"))
-        .select("o_orderkey", "o_orderdate")
-      // The c⨝o side probes lineitem via SHUFFLED hash join, not a
-      // broadcast (r9 A/B with per-run GC'd measurements): the co
-      // build grows LINEARLY with SF (~10% of orders), so its
-      // single-threaded broadcast construction never amortizes —
-      // broadcast 3.26 s vs shuffle-hash 1.54 s at sf10, 1.15 vs
-      // 0.65 at sf1, ≈even at sf30 — while the shuffled probe side
-      // is the date-FILTERED fact (~46% of lineitem, 3 narrow cols).
-      // This is also the only 100×-safe shape: co outgrows any
-      // broadcast ceiling long before lineitem stops fitting a
-      // shuffle. (q5 keeps its broadcast chain: its probe is the
-      // UNFILTERED fact, and shuffling 100% of lineitem measured 2×
-      // worse than building its smaller asian-orders broadcast.)
-      // revenue is computed BEFORE the fact exchange: the shuffle
-      // then moves (l_orderkey, rev) = 16 B/row instead of
-      // (l_orderkey, l_extendedprice, l_discount) = 24 B/row — same
-      // arithmetic, a third less fact-shuffle traffic (r9 A/B at
-      // sf30: 4.28 → 3.90 s min under like-for-like load). Also
-      // A/B'd and REJECTED at sf10: Spark's runtime bloom filter on
-      // the fact side (thresholds raised so InjectRuntimeFilter
-      // fires — verified in-plan). It cuts the fact shuffle 10× but
-      // pays 95M might_contain probes plus a second co evaluation
-      // for the bloom build; against local tmpfs shuffle that
-      // measured a net loss at sf10 (min 4.8 vs 3.9 s). r11
-      // re-measured at sf30 (verdict item 8): the trade REVERSES
-      // exactly as the shuffle-payload term grows — bloom 6.42 s vs
-      // 7.37 s min under like-for-like load, a 13% win. The gate
-      // keeps the conf-neutral plan (one binary serves sf0.1–sf30,
-      // and the sf10 loss outweighs the sf30 win locally); at
-      // cluster scale with network shuffle the knob belongs ON —
-      // runtime.bloomFilter.creationSideThreshold raised so the co
-      // side qualifies. Measured both ways; closed as a
-      // scale-dependent conf, not plan waste.
-      val lrev = l.select(col("l_orderkey"),
-        (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-      lrev.join(co.hint("shuffle_hash"), col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"))
-        .agg(round(sum(col("rev")), 2).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(10)
-        .select(col("l_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
-          col("revenue"))
-    }),
-
-    "q5_local_supplier" -> ((s, d) => {
-      val r = Tables.region(s, d).filter(col("r_name") === "ASIA")
-      val n = Tables.nation(s, d)
-      val c = Tables.customer(s, d)
-      val sup = Tables.supplier(s, d)
-      val o = Tables.orders(s, d)
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
-                col("o_orderdate") < lit("1998-01-01").cast("timestamp_ntz"))
-      val l = Tables.lineitem(s, d)
-      // r8 rework: the old shape shuffled the fact twice (o⨝l on
-      // orderkey, then the joined fact on custkey against the
-      // non-broadcast customer) — 5.9 s at sf10. Instead reduce the
-      // dimension side FIRST: region⨝nation (5 rows) semi-reduces
-      // customer to the ASIA ~20%, that broadcast reduces the
-      // date-filtered orders to asian orders (orderkey, nationkey —
-      // 16 bytes/row), and THAT broadcast probes lineitem inline, so
-      // the 100× table never shuffles at all. The group key is the
-      // 25-value nationkey (map-side partial agg collapses each task
-      // to ≤25 rows; the exchange moves a few hundred bytes), and
-      // n_name joins after the agg on ≤25 rows. The sized hints are
-      // GATED on source-table on-disk bytes (r9, same form as q3):
-      // asianCust builds ~20% of customer at 12 B/row (2 GiB cap ≈
-      // 100M customers ≈ 240 MB built); asianOrders builds ~6% of
-      // orders at 16 B/row (3 GiB cap ≈ 160M orders ≈ 150 MB
-      // built); the full projected supplier is 16 B/row with no
-      // filter, so it gates tightest (512 MiB cap ≈ 24M suppliers ≈
-      // 390 MB built). Past any cap that hint drops and AQE keeps
-      // the key-shuffled hash join — the correct cluster plan.
-      // region⨝nation is ≤25 rows at every scale: hinted always.
-      // Late-r9 re-A/B at sf30 under like-for-like load: broadcast
-      // chain 5.2 s min vs shuffled-fact 6.4 s min — the chain holds.
-      // Decomposition: materializing asianOrders ALONE is ~1.9 s
-      // (asianCust broadcast build + the orders scan it probes), so
-      // roughly half the query is the order→nation map build that
-      // every correct plan must pay in some form; the remaining gap
-      // vs the oracle engine sits in the 180M-row unfiltered fact
-      // probe, which is the scan+probe floor, not a shuffle to
-      // remove. r11 measured the persisted-map lever (verdict item
-      // 8): writing the (o_orderkey, c_nationkey) map once costs
-      // 1.32 s, and the query reading it back runs 3.73 s vs 5.19 s
-      // from-raw at sf30 — a 28% cut for pipelines that re-ask the
-      // same window (the CatalogStar persisted-table pattern). The
-      // gate stays from-raw for oracle parity: the DuckDB baseline
-      // pays the same map build inside its query, so staging it
-      // would compare different work. Closed: fact-probe floor,
-      // with the amortization lever measured on file.
-      val asianNations = broadcast(n.join(broadcast(r),
-        col("n_regionkey") === col("r_regionkey")))
-      val asianCust = c.join(asianNations, col("c_nationkey") === col("n_nationkey"))
-        .select("c_custkey", "c_nationkey")
-      val asianOrders = broadcastIfUnder(s, d, "customer", 2 * Gi)(asianCust)
-        .join(o, col("o_custkey") === col("c_custkey"))
-        .select("o_orderkey", "c_nationkey")
-      l.join(broadcastIfUnder(s, d, "orders", 3 * Gi)(asianOrders),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcastIfUnder(s, d, "supplier", Gi / 2)(
-            sup.select("s_suppkey", "s_nationkey")),
-          col("l_suppkey") === col("s_suppkey") &&
-            col("s_nationkey") === col("c_nationkey"))
-        .groupBy("c_nationkey")
-        .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name"), round(col("rev"), 2).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name").asc)
-    }),
-
-    "q5_local_supplier_staged" -> ((s, d) => {
-      // q5 through the PERSISTED order→nation map (r11 verdict item 3,
-      // adopting the LshIngest staging precedent): the r11 measurement
-      // showed ~half of every from-raw q5 run is the customer⨝orders
-      // dimension-reduction build (asianOrders materializes alone in
-      // ~1.9 s at sf30), and persisting that map once cut the repeat
-      // query 28% (3.73 vs 5.19 s). StagedMaps.ensureOrderNationMap
-      // stages it per tier (fingerprint-stamped; Bench pre-stages via
-      // stageTier), so the timed unit is what a pipeline re-asking the
-      // same window pays: map read → fact probe → supplier join → agg.
-      // Result is IDENTICAL to q5 by construction, so the gate keeps
-      // q5's FULL oracle; the bench row lives in extras with a
-      // same-work DuckDB baseline (the baseline builds the map in an
-      // untimed setup statement — EXTRAS_BASELINE_SQL).
-      val path = stagePath("q5map", d)
-      graft.sources.StagedMaps.ensureOrderNationMap(s, d, path)
-      val asianOrders = graft.sources.StagedMaps.orderNationMap(s, path)
-      val l = Tables.lineitem(s, d)
-      val sup = Tables.supplier(s, d)
-      val n = Tables.nation(s, d)
-      // same size-gated broadcast chain as q5's probe side: the map is
-      // ~6% of orders at 16 B/row (3 GiB source cap ≈ 150 MB built);
-      // past the cap AQE keeps the key-shuffled join — the cluster plan
-      l.join(broadcastIfUnder(s, d, "orders", 3 * Gi)(asianOrders),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcastIfUnder(s, d, "supplier", Gi / 2)(
-            sup.select("s_suppkey", "s_nationkey")),
-          col("l_suppkey") === col("s_suppkey") &&
-            col("s_nationkey") === col("c_nationkey"))
-        .groupBy("c_nationkey")
-        .agg(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name"), round(col("rev"), 2).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name").asc)
-    }),
-
-    // ===== A. Sources ====================================================
-    "q_csv_roundtrip" -> ((s, d) => {
-      // Real CSV path exercise: project events -> write CSV -> read back
-      // with the robust reader + explicit schema -> aggregate. The
-      // oracle aggregates the same columns straight from parquet.
-      import org.apache.spark.sql.types._
-      val tmp = s"/tmp/graft_csv_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
-        .write.mode("overwrite").option("header", "true").csv(tmp)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType)))
-      Readers.csv(s, tmp, multiLine = false, schema = Some(schema))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-    }),
-
-    "q_csv_catalog_infer" -> ((s, d) => {
-      // reference silver loads its small catalog CSVs with
-      // inferSchema=true (src/silver/job-silver-rues.py:94) and bronze
-      // caps parser width with maxColumns=50
-      // (src/bronze/job-bronze-rues.py:66) — both exercised here.
-      // Inference re-reads the file, so it is ONLY for small catalogs;
-      // the emitted key_type column pins the inferred numeric type
-      // (a regression to all-string columns fails the value hash)
-      val tmp = s"/tmp/graft_cat_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
-        .coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
-      val cat = Readers.csv(s, tmp, multiLine = false,
-        inferSchema = true, maxColumns = 50)
-      cat.groupBy(col("n_regionkey").cast("long").as("n_regionkey"))
-        .agg(count(lit(1)).as("n_nations"),
-          sum("n_nationkey").as("sum_key"))
-        .withColumn("key_type", lit(cat.schema("n_regionkey").dataType.simpleString))
-    }),
-
-    "q_partitioned_write" -> ((s, d) => {
-      // Partition-aware write + read-back with partition pruning.
-      val tmp = s"/tmp/graft_part_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      graft.sources.Writers.parquetByYear(
-        Tables.orders(s, d), tmp, "o_orderdate")
-      s.read.parquet(tmp)
-        .filter(col("year_partition") === 1996)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum("o_totalprice"), 2).as("sum_total"))
-    }),
-
-    "q_vacuum" -> ((s, d) => {
-      // retention: expire old year-partitions as directory deletes
-      // (no scan, no rewrite), then aggregate what remains
-      val tmp = s"/tmp/graft_vacuum_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      graft.sources.Writers.parquetByYear(Tables.orders(s, d), tmp, "o_orderdate")
-      graft.sources.Writers.dropPartitions(s, tmp, "year_partition",
-        keep = _.toInt >= 1996)
-      s.read.parquet(tmp)
-        .groupBy(col("year_partition").cast("long").as("yr"))
-        .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("sum_total"))
-    }),
-
-    "q_schema_evolution" -> ((s, d) => {
-      // schema drift across partition generations: v1 lacks the
-      // o_orderpriority column; mergeSchema read unifies, old rows
-      // null-fill — the append-only lake evolution path
-      val tmp = s"/tmp/graft_evo_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      val o = Tables.orders(s, d)
-      o.filter(year(col("o_orderdate")) < 1996)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .write.mode("overwrite").parquet(s"$tmp/gen=1")
-      o.filter(year(col("o_orderdate")) >= 1996)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
-        .write.mode("overwrite").parquet(s"$tmp/gen=2")
-      s.read.option("mergeSchema", "true").parquet(tmp)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          count(col("o_orderpriority")).as("n_with_priority"),
-          round(sum("o_totalprice"), 2).as("sum_total"))
-    }),
-
-    "q_json_roundtrip" -> ((s, d) => {
-      // JSON-lines sink + schema-supplied read-back (no inference pass).
-      import org.apache.spark.sql.types._
-      val tmp = s"/tmp/graft_json_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      graft.sources.Writers.jsonLines(
-        Tables.events(s, d).select("event_id", "event_type", "value"), tmp)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType)))
-      Readers.json(s, tmp, Some(schema))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          round(min("value"), 2).as("min_value"),
-          round(max("value"), 2).as("max_value"))
-    }),
-
-    "q_orc_roundtrip" -> ((s, d) => {
-      val tmp = s"/tmp/graft_orc_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      graft.sources.Writers.orcPartitioned(
-        Tables.orders(s, d).select("o_orderkey", "o_orderstatus", "o_totalprice"), tmp)
-      Readers.orc(s, tmp)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum("o_totalprice"), 2).as("sum_total"))
-    }),
-
-    "q_xml_roundtrip" -> ((s, d) => {
-      // XML interchange roundtrip (Spark 4 built-in source): write one
-      // element per row, read back with a SUPPLIED schema (inference =
-      // an extra full parse pass at scale), aggregate to prove content
-      import org.apache.spark.sql.types._
-      val tmp = s"/tmp/graft_xml_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      graft.sources.Writers.xml(
-        Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey"),
-        tmp, rowTag = "nation")
-      val schema = StructType(Seq(
-        StructField("n_nationkey", LongType), StructField("n_name", StringType),
-        StructField("n_regionkey", LongType)))
-      Readers.xml(s, tmp, rowTag = "nation", Some(schema))
-        .groupBy("n_regionkey")
-        .agg(count(lit(1)).as("n_nations"),
-          sum("n_nationkey").as("sum_key"),
-          min("n_name").as("first_name"))
-    }),
-
-    "q_json_extract" -> ((s, d) =>
-      // Typed JSON field extraction from the events.props payload.
-      Tables.events(s, d)
-        .withColumn("k",
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("k",
-                org.apache.spark.sql.types.LongType)))).getField("k"))
-        .groupBy("event_type")
-        .agg(sum("k").as("sum_k"), count(col("k")).as("n_with_k"))),
-
-    // ===== B. Profiling ==================================================
-    "q_null_profile" -> ((s, d) => Profiler.nullProfile(Tables.events(s, d))),
-
-    "q_dup_profile" -> ((s, d) =>
-      Profiler.dupProfile(Tables.events(s, d), Seq("user_id", "event_type"))),
-
-    // ===== C. Silver business rules ======================================
-    "q_snake_case" -> ((s, d) => {
-      // camelCase the input first so the standardizer has real work.
-      val camel = Tables.lineitem(s, d)
-        .select(col("l_returnflag").as("LReturnflag"), col("l_quantity").as("LQuantity"))
-      ColumnStandardizer.standardize(camel)
-        .groupBy("l_returnflag")
-        .agg(round(sum("l_quantity"), 2).as("sum_qty"))
-    }),
-
-    "q_date_standardize" -> ((s, d) => {
-      // Rebuild the reference's two raw formats from o_orderdate, then
-      // parse them back (RN-001). Round-trip == identity on the date.
-      val raw = Tables.orders(s, d).select(
-        col("o_orderkey"),
-        when(pmod(col("o_orderkey"), lit(2)) === 0,
-          date_format(col("o_orderdate"), "yyyyMMdd"))
-          .otherwise(date_format(col("o_orderdate"), "yyyy/MM/dd HH:mm:ss.SSSSSSSSS"))
-          .as("raw_date"))
-      DateStandardizer.standardize(raw, Seq("raw_date"))
-        // dates travel as ISO strings for the cross-engine compare
-        // (pandas renders DATE as object vs DuckDB's datetime64)
-        .withColumn("raw_date", date_format(col("raw_date"), "yyyy-MM-dd"))
-    }),
-
-    "q_normalize_states" -> ((s, d) =>
-      Normalizer.normalize(
-        Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus")),
-        Seq("o_orderstatus"))
-        .groupBy("o_orderstatus").agg(count(lit(1)).as("n"))),
-
-    "q_window_dedup" -> ((s, d) =>
-      Deduplicator.latestWins(Tables.events(s, d),
-          Seq("user_id", "event_type"), "ts", tieBreak = Some("event_id"))
-        .select("event_id", "user_id", "event_type", "value")),
-
-    "q_window_dedup_agg" -> ((s, d) =>
-      // shuffle-light latest-wins (max_by with partial aggregation) —
-      // must produce the identical row set as the window form, which
-      // the shared oracle checks
-      Deduplicator.latestWinsAgg(Tables.events(s, d),
-          Seq("user_id", "event_type"), "ts", tieBreak = "event_id")
-        .select("event_id", "user_id", "event_type", "value")),
-
-    "q_profile_approx" -> ((s, d) =>
-      Profiler.dupProfileApprox(Tables.events(s, d), Seq("user_id", "event_type"))),
-
-    "q_profile_approx_check" -> ((s, d) => {
-      // the HLL profile under a cross-engine harness: the exact
-      // distinct matches DuckDB row-for-row, and the sketch estimate
-      // is ASSERTED within its 10% envelope Spark-side (the oracle
-      // pins the boolean TRUE) — upgrades the approx path from
-      // rows-only to a driver-checked property
-      val ev = Tables.events(s, d)
-      Profiler.dupProfileApprox(ev, Seq("user_id", "event_type"))
-        .crossJoin(Profiler.dupProfile(ev, Seq("user_id", "event_type"))
-          .select(col("distinct_keys")))
-        .select(col("total_rows"), col("distinct_keys"),
-          (abs(col("approx_distinct_keys") - col("distinct_keys")).cast("double")
-            / col("distinct_keys") <= 0.1).as("within_10pct"))
-    }),
-
-    "q_percentile_sketch_check" -> ((s, d) => {
-      // sketch percentiles under a cross-engine harness (r10 verdict
-      // item 7's pattern): per-type approx_percentile (the mergeable
-      // fixed-size KLL-style sketch — the 100 TB quantile path) is
-      // ASSERTED inside its rank-error envelope against rank-exact
-      // bracket values, and the rank-exact percentile itself (an
-      // actual data element, engine-portable — the
-      // q_group_percentiles machinery) is the oracle-compared value.
-      // delta = 5/accuracy: the sketch guarantees rank error
-      // <= n/accuracy; the x5 absorbs duplicate-value rank collapse.
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, d).select(col("event_type"), col("value"))
-      val acc = 10000
-      val delta = 5.0 / acc
-      val ps = Seq(0.5, 0.9, 0.99)
-      val w = Window.partitionBy("event_type").orderBy("value")
-      val ranked = ev.withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type")))
-      // bracket ranks carry a +-2 rank slack on top of delta: the
-      // sketch targets 1-indexed ceil(p*n) while the exact selection
-      // is 0-indexed floor(p*(n-1)) — at small n the off-by-one
-      // exceeds delta*n (measured: 4 false verdicts at sf0.001's
-      // ~2k-row types with the bare bracket)
-      def atRank(p: Double, frac: Double, off: Int, as: String) = ranked
-        .filter(col("rn") - 1 ===
-          greatest(least(floor(lit(frac) * (col("n") - 1)) + lit(off.toLong),
-            (col("n") - 1).cast("long")), lit(0L)))
-        .select(col("event_type"), lit(p).as("p"), col("value").as(as))
-      val exacts = ps.map(p => atRank(p, p, 0, "exact_value")).reduce(_ unionAll _)
-      val los = ps.map(p => atRank(p, math.max(p - delta, 0.0), -2, "lo")).reduce(_ unionAll _)
-      val his = ps.map(p => atRank(p, math.min(p + delta, 1.0), 2, "hi")).reduce(_ unionAll _)
-      val approx = ev.groupBy("event_type")
-        .agg(expr(s"approx_percentile(value, array(${ps.mkString(", ")}), $acc)").as("aq"))
-        .select(col("event_type"), posexplode(col("aq")).as(Seq("__i", "av")))
-        .withColumn("p", element_at(array(ps.map(lit): _*), col("__i") + 1))
-        .drop("__i")
-      exacts.join(los, Seq("event_type", "p"))
-        .join(his, Seq("event_type", "p"))
-        .join(approx, Seq("event_type", "p"))
-        .select(col("event_type"),
-          (col("p") * 100).cast("long").as("p_pct"),
-          col("exact_value"),
-          (col("av") >= col("lo") && col("av") <= col("hi")).as("within_bound"))
-    }),
-
-    "q_sampled_profile_check" -> ((s, d) => {
-      // seeded sampled profiling under a cross-engine harness: the
-      // Bernoulli draw is engine-specific (Spark's XORShift per
-      // partition), so the oracle pins PROPERTIES — the sample size
-      // inside an 8-sigma binomial band and the sampled mean inside
-      // 0.2 stddev of the exact mean — alongside the exact row count.
-      // This is what sampling-based profiling promises at 100 TB:
-      // read f of the data, answer within statistical bounds.
-      val ev = Tables.events(s, d).select(col("value"))
-      val frac = 0.2
-      val sampled = ev.sample(withReplacement = false, frac, seed = 42L)
-        .agg(count(lit(1)).as("n_sampled"), avg("value").as("mean_s"))
-      val exact = ev.agg(count(lit(1)).as("n_rows"), avg("value").as("mean"),
-        stddev_pop("value").as("sd"))
-      sampled.crossJoin(exact).select(
-        col("n_rows"),
-        (abs(col("n_sampled") - col("n_rows") * frac) <=
-          lit(8.0) * sqrt(col("n_rows") * frac * (1 - frac))).as("size_ok"),
-        (abs(col("mean_s") - col("mean")) <= lit(0.2) * col("sd")).as("mean_ok"))
-    }),
-
-    "q_hll_store_check" -> ((s, d) => {
-      // persisted mergeable HLL sketches (SketchStore): the store is
-      // built as TWO independent deltas (orderkey parity — the
-      // "yesterday's store + today's partition" shape) and merged
-      // incrementally; per-year and rolled-up global estimates are
-      // asserted within the sketch envelope against exact distincts.
-      // The oracle pays the exact counts; the booleans pin that the
-      // incremental union path estimates correctly. Bench note: the
-      // Spark side pays the exact envelope (per-part + global) PLUS
-      // two sketch builds, the merge, and the cache materialization —
-      // >=2x the oracle SQL's work BY CONSTRUCTION (check-harness
-      // shape); the operator itself is the one-exchange build/merge.
-      // The 3-column projection is NOT cached: r10 cached it for the
-      // harness's five probes and REGRESSED the gate 1.39x — r11
-      // A/B at sf10 (min-of-3 steady state): full gate
-      // 3.5-4.1 s uncached vs 3.8-4.0 s cached with an 11.6 s cold
-      // first run, because building the columnar cache costs more
-      // than the five pushed-down 3-column parquet rescans it saves,
-      // and materialization serializes the probes behind a barrier.
-      // The stage split (same session): exact per-part 2.1-2.4 s +
-      // exact global 1.3-1.8 s = ~85% of the gate is the exact
-      // ENVELOPE, not the operator (delta builds 2x0.4-0.6 s) — so
-      // the bench headline is now q_hll_store (the operator alone,
-      // extras) and this envelope harness is the CORRECTNESS gate
-      // only (r10 verdict item 2).
-      val o = Tables.orders(s, d)
-        .select(year(col("o_orderdate")).cast("long").as("part"),
-          col("o_orderkey"), col("o_custkey"))
-      def delta(parity: Int) =
-        SketchStore.build(o.filter(pmod(col("o_orderkey"), lit(2)) === parity),
-          "part", col("o_custkey"))
-      val store = SketchStore.mergeIncremental(delta(0), delta(1), "part")
-      val bound = (est: Column, exact: Column) =>
-        (abs(est - exact).cast("double") / exact <= 0.1).as("within_10pct")
-      val perPart = SketchStore.estimates(store)
-        .join(o.groupBy("part").agg(count_distinct(col("o_custkey")).as("exact_distinct")), "part")
-        .select(col("part"), col("n_rows"), col("exact_distinct"),
-          bound(col("distinct_est"), col("exact_distinct")))
-      val global = SketchStore.estimates(SketchStore.rollup(store))
-        .crossJoin(o.agg(count_distinct(col("o_custkey")).as("exact_distinct")))
-        .select(lit(-1L).as("part"), col("n_rows"), col("exact_distinct"),
-          bound(col("distinct_est"), col("exact_distinct")))
-      perPart.unionByName(global)
-    }),
-
-    "q_hist_store_check" -> ((s, d) => {
-      // persisted mergeable HISTOGRAM store (r11) — the quantile
-      // analog of the HLL store: two parity deltas fold o_totalprice
-      // cents into width-1000 buckets, the merge is pure count
-      // ADDITION (exact at any depth), and every percentile read is
-      // within one bucket of exact by construction. The harness
-      // asserts exactly that: per (part, p), |histogram estimate −
-      // rank-exact percentile| <= width, booleans pinned TRUE in the
-      // oracle beside the exact per-part row/bucket counts.
-      import org.apache.spark.sql.expressions.Window
-      val width = 1000L
-      val o = Tables.orders(s, d).select(
-        year(col("o_orderdate")).cast("long").as("part"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"),
-        col("o_orderkey"))
-      def delta(par: Int) = graft.operators.HistStore.build(
-        o.filter(pmod(col("o_orderkey"), lit(2)) === par), "part",
-        col("cents"), width)
-      val store = graft.operators.HistStore
-        .mergeIncremental(delta(0), delta(1), "part")
-      val est = graft.operators.HistStore
-        .percentileEstimates(store, "part", Seq(0.5, 0.95), width)
-      val perPart = store.groupBy("part")
-        .agg(sum(col("n")).as("n_rows"), count(lit(1)).as("n_buckets"))
-      // rank-exact per-part percentile off the cent-level histogram
-      // (bounded frame: distinct cents per part, never raw rows)
-      val centHist = o.groupBy(col("part"), col("cents")).agg(count(lit(1)).as("cn"))
-      val w = Window.partitionBy("part").orderBy("cents")
-      val cum = centHist
-        .withColumn("hi", sum(col("cn")).over(w))
-        .withColumn("lo", col("hi") - col("cn"))
-        .withColumn("total", sum(col("cn")).over(Window.partitionBy("part")))
-      val exact = Seq(0.5, 0.95).map { p =>
-        cum.filter(col("lo") <= floor(lit(p) * (col("total") - 1)) &&
-            floor(lit(p) * (col("total") - 1)) < col("hi"))
-          .select(col("part"), lit(p).as("p"), col("cents").as("exact_int"))
-      }.reduce(_ unionAll _)
-      est.join(exact, Seq("part", "p"))
-        .join(perPart, Seq("part"))
-        .select(col("part"), (col("p") * 100).cast("long").as("p_pct"),
-          col("n_rows"), col("n_buckets"),
-          (abs(col("est_int") - col("exact_int")) <= width).as("within_width"))
-    }),
-
-    "q_hll_store" -> ((s, d) => {
-      // the persisted-sketch-store OPERATOR alone (r10 verdict item
-      // 2): both parity deltas built in ONE partition-keyed exchange
-      // (parity inside the group key — halves the build exchanges of
-      // the two-filter form), incremental merge, per-part + rolled-up
-      // estimates. This is what a 100 TB profile pipeline actually
-      // pays per delta; the exact-envelope comparison lives in
-      // q_hll_store_check (correctness gate only). rows-only by
-      // nature (DataSketches HLL estimates aren't SQL); the
-      // lossless-union property (merged estimate == from-scratch
-      // estimate) is spec-pinned, and the comparable-WORK baseline
-      // (DuckDB answering the same per-part + global distinct
-      // question exactly) is EXTRAS_BASELINE_SQL in tools/baseline.py.
-      val o = Tables.orders(s, d)
-        .select(year(col("o_orderdate")).cast("long").as("part"),
-          col("o_orderkey"), col("o_custkey"))
-      val both = o.groupBy(col("part"), pmod(col("o_orderkey"), lit(2)).as("__p"))
-        .agg(count(lit(1)).as("n_rows"),
-          hll_sketch_agg(col("o_custkey"), lit(12)).as("sketch"))
-        .cache()
-      val store = SketchStore.mergeIncremental(
-        both.filter(col("__p") === 0).drop("__p"),
-        both.filter(col("__p") === 1).drop("__p"), "part")
-      val out = SketchStore.estimates(store)
-        .unionByName(SketchStore.estimates(SketchStore.rollup(store))
-          .select(lit(-1L).as("part"), col("n_rows"), col("distinct_est")))
-      // |parts|+1 rows: materialize eagerly, release the KB-sized
-      // delta cache (the SourceOverlap.materialized contract)
-      try graft.operators.SourceOverlap.materialized(out)
-      finally both.unpersist(blocking = false)
-    }),
-
-    "q_pmi_cooccur" -> ((s, d) =>
-      // word-association mining: doc-level PMI over distinct-token
-      // co-occurrence, top-40 by lift with lexicographic tie-break
-      // (operators.Cooccur — narrow per-doc pair grid, vocab-bounded
-      // broadcast df table, two exchanges total)
-      Cooccur.pmi(Tables.documents(s, d).select("doc_id", "text"),
-        "doc_id", TF.tokens(col("text")),
-        minDf = 5, minPairCount = 5, topK = 40,
-        spreadPairGrid = Spread.scanFanout(s, d, "documents"))),
-
-    "q_source_overlap" -> ((s, d) =>
-      // cross-source contamination matrix: shared 3-shingles per
-      // source pair + containment (shared / min side) — the
-      // which-dumps-duplicate-each-other audit (operators.SourceOverlap:
-      // one shingle-keyed exchange with set-valued partial agg, pair
-      // grid as a |sources|²-bounded HOF, totals broadcast). The scan
-      // fans out only when the tier file is single-split (scanFanout):
-      // the native shingle pass is the dominant CPU and must not run
-      // as one task on a tiny single-row-group file
-      SourceOverlap.matrix(Spread.ifSmall(s, d, "documents")(
-        Tables.documents(s, d)), "source", col("text"), k = 3)),
-
-    "q_source_overlap_sketch" -> ((s, d) => {
-      // the sub-exchange 100 TB overlap form: per-source HLL sketches
-      // (KB blobs on the wire, never a shingle exchange) + pairwise
-      // inclusion-exclusion. Check-harness gate (the hll_store_check
-      // precedent): exact shared counts alongside, envelope boolean
-      // pinned TRUE in the oracle — tol 5% of (n_a+n_b) + 50 floor,
-      // ~7x the compounded HLL rse at lgK=14.
-      // r10 (verdict item 3): the harness runs ONE corpus shingle
-      // pass — the exact side needs the shingle aggregate anyway, so
-      // the sketch folds off the same persisted (sh, srcs) frame
-      // instead of re-tokenizing the corpus (r9's standalone-sketch
-      // harness paid the shingling CPU twice and lost to the exact
-      // matrix it claims to replace, 11.3 vs 10.9 s at sf10). The
-      // standalone sub-exchange form lives on as
-      // SourceOverlap.sketchMatrix for pipelines that DON'T carry the
-      // exact side. Report is |sources|²-bounded → materialized
-      // eagerly, cache released (the SourceOverlap.matrix contract).
-      val docs = Spread.ifSmall(s, d, "documents")(Tables.documents(s, d))
-      val bySh = SourceOverlap.shingleSets(docs, "source", col("text"), k = 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val exact = SourceOverlap.matrixFromSets(bySh)
-      val est = SourceOverlap.sketchFromSets(bySh)
-      val report = exact.join(est, Seq("src_a", "src_b"))
-        .select(col("src_a"), col("src_b"), col("shared_shingles"),
-          (abs(col("est_shared") - col("shared_shingles")) <=
-            lit(0.05) * (col("n_a") + col("n_b")) + lit(50)).as("est_ok"))
-      try graft.operators.SourceOverlap.materialized(report)
-      finally bySh.unpersist(blocking = false)
-    }),
-
-    "q_overlap_sketch" -> ((s, d) =>
-      // the standalone sub-exchange overlap OPERATOR (r10 verdict:
-      // "the bench should carry the standalone operator and let the
-      // gate keep the check"): per-source HLL sketches built from one
-      // narrow corpus shingle pass — KB blobs to the driver, never a
-      // shingle exchange — then pairwise inclusion-exclusion. This is
-      // the form a 100 TB pipeline runs when it does NOT need the
-      // exact matrix; r10 measured it 0.78-0.81 s vs the exact
-      // matrix's 7.0-7.2 s at sf10. rows-only by nature (HLL); the
-      // envelope-vs-exact harness stays in q_source_overlap_sketch
-      // (correctness gate); comparable-WORK baseline = the exact
-      // matrix SQL (EXTRAS_BASELINE_FROM_ORACLE in tools/baseline.py).
-      graft.operators.SourceOverlap.materialized(
-        SourceOverlap.sketchMatrix(
-          Spread.ifSmall(s, d, "documents")(Tables.documents(s, d)), "source",
-          col("text"), k = 3))),
-
-    "q_drift_psi" -> ((s, d) => {
-      // ingest-drift monitoring: per-bucket PSI table between the
-      // even-doc reference snapshot and an odd-doc current snapshot
-      // with a planted 1.25x length shift (mirrored in the oracle) —
-      // bucket edges anchored to the REFERENCE min/max, out-of-range
-      // current values clamp to the edge buckets
-      val docs = Tables.documents(s, d)
-      Drift.psiTable(
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 0L).select(col("n_chars")),
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 1L)
-          .select((col("n_chars") * lit(1.25)).as("n_chars")),
-        "n_chars", buckets = 10)
-    }),
-
-    "q_drift_summary" -> ((s, d) => {
-      // one-row drift verdict over the same planted pair: PSI sum,
-      // bucketed-KS sup, and the 0.25 "shifted" threshold applied
-      val docs = Tables.documents(s, d)
-      Drift.summary(
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 0L).select(col("n_chars")),
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 1L)
-          .select((col("n_chars") * lit(1.25)).as("n_chars")),
-        "n_chars", buckets = 10, threshold = 0.25)
-    }),
-
-    "q_expectations" -> ((s, d) => {
-      // declarative data-quality expectations: every row rule + the
-      // uniqueness rule in ONE aggregation pass, long-format verdicts
-      import graft.operators.Expectations._
-      check(Tables.events(s, d),
-        rules = Seq(
-          NotNull("user_id"),
-          InRange("value", 0.0, 500.0),
-          OneOf("event_type", Seq("click", "view", "purchase", "signup")),
-          MatchesRegex("props", "^\\{.*\\}$"),
-          Satisfies("value_set_when_purchase",
-            "event_type <> 'purchase' OR value IS NOT NULL")),
-        unique = Seq(Unique(Seq("event_id"))))
-    }),
-
-    "q_catalog_enrich" -> ((s, d) => {
-      val natPlus = CatalogEnricher.enrich(Tables.nation(s, d), Tables.region(s, d),
-        "n_regionkey", "r_regionkey", "r_name", "region_name", normalizeKeys = false)
-      val withNation = CatalogEnricher.enrich(Tables.customer(s, d), natPlus,
-        "c_nationkey", "n_nationkey", "n_name", "nation_name", normalizeKeys = false)
-      CatalogEnricher.enrich(withNation, natPlus,
-        "c_nationkey", "n_nationkey", "region_name", "region_name", normalizeKeys = false)
-        .select("c_custkey", "c_name", "nation_name", "region_name")
-    }),
-
-    "q_tipo_flag" -> ((s, d) =>
-      Tables.customer(s, d).select(col("c_custkey"),
-        DerivedColumns.conditionalCode(col("c_mktsegment"), "BUILDING").as("segment_flag"))),
-
-    "q_age_years" -> ((s, d) =>
-      Tables.orders(s, d).select(col("o_orderkey"),
-        DerivedColumns.ageYears(col("o_orderdate"), 2026).as("age_years"))),
-
-    "q_unique_key" -> ((s, d) =>
-      Tables.customer(s, d).select(col("c_custkey"),
-        DerivedColumns.uniqueKey(Seq(col("c_nationkey"), col("c_custkey"), col("c_name")))
-          .as("id_unico"))),
-
-    "q_validations" -> ((s, d) =>
-      Profiler.validate(Tables.orders(s, d), Seq(
-        "null_orderdate" -> col("o_orderdate").isNull,
-        "negative_total" -> (col("o_totalprice") < 0),
-        "status_open" -> (upper(trim(col("o_orderstatus"))) === "O"),
-        "status_filled" -> (upper(trim(col("o_orderstatus"))) === "F"),
-        "high_value" -> (col("o_totalprice") > 200000)))),
-
-    "q_error_log" -> ((s, d) => {
-      // RN-007 end-to-end: consolidated validations → long-format
-      // error log → CSV export → read-back (the gate checks the
-      // whole export path, not just the in-memory frame)
-      val v = Profiler.validate(Tables.orders(s, d), Seq(
-        "null_orderdate" -> col("o_orderdate").isNull,
-        "negative_total" -> (col("o_totalprice") < 0),
-        "status_open" -> (upper(trim(col("o_orderstatus"))) === "O"),
-        "high_value" -> (col("o_totalprice") > 200000)))
-      val log = Profiler.errorLog(v, Map(
-        "null_orderdate" -> "fecha de matricula nula",
-        "negative_total" -> "monto negativo",
-        "status_open" -> "registro abierto",
-        "high_value" -> "monto inusualmente alto"))
-      val tmp = s"/tmp/graft_errlog_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      graft.sources.Writers.errorLogCsv(log, tmp)
-      s.read.option("header", "true")
-        .schema("columna STRING, mensaje_error STRING, valor STRING")
-        .csv(tmp)
-        .select(col("columna"), col("mensaje_error"),
-          col("valor").cast("long").as("n_rows"))
-    }),
-
-    "q_medallion_silver" -> ((s, d) => {
-      // the full reference silver job as one operator chain:
-      // RN-010 rename → RN-001 dates → RN-003 normalize → RN-002 dedup
-      // → RN-008 enrich → RN-009/004/006 derivations
-      val raw = graft.pipeline.Medallion.rawFromOrders(s, d)
-      val catalog = Tables.customer(s, d).select(col("c_custkey"), col("c_name"))
-      graft.pipeline.Medallion.silver(raw, catalog, "c_custkey", "c_name", 2026,
-        dedupSpreadN = Spread.scanFanout(s, d, "orders"))
-        .select(col("matricula"), col("estado"),
-          date_format(col("fecha_matricula"), "yyyy-MM-dd").as("fecha_matricula"),
-          col("clase_identificacion"), col("id_titular"), col("titular_name"),
-          col("tipo_persona"), col("antiguedad"), col("id_unico"))
-    }),
-
-    // ===== D. Gold star schema ===========================================
-    "q_dim_build" -> ((s, d) =>
-      StarSchema.dimension(Tables.customer(s, d),
-        Seq("c_custkey", "c_name", "c_nationkey", "c_mktsegment"))),
-
-    "q_fact_build" -> ((s, d) =>
-      StarSchema.fact(Tables.orders(s, d),
-        Seq("o_orderkey", "o_custkey", "o_totalprice"),
-        StarSchema.vigencia(col("o_orderdate"), lit("1998-12-01").cast("date")))),
-
-    "q_integrity_orphans" -> ((s, d) =>
-      StarSchema.orphanCount(
-        Tables.orders(s, d).select(col("o_custkey").as("custkey")),
-        Tables.customer(s, d).select(col("c_custkey").as("custkey")),
-        "custkey")),
-
-    "q_asof_join" -> ((s, d) => {
-      // each event picks the user's latest order as of the event time;
-      // right side pre-reduced to one row per (custkey, orderdate) so
-      // the as-of pick is tie-free on both engines
-      val orders = Tables.orders(s, d)
-        .groupBy(col("o_custkey"), col("o_orderdate"))
-        .agg(max(col("o_orderkey")).as("o_orderkey"),
-          max_by(col("o_totalprice"), col("o_orderkey")).as("o_totalprice"))
-      AsOfJoin.asOf(
-        Tables.events(s, d).select("event_id", "user_id", "ts"),
-        orders,
-        leftKey = "user_id", rightKey = "o_custkey",
-        leftTime = "ts", rightTime = "o_orderdate",
-        rightPayload = Seq("o_orderkey", "o_totalprice"))
-        .select("event_id", "user_id", "o_orderkey", "o_totalprice")
-    }),
-
-    "q_asof_forward" -> ((s, d) => {
-      // FORWARD as-of: each non-purchase event picks the user's NEXT
-      // purchase at or after it (time-to-conversion lookup; same
-      // tie-free right-side reduction). Retargeted r6: the original
-      // order-table form was VACUOUSLY all-null — no order exists
-      // after any event time in the testdata.
-      val purchases = Tables.events(s, d)
-        .filter(col("event_type") === "purchase")
-        .groupBy(col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .agg(max(col("event_id")).as("purchase_id"),
-          max_by(col("value"), col("event_id")).as("purchase_value"))
-      AsOfJoin.asOfForward(
-        Tables.events(s, d).filter(col("event_type") =!= "purchase")
-          .select("event_id", "user_id", "ts"),
-        purchases,
-        leftKey = "user_id", rightKey = "p_user",
-        leftTime = "ts", rightTime = "p_ts",
-        rightPayload = Seq("purchase_id", "purchase_value"))
-        .select("event_id", "user_id", "purchase_id", "purchase_value")
-    }),
-
-    "q_range_join" -> ((s, d) => {
-      // attribution window: every event landing within 2 days AFTER a
-      // purchase by the same user — inequality join made equi via time
-      // bins. (The original form joined events to order windows, but
-      // the testdata's event and order date ranges never overlap, so
-      // it was vacuously green on 0 rows — this self-interval form
-      // produces real matches at every SF.)
-      val purchases = Tables.events(s, d)
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"),
-          col("user_id").as("p_user"), col("ts").as("w_start"),
-          (col("ts") + expr("INTERVAL 2 DAYS")).as("w_end"))
-      RangeJoin.pointInInterval(
-        Tables.events(s, d).filter(col("event_type") =!= "purchase")
-          .select("event_id", "user_id", "ts"),
-        purchases,
-        leftKey = "user_id", rightKey = "p_user",
-        leftTime = "ts", rightStart = "w_start", rightEnd = "w_end",
-        binWidth = "1 day")
-        .select("event_id", "purchase_id")
-    }),
-
-    "q_salted_join" -> ((s, d) =>
-      // skew-safe fact-dim join; result identical to the plain join,
-      // which is exactly what the oracle verifies
-      SkewJoin.saltedJoin(
-          Tables.lineitem(s, d).select("l_suppkey", "l_extendedprice", "l_discount"),
-          Tables.supplier(s, d).select("s_suppkey", "s_nationkey")
-            .withColumnRenamed("s_suppkey", "l_suppkey"),
-          "l_suppkey", salt = 8)
-        .groupBy(col("s_nationkey"))
-        .agg(count(lit(1)).as("n_items"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))),
-
-    "q_skew_advisor" -> ((s, d) =>
-      // pre-flight skew profile of the events stream keyed by user_id
-      // (the key q_salted_join-style joins would shuffle on): one
-      // count-only exchange + a 1-row advisory aggregate — the
-      // measure-before-you-salt step of the skew playbook
-      SkewAdvisor.profile(Tables.events(s, d).select("event_id", "user_id"),
-        "user_id", "event_id")),
-
-    // ===== E. Analytics (reference test/query_gold_validations.sql) =====
-    "q_v1_active_by_type" -> ((s, d) => v1(Tables.orders(s, d), Tables.customer(s, d))),
-
-    "q_v2_avg_age" -> ((s, d) =>
-      v2(Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d))),
-
-    "q_v3_rate" -> ((s, d) => v3(Tables.orders(s, d), Tables.customer(s, d))),
-
-    "q_v4_ml_dataset" -> ((s, d) => v4(Tables.orders(s, d), Tables.customer(s, d))),
-
-    // same four analytics read through MANAGED bucketed tables (the
-    // reference gold jobs read silver via the Data Catalog, not paths:
-    // job-gold-rues.py:61-78). Bucketing on custkey makes the
-    // fact-dim join exchange-free (plan-asserted in PlanSpec).
-    "q_v1_tables" -> ((s, d) => {
-      val db = graft.sources.CatalogStar.ensure(s, d)
-      v1(s.table(s"$db.orders"), s.table(s"$db.customer"))
-    }),
-
-    "q_v2_tables" -> ((s, d) => {
-      val db = graft.sources.CatalogStar.ensure(s, d)
-      v2(s.table(s"$db.orders"), s.table(s"$db.customer"), s.table(s"$db.nation"))
-    }),
-
-    "q_v3_tables" -> ((s, d) => {
-      val db = graft.sources.CatalogStar.ensure(s, d)
-      v3(s.table(s"$db.orders"), s.table(s"$db.customer"))
-    }),
-
-    "q_v4_tables" -> ((s, d) => {
-      val db = graft.sources.CatalogStar.ensure(s, d)
-      v4(s.table(s"$db.orders"), s.table(s"$db.customer"))
-    }),
-
-    "q_point_lookup" -> ((s, d) =>
-      Tables.orders(s, d)
-        .filter(col("o_custkey") === 7)
-        .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
-        .limit(1)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          col("o_totalprice"), date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"))),
-
-    // ===== G. LLM-data pipeline ops =====================================
-    "q_corpus_prep" -> ((s, d) =>
-      // LLM-corpus prep chain (SQL-expressible portion, oracle-checked)
-      graft.pipeline.CorpusPrep.prep(Tables.documents(s, d), "doc_id", "text",
-        stopwords, langMarkers, minQuality = 0.3,
-        allowedLangs = Seq("en"), minTokens = 10)),
-
-    "q_corpus_prep_staged" -> ((s, d) =>
-      // write-barrier variant: scored corpus staged to parquet instead
-      // of cache — the form that holds at 100 TB. Same oracle as prep.
-      graft.pipeline.CorpusPrep.prepStaged(Tables.documents(s, d), "doc_id", "text",
-        stopwords, langMarkers, minQuality = 0.3,
-        allowedLangs = Seq("en"), minTokens = 10,
-        stagePath = s"/tmp/graft_prep_stage_${d.replaceAll("[^a-zA-Z0-9]", "_")}")),
-
-    "q_corpus_prep_full" -> ((s, d) =>
-      // + MinHash near-dup removal (rows-only: LSH not SQL-expressible)
-      graft.pipeline.CorpusPrep.prepFull(Tables.documents(s, d), "doc_id", "text",
-        stopwords, langMarkers)),
-
-    "q_corpus_prep_clustered" -> ((s, d) => {
-      // cluster-canonical near-dup removal, fully oracle-checked over
-      // the near-recrawl-augmented corpus (see withNearRecrawls: pair
-      // plantings at %25==4 plus 3-node chain plantings at %50==11
-      // where the cluster policy is STRICTLY stronger than pairwise).
-      val aug = withNearRecrawls(Tables.documents(s, d).select("doc_id", "text"))
-      val res = graft.pipeline.CorpusPrep.prepClustered(aug, "doc_id", "text",
-        stopwords, langMarkers, minQuality = 0.3, allowedLangs = Seq("en"),
-        minTokens = 10, jaccardThreshold = 0.5, shingleK = 3, maxDf = 20)
-      // Degeneracy tripwire: if the chain planting regressed (pads too
-      // short/long, slice empty, gates dropping the chain docs), the
-      // cluster policy would collapse to pairwise drop-id_b and this
-      // gate would verify nothing beyond q_corpus_prep — fail red
-      // instead of going vacuously green. Cheap at gate scale.
-      val prepped = graft.pipeline.CorpusPrep.prep(aug, "doc_id", "text",
-        stopwords, langMarkers, minQuality = 0.3, allowedLangs = Seq("en"),
-        minTokens = 10)
-      val surv = aug.join(prepped.select("doc_id"), Seq("doc_id"), "left_semi")
-      val pairs = graft.dedup.NgramJaccard.pairs(surv, "doc_id", "text", 3, 0.5, 20)
-      val pairwiseKept = prepped.join(
-        pairs.select(col("id_b").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      require(res.count() < pairwiseKept.count(),
-        "degenerate corpus: cluster-canonical == pairwise (chain planting regressed)")
-      res
-    }),
-
-    "q_corpus_prep_full_clustered" -> ((s, d) =>
-      // the 100 TB recipe: LSH candidate pairs -> connected components
-      // -> cluster-min keep. Rows-only (banding isn't SQL-expressible);
-      // GroundTruthSpec pins the policy to brute-force cluster minima.
-      graft.pipeline.CorpusPrep.prepFullClustered(
-        withNearRecrawls(Tables.documents(s, d).select("doc_id", "text")),
-        "doc_id", "text", stopwords, langMarkers)),
-
-    "q_sample_per_key" -> ((s, d) =>
-      // 3 lowest-id docs per language: per-key top-n via WindowGroupLimit
-      graft.operators.Sampling.perKey(
-          Tables.documents(s, d).select("doc_id", "lang", "n_chars"),
-          Seq("lang"), Seq(col("doc_id").asc), n = 3)),
-
-    "q_heavy_hitters" -> ((s, d) =>
-      // key-skew diagnostic on the events stream's user key
-      Profiler.heavyHitters(Tables.events(s, d), Seq("user_id"), topN = 10)),
-
-    "q_pivot" -> ((s, d) =>
-      // wide-format contingency matrix: explicit pivot values keep the
-      // schema static (no driver-side distinct scan at 100 TB)
-      Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(count(lit(1)))
-        .select(col("c_mktsegment"),
-          coalesce(col("F"), lit(0L)).as("n_f"),
-          coalesce(col("O"), lit(0L)).as("n_o"),
-          coalesce(col("P"), lit(0L)).as("n_p"))),
-
-    "q_rollup" -> ((s, d) => {
-      // hierarchical totals in one pass (segment, segment×status, grand).
-      // SQL ROLLUP: the DataFrame .rollup() lineage duplicates grouping
-      // attribute names, which trips the ambiguous-self-join check when
-      // the null markers are re-projected — the SQL form resolves clean
-      Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment").as("seg"), col("o_orderstatus").as("st"),
-          col("o_totalprice"))
-        .createOrReplaceTempView("rollup_in")
-      s.sql("""SELECT coalesce(seg, 'ALL') AS segment,
-                      coalesce(st, 'ALL') AS status,
-                      count(*) AS n, round(sum(o_totalprice), 2) AS total
-               FROM rollup_in GROUP BY ROLLUP(seg, st)""")
-    }),
-
-    "q_gap_fill" -> ((s, d) =>
-      // time-series regularization: dense per-user hourly series with
-      // explicit zero rows for missing hours; grid generated in-place
-      // by sequence+explode, never shuffled or driver-side
-      graft.operators.Resample.gapFill(
-          Tables.events(s, d), Seq("user_id"), "ts", "value", "hour")
-        .select(col("user_id"), col("bucket"), col("n"),
-          round(col("sum_value"), 2).as("sum_value"))),
-
-    "q_grouping_sets" -> ((s, d) => {
-      // arbitrary grouping sets (not a rollup/cube prefix) with the
-      // standard GROUPING() provenance markers
-      Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment").as("seg"), col("o_orderstatus").as("st"))
-        .createOrReplaceTempView("gs_in")
-      s.sql("""SELECT coalesce(seg, 'ALL') AS segment,
-                      coalesce(st, 'ALL') AS status,
-                      CAST(grouping(seg) AS BIGINT) AS g_seg,
-                      CAST(grouping(st) AS BIGINT) AS g_st,
-                      count(*) AS n
-               FROM gs_in GROUP BY GROUPING SETS ((seg), (st), ())""")
-    }),
-
-    "q_cube" -> ((s, d) => {
-      // all 2^k grouping-set subtotals in one pass — the OLAP cube
-      // materialization; same single-shuffle Expand plan as ROLLUP
-      Tables.orders(s, d)
-        .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-        .select(col("c_mktsegment").as("seg"), col("o_orderstatus").as("st"),
-          col("o_totalprice"))
-        .createOrReplaceTempView("cube_in")
-      s.sql("""SELECT coalesce(seg, 'ALL') AS segment,
-                      coalesce(st, 'ALL') AS status,
-                      count(*) AS n, round(sum(o_totalprice), 2) AS total
-               FROM cube_in GROUP BY CUBE(seg, st)""")
-    }),
-
-    "q_window_analytics" -> ((s, d) => {
-      // the standard analytic-function battery over a per-key ordered
-      // stream: lag/lead, running position, quartile, relative rank.
-      // One window partitioning (custkey) reused across functions =
-      // one shuffle + one sort; ntile/percent_rank get a total
-      // ordering (price, key) so ranks are engine-deterministic
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-      val wp = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey").orderBy(col("o_totalprice"), col("o_orderkey"))
-      Tables.orders(s, d)
-        .filter(col("o_custkey") % 10 === 0)
-        .select(col("o_custkey"), col("o_orderkey"),
-          row_number().over(w).cast("long").as("order_seq"),
-          coalesce(round(col("o_totalprice") - lag("o_totalprice", 1).over(w), 2),
-            lit(0.0)).as("price_delta"),
-          coalesce(datediff(lead("o_orderdate", 1).over(w), col("o_orderdate"))
-            .cast("long"), lit(-1L)).as("days_to_next"),
-          ntile(4).over(wp).cast("long").as("price_quartile"),
-          pround(percent_rank().over(wp), 4).as("price_pct_rank"))
-    }),
-
-    "q_set_ops" -> ((s, d) => {
-      // INTERSECT / EXCEPT / UNION-distinct over customer key sets
-      // (customers with open vs finished orders). Each set op hashes
-      // on the full row — dedup + membership in one shuffle each
-      val o = Tables.orders(s, d)
-      val open = o.filter(col("o_orderstatus") === "O").select("o_custkey")
-      val done = o.filter(col("o_orderstatus") === "F").select("o_custkey")
-      val both = open.intersect(done).agg(count(lit(1)).as("n"))
-        .select(lit("both").as("op"), col("n"))
-      val openOnly = open.except(done).agg(count(lit(1)).as("n"))
-        .select(lit("open_only").as("op"), col("n"))
-      val either = open.union(done).distinct.agg(count(lit(1)).as("n"))
-        .select(lit("either").as("op"), col("n"))
-      both.unionByName(openOnly).unionByName(either)
-    }),
-
-    "q_range_sorted_write" -> ((s, d) => {
-      // single-key clustered layout: range-partitioned + sorted files,
-      // content identity proven by the oracle; file-range disjointness
-      // is spec-asserted
-      val base = s"/tmp/graft_rangesort_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      graft.sources.ZOrder.rangeSortedWrite(
-        Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"),
-        base, "o_orderkey", numFiles = 8)
-      s.read.parquet(base)
-        .groupBy((col("o_orderkey") % 5).cast("long").as("grp"))
-        .agg(count(lit(1)).as("n"),
-          round(sum("o_totalprice"), 2).as("sum_total"),
-          min("o_custkey").as("min_cust"), max("o_custkey").as("max_cust"))
-    }),
-
-    "q_zorder_write" -> ((s, d) => {
-      // multi-dimensional clustering write: content must survive the
-      // z-curve layout exactly (the skipping win is spec-asserted on
-      // per-file min/max spans)
-      val base = s"/tmp/graft_zorder_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      graft.sources.ZOrder.zorderWrite(
-        Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"),
-        base, "o_custkey", "o_orderkey", numFiles = 8)
-      s.read.parquet(base)
-        .groupBy((col("o_custkey") % 7).cast("long").as("grp"))
-        .agg(count(lit(1)).as("n"),
-          round(sum("o_totalprice"), 2).as("sum_total"),
-          min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"))
-    }),
-
-    "q_compact" -> ((s, d) => {
-      // small-file compaction: 64-sliver write → byte-targeted rewrite;
-      // correctness = content identical through the rewrite
-      val base = s"/tmp/graft_compact_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      Tables.orders(s, d).repartition(64)
-        .write.mode("overwrite").parquet(s"$base/small")
-      graft.sources.Writers.compactParquet(s, s"$base/small", s"$base/out",
-        targetFileBytes = 64L * 1024 * 1024)
-      s.read.parquet(s"$base/out")
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum("o_totalprice"), 2).as("sum_total"))
-    }),
-
-    "q_fuzzy_match" -> ((s, d) =>
-      // fuzzy string join, DEDUP-FIRST: exact duplicates collapse to a
-      // min-key representative before any pairing, so the pair fanout
-      // is quadratic in DISTINCT values, never in rows (duplicate-
-      // heavy data otherwise explodes: row-level pairing on sf0.1
-      // parts is 3.1M pairs; name-level is 16). Blocking after the
-      // collapse is also what keeps block sizes bounded: the distinct-
-      // name pool does not grow with corpus size, so first-word blocks
-      // stay under the hot-block cap at any SF
-      partNameFuzzyPairs(partNameReps(Tables.part(s, d)))),
-
-    "q_entity_clusters" -> ((s, d) => {
-      // entity resolution, dedup-first: exact names collapse to a
-      // min-key representative; fuzzy pairs + connected components run
-      // at DISTINCT-name scale; membership expands back with one
-      // broadcastable join. Every part gets a canonical cluster id
-      val parts = Tables.part(s, d).select("p_partkey", "p_name")
-      val reps = partNameReps(parts)
-      val comp = graft.dedup.Components.connectedComponents(
-        partNameFuzzyPairs(reps), "id_a", "id_b")
-      parts.join(reps, "p_name")
-        .join(comp, col("rep") === col("id"), "left")
-        .select(col("p_partkey"),
-          coalesce(col("component"), col("rep")).as("component"))
-    }),
-
-    "q_date_dim" -> ((s, d) =>
-      // generated calendar dimension (no source table): sequence +
-      // explode materializes the grid in-executor, never on the driver
-      s.range(1).select(explode(sequence(
-          lit("1995-01-01").cast("date"), lit("1997-12-31").cast("date"),
-          expr("INTERVAL 1 DAY"))).as("d"))
-        .select(
-          date_format(col("d"), "yyyy-MM-dd").as("day"),
-          year(col("d")).cast("long").as("year"),
-          quarter(col("d")).cast("long").as("quarter"),
-          month(col("d")).cast("long").as("month"),
-          dayofweek(col("d")).cast("long").as("dow"),
-          (dayofweek(col("d")).isin(1, 7)).as("is_weekend"))),
-
-    "q_pack_sequences" -> ((s, d) => {
-      // pretraining sample packing: docs → consecutive 2048-token
-      // bins via two-level distributed prefix sum (never a corpus-
-      // wide unpartitioned window)
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), TF.bpeTokenCount(col("text")).as("n_tok"))
-      graft.operators.SequencePacker.summary(
-        graft.operators.SequencePacker.pack(docs, "doc_id", "n_tok",
-          budget = 2048, groupExpr = floor(col("doc_id") / 64)),
-        budget = 2048)
-    }),
-
-    "q_incremental_agg" -> ((s, d) => {
-      // materialized-view maintenance: state built from pre-1997
-      // history, then two append deltas merged in — result must equal
-      // the from-scratch aggregate (the oracle) without ever
-      // re-reading history
-      val orders = Tables.orders(s, d)
-      val cut = (y: Int) => year(col("o_orderdate")) < y
-      val state0 = graft.operators.IncrementalAgg.toState(
-        orders.filter(cut(1997)), Seq("o_orderstatus"), "o_totalprice")
-      val state1 = graft.operators.IncrementalAgg.merge(state0,
-        orders.filter(!cut(1997) && cut(1998)), Seq("o_orderstatus"), "o_totalprice")
-      val state2 = graft.operators.IncrementalAgg.merge(state1,
-        orders.filter(!cut(1998)), Seq("o_orderstatus"), "o_totalprice")
-      graft.operators.IncrementalAgg.withDerived(state2)
-        .select(col("o_orderstatus"), col("n"),
-          round(col("sum"), 2).as("sum"), col("min"), col("max"),
-          pround(col("mean"), 4).as("mean"))
-    }),
-
-    "q_snapshot_diff" -> ((s, d) => {
-      // CDC bootstrap: recover the insert/update/delete changelog two
-      // snapshots imply (deterministic v2: delete %101, double-price
-      // %97, re-keyed inserts from %89). Insert keys shift by the
-      // smallest power of 10 above max(o_orderkey) — corpus-derived,
-      // so the synthetic namespace stays disjoint at any SF (see
-      // withRecrawls).
-      val base = Tables.orders(s, d)
-        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-        .cache() // one scan for offset + base + both v2 branches
-      val off = base.agg(coalesce(pow(lit(10.0),
-        length(greatest(coalesce(max(col("o_orderkey")), lit(0L)), lit(0L))
-          .cast("string"))).cast("long"), lit(1000000L)).as("__off"))
-      val v2 = base.filter(pmod(col("o_orderkey"), lit(101)) =!= 0)
-        .withColumn("o_totalprice",
-          when(pmod(col("o_orderkey"), lit(97)) === 0, col("o_totalprice") * 2)
-            .otherwise(col("o_totalprice")))
-        .unionByName(base.filter(pmod(col("o_orderkey"), lit(89)) === 0)
-          .crossJoin(broadcast(off))
-          .withColumn("o_orderkey", col("o_orderkey") + col("__off"))
-          .drop("__off"))
-      graft.operators.SnapshotDiff.diff(base, v2, Seq("o_orderkey"))
-    }),
-
-    "q_equidepth_histogram" -> ((s, d) => {
-      // equi-DEPTH histogram: decile edges by RANK SELECTION on the
-      // cent-value histogram (value at 0-indexed rank floor(p*(n-1)) —
-      // no quantile interpolation, so edges are bit-identical in any
-      // engine; approx_percentile is the 100 TB call shape), then a
-      // narrow bucket-assignment pass (count of edges below the value)
-      // + one partial-agg'd groupBy — never a global sort/ntile, which
-      // would funnel the corpus through one task. The rank window runs
-      // over the DISTINCT-cent histogram, not the corpus.
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, d).select(col("value"),
-        floor(col("value") * lit(100.0) + lit(0.5)).cast("long").as("vc"))
-      val cum = ev.groupBy("vc").agg(count(lit(1)).as("cnt"))
-        .select(col("vc"),
-          sum("cnt").over(Window.orderBy("vc")).as("cum"),
-          sum("cnt").over(Window.partitionBy()).as("tot"))
-      val ps = (1 to 9).map(_ / 10.0)
-      val edges = cum.agg(array(ps.map(p =>
-          min(when(col("cum") - 1 >= floor(lit(p) * (col("tot") - 1)), col("vc")))
-            .cast("double") / lit(100.0)): _*).as("es"))
-      ev.crossJoin(broadcast(edges))
-        .withColumn("bucket",
-          size(filter(col("es"), e => col("value") > e)).cast("long"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"),
-          (floor(min("value") * lit(100.0) + lit(0.5)) / lit(100.0)).as("min_v"),
-          (floor(max("value") * lit(100.0) + lit(0.5)) / lit(100.0)).as("max_v"))
-    }),
-
-    "q_histogram" -> ((s, d) =>
-      // fixed-width numeric histogram: bucket id from pure arithmetic
-      // (floor of a double divide — identical IEEE ops in any engine),
-      // one partial-agg shuffle of 12 groups
-      Tables.orders(s, d)
-        .groupBy(least(floor(col("o_totalprice") / lit(50000.0)), lit(11L))
-          .cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n"),
-          round(sum("o_totalprice"), 2).as("sum_total"))),
-
-    "q_corr_stats" -> ((s, d) =>
-      // second-moment statistics battery (corr / covar / stddev) —
-      // single-pass co-moment aggregates, no self-join
-      Tables.lineitem(s, d).groupBy("l_returnflag").agg(
-        pround(corr(col("l_quantity"), col("l_extendedprice")), 4)
-          .as("corr_qty_price"),
-        pround(covar_samp(col("l_quantity"), col("l_discount")), 4)
-          .as("covar_qty_disc"),
-        pround(stddev_samp(col("l_quantity")), 4).as("stddev_qty"))),
-
-    "q_upsert" -> ((s, d) => {
-      // MERGE INTO analogue: deterministic changeset (double the price
-      // of every 97th order at v2, tombstone every 101st at v3)
-      // applied to the snapshot; WindowGroupLimit winner per key
-      val base = Tables.orders(s, d)
-        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-      val snap = base.withColumn("version", lit(1L)).withColumn("deleted", lit(false))
-      val ups = base.filter(pmod(col("o_orderkey"), lit(97)) === 0)
-        .select(col("o_orderkey"), col("o_custkey"),
-          (col("o_totalprice") * 2).as("o_totalprice"), lit("U").as("o_orderstatus"))
-        .withColumn("version", lit(2L)).withColumn("deleted", lit(false))
-      val dels = base.filter(pmod(col("o_orderkey"), lit(101)) === 0)
-        .withColumn("version", lit(3L)).withColumn("deleted", lit(true))
-      graft.operators.Upsert(snap, ups.unionByName(dels),
-          Seq("o_orderkey"), "version", Some("deleted"))
-        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus", "version")
-    }),
-
-    "q_numeric_profile" -> ((s, d) => {
-      val p = Profiler.numericProfile(Tables.orders(s, d),
-        Seq("o_totalprice", "o_custkey"))
-      p.select(col("column"), col("n"), col("n_null"), col("min"), col("max"),
-        pround(col("mean"), 4).as("mean"),
-        pround(col("stddev"), 4).as("stddev"),
-        pround(col("median"), 4).as("median"))
-    }),
-
-    "q_scd2_build" -> ((s, d) =>
-      // type-2 dimension history: customer order-status over time
-      graft.operators.Scd2.build(Tables.orders(s, d), Seq("o_custkey"),
-          "o_orderdate", Seq("o_orderstatus"), tieBreak = Some("o_orderkey"))
-        .select(col("o_custkey").as("custkey"), col("o_orderstatus").as("status"),
-          col("valid_from"), col("valid_to"), col("is_current"))),
-
-    "q_scd2_lookup" -> ((s, d) => {
-      // point-in-time dimension lookup: each shipment reads its
-      // customer's SCD2 status AS OF the ship date — history build +
-      // as-of join composed, the canonical fact-to-versioned-dimension
-      // pattern. Same-date changes collapse latest-wins first so the
-      // as-of pick is total-ordered (a tie at valid_from would be an
-      // arbitrary pick in ANY engine)
-      val hist = graft.operators.Scd2.build(Tables.orders(s, d), Seq("o_custkey"),
-          "o_orderdate", Seq("o_orderstatus"), tieBreak = Some("o_orderkey"))
-        .groupBy(col("o_custkey").as("custkey"), col("o_orderdate").as("valid_from"))
-        .agg(max_by(col("o_orderstatus"), col("o_orderkey")).as("status"))
-      val facts = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d).select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("o_custkey").as("custkey"), col("l_shipdate"))
-      AsOfJoin.asOf(facts, hist, "custkey", "custkey",
-        "l_shipdate", "valid_from", Seq("status"))
-    }),
-
-    "q_bm25_search" -> ((s, d) =>
-      // ranked retrieval for corpus curation; query-term-only postings
-      graft.operators.Bm25.topK(Tables.documents(s, d), "doc_id", "text",
-        Seq("join", "hash", "stream"), k = 15)),
-
-    "q_sample_global" -> ((s, d) =>
-      // seeded ORDER BY RAND() LIMIT n analogue; plans as TakeOrdered.
-      // Gate uses the portable md5 ordering (xxhash64 = production default)
-      graft.operators.Sampling.globalSample(
-          Tables.documents(s, d).select("doc_id", "lang", "n_chars"),
-          "doc_id", n = 25,
-          ordering = Some(graft.operators.Sampling.portableOrdering("doc_id")))),
-
-    "q_train_split" -> ((s, d) =>
-      // deterministic hash split on the cross-engine md5 bucket (the
-      // xxhash64 default is the production path but only Spark
-      // reproduces its seed — portableBucket makes the gate exact)
-      graft.pipeline.CorpusPrep.trainSplit(Tables.documents(s, d), "doc_id",
-          bucket = Some(graft.pipeline.CorpusPrep.portableBucket("doc_id")))
-        .groupBy("split").agg(count(lit(1)).as("n"),
-          pround(avg("n_chars"), 2).as("avg_chars"))),
-
-    "q_shuffle_corpus" -> ((s, d) =>
-      // deterministic training-order shuffle: portable md5 key →
-      // shard (leading 32 bits) + per-shard window position; no
-      // corpus-wide ordering anywhere (spec plan-asserts the window
-      // is partitioned). The oracle reproduces the exact assignment.
-      operators.CorpusShuffle.shuffle(
-          Tables.documents(s, d).select("doc_id"), "doc_id", nShards = 8)
-        .select(col("doc_id"), col("shard"), col("pos_in_shard"))),
-
-    "q_line_dedup" -> ((s, d) =>
-      // CCNet-style boilerplate line removal. Gate texts are
-      // single-line, so the gate plants a deterministic multi-line
-      // structure (mirrored in the oracle): a doc-specific line, a
-      // rotating 1-in-3 banner, a second doc line, a repeated first
-      // line on every 4th doc (within-doc dup), and a footer on ALL
-      // docs. Non-vacuous by construction at every SF: the footer
-      // (100% df) and banners (33% df) MUST drop, the repeated first
-      // line MUST dedup, and doc-specific lines survive — constant
-      // or passthrough regressions flip the row hash red.
-      operators.LineDedup.clean(
-        Tables.documents(s, d).select(col("doc_id"),
-          concat(
-            substring(col("text"), 1, 80), lit("\n"),
-            element_at(array(lit("subscribe to our newsletter"),
-              lit("all rights reserved"), lit("click here to continue")),
-              (pmod(col("doc_id"), lit(3)) + 1).cast("int")), lit("\n"),
-            substring(col("text"), 81, 80), lit("\n"),
-            when(pmod(col("doc_id"), lit(4)) === 0,
-              concat(substring(col("text"), 1, 80), lit("\n")))
-              .otherwise(lit("")),
-            lit("copyright 2026 example corp")).as("text")),
-        maxDfPct = 5)),
-
-    "q_semdedup" -> ((s, d) => {
-      // SemDeDup (Abbas et al. 2023): k-means cells → intra-cell
-      // pairwise cosine → keep the min id per dup pair. Random unit
-      // vectors never reach cosine 0.95 (the q_dedup_embedding
-      // lesson), so the gate plants 20 scaled copies (cosine exactly
-      // 1 with their originals, co-clustered by construction since
-      // assignment is direction-only) under high ids — exactly the
-      // planted ids MUST come back removed and every original must
-      // survive; GroundTruthSpec proves that same construction
-      // exactly. k-means is not SQL-expressible → rows-only gate.
-      val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val planted = emb.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 10000000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(0.99f)).as("embedding"))
-      SemDeDup.verdictsAuto(emb.unionByName(planted), eps = 0.95)
-        .filter(col("removed")).select("vec_id")
-    }),
-
-    "q_semdedup_check" -> ((s, d) => {
-      // the SemDeDup planted construction as a DRIVER-CHECKED gate
-      // (r11, the q_embedding_dedup_check pattern): direction-only
-      // assignment co-clusters each 0.99-scaled copy with its
-      // original at cosine exactly 1.0, and min-id-keeps means the
-      // removed set must be EXACTLY the planted ids — n_removed
-      // compares to the exact construction size, the only-planted
-      // verdict is pinned TRUE
-      val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val planted = emb.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 10000000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(0.99f)).as("embedding"))
-      SemDeDup.verdictsAuto(emb.unionByName(planted), eps = 0.95)
-        .filter(col("removed"))
-        .agg(count(lit(1)).as("n_removed"),
-          (count(when(col("vec_id") >= 10000000L, lit(1))) === count(lit(1)))
-            .as("only_planted_removed"))
-    }),
-
-    "q_heavy_hitters_sketch" -> ((s, d) =>
-      // Count-Min sketch probe under the cross-engine check harness
-      // (the q_profile_approx_check pattern): the exact top-20 terms
-      // match DuckDB row-for-row, and the CMS estimates fold into two
-      // booleans the oracle pins TRUE (CMS never undercounts; stays
-      // within the eps·N envelope). The sketch is the 100 TB shape
-      // for frequency questions: a fixed d×w grid partial-aggregated
-      // per partition, ONE ~KB blob per partition on the exchange —
-      // vocabulary-independent, unlike the exact top-k whose
-      // exchange is sized by the vocabulary.
-      // eps=1e-3 (7x2000 grid, ~112 KB): the grid a 100 TB run would
-      // pick (per-executor-cache-resident; still a ±0.1%·N envelope).
-      // r10 A/B sf10: sketch pass 0.78-0.85 s at eps=1e-4 → 0.60-
-      // 0.66 s at 1e-3; exact side 0.49-0.56 s; harness ≈ their sum —
-      // the residual vs the 0.31 s oracle is that the CHECK HARNESS
-      // runs both passes while the oracle runs only the exact one
-      // (the q_hll_store_check ≥2x-by-construction class).
-      HeavyHitters.topTermsSketchCheck(s, Tables.documents(s, d), "text",
-        k = 20, eps = 0.001)),
-
-    "q_token_budget" -> ((s, d) =>
-      // token-budget data mixing: per-source quotas ∝ token mass,
-      // docs drawn in portable md5 order until the quota crosses
-      // (boundary doc included). Pure-SQL selection rule → full
-      // oracle; the prefix sum runs the SequencePacker two-level
-      // scan so no corpus-sized unpartitioned window exists (PlanSpec).
-      TokenBudget.select(Tables.documents(s, d), "doc_id", "source",
-        "text", budget = 5000)),
-
-    "q_dsir_weights" -> ((s, d) =>
-      // DSIR importance weights (Xie et al. 2023): mean hashed-unigram
-      // log-ratio ln(p_target/p_source) per doc, target = the English
-      // subset. md5 bucketing + integerized log-ratios make every
-      // weight engine-portable → full DuckDB oracle. One bucket-keyed
-      // token exchange; the B-row model broadcasts (PlanSpec).
-      // size-gated spread (r13): both DSIR passes (the pass-1 model
-      // job and the scan-pure scoring projection) otherwise run off a
-      // single-split tier scan; at-scale shape pinned by the regime
-      // test
-      graft.operators.Dsir.weights(
-        Spread.ifSmall(s, d, "documents")(Tables.documents(s, d)), "doc_id",
-        "text", col("lang") === "en")),
-
-    "q_dsir_sample" -> ((s, d) =>
-      // the resampling half: keep docs with portable-uniform
-      // u < sigmoid(3·weight) — a pure per-row filter (never a
-      // corpus-wide Gumbel top-k sort), tilting the corpus toward
-      // the target distribution
-      graft.operators.Dsir.sample(Tables.documents(s, d), "doc_id",
-        "text", col("lang") === "en")),
-
-    "q_dedup_exact" -> ((s, d) =>
-      // the 500-doc gate corpora carry no planted duplicates (the
-      // generator plants 1/625), so the gate re-crawls a deterministic
-      // 10% of docs under new ids — exact-dup groups of size >= 2 now
-      // exist at every SF and the oracle mirrors the same augmentation
-      Deduplicator.exactGroups(
-        withRecrawls(Tables.documents(s, d).select("doc_id", "text")),
-        "doc_id", "text", c => md5(c.cast("binary")))),
-
-    "q_dedup_drop" -> ((s, d) =>
-      // surviving ids after exact-dup removal (left_semi against keepers)
-      Deduplicator.exact(
-        withRecrawls(Tables.documents(s, d).select("doc_id", "text", "lang", "n_chars")),
-        "doc_id", "text")
-        .select("doc_id", "lang", "n_chars")),
-
-    "q_dedup_keep_best" -> ((s, d) =>
-      // canonical selection (r10): exact dedup keeping the HIGHEST-
-      // priority copy per content group (priority = lower source
-      // suffix wins, a metadata score — content-derived scores tie on
-      // byte-identical text), lowest doc_id breaking ties. The staged
-      // recrawl slice shares its original's source (id tiebreak must
-      // keep the first crawl); the generator's natural 1/625 dup
-      // pairs straddle ADJACENT round-robin sources (priority must
-      // pick the lower suffix regardless of id). Kept rows fold to a
-      // per-source profile
-      Deduplicator.keepBest(
-        withRecrawls(Tables.documents(s, d).select("doc_id", "text", "source")),
-        "doc_id", "text",
-        score = lit(0) - substring(col("source"), 4, 6).cast("int"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text"))).as("n_chars"))),
-
-    "q_ngram_novelty" -> ((s, d) => {
-      // n-gram novelty vs a reference corpus (r10): per candidate
-      // doc, the fraction of its distinct 3-grams absent from the
-      // reference slice (docs ≡ 0 mod 5) — the memorization/
-      // recombination diagnostic; one shingle-keyed anti-join, per-doc
-      // shingle sets deduped in-row before the explode
-      val docs = Tables.documents(s, d)
-      graft.operators.Novelty.report(
-        docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L),
-        docs.filter(pmod(col("doc_id"), lit(5L)) === 0L),
-        "doc_id", "text", k = 3, spreadN = Spread.scanFanout(s, d, "documents"))
-    }),
-
-    "q_bloom_ingest_dedup" -> ((s, d) => {
-      // batch form of the continuous-ingest dedup gate, through the
-      // bloom-prefilter recipe: the corpus membership sketch
-      // (~10 bits/doc) + the corpus digest table are STAGED once per
-      // tier (BloomDedup.ensureIngestIndex fingerprint stamp — the
-      // r11 verdict item 2 rework, the LshIngest precedent): a
-      // production ingest maintains both incrementally, so its
-      // per-batch cost is screen+verify ONLY, never a corpus re-scan.
-      // The timed unit here is exactly that: the incoming batch (full
-      // recrawl — must vanish — plus per-id-salted fresh docs — must
-      // survive) probes the on-disk sketch codegen'd, bloom MISSES
-      // pass join-free, and only hits (~9% + fpp tail) anti-join the
-      // persisted 16 B/row digest table. Exact regardless of fpp, so
-      // the oracle stays the same NOT EXISTS as q_stream_ingest_dedup.
-      // Bench pre-stages via SparkEntry.stageTier; standalone runs
-      // self-stage on first call. History: through r11 the gate built
-      // the sketch AND re-digested the corpus for the verify side
-      // inside the timed query — the r9 sf30 decomposition (cache
-      // 0.54 s + sketch 0.80 s + probe/verify 1.0-1.6 s vs DuckDB
-      // 0.631 s) shows ~55% of its 3.35x ratio was one-time build
-      // work the baseline never performs; the same-work baseline
-      // (EXTRAS_BASELINE_SQL: DuckDB probing a pre-built digest
-      // table) now compares batch cost to batch cost.
-      // The staged batch is cached as ONE relation: left as a raw
-      // union the optimizer clones the probe filter AND the verify
-      // anti-join into each branch. A real ingest batch arrives
-      // materialized (one scan), so the gate stages it the same way.
-      // Sketch sizing from file METADATA (bytesOnDisk/64; est and
-      // bits over-sized TOGETHER keeps the hash count, fpp ~1%,
-      // Spark clamps at 8 MB) — no count job runs. Upper cap keeps
-      // est*10 overflow-safe (bytesOnDisk returns Long.MaxValue for
-      // an unreadable path).
-      val est = math.min(math.max(Tables.bytesOnDisk(s, d, "documents") / 64L, 1024L),
-        1L << 26)
-      val idx = stagePath("bloomidx", d)
-      BloomDedup.ensureIngestIndex(
-        Tables.documents(s, d).select("doc_id", "text"), "text", idx,
-        est, est * 10L, sourceFp = Tables.sourceStamp(s, d, "documents"))
-      // the incoming batch is STAGED parquet too (a crawl batch
-      // arrives materialized; the two corpus text scans that derive
-      // it are harness): the timed unit is read batch → bloom probe →
-      // verify → agg, and the DuckDB baseline stages the same batch
-      // as an untimed setup table. The digest side broadcasts under
-      // incrementalKeepStaged's size gate (single-pass plan); past
-      // the cap it flips to the miss/verify branch split.
-      val batch = ensureBloomBatch(s, d)
-      BloomDedup.incrementalKeepStaged(s.read.parquet(batch), "text", idx)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text"))).as("n_chars"))
-    }),
-
-    "q_vocab" -> ((s, d) =>
-      // corpus vocabulary: top-100 tokens by document-independent
-      // frequency; explode is narrow, count partial-aggregates, top-k
-      // is a TakeOrdered — the right plan at any corpus size
-      Tables.documents(s, d)
-        .select(explode(TF.tokens(col("text"))).as("token"))
-        .filter(length(col("token")) > 0)
-        .groupBy("token").agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("token").asc)
-        .limit(100)),
-
-    "q_burstiness" -> ((s, d) => {
-      // bot/automation screen: natural users are bursty (CV ~ 1, the
-      // Poisson signature); the gate plants one scheduler-regular
-      // user (every 101st event replayed on an exact 60 s grid,
-      // mirrored in the oracle) that must flag bot_like while the
-      // organic population does not. Sentinel id -1: organic user_ids
-      // are non-negative at every tier (DataGen offsets by +1500 per
-      // replica), so no replication factor can ever collide an
-      // organic user into the planted bot and dilute its exact CV
-      // (the old 999999 sentinel collided at factor ~667)
-      val ev = Tables.events(s, d)
-      val bot = ev.filter(pmod(col("event_id"), lit(101L)) === 0)
-        .select(col("event_id"), lit(-1L).as("user_id"),
-          expr("timestampadd(MINUTE, cast(event_id div 101 as int), " +
-            "timestamp'2024-02-01 00:00:00')").as("ts"))
-      val all = ev.select("event_id", "user_id", "ts").unionByName(bot)
-      graft.operators.Burstiness.report(all, "user_id", "ts", "event_id",
-        minGaps = 5, cvBelow = 0.3, spreadN = Spread.scanFanout(s, d, "events"))
-    }),
-
-    "q_mad_outliers" -> ((s, d) => {
-      // median/MAD robust outlier report: the synthetic value stream
-      // is uniform (no 3-sigma-hat tail), so every 97th event gets a
-      // 50x planted spike, mirrored in the oracle — the report must
-      // count exactly those without the spikes dragging the scale
-      // estimate (the whole point of MAD over stddev)
-      // NO spread (r13 A/B): the histogram pass is one cheap floor()
-      // per row — fanning the events scan out measured 0.75 → 1.10 s
-      // (the exchange costs more than the trivial per-row CPU saves)
-      val ev = Tables.events(s, d).withColumn("value",
-        when(pmod(col("event_id"), lit(97L)) === 0, col("value") * 50)
-          .otherwise(col("value")))
-      graft.operators.RobustStats.madReport(ev, "value")
-    }),
-
-    "q_change_points" -> ((s, d) => {
-      // two-window mean-shift detection over per-type daily volumes;
-      // the synthetic stream is stationary, so the gate plants a
-      // deterministic LEVEL SHIFT (every 2nd event before Jan 16
-      // moves 15 days later: early days halve, late days gain 1.5x —
-      // a ~3x step; oracle plants identically). A one-day spike
-      // would NOT do: it inflates the window variance faster than
-      // the mean gap, which is exactly the outlier-vs-shift
-      // distinction this detector exists to draw. z must swing
-      // through both flagged and quiet days.
-      val cut = lit("2024-01-16 00:00:00").cast("timestamp")
-      val ev = Tables.events(s, d).withColumn("ts",
-        when(pmod(col("event_id"), lit(2L)) === 0 && col("ts") < cut,
-          col("ts") + expr("INTERVAL 15 DAYS")).otherwise(col("ts")))
-      graft.operators.ChangePoint.meanShift(ev, Seq("event_type"), "ts",
-        w = 7, zThreshold = 3.0)
-    }),
-
-    "q_freq_spectrum" -> ((s, d) =>
-      // Zipf frequency spectrum (freq -> type count): distinct corpus
-      // frequencies are O(sqrt(tokens)), so the re-key off the
-      // vocab-sized term-count frame stays tiny at any corpus size
-      graft.operators.VocabStats.spectrum(Tables.documents(s, d), "text")),
-
-    "q_corpus_stats" -> ((s, d) =>
-      // one-row vocabulary-health summary: hapax fraction + TTR, the
-      // corpus-linguistics drift/collapse diagnostics
-      graft.operators.VocabStats.summary(Tables.documents(s, d), "text")),
-
-    "q_domain_policy" -> ((s, d) => {
-      // C4/RefinedWeb URL hygiene: the corpus carries no URL column,
-      // so the gate synthesizes a deterministic one (140 hosts out of
-      // source x doc_id%7; every fifth doc sits on a cdn. subdomain) —
-      // the oracle builds the identical string. The suffix blocklist
-      // must remove src1-3.example.com AND cdn.src1-3.example.com;
-      // the per-host cap keeps 3 docs by portable-md5 draw (the
-      // verify-SF host-count max is 4, so the cap observably binds).
-      val docs = Tables.documents(s, d).withColumn("url",
-        concat(lit("https://"),
-          when(pmod(col("doc_id"), lit(5L)) === 0, lit("cdn.")).otherwise(lit("")),
-          col("source"), lit("-"),
-          pmod(col("doc_id"), lit(7L)).cast("string"),
-          lit(".example.com/p/"), col("doc_id").cast("string")))
-      graft.operators.DomainPolicy.applyPolicy(docs, "url", "doc_id",
-          blocked = Seq("src1-3.example.com", "src2-1.example.com"),
-          maxPerHost = 3)
-        .select(col("doc_id"), col("host"))
-    }),
-
-    "q_domain_policy_big" -> ((s, d) => {
-      // the UT1-SCALE blocklist path (r11 verdict item 7): the same
-      // corpus and policy, but the blocklist is the 2 live entries
-      // padded with 2000 synthetic .invalid domains — past the
-      // InlineBlocklistCap switch, so applyPolicyAuto takes the
-      // explode+semi-join form (DISTINCT hosts explode suffixes and
-      // join the list; the literal form would bake megabytes into the
-      // plan at real UT1 size). The padding matches nothing, so the
-      // oracle is q_domain_policy's verbatim — the two forms' output
-      // equality is ALSO spec-pinned on the same corpus
-      // (Round12OpsSpec).
-      val docs = Tables.documents(s, d).withColumn("url",
-        concat(lit("https://"),
-          when(pmod(col("doc_id"), lit(5L)) === 0, lit("cdn.")).otherwise(lit("")),
-          col("source"), lit("-"),
-          pmod(col("doc_id"), lit(7L)).cast("string"),
-          lit(".example.com/p/"), col("doc_id").cast("string")))
-      val bigList = Seq("src1-3.example.com", "src2-1.example.com") ++
-        (1 to 2000).map(i => s"blocked$i.invalid")
-      graft.operators.DomainPolicy.applyPolicyAuto(docs, "url", "doc_id",
-          blocked = bigList, maxPerHost = 3)
-        .select(col("doc_id"), col("host"))
-    }),
-
-    "q_token_count" -> ((s, d) =>
-      // size-gated spread (r13, the q_quality_score pattern)
-      Spread.ifSmall(s, d, "documents")(Tables.documents(s, d))
-        .select(col("doc_id"),
-          TF.tokenCount(col("text")).as("ws_tokens"),
-          TF.bpeTokenCount(col("text")).as("bpe_tokens"))),
-
-    "q_quality_score" -> ((s, d) =>
-      // scan-pure rules pass; the size-gated spread (r13) fans the
-      // single-split tier scan out — the 100 TB zero-shuffle contract
-      // is pinned by PlanSpec's at-scale regime test
-      Spread.ifSmall(s, d, "documents")(Tables.documents(s, d)).select(col("doc_id"),
-        TF.qualityScore(col("text"), stopwords).as("quality"),
-        pround(TF.meanTokenLen(col("text")), 2).as("mean_token_len"),
-        pround(TF.alphaRatio(col("text")), 4).as("alpha_ratio"))),
-
-    "q_compression_quality" -> ((s, d) =>
-      // deflate-compressibility templatedness proxy: zlib's 32 KB
-      // window catches long-range repetition bounded n-gram counters
-      // cannot; zlib is not SQL-expressible -> rows-only, with the
-      // compressible-vs-prose ordering and ratio bounds spec-pinned
-      graft.operators.CompressionQuality.scores(
-        Tables.documents(s, d), "doc_id", "text")),
-
-    "q_gopher_rules" -> ((s, d) => {
-      // Gopher/MassiveText document-shape rules (Rae et al. 2021
-      // §A1.1) as one fused scan pass. The corpus rows run through
-      // unfiltered (their signals computed honestly); four planted
-      // docs under high ids — bullet-led, ellipsis-ended, too-short,
-      // symbol-heavy — guarantee each rule has a violator at every
-      // SF, plus one constructed doc that PASSES all seven rules, so
-      // a threshold or tokenizer regression flips the row hash red.
-      // Planting is literal VALUES mirrored verbatim in the oracle.
-      import s.implicits._
-      val planted = Seq(
-        (20000001L, ("- alpha beta gamma delta epsilon zeta eta theta iota kappa\n" * 10)),
-        (20000002L, ("we continued into the night...\n" * 10)),
-        (20000003L, "too short"),
-        (20000004L, ("the tag # of # and # that # have # with #\n" * 6)),
-        (20000005L, ("the quick brown fox jumps over that lazy dog to be of and have with great zeal " * 5)))
-        .toDF("doc_id", "text")
-      // size-gated spread of the corpus side only (r13): the fused
-      // rules pass otherwise runs as ONE task off a single-split tier
-      // file; at-scale zero-shuffle shape pinned by the regime test
-      GopherRules.signals(
-        Spread.ifSmall(s, d, "documents")(
-          Tables.documents(s, d).select("doc_id", "text")).unionByName(planted))
-    }),
-
-    "q_ccnet_buckets" -> ((s, d) =>
-      // CCNet-style relative quality bucketing: head/middle/tail by
-      // the score's percentile WITHIN ITS LANGUAGE (value-based, ties
-      // share a bucket). Exact without any doc-keyed shuffle: the
-      // integerized score makes the per-lang histogram bounded, the
-      // cumulative runs over histogram rows, and docs join the
-      // broadcast (lang, score) percentile table in-scan.
-      graft.operators.QuantileFilter.buckets(
-        Tables.documents(s, d).select("doc_id", "lang", "text"),
-        "lang", TF.qualityScore(col("text"), stopwords))
-        .select(col("doc_id"), col("lang"), col("score"),
-          pround(col("frac_better"), 4).as("frac_better"), col("bucket"))),
-
-    "q_weighted_sample" -> ((s, d) =>
-      // quality-weighted importance sampling: keep each doc with
-      // probability = its quality score, via the portable md5 uniform
-      // draw — a pure narrow filter, reproducible under retries
-      graft.operators.Sampling.weightedSample(
-        Tables.documents(s, d).select(col("doc_id"),
-          TF.qualityScore(col("text"), stopwords).as("quality")),
-        "doc_id", "quality", salt = 7)),
-
-    "q_mix_report" -> ((s, d) => {
-      // data-mixture report: per (source-bucket, lang) doc counts,
-      // token totals, mean quality, and corpus token share — the
-      // one-page summary a pretraining run is steered by. One partial
-      // agg over narrow per-row stats; the share divides by a 1-row
-      // global total joined back onto the tiny aggregate (never a
-      // second corpus pass)
-      val docs = Tables.documents(s, d).select(
-        regexp_replace(col("source"), "[0-9]+$", "").as("src_family"),
-        col("lang"),
-        TF.tokenCount(col("text")).as("n_tok"),
-        TF.qualityScore(col("text"), stopwords).as("quality"))
-      // quality is 4dp-floored, so sum it as exact 1e4-scaled longs:
-      // float summation order (engine-dependent) can never bend the mean
-      val per = docs.groupBy("src_family", "lang").agg(
-        count(lit(1)).as("n_docs"),
-        sum("n_tok").as("sum_tokens"),
-        sum(floor(col("quality") * lit(10000.0) + lit(0.5)).cast("long")).as("qsum"))
-        .withColumn("mean_quality",
-          pround(col("qsum").cast("double") / (col("n_docs") * lit(10000.0)), 4))
-        .drop("qsum")
-      // the share's global total is a window over the ALREADY-AGGREGATED
-      // frame (mixture-cell cardinality, ~tens of rows) — an unpartitioned
-      // window is forbidden over corpus-sized data, not over aggregates;
-      // the cross-join-a-reaggregated-total alternative scans the corpus
-      // twice (no subplan reuse across aggregation branches)
-      per.withColumn("token_share",
-          pround(col("sum_tokens").cast("double") /
-            sum("sum_tokens").over(org.apache.spark.sql.expressions.Window
-              .partitionBy()), 4))
-        .orderBy(col("src_family").asc, col("lang").asc)
-    }),
-
-    "q_stratified_sample" -> ((s, d) =>
-      // stratified corpus mixing: keep 60% of en, 30% of es/de, default
-      // 10% — a pure narrow filter (portable per-row uniform vs a
-      // literal fraction map), no per-stratum pass, no shuffle
-      graft.operators.Sampling.stratifiedSample(
-        Tables.documents(s, d).select("doc_id", "lang", "n_chars"),
-        "doc_id", "lang",
-        Map("en" -> 0.6, "es" -> 0.3, "de" -> 0.3), default = 0.1,
-        salt = 11)),
-
-    "q_mix_rebalance" -> ((s, d) =>
-      // downsample over-represented languages to a target token
-      // mixture: stats pass → per-stratum keep rates (min(1,
-      // target·total/actual)) → broadcast-rate narrow filter. Never
-      // upsamples; unlisted strata drop
-      graft.operators.Sampling.rebalanceToTargets(
-        Tables.documents(s, d).select(col("doc_id"), col("lang"),
-          TF.tokenCount(col("text")).as("n_tok")),
-        "doc_id", "lang", "n_tok",
-        Map("en" -> 0.3, "es" -> 0.2, "de" -> 0.2, "fr" -> 0.15, "zh" -> 0.15),
-        salt = 13)
-        .select(col("doc_id"), col("lang"), pround(col("keep_rate"), 6).as("keep_rate"))),
-
-    "q_embedding_outliers" -> ((s, d) =>
-      // embedding-space outlier pruning: flag vectors in the bottom
-      // 5% of cosine-to-own-centroid WITHIN their k-means cell (per-
-      // cell threshold — global constants mis-prune across densities).
-      // k-means → rows-only gate; GroundTruthSpec pins the exact
-      // percentile semantics (strict-below bound, flagged<kept per
-      // cell, prune count)
-      graft.ann.Outliers.verdicts(
-        Tables.embeddings(s, d).select("vec_id", "embedding"), c = 16, p = 0.05)
-        .filter(col("outlier")).select("vec_id", "cluster_id", "sim")),
-
-    "q_outlier_threshold_check" -> ((s, d) =>
-      // full-oracle check for q_embedding_outliers' threshold+verdict
-      // stage (r9 verdict item 7): the assignment is FROZEN (cell =
-      // vec_id mod 16 — the "given the assignment" premise; Lloyd
-      // seeding is what makes the full gate rows-only) and the scored
-      // value is the exact integer Σ floor(x·1e6+0.5), so the per-cell
-      // exact percentile and the strict-below verdict replay
-      // identically in DuckDB. Thresholds are interpolated between
-      // integers ≥1 apart, so engine ulp differences can never flip a
-      // verdict; the threshold itself stays out of the output
-      graft.ann.Outliers.thresholdVerdicts(
-        Tables.embeddings(s, d).select(col("vec_id"),
-          pmod(col("vec_id"), lit(16L)).as("cell"),
-          aggregate(col("embedding"), lit(0L), (acc, x) =>
-            acc + floor(x.cast("double") * lit(1e6) + lit(0.5)).cast("long"))
-            .as("score")),
-        "cell", "score", p = 0.1)
-        .select(col("vec_id"), col("cell"), col("score"), col("outlier"))),
-
-    "q_classifier_margin_check" -> ((s, d) =>
-      // full-oracle check for q_quality_classifier's SCORING pass
-      // (r9 verdict item 7): portable md5 bucket + pinned integer
-      // milli-weights make every margin an exact integer DuckDB
-      // reproduces bit-for-bit — see QualityClassifier.marginCheck
-      // size-gated spread (r13, the q_quality_score pattern)
-      graft.operators.QualityClassifier.marginCheck(
-        Spread.ifSmall(s, d, "documents")(Tables.documents(s, d)),
-        "doc_id", "text")),
-
-    "q_classifier_train_check" -> ((s, d) => {
-      // the TRAINING loop driver-checked (r11 verdict item 8): the
-      // margin machinery was already full-oracle
-      // (q_classifier_margin_check); this pins the other half — the
-      // iterative gradient-descent loop itself — by running it in
-      // exact fixed-point integer arithmetic (portable md5 buckets,
-      // rational fast-sigmoid link, truncating division; see
-      // QualityClassifier.trainCheck) against an INDEPENDENT pure-
-      // Python trainer's committed weight fixtures
-      // (tools/classifier_oracle.py — the bpe_oracle precedent).
-      // Same class construction as q_quality_classifier: positives
-      // as-is, negatives token-reversed, held-out fifth excluded.
-      val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .filter(pmod(col("doc_id"), lit(5L)) =!= 4L)
-      val pos = base.select(col("text"), lit(1L).as("label"))
-      val neg = base.select(
-        concat_ws(" ", transform(TF.tokens(col("text")), t => reverse(t)))
-          .as("text"),
-        lit(0L).as("label"))
-      QualityClassifier.trainCheck(pos.unionByName(neg), "text", "label")
-    }),
-
-    "q_quality_classifier" -> ((s, d) => {
-      // model-based quality filter (the GPT-3/LLaMA recipe): hashed
-      // bag-of-words + logistic regression separating reference docs
-      // (the corpus as-is) from synthetic crawl negatives (the same
-      // docs token-REVERSED — a disjoint gibberish vocabulary, so the
-      // classes are linearly separable over hash buckets and the
-      // held-out fifth must score perfectly; GroundTruthSpec pins
-      // that exactly). Training is iterative gradient descent as
-      // DataFrame aggregations (not SQL-expressible) → rows-only
-      // gate.
-      val base = Tables.documents(s, d).select(col("doc_id"), col("text"),
-        (pmod(col("doc_id"), lit(5)) === 4).as("is_eval"))
-      val neg = base.select((col("doc_id") + lit(30000000L)).as("doc_id"),
-        concat_ws(" ", transform(TF.tokens(col("text")), t => reverse(t))).as("text"),
-        col("is_eval"))
-      val all = base.withColumn("label", lit(1.0))
-        .unionByName(neg.withColumn("label", lit(0.0)))
-      val model = QualityClassifier.train(
-        all.filter(!col("is_eval")), "text", "label")
-      QualityClassifier.score(model, all.filter(col("is_eval")), "text")
-        .groupBy("label")
-        .agg(count(lit(1)).as("n_eval"),
-          sum(when(col("predicted") === col("label").cast("long"), 1L)
-            .otherwise(0L)).as("n_correct"))
-        .select(col("label").cast("long").as("label"), col("n_eval"), col("n_correct"))
-        .orderBy("label")
-    }),
-
-    "q_temperature_mix" -> ((s, d) =>
-      // temperature (alpha) sampling: the multilingual-pretraining
-      // mixture rule — target share p^alpha/sum(p^alpha), downsample-
-      // only keep rates. Per-stratum steering table (<=|langs| rows);
-      // ratios portably rounded, the pow-derived values at 6 dp
-      graft.operators.Sampling.temperatureRates(
-        Tables.documents(s, d).select(col("lang"),
-          TF.tokenCount(col("text")).as("n_tok")),
-        "lang", "n_tok", alpha = 0.5)
-        .select(col("lang"), col("actual"),
-          pround(col("share"), 6).as("share"),
-          pround(col("target_share"), 6).as("target_share"),
-          pround(col("keep_rate"), 6).as("keep_rate"))),
-
-    "q_split_by_cluster" -> ((s, d) => {
-      // leakage-safe train/test split: near-duplicate docs share a
-      // connected-component id, and the split draw hashes the CLUSTER
-      // id — near-dups can never straddle the boundary (a doc-id split
-      // leaks eval content whenever a near-copy lands in train)
-      val docs = Tables.documents(s, d)
-      graft.dedup.Components.clusters(
-          docs, "doc_id",
-          NgramJaccard.pairs(docs, "doc_id", "text", k = 3, threshold = 0.5, maxDf = 20),
-          "id_a", "id_b")
-        .withColumn("split",
-          when(graft.operators.Sampling.portableUniform("component", 5) < 0.9, "train")
-            .otherwise("test"))
-    }),
-
-    "q_vocab_coverage" -> ((s, d) => {
-      // tokenizer-vocab coverage: what fraction of corpus tokens a
-      // top-k word vocabulary covers (the go/no-go metric before
-      // committing to a vocab size). One explode pass; the top-k and
-      // both totals derive from the same frequency aggregate
-      val freq = Tables.documents(s, d)
-        .select(explode(TF.tokens(col("text"))).as("token"))
-        .filter(length(col("token")) > 0)
-        .groupBy("token").agg(count(lit(1)).as("freq"))
-      val top = freq.orderBy(col("freq").desc, col("token").asc).limit(20)
-      top.agg(count(lit(1)).as("vocab_size"), sum("freq").as("covered_tokens"))
-        .crossJoin(broadcast(freq.agg(sum("freq").as("total_tokens"))))
-        .select(col("vocab_size"), col("covered_tokens"), col("total_tokens"),
-          pround(col("covered_tokens").cast("double") / col("total_tokens"), 6)
-            .as("coverage"))
-    }),
-
-    "q_dup_rate_by_source" -> ((s, d) =>
-      // data-quality panel: exact-duplicate rate per source family —
-      // which feeds are rebroadcasting content. Shuffles a 16-byte
-      // hash + the group key, never the text
-      Tables.documents(s, d)
-        .groupBy(regexp_replace(col("source"), "[0-9]+$", "").as("src_family"))
-        .agg(count(lit(1)).as("n_docs"),
-          count_distinct(md5(col("text").cast("binary"))).as("n_unique"))
-        .withColumn("dup_rate", pround(
-          (col("n_docs") - col("n_unique")).cast("double") / col("n_docs"), 6))),
-
-    "q_bpe_train" -> ((s, d) =>
-      // BPE vocabulary induction on the compressed word-frequency
-      // table: one corpus pass, then |vocab|-sized merge rounds with a
-      // 1-row TakeOrdered argmax each (rows-only: iterative argmax is
-      // not SQL-expressible; BpeSpec hand-verifies the merge order)
-      graft.operators.Bpe.train(Tables.documents(s, d), "text", nMerges = 12)),
-
-    "q_bpe_encode" -> ((s, d) => {
-      // apply-time BPE: encode the distinct vocabulary once under the
-      // trained merge table, broadcast-join tokens, reassemble each
-      // doc's subword sequence in token order (one doc-keyed
-      // exchange). The gate folds the sequence to (count, md5) and an
-      // independent pure-Python encoder (tools/bpe_oracle.py) provides
-      // the exact expected rows per sf fixture.
-      val docs = Tables.documents(s, d)
-      val merges = graft.operators.Bpe.train(docs, "text", nMerges = 12)
-      graft.operators.Bpe.encodeDocs(docs, "doc_id", "text", merges)
-        .select(col("doc_id"),
-          size(col("bpe")).cast("long").as("n_bpe"),
-          md5(concat_ws(" ", col("bpe")).cast("binary")).as("bpe_md5"))
-    }),
-
-    "q_unigram_train" -> ((s, d) =>
-      // unigram-LM (SentencePiece-style) tokenizer training (r11
-      // verdict item 5): substring-seeded vocabulary + EM rounds of
-      // Viterbi segmentation / count re-estimation, all comparisons
-      // exact rationals so the whole trainer replays bit-for-bit in
-      // the independent Python fixture oracle
-      // (tools/unigram_oracle.py — the bpe_oracle precedent). Each
-      // EM round is one narrow distinct-word pass + one ≤V-row
-      // exchange; driver state is the V-piece model.
-      graft.operators.UnigramTokenizer.train(Tables.documents(s, d), "text")),
-
-    "q_unigram_encode" -> ((s, d) => {
-      // apply-time unigram segmentation: the distinct-word vocabulary
-      // is segmented once under the trained model, tokens broadcast-
-      // join it, docs reassemble in token order (the Bpe.encodeDocs
-      // shape). Folded to (count, md5) per doc; the Python oracle
-      // provides exact expected rows per sf fixture.
-      val docs = Tables.documents(s, d)
-      val model = graft.operators.UnigramTokenizer.trainModel(docs, "text")
-      graft.operators.UnigramTokenizer.encodeDocs(docs, "doc_id", "text", model)
-        .select(col("doc_id"),
-          size(col("pieces")).cast("long").as("n_pieces"),
-          md5(concat_ws(" ", col("pieces")).cast("binary")).as("piece_md5"))
-    }),
-
-    "q_vocab_drift" -> ((s, d) => {
-      // vocabulary-distribution drift between source families (r12):
-      // pairwise Jensen-Shannon divergence over unigram
-      // distributions — the text analog of the numeric PSI/KS
-      // scorecard (what a crawl pipeline watches between dumps).
-      // The organic sources share a generator (JS ≈ 0 among them),
-      // so every 7th doc becomes a planted 'drifted' family with
-      // token-REVERSED text (disjoint vocabulary → JS near ln 2) —
-      // the matrix must separate the planted drift from the organic
-      // noise floor, and the oracle replays every nano-integerized
-      // token contribution exactly.
-      val docs = Tables.documents(s, d).select(
-        when(pmod(col("doc_id"), lit(7L)) === 3L, lit("drifted"))
-          .otherwise(col("source")).as("fam"),
-        when(pmod(col("doc_id"), lit(7L)) === 3L,
-          concat_ws(" ", transform(TF.tokens(col("text")), t => reverse(t))))
-          .otherwise(col("text")).as("text"))
-      graft.operators.VocabDrift.jsMatrix(docs, "fam", "text")
-    }),
-
-    "q_retrieval_eval" -> ((s, d) => {
-      // retrieval-quality eval harness (r12): a deterministic query
-      // set (every 100th doc below id 10k; terms = its last 3
-      // distinct tokens, relevant = itself) scores through the
-      // MULTI-query BM25 (Bm25.batchTopK — one corpus pass, postings
-      // semi-joined to the broadcast union vocabulary before any
-      // exchange) and each query reports its relevant doc's rank@10 /
-      // reciprocal rank / hit. No planting: the metric VALUE is the
-      // oracle-compared quantity, replayed exactly in DuckDB
-      // (per-term scores integerized to micro units before the
-      // per-(query,doc) sum, so summation order cannot flip a rank).
-      // The id cap makes the eval set CORPUS-INDEPENDENT (≤100
-      // queries at any SF) — the labeled-set shape a real eval has,
-      // and the bound that keeps the per-(query, matching-doc) score
-      // grid ∝ corpus, never ∝ corpus × corpus/100: the uncapped
-      // form built a 5k-query × 500k-doc grid at sf10 and OOM-killed
-      // a 50 GB JVM (measured r12).
-      val docs = Tables.documents(s, d)
-      val ts = TF.tokens(col("text"))
-      val queries = docs.filter(
-          pmod(col("doc_id"), lit(100L)) === 7L && col("doc_id") < 10000L)
-        .select(col("doc_id").as("query_id"),
-          array_distinct(slice(ts, greatest(size(ts) - 2, lit(1)), lit(3)))
-            .as("terms"),
-          col("doc_id").as("rel_id"))
-        .filter(size(col("terms")) > 0)
-      // the corpus pass (native vocab_term_counts postings build) is
-      // the dominant CPU: fan it out when the tier file is
-      // single-split (scanFanout — no-op at scale)
-      graft.operators.Bm25.retrievalEval(
-        Spread.ifSmall(s, d, "documents")(docs), "doc_id", "text", queries, k = 10)
-    }),
-
-    "q_tokenizer_fertility" -> ((s, d) => {
-      // tokenizer FERTILITY eval (r12; the BLOOM/Scao et al. metric —
-      // subword pieces per word, the go/no-go number before
-      // committing a tokenizer to a language/corpus): both trained
-      // tokenizers (BPE merges, unigram-LM pieces) encode the corpus
-      // and every doc reports pieces-per-word for each. Full oracle
-      // with genuine independence: Spark re-trains and re-encodes
-      // from raw text, while the oracle reads BOTH independent
-      // Python implementations' committed encodings (bpe_enc_* and
-      // unigram_enc_* fixtures) joined on doc_id — a drift in either
-      // trainer, either encoder, or the fertility arithmetic breaks
-      // the hash.
-      val docs = Tables.documents(s, d)
-      val nWords = docs.select(col("doc_id"),
-        size(TF.tokens(col("text"))).cast("long").as("n_words"))
-      val bpe = graft.operators.Bpe.encodeDocs(docs, "doc_id", "text",
-        graft.operators.Bpe.train(docs, "text", nMerges = 12))
-        .select(col("doc_id"), size(col("bpe")).cast("long").as("n_bpe"))
-      val uni = graft.operators.UnigramTokenizer.encodeDocs(docs, "doc_id", "text",
-        graft.operators.UnigramTokenizer.trainModel(docs, "text"))
-        .select(col("doc_id"), size(col("pieces")).cast("long").as("n_uni"))
-      def fert(n: Column) = when(col("n_words") === 0, lit(0.0))
-        .otherwise(pround(n.cast("double") / col("n_words"), 4))
-      nWords.join(bpe, "doc_id").join(uni, "doc_id")
-        .select(col("doc_id"), col("n_words"), col("n_bpe"), col("n_uni"),
-          fert(col("n_bpe")).as("fert_bpe"),
-          fert(col("n_uni")).as("fert_uni"))
-    }),
-
-    "q_bigram_logprob" -> ((s, d) =>
-      // bigram LM quality score (add-1 smoothing): captures local word
-      // order, which the unigram proxy cannot — shuffled gibberish
-      // with a normal word histogram scores low here
-      graft.operators.BigramLm.scores(Tables.documents(s, d), "doc_id", "text")),
-
-    "q_unigram_logprob" -> ((s, d) =>
-      // CCNet-style LM-quality proxy: mean unigram log-prob per doc
-      // under the corpus's own distribution; one term-keyed shuffle
-      // (freq, total, and the join all reuse it), integerized
-      // per-token log-probs so the mean is order-independent
-      graft.operators.UnigramLm.scores(Tables.documents(s, d), "doc_id", "text")),
-
-    "q_backoff_logprob" -> ((s, d) => {
-      // Stupid Backoff trigram scoring (Brants et al. 2007): the
-      // model trains on the doc_id%3==0 reference slice so the
-      // backoff chain genuinely fires on the other two thirds —
-      // n_hit3/2/1 tallies make each level's firing oracle-visible
-      val docs = Tables.documents(s, d)
-      graft.operators.BackoffLm.scores(
-        docs, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-        spreadTypes = Spread.scanFanout(s, d, "documents"))
-    }),
-
-    "q_repetition_stats" -> ((s, d) => {
-      // Gopher-style repetition filters (Rae et al. 2021 §A1.1):
-      // duplicate-token fraction, most-frequent unigram/bigram share,
-      // mean word length. The mode counts come from the native
-      // `ngram_repetition` expression (functions/NgramRepetition —
-      // one codegen'd pass + a per-row hash map), never an
-      // explode+groupBy (which would shuffle every token at 100 TB).
-      // FunctionsSpec pins top_cnt bit-identical to the interpreted
-      // TF.maxMultiplicity HOF this query used through r8, so the
-      // oracle below is unchanged. k-gram count = n_words - k + 1,
-      // so the bigram denominator is n_words - 1.
-      val ts = TF.tokens(col("text"))
-      Tables.documents(s, d).select(
-        col("doc_id"),
-        size(ts).cast("long").as("n_words"),
-        pround(TF.dupTokenFrac(col("text")), 4).as("dup_word_frac"),
-        call_function("ngram_repetition", ts, lit(1))
-          .getField("top_cnt").as("uni_top"),
-        call_function("ngram_repetition", ts, lit(2))
-          .getField("top_cnt").as("bi_top"),
-        pround(TF.meanTokenLen(col("text")), 4).as("mean_word_len"))
-      .select(
-        col("doc_id"), col("n_words"), col("dup_word_frac"),
-        pround(when(col("n_words") === 0, lit(0.0)).otherwise(
-          col("uni_top").cast("double") / col("n_words")), 4)
-          .as("top_unigram_frac"),
-        pround(when(col("n_words") < 2, lit(0.0)).otherwise(
-          col("bi_top").cast("double") / (col("n_words") - 1)), 4)
-          .as("top_bigram_frac"),
-        col("mean_word_len"))
-        .withColumn("flagged",
-          when(col("dup_word_frac") > 0.5 || col("top_bigram_frac") > 0.2
-            || col("mean_word_len") < 2.0, lit(1L)).otherwise(lit(0L)))
-    }),
-
-    "q_lang_id" -> ((s, d) =>
-      Tables.documents(s, d).select(col("doc_id"),
-        TF.langId(col("text"), langMarkers).as("lang_pred"))),
-
-    "q_lang_eval" -> ((s, d) =>
-      // confusion matrix of the heuristic against ground-truth lang
-      Tables.documents(s, d)
-        .select(col("lang"), TF.langId(col("text"), langMarkers).as("lang_pred"))
-        .groupBy("lang", "lang_pred")
-        .agg(count(lit(1)).as("n"))),
-
-    "q_ann_bruteforce" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      Knn.bruteForceTopK(emb, emb.filter(col("vec_id") < 8), k = 5)
-    }),
-
-    "q_matryoshka_recall" -> ((s, d) => {
-      // Matryoshka dim-vs-recall table (r11): how much recall the
-      // 16/32-dim prefixes of the 64-dim embeddings retain against
-      // full-dim top-5 — the MRL truncation-tradeoff eval. Fully
-      // deterministic (4-dp cosine + id tie-break at every dim), so
-      // the oracle replays the whole table value-for-value; dim=64
-      // is the identity row (recall 1.0) pinning the harness itself.
-      val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      Knn.truncatedRecall(emb, emb.filter(col("vec_id") < 8), k = 5,
-        dims = Seq(16, 32, 64))
-    }),
-
-    "q_hard_negatives" -> ((s, d) => {
-      // contrastive hard-negative mining: top-5 nearest with a
-      // DIFFERENT label per query — label filter prunes before the
-      // cosine, corpus never shuffles, WindowGroupLimit top-k
-      val emb = Tables.embeddings(s, d)
-      Knn.hardNegatives(emb, emb.filter(col("vec_id") < 8), k = 5)
-    }),
-
-    "q_ann_lsh" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      // 16 tables: 1-(1-p^4)^16 ~ 0.94 expected recall at the top-5
-      // neighbor similarity this corpus exhibits (GroundTruthSpec
-      // asserts >=0.9 measured)
-      Knn.lshTopK(emb, emb.filter(col("vec_id") < 8), k = 5, tables = 16)
-    }),
-
-    "q_ann_ivf" -> ((s, d) => {
-      val emb = Tables.embeddings(s, d)
-      // nprobe 12/16: uniform random vectors barely cluster, so high
-      // recall needs a high probe fraction here; production embedding
-      // corpora cluster and run nprobe/C far lower at the same recall
-      graft.ann.Ivf.topK(emb, emb.filter(col("vec_id") < 8), k = 5,
-        c = 16, nprobe = 12)
-    }),
-
-    "q_ann_ivf_indexed" -> ((s, d) => {
-      // write-time-partitioned IVF index + partition-pruned search —
-      // the 100 TB form (rows-only; spec asserts equality with the
-      // inline form and PartitionFilters in the scan)
-      val emb = Tables.embeddings(s, d)
-      val tmp = s"/tmp/graft_ivf_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      graft.ann.Ivf.writeIndex(emb, tmp, c = 16)
-      graft.ann.Ivf.topKIndexed(tmp, emb.filter(col("vec_id") < 8), k = 5, nprobe = 12)
-    }),
-
-    "q_ann_recall_check" -> ((s, d) => {
-      // the ANN family's recall floors as a DRIVER-CHECKED gate (r11):
-      // brute-force top-5 is the truth set, and each approximate
-      // method's recall against it is folded to a boolean the oracle
-      // pins TRUE. Floors are cross-TIER (measured sf0.001/0.01/0.1:
-      // lsh 0.90/0.825/1.0, ivf 0.95/0.90/0.925, sq8 same, pq
-      // 0.975/0.925/0.75 — uniform-random vectors are the worst case
-      // for every family, and the per-tier wobble is hash geometry,
-      // not regression): lsh>=0.8, ivf/sq8>=0.85, pq>=0.7.
-      // Deterministic because every hash family is. Upgrades four
-      // rows-only operators to driver-checked properties; exact
-      // top-k membership and the tighter per-tier floors stay the
-      // GroundTruthSpec's job.
-      val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val q = emb.filter(col("vec_id") < 8)
-      val exact = graft.ann.Knn.bruteForceTopK(emb, q, k = 5)
-        .select("query_id", "nbr_id")
-      def recallRow(name: String, approx: DataFrame, floor: Double) =
-        exact.join(approx.select("query_id", "nbr_id"),
-            Seq("query_id", "nbr_id"), "left_semi")
-          .agg(count(lit(1)).as("hits"))
-          .crossJoin(exact.agg(count(lit(1)).as("n_true")))
-          .select(lit(name).as("method"), col("n_true"),
-            (col("hits").cast("double") / col("n_true") >= floor).as("recall_ok"))
-      recallRow("lsh", graft.ann.Knn.lshTopK(emb, q, k = 5, tables = 16), 0.8)
-        .unionByName(recallRow("ivf",
-          graft.ann.Ivf.topK(emb, q, k = 5, c = 16, nprobe = 12), 0.85))
-        .unionByName(recallRow("sq8",
-          graft.ann.Ivf.topKSq8(emb, q, k = 5, c = 16, nprobe = 12), 0.85))
-        .unionByName(recallRow("pq",
-          graft.ann.Pq.adcRerankTopK(emb, q, "embedding", k = 5, m = 8,
-            kcent = 64, shortlist = 100), 0.7))
-    }),
-
-    "q_ann_ivf_append" -> ((s, d) => {
-      // incremental ANN index maintenance (r11): a new embedding
-      // batch (every 5th vector) is assigned to the EXISTING
-      // centroids and appended into the partitioned cells/ layout —
-      // no k-means re-run, no corpus rewrite (Ivf.appendToIndex; the
-      // LshIngest staging pattern, fingerprint-stamped, Bench
-      // pre-stages via stageTier). The gate then searches with
-      // shifted-id COPIES of the appended vectors: each query's
-      // top-1 must be its appended original at cosine 1.0 through
-      // the partition-pruned indexed scan — visibility of the append
-      // is a FULL oracle, not a recall bound (self-hits are excluded
-      // by id, so the copy trick is what makes the check exact).
-      val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val base = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 0L)
-      val batch = emb.filter(pmod(col("vec_id"), lit(5L)) === 0L)
-      val tmp = stagePath("ivfapp", d)
-      graft.ann.Ivf.ensureAppendedIndex(base, batch, tmp, c = 16,
-        sourceFp = Tables.sourceStamp(s, d, "embeddings"))
-      val queries = batch.filter(col("vec_id") < 40)
-        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-      graft.ann.Ivf.topKIndexed(tmp, queries, k = 5, nprobe = 12)
-        .groupBy("query_id")
-        .agg(max(when(col("rank") === 1, col("nbr_id"))).as("top1_id"),
-          max(when(col("rank") === 1, col("sim"))).as("top1_sim"),
-          count(lit(1)).as("n_results"))
-    }),
-
-    "q_ann_sq8" -> ((s, d) => {
-      // IVF over SQ8-quantized cells + exact rerank (rows-only;
-      // GroundTruthSpec measures recall vs brute force)
-      val emb = Tables.embeddings(s, d)
-      graft.ann.Ivf.topKSq8(emb, emb.filter(col("vec_id") < 8), k = 5,
-        c = 16, nprobe = 12)
-    }),
-
-    "q_ann_pq" -> ((s, d) => {
-      // product-quantized ANN with exact rerank (rows-only; the
-      // iterative per-subspace Lloyd is not SQL-expressible —
-      // GroundTruthSpec pins recall vs exact L2, code bounds, and
-      // codebook determinism). m=8 subspaces x 64 codewords: 64-dim
-      // float -> 8 bytes stored per vector; ADC shortlists from codes
-      // alone, only the shortlist touches full vectors
-      val emb = Tables.embeddings(s, d)
-      graft.ann.Pq.adcRerankTopK(emb, emb.filter(col("vec_id") < 8),
-        "embedding", k = 5, m = 8, kcent = 64, shortlist = 100)
-    }),
-
-    "q_sq8_quantize" -> ((s, d) =>
-      // SQ8 vector compression report: per-dim min/max (posexplode +
-      // partial agg → dims rows), broadcast stats arrays, narrow HOF
-      // encode; all-integer outputs (code checksum + ppb error bounds)
-      graft.ann.Quantize.sq8Report(Tables.embeddings(s, d), "vec_id", "embedding")),
-
-    "q_embedding_standardize" -> ((s, d) =>
-      // per-dim z-score feature prep: exact integer moments (1e6-
-      // integerized in-scan, decimal/HUGEINT square sums) so mean and
-      // variance replay identically in any engine; broadcast stats,
-      // narrow HOF standardize, integerized z checksums
-      graft.ann.Standardize.zReport(Tables.embeddings(s, d), "vec_id", "embedding")),
-
-    "q_lsh_ingest_dedup" -> ((s, d) => {
-      // incremental NEAR-dup ingest (r10; re-measured r11): the
-      // MinHash analog of q_bloom_ingest_dedup — a persisted
-      // banded-LSH index screens each crawl batch without
-      // re-shingling history. The index build is STAGED once per
-      // tier (LshIngest.ensureIndex fingerprint stamp): the timed
-      // unit is the per-batch cost a production ingest pays
-      // (signatures + bounded probe + verify + delta), NOT the
-      // one-time build the operator exists to amortize away —
-      // r10's gate re-built the full-corpus index inside the timed
-      // query (18.2 s at sf10, slower than one-shot q_dedup_minhash).
-      // Bench pre-stages via SparkEntry.stageTier; standalone runs
-      // self-stage on first call. The batch: one-token-appended
-      // recrawl slice (J >= s/(s+3), min 8 shingles/doc => ~0.73+,
-      // must flag vs its original) + token-REVERSED docs (disjoint
-      // shingle direction => novel, must survive). Partial oracle
-      // (r10 verdict item 1, the q_profile_approx_check precedent):
-      // n_in exact; partition_ok (novel + flagged = batch) and
-      // verdict_ok (>=90% of each slice gets its constructed
-      // verdict; the minhash miss floor at 8 shingles is ~0.5%/doc)
-      // pinned TRUE. LshIngestSpec pins the exact flag/survive sets.
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val base = stagePath("lshidx", d)
-      graft.dedup.LshIngest.ensureIndex(docs, "doc_id", "text", base,
-        sourceFp = Tables.sourceStamp(s, d, "documents"))
-      val recrawl = docs.filter(pmod(col("doc_id"), lit(10L)) === 3L)
-        .select((col("doc_id") + 10000000L).as("doc_id"),
-          concat(col("text"), lit(" zzrecrawlpad")).as("text"),
-          lit("recrawl").as("batch_src"))
-      val fresh = docs.filter(pmod(col("doc_id"), lit(10L)) === 4L)
-        .select((col("doc_id") + 20000000L).as("doc_id"),
-          concat_ws(" ", reverse(split(trim(lower(col("text"))), "\\s+")))
-            .as("text"),
-          lit("fresh_reversed").as("batch_src"))
-      val incoming = recrawl.unionByName(fresh).cache()
-      val (novel, dups, _, _) = graft.dedup.LshIngest.screen(
-        s, incoming, "doc_id", "text", base, threshold = 0.5)
-      incoming.groupBy("batch_src").agg(count(lit(1)).as("n_in"))
-        .join(novel.groupBy("batch_src").agg(count(lit(1)).as("n_novel")),
-          Seq("batch_src"), "left")
-        .join(incoming.join(dups.select(col("doc_id")), Seq("doc_id"), "left_semi")
-            .groupBy("batch_src").agg(count(lit(1)).as("n_flagged")),
-          Seq("batch_src"), "left")
-        .select(col("batch_src"), col("n_in"),
-          (coalesce(col("n_novel"), lit(0L)) + coalesce(col("n_flagged"), lit(0L))
-            === col("n_in")).as("partition_ok"),
-          (when(col("batch_src") === "recrawl", coalesce(col("n_flagged"), lit(0L)))
-            .otherwise(coalesce(col("n_novel"), lit(0L))).cast("double")
-            >= col("n_in") * 0.9).as("verdict_ok"))
-    }),
-
-    "q_char_diversity" -> ((s, d) => {
-      // char-level gibberish screen (r10): Simpson concentration +
-      // modal-char stats from a ZERO-shuffle sorted-run fold; the
-      // organic corpus is char-diverse, so one doc per 211 becomes a
-      // planted single-char flood (mirrored in the oracle) that must
-      // flag while prose does not. Simpson over entropy: rational in
-      // exact integer counts — no libm ln() boundary
-      val docs = Tables.documents(s, d).select(col("doc_id"),
-        when(pmod(col("doc_id"), lit(211L)) === 7L,
-          repeat(lit("a"), (lit(50L) + pmod(col("doc_id"), lit(100L))).cast("int")))
-          .otherwise(col("text")).as("text"))
-      graft.functions.CharDiversity.flagged(docs, "doc_id", "text")
-    }),
-
-    "q_robust_scale" -> ((s, d) =>
-      // robust median/IQR per-dim scaling (r10): rank-exact quartiles
-      // on the per-dim integerized value histogram (no interpolation,
-      // no float boundary), stats broadcast, narrow HOF scale with
-      // integer checksums — the heavy-tail-safe feature-prep pass
-      graft.ann.Standardize.robustReport(Tables.embeddings(s, d),
-        "vec_id", "embedding")),
-
-    "q_pca_project" -> ((s, d) => {
-      // PCA reduce-before-index: fit = ONE corpus moment pass
-      // (per-partition d×d blocks → driver Jacobi eigensolve, the
-      // MLlib computeCovariance shape), project = pure narrow HOF.
-      // rows-only: the eigensolve is not SQL-expressible; ground
-      // truth (planted axis recovery, orthonormality, full-rank
-      // isometry, trace invariance) lives in GroundTruthSpec.
-      // Gate boundary (r9 verdict item 1): the driver's pandas-based
-      // compare cannot sort/hash ndarray cells, so the projected
-      // vector is folded to scalars — its length and an md5 of the
-      // rounded CSV form (the q_bpe_encode sequence-checksum
-      // precedent). Sign-fixed columns (Pca.fitProject pins each
-      // eigenvector's max-|coord| positive) make the checksum
-      // partition-deterministic.
-      val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val dim = emb.select(size(col("embedding"))).as[Int](org.apache.spark.sql.Encoders.scalaInt).head()
-      graft.ann.Pca.fitProject(emb, "embedding", k = math.max(dim / 2, 2))
-        .select(col("vec_id"),
-          size(col("pca")).cast("long").as("n_pca"),
-          md5(concat_ws(",", transform(col("pca"),
-            x => pround(x, 4).cast("string"))).cast("binary")).as("pca_md5"))
-    }),
-
-    "q_pca_check" -> ((s, d) => {
-      // the PCA model's linear-algebra contracts as a DRIVER-CHECKED
-      // gate (r11): orthonormal components and sorted non-negative
-      // eigenvalues verified on the driver-local model (it is a pure
-      // function of the data — covariance rounded, signs
-      // canonicalized), plus the FULL-RANK ISOMETRY verified
-      // distributed: at k = d the projection must preserve every
-      // centered squared norm, so the corpus-sum ratio is 1 to
-      // rounding. The eigensolve itself stays rows-only
-      // (q_pca_project); these booleans are what ANY correct PCA
-      // must satisfy, oracle-pinned TRUE beside the exact count.
-      val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val dim = emb.select(size(col("embedding")))
-        .limit(1).head.getInt(0)
-      val m = graft.ann.Pca.fit(emb, "embedding", k = dim)
-      def dot(a: Array[Double], b: Array[Double]) =
-        a.zip(b).map { case (x, y) => x * y }.sum
-      val orth = (0 until m.k).forall { i =>
-        (0 until m.k).forall { j =>
-          math.abs(dot(m.components(i), m.components(j)) -
-            (if (i == j) 1.0 else 0.0)) < 1e-6 } }
-      val eigsOk = m.eigenvalues.forall(_ >= -1e-9) &&
-        m.eigenvalues.sliding(2).forall(p => p.length < 2 || p(0) >= p(1) - 1e-9)
-      val meanLit = typedlit(m.mean.toSeq)
-      val proj = graft.ann.Pca.projectCol(col("embedding"), m)
-      emb.select(
-          aggregate(zip_with(transform(col("embedding"), x => x.cast("double")),
-            meanLit, (x, mu) => (x - mu) * (x - mu)), lit(0.0), _ + _).as("cn"),
-          aggregate(transform(proj, y => y * y), lit(0.0), _ + _).as("pn"))
-        .agg(count(lit(1)).as("n_vectors"),
-          sum(col("cn")).as("scn"), sum(col("pn")).as("spn"))
-        .select(col("n_vectors"),
-          lit(orth).as("orthonormal_ok"),
-          lit(eigsOk).as("eigs_sorted_ok"),
-          ((col("scn") === 0 && col("spn") === 0) ||
-            abs(col("spn") / col("scn") - 1.0) < 1e-6).as("isometry_ok"))
-    }),
-
-    "q_dedup_minhash" -> ((s, d) =>
-      MinHashLSH.nearDupSummary(Tables.documents(s, d), "doc_id", "text")),
-
-    "q_minhash_check" -> ((s, d) => {
-      // minhash's pigeonhole guarantee as a DRIVER-CHECKED gate (r11):
-      // an exact copy has the identical signature, so every band
-      // matches, the pair is always a candidate, and the verify sees
-      // jaccard exactly 1.0 — for each planted recrawl copy AND its
-      // original, deterministically, at any SF. Probabilistic recall
-      // (threshold pairs) stays GroundTruthSpec's job; this pins the
-      // exact-dup floor the operator can never miss.
-      val base = Tables.documents(s, d).select("doc_id", "text")
-      val aug = withRecrawls(base)
-      val rep = MinHashLSH.nearDupSummary(aug, "doc_id", "text")
-      val cons = base.filter(pmod(col("doc_id"), lit(10L)) === 3L)
-        .select("doc_id")
-        .unionByName(aug.select("doc_id")
-          .join(base.select("doc_id"), Seq("doc_id"), "left_anti"))
-      rep.join(cons, Seq("doc_id"), "left_semi")
-        .agg(count(lit(1)).as("n_construction"),
-          (count(when(col("is_near_dup") && col("best_jaccard") === 1.0,
-            lit(1))) === count(lit(1))).as("all_exact_flagged"))
-    }),
-
-    "q_dedup_simhash" -> ((s, d) =>
-      SimHash.summary(Tables.documents(s, d), "doc_id", "text", maxHamming = 16)),
-
-    "q_simhash_check" -> ((s, d) => {
-      // simhash's pigeonhole guarantee, same pattern: identical text
-      // -> identical 64-bit fingerprint -> same chunk buckets ->
-      // candidate pair at hamming exactly 0, for every construction
-      // doc, deterministically
-      val base = Tables.documents(s, d).select("doc_id", "text")
-      val aug = withRecrawls(base)
-      val rep = SimHash.summary(aug, "doc_id", "text", maxHamming = 16)
-      val cons = base.filter(pmod(col("doc_id"), lit(10L)) === 3L)
-        .select("doc_id")
-        .unionByName(aug.select("doc_id")
-          .join(base.select("doc_id"), Seq("doc_id"), "left_anti"))
-      rep.join(cons, Seq("doc_id"), "left_semi")
-        .agg(count(lit(1)).as("n_construction"),
-          (count(when(col("min_hamming") === 0, lit(1))) === count(lit(1)))
-            .as("all_zero_hamming"))
-    }),
-
-    "q_ngram_jaccard" -> ((s, d) =>
-      NgramJaccard.summary(Tables.documents(s, d), "doc_id", "text", k = 3, maxDf = 100,
-        spreadN = Spread.scanFanout(s, d, "documents"))),
-
-    "q_dedup_clusters" -> ((s, d) =>
-      // pairs → CLUSTERS: alternating large/small-star connected
-      // components over the (oracle-green) ngram-jaccard pair list;
-      // component = min doc_id, unmatched docs are singletons
-      // maxDf=20 (vs the summary query's 100): candidate fanout is
-      // O(Σ df²), and a ≥0.5-jaccard pair that shares ONLY shingles
-      // common to 20+ docs cannot exist in practice — the lower cap
-      // cuts pair generation ~25× at identical output (oracle mirrors)
-      graft.dedup.Components.clusters(
-        Tables.documents(s, d), "doc_id",
-        NgramJaccard.pairs(Tables.documents(s, d), "doc_id", "text",
-          k = 3, threshold = 0.5, maxDf = 20,
-          spreadN = Spread.scanFanout(s, d, "documents")),
-        "id_a", "id_b")),
-
-    "q_dedup_embedding" -> ((s, d) => {
-      // random unit vectors never reach cosine 0.95, so the raw-table
-      // form flagged nothing — plant 20 scaled copies (cosine exactly
-      // 1.0 with their originals, and SRP buckets are scale-invariant)
-      // so the flag path runs at every SF; GroundTruthSpec verifies
-      // exact recall/precision of the same construction
-      val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val planted = emb.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(1.01f)).as("embedding"))
-      // auto-scaled plane count (fixed planes let mean bucket size
-      // grow linearly with the corpus — the SemDeDup fixed-C lesson);
-      // planted scaled copies share every SRP sign bit, so their
-      // recall is planes-invariant
-      Knn.nearDupByEmbeddingAuto(emb.unionByName(planted), threshold = 0.95)
-    }),
-
-    "q_embedding_dedup_check" -> ((s, d) => {
-      // the planted construction as a DRIVER-CHECKED gate (r11, the
-      // q_ann_recall_check pattern): scaled copies share every SRP
-      // sign bit, so each of the 40 construction vectors MUST flag
-      // with its counterpart as nearest at cosine exactly 1.0 —
-      // deterministic, not probabilistic recall. Oracle pins the
-      // booleans and compares the exact construction count.
-      val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val planted = emb.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 100000L).as("vec_id"),
-          transform(col("embedding"), x => x * lit(1.01f)).as("embedding"))
-      val rep = Knn.nearDupByEmbeddingAuto(emb.unionByName(planted),
-        threshold = 0.95)
-      val counterpartOk =
-        (col("vec_id") < 20 && col("nearest_id") === col("vec_id") + 100000L &&
-          col("nearest_sim") === 1.0) ||
-        (col("vec_id") >= 100000L && col("nearest_id") === col("vec_id") - 100000L &&
-          col("nearest_sim") === 1.0)
-      rep.filter(col("vec_id") < 20 || col("vec_id") >= 100000L)
-        .agg(count(lit(1)).as("n_construction"),
-          (count(when(col("is_near_dup"), lit(1))) === count(lit(1)))
-            .as("all_flagged"),
-          (count(when(counterpartOk, lit(1))) === count(lit(1)))
-            .as("all_matched"))
-    }),
-
-    "q_passage_dedup" -> ((s, d) =>
-      // passage-level (exact-substring-style) dedup stats, Lee et al.
-      // 2021: 8-word chunk grid, shared = hash in >=2 distinct docs.
-      // md5 keys here for the cross-engine oracle; production default
-      // is xxhash64 (8-byte shuffle keys)
-      graft.dedup.PassageDedup.stats(Tables.documents(s, d), "doc_id", "text",
-        w = 8, hash = c => md5(c.cast("binary")))),
-
-    "q_passage_clean" -> ((s, d) =>
-      // the corpus with cross-doc-shared passages removed, reassembled
-      // in chunk order (docs whose every passage is shared drop out)
-      graft.dedup.PassageDedup.dropShared(Tables.documents(s, d), "doc_id", "text",
-        w = 8, hash = c => md5(c.cast("binary")))),
-
-    "q_tfidf" -> ((s, d) =>
-      // top-3 TF-IDF terms per doc: tf and df from ONE tokenize pass,
-      // vocabulary join keyed by term (not broadcast — vocab is big at
-      // corpus scale), WindowGroupLimit top-k on the 4dp-rounded score
-      graft.operators.TfIdf.topTerms(Tables.documents(s, d), "doc_id", "text", k = 3,
-        spreadN = Spread.scanFanout(s, d, "documents"))),
-
-    "q_url_dedup" -> ((s, d) => {
-      // URL-canonicalization frontier dedup (r11): the corpus has no
-      // URL column, so the gate synthesizes four messy variants of
-      // the same page per id group — raw, SHOUTED scheme/host with
-      // www. + :443 + trailing slash, tracking params, kept params
-      // out of order + fragment — and the canonicalizer must collapse
-      // the first three and sort the fourth. The oracle constructs
-      // the EXPECTED canonical analytically from doc_id (it never
-      // parses), so every normalization rule is value-checked.
-      val docs = Tables.documents(s, d).select("doc_id", "source")
-      val gid = floor(col("doc_id") / 4).cast("long").cast("string")
-      val v = pmod(col("doc_id"), lit(4L))
-      val urls = docs.select(col("doc_id"),
-        when(v === 0, concat(lit("https://"), col("source"),
-            lit(".example.com/p/"), gid))
-          .when(v === 1, concat(lit("HTTPS://WWW."), upper(col("source")),
-            lit(".EXAMPLE.COM:443/p/"), gid, lit("/")))
-          .when(v === 2, concat(lit("https://"), col("source"),
-            lit(".example.com/p/"), gid, lit("?gclid=xyz&utm_source=feed")))
-          .otherwise(concat(lit("https://"), col("source"),
-            lit(".example.com/p/"), gid, lit("?b=2&a=1#frag")))
-          .as("url"))
-      graft.operators.UrlCanonical.dupReport(urls, "doc_id", "url")
-    }),
-
-    "q_verbatim_contamination" -> ((s, d) => {
-      // verbatim eval-leak scan (r11): 40-char eval snippets pasted
-      // into every (50k+1)-th training doc must flag through the
-      // broadcast contains-semi join — the exact-substring check that
-      // catches what token-boundary shingle overlap (q_decontaminate)
-      // cannot. Snippets shorter than 20 chars are excluded on both
-      // sides (contains(text, '') is vacuously true).
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val evalDocs = docs.filter(pmod(col("doc_id"), lit(50L)) === 0L)
-      val snippets = evalDocs
-        .select(substring(col("text"), 11, 40).as("snippet"))
-        .filter(length(col("snippet")) >= 20)
-      val planted = docs.filter(pmod(col("doc_id"), lit(50L)) =!= 0L)
-        .join(evalDocs.select((col("doc_id") + 1).as("doc_id"),
-          substring(col("text"), 11, 40).as("__sn")), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("__sn").isNotNull && length(col("__sn")) >= 20,
-            concat(col("text"), lit(" ... "), col("__sn")))
-            .otherwise(col("text")).as("text"))
-      val flagged = graft.pipeline.Decontaminate.verbatimFlagged(
-        planted, snippets, "text", "snippet")
-      planted.agg(count(lit(1)).as("n_train"))
-        .crossJoin(snippets.agg(count(lit(1)).as("n_eval")))
-        .crossJoin(flagged.agg(count(lit(1)).as("n_flagged")))
-    }),
-
-    "q_decontaminate" -> ((s, d) => {
-      // benchmark decontamination: every 10th doc plays the eval set,
-      // the rest are the training corpus (the 100 TB side — only the
-      // tiny eval shingle dim is broadcast, the corpus is not shuffled)
-      val docs = Tables.documents(s, d)
-      graft.pipeline.Decontaminate.stats(
-        docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", k = 3, threshold = 0.5)
-    }),
-
-    "q_text_clean" -> ((s, d) => {
-      // the synthetic corpus carries no URLs/emails/whitespace runs, so
-      // cleanText was a verified no-op — plant deterministic dirt on a
-      // quarter of the docs (oracle plants the identical dirt) so both
-      // the transform and the no-op path are value-checked
-      val dirty = when(pmod(col("doc_id"), lit(4L)) === 1L,
-        concat(col("text"), lit("  see https://example.com/d"),
-          col("doc_id").cast("string"), lit("  or  mail team"),
-          col("doc_id").cast("string"), lit("@corp.io  ")))
-        .otherwise(col("text"))
-      Tables.documents(s, d).select(col("doc_id"),
-        length(TF.cleanText(dirty)).cast("long").as("clean_len"),
-        (TF.cleanText(dirty) =!= dirty).as("changed"))
-    }),
-
-    "q_unicode_clean" -> ((s, d) => {
-      // the synthetic corpus is pure ASCII, so unicodeClean would be a
-      // verified no-op — plant a deterministic mojibake specimen on a
-      // quarter of the docs (decomposed accent, NBSP, zero-width
-      // space, BEL control; oracle plants the identical codepoints):
-      // NFC must compose e+U+0301, the space class must map NBSP to
-      // ' ', and the zero-width/control classes must delete
-      val planted = when(pmod(col("doc_id"), lit(4L)) === 1L,
-        concat(col("text"), lit(" caf"), lit("e\u0301"), lit(" x"), // decomposed e+acute
-          lit("\u00A0"), lit("a"), lit("\u200B"), lit("b"), // NBSP, zero-width
-          lit("\u0007"), lit("c"))) // BEL control
-        .otherwise(col("text"))
-      val cleaned = TF.unicodeClean(planted)
-      // NO spread (r13 A/B): the clean expression fires on 1/4 of the
-      // docs, so the fan-out exchange measured flat — scan-pure stays
-      Tables.documents(s, d).select(col("doc_id"),
-        length(cleaned).cast("long").as("clean_len"),
-        (cleaned =!= planted).as("changed"),
-        md5(cleaned.cast("binary")).as("clean_md5"))
-    }),
-
-    "q_fingerprint" -> ((s, d) =>
-      // rolling polynomial hash only — contentHash (xxhash64) has no
-      // cross-engine oracle and is exercised by the dedup paths/specs
-      Tables.documents(s, d).select(col("doc_id"),
-        TF.fingerprint(col("text")).as("rolling_fp"))),
-
-    "q_pii_redact" -> ((s, d) => {
-      // the synthetic corpus carries no PII, so the gate plants a
-      // deterministic specimen of each type (derived from doc_id) and
-      // the oracle plants the identical one — the regexes and the
-      // full redacted text are then compared byte-for-byte
-      import graft.functions.{PiiFunctions => P}
-      val planted = concat(col("text"),
-        lit(" contact user"), col("doc_id").cast("string"), lit("@example.com"),
-        lit(" ip 10.0."), pmod(col("doc_id"), lit(256L)).cast("string"),
-        lit("."), pmod(col("doc_id") * 7, lit(256L)).cast("string"),
-        lit(" ssn 123-45-"),
-        lpad(pmod(col("doc_id"), lit(10000L)).cast("string"), 4, "0"),
-        lit(" call 555-867-"),
-        lpad(pmod(col("doc_id") * 13, lit(10000L)).cast("string"), 4, "0"),
-        lit(" card 4111-1111-1111-"),
-        lpad(pmod(col("doc_id") * 31, lit(10000L)).cast("string"), 4, "0"))
-      Tables.documents(s, d).select(col("doc_id"),
-        P.countEmails(planted).as("n_email"),
-        P.countCards(planted).as("n_card"),
-        P.countSsns(planted).as("n_ssn"),
-        P.countPhones(planted).as("n_phone"),
-        P.countIps(planted).as("n_ip"),
-        P.redactPii(planted).as("redacted"))
-    }),
-
-    "q_multimodal" -> ((s, d) => {
-      // REAL decode in the gate: synthetic-but-genuine PNGs (imageio)
-      // and WAVs (javax.sound) through the mapPartitions feature
-      // extractor; the oracle pins the A-PRIORI properties — known
-      // encode dimensions/duration and feature invariants (luminance
-      // histogram sums to 1; RMS envelope within [0,1] and non-silent)
-      // — never golden bytes, which would track the encoder version
-      import graft.multimodal.BinaryColumns
-      val media = BinaryColumns.syntheticImages(s, 8)
-        .unionByName(BinaryColumns.syntheticAudio(s, 4)
-          .withColumn("media_id", col("media_id") + lit(100L)))
-      BinaryColumns.extractFeatures(media).select(
-        col("media_id"), col("media_type"), col("width"), col("height"),
-        col("duration_ms"),
-        when(col("media_type") === "image",
-          abs(aggregate(col("feature"), lit(0.0), (a, x) => a + x) - lit(1.0)) < 0.001)
-          .otherwise(
-            aggregate(col("feature"), lit(0.0), (a, x) => a + x) > lit(0.0) &&
-              !exists(col("feature"), x => x < lit(0.0f) || x > lit(1.0f)))
-          .as("feat_ok"))
-    }),
-
-    "q_pagerank" -> ((s, d) => {
-      // URL-graph PageRank (r12): crawl-prioritization authority over
-      // a deterministic link graph — every page links to its decade
-      // hub (node div 10 * 10) and two modular neighbors, so hub
-      // authority must emerge from the iteration, not the input.
-      // 10 damped power iterations in nano-integer rank units with
-      // integral division everywhere (operators.PageRank), so the
-      // DuckDB oracle replays all 10 iterations bit-for-bit as
-      // chained CTEs; top-20 tie-broken (rank desc, node).
-      val docs = Tables.documents(s, d).select(col("doc_id").as("node"))
-      val n = docs.count().max(1L)
-      val edges = docs.select(col("node").as("src"), explode(array(
-          expr("node div 10") * lit(10L),
-          pmod(col("node") * lit(7L) + lit(1L), lit(n)),
-          pmod(col("node") * lit(13L) + lit(2L), lit(n)))).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-      graft.operators.PageRank.ranks(docs, edges, iterations = 10)
-        .orderBy(col("rank").desc, col("node").asc).limit(20)
-        .select(col("node"), col("rank").as("rank_nano"))
-    }),
-
-    "q_image_phash" -> ((s, d) => {
-      // multimodal NEAR-dup (r12): perceptual dHash over REAL decoded
-      // pixels + the SimHash band-bucket join, threshold hamming<=1.
-      // The planted set makes the oracle a-priori EXACT: dHash bits
-      // are local (no global-mean coupling), so on a gradient image
-      // every planted black grid cell flips exactly one known bit —
-      // per base: a byte-identical copy (hamming 0), a one-extra-cell
-      // variant (hamming 1), and distinct bases 2+ bits apart, so the
-      // screen must return exactly the 4 planted trios.
-      import graft.multimodal.ImagePHash
-      val media = ImagePHash.plantedGradientMedia(s, 4)
-      ImagePHash.nearDupPairs(ImagePHash.hashMedia(media), maxHamming = 1)
-    }),
-
-    "q_multimodal_video" -> ((s, d) => {
-      // the VIDEO seam: decode is stubbed (no codec libs in this
-      // environment — the stub body is the only replacement point on
-      // a real cluster), so the gate pins everything AROUND the stub:
-      // typed metadata passthrough (codec, declared duration), frame
-      // sampling shape (n frames, bounded frame bytes), and the stub
-      // feature's contract (8 values in [0,1]). All a-priori values.
-      import graft.multimodal.BinaryColumns
-      val media = BinaryColumns.syntheticMedia(s, 12)
-        .filter(col("media_type") === "video")
-      val feats = BinaryColumns.extractFeatures(media)
-      val frames = BinaryColumns.sampleFrames(media, n = 4)
-        .groupBy("media_id").agg(count(lit(1)).as("n_frames"),
-          max(col("frame_bytes")).as("max_frame_bytes"))
-      feats.join(frames, "media_id")
-        .join(media.select(col("media_id"), col("meta.codec").as("codec"),
-          col("meta.duration_ms").as("meta_duration_ms")), "media_id")
-        .select(col("media_id"), col("media_type"), col("n_bytes"),
-          col("width"), col("height"), col("duration_ms"),
-          col("codec"), col("meta_duration_ms"),
-          col("n_frames"), col("max_frame_bytes"),
-          (size(col("feature")) === 8 &&
-            !exists(col("feature"), x => x < lit(0.0f) || x > lit(1.0f)))
-            .as("feat_ok"))
-    }),
-
-    "q_chunk_overlap" -> ((s, d) =>
-      // RAG-style overlapping chunking: 8-word windows every 4 words;
-      // one narrow tokenize+HOF pass, posexplode carries the ordinal
-      Tables.documents(s, d)
-        .select(col("doc_id"), posexplode(TF.chunks(col("text"), w = 8, stride = 4))
-          .as(Seq("chunk_id", "chunk")))
-        .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
-          col("chunk"))),
-
-    "q_group_percentiles" -> ((s, d) => {
-      // exact per-group percentiles by RANK SELECTION (the value at
-      // floor(p·(n−1)) in sorted order) — no interpolation, so the
-      // result is an actual data element and engine-portable where
-      // interpolated quantiles differ in final-ulp arithmetic. At
-      // 100 TB swap for approx_percentile (fixed-size mergeable
-      // sketch); this is the exact-oracle form
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy("value")
-      val ranked = Tables.events(s, d)
-        .select(col("event_type"), col("value"))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("event_type")))
-      val ps = Seq(0.5, 0.95, 0.99)
-      ps.map(p => ranked
-          .filter(col("rn") - 1 === floor(lit(p) * (col("n") - 1)))
-          .select(col("event_type"), lit(p).as("p"), col("value")))
-        .reduce(_ unionAll _)
-    }),
-
-    "q_winsorize" -> ((s, d) =>
-      // quantile clipping of lineitem prices at [p01, p99]: rank-exact
-      // cent-long bounds (no cross-engine quantile interpolation), 1-row
-      // bounds broadcast + narrow clamp; report aggregates (clip counts,
-      // exact cent-sum, extremes) prove bounds AND clamped values — all
-      // integer math until the final display division
-      Normalizer.winsorizeCentRank(
-        Tables.lineitem(s, d).select("l_orderkey", "l_linenumber", "l_extendedprice"),
-        "l_extendedprice", 0.01, 0.99)
-        .agg(
-          sum(when(col("__clipped") === -1L, 1L).otherwise(0L)).as("n_clip_lo"),
-          sum(when(col("__clipped") === 1L, 1L).otherwise(0L)).as("n_clip_hi"),
-          (sum(col("l_extendedprice_wc")).cast("double") / 100.0).as("sum_w"),
-          (min(col("l_extendedprice_wc")).cast("double") / 100.0).as("min_w"),
-          (max(col("l_extendedprice_wc")).cast("double") / 100.0).as("max_w"))),
-
-    "q_hopping_windows" -> ((s, d) =>
-      // overlapping (hopping) event-time windows: 1h length, 30min
-      // slide — every event lands in exactly two windows; cent-long
-      // sums keep the totals portable
-      Tables.events(s, d)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          (sum(floor(col("value") * lit(100.0) + lit(0.5)).cast("long"))
-            .cast("double") / 100.0).as("sum_value"))
-        .select(col("window.start").as("window_start"), col("event_type"),
-          col("n_events"), col("sum_value"))),
-
-    "q_active_users_7d" -> ((s, d) => {
-      // trailing-7-day active users (WAU): per-(day,user) distinct
-      // first (events collapse to at most days×users rows), then each
-      // activity day contributes to the 7 windows it trails into —
-      // a ×7 fanout of the COLLAPSED table, never the raw events; a
-      // distinct-count over a RANGE window isn't supported in any
-      // engine, and this is the standard scalable rewrite
-      val daily = Tables.events(s, d)
-        .select(date_trunc("day", col("ts")).cast("date").as("day"), col("user_id"))
-        .distinct()
-      val days = daily.select(col("day").as("window_day")).distinct()
-      daily
-        .select(explode(sequence(lit(0), lit(6))).as("off"), col("day"), col("user_id"))
-        .select(date_add(col("day"), col("off")).as("window_day"), col("user_id"))
-        .join(days, Seq("window_day"), "left_semi")
-        .groupBy("window_day")
-        .agg(count_distinct(col("user_id")).as("active_users"))
-        .select(date_format(col("window_day"), "yyyy-MM-dd").as("window_day"),
-          col("active_users"))
-    }),
-
-    "q_rolling_zscore" -> ((s, d) =>
-      // trailing-window anomaly scores per user: exact integer moment
-      // sums (Σv, Σv²) make the variance replay/engine-identical.
-      // Uniform values never cross 3 sigma, and a |z| > 3 needs a
-      // window population of at least 11 (max |z| in a sample of n is
-      // (n-1)/sqrt(n)) — at ~67 events/user/month that means a 7-DAY
-      // trailing window (n~15), and the gate plants a deterministic
-      // 50x spike on ~0.1% of events (oracle identical) so the
-      // anomaly flag is exercised, not constant
-      Resample.rollingZscore(
-        Tables.events(s, d).select(col("event_id"), col("user_id"), col("ts"),
-          when(pmod(col("event_id"), lit(997L)) === 0L, col("value") * 50.0)
-            .otherwise(col("value")).as("value")),
-        Seq("user_id"), "ts", "value", windowSec = 604800)
-        .select(col("event_id"), col("user_id"), col("n_window"),
-          col("zscore"), col("is_anomaly"))),
-
-    "q_funnel" -> ((s, d) =>
-      // strictly-ordered conversion funnel: earliest view, earliest
-      // click AFTER it, earliest purchase after that — per-stage
-      // min(ts) aggregations with fixed-size state (never a collected
-      // per-user event array)
-      graft.operators.Funnel.funnel(Tables.events(s, d),
-        "user_id", "event_type", "ts", Seq("view", "click", "purchase"))),
-
-    "q_cohort_retention" -> ((s, d) =>
-      // weekly cohorts by first-seen week x activity-week offset
-      graft.operators.Funnel.cohortRetention(Tables.events(s, d), "user_id", "ts")),
-
-    "q_rolling_agg" -> ((s, d) =>
-      // rolling 1-hour per-user features (trailing count + sum): one
-      // shuffle on user_id, sorted RANGE-frame scan in-partition, sum
-      // carried as exact cent-longs (float frame-summation order is
-      // engine-internal)
-      Resample.rolling(
-        Tables.events(s, d).select("event_id", "user_id", "ts", "value"),
-        Seq("user_id"), "ts", "value", windowSec = 3600,
-        spreadN = Spread.scanFanout(s, d, "events"))
-        .select(col("event_id"), col("user_id"), col("n_window"), col("sum_window"))),
-
-    // ===== H. Streaming (batch-equivalent forms) ========================
-    "q_event_windows" -> ((s, d) => Events.windowedAggBatch(Tables.events(s, d))),
-
-    "q_event_windows_approx" -> ((s, d) =>
-      // the HLL flip for the exact-distinct engine floor (r11 verdict
-      // item 4): same windowed agg with approx_count_distinct user
-      // counts — sketches partial-agg map-side, so the exchange
-      // carries |windows×types| KB rows instead of ~n user rows (the
-      // 100 TB form). rows-only by nature (estimates aren't cross-
-      // engine); the envelope gate below and StreamingSpec bound it.
-      // Benched under extras with a comparable-work DuckDB baseline
-      // (approx_count_distinct — DuckDB's own HLL on the same work)
-      Events.windowedAggApprox(Tables.events(s, d))),
-
-    "q_event_windows_approx_check" -> ((s, d) =>
-      // partial-oracle envelope for the HLL flip: exact n_events and
-      // exact distinct columns, with the 4σ (20%-or-±5) hard envelope
-      // pinned TRUE (the q_lsh_ingest_dedup upgrade pattern; rsd 0.05
-      // is a σ, so the tighter 95%-within-2σ claim lives in spec —
-      // see Events.windowedAggApproxCheck calibration note)
-      Events.windowedAggApproxCheck(Tables.events(s, d))),
-
-    "q_stream_windows" -> ((s, d) => Events.windowedAggFileStream(s, d)),
-
-    "q_sessionize" -> ((s, d) => Events.sessionizeBatch(Tables.events(s, d), 30)),
-
-    "q_ewma_anomaly" -> ((s, d) =>
-      // EWMA ingest-volume smoothing + relative-jump spikes (r11):
-      // alpha pinned to 1/2 so the recursion is one IEEE add + one
-      // exact power-of-two scale per day, replayed bit-for-bit by the
-      // oracle's recursive CTE — a full value oracle for a smoother
-      // (operators.Ewma: one daily-agg exchange, then bounded
-      // per-type prefix folds; no window-scan primitive, no collect)
-      graft.operators.Ewma.dailySpikes(Tables.events(s, d), "event_type", "ts")),
-
-    "q_chat_assemble" -> ((s, d) =>
-      // conversation/SFT transcript assembly (r11): inactivity-gapped
-      // sessions reassembled into ordered training documents — ONE
-      // user-keyed exchange serves both the session window and the
-      // per-session ordered concat (the agg key starts with the
-      // window's partition key). Turn text uses cent-long values
-      // (double→string formatting is not portable across engines);
-      // the transcript rides as (n_turns, n_chars, md5)
-      graft.operators.ChatAssembly.transcripts(
-        Tables.events(s, d), "user_id", "ts", "event_id",
-        turn = concat(col("event_type"), lit(":"),
-          floor(col("value") * lit(100.0) + lit(0.5)).cast("long").cast("string")),
-        gapMinutes = 30, sep = "\n",
-        spreadN = Spread.scanFanout(s, d, "events"))),
-
-    "q_sessionize_native" -> ((s, d) =>
-      // Spark's built-in session_window: overlapping [ts, ts+gap)
-      // windows merge, so the gap rule is strict-< and the reported
-      // end is last_event + gap (vs sessionizeBatch's max(ts) end and
-      // seconds-truncated >-gap rule — both forms offered, each with
-      // its exact oracle)
-      Tables.events(s, d)
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum("value"), 2).as("sum_value"))
-        .select(col("user_id"), col("sw.start").as("session_start"),
-          col("sw.end").as("session_end"), col("n_events"), col("sum_value"))),
-
-    "q_sessionize_stream" -> ((s, d) => Events.sessionizeFileStream(s, d, 30)),
-
-    "q_stream_join" -> ((s, d) => Events.attributionFileStream(s, d, 30)),
-
-    "q_stream_join_outer" -> ((s, d) =>
-      // stream-stream LEFT OUTER with watermark-bounded state: every
-      // purchase emits exactly once, null click columns when no click
-      // landed in the 30-minute window; unmatched rows flush once the
-      // staged sentinel feed drags the watermark past their eviction
-      // point (see Events.attributionOuterFileStream)
-      Events.attributionOuterFileStream(s, d, 30)),
-
-    "q_stream_dedup" -> ((s, d) => Events.dedupFileStream(s, d)),
-
-    "q_stream_ingest_dedup" -> ((s, d) =>
-      // continuous-crawl ingest dedup: a file STREAM of incoming
-      // batches (full recrawl + per-id-salted fresh docs) anti-joined
-      // against the static historical corpus by content hash — the
-      // recrawl must vanish, the fresh batch must survive
-      graft.streaming.Ingest.ingestDedupFileStream(s, d)),
-
-    "q_stream_lsh_ingest" -> ((s, d) =>
-      // streaming NEAR-dup ingest (r11 verdict item 6): the persisted
-      // LSH index composed with foreachBatch — each micro-batch
-      // screens against the index's current state and appends its
-      // delta; the read-back verdicts must be per-doc INVARIANT to
-      // the batch boundaries (equal to a one-shot screen), with the
-      // q_lsh_ingest_dedup partial-oracle shape: n_in exact,
-      // partition/verdict/invariance booleans pinned TRUE
-      graft.streaming.Ingest.lshIngestFileStream(s, d)),
-
-    "q_stream_sketch_store" -> ((s, d) =>
-      // streaming maintenance of the persisted HLL sketch store
-      // (r11): each micro-batch folds once and merges into the
-      // standing store (lossless union — identical to a one-shot
-      // build no matter where batch boundaries fall); the read-back
-      // estimates sit inside the 10% envelope of exact per-type
-      // distincts, with exact row counts the oracle's compare side
-      graft.streaming.Events.sketchStoreFileStream(s, d)),
-
-    "q_stream_upsert" -> ((s, d) =>
-      // streaming MERGE sink gated end-to-end (r10 verdict item 7):
-      // three changeset files (snapshot / repriced updates /
-      // tombstones) stream one per micro-batch through
-      // Events.upsertSink; the read-back state table must equal the
-      // one-shot batch MERGE — the q_upsert oracle, shared verbatim
-      graft.streaming.Events.upsertFileStream(s, d)),
-
-    "q_stream_exactly_once" -> ((s, d) =>
-      // exactly-once parquet sink across a restart (r10 verdict item
-      // 7): the same AvailableNow query runs twice on one checkpoint;
-      // committed batches must not reprocess, so the read-back
-      // per-type aggregate equals ONE clean copy of the feed (the
-      // oracle) — a broken restart doubles every count
-      graft.streaming.Events.exactlyOnceFileStream(s, d)),
-
-    "q_corrupt_capture" -> ((s, d) => {
-      // corrupt-record quarantine read gated end-to-end (r10 verdict
-      // item 7): a CSV feed where every 5th key carries a non-numeric
-      // value in a LongType column, read PERMISSIVE with
-      // columnNameOfCorruptRecord — bad rows land whole in the capture
-      // column (nothing is silently dropped: good + bad = input), and
-      // the good/bad split is deterministic, so the oracle computes it
-      // straight from the clean table
-      import org.apache.spark.sql.types._
-      val tmp = s"/tmp/graft_corrupt_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
-      Tables.nation(s, d).select(
-        when(pmod(col("n_nationkey"), lit(5)) === 2,
-          concat(lit("BAD_"), col("n_name"), lit(","), col("n_name"),
-            lit(","), col("n_regionkey").cast("string")))
-          .otherwise(concat_ws(",", col("n_nationkey"), col("n_name"),
-            col("n_regionkey"))).as("value"))
-        .coalesce(1).write.mode("overwrite").text(tmp)
-      val schema = StructType(Seq(
-        StructField("n_nationkey", LongType), StructField("n_name", StringType),
-        StructField("n_regionkey", LongType)))
-      Readers.csvWithCorruptCapture(s, tmp, schema, header = false)
-        .agg(count(when(col("_corrupt_record").isNull, lit(1))).as("n_good"),
-          count(col("_corrupt_record")).as("n_bad"),
-          sum(when(col("_corrupt_record").isNull, col("n_nationkey")))
-            .as("sum_good_keys"))
-    }),
-
-    "q_observe_metrics" -> ((s, d) => {
-      // Dataset.observe in-flight metrics gated end-to-end (r10
-      // verdict item 7): the silver chain runs ONCE with zero extra
-      // passes while CollectMetrics accumulates rows_in / rows_out /
-      // null_dates / unenriched; a planted unparseable date on every
-      // 211th key makes null_dates a real signal, and the orphan
-      // custkeys make unenriched one. The observed values are folded
-      // to a one-row frame the oracle recomputes from the raw tables.
-      val raw = graft.pipeline.Medallion.rawFromOrders(s, d)
-        .withColumn("FechaMatricula",
-          when(pmod(col("Matricula"), lit(211L)) === 5L, lit("not a date"))
-            .otherwise(col("FechaMatricula")))
-      val catalog = Tables.customer(s, d).select(col("c_custkey"), col("c_name"))
-      val (out, inObs, outObs) = graft.pipeline.Medallion.silverObserved(
-        raw, catalog, "c_custkey", "c_name", 2026)
-      out.foreach(_ => ()) // the ONE action; listeners fill the observations
-      val in = inObs.get
-      val o = outObs.get
-      import s.implicits._
-      Seq((in("rows_in").asInstanceOf[Long], o("rows_out").asInstanceOf[Long],
-        o("null_dates").asInstanceOf[Long], o("unenriched").asInstanceOf[Long]))
-        .toDF("rows_in", "rows_out", "null_dates", "unenriched")
-    })
-  )
-
-  // ---------------------------------------------------------------
-  // DuckDB oracles (driver runs these on the same parquet tables)
-  // ---------------------------------------------------------------
-
-  // shared CTE body for the two drift gates: even-doc reference vs
-  // odd-doc current snapshot with the planted 1.25x length shift,
-  // 10 reference-anchored equi-width buckets, Laplace(+0.5) smoothing
-  private val driftBucketsSql =
-    """ref AS (
-           SELECT CAST(n_chars AS DOUBLE) AS v FROM documents WHERE doc_id % 2 = 0
-         ), cur AS (
-           SELECT CAST(n_chars AS DOUBLE) * 1.25 AS v FROM documents WHERE doc_id % 2 = 1
-         ), rng AS (SELECT min(v) AS lo, max(v) AS hi FROM ref),
-         rb AS (
-           SELECT greatest(0, least(9, CASE WHEN hi = lo THEN 0
-             ELSE CAST(floor((v - lo) / ((hi - lo) / 10)) AS INT) END)) AS bucket
-           FROM ref, rng
-         ), cb AS (
-           SELECT greatest(0, least(9, CASE WHEN hi = lo THEN 0
-             ELSE CAST(floor((v - lo) / ((hi - lo) / 10)) AS INT) END)) AS bucket
-           FROM cur, rng
-         ), rc AS (SELECT bucket, count(*) AS ref_count FROM rb GROUP BY 1),
-         cc AS (SELECT bucket, count(*) AS cur_count FROM cb GROUP BY 1),
-         spine AS (SELECT unnest(range(0, 10)) AS bucket),
-         joined AS (
-           SELECT CAST(s.bucket AS BIGINT) AS bucket,
-             CAST(COALESCE(rc.ref_count, 0) AS BIGINT) AS ref_count,
-             CAST(COALESCE(cc.cur_count, 0) AS BIGINT) AS cur_count
-           FROM spine s
-           LEFT JOIN rc ON s.bucket = rc.bucket
-           LEFT JOIN cc ON s.bucket = cc.bucket
-         ), tot AS (
-           SELECT CAST(sum(ref_count) AS BIGINT) AS ref_n,
-                  CAST(sum(cur_count) AS BIGINT) AS cur_n
-           FROM joined
-         ), terms AS (
-           SELECT bucket, ref_count, cur_count, ref_n, cur_n,
-             (ref_count + 0.5) / (ref_n + 5.0) AS p,
-             (cur_count + 0.5) / (cur_n + 5.0) AS q
-           FROM joined, tot
-         )"""
-
-  private val v1Sql =
-    """SELECT c_mktsegment, count(DISTINCT o_custkey) AS total_active
-       FROM orders JOIN customer ON o_custkey = c_custkey
-       WHERE upper(trim(o_orderstatus)) = 'O'
-       GROUP BY c_mktsegment
-       ORDER BY total_active DESC, c_mktsegment ASC"""
-
-  private val v2Sql =
-    """SELECT n_name,
-         floor(avg(2026 - year(o_orderdate)) * 100.0 + 0.5) / 100.0 AS avg_age,
-         count(DISTINCT c_custkey) AS total_customers
-       FROM customer
-         JOIN nation ON c_nationkey = n_nationkey
-         JOIN orders ON o_custkey = c_custkey
-       GROUP BY n_name
-       HAVING count(DISTINCT c_custkey) > 5
-       ORDER BY avg_age DESC, n_name ASC
-       LIMIT 5"""
-
-  private val v3Sql =
-    """SELECT c_mktsegment,
-         count(DISTINCT CASE WHEN upper(trim(o_orderstatus)) = 'O' THEN o_custkey END)
-           AS active_customers,
-         count(DISTINCT o_custkey) AS total_customers,
-         floor(count(DISTINCT CASE WHEN upper(trim(o_orderstatus)) = 'O' THEN o_custkey END)
-           * 100.0 / count(DISTINCT o_custkey) * 100.0 + 0.5) / 100.0 AS rate_pct
-       FROM orders JOIN customer ON o_custkey = c_custkey
-       GROUP BY c_mktsegment
-       ORDER BY rate_pct DESC, c_mktsegment ASC"""
-
-  private val v4Sql =
-    """WITH base AS (
-         SELECT c_custkey, c_mktsegment, o_orderkey, o_orderdate, o_totalprice
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         WHERE o_orderstatus IN ('O','F','P') AND o_totalprice IS NOT NULL
-       ), dedup AS (
-         SELECT *, row_number() OVER (
-           PARTITION BY c_custkey
-           ORDER BY o_orderdate DESC NULLS LAST, o_orderkey DESC) AS rn
-         FROM base
-       )
-       SELECT c_custkey, c_mktsegment,
-         CAST(year(o_orderdate) AS BIGINT) AS last_order_year,
-         CAST(CASE WHEN year(o_orderdate) >= 1998 THEN 1 ELSE 0 END AS BIGINT) AS renovo,
-         CASE WHEN o_totalprice < 50000 THEN 'small'
-              WHEN o_totalprice < 150000 THEN 'medium'
-              ELSE 'large' END AS value_segment,
-         CAST(2026 - year(o_orderdate) AS BIGINT) AS years_since_order
-       FROM dedup WHERE rn = 1"""
-
-  // shared by q_upsert (batch MERGE) and q_stream_upsert (the
-  // streaming sink must converge to the identical state table)
-  private val upsertMergeSql =
-    """WITH snap AS (
-         SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus,
-           1 AS version, false AS deleted, 0 AS src
-         FROM orders
-       ), ups AS (
-         SELECT o_orderkey, o_custkey, o_totalprice * 2 AS o_totalprice,
-           'U' AS o_orderstatus, 2 AS version, false AS deleted, 1 AS src
-         FROM orders WHERE o_orderkey % 97 = 0
-       ), dels AS (
-         SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus,
-           3 AS version, true AS deleted, 1 AS src
-         FROM orders WHERE o_orderkey % 101 = 0
-       ), u AS (
-         SELECT * FROM snap UNION ALL SELECT * FROM ups UNION ALL SELECT * FROM dels
-       ), r AS (
-         SELECT *, row_number() OVER (
-           PARTITION BY o_orderkey ORDER BY version DESC, src DESC) AS rn
-         FROM u
-       )
-       SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus,
-         CAST(version AS BIGINT) AS version
-       FROM r WHERE rn = 1 AND NOT deleted"""
-
-  private val corpusPrepSql =
-    """WITH c AS (
-           SELECT doc_id,
-             trim(regexp_replace(regexp_replace(
-               regexp_replace(text, 'https?://\S+', ' ', 'g'),
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', ' ', 'g'),
-               '\s+', ' ', 'g')) AS clean
-           FROM documents
-         ), t AS (
-           SELECT doc_id, clean,
-             CASE WHEN length(trim(lower(clean))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(clean)), '\s+') END AS toks
-           FROM c
-         ), s AS (
-           SELECT doc_id, clean,
-             floor((least(CAST(len(toks) AS DOUBLE) / 50.0, 1.0)
-               + (CASE WHEN length(clean) = 0 THEN 0.0
-                       ELSE CAST(len(regexp_extract_all(clean, '[A-Za-z]')) AS DOUBLE) / length(clean) END)
-               + least((CASE WHEN len(toks) = 0 THEN 0.0
-                             ELSE CAST(len(list_filter(toks,
-                                    x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE)
-                                  / len(toks) END) * 4.0, 1.0)
-               ) / 3.0 * 10000.0 + 0.5) / 10000.0 AS quality,
-             len(list_filter(toks, x -> list_contains(['the','a'], x))) AS s_en,
-             len(list_filter(toks, x -> list_contains(['el','la','los'], x))) AS s_es,
-             len(list_filter(toks, x -> list_contains(['der','die','und'], x))) AS s_de,
-             len(list_filter(toks, x -> list_contains(['le','les','et'], x))) AS s_fr,
-             CAST(len(toks) AS BIGINT) AS n_tokens
-           FROM t
-         ), p AS (
-           SELECT doc_id, clean, quality, n_tokens,
-             CASE WHEN greatest(s_en, s_es, s_de, s_fr) = 0 THEN 'und'
-                  WHEN s_en = greatest(s_en, s_es, s_de, s_fr) THEN 'en'
-                  WHEN s_es = greatest(s_en, s_es, s_de, s_fr) THEN 'es'
-                  WHEN s_de = greatest(s_en, s_es, s_de, s_fr) THEN 'de'
-                  ELSE 'fr' END AS lang_pred
-           FROM s
-         ), g AS (
-           SELECT * FROM p
-           WHERE quality >= 0.3 AND lang_pred IN ('en') AND n_tokens >= 10
-         )
-         SELECT doc_id, quality, lang_pred, n_tokens FROM g
-         WHERE doc_id IN (SELECT min(doc_id) FROM g GROUP BY md5(clean))"""
-
-  /** q_pagerank's oracle: the SAME graph construction and all
-    * `iters` nano-integer damped power iterations, unrolled as one
-    * chained CTE per iteration (standard SQL — no reliance on
-    * aggregation inside a recursive CTE). `//` is DuckDB's integral
-    * division, mirroring Spark's `div`; every quantity is a
-    * non-negative integer so both engines truncate identically.
-    */
-  private def pagerankOracleSql(iters: Int): String = {
-    val iterCtes = (1 to iters).map { i =>
-      s"""pr$i AS (
-         |  SELECT n.node,
-         |    CAST((1000000000 - 850000000) // cnt
-         |      + (850000000 * COALESCE(s.cs, 0)) // 1000000000 AS BIGINT) AS rank
-         |  FROM nodes n CROSS JOIN nn
-         |  LEFT JOIN (
-         |    SELECT e.dst, sum(p.rank // o.deg) AS cs
-         |    FROM edges e JOIN outd o ON e.src = o.src
-         |      JOIN pr${i - 1} p ON e.src = p.node
-         |    GROUP BY e.dst
-         |  ) s ON n.node = s.dst
-         |)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH nn AS (SELECT count(*) AS cnt FROM documents),
-       |nodes AS (SELECT doc_id AS node FROM documents),
-       |edges AS (
-       |  SELECT DISTINCT src, dst FROM (
-       |    SELECT doc_id AS src, (doc_id // 10) * 10 AS dst FROM documents
-       |    UNION ALL
-       |    SELECT doc_id, (doc_id * 7 + 1) % cnt FROM documents, nn
-       |    UNION ALL
-       |    SELECT doc_id, (doc_id * 13 + 2) % cnt FROM documents, nn
-       |  ) AS raw(src, dst) WHERE src <> dst
-       |),
-       |outd AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
-       |pr0 AS (SELECT node, CAST(1000000000 // cnt AS BIGINT) AS rank
-       |        FROM nodes, nn),
-       |$iterCtes
-       |SELECT node, CAST(rank AS BIGINT) AS rank_nano FROM pr$iters
-       |ORDER BY rank DESC, node ASC LIMIT 20""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2) AS sum_qty,
-           round(sum(l_extendedprice), 2) AS sum_base_price,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-           round(avg(l_quantity), 2) AS avg_qty,
-           round(avg(l_discount), 4) AS avg_disc,
-           count(*) AS count_order
-         FROM lineitem
-         WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-         GROUP BY l_returnflag, l_linestatus""",
-
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-         FROM customer JOIN orders ON c_custkey = o_custkey
-                       JOIN lineitem ON o_orderkey = l_orderkey
-         WHERE upper(trim(c_mktsegment)) = 'BUILDING'
-           AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
-           AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
-         GROUP BY l_orderkey, strftime(o_orderdate, '%Y-%m-%d')
-         ORDER BY revenue DESC, l_orderkey ASC
-         LIMIT 10""",
-
-    "q5_local_supplier" ->
-      """SELECT n_name,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-         FROM orders
-           JOIN lineitem ON o_orderkey = l_orderkey
-           JOIN supplier ON l_suppkey = s_suppkey
-           JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-           JOIN nation ON c_nationkey = n_nationkey
-           JOIN region ON n_regionkey = r_regionkey
-         WHERE r_name = 'ASIA'
-           AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-           AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-         GROUP BY n_name
-         ORDER BY revenue DESC, n_name ASC""",
-
-    // the staged-map form computes the identical result (the map is a
-    // pure materialization of the customer⨝orders reduction), so its
-    // oracle is q5's from-raw SQL verbatim — the staging advantage is
-    // benched (extras, same-work baseline), not oracled
-    "q5_local_supplier_staged" ->
-      """SELECT n_name,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-         FROM orders
-           JOIN lineitem ON o_orderkey = l_orderkey
-           JOIN supplier ON l_suppkey = s_suppkey
-           JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
-           JOIN nation ON c_nationkey = n_nationkey
-           JOIN region ON n_regionkey = r_regionkey
-         WHERE r_name = 'ASIA'
-           AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-           AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-         GROUP BY n_name
-         ORDER BY revenue DESC, n_name ASC""",
-
-    "q_csv_roundtrip" ->
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-         FROM events GROUP BY event_type""",
-
-    "q_partitioned_write" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-           round(sum(o_totalprice), 2) AS sum_total
-         FROM orders WHERE year(o_orderdate) = 1996
-         GROUP BY o_orderstatus""",
-
-    "q_vacuum" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS yr, count(*) AS n,
-           round(sum(o_totalprice), 2) AS sum_total
-         FROM orders WHERE year(o_orderdate) >= 1996
-         GROUP BY 1""",
-
-    "q_csv_catalog_infer" ->
-      // 'int' pins the type Spark's CSV inference must produce for the
-      // small-int key column; sums cast to BIGINT (DuckDB widens to
-      // HUGEINT, Spark sums inferred int to long)
-      """SELECT CAST(n_regionkey AS BIGINT) AS n_regionkey,
-           count(*) AS n_nations,
-           CAST(sum(n_nationkey) AS BIGINT) AS sum_key,
-           'int' AS key_type
-         FROM nation GROUP BY 1""",
-
-    "q_schema_evolution" ->
-      """SELECT o_orderstatus, count(*) AS n,
-           count(CASE WHEN year(o_orderdate) >= 1996 THEN 1 END) AS n_with_priority,
-           round(sum(o_totalprice), 2) AS sum_total
-         FROM orders GROUP BY o_orderstatus""",
-
-    "q_json_roundtrip" ->
-      """SELECT event_type, count(*) AS n,
-           round(min(value), 2) AS min_value,
-           round(max(value), 2) AS max_value
-         FROM events GROUP BY event_type""",
-
-    "q_orc_roundtrip" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-           round(sum(o_totalprice), 2) AS sum_total
-         FROM orders GROUP BY o_orderstatus""",
-
-    "q_json_extract" ->
-      """SELECT event_type,
-           CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-           count(json_extract_string(props, '$.k')) AS n_with_k
-         FROM events GROUP BY event_type""",
-
-    "q_null_profile" ->
-      """SELECT count(CASE WHEN event_id IS NULL THEN 1 END) AS event_id_nulls,
-           count(CASE WHEN ts IS NULL THEN 1 END) AS ts_nulls,
-           count(CASE WHEN user_id IS NULL THEN 1 END) AS user_id_nulls,
-           count(CASE WHEN event_type IS NULL THEN 1 END) AS event_type_nulls,
-           count(CASE WHEN value IS NULL THEN 1 END) AS value_nulls,
-           count(CASE WHEN props IS NULL THEN 1 END) AS props_nulls
-         FROM events""",
-
-    "q_dup_profile" ->
-      """SELECT count(*) AS total_rows,
-           count(DISTINCT (user_id, event_type)) AS distinct_keys,
-           count(*) - count(DISTINCT (user_id, event_type)) AS duplicate_rows
-         FROM events""",
-
-    "q_snake_case" ->
-      """SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty
-         FROM lineitem GROUP BY l_returnflag""",
-
-    "q_date_standardize" ->
-      """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS raw_date FROM orders""",
-
-    "q_normalize_states" ->
-      """SELECT upper(trim(o_orderstatus)) AS o_orderstatus, count(*) AS n
-         FROM orders GROUP BY 1""",
-
-    "q_window_dedup" ->
-      """SELECT event_id, user_id, event_type, value FROM (
-           SELECT *, row_number() OVER (
-             PARTITION BY user_id, event_type
-             ORDER BY ts DESC NULLS LAST, event_id DESC) AS rn
-           FROM events) t
-         WHERE rn = 1""",
-
-    "q_window_dedup_agg" ->
-      """SELECT event_id, user_id, event_type, value FROM (
-           SELECT *, row_number() OVER (
-             PARTITION BY user_id, event_type
-             ORDER BY ts DESC NULLS LAST, event_id DESC) AS rn
-           FROM events) t
-         WHERE rn = 1""",
-
-    "q_catalog_enrich" ->
-      """SELECT c_custkey, c_name, n_name AS nation_name, r_name AS region_name
-         FROM customer
-           LEFT JOIN nation ON c_nationkey = n_nationkey
-           LEFT JOIN region ON n_regionkey = r_regionkey""",
-
-    "q_tipo_flag" ->
-      """SELECT c_custkey,
-           CAST(CASE WHEN upper(trim(c_mktsegment)) = 'BUILDING' THEN 2 ELSE 1 END AS BIGINT)
-             AS segment_flag
-         FROM customer""",
-
-    "q_age_years" ->
-      """SELECT o_orderkey, CAST(2026 - year(o_orderdate) AS BIGINT) AS age_years
-         FROM orders""",
-
-    "q_unique_key" ->
-      """SELECT c_custkey,
-           concat_ws('_', c_nationkey, c_custkey, c_name) AS id_unico
-         FROM customer""",
-
-    "q_validations" ->
-      """SELECT
-           count(CASE WHEN o_orderdate IS NULL THEN 1 END) AS null_orderdate,
-           count(CASE WHEN o_totalprice < 0 THEN 1 END) AS negative_total,
-           count(CASE WHEN upper(trim(o_orderstatus)) = 'O' THEN 1 END) AS status_open,
-           count(CASE WHEN upper(trim(o_orderstatus)) = 'F' THEN 1 END) AS status_filled,
-           count(CASE WHEN o_totalprice > 200000 THEN 1 END) AS high_value
-         FROM orders""",
-
-    "q_error_log" ->
-      """WITH v AS (
-           SELECT
-             count(CASE WHEN o_orderdate IS NULL THEN 1 END) AS null_orderdate,
-             count(CASE WHEN o_totalprice < 0 THEN 1 END) AS negative_total,
-             count(CASE WHEN upper(trim(o_orderstatus)) = 'O' THEN 1 END) AS status_open,
-             count(CASE WHEN o_totalprice > 200000 THEN 1 END) AS high_value
-           FROM orders
-         ), log AS (
-           SELECT 'null_orderdate' AS columna,
-                  'fecha de matricula nula' AS mensaje_error,
-                  null_orderdate AS n_rows FROM v
-           UNION ALL
-           SELECT 'negative_total', 'monto negativo', negative_total FROM v
-           UNION ALL
-           SELECT 'status_open', 'registro abierto', status_open FROM v
-           UNION ALL
-           SELECT 'high_value', 'monto inusualmente alto', high_value FROM v
-         )
-         SELECT columna, mensaje_error, CAST(n_rows AS BIGINT) AS n_rows
-         FROM log WHERE n_rows > 0""",
-
-    "q_medallion_silver" ->
-      """SELECT o_orderkey AS matricula,
-           upper(trim(o_orderstatus)) AS estado,
-           strftime(o_orderdate, '%Y-%m-%d') AS fecha_matricula,
-           ['CC','NIT','CE'][CAST(o_orderkey % 3 AS INT) + 1] AS clase_identificacion,
-           o_custkey AS id_titular,
-           c_name AS titular_name,
-           CAST(CASE WHEN ['CC','NIT','CE'][CAST(o_orderkey % 3 AS INT) + 1] = 'NIT'
-                     THEN 2 ELSE 1 END AS BIGINT) AS tipo_persona,
-           CAST(2026 - year(o_orderdate) AS BIGINT) AS antiguedad,
-           concat_ws('_', ['CC','NIT','CE'][CAST(o_orderkey % 3 AS INT) + 1],
-                     o_orderkey, o_custkey) AS id_unico
-         FROM orders LEFT JOIN customer ON o_custkey = c_custkey""",
-
-    "q_dim_build" ->
-      """SELECT DISTINCT c_custkey, c_name, c_nationkey, c_mktsegment FROM customer""",
-
-    "q_fact_build" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice,
-           CAST(date_diff('day', DATE '1998-12-01', CAST(o_orderdate AS DATE)) AS BIGINT)
-             AS dias_vigencia,
-           CAST(CASE WHEN CAST(o_orderdate AS DATE) < DATE '1998-12-01' THEN 1 ELSE 0 END AS BIGINT)
-             AS flag_vencido
-         FROM orders""",
-
-    "q_integrity_orphans" ->
-      """SELECT count(*) AS orphan_count FROM
-           (SELECT DISTINCT o_custkey FROM orders) o
-           LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
-             ON o.o_custkey = c.c_custkey
-         WHERE c.c_custkey IS NULL""",
-
-    "q_range_join" ->
-      """SELECT e.event_id, p.event_id AS purchase_id
-         FROM events e JOIN events p
-           ON e.user_id = p.user_id
-          AND p.event_type = 'purchase'
-          AND e.event_type <> 'purchase'
-          AND e.ts >= p.ts
-          AND e.ts < p.ts + INTERVAL 2 DAY""",
-
-    "q_asof_join" ->
-      """WITH o AS (
-           SELECT o_custkey, o_orderdate,
-             max(o_orderkey) AS o_orderkey,
-             max_by(o_totalprice, o_orderkey) AS o_totalprice
-           FROM orders GROUP BY o_custkey, o_orderdate
-         )
-         SELECT event_id, user_id, o_orderkey, o_totalprice
-         FROM events ASOF LEFT JOIN o
-           ON events.user_id = o.o_custkey
-          AND CAST(events.ts AS TIMESTAMP) >= o.o_orderdate""",
-
-    "q_asof_forward" ->
-      """WITH p AS (
-           SELECT user_id AS p_user, ts AS p_ts,
-             max(event_id) AS purchase_id,
-             max_by(value, event_id) AS purchase_value
-           FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-         ), e AS (
-           SELECT event_id, user_id, ts FROM events
-           WHERE event_type <> 'purchase'
-         )
-         SELECT e.event_id, e.user_id, p.purchase_id, p.purchase_value
-         FROM e ASOF LEFT JOIN p
-           ON e.user_id = p.p_user AND e.ts <= p.p_ts""",
-
-    "q_salted_join" ->
-      """SELECT s_nationkey, count(*) AS n_items,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-         GROUP BY s_nationkey""",
-
-    "q_skew_advisor" ->
-      """WITH c AS (
-           SELECT CAST(user_id AS VARCHAR) AS k, count(*) AS cnt
-           FROM events GROUP BY 1
-         ), agg AS (
-           SELECT CAST(sum(cnt) AS BIGINT) AS n_rows,
-                  count(*) AS n_keys, max(cnt) AS max_count
-           FROM c
-         ), hot AS (SELECT k FROM c ORDER BY cnt DESC, k DESC LIMIT 1)
-         SELECT n_rows, n_keys,
-           floor(CAST(n_rows AS DOUBLE) / n_keys * 10000 + 0.5) / 10000 AS avg_per_key,
-           max_count, hot.k AS hot_key,
-           floor(CAST(max_count AS DOUBLE) * n_keys / n_rows * 10000 + 0.5) / 10000 AS skew_factor,
-           CAST(ceil(CAST(max_count AS DOUBLE) * n_keys / n_rows) AS BIGINT) AS recommended_salt
-         FROM agg, hot""",
-
-    "q_v1_active_by_type" -> v1Sql,
-    "q_v2_avg_age" -> v2Sql,
-    "q_v3_rate" -> v3Sql,
-    "q_v4_ml_dataset" -> v4Sql,
-    // catalog-table variants produce identical results; the oracle
-    // (DuckDB over parquet) is the same SQL
-    "q_v1_tables" -> v1Sql,
-    "q_v2_tables" -> v2Sql,
-    "q_v3_tables" -> v3Sql,
-    "q_v4_tables" -> v4Sql,
-
-    "q_point_lookup" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-           strftime(o_orderdate, '%Y-%m-%d') AS order_date
-         FROM orders WHERE o_custkey = 7
-         ORDER BY o_orderdate DESC, o_orderkey DESC
-         LIMIT 1""",
-
-    "q_corpus_prep" -> corpusPrepSql,
-
-    // staged (write-barrier) variant has identical semantics
-    "q_corpus_prep_staged" -> corpusPrepSql,
-
-    // prep + cluster-canonical near-dup removal: corpus-prep CTEs over
-    // the near-recrawl-augmented corpus, then exact-Jaccard pairs over
-    // the survivors closed into components by a recursive CTE; only
-    // cluster-min ids survive
-    "q_corpus_prep_clustered" ->
-      """WITH RECURSIVE off AS (
-           SELECT CAST(coalesce(power(10, length(CAST(greatest(coalesce(max(doc_id), 0), 0) AS VARCHAR))), 1000000) AS BIGINT) AS v
-           FROM documents
-         ), gsrc AS (
-           SELECT doc_id, text,
-             CAST(ceil(1.2 * len(string_split_regex(trim(lower(text)), '\s+'))) AS BIGINT) AS g,
-             translate(CAST(doc_id AS VARCHAR), '0123456789', 'abcdefghij') AS lid
-           FROM documents WHERE doc_id % 50 = 11
-         ), aug AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + (SELECT v FROM off), text || ' nearly' FROM documents
-           WHERE doc_id % 25 = 4
-           UNION ALL
-           SELECT doc_id + 2 * (SELECT v FROM off),
-             text || ' ' || array_to_string(list_transform(range(1, g + 1),
-               i -> 'zz' || lid || 'x' || translate(CAST(i AS VARCHAR), '0123456789', 'abcdefghij')), ' ')
-           FROM gsrc
-           UNION ALL
-           SELECT doc_id + 3 * (SELECT v FROM off),
-             text || ' ' || array_to_string(list_transform(range(g + 1, 2 * g + 1),
-               i -> 'zz' || lid || 'x' || translate(CAST(i AS VARCHAR), '0123456789', 'abcdefghij')), ' ')
-           FROM gsrc
-           UNION ALL
-           SELECT doc_id + 4 * (SELECT v FROM off),
-             text || ' ' || array_to_string(list_transform(range(1, 2 * g + 1),
-               i -> 'zz' || lid || 'x' || translate(CAST(i AS VARCHAR), '0123456789', 'abcdefghij')), ' ')
-           FROM gsrc
-         ), c AS (
-           SELECT doc_id,
-             trim(regexp_replace(regexp_replace(
-               regexp_replace(text, 'https?://\S+', ' ', 'g'),
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', ' ', 'g'),
-               '\s+', ' ', 'g')) AS clean
-           FROM aug
-         ), t AS (
-           SELECT doc_id, clean,
-             CASE WHEN length(trim(lower(clean))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(clean)), '\s+') END AS toks
-           FROM c
-         ), s AS (
-           SELECT doc_id, clean,
-             floor((least(CAST(len(toks) AS DOUBLE) / 50.0, 1.0)
-               + (CASE WHEN length(clean) = 0 THEN 0.0
-                       ELSE CAST(len(regexp_extract_all(clean, '[A-Za-z]')) AS DOUBLE) / length(clean) END)
-               + least((CASE WHEN len(toks) = 0 THEN 0.0
-                             ELSE CAST(len(list_filter(toks,
-                                    x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE)
-                                  / len(toks) END) * 4.0, 1.0)
-               ) / 3.0 * 10000.0 + 0.5) / 10000.0 AS quality,
-             len(list_filter(toks, x -> list_contains(['the','a'], x))) AS s_en,
-             len(list_filter(toks, x -> list_contains(['el','la','los'], x))) AS s_es,
-             len(list_filter(toks, x -> list_contains(['der','die','und'], x))) AS s_de,
-             len(list_filter(toks, x -> list_contains(['le','les','et'], x))) AS s_fr,
-             CAST(len(toks) AS BIGINT) AS n_tokens
-           FROM t
-         ), p AS (
-           SELECT doc_id, clean, quality, n_tokens,
-             CASE WHEN greatest(s_en, s_es, s_de, s_fr) = 0 THEN 'und'
-                  WHEN s_en = greatest(s_en, s_es, s_de, s_fr) THEN 'en'
-                  WHEN s_es = greatest(s_en, s_es, s_de, s_fr) THEN 'es'
-                  WHEN s_de = greatest(s_en, s_es, s_de, s_fr) THEN 'de'
-                  ELSE 'fr' END AS lang_pred
-           FROM s
-         ), g AS (
-           SELECT * FROM p
-           WHERE quality >= 0.3 AND lang_pred IN ('en') AND n_tokens >= 10
-         ), prep AS (
-           SELECT doc_id, quality, lang_pred, n_tokens FROM g
-           WHERE doc_id IN (SELECT min(doc_id) FROM g GROUP BY md5(clean))
-         ), surv AS (
-           SELECT a.doc_id, a.text FROM aug a JOIN prep pp ON a.doc_id = pp.doc_id
-         ), toks2 AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM surv
-         ), sh AS (
-           SELECT doc_id,
-             CASE WHEN len(ts) = 0 THEN CAST([] AS VARCHAR[])
-                  WHEN len(ts) <= 3 THEN [array_to_string(ts, ' ')]
-                  ELSE list_distinct(list_transform(range(1, len(ts) - 1),
-                         i -> array_to_string(ts[i:i+2], ' ')))
-             END AS shs
-           FROM toks2
-         ), idx AS (
-           SELECT doc_id, CAST(len(shs) AS BIGINT) AS set_size, unnest(shs) AS shingle
-           FROM sh
-         ), rare AS (
-           SELECT shingle FROM idx GROUP BY shingle HAVING count(*) BETWEEN 2 AND 20
-         ), pr AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                  a.set_size AS size_a, b.set_size AS size_b, count(*) AS inter
-           FROM idx a JOIN rare r ON a.shingle = r.shingle
-                      JOIN idx b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4
-         ), e AS (
-           SELECT id_a AS u, id_b AS v FROM pr
-           WHERE floor(CAST(inter AS DOUBLE) / (size_a + size_b - inter)
-                   * 10000.0 + 0.5) / 10000.0 >= 0.5
-         ), sym2 AS (
-           SELECT u, v FROM e UNION SELECT v AS u, u AS v FROM e
-         ), reach AS (
-           SELECT doc_id AS a, doc_id AS b FROM surv
-           UNION
-           SELECT r.a, s2.v AS b FROM reach r JOIN sym2 s2 ON r.b = s2.u
-         ), comp AS (
-           SELECT a AS doc_id, min(b) AS m FROM reach GROUP BY a
-         )
-         SELECT pp.doc_id, pp.quality, pp.lang_pred, pp.n_tokens
-         FROM prep pp JOIN comp ON pp.doc_id = comp.doc_id AND comp.doc_id = comp.m""",
-
-    "q_dedup_exact" ->
-      """WITH off AS (
-           SELECT CAST(coalesce(power(10, length(CAST(greatest(coalesce(max(doc_id), 0), 0) AS VARCHAR))), 1000000) AS BIGINT) AS v
-           FROM documents
-         ), aug AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + (SELECT v FROM off), text FROM documents
-           WHERE doc_id % 10 = 3
-         )
-         SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
-           count(*) AS group_size
-         FROM aug GROUP BY md5(text)""",
-
-    "q_dedup_keep_best" ->
-      """WITH off AS (
-           SELECT CAST(coalesce(power(10, length(CAST(greatest(coalesce(max(doc_id), 0), 0) AS VARCHAR))), 1000000) AS BIGINT) AS v
-           FROM documents
-         ), aug AS (
-           SELECT doc_id, text, source FROM documents
-           UNION ALL
-           SELECT doc_id + (SELECT v FROM off), text, source FROM documents
-           WHERE doc_id % 10 = 3
-         ), ranked AS (
-           SELECT *, row_number() OVER (PARTITION BY md5(text)
-             ORDER BY CAST(substr(source, 4) AS INT) ASC, doc_id ASC) AS rn
-           FROM aug
-         )
-         SELECT source, count(*) AS n_docs,
-           CAST(sum(length(text)) AS BIGINT) AS n_chars
-         FROM ranked WHERE rn = 1 GROUP BY source""",
-
-    "q_ngram_novelty" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM documents
-         ), sh AS (
-           SELECT doc_id, doc_id % 5 = 0 AS is_ref,
-             CASE WHEN len(ts) = 0 THEN CAST([] AS VARCHAR[])
-                  WHEN len(ts) <= 3 THEN [array_to_string(ts, ' ')]
-                  ELSE list_distinct(list_transform(range(1, len(ts) - 1),
-                         i -> array_to_string(ts[i:i+2], ' ')))
-             END AS shs
-           FROM t
-         ), ref AS (
-           SELECT DISTINCT unnest(shs) AS sh FROM sh WHERE is_ref
-         ), cand AS (
-           SELECT doc_id, unnest(shs) AS sh FROM sh WHERE NOT is_ref
-         ), novel AS (
-           SELECT doc_id, count(*) AS n_novel FROM cand c
-           WHERE NOT EXISTS (SELECT 1 FROM ref r WHERE r.sh = c.sh)
-           GROUP BY doc_id
-         ), totals AS (
-           SELECT doc_id, CAST(len(shs) AS BIGINT) AS n_grams
-           FROM sh WHERE NOT is_ref
-         )
-         SELECT t.doc_id, t.n_grams,
-           CAST(coalesce(n.n_novel, 0) AS BIGINT) AS n_novel,
-           CASE WHEN t.n_grams = 0 THEN 0.0
-                ELSE floor(CAST(coalesce(n.n_novel, 0) AS DOUBLE) / t.n_grams
-                       * 10000 + 0.5) / 10000.0 END AS novelty
-         FROM totals t LEFT JOIN novel n USING (doc_id)""",
-
-    "q_stream_windows" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start, event_type,
-           count(*) AS n_events, round(sum(value), 2) AS sum_value
-         FROM events GROUP BY 1, 2""",
-
-    "q_dedup_drop" ->
-      """WITH off AS (
-           SELECT CAST(coalesce(power(10, length(CAST(greatest(coalesce(max(doc_id), 0), 0) AS VARCHAR))), 1000000) AS BIGINT) AS v
-           FROM documents
-         ), aug AS (
-           SELECT doc_id, text, lang, n_chars FROM documents
-           UNION ALL
-           SELECT doc_id + (SELECT v FROM off), text, lang, n_chars FROM documents
-           WHERE doc_id % 10 = 3
-         )
-         SELECT doc_id, lang, n_chars FROM aug
-         WHERE doc_id IN (SELECT min(doc_id) FROM aug GROUP BY md5(text))""",
-
-    "q_bloom_ingest_dedup" ->
-      """WITH hist AS (
-           SELECT DISTINCT md5(text) AS dig FROM documents
-         ), incoming AS (
-           SELECT text, source FROM documents WHERE doc_id % 10 = 3
-           UNION ALL
-           SELECT 'fresh ' || CAST(doc_id AS VARCHAR) || ' ' || text AS text, source
-           FROM documents
-         ), novel AS (
-           SELECT i.* FROM incoming i
-           WHERE NOT EXISTS (SELECT 1 FROM hist h WHERE h.dig = md5(i.text))
-         )
-         SELECT source, count(*) AS n_docs,
-           CAST(sum(length(text)) AS BIGINT) AS n_chars
-         FROM novel GROUP BY source""",
-
-    // stream-stream attribution join == batch interval self-join
-    "q_stream_join" ->
-      """SELECT p.event_id AS purchase_id, p.user_id, p.ts AS purchase_ts,
-           c.event_id AS click_id, c.ts AS click_ts
-         FROM events p JOIN events c
-           ON p.user_id = c.user_id
-          AND c.ts <= p.ts
-          AND c.ts >= p.ts - INTERVAL 30 MINUTE
-         WHERE p.event_type = 'purchase' AND c.event_type = 'click'""",
-
-    // stream-stream LEFT OUTER == batch left interval self-join
-    "q_stream_join_outer" ->
-      """SELECT p.event_id AS purchase_id, p.user_id, p.ts AS purchase_ts,
-           c.event_id AS click_id, c.ts AS click_ts
-         FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-         LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-           ON p.user_id = c.user_id
-          AND c.ts <= p.ts
-          AND c.ts >= p.ts - INTERVAL 30 MINUTE""",
-
-    "q_heavy_hitters" ->
-      """WITH c AS (
-           SELECT user_id, count(*) AS n FROM events GROUP BY user_id
-         ), t AS (SELECT CAST(count(*) AS DOUBLE) AS total FROM events)
-         SELECT user_id, n,
-           floor(n / total * 10000.0 + 0.5) / 10000.0 AS share
-         FROM c, t
-         ORDER BY n DESC, user_id ASC
-         LIMIT 10""",
-
-    "q_pivot" ->
-      """SELECT c_mktsegment,
-           count(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
-           count(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
-           count(*) FILTER (WHERE o_orderstatus = 'P') AS n_p
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment""",
-
-    "q_rollup" ->
-      """SELECT coalesce(c_mktsegment, 'ALL') AS segment,
-           coalesce(o_orderstatus, 'ALL') AS status,
-           count(*) AS n, round(sum(o_totalprice), 2) AS total
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY ROLLUP(c_mktsegment, o_orderstatus)""",
-
-    "q_gap_fill" ->
-      """WITH c AS (
-           SELECT user_id, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bucket,
-                  count(*) AS n, sum(value) AS sv
-           FROM events GROUP BY 1, 2
-         ), span AS (
-           SELECT user_id, min(bucket) AS b0, max(bucket) AS b1 FROM c GROUP BY 1
-         ), grid AS (
-           SELECT user_id, unnest(generate_series(b0, b1, INTERVAL 1 HOUR)) AS bucket
-           FROM span
-         )
-         SELECT g.user_id, g.bucket, coalesce(c.n, 0) AS n,
-                round(coalesce(c.sv, 0), 2) AS sum_value
-         FROM grid g LEFT JOIN c ON g.user_id = c.user_id AND g.bucket = c.bucket""",
-
-    "q_grouping_sets" ->
-      """SELECT coalesce(c_mktsegment, 'ALL') AS segment,
-           coalesce(o_orderstatus, 'ALL') AS status,
-           CAST(grouping(c_mktsegment) AS BIGINT) AS g_seg,
-           CAST(grouping(o_orderstatus) AS BIGINT) AS g_st,
-           count(*) AS n
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY GROUPING SETS ((c_mktsegment), (o_orderstatus), ())""",
-
-    "q_cube" ->
-      """SELECT coalesce(c_mktsegment, 'ALL') AS segment,
-           coalesce(o_orderstatus, 'ALL') AS status,
-           count(*) AS n, round(sum(o_totalprice), 2) AS total
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY CUBE(c_mktsegment, o_orderstatus)""",
-
-    "q_window_analytics" ->
-      """SELECT o_custkey, o_orderkey,
-           CAST(row_number() OVER w AS BIGINT) AS order_seq,
-           coalesce(round(o_totalprice - lag(o_totalprice, 1) OVER w, 2),
-                    0.0) AS price_delta,
-           coalesce(CAST(date_diff('day', CAST(o_orderdate AS DATE),
-                      CAST(lead(o_orderdate, 1) OVER w AS DATE)) AS BIGINT),
-                    CAST(-1 AS BIGINT)) AS days_to_next,
-           CAST(ntile(4) OVER wp AS BIGINT) AS price_quartile,
-           floor(percent_rank() OVER wp * 10000 + 0.5) / 10000 AS price_pct_rank
-         FROM orders WHERE o_custkey % 10 = 0
-         WINDOW w  AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-                wp AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey)""",
-
-    "q_set_ops" ->
-      """WITH open_k AS (SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'),
-              done_k AS (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')
-         SELECT 'both' AS op, count(*) AS n
-           FROM (SELECT * FROM open_k INTERSECT SELECT * FROM done_k)
-         UNION ALL
-         SELECT 'open_only', count(*)
-           FROM (SELECT * FROM open_k EXCEPT SELECT * FROM done_k)
-         UNION ALL
-         SELECT 'either', count(*)
-           FROM (SELECT * FROM open_k UNION SELECT * FROM done_k)""",
-
-    "q_range_sorted_write" ->
-      """SELECT CAST(o_orderkey % 5 AS BIGINT) AS grp, count(*) AS n,
-           round(sum(o_totalprice), 2) AS sum_total,
-           min(o_custkey) AS min_cust, max(o_custkey) AS max_cust
-         FROM orders GROUP BY 1""",
-
-    "q_zorder_write" ->
-      """SELECT CAST(o_custkey % 7 AS BIGINT) AS grp, count(*) AS n,
-           round(sum(o_totalprice), 2) AS sum_total,
-           min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-         FROM orders GROUP BY 1""",
-
-    "q_compact" ->
-      """SELECT o_orderstatus, count(*) AS n_orders,
-           round(sum(o_totalprice), 2) AS sum_total
-         FROM orders GROUP BY o_orderstatus""",
-
-    "q_fuzzy_match" ->
-      """WITH t AS (
-           SELECT min(p_partkey) AS id, p_name AS s,
-                  split_part(p_name, ' ', 1) AS blk
-           FROM part GROUP BY p_name
-         ), ok AS (
-           SELECT blk FROM t GROUP BY blk HAVING count(*) <= 1000
-         ), b AS (
-           SELECT t.* FROM t JOIN ok USING (blk)
-         )
-         SELECT a.id AS id_a, x.id AS id_b,
-                CAST(levenshtein(a.s, x.s) AS BIGINT) AS dist
-         FROM b a JOIN b x ON a.blk = x.blk AND a.id < x.id
-         WHERE levenshtein(a.s, x.s) <= 3""",
-
-    "q_entity_clusters" ->
-      """WITH RECURSIVE t AS (
-           SELECT min(p_partkey) AS id, p_name AS s,
-                  split_part(p_name, ' ', 1) AS blk
-           FROM part GROUP BY p_name
-         ), ok AS (
-           SELECT blk FROM t GROUP BY blk HAVING count(*) <= 1000
-         ), b AS (
-           SELECT t.* FROM t JOIN ok USING (blk)
-         ), e AS (
-           SELECT a.id AS u, x.id AS v
-           FROM b a JOIN b x ON a.blk = x.blk AND a.id < x.id
-           WHERE levenshtein(a.s, x.s) <= 3
-         ), sym2 AS (
-           SELECT u, v FROM e UNION SELECT v AS u, u AS v FROM e
-         ), reach AS (
-           SELECT id AS a, id AS b FROM t
-           UNION
-           SELECT r.a, s2.v AS b FROM reach r JOIN sym2 s2 ON r.b = s2.u
-         ), comp AS (
-           SELECT a AS rep, min(b) AS component FROM reach GROUP BY a
-         )
-         SELECT p.p_partkey, CAST(c.component AS BIGINT) AS component
-         FROM part p
-         JOIN t ON p.p_name = t.s
-         JOIN comp c ON t.id = c.rep""",
-
-    "q_date_dim" ->
-      """WITH g AS (
-           SELECT CAST(unnest(generate_series(DATE '1995-01-01',
-                    DATE '1997-12-31', INTERVAL 1 DAY)) AS DATE) AS d
-         )
-         SELECT strftime(d, '%Y-%m-%d') AS day,
-           CAST(year(d) AS BIGINT) AS year,
-           CAST(quarter(d) AS BIGINT) AS quarter,
-           CAST(month(d) AS BIGINT) AS month,
-           CAST(dayofweek(d) + 1 AS BIGINT) AS dow,
-           dayofweek(d) IN (0, 6) AS is_weekend
-         FROM g""",
-
-    "q_pack_sequences" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CAST(len(regexp_extract_all(text,
-               '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_tok
-           FROM documents
-         ), c AS (
-           SELECT doc_id, n_tok,
-             sum(n_tok) OVER (ORDER BY doc_id
-               ROWS UNBOUNDED PRECEDING) AS cum
-           FROM t
-         ), p AS (
-           SELECT doc_id, n_tok,
-             CAST(floor(CAST(cum - n_tok AS DOUBLE) / 2048.0) AS BIGINT) AS bin
-           FROM c
-         )
-         SELECT bin, count(*) AS n_docs,
-           CAST(sum(n_tok) AS BIGINT) AS total_tokens,
-           floor(CAST(sum(n_tok) AS DOUBLE) / 2048.0 * 10000.0 + 0.5) / 10000.0
-             AS fill_ratio
-         FROM p GROUP BY bin""",
-
-    "q_incremental_agg" ->
-      """SELECT o_orderstatus, count(o_totalprice) AS n,
-           round(sum(o_totalprice), 2) AS sum,
-           min(o_totalprice) AS min, max(o_totalprice) AS max,
-           floor(sum(o_totalprice) / count(o_totalprice) * 10000 + 0.5)
-             / 10000 AS mean
-         FROM orders GROUP BY o_orderstatus""",
-
-    "q_snapshot_diff" ->
-      """WITH base AS (
-           SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus FROM orders
-         ), off AS (
-           SELECT CAST(coalesce(power(10, length(CAST(greatest(coalesce(max(o_orderkey), 0), 0) AS VARCHAR))), 1000000) AS BIGINT) AS v
-           FROM base
-         ), v2 AS (
-           SELECT o_orderkey, o_custkey,
-                  CASE WHEN o_orderkey % 97 = 0 THEN o_totalprice * 2
-                       ELSE o_totalprice END AS o_totalprice,
-                  o_orderstatus
-           FROM base WHERE o_orderkey % 101 <> 0
-           UNION ALL
-           SELECT o_orderkey + (SELECT v FROM off), o_custkey, o_totalprice, o_orderstatus
-           FROM base WHERE o_orderkey % 89 = 0
-         )
-         SELECT * FROM (
-           SELECT coalesce(b.o_orderkey, v.o_orderkey) AS o_orderkey,
-             CASE WHEN b.o_orderkey IS NULL THEN 'insert'
-                  WHEN v.o_orderkey IS NULL THEN 'delete'
-                  WHEN b.o_totalprice  IS DISTINCT FROM v.o_totalprice
-                    OR b.o_custkey     IS DISTINCT FROM v.o_custkey
-                    OR b.o_orderstatus IS DISTINCT FROM v.o_orderstatus
-                    THEN 'update' END AS change_type
-           FROM base b FULL OUTER JOIN v2 v ON b.o_orderkey = v.o_orderkey
-         ) WHERE change_type IS NOT NULL""",
-
-    "q_histogram" ->
-      """SELECT CAST(least(floor(o_totalprice / 50000.0), 11) AS BIGINT) AS bucket,
-           count(*) AS n, round(sum(o_totalprice), 2) AS sum_total
-         FROM orders GROUP BY 1""",
-
-    "q_corr_stats" ->
-      """SELECT l_returnflag,
-           floor(corr(l_quantity, l_extendedprice) * 10000 + 0.5) / 10000
-             AS corr_qty_price,
-           floor(covar_samp(l_quantity, l_discount) * 10000 + 0.5) / 10000
-             AS covar_qty_disc,
-           floor(stddev_samp(l_quantity) * 10000 + 0.5) / 10000 AS stddev_qty
-         FROM lineitem GROUP BY l_returnflag""",
-
-    "q_upsert" -> upsertMergeSql,
-
-    // the streaming MERGE sink must converge to the identical state
-    // table the one-shot batch MERGE produces — same oracle verbatim
-    "q_stream_upsert" -> upsertMergeSql,
-
-    "q_stream_sketch_store" ->
-      // exact per-type row and distinct counts compared; the
-      // streaming store's envelope verdict pinned TRUE
-      """SELECT event_type, count(*) AS n_rows,
-           count(DISTINCT user_id) AS exact_distinct,
-           TRUE AS within_10pct
-         FROM events GROUP BY event_type""",
-
-    "q_stream_exactly_once" ->
-      // one clean copy of the feed per type — a restart that
-      // reprocessed committed batches would double every count
-      """SELECT event_type, count(*) AS n_events,
-           CAST(sum(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0
-             AS sum_value
-         FROM events GROUP BY event_type""",
-
-    "q_corrupt_capture" ->
-      // the planted bad-row set is exact SQL over the clean table
-      """SELECT count(*) FILTER (n_nationkey % 5 <> 2) AS n_good,
-           count(*) FILTER (n_nationkey % 5 = 2) AS n_bad,
-           CAST(sum(n_nationkey) FILTER (n_nationkey % 5 <> 2) AS BIGINT)
-             AS sum_good_keys
-         FROM nation""",
-
-    "q_observe_metrics" ->
-      // recompute every observed metric from the raw tables: rows in
-      // and out (orderkeys are unique, so latest-wins dedup is a
-      // no-op), planted unparseable dates, orphan-custkey enrich misses
-      """SELECT (SELECT count(*) FROM orders) AS rows_in,
-           (SELECT count(*) FROM orders) AS rows_out,
-           (SELECT count(*) FROM orders WHERE o_orderkey % 211 = 5) AS null_dates,
-           (SELECT count(*) FROM orders o LEFT JOIN customer c
-              ON o.o_custkey = c.c_custkey
-            WHERE c.c_custkey IS NULL) AS unenriched""",
-
-    "q_numeric_profile" ->
-      """SELECT 'o_totalprice' AS "column",
-           count(o_totalprice) AS n,
-           count(*) - count(o_totalprice) AS n_null,
-           CAST(min(o_totalprice) AS DOUBLE) AS min,
-           CAST(max(o_totalprice) AS DOUBLE) AS max,
-           floor(avg(o_totalprice) * 10000.0 + 0.5) / 10000.0 AS mean,
-           floor(stddev_samp(o_totalprice) * 10000.0 + 0.5) / 10000.0 AS stddev,
-           floor(quantile_cont(CAST(o_totalprice AS DOUBLE), 0.5) * 10000.0 + 0.5)
-             / 10000.0 AS median
-         FROM orders
-         UNION ALL
-         SELECT 'o_custkey',
-           count(o_custkey),
-           count(*) - count(o_custkey),
-           CAST(min(o_custkey) AS DOUBLE),
-           CAST(max(o_custkey) AS DOUBLE),
-           floor(avg(o_custkey) * 10000.0 + 0.5) / 10000.0,
-           floor(stddev_samp(o_custkey) * 10000.0 + 0.5) / 10000.0,
-           floor(quantile_cont(CAST(o_custkey AS DOUBLE), 0.5) * 10000.0 + 0.5)
-             / 10000.0
-         FROM orders""",
-
-    // SCD2: keep only rows where the tracked attribute changed vs the
-    // previous observation per key; valid_to = next change's ts
-    "q_scd2_build" ->
-      """WITH ordered AS (
-           SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
-             lag(o_orderstatus) OVER (
-               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_status
-           FROM orders
-         ), chg AS (
-           SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey
-           FROM ordered
-           WHERE prev_status IS DISTINCT FROM o_orderstatus
-         )
-         SELECT o_custkey AS custkey, o_orderstatus AS status,
-           o_orderdate AS valid_from,
-           lead(o_orderdate) OVER (
-             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS valid_to,
-           lead(o_orderdate) OVER (
-             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) IS NULL AS is_current
-         FROM chg""",
-
-    "q_scd2_lookup" ->
-      """WITH ordered AS (
-           SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey,
-             lag(o_orderstatus) OVER (
-               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_status
-           FROM orders
-         ), chg AS (
-           SELECT o_custkey, o_orderstatus, o_orderdate, o_orderkey
-           FROM ordered
-           WHERE prev_status IS DISTINCT FROM o_orderstatus
-         ), hist AS (
-           SELECT o_custkey AS custkey, o_orderdate AS valid_from,
-             max_by(o_orderstatus, o_orderkey) AS status
-           FROM chg GROUP BY 1, 2
-         ), f AS (
-           SELECT l_orderkey, l_linenumber, o_custkey AS custkey, l_shipdate
-           FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         )
-         SELECT f.l_orderkey, f.l_linenumber, f.custkey, f.l_shipdate, h.status
-         FROM f ASOF LEFT JOIN hist h
-           ON f.custkey = h.custkey AND f.l_shipdate >= h.valid_from""",
-
-    // exact mirror of Bm25.topK(k1=1.5, b=0.75, terms=[join,hash,stream]):
-    // same tokenization, Lucene-style idf, identical operation order and
-    // exact-binary constants, floor-rounded score, (score, id) ordering
-    "q_bm25_search" ->
-      """WITH toks AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM documents
-         ), tf AS (
-           SELECT doc_id, CAST(len(ts) AS DOUBLE) AS dl,
-             [CAST(len(list_filter(ts, x -> x = 'join')) AS DOUBLE),
-              CAST(len(list_filter(ts, x -> x = 'hash')) AS DOUBLE),
-              CAST(len(list_filter(ts, x -> x = 'stream')) AS DOUBLE)] AS tfs
-           FROM toks
-         ), stats AS (
-           SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl,
-             [sum(CASE WHEN tfs[1] > 0 THEN 1.0 ELSE 0.0 END),
-              sum(CASE WHEN tfs[2] > 0 THEN 1.0 ELSE 0.0 END),
-              sum(CASE WHEN tfs[3] > 0 THEN 1.0 ELSE 0.0 END)] AS dfs
-           FROM tf
-         ), scored AS (
-           SELECT doc_id,
-             (CASE WHEN tfs[1] > 0 THEN
-               ln(1.0 + (n_docs - dfs[1] + 0.5) / (dfs[1] + 0.5)) * tfs[1] * (1.5 + 1.0)
-                 / (tfs[1] + 1.5 * ((1.0 - 0.75) + 0.75 * dl / avgdl)) ELSE 0.0 END)
-             + (CASE WHEN tfs[2] > 0 THEN
-               ln(1.0 + (n_docs - dfs[2] + 0.5) / (dfs[2] + 0.5)) * tfs[2] * (1.5 + 1.0)
-                 / (tfs[2] + 1.5 * ((1.0 - 0.75) + 0.75 * dl / avgdl)) ELSE 0.0 END)
-             + (CASE WHEN tfs[3] > 0 THEN
-               ln(1.0 + (n_docs - dfs[3] + 0.5) / (dfs[3] + 0.5)) * tfs[3] * (1.5 + 1.0)
-                 / (tfs[3] + 1.5 * ((1.0 - 0.75) + 0.75 * dl / avgdl)) ELSE 0.0 END)
-               AS raw_score,
-             (CASE WHEN tfs[1] > 0 THEN 1 ELSE 0 END)
-             + (CASE WHEN tfs[2] > 0 THEN 1 ELSE 0 END)
-             + (CASE WHEN tfs[3] > 0 THEN 1 ELSE 0 END) AS n_hits
-           FROM tf, stats
-         )
-         SELECT doc_id, floor(raw_score * 10000.0 + 0.5) / 10000.0 AS score,
-           CAST(n_hits AS BIGINT) AS n_hits
-         FROM scored WHERE n_hits > 0
-         ORDER BY score DESC, doc_id ASC
-         LIMIT 15""",
-
-    "q_sample_global" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-         ORDER BY md5(CAST(doc_id AS VARCHAR) || '#0') ASC, doc_id ASC
-         LIMIT 25""",
-
-    "q_sample_per_key" ->
-      """SELECT doc_id, lang, n_chars FROM (
-           SELECT doc_id, lang, n_chars,
-             row_number() OVER (PARTITION BY lang ORDER BY doc_id ASC) AS rn
-           FROM documents) t
-         WHERE rn <= 3""",
-
-    "q_vocab" ->
-      """SELECT token, count(*) AS freq FROM (
-           SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-           FROM documents WHERE length(trim(lower(text))) > 0
-         ) t
-         WHERE length(token) > 0
-         GROUP BY token
-         ORDER BY freq DESC, token ASC
-         LIMIT 100""",
-
-    "q_burstiness" ->
-      """WITH base AS (
-           SELECT event_id, user_id, ts FROM events
-           UNION ALL
-           SELECT event_id, -1 AS user_id,
-             TIMESTAMP '2024-02-01 00:00:00'
-               + (event_id // 101) * INTERVAL 1 MINUTE AS ts
-           FROM events WHERE event_id % 101 = 0
-         ), g AS (
-           SELECT user_id,
-             CAST(floor(epoch_us(ts) / 1000000) AS BIGINT) AS s,
-             lag(CAST(floor(epoch_us(ts) / 1000000) AS BIGINT)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-           FROM base
-         ), gaps AS (
-           SELECT user_id, s - prev AS gap FROM g WHERE prev IS NOT NULL
-         ), a AS (
-           SELECT user_id, count(*) AS n_gaps,
-             sum(gap) AS sg, sum(gap * gap) AS qg
-           FROM gaps GROUP BY 1
-         ), scored AS (
-           SELECT user_id, n_gaps,
-             CAST(sg AS DOUBLE) / n_gaps AS mean,
-             (CAST(qg AS DOUBLE) - CAST(sg AS DOUBLE) * sg / n_gaps)
-               / n_gaps AS variance
-           FROM a WHERE n_gaps >= 5
-         ), rounded AS (
-           SELECT user_id, n_gaps,
-             floor(mean * 100.0 + 0.5) / 100.0 AS mean_gap_s,
-             CASE WHEN mean = 0.0 THEN 0.0
-                  ELSE floor(sqrt(variance) / mean * 10000.0 + 0.5) / 10000.0
-             END AS cv
-           FROM scored
-         )
-         SELECT user_id, n_gaps, mean_gap_s, cv, cv < 0.3 AS bot_like
-         FROM rounded""",
-
-    "q_mad_outliers" ->
-      """WITH v AS (
-           SELECT CAST(floor(
-             (CASE WHEN event_id % 97 = 0 THEN value * 50 ELSE value END)
-             * 100.0 + 0.5) AS BIGINT) AS c
-           FROM events
-         ), hist AS (
-           SELECT c, count(*) AS n FROM v GROUP BY c
-         ), cum AS (
-           SELECT c, n, sum(n) OVER (ORDER BY c) AS cum,
-             sum(n) OVER () AS tot
-           FROM hist
-         ), med AS (
-           SELECT min(CASE WHEN cum - 1 >= floor(0.5 * (tot - 1))
-             THEN c END) AS med FROM cum
-         ), dev AS (
-           SELECT abs(c - med.med) AS d, sum(n) AS n
-           FROM hist, med GROUP BY 1
-         ), dcum AS (
-           SELECT d, n, sum(n) OVER (ORDER BY d) AS cum,
-             sum(n) OVER () AS tot
-           FROM dev
-         ), mad AS (
-           SELECT min(CASE WHEN cum - 1 >= floor(0.5 * (tot - 1))
-             THEN d END) AS mad FROM dcum
-         )
-         SELECT CAST(sum(n) AS BIGINT) AS n,
-           max(med.med) AS median_cents,
-           max(mad.mad) AS mad_cents,
-           CAST(sum(CASE WHEN d * 10000 > mad.mad * 44478 THEN n ELSE 0 END)
-             AS BIGINT) AS n_outliers,
-           floor(CAST(sum(CASE WHEN d * 10000 > mad.mad * 44478 THEN n
-               ELSE 0 END) AS DOUBLE)
-             / sum(n) * 1000000.0 + 0.5) / 1000000.0 AS outlier_frac
-         FROM dev, mad, med""",
-
-    "q_change_points" ->
-      """WITH ev AS (
-           SELECT event_type,
-             CASE WHEN event_id % 2 = 0 AND ts < TIMESTAMP '2024-01-16 00:00:00'
-                  THEN ts + INTERVAL 15 DAY
-                  ELSE ts END AS ts
-           FROM events
-         ), daily AS (
-           SELECT event_type, date_trunc('day', ts) AS bucket,
-             count(*) AS n
-           FROM ev GROUP BY 1, 2
-         ), span AS (
-           SELECT event_type, min(bucket) AS b0, max(bucket) AS b1
-           FROM daily GROUP BY 1
-         ), grid AS (
-           SELECT event_type,
-             unnest(generate_series(b0, b1, INTERVAL 1 DAY)) AS bucket
-           FROM span
-         ), dense AS (
-           SELECT g.event_type, g.bucket, coalesce(d.n, 0) AS n
-           FROM grid g LEFT JOIN daily d USING (event_type, bucket)
-         ), f AS (
-           SELECT event_type, bucket, n,
-             count(n) OVER wpre AS c_pre, sum(n) OVER wpre AS s_pre,
-             sum(n * n) OVER wpre AS q_pre,
-             count(n) OVER wpost AS c_post, sum(n) OVER wpost AS s_post,
-             sum(n * n) OVER wpost AS q_post
-           FROM dense
-           WINDOW wpre AS (PARTITION BY event_type ORDER BY bucket
-             ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING),
-           wpost AS (PARTITION BY event_type ORDER BY bucket
-             ROWS BETWEEN CURRENT ROW AND 6 FOLLOWING)
-         ), scored AS (
-           SELECT event_type, bucket, n,
-             floor(((CAST(s_post AS DOUBLE) / 7 - CAST(s_pre AS DOUBLE) / 7)
-               / sqrt(((CAST(q_pre AS DOUBLE) - CAST(s_pre AS DOUBLE) * s_pre / 7) / 7
-                     + (CAST(q_post AS DOUBLE) - CAST(s_post AS DOUBLE) * s_post / 7) / 7)
-                   / 7 + 1e-9)) * 10000.0 + 0.5) / 10000.0 AS z
-           FROM f WHERE c_pre = 7 AND c_post = 7
-         )
-         SELECT event_type, strftime(bucket, '%Y-%m-%d') AS day,
-           CAST(n AS BIGINT) AS n_events, z, abs(z) >= 3.0 AS is_change
-         FROM scored""",
-
-    "q_freq_spectrum" ->
-      """WITH tc AS (
-           SELECT token, count(*) AS freq FROM (
-             SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-             FROM documents WHERE length(trim(lower(text))) > 0
-           ) t
-           WHERE length(token) > 0 GROUP BY token
-         ), voc AS (SELECT count(*) AS n_vocab FROM tc)
-         SELECT freq, count(*) AS n_types,
-           floor((CAST(count(*) AS DOUBLE) / voc.n_vocab) * 1000000.0 + 0.5)
-             / 1000000.0 AS vocab_share
-         FROM tc, voc GROUP BY freq, voc.n_vocab""",
-
-    "q_corpus_stats" ->
-      """WITH tc AS (
-           SELECT token, count(*) AS freq FROM (
-             SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS token
-             FROM documents WHERE length(trim(lower(text))) > 0
-           ) t
-           WHERE length(token) > 0 GROUP BY token
-         )
-         SELECT CAST(sum(freq) AS BIGINT) AS n_tokens,
-           count(*) AS n_types,
-           CAST(sum(CASE WHEN freq = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS hapax_types,
-           floor((CAST(sum(CASE WHEN freq = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-             / count(*)) * 1000000.0 + 0.5) / 1000000.0 AS hapax_frac,
-           floor((CAST(count(*) AS DOUBLE) / sum(freq)) * 1000000.0 + 0.5)
-             / 1000000.0 AS type_token_ratio
-         FROM tc""",
-
-    "q_domain_policy" ->
-      """WITH u AS (
-           SELECT doc_id,
-             lower(CASE WHEN doc_id % 5 = 0 THEN 'cdn.' ELSE '' END
-               || source || '-' || CAST(doc_id % 7 AS VARCHAR)
-               || '.example.com') AS host
-           FROM documents
-         ), unblocked AS (
-           SELECT doc_id, host FROM u
-           WHERE NOT EXISTS (
-             SELECT 1 FROM (VALUES ('src1-3.example.com'),
-               ('src2-1.example.com')) b(h)
-             WHERE u.host = b.h OR u.host LIKE '%.' || b.h)
-         ), ranked AS (
-           SELECT doc_id, host,
-             row_number() OVER (PARTITION BY host
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-           FROM unblocked
-         )
-         SELECT doc_id, host FROM ranked WHERE rn <= 3""",
-
-    // the big-blocklist form: identical semantics (the 2000 synthetic
-    // .invalid pads match no host), so the oracle is the same SQL
-    "q_domain_policy_big" ->
-      """WITH u AS (
-           SELECT doc_id,
-             lower(CASE WHEN doc_id % 5 = 0 THEN 'cdn.' ELSE '' END
-               || source || '-' || CAST(doc_id % 7 AS VARCHAR)
-               || '.example.com') AS host
-           FROM documents
-         ), unblocked AS (
-           SELECT doc_id, host FROM u
-           WHERE NOT EXISTS (
-             SELECT 1 FROM (VALUES ('src1-3.example.com'),
-               ('src2-1.example.com')) b(h)
-             WHERE u.host = b.h OR u.host LIKE '%.' || b.h)
-         ), ranked AS (
-           SELECT doc_id, host,
-             row_number() OVER (PARTITION BY host
-               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-           FROM unblocked
-         )
-         SELECT doc_id, host FROM ranked WHERE rn <= 3""",
-
-    "q_token_count" ->
-      """SELECT doc_id,
-           CAST(CASE WHEN length(trim(lower(text))) = 0 THEN 0
-                     ELSE len(string_split_regex(trim(lower(text)), '\s+')) END AS BIGINT)
-             AS ws_tokens,
-           CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT)
-             AS bpe_tokens
-         FROM documents""",
-
-    "q_repetition_stats" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), tb AS (
-           SELECT doc_id, toks,
-             CASE WHEN len(toks) < 2 THEN CAST([] AS VARCHAR[])
-                  ELSE list_transform(range(1, len(toks)),
-                         i -> toks[i] || ' ' || toks[i + 1]) END AS bigs
-           FROM t
-         ), unimx AS (
-           SELECT doc_id, max(c) AS mx FROM (
-             SELECT doc_id, tok, count(*) AS c
-             FROM t, unnest(toks) AS u(tok) GROUP BY doc_id, tok
-           ) GROUP BY doc_id
-         ), bigmx AS (
-           SELECT doc_id, max(c) AS mx FROM (
-             SELECT doc_id, bg, count(*) AS c
-             FROM tb, unnest(bigs) AS u(bg) GROUP BY doc_id, bg
-           ) GROUP BY doc_id
-         ), r AS (
-           SELECT tb.doc_id,
-             CAST(len(toks) AS BIGINT) AS n_words,
-             floor((CASE WHEN len(toks) = 0 THEN 0.0
-                    ELSE 1.0 - CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) END)
-               * 10000.0 + 0.5) / 10000.0 AS dup_word_frac,
-             floor((CASE WHEN len(toks) = 0 THEN 0.0
-                    ELSE CAST(coalesce(unimx.mx, 0) AS DOUBLE) / len(toks) END)
-               * 10000.0 + 0.5) / 10000.0 AS top_unigram_frac,
-             floor((CASE WHEN len(bigs) = 0 THEN 0.0
-                    ELSE CAST(coalesce(bigmx.mx, 0) AS DOUBLE) / len(bigs) END)
-               * 10000.0 + 0.5) / 10000.0 AS top_bigram_frac,
-             floor((CASE WHEN len(toks) = 0 THEN 0.0
-                    ELSE CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE)
-                         / len(toks) END)
-               * 10000.0 + 0.5) / 10000.0 AS mean_word_len
-           FROM tb
-           LEFT JOIN unimx USING (doc_id) LEFT JOIN bigmx USING (doc_id)
-         )
-         SELECT *, CAST(CASE WHEN dup_word_frac > 0.5 OR top_bigram_frac > 0.2
-                              OR mean_word_len < 2.0 THEN 1 ELSE 0 END AS BIGINT)
-           AS flagged
-         FROM r""",
-
-    "q_gopher_rules" ->
-      """WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL SELECT 20000001,
-             repeat('- alpha beta gamma delta epsilon zeta eta theta iota kappa' || chr(10), 10)
-           UNION ALL SELECT 20000002,
-             repeat('we continued into the night...' || chr(10), 10)
-           UNION ALL SELECT 20000003, 'too short'
-           UNION ALL SELECT 20000004,
-             repeat('the tag # of # and # that # have # with #' || chr(10), 6)
-           UNION ALL SELECT 20000005,
-             repeat('the quick brown fox jumps over that lazy dog to be of and have with great zeal ', 5)
-         ), t AS (
-           SELECT doc_id, text,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks,
-             string_split(text, chr(10)) AS lns
-           FROM corpus
-         ), sig AS (
-           SELECT doc_id,
-             len(toks) AS word_count,
-             len(list_filter(toks, x -> list_contains(
-               ['the','be','to','of','and','that','have','with'], x))) AS stopword_hits,
-             CASE WHEN len(toks) = 0 THEN 0.0
-                  ELSE CAST(len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-                       / len(toks) END AS alpha_word_ratio,
-             CASE WHEN len(toks) = 0 THEN 0.0
-                  ELSE CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE)
-                       / len(toks) END AS mean_word_len,
-             CASE WHEN len(toks) = 0 THEN 0.0
-                  ELSE CAST(len(regexp_extract_all(text, '#|\.{3}|…')) AS DOUBLE)
-                       / len(toks) END AS symbol_word_ratio,
-             CAST(len(list_filter(lns, x -> regexp_matches(x, '^\s*[-*•]'))) AS DOUBLE)
-               / len(lns) AS bullet_line_ratio,
-             CAST(len(list_filter(lns, x -> regexp_matches(x, '(\.{3}|…)\s*$'))) AS DOUBLE)
-               / len(lns) AS ellipsis_line_ratio
-           FROM t
-         )
-         SELECT doc_id, word_count, stopword_hits,
-           floor(alpha_word_ratio*10000+0.5)/10000 AS alpha_word_ratio,
-           floor(mean_word_len*100+0.5)/100 AS mean_word_len,
-           floor(symbol_word_ratio*10000+0.5)/10000 AS symbol_word_ratio,
-           floor(bullet_line_ratio*10000+0.5)/10000 AS bullet_line_ratio,
-           floor(ellipsis_line_ratio*10000+0.5)/10000 AS ellipsis_line_ratio,
-           ((word_count BETWEEN 50 AND 100000)
-             AND (mean_word_len BETWEEN 3.0 AND 10.0)
-             AND symbol_word_ratio <= 0.1
-             AND bullet_line_ratio <= 0.9
-             AND ellipsis_line_ratio <= 0.3
-             AND alpha_word_ratio >= 0.8
-             AND stopword_hits >= 2) AS keep
-         FROM sig""",
-
-    "q_ccnet_buckets" ->
-      """WITH t AS (
-           SELECT doc_id, lang,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks,
-             text
-           FROM documents
-         ), q AS (
-           SELECT doc_id, lang,
-             floor((least(CAST(len(toks) AS DOUBLE) / 50.0, 1.0)
-               + (CASE WHEN length(text) = 0 THEN 0.0
-                       ELSE CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE) / length(text) END)
-               + least((CASE WHEN len(toks) = 0 THEN 0.0
-                             ELSE CAST(len(list_filter(toks,
-                                    x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE)
-                                  / len(toks) END) * 4.0, 1.0)
-               ) / 3.0 * 10000.0 + 0.5) / 10000.0 AS score
-           FROM t
-         ), h AS (
-           SELECT lang, score, CAST(count(*) AS BIGINT) AS c
-           FROM q GROUP BY 1, 2
-         ), cum AS (
-           SELECT lang, score,
-             coalesce(sum(c) OVER (PARTITION BY lang ORDER BY score DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS better,
-             sum(c) OVER (PARTITION BY lang) AS n
-           FROM h
-         )
-         SELECT q.doc_id, q.lang, q.score,
-           floor(CAST(better AS DOUBLE) / n * 10000.0 + 0.5) / 10000.0
-             AS frac_better,
-           CASE WHEN CAST(better AS DOUBLE) / n < 0.3 THEN 'head'
-                WHEN CAST(better AS DOUBLE) / n < 0.7 THEN 'middle'
-                ELSE 'tail' END AS bucket
-         FROM q JOIN cum ON q.lang = cum.lang AND q.score = cum.score""",
-
-    "q_weighted_sample" ->
-      """WITH t AS (
-           SELECT doc_id, text,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), q AS (
-           SELECT doc_id,
-             floor((least(CAST(len(toks) AS DOUBLE) / 50.0, 1.0)
-               + (CASE WHEN length(text) = 0 THEN 0.0
-                       ELSE CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE) / length(text) END)
-               + least((CASE WHEN len(toks) = 0 THEN 0.0
-                             ELSE CAST(len(list_filter(toks,
-                                    x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE)
-                                  / len(toks) END) * 4.0, 1.0)
-               ) / 3.0 * 10000.0 + 0.5) / 10000.0 AS quality
-           FROM t
-         )
-         SELECT doc_id, quality FROM q
-         WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#7'), 1, 8))
-                 AS BIGINT) / 4294967296.0 < quality""",
-
-    "q_mix_report" ->
-      """WITH t AS (
-           SELECT regexp_replace(source, '[0-9]+$', '') AS src_family, lang,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks,
-             text
-           FROM documents
-         ), q AS (
-           SELECT src_family, lang, CAST(len(toks) AS BIGINT) AS n_tok,
-             floor((least(CAST(len(toks) AS DOUBLE) / 50.0, 1.0)
-               + (CASE WHEN length(text) = 0 THEN 0.0
-                       ELSE CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE) / length(text) END)
-               + least((CASE WHEN len(toks) = 0 THEN 0.0
-                             ELSE CAST(len(list_filter(toks,
-                                    x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE)
-                                  / len(toks) END) * 4.0, 1.0)
-               ) / 3.0 * 10000.0 + 0.5) / 10000.0 AS quality
-           FROM t
-         ), per AS (
-           SELECT src_family, lang, count(*) AS n_docs,
-             CAST(sum(n_tok) AS BIGINT) AS sum_tokens,
-             sum(CAST(floor(quality * 10000.0 + 0.5) AS BIGINT)) AS qsum
-           FROM q GROUP BY src_family, lang
-         )
-         SELECT src_family, lang, n_docs, sum_tokens,
-           floor(CAST(qsum AS DOUBLE) / (n_docs * 10000.0) * 10000.0 + 0.5) / 10000.0
-             AS mean_quality,
-           floor(CAST(sum_tokens AS DOUBLE)
-             / (SELECT sum(sum_tokens) FROM per) * 10000.0 + 0.5) / 10000.0
-             AS token_share
-         FROM per
-         ORDER BY src_family ASC, lang ASC""",
-
-    "q_stratified_sample" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-         WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#11'), 1, 8))
-                 AS BIGINT) / 4294967296.0
-               < (CASE WHEN lang = 'en' THEN 0.6
-                       WHEN lang IN ('es', 'de') THEN 0.3
-                       ELSE 0.1 END)""",
-
-    "q_xml_roundtrip" ->
-      // CAST: parquet n_regionkey is INT32 in DuckDB but the XML read-back
-      // schema is LongType; DuckDB sum(BIGINT) widens to HUGEINT (which the
-      // driver materializes as float64) — pin both to BIGINT.
-      """SELECT CAST(n_regionkey AS BIGINT) AS n_regionkey, count(*) AS n_nations,
-           CAST(sum(n_nationkey) AS BIGINT) AS sum_key, min(n_name) AS first_name
-         FROM nation GROUP BY 1""",
-
-    "q_stream_dedup" ->
-      """SELECT event_type, count(*) AS n_events,
-           CAST(sum(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0
-             AS sum_value
-         FROM events GROUP BY event_type""",
-
-    "q_stream_ingest_dedup" ->
-      """WITH hist AS (
-           SELECT DISTINCT text FROM documents
-         ), incoming AS (
-           SELECT doc_id, text, source FROM documents
-           UNION ALL
-           SELECT doc_id, 'fresh ' || CAST(doc_id AS VARCHAR) || ' ' || text AS text, source
-           FROM documents
-         ), novel AS (
-           SELECT i.* FROM incoming i
-           WHERE NOT EXISTS (SELECT 1 FROM hist h WHERE h.text = i.text)
-         )
-         SELECT source, count(*) AS n_docs,
-           CAST(sum(length(text)) AS BIGINT) AS n_chars
-         FROM novel GROUP BY source""",
-
-    "q_embedding_standardize" ->
-      """WITH g AS (
-           SELECT vec_id, len(embedding) AS d,
-             generate_subscripts(embedding, 1) AS pos,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings
-         ), ixed AS (
-           SELECT vec_id, pos, d,
-             CAST(floor(x * 1000000.0 + 0.5) AS BIGINT) AS ix
-           FROM g
-         ), mom AS (
-           SELECT pos, count(*) AS n, sum(ix) AS s,
-             sum(CAST(ix AS HUGEINT) * ix) AS q
-           FROM ixed GROUP BY pos
-         ), st AS (
-           SELECT pos, CAST(s AS DOUBLE) / n AS mean,
-             sqrt((CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * s / n) / n) AS std
-           FROM mom
-         ), zs AS (
-           SELECT i.vec_id, i.d,
-             CASE WHEN st.std = 0.0 THEN 0
-                  ELSE CAST(floor((CAST(i.ix AS DOUBLE) - st.mean) / st.std
-                    * 10000.0 + 0.5) AS BIGINT) END AS z
-           FROM ixed i JOIN st USING (pos)
-         )
-         SELECT vec_id, CAST(max(d) AS BIGINT) AS n_dims,
-           CAST(sum(z) AS BIGINT) AS z_sum, CAST(max(z) AS BIGINT) AS z_max
-         FROM zs GROUP BY vec_id""",
-
-    "q_char_diversity" ->
-      // explode + groupBy char counts — a different plan computing
-      // the same exact integers as the Spark sorted-run fold (the
-      // cross-engine witness); simpson is one IEEE division + floor
-      """WITH base AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 211 = 7
-                  THEN repeat('a', CAST(50 + doc_id % 100 AS INT))
-                  ELSE text END AS text
-           FROM documents
-         ), ch AS (
-           SELECT doc_id, unnest(list_transform(range(1, length(text) + 1),
-             i -> text[i])) AS c
-           FROM base WHERE length(text) > 0
-         ), hist AS (
-           SELECT doc_id, c, count(*) AS n FROM ch GROUP BY 1, 2
-         ), agg AS (
-           SELECT doc_id, sum(n) AS n_chars, count(*) AS distinct_chars,
-             max(n) AS max_char_n, sum(n * n) AS sumsq
-           FROM hist GROUP BY doc_id
-         ), rep AS (
-           SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-             CAST(distinct_chars AS BIGINT) AS distinct_chars,
-             CAST(max_char_n AS BIGINT) AS max_char_n,
-             floor(CAST(sumsq AS DOUBLE) / (CAST(n_chars AS DOUBLE) * n_chars)
-               * 10000 + 0.5) / 10000.0 AS simpson
-           FROM agg
-           UNION ALL
-           SELECT doc_id, 0, 0, 0, 0.0 FROM base WHERE length(text) = 0
-         )
-         SELECT doc_id, n_chars, distinct_chars, max_char_n, simpson,
-           (n_chars > 0 AND (CAST(max_char_n AS DOUBLE) / n_chars > 0.2
-              OR simpson > 0.1)) AS flagged
-         FROM rep""",
-
-    "q_robust_scale" ->
-      // rank-exact quartiles per dim (smallest value whose running
-      // count passes floor(p·(n−1)) — the RobustStats rule), so the
-      // scaled integer checksums replay exactly
-      """WITH g AS (
-           SELECT vec_id, len(embedding) AS d,
-             generate_subscripts(embedding, 1) AS pos,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings
-         ), ixed AS (
-           SELECT vec_id, pos, d,
-             CAST(floor(x * 1000000.0 + 0.5) AS BIGINT) AS ix
-           FROM g
-         ), hist AS (
-           SELECT pos, ix AS v, count(*) AS n FROM ixed GROUP BY 1, 2
-         ), cum AS (
-           SELECT pos, v, n,
-             sum(n) OVER (PARTITION BY pos ORDER BY v) AS cum,
-             sum(n) OVER (PARTITION BY pos) AS tot
-           FROM hist
-         ), st AS (
-           SELECT pos,
-             min(CASE WHEN cum - 1 >= floor(0.25 * (tot - 1)) THEN v END) AS q1,
-             min(CASE WHEN cum - 1 >= floor(0.5 * (tot - 1)) THEN v END) AS med,
-             min(CASE WHEN cum - 1 >= floor(0.75 * (tot - 1)) THEN v END) AS q3
-           FROM cum GROUP BY pos
-         ), rs AS (
-           SELECT i.vec_id, i.d,
-             CASE WHEN st.q3 = st.q1 THEN 0
-                  ELSE CAST(floor(CAST(i.ix - st.med AS DOUBLE)
-                         / (st.q3 - st.q1) * 10000.0 + 0.5) AS BIGINT) END AS r
-           FROM ixed i JOIN st USING (pos)
-         )
-         SELECT vec_id, CAST(max(d) AS BIGINT) AS n_dims,
-           CAST(sum(r) AS BIGINT) AS r_sum, CAST(max(r) AS BIGINT) AS r_max
-         FROM rs GROUP BY vec_id""",
-
-    "q_sq8_quantize" ->
-      """WITH ex AS (
-           SELECT generate_subscripts(embedding, 1) AS pos,
-             CAST(unnest(embedding) AS DOUBLE) AS x
-           FROM embeddings
-         ), s AS (
-           SELECT pos, min(x) AS mn, max(x) AS mx FROM ex GROUP BY pos
-         ), arrs AS (
-           SELECT list(mn ORDER BY pos) AS mns, list(mx ORDER BY pos) AS mxs FROM s
-         ), enc AS (
-           SELECT vec_id, embedding,
-             list_transform(range(1, len(embedding) + 1), i ->
-               CASE WHEN mxs[i] = mns[i] THEN 0
-                    ELSE CAST(floor((CAST(embedding[i] AS DOUBLE) - mns[i])
-                           / (mxs[i] - mns[i]) * 255.0 + 0.5) AS BIGINT) END) AS codes,
-             list_transform(range(1, len(embedding) + 1), i ->
-               CASE WHEN mxs[i] = mns[i] THEN 0
-                    ELSE CAST(floor(abs(CAST(embedding[i] AS DOUBLE)
-                           - (mns[i] + floor((CAST(embedding[i] AS DOUBLE) - mns[i])
-                                / (mxs[i] - mns[i]) * 255.0 + 0.5)
-                              * (mxs[i] - mns[i]) / 255.0)) * 1000000000.0 + 0.5)
-                         AS BIGINT) END) AS errs
-           FROM embeddings, arrs
-         )
-         SELECT vec_id, CAST(len(embedding) AS BIGINT) AS n_dims,
-           CAST(list_sum(codes) AS BIGINT) AS code_sum,
-           CAST(list_max(errs) AS BIGINT) AS max_err_ppb,
-           CAST(list_sum(errs) AS BIGINT) AS sum_err_ppb
-         FROM enc""",
-
-    // all 10 nano-integer power iterations replayed as chained CTEs
-    // (generated — one identical CTE per iteration); integral
-    // division (`//`) mirrors Spark's `div` everywhere
-    "q_pagerank" -> pagerankOracleSql(10),
-
-    // the planted dHash trios: per base k — copy at hamming 0,
-    // one-cell variant at hamming 1 (each black cell = exactly one
-    // local bit flip on the gradient); nothing else within hamming 1
-    "q_image_phash" ->
-      """SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-           CAST(hamming AS BIGINT) AS hamming
-         FROM (VALUES
-           (0, 100, 0), (0, 200, 1), (100, 200, 1),
-           (1, 101, 0), (1, 201, 1), (101, 201, 1),
-           (2, 102, 0), (2, 202, 1), (102, 202, 1),
-           (3, 103, 0), (3, 203, 1), (103, 203, 1)
-         ) AS t(id_a, id_b, hamming)""",
-
-    "q_multimodal" ->
-      """SELECT CAST(media_id AS BIGINT) AS media_id, media_type,
-           CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-           CAST(duration_ms AS BIGINT) AS duration_ms,
-           CAST(feat_ok AS BOOLEAN) AS feat_ok
-         FROM (VALUES
-           (0, 'image', 32, 24, NULL, TRUE), (1, 'image', 32, 24, NULL, TRUE),
-           (2, 'image', 32, 24, NULL, TRUE), (3, 'image', 32, 24, NULL, TRUE),
-           (4, 'image', 32, 24, NULL, TRUE), (5, 'image', 32, 24, NULL, TRUE),
-           (6, 'image', 32, 24, NULL, TRUE), (7, 'image', 32, 24, NULL, TRUE),
-           (100, 'audio', NULL, NULL, 250, TRUE), (101, 'audio', NULL, NULL, 250, TRUE),
-           (102, 'audio', NULL, NULL, 250, TRUE), (103, 'audio', NULL, NULL, 250, TRUE)
-         ) AS t(media_id, media_type, width, height, duration_ms, feat_ok)""",
-
-    // a-priori oracle: syntheticMedia payloads are 128 hash-derived
-    // bytes; video rows are ids ≡ 2 (mod 3); stub decode leaves
-    // width/height/duration null; 4 sampled frames of 16 bytes each;
-    // meta codec (id%2 of two fakes) and duration (1000+750·(id%4))
-    // pass through untouched — the id-varied values make the hash
-    // compare a degeneracy tripwire: constant-metadata regressions
-    // (e.g. a passthrough that drops to a default) go red here
-    "q_multimodal_video" ->
-      """SELECT CAST(media_id AS BIGINT) AS media_id, media_type,
-           CAST(n_bytes AS BIGINT) AS n_bytes,
-           CAST(width AS INT) AS width, CAST(height AS INT) AS height,
-           CAST(duration_ms AS BIGINT) AS duration_ms,
-           codec, CAST(meta_duration_ms AS BIGINT) AS meta_duration_ms,
-           CAST(n_frames AS BIGINT) AS n_frames,
-           CAST(max_frame_bytes AS BIGINT) AS max_frame_bytes,
-           CAST(feat_ok AS BOOLEAN) AS feat_ok
-         FROM (VALUES
-           (2, 'video', 128, NULL, NULL, NULL, 'fakeh264', 2500, 4, 16, TRUE),
-           (5, 'video', 128, NULL, NULL, NULL, 'fakeav1', 1750, 4, 16, TRUE),
-           (8, 'video', 128, NULL, NULL, NULL, 'fakeh264', 1000, 4, 16, TRUE),
-           (11, 'video', 128, NULL, NULL, NULL, 'fakeav1', 3250, 4, 16, TRUE)
-         ) AS t(media_id, media_type, n_bytes, width, height, duration_ms,
-                codec, meta_duration_ms, n_frames, max_frame_bytes, feat_ok)""",
-
-    "q_chunk_overlap" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), ch AS (
-           SELECT doc_id,
-             CASE WHEN len(toks) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE list_transform(
-                    range(0, greatest(CAST(ceil((len(toks) - 8) / 4.0) AS BIGINT), 0) + 1),
-                    i -> array_to_string(toks[(i*4+1):(i*4+8)], ' '))
-             END AS cs
-           FROM t
-         )
-         SELECT doc_id,
-           CAST(generate_subscripts(cs, 1) - 1 AS BIGINT) AS chunk_id,
-           unnest(cs) AS chunk
-         FROM ch""",
-
-    "q_percentile_sketch_check" ->
-      // the rank-exact values are the compared payload; the sketch's
-      // envelope verdicts are pinned TRUE
-      """WITH r AS (
-           SELECT event_type, value,
-             row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-             count(*) OVER (PARTITION BY event_type) AS n
-           FROM events
-         )
-         SELECT event_type, CAST(p * 100 AS BIGINT) AS p_pct,
-           value AS exact_value, TRUE AS within_bound
-         FROM r, unnest([0.5, 0.9, 0.99]) AS t(p)
-         WHERE rn - 1 = floor(p * (n - 1))""",
-
-    "q_sampled_profile_check" ->
-      // the exact row count is the compared payload; the sampling
-      // property verdicts are pinned TRUE
-      """SELECT count(*) AS n_rows, TRUE AS size_ok, TRUE AS mean_ok
-         FROM events""",
-
-    "q_hist_store_check" ->
-      // exact per-part row/bucket counts compared; the within-one-
-      // bucket percentile property pinned TRUE
-      """WITH c AS (
-           SELECT CAST(year(o_orderdate) AS BIGINT) AS part,
-                  CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-           FROM orders
-         ), nb AS (
-           SELECT part, count(*) AS n_rows,
-                  count(DISTINCT floor(cents / 1000)) AS n_buckets
-           FROM c GROUP BY 1
-         )
-         SELECT part, p_pct, n_rows, n_buckets, TRUE AS within_width
-         FROM nb, unnest([CAST(50 AS BIGINT), CAST(95 AS BIGINT)]) AS t(p_pct)""",
-
-    "q_group_percentiles" ->
-      """WITH r AS (
-           SELECT event_type, value,
-             row_number() OVER (PARTITION BY event_type ORDER BY value) AS rn,
-             count(*) OVER (PARTITION BY event_type) AS n
-           FROM events
-         )
-         SELECT event_type, p, value
-         FROM r, unnest([0.5, 0.95, 0.99]) AS t(p)
-         WHERE rn - 1 = floor(p * (n - 1))""",
-
-    "q_winsorize" ->
-      // rank-exact bounds on cent longs (value at 0-indexed rank
-      // floor(p*(n-1))) — mirrors Normalizer.winsorizeCentRank; no
-      // engine quantile interpolation anywhere
-      """WITH c AS (
-           SELECT CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS v
-           FROM lineitem
-         ), r AS (
-           SELECT v, row_number() OVER (ORDER BY v) AS rn, count(*) OVER () AS n
-           FROM c
-         ), b AS (
-           SELECT min(CASE WHEN rn - 1 >= floor(0.01 * (n - 1)) THEN v END) AS lo,
-                  min(CASE WHEN rn - 1 >= floor(0.99 * (n - 1)) THEN v END) AS hi
-           FROM r
-         ), w AS (
-           SELECT least(greatest(v, lo), hi) AS wv,
-                  CASE WHEN v < lo THEN -1 WHEN v > hi THEN 1 ELSE 0 END AS clip
-           FROM c, b
-         )
-         SELECT CAST(sum(CASE WHEN clip = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_clip_lo,
-           CAST(sum(CASE WHEN clip = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_clip_hi,
-           CAST(sum(wv) AS DOUBLE) / 100.0 AS sum_w,
-           CAST(min(wv) AS DOUBLE) / 100.0 AS min_w,
-           CAST(max(wv) AS DOUBLE) / 100.0 AS max_w
-         FROM w""",
-
-    "q_hopping_windows" ->
-      """WITH e AS (
-           SELECT event_type,
-             CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS vc,
-             CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800 AS slot
-           FROM events
-         ), w AS (
-           SELECT event_type, vc,
-             TIMESTAMP '1970-01-01 00:00:00' + (slot - h * 1800) * INTERVAL 1 SECOND
-               AS window_start
-           FROM e, unnest([0, 1]) AS t(h)
-         )
-         SELECT window_start, event_type, count(*) AS n_events,
-           CAST(sum(vc) AS DOUBLE) / 100.0 AS sum_value
-         FROM w GROUP BY window_start, event_type""",
-
-    "q_active_users_7d" ->
-      """WITH daily AS (
-           SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
-           FROM events
-         ), contrib AS (
-           SELECT day + off AS window_day, user_id
-           FROM daily, unnest([0, 1, 2, 3, 4, 5, 6]) AS t(off)
-         )
-         SELECT strftime(window_day, '%Y-%m-%d') AS window_day,
-           count(DISTINCT user_id) AS active_users
-         FROM contrib
-         WHERE window_day IN (SELECT day FROM daily)
-         GROUP BY 1""",
-
-    "q_rolling_zscore" ->
-      """WITH e AS (
-           SELECT event_id, user_id,
-             CAST(floor(epoch(ts)) AS BIGINT) AS es,
-             CAST(floor((CASE WHEN event_id % 997 = 0 THEN value * 50.0
-                              ELSE value END) * 100.0 + 0.5) AS BIGINT) AS vc
-           FROM events
-         ), m AS (
-           SELECT event_id, user_id, vc,
-             count(*) OVER w AS n_window,
-             sum(vc) OVER w AS s1,
-             sum(vc * vc) OVER w AS s2
-           FROM e
-           WINDOW w AS (PARTITION BY user_id ORDER BY es
-                        RANGE BETWEEN 604800 PRECEDING AND CURRENT ROW)
-         ), v AS (
-           SELECT event_id, user_id, vc, n_window,
-             CAST(s1 AS DOUBLE) / n_window AS mean,
-             CASE WHEN n_window < 2 THEN 0.0
-                  ELSE greatest((CAST(s2 AS DOUBLE)
-                         - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n_window)
-                         / (n_window - 1), 0.0) END AS var
-           FROM m
-         )
-         SELECT event_id, user_id, n_window,
-           CASE WHEN var = 0.0 THEN 0.0
-                ELSE floor((CAST(vc AS DOUBLE) - mean) / sqrt(var)
-                       * 10000.0 + 0.5) / 10000.0 END AS zscore,
-           (abs(CASE WHEN var = 0.0 THEN 0.0
-                ELSE floor((CAST(vc AS DOUBLE) - mean) / sqrt(var)
-                       * 10000.0 + 0.5) / 10000.0 END) > 3.0) AS is_anomaly
-         FROM v""",
-
-    "q_funnel" ->
-      """WITH v AS (
-           SELECT user_id, min(ts) AS t FROM events
-           WHERE event_type = 'view' GROUP BY user_id
-         ), c AS (
-           SELECT e.user_id, min(e.ts) AS t FROM events e JOIN v USING (user_id)
-           WHERE e.event_type = 'click' AND e.ts > v.t GROUP BY e.user_id
-         ), p AS (
-           SELECT e.user_id, min(e.ts) AS t FROM events e JOIN c USING (user_id)
-           WHERE e.event_type = 'purchase' AND e.ts > c.t GROUP BY e.user_id
-         ), s AS (
-           SELECT 'view' AS step, (SELECT count(*) FROM v) AS n_users
-           UNION ALL
-           SELECT 'view>click', (SELECT count(*) FROM c)
-           UNION ALL
-           SELECT 'view>click>purchase', (SELECT count(*) FROM p)
-         )
-         SELECT step, n_users,
-           CASE WHEN (SELECT count(*) FROM v) = 0 THEN 0.0
-                ELSE floor(n_users * 100.0 / (SELECT count(*) FROM v)
-                       * 10000.0 + 0.5) / 10000.0 END AS conv_pct
-         FROM s""",
-
-    "q_cohort_retention" ->
-      """WITH f AS (
-           SELECT user_id,
-             CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
-           FROM events GROUP BY user_id
-         ), a AS (
-           SELECT e.user_id, f.cohort_week,
-             CAST(date_trunc('week', e.ts) AS DATE) AS activity_week
-           FROM events e JOIN f USING (user_id)
-         )
-         SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort_week,
-           CAST(date_diff('day', cohort_week, activity_week) / 7 AS BIGINT)
-             AS week_offset,
-           count(DISTINCT user_id) AS n_users
-         FROM a GROUP BY 1, 2""",
-
-    "q_rolling_agg" ->
-      """WITH e AS (
-           SELECT event_id, user_id,
-             CAST(floor(epoch(ts)) AS BIGINT) AS es,
-             CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS vc
-           FROM events
-         )
-         SELECT event_id, user_id,
-           count(*) OVER w AS n_window,
-           CAST(sum(vc) OVER w AS DOUBLE) / 100.0 AS sum_window
-         FROM e
-         WINDOW w AS (PARTITION BY user_id ORDER BY es
-                      RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)""",
-
-    "q_passage_dedup" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), ch AS (
-           SELECT doc_id, list_transform(range(0, CAST(ceil(len(toks) / 8.0) AS BIGINT)),
-                    i -> array_to_string(toks[(i*8+1):(i*8+8)], ' ')) AS ps
-           FROM t
-         ), occ AS (
-           SELECT doc_id, unnest(ps) AS p FROM ch
-         ), hot AS (
-           SELECT p FROM occ GROUP BY p HAVING count(DISTINCT doc_id) >= 2
-         ), spd AS (
-           SELECT doc_id, count(*) AS n_shared FROM occ
-           WHERE p IN (SELECT p FROM hot) GROUP BY doc_id
-         )
-         SELECT ch.doc_id, CAST(len(ps) AS BIGINT) AS n_passages,
-           coalesce(n_shared, 0) AS n_shared,
-           CASE WHEN len(ps) = 0 THEN 0.0
-                ELSE floor(CAST(coalesce(n_shared, 0) AS DOUBLE) / len(ps)
-                       * 10000.0 + 0.5) / 10000.0 END AS shared_frac
-         FROM ch LEFT JOIN spd USING (doc_id)""",
-
-    "q_passage_clean" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), ch AS (
-           SELECT doc_id, list_transform(range(0, CAST(ceil(len(toks) / 8.0) AS BIGINT)),
-                    i -> array_to_string(toks[(i*8+1):(i*8+8)], ' ')) AS ps
-           FROM t
-         ), occ AS (
-           SELECT doc_id, unnest(ps) AS p, generate_subscripts(ps, 1) AS pos FROM ch
-         ), hot AS (
-           SELECT p FROM occ GROUP BY p HAVING count(DISTINCT doc_id) >= 2
-         )
-         SELECT doc_id, string_agg(p, ' ' ORDER BY pos) AS clean_text
-         FROM occ WHERE p NOT IN (SELECT p FROM hot)
-         GROUP BY doc_id""",
-
-    "q_tfidf" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), tok AS (
-           SELECT doc_id, unnest(toks) AS term FROM t
-         ), tf AS (
-           SELECT doc_id, term, count(*) AS tf FROM tok
-           WHERE length(term) > 0 GROUP BY doc_id, term
-         ), df AS (
-           SELECT term, count(*) AS df FROM tf GROUP BY term
-         ), n AS (
-           SELECT count(*) AS n_docs FROM documents
-         ), sc AS (
-           SELECT doc_id, term, tf,
-             floor(CAST(tf AS DOUBLE) * (ln((1.0 + n_docs) / (1.0 + df)) + 1.0)
-               * 10000.0 + 0.5) / 10000.0 AS tfidf
-           FROM tf JOIN df USING (term), n
-         ), r AS (
-           SELECT *, row_number() OVER (
-             PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rk
-           FROM sc
-         )
-         SELECT doc_id, term, tf, tfidf, CAST(rk AS BIGINT) AS rk
-         FROM r WHERE rk <= 3""",
-
-    "q_quality_score" ->
-      """WITH t AS (
-           SELECT doc_id, text,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         )
-         SELECT doc_id,
-           floor((least(CAST(len(toks) AS DOUBLE) / 50.0, 1.0)
-             + (CASE WHEN length(text) = 0 THEN 0.0
-                     ELSE CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE) / length(text) END)
-             + least((CASE WHEN len(toks) = 0 THEN 0.0
-                           ELSE CAST(len(list_filter(toks,
-                                  x -> list_contains(['the','a','of','and','to','in'], x))) AS DOUBLE)
-                                / len(toks) END) * 4.0, 1.0)
-             ) / 3.0 * 10000.0 + 0.5) / 10000.0 AS quality,
-           floor((CASE WHEN len(toks) = 0 THEN 0.0
-                      ELSE CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE)
-                           / len(toks) END) * 100.0 + 0.5) / 100.0 AS mean_token_len,
-           floor((CASE WHEN length(text) = 0 THEN 0.0
-                      ELSE CAST(len(regexp_extract_all(text, '[A-Za-z]')) AS DOUBLE)
-                           / length(text) END) * 10000.0 + 0.5) / 10000.0 AS alpha_ratio
-         FROM t""",
-
-    "q_lang_id" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), s AS (
-           SELECT doc_id,
-             len(list_filter(toks, x -> list_contains(['the','a'], x))) AS s_en,
-             len(list_filter(toks, x -> list_contains(['el','la','los'], x))) AS s_es,
-             len(list_filter(toks, x -> list_contains(['der','die','und'], x))) AS s_de,
-             len(list_filter(toks, x -> list_contains(['le','les','et'], x))) AS s_fr
-           FROM t
-         )
-         SELECT doc_id,
-           CASE WHEN greatest(s_en, s_es, s_de, s_fr) = 0 THEN 'und'
-                WHEN s_en = greatest(s_en, s_es, s_de, s_fr) THEN 'en'
-                WHEN s_es = greatest(s_en, s_es, s_de, s_fr) THEN 'es'
-                WHEN s_de = greatest(s_en, s_es, s_de, s_fr) THEN 'de'
-                ELSE 'fr' END AS lang_pred
-         FROM s""",
-
-    "q_lang_eval" ->
-      """WITH t AS (
-           SELECT doc_id, lang,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), s AS (
-           SELECT doc_id, lang,
-             len(list_filter(toks, x -> list_contains(['the','a'], x))) AS s_en,
-             len(list_filter(toks, x -> list_contains(['el','la','los'], x))) AS s_es,
-             len(list_filter(toks, x -> list_contains(['der','die','und'], x))) AS s_de,
-             len(list_filter(toks, x -> list_contains(['le','les','et'], x))) AS s_fr
-           FROM t
-         ), p AS (
-           SELECT doc_id, lang,
-             CASE WHEN greatest(s_en, s_es, s_de, s_fr) = 0 THEN 'und'
-                  WHEN s_en = greatest(s_en, s_es, s_de, s_fr) THEN 'en'
-                  WHEN s_es = greatest(s_en, s_es, s_de, s_fr) THEN 'es'
-                  WHEN s_de = greatest(s_en, s_es, s_de, s_fr) THEN 'de'
-                  ELSE 'fr' END AS lang_pred
-           FROM s
-         )
-         SELECT lang, lang_pred, count(*) AS n FROM p GROUP BY lang, lang_pred""",
-
-    // exact mirror of NgramJaccard.summary(k=3, maxDf=100): shingling
-    // (distinct word 3-grams; short docs → whole text), df-capped
-    // inverted index (HAVING df BETWEEN 2 AND maxDf == the bounded
-    // collect + size filter), pair intersection counts, floor-rounded
-    // jaccard, best-match per doc with (jaccard, other_id) max order
-    "q_ngram_jaccard" ->
-      """WITH toks AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM documents
-         ), sh AS (
-           SELECT doc_id,
-             CASE WHEN len(ts) = 0 THEN CAST([] AS VARCHAR[])
-                  WHEN len(ts) <= 3 THEN [array_to_string(ts, ' ')]
-                  ELSE list_distinct(list_transform(range(1, len(ts) - 1),
-                         i -> array_to_string(ts[i:i+2], ' ')))
-             END AS shs
-           FROM toks
-         ), idx AS (
-           SELECT doc_id, CAST(len(shs) AS BIGINT) AS set_size, unnest(shs) AS shingle
-           FROM sh
-         ), rare AS (
-           SELECT shingle FROM idx GROUP BY shingle HAVING count(*) BETWEEN 2 AND 100
-         ), p AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                  a.set_size AS size_a, b.set_size AS size_b, count(*) AS inter
-           FROM idx a JOIN rare r ON a.shingle = r.shingle
-                      JOIN idx b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4
-         ), j AS (
-           SELECT id_a, id_b,
-             floor(CAST(inter AS DOUBLE) / (size_a + size_b - inter) * 10000.0 + 0.5)
-               / 10000.0 AS jaccard
-           FROM p
-         ), sym AS (
-           SELECT id_a AS doc_id, id_b AS other_id, jaccard FROM j
-           UNION ALL
-           SELECT id_b AS doc_id, id_a AS other_id, jaccard FROM j
-         ), ranked AS (
-           SELECT doc_id, other_id, jaccard,
-             count(*) OVER (PARTITION BY doc_id) AS n_overlapping,
-             row_number() OVER (PARTITION BY doc_id
-               ORDER BY jaccard DESC, other_id DESC) AS rn
-           FROM sym
-         )
-         SELECT d.doc_id,
-           CAST(COALESCE(r.n_overlapping, 0) AS BIGINT) AS n_overlapping,
-           r.other_id AS best_match_id,
-           COALESCE(r.jaccard, -1.0) AS best_jaccard
-         FROM documents d
-         LEFT JOIN (SELECT * FROM ranked WHERE rn = 1) r ON d.doc_id = r.doc_id""",
-
-    "q_lsh_ingest_dedup" ->
-      // partial oracle (r10 verdict item 1): the batch slice sizes are
-      // exact SQL; the screen verdicts are minhash-recall-dependent, so
-      // the gate collapses them to booleans the oracle pins TRUE
-      // (partition_ok: novel+flagged covers the batch; verdict_ok:
-      // >=90% of each constructed slice gets its designed verdict).
-      // The exact flag/survive sets are LshIngestSpec's job; the
-      // comparable-WORK baseline SQL (batch-vs-corpus candidate join +
-      // exact jaccard verify) lives in tools/baseline.py's
-      // EXTRAS_BASELINE_SQL and times the screen's oracle-engine analog
-      """SELECT 'recrawl' AS batch_src, count(*) AS n_in,
-                TRUE AS partition_ok, TRUE AS verdict_ok
-         FROM documents WHERE doc_id % 10 = 3
-         UNION ALL
-         SELECT 'fresh_reversed' AS batch_src, count(*) AS n_in,
-                TRUE AS partition_ok, TRUE AS verdict_ok
-         FROM documents WHERE doc_id % 10 = 4""",
-
-    // streamed form: same slice sizes, plus the batch-boundary
-    // invariance verdict pinned TRUE
-    "q_stream_lsh_ingest" ->
-      """SELECT 'recrawl' AS batch_src, count(*) AS n_in,
-                TRUE AS partition_ok, TRUE AS verdict_ok,
-                TRUE AS boundary_invariant
-         FROM documents WHERE doc_id % 10 = 3
-         UNION ALL
-         SELECT 'fresh_reversed' AS batch_src, count(*) AS n_in,
-                TRUE AS partition_ok, TRUE AS verdict_ok,
-                TRUE AS boundary_invariant
-         FROM documents WHERE doc_id % 10 = 4""",
-
-    "q_ann_recall_check" ->
-      // the truth-set size is exact SQL; the per-method recall-floor
-      // verdicts are pinned TRUE
-      """SELECT m AS method,
-           (SELECT count(*) FROM embeddings WHERE vec_id < 8) * 5 AS n_true,
-           TRUE AS recall_ok
-         FROM unnest(['ivf', 'lsh', 'pq', 'sq8']) AS t(m)""",
-
-    "q_embedding_dedup_check" ->
-      // the construction size is exact SQL; the deterministic
-      // flag/counterpart verdicts are pinned TRUE
-      """SELECT (SELECT count(*) FROM embeddings WHERE vec_id < 20) * 2
-             AS n_construction,
-           TRUE AS all_flagged, TRUE AS all_matched""",
-
-    "q_semdedup_check" ->
-      // removed set == the planted ids, exactly
-      """SELECT (SELECT count(*) FROM embeddings WHERE vec_id < 20)
-             AS n_removed,
-           TRUE AS only_planted_removed""",
-
-    "q_pca_check" ->
-      // exact vector count compared; the linear-algebra contracts
-      // (orthonormal basis, sorted eigenvalues, full-rank isometry)
-      // pinned TRUE
-      """SELECT count(*) AS n_vectors, TRUE AS orthonormal_ok,
-           TRUE AS eigs_sorted_ok, TRUE AS isometry_ok
-         FROM embeddings""",
-
-    "q_minhash_check" ->
-      // the construction is 2 rows per recrawled doc (original +
-      // copy); the pigeonhole verdict is pinned TRUE
-      """SELECT (SELECT count(*) FROM documents WHERE doc_id % 10 = 3) * 2
-             AS n_construction,
-           TRUE AS all_exact_flagged""",
-
-    "q_simhash_check" ->
-      """SELECT (SELECT count(*) FROM documents WHERE doc_id % 10 = 3) * 2
-             AS n_construction,
-           TRUE AS all_zero_hamming""",
-
-    "q_ann_ivf_append" ->
-      // append visibility as an EXACT oracle: every shifted-id copy
-      // of an appended vector must surface its original as top-1 at
-      // cosine 1.0 (no other random vector rounds to 1.0 at 4dp),
-      // with a full k=5 result list from the probed cells
-      """SELECT vec_id + 1000000 AS query_id, vec_id AS top1_id,
-                1.0 AS top1_sim, CAST(5 AS BIGINT) AS n_results
-         FROM embeddings WHERE vec_id % 5 = 0 AND vec_id < 40""",
-
-    "q_dedup_clusters" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM documents
-         ), sh AS (
-           SELECT doc_id,
-             CASE WHEN len(ts) = 0 THEN CAST([] AS VARCHAR[])
-                  WHEN len(ts) <= 3 THEN [array_to_string(ts, ' ')]
-                  ELSE list_distinct(list_transform(range(1, len(ts) - 1),
-                         i -> array_to_string(ts[i:i+2], ' ')))
-             END AS shs
-           FROM toks
-         ), idx AS (
-           SELECT doc_id, CAST(len(shs) AS BIGINT) AS set_size, unnest(shs) AS shingle
-           FROM sh
-         ), rare AS (
-           SELECT shingle FROM idx GROUP BY shingle HAVING count(*) BETWEEN 2 AND 20
-         ), p AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                  a.set_size AS size_a, b.set_size AS size_b, count(*) AS inter
-           FROM idx a JOIN rare r ON a.shingle = r.shingle
-                      JOIN idx b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4
-         ), e AS (
-           SELECT id_a AS u, id_b AS v FROM p
-           WHERE floor(CAST(inter AS DOUBLE) / (size_a + size_b - inter)
-                   * 10000.0 + 0.5) / 10000.0 >= 0.5
-         ), sym2 AS (
-           SELECT u, v FROM e UNION SELECT v AS u, u AS v FROM e
-         ), reach AS (
-           SELECT doc_id AS a, doc_id AS b FROM documents
-           UNION
-           SELECT r.a, s.v AS b FROM reach r JOIN sym2 s ON r.b = s.u
-         )
-         SELECT a AS doc_id, CAST(min(b) AS BIGINT) AS component
-         FROM reach GROUP BY a""",
-
-    "q_equidepth_histogram" ->
-      // rank-exact decile edges on cent longs — mirrors the Spark side;
-      // no engine quantile interpolation anywhere
-      """WITH c AS (
-           SELECT CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS vc FROM events
-         ), r AS (
-           SELECT vc, row_number() OVER (ORDER BY vc) AS rn, count(*) OVER () AS n
-           FROM c
-         ), es AS (
-           SELECT [
-             CAST(min(CASE WHEN rn - 1 >= floor(0.1 * (n - 1)) THEN vc END) AS DOUBLE) / 100.0,
-             CAST(min(CASE WHEN rn - 1 >= floor(0.2 * (n - 1)) THEN vc END) AS DOUBLE) / 100.0,
-             CAST(min(CASE WHEN rn - 1 >= floor(0.3 * (n - 1)) THEN vc END) AS DOUBLE) / 100.0,
-             CAST(min(CASE WHEN rn - 1 >= floor(0.4 * (n - 1)) THEN vc END) AS DOUBLE) / 100.0,
-             CAST(min(CASE WHEN rn - 1 >= floor(0.5 * (n - 1)) THEN vc END) AS DOUBLE) / 100.0,
-             CAST(min(CASE WHEN rn - 1 >= floor(0.6 * (n - 1)) THEN vc END) AS DOUBLE) / 100.0,
-             CAST(min(CASE WHEN rn - 1 >= floor(0.7 * (n - 1)) THEN vc END) AS DOUBLE) / 100.0,
-             CAST(min(CASE WHEN rn - 1 >= floor(0.8 * (n - 1)) THEN vc END) AS DOUBLE) / 100.0,
-             CAST(min(CASE WHEN rn - 1 >= floor(0.9 * (n - 1)) THEN vc END) AS DOUBLE) / 100.0] AS es
-           FROM r
-         )
-         SELECT CAST(len(list_filter(es, e -> value > e)) AS BIGINT) AS bucket,
-           count(*) AS n,
-           floor(min(value) * 100.0 + 0.5) / 100.0 AS min_v,
-           floor(max(value) * 100.0 + 0.5) / 100.0 AS max_v
-         FROM events, es GROUP BY 1""",
-
-    "q_expectations" ->
-      """WITH s AS (
-           SELECT count(*) AS n_rows,
-             sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS v1,
-             sum(CASE WHEN value IS NOT NULL AND (value < 0.0 OR value > 500.0)
-                      THEN 1 ELSE 0 END) AS v2,
-             sum(CASE WHEN event_type IS NOT NULL AND event_type NOT IN
-                        ('click', 'view', 'purchase', 'signup')
-                      THEN 1 ELSE 0 END) AS v3,
-             sum(CASE WHEN props IS NOT NULL AND NOT regexp_matches(props, '^\{.*\}$')
-                      THEN 1 ELSE 0 END) AS v4,
-             sum(CASE WHEN NOT coalesce(event_type <> 'purchase' OR value IS NOT NULL,
-                        FALSE) THEN 1 ELSE 0 END) AS v5,
-             count(*) - count(DISTINCT event_id) AS v6
-           FROM events
-         ), t AS (
-           SELECT 'not_null(user_id)' AS rule, v1 AS v FROM s
-           UNION ALL SELECT 'in_range(value,0.0,500.0)', v2 FROM s
-           UNION ALL SELECT 'one_of(event_type)', v3 FROM s
-           UNION ALL SELECT 'matches_regex(props)', v4 FROM s
-           UNION ALL SELECT 'value_set_when_purchase', v5 FROM s
-           UNION ALL SELECT 'unique(event_id)', v6 FROM s
-         )
-         SELECT t.rule, s.n_rows, CAST(t.v AS BIGINT) AS n_violations,
-           CASE WHEN s.n_rows = 0 THEN 0.0
-                ELSE floor(CAST(t.v AS DOUBLE) / s.n_rows * 1000000.0 + 0.5)
-                     / 1000000.0 END AS violation_rate
-         FROM t, s""",
-
-    "q_profile_approx_check" ->
-      """SELECT count(*) AS total_rows,
-           count(DISTINCT (user_id, event_type)) AS distinct_keys,
-           TRUE AS within_10pct
-         FROM events""",
-
-    "q_hll_store_check" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS part,
-           count(*) AS n_rows,
-           count(DISTINCT o_custkey) AS exact_distinct,
-           TRUE AS within_10pct
-         FROM orders GROUP BY 1
-         UNION ALL
-         SELECT CAST(-1 AS BIGINT), count(*), count(DISTINCT o_custkey), TRUE
-         FROM orders""",
-
-    "q_pmi_cooccur" ->
-      """WITH tok0 AS (
-           SELECT DISTINCT doc_id, t AS token FROM (
-             SELECT doc_id, unnest(CASE WHEN length(trim(lower(text))) = 0
-                      THEN CAST([] AS VARCHAR[])
-                      ELSE string_split_regex(trim(lower(text)), '\s+') END) AS t
-             FROM documents)
-           WHERE length(t) > 0
-         ), df AS (
-           SELECT token, count(*) AS df FROM tok0 GROUP BY 1
-           HAVING count(*) >= 5
-         ), tok AS (
-           SELECT tok0.doc_id, tok0.token FROM tok0 JOIN df USING (token)
-         ), n AS (SELECT count(*) AS n_docs FROM documents),
-         pairs AS (
-           SELECT a.token AS tok_a, b.token AS tok_b, count(*) AS n_pair
-           FROM tok a JOIN tok b
-             ON a.doc_id = b.doc_id AND a.token < b.token
-           GROUP BY 1, 2 HAVING count(*) >= 5
-         ), scored AS (
-           SELECT tok_a, tok_b, n_pair, da.df AS df_a, db.df AS df_b,
-             CAST(n_pair AS DOUBLE) * n.n_docs
-               / CAST(da.df * db.df AS DOUBLE) AS lift
-           FROM pairs
-           JOIN df da ON pairs.tok_a = da.token
-           JOIN df db ON pairs.tok_b = db.token, n
-         )
-         SELECT tok_a, tok_b, n_pair, df_a, df_b,
-           floor(ln(lift) * 10000 + 0.5) / 10000 AS pmi
-         FROM scored ORDER BY lift DESC, tok_a, tok_b LIMIT 40""",
-
-    "q_source_overlap" ->
-      """WITH toks AS (
-           SELECT source,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM documents
-         ), pres AS (
-           SELECT DISTINCT source, unnest(
-             CASE WHEN len(ts) = 0 THEN CAST([] AS VARCHAR[])
-                  WHEN len(ts) <= 3 THEN [array_to_string(ts, ' ')]
-                  ELSE list_distinct(list_transform(range(1, len(ts) - 1),
-                         i -> array_to_string(ts[i:i+2], ' ')))
-             END) AS sh
-           FROM toks
-         ), totals AS (
-           SELECT source, count(*) AS n FROM pres GROUP BY 1
-         ), shared AS (
-           SELECT a.source AS src_a, b.source AS src_b,
-                  count(*) AS shared_shingles
-           FROM pres a JOIN pres b
-             ON a.sh = b.sh AND a.source < b.source
-           GROUP BY 1, 2
-         )
-         SELECT src_a, src_b, shared_shingles, ta.n AS n_a, tb.n AS n_b,
-           floor(CAST(shared_shingles AS DOUBLE) / least(ta.n, tb.n)
-                 * 10000 + 0.5) / 10000 AS containment
-         FROM shared
-         JOIN totals ta ON shared.src_a = ta.source
-         JOIN totals tb ON shared.src_b = tb.source
-         ORDER BY src_a, src_b""",
-
-    "q_source_overlap_sketch" ->
-      """WITH toks AS (
-           SELECT source,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM documents
-         ), pres AS (
-           SELECT DISTINCT source, unnest(
-             CASE WHEN len(ts) = 0 THEN CAST([] AS VARCHAR[])
-                  WHEN len(ts) <= 3 THEN [array_to_string(ts, ' ')]
-                  ELSE list_distinct(list_transform(range(1, len(ts) - 1),
-                         i -> array_to_string(ts[i:i+2], ' ')))
-             END) AS sh
-           FROM toks
-         )
-         SELECT a.source AS src_a, b.source AS src_b,
-           count(*) AS shared_shingles, TRUE AS est_ok
-         FROM pres a JOIN pres b
-           ON a.sh = b.sh AND a.source < b.source
-         GROUP BY 1, 2""",
-
-    "q_classifier_margin_check" ->
-      // exact-integer replay of the scoring machinery: portable md5
-      // bucket (the CorpusShuffle hex recipe), pinned milli-weights
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM documents
-         ), m AS (
-           SELECT doc_id, CAST(len(ts) AS BIGINT) AS n_tok,
-             CAST(coalesce(list_sum(list_transform(ts, tk ->
-               ((CAST(('0x' || substr(md5(tk), 1, 8)) AS BIGINT) % 4096) * 31)
-                 % 1000 - 500)), 0) AS BIGINT) AS margin_milli
-           FROM t
-         )
-         SELECT doc_id, n_tok, margin_milli,
-           CAST(CASE WHEN margin_milli >= 0 THEN 1 ELSE 0 END AS BIGINT) AS predicted
-         FROM m""",
-
-    "q_outlier_threshold_check" ->
-      // frozen-assignment per-cell exact percentile + strict-below
-      // verdict over an integer-exact score: thresholds interpolate
-      // between integers >= 1 apart, so engine ulp can't flip a verdict
-      """WITH s AS (
-           SELECT vec_id, vec_id % 16 AS cell,
-             CAST(coalesce(list_sum(list_transform(embedding, x ->
-               floor(CAST(x AS DOUBLE) * 1000000 + 0.5))), 0) AS BIGINT) AS score
-           FROM embeddings
-         ), t AS (
-           SELECT cell, quantile_cont(CAST(score AS DOUBLE), 0.1) AS thr
-           FROM s GROUP BY cell
-         )
-         SELECT s.vec_id, s.cell, s.score,
-           (CAST(s.score AS DOUBLE) < t.thr) AS outlier
-         FROM s JOIN t USING (cell)""",
-
-    "q_drift_psi" ->
-      s"""WITH $driftBucketsSql
-         SELECT bucket, ref_count, cur_count,
-           floor(p * 10000 + 0.5) / 10000 AS ref_frac,
-           floor(q * 10000 + 0.5) / 10000 AS cur_frac,
-           floor((p - q) * ln(p / q) * 10000 + 0.5) / 10000 AS psi_term
-         FROM terms""",
-
-    "q_drift_summary" ->
-      s"""WITH $driftBucketsSql, cum AS (
-           SELECT *,
-             sum(ref_count) OVER (ORDER BY bucket) AS ref_cum,
-             sum(cur_count) OVER (ORDER BY bucket) AS cur_cum
-           FROM terms
-         )
-         SELECT max(ref_n) AS ref_n, max(cur_n) AS cur_n,
-           floor(sum((p - q) * ln(p / q)) * 10000 + 0.5) / 10000 AS psi,
-           floor(max(abs(CAST(ref_cum AS DOUBLE) / ref_n
-                         - CAST(cur_cum AS DOUBLE) / cur_n))
-                 * 10000 + 0.5) / 10000 AS ks,
-           sum((p - q) * ln(p / q)) > 0.25 AS drifted
-         FROM cum""",
-
-    "q_vocab_coverage" ->
-      """WITH tok AS (
-           SELECT unnest(CASE WHEN length(trim(lower(text))) = 0
-                    THEN CAST([] AS VARCHAR[])
-                    ELSE string_split_regex(trim(lower(text)), '\s+') END) AS token
-           FROM documents
-         ), f AS (
-           SELECT token, count(*) AS freq FROM tok
-           WHERE length(token) > 0 GROUP BY token
-         ), top AS (
-           SELECT freq FROM f ORDER BY freq DESC, token ASC LIMIT 20
-         )
-         SELECT (SELECT count(*) FROM top) AS vocab_size,
-           CAST((SELECT sum(freq) FROM top) AS BIGINT) AS covered_tokens,
-           CAST((SELECT sum(freq) FROM f) AS BIGINT) AS total_tokens,
-           floor(CAST((SELECT sum(freq) FROM top) AS DOUBLE)
-             / (SELECT sum(freq) FROM f) * 1000000.0 + 0.5) / 1000000.0 AS coverage""",
-
-    "q_dup_rate_by_source" ->
-      """SELECT regexp_replace(source, '[0-9]+$', '') AS src_family,
-           count(*) AS n_docs,
-           count(DISTINCT md5(text)) AS n_unique,
-           floor(CAST(count(*) - count(DISTINCT md5(text)) AS DOUBLE)
-             / count(*) * 1000000.0 + 0.5) / 1000000.0 AS dup_rate
-         FROM documents GROUP BY 1""",
-
-    "q_temperature_mix" ->
-      """WITH t AS (
-           SELECT lang,
-             CAST(CASE WHEN length(trim(lower(text))) = 0 THEN 0
-                  ELSE len(string_split_regex(trim(lower(text)), '\s+')) END AS BIGINT) AS n_tok
-           FROM documents
-         ), s AS (
-           SELECT lang, CAST(SUM(n_tok) AS BIGINT) AS actual FROM t GROUP BY lang
-         ), w AS (
-           SELECT lang, actual,
-             CAST(actual AS DOUBLE) / SUM(actual) OVER () AS share,
-             pow(CAST(actual AS DOUBLE) / SUM(actual) OVER (), 0.5) AS pw,
-             SUM(actual) OVER () AS total
-           FROM s
-         ), r AS (
-           SELECT lang, actual, share,
-             pw / SUM(pw) OVER () AS target_share,
-             least(1.0, (pw / SUM(pw) OVER ()) * total / actual) AS keep_rate
-           FROM w
-         )
-         SELECT lang, actual,
-           floor(share*1000000+0.5)/1000000 AS share,
-           floor(target_share*1000000+0.5)/1000000 AS target_share,
-           floor(keep_rate*1000000+0.5)/1000000 AS keep_rate
-         FROM r""",
-
-    "q_mix_rebalance" ->
-      """WITH t AS (
-           SELECT doc_id, lang,
-             CAST(CASE WHEN length(trim(lower(text))) = 0 THEN 0
-                  ELSE len(string_split_regex(trim(lower(text)), '\s+')) END AS BIGINT)
-               AS n_tok
-           FROM documents
-         ), w AS (
-           SELECT lang, sum(n_tok) AS wt FROM t GROUP BY lang
-         ), r AS (
-           SELECT lang, least(1.0,
-             (CASE lang WHEN 'en' THEN 0.3 WHEN 'es' THEN 0.2 WHEN 'de' THEN 0.2
-                        WHEN 'fr' THEN 0.15 WHEN 'zh' THEN 0.15 ELSE 0.0 END)
-             * (SELECT sum(wt) FROM w) / wt) AS keep_rate
-           FROM w
-         )
-         SELECT doc_id, t.lang,
-           floor(keep_rate * 1000000.0 + 0.5) / 1000000.0 AS keep_rate
-         FROM t JOIN r USING (lang)
-         WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#13'), 1, 8))
-                 AS BIGINT) / 4294967296.0 < keep_rate""",
-
-    "q_split_by_cluster" ->
-      """WITH RECURSIVE toks AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM documents
-         ), sh AS (
-           SELECT doc_id,
-             CASE WHEN len(ts) = 0 THEN CAST([] AS VARCHAR[])
-                  WHEN len(ts) <= 3 THEN [array_to_string(ts, ' ')]
-                  ELSE list_distinct(list_transform(range(1, len(ts) - 1),
-                         i -> array_to_string(ts[i:i+2], ' ')))
-             END AS shs
-           FROM toks
-         ), idx AS (
-           SELECT doc_id, CAST(len(shs) AS BIGINT) AS set_size, unnest(shs) AS shingle
-           FROM sh
-         ), rare AS (
-           SELECT shingle FROM idx GROUP BY shingle HAVING count(*) BETWEEN 2 AND 20
-         ), p AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                  a.set_size AS size_a, b.set_size AS size_b, count(*) AS inter
-           FROM idx a JOIN rare r ON a.shingle = r.shingle
-                      JOIN idx b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2, 3, 4
-         ), e AS (
-           SELECT id_a AS u, id_b AS v FROM p
-           WHERE floor(CAST(inter AS DOUBLE) / (size_a + size_b - inter)
-                   * 10000.0 + 0.5) / 10000.0 >= 0.5
-         ), sym2 AS (
-           SELECT u, v FROM e UNION SELECT v AS u, u AS v FROM e
-         ), reach AS (
-           SELECT doc_id AS a, doc_id AS b FROM documents
-           UNION
-           SELECT r.a, s.v AS b FROM reach r JOIN sym2 s ON r.b = s.u
-         ), comp AS (
-           SELECT a AS doc_id, CAST(min(b) AS BIGINT) AS component
-           FROM reach GROUP BY a
-         )
-         SELECT doc_id, component,
-           CASE WHEN CAST(('0x' || substr(md5(CAST(component AS VARCHAR) || '#5'), 1, 8))
-                  AS BIGINT) / 4294967296.0 < 0.9
-                THEN 'train' ELSE 'test' END AS split
-         FROM comp""",
-
-    "q_bpe_train" ->
-      // exact expected merge table from an INDEPENDENT pure-Python BPE
-      // (tools/bpe_oracle.py), committed as per-sf fixtures keyed by
-      // (doc count, char total) — an unknown sf dir selects zero rows
-      // and fails the gate loudly instead of passing vacuously
-      """SELECT rank, "left", "right", merged, pair_count
-         FROM read_parquet('/root/repo/tools/fixtures/bpe_expected_*.parquet')
-         WHERE n_docs = (SELECT count(*) FROM documents)
-           AND sum_chars = (SELECT sum(n_chars) FROM documents)""",
-
-    // exact expected unigram-tokenizer vocabulary and encodings from
-    // an INDEPENDENT pure-Python trainer (tools/unigram_oracle.py),
-    // fixtures keyed like q_bpe_train's — every Viterbi comparison is
-    // an exact rational, so the trainer replays bit-for-bit
-    "q_unigram_train" ->
-      """SELECT rank, piece, piece_count
-         FROM read_parquet('/root/repo/tools/fixtures/unigram_vocab_*.parquet')
-         WHERE n_docs = (SELECT count(*) FROM documents)
-           AND sum_chars = (SELECT sum(n_chars) FROM documents)""",
-
-    "q_unigram_encode" ->
-      """SELECT doc_id, n_pieces, piece_md5
-         FROM read_parquet('/root/repo/tools/fixtures/unigram_enc_*.parquet')
-         WHERE n_docs = (SELECT count(*) FROM documents)
-           AND sum_chars = (SELECT sum(n_chars) FROM documents)""",
-
-    // pairwise JS divergence with per-token nano integerization —
-    // probabilities are exact count/total rationals, so both engines
-    // divide the same integers and sum the same longs
-    "q_vocab_drift" ->
-      """WITH toks AS (
-           SELECT CASE WHEN doc_id % 7 = 3 THEN 'drifted'
-                  ELSE source END AS fam,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  WHEN doc_id % 7 = 3 THEN list_transform(
-                    string_split_regex(trim(lower(text)), '\s+'), x -> reverse(x))
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM documents
-         ), tok AS (
-           SELECT fam, unnest(ts) AS t FROM toks
-         ), cnt AS (
-           SELECT fam, t, CAST(count(*) AS BIGINT) AS c
-           FROM tok WHERE length(t) > 0 GROUP BY 1, 2
-         ), tot AS (
-           -- CAST: DuckDB's sum(BIGINT) is HUGEINT, which pandas
-           -- renders float64 and the driver's dtype compare rejects
-           SELECT fam, CAST(sum(c) AS BIGINT) AS tc FROM cnt GROUP BY 1
-         ), pairs AS (
-           SELECT a.fam AS fa, b.fam AS fb, a.tc AS t1, b.tc AS t2
-           FROM tot a, tot b WHERE a.fam < b.fam
-         ), gridtok AS (
-           SELECT p.fa, p.fb, p.t1, p.t2, c.t
-           FROM pairs p JOIN cnt c ON c.fam = p.fa OR c.fam = p.fb
-           GROUP BY 1, 2, 3, 4, 5
-         ), contrib AS (
-           SELECT g.fa, g.fb, g.t1, g.t2,
-             CAST(coalesce(ca.c, 0) AS DOUBLE) / g.t1 AS p1,
-             CAST(coalesce(cb.c, 0) AS DOUBLE) / g.t2 AS p2
-           FROM gridtok g
-             LEFT JOIN cnt ca ON ca.fam = g.fa AND ca.t = g.t
-             LEFT JOIN cnt cb ON cb.fam = g.fb AND cb.t = g.t
-         )
-         SELECT fa AS fam_a, fb AS fam_b, t1 AS n_tok_a, t2 AS n_tok_b,
-           CAST(sum(CAST(floor(
-             (CASE WHEN p1 > 0 THEN p1 * ln(p1 / ((p1 + p2) / 2.0)) ELSE 0.0 END
-              + CASE WHEN p2 > 0 THEN p2 * ln(p2 / ((p1 + p2) / 2.0)) ELSE 0.0 END)
-             * 0.5 * 1000000000.0 + 0.5) AS BIGINT)) AS BIGINT) AS js_nano
-         FROM contrib GROUP BY 1, 2, 3, 4""",
-
-    // the eval metric replayed exactly: same tokenize, same Okapi/
-    // Lucene idf constants as q_bm25_search, per-term micro
-    // integerization before the (query, doc) sum so group order
-    // cannot flip a rank
-    "q_retrieval_eval" ->
-      """WITH toks AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM documents
-         ), q AS (
-           SELECT doc_id AS query_id, doc_id AS rel_id,
-             list_distinct(ts[greatest(len(ts) - 2, 1):len(ts)]) AS terms
-           FROM toks WHERE doc_id % 100 = 7 AND doc_id < 10000 AND len(ts) > 0
-         ), qt AS (
-           SELECT query_id, unnest(terms) AS term FROM q
-         ), dl AS (
-           SELECT doc_id, CAST(len(ts) AS DOUBLE) AS dl FROM toks
-         ), tokrows AS (
-           SELECT doc_id, unnest(ts) AS term FROM toks
-         ), post AS (
-           SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-           FROM tokrows
-           WHERE term IN (SELECT DISTINCT term FROM qt)
-           GROUP BY 1, 2
-         ), df AS (
-           SELECT term, CAST(count(*) AS DOUBLE) AS df FROM post GROUP BY 1
-         ), stats AS (
-           SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl FROM dl
-         ), term_scores AS (
-           SELECT p.doc_id, p.term,
-             CAST(floor(
-               ln(1.0 + (n_docs - df.df + 0.5) / (df.df + 0.5)) * p.tf * (1.5 + 1.0)
-                 / (p.tf + 1.5 * ((1.0 - 0.75) + 0.75 * d.dl / avgdl))
-               * 1000000.0 + 0.5) AS BIGINT) AS ts_micro
-           FROM post p JOIN df USING (term) JOIN dl d ON p.doc_id = d.doc_id, stats
-         ), scored AS (
-           SELECT qt.query_id, t.doc_id, sum(t.ts_micro) AS score_micro
-           FROM qt JOIN term_scores t USING (term)
-           GROUP BY 1, 2
-         ), ranked AS (
-           SELECT query_id, doc_id,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY score_micro DESC, doc_id ASC) AS rnk
-           FROM scored
-         )
-         SELECT q.query_id, q.rel_id,
-           CAST(coalesce(r.rnk, 0) AS BIGINT) AS rel_rank,
-           CASE WHEN r.rnk IS NULL THEN 0.0
-                ELSE floor(1.0 / r.rnk * 10000 + 0.5) / 10000 END AS rr,
-           r.rnk IS NOT NULL AS hit
-         FROM q LEFT JOIN (SELECT * FROM ranked WHERE rnk <= 10) r
-           ON q.query_id = r.query_id AND q.rel_id = r.doc_id""",
-
-    // fertility joins BOTH independent Python encoders' fixtures:
-    // Spark recomputes everything from raw text
-    "q_tokenizer_fertility" ->
-      """WITH w AS (
-           SELECT doc_id,
-             CAST(CASE WHEN length(trim(lower(text))) = 0 THEN 0
-                  ELSE len(string_split_regex(trim(lower(text)), '\s+')) END
-               AS BIGINT) AS n_words
-           FROM documents
-         ), b AS (
-           SELECT doc_id, n_bpe
-           FROM read_parquet('/root/repo/tools/fixtures/bpe_enc_*.parquet')
-           WHERE n_docs = (SELECT count(*) FROM documents)
-             AND sum_chars = (SELECT sum(n_chars) FROM documents)
-         ), u AS (
-           SELECT doc_id, n_pieces AS n_uni
-           FROM read_parquet('/root/repo/tools/fixtures/unigram_enc_*.parquet')
-           WHERE n_docs = (SELECT count(*) FROM documents)
-             AND sum_chars = (SELECT sum(n_chars) FROM documents)
-         )
-         SELECT doc_id, n_words, n_bpe, n_uni,
-           CASE WHEN n_words = 0 THEN 0.0
-                ELSE floor(CAST(n_bpe AS DOUBLE) / n_words * 10000 + 0.5) / 10000
-           END AS fert_bpe,
-           CASE WHEN n_words = 0 THEN 0.0
-                ELSE floor(CAST(n_uni AS DOUBLE) / n_words * 10000 + 0.5) / 10000
-           END AS fert_uni
-         FROM w JOIN b USING (doc_id) JOIN u USING (doc_id)""",
-
-    // exact trained weights from an INDEPENDENT pure-Python trainer
-    // (tools/classifier_oracle.py), committed as per-sf fixtures keyed
-    // like q_bpe_train's — the training loop is exact fixed-point
-    // integer arithmetic, so the weights replay bit-for-bit
-    "q_classifier_train_check" ->
-      """SELECT bucket, w_milli
-         FROM read_parquet('/root/repo/tools/fixtures/clf_train_*.parquet')
-         WHERE n_docs = (SELECT count(*) FROM documents)
-           AND sum_chars = (SELECT sum(n_chars) FROM documents)""",
-
-    "q_bpe_encode" ->
-      // exact expected (count, md5-of-sequence) per doc from the same
-      // independent Python implementation, fixtures keyed like
-      // q_bpe_train's (unknown sf dir -> zero rows -> loud fail)
-      """SELECT doc_id, n_bpe, bpe_md5
-         FROM read_parquet('/root/repo/tools/fixtures/bpe_enc_*.parquet')
-         WHERE n_docs = (SELECT count(*) FROM documents)
-           AND sum_chars = (SELECT sum(n_chars) FROM documents)""",
-
-    "q_compression_quality" ->
-      // exact expected per-doc deflate lengths from an INDEPENDENT
-      // Python zlib (tools/compress_oracle.py — same zlib stream as
-      // the JDK Deflater at pinned level 6, verified byte-identical),
-      // fixtures keyed like q_bpe_train's (r10 verdict item 6)
-      """SELECT doc_id, raw_bytes, deflate_bytes, ratio
-         FROM read_parquet('/root/repo/tools/fixtures/deflate_*.parquet')
-         WHERE n_docs = (SELECT count(*) FROM documents)
-           AND sum_chars = (SELECT sum(n_chars) FROM documents)""",
-
-    "q_bigram_logprob" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), bg AS (
-           SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
-           FROM t, unnest(range(1, len(toks))) AS r(i)
-         ), tfb AS (
-           SELECT doc_id, w1, w2, count(*) AS tf FROM bg GROUP BY 1, 2, 3
-         ), fb AS (
-           SELECT w1, w2, count(*) AS c_bg FROM bg GROUP BY 1, 2
-         ), ctx AS (
-           SELECT w1, count(*) AS c_ctx FROM bg GROUP BY 1
-         ), voc AS (
-           SELECT count(DISTINCT term) AS v
-           FROM (SELECT unnest(toks) AS term FROM t)
-           WHERE length(term) > 0
-         ), score AS (
-           SELECT tfb.doc_id, sum(tfb.tf) AS n_bigrams,
-             sum(tfb.tf * CAST(floor(ln((fb.c_bg + 1.0) / (ctx.c_ctx + voc.v))
-               * 1000000.0 + 0.5) AS BIGINT)) AS s
-           FROM tfb
-           JOIN fb USING (w1, w2)
-           JOIN ctx USING (w1), voc
-           GROUP BY 1
-         )
-         SELECT d.doc_id,
-           CAST(coalesce(score.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-           CASE WHEN score.n_bigrams IS NULL THEN 0.0
-                ELSE floor(CAST(score.s AS DOUBLE)
-                       / (score.n_bigrams * 1000000.0) * 10000.0 + 0.5) / 10000.0
-           END AS logprob_mean
-         FROM documents d LEFT JOIN score ON d.doc_id = score.doc_id""",
-
-    "q_backoff_logprob" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), mt AS (
-           SELECT toks FROM t WHERE doc_id % 3 = 0
-         ), muni AS (
-           SELECT term AS w, count(*) AS c1
-           FROM (SELECT unnest(toks) AS term FROM mt)
-           WHERE length(term) > 0 GROUP BY 1
-         ), mtot AS (
-           SELECT count(*) AS n_tok, count(DISTINCT term) AS v
-           FROM (SELECT unnest(toks) AS term FROM mt)
-           WHERE length(term) > 0
-         ), mbig AS (
-           SELECT toks[i] AS w1, toks[i + 1] AS w2, count(*) AS c2
-           FROM mt, unnest(range(1, len(toks))) AS r(i) GROUP BY 1, 2
-         ), mtri AS (
-           SELECT toks[i] AS w1, toks[i + 1] AS w2, toks[i + 2] AS w3,
-             count(*) AS c3
-           FROM mt, unnest(range(1, len(toks) - 1)) AS r(i) GROUP BY 1, 2, 3
-         ), tfd AS (
-           SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2,
-             toks[i + 2] AS w3, count(*) AS tf
-           FROM t, unnest(range(1, len(toks) - 1)) AS r(i)
-           GROUP BY 1, 2, 3, 4
-         ), types AS (
-           SELECT DISTINCT w1, w2, w3 FROM tfd
-         ), scored AS (
-           SELECT types.w1, types.w2, types.w3,
-             CASE WHEN mtri.c3 IS NOT NULL THEN 3
-                  WHEN b23.c2 IS NOT NULL THEN 2 ELSE 1 END AS level,
-             CAST(floor(ln(
-               CASE WHEN mtri.c3 IS NOT NULL
-                      THEN CAST(mtri.c3 AS DOUBLE) / b12.c2
-                    WHEN b23.c2 IS NOT NULL
-                      THEN CAST(0.4 AS DOUBLE) * b23.c2 / u2.c1
-                    ELSE CAST(0.16 AS DOUBLE) * (coalesce(u3.c1, 0) + 1)
-                      / (mtot.n_tok + mtot.v) END)
-               * 1000000.0 + 0.5) AS BIGINT) AS lns
-           FROM types
-           LEFT JOIN mtri USING (w1, w2, w3)
-           LEFT JOIN mbig b12 ON types.w1 = b12.w1 AND types.w2 = b12.w2
-           LEFT JOIN mbig b23 ON types.w2 = b23.w1 AND types.w3 = b23.w2
-           LEFT JOIN muni u2 ON types.w2 = u2.w
-           LEFT JOIN muni u3 ON types.w3 = u3.w, mtot
-         ), perdoc AS (
-           SELECT tfd.doc_id, sum(tf) AS n_trigrams,
-             sum(CASE WHEN level = 3 THEN tf ELSE 0 END) AS n_hit3,
-             sum(CASE WHEN level = 2 THEN tf ELSE 0 END) AS n_hit2,
-             sum(CASE WHEN level = 1 THEN tf ELSE 0 END) AS n_hit1,
-             sum(tf * lns) AS s
-           FROM tfd JOIN scored USING (w1, w2, w3) GROUP BY 1
-         )
-         SELECT d.doc_id,
-           CAST(coalesce(p.n_trigrams, 0) AS BIGINT) AS n_trigrams,
-           CAST(coalesce(p.n_hit3, 0) AS BIGINT) AS n_hit3,
-           CAST(coalesce(p.n_hit2, 0) AS BIGINT) AS n_hit2,
-           CAST(coalesce(p.n_hit1, 0) AS BIGINT) AS n_hit1,
-           CASE WHEN p.n_trigrams IS NULL THEN 0.0
-                ELSE floor(CAST(p.s AS DOUBLE)
-                       / (p.n_trigrams * 1000000.0) * 10000.0 + 0.5) / 10000.0
-           END AS backoff_mean
-         FROM documents d LEFT JOIN perdoc p ON d.doc_id = p.doc_id""",
-
-    "q_unigram_logprob" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), tok AS (
-           SELECT doc_id, unnest(toks) AS term FROM t
-         ), tok2 AS (
-           SELECT doc_id, term FROM tok WHERE length(term) > 0
-         ), f AS (
-           SELECT term, count(*) AS freq FROM tok2 GROUP BY term
-         ), tot AS (
-           SELECT sum(freq) AS total FROM f
-         ), lp AS (
-           SELECT doc_id,
-             CAST(floor(ln(CAST(freq AS DOUBLE) / total) * 1000000.0 + 0.5) AS BIGINT)
-               AS lps
-           FROM tok2 JOIN f USING (term), tot
-         ), d AS (
-           SELECT doc_id, count(*) AS n_tok, sum(lps) AS s FROM lp GROUP BY doc_id
-         )
-         SELECT dd.doc_id, coalesce(n_tok, 0) AS n_tok,
-           CASE WHEN n_tok IS NULL THEN 0.0
-                ELSE floor(CAST(s AS DOUBLE) / (n_tok * 1000000.0)
-                       * 10000.0 + 0.5) / 10000.0 END AS logprob_mean
-         FROM documents dd LEFT JOIN d USING (doc_id)""",
-
-    "q_fingerprint" ->
-      """SELECT doc_id,
-           list_reduce(
-             list_prepend(CAST(0 AS BIGINT),
-               list_transform(range(1, length(text) + 1),
-                 i -> CAST(ascii(text[i]) AS BIGINT))),
-             (acc, c) -> (acc * 31 + c) % 1000000007) AS rolling_fp
-         FROM documents""",
-
-    "q_shuffle_corpus" ->
-      """WITH k AS (
-           SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || '#0') AS k
-           FROM documents
-         ), s AS (
-           SELECT doc_id, k,
-             CAST(('0x' || substr(k, 1, 8))::BIGINT % 8 AS INT) AS shard
-           FROM k
-         )
-         SELECT CAST(doc_id AS BIGINT) AS doc_id, shard,
-           CAST(row_number() OVER (PARTITION BY shard ORDER BY k, doc_id)
-             AS BIGINT) AS pos_in_shard
-         FROM s""",
-
-    "q_line_dedup" ->
-      """WITH aug AS (
-           SELECT doc_id,
-             substr(text, 1, 80) || chr(10) ||
-             CASE CAST(doc_id % 3 AS INT)
-               WHEN 0 THEN 'subscribe to our newsletter'
-               WHEN 1 THEN 'all rights reserved'
-               ELSE 'click here to continue' END || chr(10) ||
-             substr(text, 81, 80) || chr(10) ||
-             CASE WHEN doc_id % 4 = 0 THEN substr(text, 1, 80) || chr(10)
-               ELSE '' END ||
-             'copyright 2026 example corp' AS text
-           FROM documents
-         ), sp AS (
-           SELECT doc_id, string_split(text, chr(10)) AS ls FROM aug
-         ), lines AS (
-           SELECT doc_id, unnest(ls) AS line,
-             unnest(range(1, len(ls) + 1)) AS pos
-           FROM sp
-         ), firsts AS (
-           SELECT doc_id, line, min(pos) AS pos
-           FROM lines GROUP BY doc_id, line
-         ), df AS (
-           SELECT line, count(*) AS n_docs FROM firsts GROUP BY line
-         ), total AS (
-           SELECT count(*) AS n FROM aug
-         ), kept AS (
-           SELECT f.doc_id, f.line, f.pos
-           FROM firsts f JOIN df ON f.line = df.line CROSS JOIN total
-           WHERE df.n_docs * 100 <= total.n * 5
-         )
-         SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(count(*) AS BIGINT) AS n_kept,
-           string_agg(line, chr(10) ORDER BY pos) AS text_clean
-         FROM kept GROUP BY doc_id""",
-
-    "q_heavy_hitters_sketch" ->
-      """WITH tok AS (
-           SELECT unnest(CASE WHEN length(trim(lower(text))) = 0
-                    THEN CAST([] AS VARCHAR[])
-                    ELSE string_split_regex(trim(lower(text)), '\s+') END) AS term
-           FROM documents
-         ), top AS (
-           SELECT term, CAST(count(*) AS BIGINT) AS cnt
-           FROM tok GROUP BY term
-           ORDER BY cnt DESC, term LIMIT 20
-         )
-         SELECT term, cnt, TRUE AS est_ge_exact, TRUE AS est_within_eps
-         FROM top""",
-
-    "q_token_budget" ->
-      """WITH base AS (
-           SELECT doc_id, source,
-             CAST(CASE WHEN length(trim(lower(text))) = 0 THEN 0
-               ELSE len(string_split_regex(trim(lower(text)), '\s+'))
-               END AS BIGINT) AS n_tok,
-             md5(CAST(doc_id AS VARCHAR) || '#0') AS ord
-           FROM documents
-         ), src AS (
-           SELECT source, sum(n_tok) AS src_tok FROM base GROUP BY source
-         ), tot AS (
-           SELECT sum(src_tok) AS all_tok FROM src
-         ), q AS (
-           SELECT source,
-             CAST(floor(5000.0 * (CAST(src_tok AS DOUBLE)
-               / CAST(all_tok AS DOUBLE))) AS BIGINT) AS quota
-           FROM src CROSS JOIN tot
-         ), w AS (
-           SELECT doc_id, source, n_tok,
-             coalesce(sum(n_tok) OVER (PARTITION BY source
-               ORDER BY ord, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS tok_before
-           FROM base
-         )
-         SELECT CAST(w.doc_id AS BIGINT) AS doc_id, w.source, w.n_tok
-         FROM w JOIN q ON w.source = q.source
-         WHERE w.tok_before < q.quota""",
-
-    "q_dsir_weights" ->
-      """WITH t AS (
-           SELECT doc_id, lang = 'en' AS is_t,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), tok AS (
-           SELECT doc_id, is_t, unnest(toks) AS term FROM t
-         ), tok2 AS (
-           SELECT doc_id, is_t,
-             ('0x' || substr(md5(term || '#13'), 1, 8))::BIGINT % 1024 AS b
-           FROM tok WHERE length(term) > 0
-         ), dist AS (
-           SELECT b, CAST(count(*) AS BIGINT) AS src,
-             CAST(sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT) AS tgt
-           FROM tok2 GROUP BY b
-         ), tot AS (
-           SELECT sum(src) AS src_tot, sum(tgt) AS tgt_tot FROM dist
-         ), ilr AS (
-           SELECT b,
-             CAST(floor(ln(
-               ((tgt + 1.0) / (tgt_tot + 1024.0)) /
-               ((src + 1.0) / (src_tot + 1024.0))) * 1000000.0 + 0.5)
-               AS BIGINT) AS ilr
-           FROM dist, tot
-         ), pd AS (
-           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok, sum(ilr) AS s
-           FROM tok2 JOIN ilr USING (b) GROUP BY doc_id
-         )
-         SELECT d.doc_id, coalesce(n_tok, 0) AS n_tok,
-           CASE WHEN n_tok IS NULL THEN 0.0
-                ELSE floor(CAST(s AS DOUBLE) / (n_tok * 1000000.0)
-                       * 10000.0 + 0.5) / 10000.0 END AS dsir_logratio
-         FROM documents d LEFT JOIN pd USING (doc_id)""",
-
-    "q_dsir_sample" ->
-      """WITH t AS (
-           SELECT doc_id, lang = 'en' AS is_t,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS toks
-           FROM documents
-         ), tok AS (
-           SELECT doc_id, is_t, unnest(toks) AS term FROM t
-         ), tok2 AS (
-           SELECT doc_id, is_t,
-             ('0x' || substr(md5(term || '#13'), 1, 8))::BIGINT % 1024 AS b
-           FROM tok WHERE length(term) > 0
-         ), dist AS (
-           SELECT b, CAST(count(*) AS BIGINT) AS src,
-             CAST(sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT) AS tgt
-           FROM tok2 GROUP BY b
-         ), tot AS (
-           SELECT sum(src) AS src_tot, sum(tgt) AS tgt_tot FROM dist
-         ), ilr AS (
-           SELECT b,
-             CAST(floor(ln(
-               ((tgt + 1.0) / (tgt_tot + 1024.0)) /
-               ((src + 1.0) / (src_tot + 1024.0))) * 1000000.0 + 0.5)
-               AS BIGINT) AS ilr
-           FROM dist, tot
-         ), pd AS (
-           SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok, sum(ilr) AS s
-           FROM tok2 JOIN ilr USING (b) GROUP BY doc_id
-         ), w AS (
-           SELECT d.doc_id,
-             CASE WHEN n_tok IS NULL THEN 0.0
-                  ELSE floor(CAST(s AS DOUBLE) / (n_tok * 1000000.0)
-                         * 10000.0 + 0.5) / 10000.0 END AS dsir_logratio
-           FROM documents d LEFT JOIN pd USING (doc_id)
-         ), p AS (
-           SELECT doc_id, dsir_logratio,
-             floor(1.0 / (1.0 + exp(dsir_logratio * -3.0))
-               * 10000.0 + 0.5) / 10000.0 AS accept_p
-           FROM w
-         )
-         SELECT doc_id, dsir_logratio, accept_p FROM p
-         WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#29'), 1, 8))::BIGINT
-                 / 4294967296.0 < accept_p""",
-
-    "q_train_split" ->
-      """WITH b AS (
-           SELECT n_chars,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#0'), 1, 8))::BIGINT % 100
-               AS bucket
-           FROM documents
-         ), s AS (
-           SELECT n_chars,
-             CASE WHEN bucket < 80 THEN 'train'
-                  WHEN bucket < 90 THEN 'val'
-                  ELSE 'test' END AS split
-           FROM b
-         )
-         SELECT split, count(*) AS n,
-           floor(avg(n_chars) * 100.0 + 0.5) / 100.0 AS avg_chars
-         FROM s GROUP BY split""",
-
-    "q_ann_bruteforce" ->
-      """WITH q AS (
-           SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS q_emb
-           FROM embeddings WHERE vec_id < 8
-         ), c AS (
-           SELECT vec_id AS nbr_id, CAST(embedding AS DOUBLE[]) AS c_emb
-           FROM embeddings
-         ), scored AS (
-           SELECT query_id, nbr_id,
-             round(list_dot_product(q_emb, c_emb)
-               / (sqrt(list_dot_product(q_emb, q_emb)) * sqrt(list_dot_product(c_emb, c_emb))), 4)
-               AS sim
-           FROM c CROSS JOIN q WHERE query_id <> nbr_id
-         ), ranked AS (
-           SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, nbr_id ASC) AS rnk
-           FROM scored
-         )
-         SELECT query_id, CAST(rnk AS BIGINT) AS rank, nbr_id, sim
-         FROM ranked WHERE rnk <= 5""",
-
-    "q_matryoshka_recall" ->
-      // full-dim truth vs prefix-truncated top-5 at each dim, the
-      // identical rounded-cosine + id-tie-break ranking in SQL
-      """WITH c AS (
-           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-         ), q AS (
-           SELECT vec_id, e FROM c WHERE vec_id < 8
-         ), ft AS (
-           SELECT q.vec_id AS query_id, c.vec_id AS nbr_id,
-             round(list_dot_product(q.e, c.e)
-               / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))), 4)
-               AS sim
-           FROM c CROSS JOIN q WHERE q.vec_id <> c.vec_id
-         ), fr AS (
-           SELECT query_id, nbr_id FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY query_id ORDER BY sim DESC, nbr_id ASC) AS rnk
-             FROM ft) WHERE rnk <= 5
-         ), dims AS (
-           SELECT unnest([CAST(16 AS BIGINT), 32, 64]) AS dim
-         ), tt AS (
-           SELECT d.dim, q.vec_id AS query_id, c.vec_id AS nbr_id,
-             round(list_dot_product(q.e[1:d.dim], c.e[1:d.dim])
-               / (sqrt(list_dot_product(q.e[1:d.dim], q.e[1:d.dim]))
-                  * sqrt(list_dot_product(c.e[1:d.dim], c.e[1:d.dim]))), 4)
-               AS sim
-           FROM dims d CROSS JOIN c CROSS JOIN q WHERE q.vec_id <> c.vec_id
-         ), tr AS (
-           SELECT dim, query_id, nbr_id FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY dim, query_id ORDER BY sim DESC, nbr_id ASC) AS rnk
-             FROM tt) WHERE rnk <= 5
-         ), hits AS (
-           SELECT tr.dim, count(*) AS n_hits
-           FROM tr JOIN fr USING (query_id, nbr_id) GROUP BY 1
-         ), tot AS (SELECT count(*) AS n_true FROM fr)
-         SELECT dim, n_true, n_hits,
-           floor(n_hits * 10000.0 / n_true + 0.5) / 10000.0 AS recall
-         FROM hits, tot""",
-
-    "q_hard_negatives" ->
-      """WITH q AS (
-           SELECT vec_id AS query_id, label AS q_label,
-             CAST(embedding AS DOUBLE[]) AS q_emb
-           FROM embeddings WHERE vec_id < 8
-         ), c AS (
-           SELECT vec_id AS nbr_id, label AS nbr_label,
-             CAST(embedding AS DOUBLE[]) AS c_emb
-           FROM embeddings
-         ), scored AS (
-           SELECT query_id, nbr_id, nbr_label,
-             round(list_dot_product(q_emb, c_emb)
-               / (sqrt(list_dot_product(q_emb, q_emb)) * sqrt(list_dot_product(c_emb, c_emb))), 4)
-               AS sim
-           FROM c CROSS JOIN q WHERE nbr_label <> q_label
-         ), ranked AS (
-           SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, nbr_id ASC) AS rnk
-           FROM scored
-         )
-         SELECT query_id, CAST(rnk AS BIGINT) AS rank, nbr_id, nbr_label, sim
-         FROM ranked WHERE rnk <= 5""",
-
-    // exact mirror of q_pii_redact: identical planted PII, identical
-    // regexes (RE2/java.util.regex-common subset), identical rewrite
-    // order email → card → ssn → phone → ip
-    "q_pii_redact" ->
-      """WITH aug AS (
-           SELECT doc_id,
-             text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
-                  || ' ip 10.0.' || CAST(doc_id % 256 AS VARCHAR)
-                  || '.' || CAST((doc_id * 7) % 256 AS VARCHAR)
-                  || ' ssn 123-45-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                  || ' call 555-867-' || lpad(CAST((doc_id * 13) % 10000 AS VARCHAR), 4, '0')
-                  || ' card 4111-1111-1111-' || lpad(CAST((doc_id * 31) % 10000 AS VARCHAR), 4, '0')
-               AS planted
-           FROM documents
-         )
-         SELECT doc_id,
-           CAST(len(regexp_extract_all(planted, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
-           CAST(len(regexp_extract_all(planted, '\b\d{4}[- ]\d{4}[- ]\d{4}[- ]\d{4}\b')) AS BIGINT) AS n_card,
-           CAST(len(regexp_extract_all(planted, '\b\d{3}-\d{2}-\d{4}\b')) AS BIGINT) AS n_ssn,
-           CAST(len(regexp_extract_all(planted, '\b\d{3}[-.]\d{3}[-.]\d{4}\b')) AS BIGINT) AS n_phone,
-           CAST(len(regexp_extract_all(planted, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ip,
-           regexp_replace(
-             regexp_replace(
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace(planted,
-                     '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-                   '\b\d{4}[- ]\d{4}[- ]\d{4}[- ]\d{4}\b', '[CARD]', 'g'),
-                 '\b\d{3}-\d{2}-\d{4}\b', '[SSN]', 'g'),
-               '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '[PHONE]', 'g'),
-             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g') AS redacted
-         FROM aug""",
-
-    // exact mirror of Decontaminate.stats(k=3, threshold=0.5): same
-    // shingle CTE as the ngram oracles, eval = every 10th doc, train =
-    // the rest; hit counts via inner join on distinct shingles
-    "q_url_dedup" ->
-      // the oracle CONSTRUCTS the expected canonical analytically —
-      // the Spark side must parse and normalize its way to the same
-      // string (host lower-cased: the corpus source labels already
-      // are, lower() documents the invariant)
-      """WITH u AS (
-           SELECT doc_id, lower(source) AS src,
-             CAST(floor(doc_id / 4.0) AS BIGINT) AS gid,
-             doc_id % 4 AS v
-           FROM documents
-         ), canon AS (
-           SELECT doc_id,
-             'https://' || src || '.example.com/p/' || CAST(gid AS VARCHAR) ||
-             CASE WHEN v = 3 THEN '?a=1&b=2' ELSE '' END AS canonical_url
-           FROM u
-         )
-         SELECT canonical_url, count(*) AS n_dups, min(doc_id) AS keep_id
-         FROM canon GROUP BY 1""",
-
-    "q_verbatim_contamination" ->
-      """WITH ev AS (
-           SELECT doc_id, substr(text, 11, 40) AS snippet
-           FROM documents WHERE doc_id % 50 = 0
-         ), sn AS (
-           SELECT snippet FROM ev WHERE length(snippet) >= 20
-         ), train AS (
-           SELECT d.doc_id,
-             CASE WHEN e.snippet IS NOT NULL AND length(e.snippet) >= 20
-                  THEN d.text || ' ... ' || e.snippet ELSE d.text END AS text
-           FROM documents d LEFT JOIN ev e ON d.doc_id = e.doc_id + 1
-           WHERE d.doc_id % 50 <> 0
-         )
-         SELECT (SELECT count(*) FROM train) AS n_train,
-                (SELECT count(*) FROM sn) AS n_eval,
-                (SELECT count(*) FROM train t WHERE EXISTS
-                   (SELECT 1 FROM sn s WHERE contains(t.text, s.snippet)))
-                  AS n_flagged""",
-
-    "q_decontaminate" ->
-      """WITH train AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0
-         ), ev AS (
-           SELECT text FROM documents WHERE doc_id % 10 = 0
-         ), toks_t AS (
-           SELECT doc_id,
-             CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                  ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM train
-         ), sh_t AS (
-           SELECT doc_id,
-             CASE WHEN len(ts) = 0 THEN CAST([] AS VARCHAR[])
-                  WHEN len(ts) <= 3 THEN [array_to_string(ts, ' ')]
-                  ELSE list_distinct(list_transform(range(1, len(ts) - 1),
-                         i -> array_to_string(ts[i:i+2], ' ')))
-             END AS shs
-           FROM toks_t
-         ), toks_e AS (
-           SELECT CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])
-                       ELSE string_split_regex(trim(lower(text)), '\s+') END AS ts
-           FROM ev
-         ), evsh AS (
-           SELECT DISTINCT unnest(
-             CASE WHEN len(ts) = 0 THEN CAST([] AS VARCHAR[])
-                  WHEN len(ts) <= 3 THEN [array_to_string(ts, ' ')]
-                  ELSE list_distinct(list_transform(range(1, len(ts) - 1),
-                         i -> array_to_string(ts[i:i+2], ' ')))
-             END) AS shingle
-           FROM toks_e
-         ), idx AS (
-           SELECT doc_id, unnest(shs) AS shingle FROM sh_t
-         ), hits AS (
-           SELECT i.doc_id, count(*) AS n_hit
-           FROM idx i JOIN evsh e USING (shingle) GROUP BY 1
-         ), stats AS (
-           SELECT s.doc_id, CAST(len(s.shs) AS BIGINT) AS n_shingles,
-                  CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit
-           FROM sh_t s LEFT JOIN hits h USING (doc_id)
-         ), fin AS (
-           SELECT doc_id, n_shingles, n_hit,
-             CASE WHEN n_shingles = 0 THEN 0.0
-                  ELSE floor(CAST(n_hit AS DOUBLE) / n_shingles * 10000.0 + 0.5)
-                       / 10000.0 END AS contamination
-           FROM stats
-         )
-         SELECT doc_id, n_shingles, n_hit, contamination,
-           CAST(CASE WHEN contamination >= 0.5 THEN 1 ELSE 0 END AS BIGINT)
-             AS contaminated
-         FROM fin""",
-
-    "q_text_clean" ->
-      """WITH dirty AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 4 = 1
-                  THEN text || '  see https://example.com/d'
-                       || CAST(doc_id AS VARCHAR) || '  or  mail team'
-                       || CAST(doc_id AS VARCHAR) || '@corp.io  '
-                  ELSE text END AS text
-           FROM documents
-         ), c AS (
-           SELECT doc_id, text,
-             trim(regexp_replace(
-               regexp_replace(
-                 regexp_replace(text, 'https?://\S+', ' ', 'g'),
-                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', ' ', 'g'),
-               '\s+', ' ', 'g')) AS clean
-           FROM dirty
-         )
-         SELECT doc_id, CAST(length(clean) AS BIGINT) AS clean_len,
-           clean <> text AS changed
-         FROM c""",
-
-    "q_unicode_clean" ->
-      """WITH planted AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 4 = 1
-                  THEN text || ' caf' || 'e' || chr(769) || ' x'
-                       || chr(160) || 'a' || chr(8203) || 'b'
-                       || chr(7) || 'c'
-                  ELSE text END AS text
-           FROM documents
-         ), c AS (
-           SELECT doc_id, text,
-             regexp_replace(
-               regexp_replace(
-                 regexp_replace(nfc_normalize(text),
-                   '[\x{00A0}\x{2000}-\x{200A}\x{202F}\x{3000}]', ' ', 'g'),
-                 '[\x{200B}\x{200E}\x{200F}\x{FEFF}]', '', 'g'),
-               '[\x{0000}-\x{0008}\x{000B}\x{000C}\x{000E}-\x{001F}\x{007F}-\x{009F}]',
-               '', 'g') AS clean
-           FROM planted
-         )
-         SELECT doc_id, CAST(length(clean) AS BIGINT) AS clean_len,
-           clean <> text AS changed, md5(clean) AS clean_md5
-         FROM c""",
-
-    "q_event_windows" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start, event_type,
-           count(*) AS n_events, round(sum(value), 2) AS sum_value,
-           count(DISTINCT user_id) AS n_users
-         FROM events GROUP BY 1, 2""",
-
-    // envelope check for the HLL flip: exact columns + the 5% verdict
-    // pinned TRUE (estimates themselves are not cross-engine values)
-    "q_event_windows_approx_check" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start, event_type,
-           count(*) AS n_events,
-           count(DISTINCT user_id) AS n_users_exact,
-           TRUE AS within_envelope
-         FROM events GROUP BY 1, 2""",
-
-    "q_sessionize_native" ->
-      """WITH e AS (
-           SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
-             lag(CAST(ts AS TIMESTAMP)) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-           FROM events
-         ), f AS (
-           SELECT *, CASE WHEN prev_ts IS NULL
-                            OR ts >= prev_ts + INTERVAL 30 MINUTE
-                          THEN 1 ELSE 0 END AS new_session
-           FROM e
-         ), g AS (
-           SELECT *, sum(new_session) OVER (
-             PARTITION BY user_id ORDER BY ts, event_id
-             ROWS UNBOUNDED PRECEDING) AS session_seq
-           FROM f
-         )
-         SELECT user_id, min(ts) AS session_start,
-           max(ts) + INTERVAL 30 MINUTE AS session_end,
-           count(*) AS n_events, round(sum(value), 2) AS sum_value
-         FROM g GROUP BY user_id, session_seq""",
-
-    "q_ewma_anomaly" ->
-      // the exact alpha=1/2 recursion replayed by a recursive CTE:
-      // (y + n) * 0.5 is one IEEE add + an exact power-of-two scale,
-      // in day order — bit-identical across engines
-      """WITH RECURSIVE daily AS (
-           SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
-           FROM events GROUP BY 1, 2
-         ), o AS (
-           SELECT event_type, day, n,
-             row_number() OVER (PARTITION BY event_type ORDER BY day) AS rn
-           FROM daily
-         ), r AS (
-           SELECT event_type, day, n, rn, CAST(n AS DOUBLE) AS y, false AS spike
-           FROM o WHERE rn = 1
-           UNION ALL
-           SELECT o.event_type, o.day, o.n, o.rn, (r.y + o.n) * 0.5,
-             abs(o.n - r.y) > 0.5 * r.y
-           FROM r JOIN o ON o.event_type = r.event_type AND o.rn = r.rn + 1
-         )
-         SELECT event_type, strftime(day, '%Y-%m-%d') AS day, n,
-           floor(y * 10000 + 0.5) / 10000 AS ewma, spike
-         FROM r""",
-
-    "q_chat_assemble" ->
-      // q_sessionize's session identity + ordered string_agg turn
-      // concat; cent-long turn values keep the text engine-portable
-      """WITH e AS (
-           SELECT event_id, ts, user_id,
-             event_type || ':' ||
-               CAST(CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS VARCHAR) AS turn,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-           FROM events
-         ), f AS (
-           SELECT *, CASE WHEN prev_ts IS NULL
-                            OR date_diff('second', prev_ts, ts) > 1800
-                          THEN 1 ELSE 0 END AS new_session
-           FROM e
-         ), g AS (
-           SELECT *, sum(new_session) OVER (
-             PARTITION BY user_id ORDER BY ts, event_id) AS session_seq
-           FROM f
-         ), t AS (
-           SELECT user_id, session_seq,
-             CAST(min(ts) AS TIMESTAMP) AS session_start,
-             count(*) AS n_turns,
-             string_agg(turn, chr(10) ORDER BY ts, event_id) AS transcript
-           FROM g GROUP BY user_id, session_seq
-         )
-         SELECT user_id, CAST(session_seq AS BIGINT) AS session_id,
-           session_start, n_turns,
-           CAST(length(transcript) AS BIGINT) AS n_chars,
-           md5(transcript) AS transcript_md5
-         FROM t""",
-
-    "q_sessionize" ->
-      """WITH e AS (
-           SELECT event_id, ts, user_id, value,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-           FROM events
-         ), f AS (
-           SELECT *, CASE WHEN prev_ts IS NULL
-                            OR date_diff('second', prev_ts, ts) > 1800
-                          THEN 1 ELSE 0 END AS new_session
-           FROM e
-         ), g AS (
-           SELECT *, sum(new_session) OVER (
-             PARTITION BY user_id ORDER BY ts, event_id) AS session_seq
-           FROM f
-         )
-         SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-           CAST(min(ts) AS TIMESTAMP) AS session_start,
-           CAST(max(ts) AS TIMESTAMP) AS session_end,
-           count(*) AS n_events, round(sum(value), 2) AS sum_value
-         FROM g GROUP BY user_id, session_seq""",
-
-    // same session semantics as q_sessionize; the stream form has no
-    // session_seq ordinal (Append-mode state emits sessions as the
-    // watermark closes them, in no defined order)
-    "q_sessionize_stream" ->
-      """WITH e AS (
-           SELECT event_id, ts, user_id, value,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-           FROM events
-         ), f AS (
-           SELECT *, CASE WHEN prev_ts IS NULL
-                            OR date_diff('second', prev_ts, ts) > 1800
-                          THEN 1 ELSE 0 END AS new_session
-           FROM e
-         ), g AS (
-           SELECT *, sum(new_session) OVER (
-             PARTITION BY user_id ORDER BY ts, event_id) AS session_seq
-           FROM f
-         )
-         SELECT user_id,
-           CAST(min(ts) AS TIMESTAMP) AS session_start,
-           CAST(max(ts) AS TIMESTAMP) AS session_end,
-           count(*) AS n_events, round(sum(value), 2) AS sum_value
-         FROM g GROUP BY user_id, session_seq"""
-  )
 }

@@ -9,10 +9,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class Ceiling(shuffles: Int, leaves: Int, bnljOk: Boolean)
 
-/** Bench membership: `Headline` gates are timed and summed against the
-  * DuckDB baseline; `Extra` gates are timed but kept out of the
-  * headline total (no baseline-comparable oracle, or a same-work
-  * baseline of their own); `Off` gates are not benched.
+/** Bench membership. `Headline` gates are timed on every tier and
+  * summed against the DuckDB baseline. `Extra` gates are timed on
+  * every tier but kept out of the headline total: they have no
+  * SQL-expressible oracle, or their baseline needs same-work treatment
+  * (a staged artifact, an approximate answer), so including them would
+  * make every Spark-vs-baseline total need a "comparable subset"
+  * footnote. `Off` gates are checked by Verify but not benched.
   */
 sealed trait Role
 object Role {

@@ -146,4 +146,35 @@ class BenchSpec extends AnyFunSuite {
     assert(line.length <= 1900, s"compact bench line ${line.length} chars")
     assert(line.contains("\"metric\":\"total\"") && line.contains("\"queries\":{"))
   }
+
+  test("warm-up tier is the sf0.001 directory beside any data root") {
+    val root = java.nio.file.Files.createTempDirectory("graft_warm").toFile
+    try {
+      val a = new java.io.File(root, "a"); val b = new java.io.File(root, "b")
+      Seq("sf0.1", "sf0.001").foreach(t => new java.io.File(a, t).mkdirs())
+      new java.io.File(b, "sf0.1").mkdirs()
+      assert(Bench.warmupDir(s"$a/sf0.1") ===
+        Some(new java.io.File(a, "sf0.001").getAbsolutePath))
+      assert(Bench.warmupDir(s"$a/sf0.001").isEmpty) // never warms on itself
+      assert(Bench.warmupDir(s"$b/sf0.1").isEmpty)   // no tier beside it
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
+      }
+      rm(root)
+    }
+  }
+
+  test("tools/baseline.py times exactly the registry's headliners") {
+    // the DuckDB baseline keeps its own copy of the list (it runs
+    // outside the JVM); a gate whose bench role changes must change it
+    // too, or the comparable totals silently cover different sets
+    val src = scala.io.Source.fromFile("tools/baseline.py", "UTF-8")
+    val text = try src.mkString finally src.close()
+    val block = "(?s)HEADLINERS = \\[(.*?)\\]".r.findFirstMatchIn(text)
+      .map(_.group(1)).getOrElse(fail("no HEADLINERS list in tools/baseline.py"))
+    val names = "\"(q\\w+)\"".r.findAllMatchIn(block.replaceAll("#[^\n]*", ""))
+      .map(_.group(1)).toSeq
+    assert(names.sorted === Bench.headliners.sorted)
+  }
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   * precedent).
   *
   * Schema-only: builds each query's analyzed plan at sf0.001 without
-  * executing it, so the sweep covers all 170+ gate queries cheaply.
+  * executing it, so the sweep covers all 210 gate queries cheaply.
   */
 class GateSchemaSpec extends SparkSpec {
 

@@ -49,7 +49,7 @@ class Round12OpsSpec extends SparkSpec {
 
   test("staged order→nation map: fingerprint hit skips the rebuild") {
     val d = sf()
-    val path = SparkEntry.stagePath("q5map", d)
+    val path = gates.Fixtures.stagePath("q5map", d)
     graft.sources.StagedMaps.ensureOrderNationMap(spark, d, path)
     assert(!graft.sources.StagedMaps.ensureOrderNationMap(spark, d, path))
   }

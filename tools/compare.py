@@ -3,7 +3,13 @@
 run each oracle SQL in DuckDB over the sf parquet tables, load the
 Spark result parquet, sort columns by name + rows, and diff values.
 
-Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
+With a second Verify dump (e.g. the parent commit's), also diff the
+two dumps: result directories present on only one side, oracle_sql.json
+entries whose text differs, and result sets that differ under the same
+canonicalization with exact equality (this also covers the rows-only
+gates, whose DuckDB compare checks only the row count).
+
+Usage: python3 tools/compare.py <sfDir> <verifyOutDir> [<otherVerifyOutDir>]
 """
 import json, sys, glob, os
 import duckdb
@@ -11,6 +17,7 @@ import pandas as pd
 import numpy as np
 
 sf_dir, out_dir = sys.argv[1], sys.argv[2]
+other_dir = sys.argv[3] if len(sys.argv) > 3 else None
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
@@ -29,11 +36,17 @@ def canon(df):
             df[c] = df[c].astype(str)
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
+def load(result_dir):
+    parts = glob.glob(f"{result_dir}/*.parquet")
+    return pd.concat([pd.read_parquet(f) for f in parts],
+                     ignore_index=True) if parts else pd.DataFrame()
+
+def results(dump):
+    return {os.path.basename(d.rstrip("/")): d for d in glob.glob(f"{dump}/*/")}
+
 fail, ok, rows_only = [], [], []
-for name in sorted(glob.glob(f"{out_dir}/*/")):
-    qname = os.path.basename(name.rstrip("/"))
-    spark_df = pd.concat([pd.read_parquet(f) for f in glob.glob(f"{name}/*.parquet")],
-                         ignore_index=True) if glob.glob(f"{name}/*.parquet") else pd.DataFrame()
+for qname, name in sorted(results(out_dir).items()):
+    spark_df = load(name)
     if qname not in oracle:
         rows_only.append((qname, len(spark_df)))
         continue
@@ -83,4 +96,25 @@ print(f"OK ({len(ok)}):", " ".join(ok))
 print(f"ROWS-ONLY ({len(rows_only)}):", " ".join(f"{q}={n}" for q, n in rows_only))
 print(f"FAIL ({len(fail)}):")
 for q, m in fail: print(f"  {q}: {m}")
-sys.exit(1 if fail else 0)
+
+diff = []
+if other_dir:
+    mine, theirs = results(out_dir), results(other_dir)
+    for q in sorted(mine.keys() ^ theirs.keys()):
+        diff.append((q, f"result only in {out_dir if q in mine else other_dir}"))
+    other_oracle = json.load(open(f"{other_dir}/oracle_sql.json"))
+    for q in sorted(oracle.keys() | other_oracle.keys()):
+        if oracle.get(q) != other_oracle.get(q):
+            diff.append((q, "oracle_sql.json text differs" if q in oracle and q in other_oracle
+                         else f"oracle only in {out_dir if q in oracle else other_dir}"))
+    for q in sorted(mine.keys() & theirs.keys()):
+        a, b = canon(load(mine[q])), canon(load(theirs[q]))
+        if not a.equals(b):
+            why = (f"schema {list(a.columns)} vs {list(b.columns)}" if list(a.columns) != list(b.columns)
+                   else f"dtypes {dict(a.dtypes)} vs {dict(b.dtypes)}" if not a.dtypes.equals(b.dtypes)
+                   else f"rows {len(a)} vs {len(b)}" if len(a) != len(b)
+                   else "values differ in " + ", ".join(c for c in a.columns if not a[c].equals(b[c])))
+            diff.append((q, f"result differs: {why}"))
+    print(f"DUMP DIFF vs {other_dir} ({len(diff)}), {len(mine)} vs {len(theirs)} results:")
+    for q, m in diff: print(f"  {q}: {m}")
+sys.exit(1 if fail or diff else 0)
