@@ -4,26 +4,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.gates.Role
 
-/** Benchmark main: runs the headline workload on SPARK_GRAFT_SF_DIR
-  * and prints ONE JSON line {"metric":...,"queries":{...}}.
+/** Benchmark main: times every benched gate ([[graft.gates.Role]]) on
+  * SPARK_GRAFT_SF_DIR (tier `sf01`) and, when present, on DataGen's 10x
+  * tier SPARK_GRAFT_SF1_DIR (`sf1`, default testdata/sf1). It writes
+  * the full artifact to BENCH_LAST.json and prints one compact JSON
+  * line as the last line of stdout.
   *
-  * Headliners cover each engine area: TPC-H joins/aggs, window dedup,
-  * LSH dedup, ANN, text stats, windowed events, sessionization.
-  *
-  * Contention guard: this box is shared. r5's official bench ran 14x
-  * slow purely from external load; r6's ran at loadavg 20 yet reported
-  * `contended:false`; r8's sf0.1 tier started at load 6-7/32, passed
-  * the old 0.25-cores gate, and shipped physically-inverted timings
-  * (q_passage_dedup 0.72 s at sf0.1 vs 0.17 s at sf10) under a
-  * `clean:true` stamp. The guard logic lives in [[BenchGuard]]
-  * (unit-tested against recorded telemetry) and, since r9, brackets
-  * EVERY QUERY with CPU-bound sentinel probes — a query whose closing
-  * sentinel comes back hot is re-run once after the spike subsides,
-  * and each tier's JSON carries the per-query `dirty` list, so one
-  * contended query no longer poisons (or hides inside) a whole tier.
-  * A cross-tier physical-sanity check (same query, more data, must
-  * not be faster beyond noise — [[BenchGuard.crossTierViolations]])
-  * marks the small tier dirty when the r8 failure mode recurs.
+  * Each gate runs once untimed on the sf0.001 tier beside the data dir
+  * (JIT and codegen warm-up), then [[Runs]] times through [[timedRun]].
+  * A run's wall time is corrected for the CPU time the hypervisor gave
+  * to other guests during it ([[Host.stolenShare]]); the gate reports
+  * the median and quartiles of the corrected times ([[Summary]]). Two
+  * verdicts per gate:
+  *  - `dirty`: the host's steal share over the gate's runs is above
+  *    [[StealBound]], so even its corrected times are suspect;
+  *  - `regressed`: its median is above the committed reference run's
+  *    ([[RefFile]]) by more than the bound of [[regressed]].
+  * A gate any of whose runs throws is `failed` and times as -1.
   */
 object Bench {
   /** The benched gates, in registry order ([[graft.gates.Role]]). */
@@ -32,58 +29,24 @@ object Bench {
   private[graft] val extras: Seq[String] =
     SparkEntry.gates.collect { case g if g.bench == Role.Extra => g.name }
 
-  /** Tier-freshness preamble (r9 verdict item 8): the gitignored tier
-    * parquet was wiped twice during r9 and the old existence-only gate
-    * (`lineitem.parquet` present) let a bench run against stale/small
-    * data — r8's "sf10" document timings were physically impossible
-    * (q_token_count 0.143 s vs DuckDB's 12.3 s) because documents had
-    * been regenerated tiny. Row counts are the cheap invariant: every
-    * scaled tier carries >= factor x the sf0.1 rows for the replicated
-    * AND the synthesized tables (columnless count scans, once per
-    * tier). A tier that fails is SKIPPED and named in `stale`.
+  /** Timed runs per gate. */
+  val Runs = 5
+
+  /** Steal share of the host's CPU over a gate's runs above which the
+    * gate is `dirty`. Over three full runs on a 4-core VM (248 gate-run
+    * pairs), a gate's corrected median sat a median +2 % above its
+    * quietest run's below 1 % steal, +5 to +8 % between 1 and 10 %, and
+    * +11 % from 10 % on: the first bin past the 10 % regression floor.
     */
-  private def tierFresh(spark: SparkSession, dir: String, factor: Long,
-                        baseDir: String): Boolean = {
-    def n(d: String, t: String): Long =
-      try spark.read.parquet(s"$d/$t.parquet").count()
-      catch { case _: Throwable => -1L }
-    Seq("lineitem", "documents", "events").forall { t =>
-      val base = n(baseDir, t)
-      base > 0 && n(dir, t) >= base * factor
-    }
-  }
+  val StealBound = 0.10
 
-  private def loadavg1(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-      .split(" ").head.toDouble
-    catch { case _: Throwable => -1.0 }
+  /** The regression bound's floor, as a share of the reference median. */
+  val RegressionFloor = 0.10
 
-  /** Fixed CPU-bound probe: 200M-row codegen'd sum over 32 partitions.
-    * ~0.27 s on this box when idle; external load inflates it
-    * proportionally (it needs all cores), which is exactly the signal.
+  /** The committed reference run: a BENCH_LAST.json kept as the bench's
+    * baseline on the box it describes.
     */
-  private def sentinel(spark: SparkSession): Double = {
-    val t0 = System.nanoTime()
-    spark.range(0L, 200000000L, 1L, 32).selectExpr("sum(id * 3 + 1)").collect()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  private case class Probe(load1: Double, sentinelSec: Double, waits: Int) {
-    def quiet(cores: Int, idleSec: Double): Boolean =
-      BenchGuard.quiet(load1, cores, sentinelSec, idleSec)
-    def json: String = f"""{"load1":$load1%.2f,"sentinel_sec":$sentinelSec%.3f,"waits":$waits}"""
-  }
-
-  /** Probe, and while the box is hot, wait out the spike (bounded). */
-  private def waitQuiet(spark: SparkSession, cores: Int, idleSec: Double,
-                        maxWaits: Int = 8): Probe = {
-    var p = Probe(loadavg1(), sentinel(spark), 0)
-    while (!p.quiet(cores, idleSec) && p.waits < maxWaits) {
-      Thread.sleep(20000L)
-      p = Probe(loadavg1(), sentinel(spark), p.waits + 1)
-    }
-    p
-  }
+  val RefFile = "BENCH_REF.json"
 
   /** Evaluate EVERY output column of every row on the executors
     * (no driver collect) — the measurement action. FULL
@@ -109,12 +72,17 @@ object Bench {
     if (warm.isDirectory && warm != here) Some(warm.getPath) else None
   }
 
-  /** One timed run of a gate on `dir`: its seconds and the
+  /** One timed run: wall seconds and the host's stolen share over them. */
+  final case class Sample(wall: Double, steal: Double) {
+    def corrected: Double = wall * (1 - steal)
+  }
+
+  /** One timed run of a gate on `dir`: its [[Sample]] and the
     * materialized frame (for its executed plan). Throws what the gate
     * throws.
     */
   private[graft] def timedRun(spark: SparkSession,
-      fn: (SparkSession, String) => DataFrame, dir: String): (Double, DataFrame) = {
+      fn: (SparkSession, String) => DataFrame, dir: String): (Sample, DataFrame) = {
     // drop plan-level caches so each run pays the query's full cost
     // (some pipelines cache internally); repeated runs then control
     // for CPU noise only, not for cached reuse
@@ -127,163 +95,83 @@ object Bench {
     // 10.2 s inside the full-tier sequence vs 1.65 s standalone at
     // sf10, until a System.gc() between runs cured it.
     System.gc(); Thread.sleep(300)
+    val before = Host.procStat()
     val t0 = System.nanoTime()
     val df = fn(spark, dir)
     exec(df)
-    ((System.nanoTime() - t0) / 1e9, df)
+    val wall = (System.nanoTime() - t0) / 1e9
+    (Sample(wall, Host.stolenShare(before, Host.procStat())), df)
   }
 
-  /** One query's guarded measurement. `sec` < 0 marks a failed query;
-    * `clean` means the kept attempt ran between two quiet sentinels
-    * AND did not trip the cross-round prior tripwire; `priorOutlier`
-    * names the tripwire specifically (a subset of !clean).
-    */
-  private case class QRes(name: String, sec: Double, clean: Boolean,
-                          retried: Boolean, priorOutlier: Boolean = false)
+  /** Linear-interpolation quantile of a non-empty sample (`p` in [0, 1]). */
+  private[graft] def quantile(xs: Seq[Double], p: Double): Double = {
+    val s = xs.sorted
+    val h = (s.size - 1) * p
+    val i = h.toInt
+    if (i + 1 < s.size) s(i) + (h - i) * (s(i + 1) - s(i)) else s(i)
+  }
 
-  /** Per-tier per-query timings parsed from a committed bench artifact
-    * (BENCH_LAST.json / BENCH_r*.json): tier tag → name → seconds,
-    * headline and extras merged. Jackson (on Spark's classpath) —
-    * these are nested objects, beyond the flat-regex baselineMaps.
+  /** A gate's timed runs: the median and quartiles of the corrected
+    * seconds, the median wall seconds, and the steal share over all
+    * runs (each run weighted by its wall time).
     */
-  private[graft] def artifactTierTimings(path: String): Map[String, Map[String, Double]] =
-    try {
-      val f = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(f)) Map.empty
-      else tierTimingsFromJson(
-        new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
-    } catch { case _: Throwable => Map.empty }
+  final case class Summary(median: Double, q1: Double, q3: Double,
+                           wallMedian: Double, steal: Double) {
+    def dirty: Boolean = steal > StealBound
+    def json: String =
+      f"""{"median":$median%.3f,"q1":$q1%.3f,"q3":$q3%.3f,"wall_median":$wallMedian%.3f,"steal":$steal%.4f}"""
+    def brief: String =
+      f"median=$median%.3f q1=$q1%.3f q3=$q3%.3f wall=$wallMedian%.3f steal=$steal%.3f"
+  }
 
-  private[graft] def tierTimingsFromJson(json: String): Map[String, Map[String, Double]] =
+  /** The [[Summary]] of a gate's non-empty timed runs. */
+  def summarize(runs: Seq[Sample]): Summary = {
+    val c = runs.map(_.corrected)
+    val wall = runs.map(_.wall).sum
+    Summary(quantile(c, 0.5), quantile(c, 0.25), quantile(c, 0.75),
+      quantile(runs.map(_.wall), 0.5), if (wall > 0) 1 - c.sum / wall else 0.0)
+  }
+
+  /** [[Runs]] timed runs of one gate on `dir`, summarised. Throws what
+    * the gate throws.
+    */
+  private[graft] def measure(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame, dir: String): Summary =
+    summarize((1 to Runs).map(_ => timedRun(spark, fn, dir)._1))
+
+  /** Is `now` a regression against the reference `ref`? Its median is
+    * above the reference median by more than 10 % or, when the
+    * reference run spread wider, its interquartile range.
+    */
+  private[graft] def regressed(now: Summary, ref: Summary): Boolean =
+    ref.median > 0 &&
+      now.median > ref.median * (1 + math.max(RegressionFloor, (ref.q3 - ref.q1) / ref.median))
+
+  /** The per-gate summaries of a bench artifact, by tier tag; empty
+    * when the text is not such an artifact, so no gate gets a verdict.
+    */
+  private[graft] def reference(json: String): Map[String, Map[String, Summary]] =
     try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = om.readTree(json)
       import scala.jdk.CollectionConverters._
-      Seq("sf01", "sf1", "sf10").flatMap { tag =>
-        Option(root.get(tag)).map { t =>
-          def obj(key: String): Map[String, Double] =
-            Option(t.get(key)).map(_.fields().asScala
-              .map(e => e.getKey -> e.getValue.asDouble()).toMap)
-              .getOrElse(Map.empty)
-          tag -> (obj("queries") ++ obj("extras"))
-        }
-      }.toMap
-    } catch { case _: Throwable => Map.empty }
-
-  /** The COMMITTED BENCH_LAST.json's tier timings (`git show
-    * HEAD:BENCH_LAST.json`), empty when git/HEAD is unavailable. The
-    * tripwire's reference must survive a same-session rerun: the
-    * first r12 run correctly flagged a 4.8x in-tier outlier against
-    * the committed prior, but its own (dirty) artifact then replaced
-    * BENCH_LAST.json on disk and the rerun compared against the very
-    * outlier it should re-test — the committed artifact is the
-    * reviewed reference, the working-tree file is just the newest
-    * sample.
-    */
-  private[graft] def committedTierTimings(): Map[String, Map[String, Double]] =
-    try {
-      val p = new ProcessBuilder("git", "show", "HEAD:BENCH_LAST.json")
-        .redirectErrorStream(false).start()
-      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-      if (p.waitFor() == 0) tierTimingsFromJson(out) else Map.empty
-    } catch { case _: Throwable => Map.empty }
-
-  /** Best (min) prior per-query time per tier across the given
-    * committed artifacts — the cross-round tripwire's reference
-    * ([[BenchGuard.priorOutlier]]). Min-of-artifacts so one contended
-    * prior run can't inflate the reference and mask a blip.
-    */
-  private[graft] def priorTimings(paths: Seq[String],
-      extra: Seq[Map[String, Map[String, Double]]] = Nil): Map[String, Map[String, Double]] = {
-    val all = paths.map(artifactTierTimings) ++ extra
-    all.flatMap(_.keys).distinct.map { tag =>
-      val maps = all.flatMap(_.get(tag))
-      val names = maps.flatMap(_.keys).distinct
-      tag -> names.flatMap { n =>
-        val ts = maps.flatMap(_.get(n)).filter(_ > 0)
-        if (ts.isEmpty) None else Some(n -> ts.min)
-      }.toMap
-    }.toMap
-  }
-
-  /** Time each query as the `agg` of `runs` cache-cleared executions,
-    * bracketing every query with CPU-bound sentinel probes: the probe
-    * that closes query N opens query N+1, so the per-tier overhead is
-    * one sentinel per query. A query whose opening sentinel is hot
-    * waits the spike out (bounded); one whose closing sentinel is hot
-    * is re-run once after the box quiets, keeping the cleaner attempt.
-    * Mid-tier the 1-min loadavg is dominated by the bench's own
-    * 32-thread work, so only the sentinel gates here — loadavg gates
-    * the tier start ([[BenchGuard.quiet]]).
-    */
-  private def timeGuarded(spark: SparkSession, dir: String, names: Seq[String],
-                          runs: Int, agg: Seq[Double] => Double,
-                          idleSec: Double,
-                          prior: Map[String, Double] = Map.empty): Seq[QRes] = {
-    // (kept aggregate, max/min spread across the timed runs). A spread
-    // beyond 2.5× means a load burst hit SOME run while the bracketing
-    // sentinels landed in gaps — the kept min may still be honest, but
-    // the query must not stamp `clean` (late-r9: a poisoned sf10 tier
-    // passed every sentinel this way)
-    def attempt(fn: (SparkSession, String) => DataFrame): (Double, Double) = {
-      val samples = (1 to runs).map { _ =>
-        try Some(timedRun(spark, fn, dir)._1) catch { case _: Throwable => None }
-      }
-      // a query that threw must not report its (near-zero) elapsed
-      // time as a success — sentinel -1 and a `failed` list instead
-      if (samples.forall(_.isDefined)) {
-        val ts = samples.flatten
-        (agg(ts), if (ts.min > 0) ts.max / ts.min else 1.0)
-      } else (-1.0, 1.0)
-    }
-    def waitSentinel(first: Double): Double = {
-      var s = first
-      var waits = 0
-      while (!BenchGuard.quietPost(s, idleSec) && waits < 8) {
-        Thread.sleep(20000L); s = sentinel(spark); waits += 1
-      }
-      s
-    }
-    val SpreadBound = 2.5
-    var opening = sentinel(spark)
-    names.flatMap { name =>
-      SparkEntry.queries.get(name).map { fn =>
-        // cross-round tripwire (r11 verdict item 1): a kept time >3×
-        // the best committed prior-artifact time at this tier retries
-        // exactly like a hot closing sentinel, and stays dirty if the
-        // retry trips too — the q_token_count 8× sf0.1 blip shipped
-        // inside a contended:false artifact because it fit between
-        // two quiet sentinels
-        def outlier(x: Double): Boolean =
-          BenchGuard.priorOutlier(x, prior.get(name))
-        opening = waitSentinel(opening)
-        var (t, spread) = attempt(fn)
-        var closing = sentinel(spark)
-        var clean = BenchGuard.quietPost(opening, idleSec) &&
-          BenchGuard.quietPost(closing, idleSec) &&
-          (runs < 2 || spread <= SpreadBound) && !outlier(t)
-        var retried = false
-        if (!clean) {
-          val reopening = waitSentinel(closing)
-          if (BenchGuard.quietPost(reopening, idleSec)) {
-            val (t2, spread2) = attempt(fn)
-            val c2 = sentinel(spark)
-            retried = true
-            if (BenchGuard.quietPost(c2, idleSec) &&
-                (runs < 2 || spread2 <= SpreadBound) && !outlier(t2)) {
-              t = t2; clean = true
-            }
-            else if (t2 >= 0 && (t < 0 || t2 < t)) t = t2
-            closing = c2
+      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      root.properties().asScala.collect { case t if t.getValue.has("gates") =>
+        t.getKey -> t.getValue.get("gates").properties().asScala.map { e =>
+          def v(k: String): Double = {
+            val n = e.getValue.get(k)
+            if (n == null || !n.isNumber) throw new IllegalArgumentException(s"${e.getKey}.$k")
+            n.asDouble
           }
-        }
-        opening = closing // the closing probe opens the next query
-        QRes(name, t, clean, retried, priorOutlier = outlier(t))
-      }
-    }
-  }
+          e.getKey -> Summary(v("median"), v("q1"), v("q3"), v("wall_median"), v("steal"))
+        }.toMap
+      }.toMap
+    } catch { case _: Exception => Map.empty }
 
-  private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+  /** [[reference]] of the file at `path`; empty when it is absent. */
+  private[graft] def readReference(path: String): Map[String, Map[String, Summary]] = {
+    val f = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.isRegularFile(f)) Map.empty
+    else reference(java.nio.file.Files.readString(f))
+  }
 
   /** Parse a committed BASELINE*.md's embedded ```json block — the
     * "queries" (and optional "extras") name→seconds maps. Flat regex
@@ -317,87 +205,84 @@ object Bench {
       (common.size, common.map(_._2).sum, common.map { case (k, _) => bq(k) }.sum)
     }
 
-  /** Artifact-computed comparable ratio (r10 verdict item 3): the
-    * bench itself computes and PRINTS the Spark/baseline ratio per
-    * tier over the exact headline intersection — build-log and SURVEY
-    * prose must quote only this field, never a hand-derived number.
+  /** Artifact-computed comparable ratio: the bench itself computes and
+    * prints the Spark/baseline ratio over the exact headline
+    * intersection, so prose quotes this field, never a hand-derived
+    * number.
     */
   private def ratioJson(t: Tier, path: String): String =
     (comparable(t, path), baselineMaps(path)) match {
       case (Some((n, sparkTotal, baseTotal)), Some((bq, bx))) =>
         val excluded = t.headline.collect { case (k, v) if v >= 0 && !bq.contains(k) => k }
         val ratio = if (baseTotal > 0) sparkTotal / baseTotal else -1.0
-        val exJson = excluded.map("\"" + _ + "\"").mkString("[", ",", "]")
         val extrasRatios = t.extraResults.collect {
           case (k, v) if v >= 0 && bx.get(k).exists(_ > 0) =>
             "\"" + k + "\":" + f"${v / bx(k)}%.3f"
         }.mkString("{", ",", "}")
-        f""","baseline_file":"$path","baseline_n":$n,"spark_comparable_total":$sparkTotal%.3f,"baseline_total":$baseTotal%.3f,"ratio":$ratio%.3f,"ratio_excluded":$exJson,"extras_ratio":$extrasRatios"""
+        f""","baseline_file":"$path","baseline_n":$n,"spark_comparable_total":$sparkTotal%.3f,"baseline_total":$baseTotal%.3f,"ratio":$ratio%.3f,"ratio_excluded":${arr(excluded)},"extras_ratio":$extrasRatios"""
       case _ => ""
     }
 
-  private case class Tier(results: Seq[QRes], preQuiet: Boolean, pre: Probe,
-                          stagingFailed: Boolean = false) {
-    // a tier is clean iff it STARTED on a quiet box (loadavg +
-    // sentinel), staging succeeded (a failed stageTier silently moves
-    // the one-time index builds INSIDE the timed unit — r11 advice
-    // item 1: the amortization claim would be invalidated with no
-    // signal in the artifact), and every kept query measurement ran
-    // between two quiet sentinels; `dirty` names the exceptions so
-    // one contended query doesn't anonymously poison the tier
-    def dirty: Seq[String] = results.collect { case q if !q.clean => q.name }
-    def clean: Boolean = preQuiet && !stagingFailed && dirty.isEmpty
-    def timings: Seq[(String, Double)] = results.map(q => q.name -> q.sec)
-    def headline: Seq[(String, Double)] =
-      timings.filterNot(r => extras.contains(r._1))
-    def extraResults: Seq[(String, Double)] = timings.filter(r => extras.contains(r._1))
+  private def arr(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+
+  /** One tier's gates (None: a run threw) judged against `ref`. A
+    * failed stageTier is recorded, not swallowed: the consuming gates
+    * would then build their index inside the timed runs.
+    */
+  private case class Tier(gates: Seq[(String, Option[Summary])], stagingFailed: Boolean,
+                          ref: Map[String, Summary]) {
+    private def ok = gates.collect { case (n, Some(s)) => n -> s }
+    def failed: Seq[String] = gates.collect { case (n, None) => n }
+    def dirty: Seq[String] = ok.collect { case (n, s) if s.dirty => n }
+    def regressedGates: Seq[String] =
+      ok.collect { case (n, s) if ref.get(n).exists(regressed(s, _)) => n }
+    def clean: Boolean = !stagingFailed && dirty.isEmpty
+    private def medians = gates.map { case (n, s) => n -> s.fold(-1.0)(_.median) }
+    def headline: Seq[(String, Double)] = medians.filterNot(r => extras.contains(r._1))
+    def extraResults: Seq[(String, Double)] = medians.filter(r => extras.contains(r._1))
+    def total: Double = headline.filter(_._2 >= 0).map(_._2).sum
     def json: String = {
-      val failed = results.collect { case q if q.sec < 0 => q.name }
-      def obj(rs: Seq[(String, Double)]) =
-        rs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-      def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val total = headline.filter(_._2 >= 0).map(_._2).sum
-      val retried = results.count(_.retried)
-      val priorOutliers = results.collect { case q if q.priorOutlier => q.name }
-      f""""total":$total%.3f,"clean":$clean,"staging_failed":$stagingFailed,"retried":$retried,"pre":${pre.json},"dirty":${arr(dirty)},"prior_outliers":${arr(priorOutliers)},"queries":${obj(headline)},"extras":${obj(extraResults)},"failed":${arr(failed)}"""
+      val gs = ok.map { case (n, s) => "\"" + n + "\":" + s.json }.mkString("{", ",", "}")
+      f""""total":$total%.3f,"clean":$clean,"staging_failed":$stagingFailed,"dirty":${arr(dirty)},"regressed":${arr(regressedGates)},"ref_gates":${ok.count(g => ref.contains(g._1))},"failed":${arr(failed)},"gates":$gs"""
     }
   }
 
-  /** Run one tier: wait for a quiet box (loadavg + sentinel — at tier
-    * start the loadavg reflects OTHER processes, which is the point),
-    * then per-query guarded timings.
+  /** A scaled tier is fresh when it carries >= `factor` x the base
+    * tier's rows of lineitem, documents and events (columnless count
+    * scans): a tier regenerated small, or from another base, would
+    * time physically impossible numbers.
     */
-  private def runTier(spark: SparkSession, cores: Int, idleSec: Double,
-                      dir: String, names: Seq[String], runs: Int,
-                      agg: Seq[Double] => Double,
-                      prior: Map[String, Double] = Map.empty): Tier = {
-    // stage per-tier artifacts (persisted indexes) BEFORE the timed
-    // loop: their one-time build is the cost the incremental
-    // operators amortize away, so it must not land inside (r10
-    // verdict item 1) — nor inflate the first run's spread past the
-    // dirty bound. A staging FAILURE is recorded in the artifact
-    // (tier `staging_failed` + a contended reason) instead of being
-    // swallowed (r11 advice item 1): the consuming gates would
-    // silently self-stage inside the timed loop, putting the full
-    // index build into the 'screen+delta only' timed unit.
+  private def tierFresh(spark: SparkSession, dir: String, factor: Long,
+                        baseDir: String): Boolean = {
+    def n(d: String, t: String): Long =
+      try spark.read.parquet(s"$d/$t.parquet").count()
+      catch { case _: Throwable => -1L }
+    Seq("lineitem", "documents", "events").forall { t =>
+      val base = n(baseDir, t)
+      base > 0 && n(dir, t) >= base * factor
+    }
+  }
+
+  private def runTier(spark: SparkSession, dir: String, names: Seq[String],
+                      ref: Map[String, Summary]): Tier = {
     val stagingFailed =
       try { SparkEntry.stageTier(spark, dir); false }
       catch { case e: Throwable =>
         System.err.println(s"stageTier($dir) FAILED: $e"); true }
-    val pre = waitQuiet(spark, cores, idleSec)
-    val rs = timeGuarded(spark, dir, names, runs, agg, idleSec, prior)
-    Tier(rs, pre.quiet(cores, idleSec), pre, stagingFailed)
+    val gates = names.flatMap { name =>
+      SparkEntry.queries.get(name).map { fn =>
+        val s = try Some(measure(spark, fn, dir)) catch { case _: Throwable => None }
+        System.err.println(s"[bench] $dir $name ${s.fold("FAILED")(_.brief)}")
+        name -> s
+      }
+    }
+    Tier(gates, stagingFailed, ref)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val idleSec = sys.env.getOrElse("SPARK_GRAFT_SENTINEL_IDLE",
-      BenchGuard.DefaultIdleSentinelSec.toString).toDouble
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    sentinel(spark) // first call pays JIT for the probe itself: discard
 
     // Warm JIT + whole-stage-codegen caches by running every benched
     // gate once on the warm-up tier. Steady-state throughput is the
@@ -413,135 +298,50 @@ object Bench {
       case None => spark.read.parquet(s"$sfDir/nation.parquet").count()
     }
 
-    // cross-round tripwire reference: the best committed per-query
-    // times — git HEAD's BENCH_LAST.json (the reviewed reference; the
-    // working-tree copy may be a same-session rerun's own outlier),
-    // the working-tree file, and the last driver-stamped round
-    // artifact, min-merged. Override with SPARK_GRAFT_PRIOR_BENCH=path
-    // for A/B work.
-    val priorPaths = sys.env.get("SPARK_GRAFT_PRIOR_BENCH").map(Seq(_))
-      .getOrElse {
-        val rounds = Option(new java.io.File(".").listFiles())
-          .getOrElse(Array.empty[java.io.File]).map(_.getName)
-          .filter(_.matches("BENCH_r\\d+\\.json"))
-        val newest =
-          if (rounds.isEmpty) Nil
-          else Seq(rounds.maxBy(n => "\\d+".r.findFirstIn(n).get.toInt))
-        "BENCH_LAST.json" +: newest
-      }
-    val prior = priorTimings(priorPaths,
-      extra = if (sys.env.contains("SPARK_GRAFT_PRIOR_BENCH")) Nil
-              else Seq(committedTierTimings()))
-
-    // ---- sf0.1 tier: median of 3 (discards one contended run AND one
-    // anomalously fast one) --------------------------------------------------
-    val t0 = runTier(spark, cpus, idleSec, sfDir, headliners ++ extras,
-      runs = 3, median, prior.getOrElse("sf01", Map.empty))
-
-    // ---- optional sf1 tier -------------------------------------------------
-    // at sf0.1 all headliners sit inside the ~0.2 s/job scheduling floor,
-    // so per-query ratios vs the baseline engine are noise; the sf1 tier
-    // (DataGen output, 10x) puts the big ones seconds deep where the
-    // ratio measures the plan, not the scheduler. min-of-2 is stable
-    // because every query is bracketed by quiet sentinels.
-    val stale = scala.collection.mutable.ListBuffer[String]()
-    def tierIf(dir: String, factor: Long, tag: String)(
-        run: => Tier): Option[Tier] =
-      if (!new java.io.File(s"$dir/lineitem.parquet").exists || dir == sfDir) None
-      // freshness is relative to the RUN's base tier (sfDir), not a
-      // hard-coded absolute path — a bench run from another checkout
-      // or data root must not silently skip every scaled tier
-      // (r10 advice item 3)
-      else if (!tierFresh(spark, dir, factor, baseDir = sfDir)) { stale += tag; None }
-      else Some(run)
-
+    val ref = readReference(RefFile)
+    def tier(tag: String, dir: String): Tier =
+      runTier(spark, dir, headliners ++ extras, ref.getOrElse(tag, Map.empty))
+    val t0 = tier("sf01", sfDir)
+    // the sf1 tier (DataGen's 10x tier, README) puts the heavy gates
+    // seconds deep, past Spark's per-job scheduling floor. Skipped when
+    // absent; skipped and named in `stale_tiers` when it is not 10x
+    // the base tier
     val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "testdata/sf1")
-    val sf1Tier = tierIf(sf1Dir, 10L, "sf1") {
-      runTier(spark, cpus, idleSec, sf1Dir, headliners ++ extras,
-        runs = 2, _.min, prior.getOrElse("sf1", Map.empty))
-    }
-    val sf1Json = sf1Tier.map(t => s""","sf1":{"dir":"$sf1Dir","runs":2,${t.json}${ratioJson(t, "BASELINE_SF1.md")}}""").getOrElse("")
+    val sf1Present = new java.io.File(s"$sf1Dir/lineitem.parquet").exists && sf1Dir != sfDir
+    val sf1 =
+      if (sf1Present && tierFresh(spark, sf1Dir, 10L, baseDir = sfDir)) Some(tier("sf1", sf1Dir))
+      else None
+    val stale = if (sf1Present && sf1.isEmpty) Seq("sf1") else Nil
+    val tiers = Seq(("sf01", sfDir, "BASELINE.md", Some(t0)),
+      ("sf1", sf1Dir, "BASELINE_SF1.md", sf1)).collect {
+      case (tag, dir, base, Some(t)) => (tag, dir, base, t) }
 
-    // ---- optional sf10 tier: the FULL headliner set (r7 verdict item 2 —
-    // the 5-query tier settled its borderliners decisively, so every
-    // headliner now gets the seconds-deep trial instead of a "floor"
-    // presumption) -----------------------------------------------------------
-    val sf10Dir = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "testdata/sf10")
-    val sf10Tier = tierIf(sf10Dir, 100L, "sf10") {
-      runTier(spark, cpus, idleSec, sf10Dir, headliners ++ extras,
-        runs = 2, _.min, prior.getOrElse("sf10", Map.empty))
-    }
-    val sf10Json = sf10Tier.map(t => s""","sf10":{"dir":"$sf10Dir","runs":2,${t.json}${ratioJson(t, "BASELINE_SF10.md")}}""").getOrElse("")
-
-    // ---- cross-tier physical sanity (r8 verdict item 5): same query,
-    // more data, must not be faster beyond noise — else the small
-    // tier's timing is load noise and the tier is marked dirty.
-    // EXTRAS are covered too (late r9): a builder run recorded
-    // q_dedup_minhash at 77.6 s in a load-poisoned sf10 tier whose
-    // per-query sentinels all landed in burst gaps — headline-only
-    // sanity would have let that pass silently ------------------------------
-    def full(t: Tier): Seq[(String, Double)] = t.headline ++ t.extraResults
-    val biggest = sf10Tier.map(full).orElse(sf1Tier.map(full))
-    val xtier01 = biggest.map(b => BenchGuard.crossTierViolations(full(t0), b)).getOrElse(Nil)
-    val xtier1 = (sf1Tier, biggest) match {
-      case (Some(t1), Some(b)) => BenchGuard.crossTierViolations(full(t1), b)
-      case _ => Nil
-    }
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val xtierJson = s""","cross_tier_dirty":{"sf01":${arr(xtier01)},"sf1":${arr(xtier1)}}"""
-
-    // `contended` decomposed (r10 verdict item 4): the top-level flag
-    // is the OR of named reasons, so an artifact reader sees exactly
-    // which component tripped it (a dirty tier, a cross-tier
-    // violation, or a stale skipped tier) instead of discounting a
-    // run whose tier blocks all read clean
-    val reasons = scala.collection.mutable.ListBuffer[String]()
-    if (!t0.clean) reasons += "sf01_dirty"
-    if (sf1Tier.exists(!_.clean)) reasons += "sf1_dirty"
-    if (sf10Tier.exists(!_.clean)) reasons += "sf10_dirty"
-    if (t0.stagingFailed) reasons += "staging_failed_sf01"
-    if (sf1Tier.exists(_.stagingFailed)) reasons += "staging_failed_sf1"
-    if (sf10Tier.exists(_.stagingFailed)) reasons += "staging_failed_sf10"
-    if (xtier01.nonEmpty) reasons += "cross_tier_sf01"
-    if (xtier1.nonEmpty) reasons += "cross_tier_sf1"
-    stale.foreach(t => reasons += s"stale_$t")
-    val allClean = reasons.isEmpty
-    // top-level total/queries are headline-only (baseline-comparable);
-    // the per-tier blocks carry the "extras" timings
-    val total = t0.headline.filter(_._2 >= 0).map(_._2).sum
+    val reasons = tiers.flatMap { case (tag, _, _, t) =>
+      Seq(s"${tag}_dirty" -> t.dirty.nonEmpty, s"staging_failed_$tag" -> t.stagingFailed)
+    }.collect { case (r, true) => r }
+    // top-level total/queries are the base tier's headline medians
+    // (baseline-comparable); the tier blocks carry every gate's summary
     val qs = t0.headline.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
-    val failedJson = arr(t0.results.collect { case q if q.sec < 0 => q.name })
-    val staleJson = s""","stale_tiers":${arr(stale.toSeq)}"""
-
-    // full artifact: every tier block, probes, per-query timings
-    val reasonsJson = s""","contended_reasons":${arr(reasons.toSeq)},"prior_files":${arr(priorPaths)}"""
+    val failedJson = arr(t0.failed)
+    val tierJson = tiers.map { case (tag, dir, base, t) =>
+      s""""$tag":{"dir":"$dir",${t.json}${ratioJson(t, base)}}""" }.mkString(",")
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","idle_calibration_sec":$idleSec%.3f,"load_gate":${BenchGuard.LoadFraction * cpus}%.1f,"sentinel_bound_sec":${BenchGuard.SentinelSlack * idleSec}%.3f,"contended":${!allClean}$reasonsJson$staleJson,"sf01":{${t0.json}${ratioJson(t0, "BASELINE.md")}}$sf1Json$sf10Json$xtierJson}"""
+      f"""{"metric":"total","value":${t0.total}%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","runs":$Runs,"steal_bound":$StealBound,"ref":"$RefFile","contended":${reasons.nonEmpty},"contended_reasons":${arr(reasons)},"stale_tiers":${arr(stale)},$tierJson}"""
     val out = new java.io.PrintWriter("BENCH_LAST.json")
     try out.println(json) finally out.close()
 
     // stdout gets the COMPACT line, and it must be the LAST line: the
     // driver keeps only the final ~2000 chars of stdout and parses the
-    // JSON line it finds there. r7-r9's full multi-tier line outgrew
-    // that window, so the round artifact shipped `"parsed": null` with
-    // a truncated raw tail (r9 verdict item 4). Per-tier totals +
-    // clean flags fit; per-query tier detail lives in BENCH_LAST.json
-    // (committed each round).
-    def tierBrief(tag: String, t: Option[Tier], basePath: String): Option[String] =
-      t.map { x =>
-        val ratio = comparable(x, basePath).collect {
-          case (_, sp, b) if b > 0 => f""","ratio":${sp / b}%.2f""" }.getOrElse("")
-        f""""$tag":{"total":${x.headline.filter(_._2 >= 0).map(_._2).sum}%.2f,"clean":${x.clean}$ratio}"""
-      }
-    val tiers = (Seq(tierBrief("sf1", sf1Tier, "BASELINE_SF1.md"),
-      tierBrief("sf10", sf10Tier, "BASELINE_SF10.md")).flatten ++
-      comparable(t0, "BASELINE.md").collect {
-        case (_, sp, b) if b > 0 => f""""sf01_ratio":${sp / b}%.2f""" } :+
-      s""""xtier_dirty":${(xtier01 ++ xtier1).distinct.size}""").mkString(",")
-    val compact = compactLine(total, t0.headline, failedJson, sfDir,
-      !allClean, stale.toSeq, tiers)
-    println(compact)
+    // JSON line it finds there. Per-gate quartiles live in
+    // BENCH_LAST.json.
+    val briefs = tiers.map { case (tag, _, base, t) =>
+      val ratio = comparable(t, base).collect {
+        case (_, sp, b) if b > 0 => f""","ratio":${sp / b}%.2f""" }.getOrElse("")
+      f""""$tag":{"total":${t.total}%.2f,"clean":${t.clean},"dirty":${t.dirty.size},"regressed":${t.regressedGates.size}$ratio}"""
+    }.mkString(",")
+    println(compactLine(t0.total, t0.headline, failedJson, sfDir, reasons.nonEmpty,
+      stale, briefs))
     spark.stop()
   }
 
@@ -554,7 +354,6 @@ object Bench {
                                  failedJson: String, sfDir: String,
                                  contended: Boolean, stale: Seq[String],
                                  tiers: String): String = {
-    def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     def build(dp: Int, withTiers: Boolean): String = {
       val qs = headline.map { case (k, v) =>
         "\"" + k + "\":" + s"%.${dp}f".format(v) }.mkString("{", ",", "}")

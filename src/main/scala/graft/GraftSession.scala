@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Central session factory with scale-oriented defaults.
   *
-  * Tuned for the grading harness (local[32], 128 GiB) but every
+  * Runs `local[N]` at [[cores]] by default; every
   * setting is chosen to also be correct on a 1000-executor cluster:
   * AQE handles runtime re-planning (skew joins, partition coalescing),
   * NTZ timestamps keep parquet round-trips engine-portable, and the
@@ -33,7 +33,15 @@ object GraftSession {
     b
   }
 
-  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
+  /** The `local[N]` width of every main: `SPARK_GRAFT_CPUS` when it is
+    * set in `env`, else this machine's core count.
+    */
+  def cores(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def builder(master: String = s"local[${cores()}]",
+              shufflePartitions: Int = cores()): SparkSession.Builder =
     withEnvConf(SparkSession
       .builder()
       .master(master)

@@ -13,32 +13,28 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   */
 object Probe {
 
-  /** One gate: the seconds of each timed run, the ShuffleExchangeExec
-    * count and BroadcastNestedLoopJoin presence in the final AQE plan,
-    * and that plan's text.
+  /** One gate: Bench's summary of its timed runs, the
+    * ShuffleExchangeExec count and BroadcastNestedLoopJoin presence in
+    * the final AQE plan, and that plan's text.
     */
-  case class Result(name: String, secs: Seq[Double], exchanges: Int,
+  case class Result(name: String, summary: Bench.Summary, exchanges: Int,
                     bnlj: Boolean, plan: String) {
-    def line: String = {
-      val s = secs.sorted
-      f"PROBE $name min=${s.head}%.3f median=${s(s.size / 2)}%.3f " +
-        s"exchanges=$exchanges bnlj=$bnlj"
-    }
+    def line: String = s"PROBE $name ${summary.brief} exchanges=$exchanges bnlj=$bnlj"
   }
 
   private val aqe = new AdaptiveSparkPlanHelper {}
 
   /** A JIT warm-up pass on the warm-up tier beside `dir`
-    * ([[Bench.warmupDir]]), then three of Bench's timed runs on `dir`.
-    * Left reports an unknown or failing gate.
+    * ([[Bench.warmupDir]]), then Bench's [[Bench.Runs]] timed runs on
+    * `dir`. Left reports an unknown or failing gate.
     */
   def measure(spark: SparkSession, dir: String, name: String): Either[String, Result] =
     SparkEntry.queries.get(name).toRight(s"PROBE $name UNKNOWN").flatMap { fn =>
       try {
         Bench.warmupDir(dir).foreach(w => Bench.exec(fn(spark, w)))
-        val runs = (1 to 3).map(_ => Bench.timedRun(spark, fn, dir))
+        val runs = (1 to Bench.Runs).map(_ => Bench.timedRun(spark, fn, dir))
         val plan = runs.last._2.queryExecution.executedPlan
-        Right(Result(name, runs.map(_._1),
+        Right(Result(name, Bench.summarize(runs.map(_._1)),
           aqe.collect(plan) { case e: ShuffleExchangeExec => e }.size,
           aqe.find(plan)(_.isInstanceOf[BroadcastNestedLoopJoinExec]).isDefined,
           plan.toString))
@@ -50,8 +46,7 @@ object Probe {
       System.err.println("usage: graft.Probe <sfDir> <q1> [q2...]")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.tail.foreach { name =>
       measure(spark, args.head, name).fold(println, r => println(s"${r.line}\n${r.plan}"))

@@ -46,9 +46,4 @@ object PiiFunctions {
   def countSsns(text: Column): Column   = regexp_count(text, lit(ssnRe)).cast("long")
   def countPhones(text: Column): Column = regexp_count(text, lit(phoneRe)).cast("long")
   def countIps(text: Column): Column    = regexp_count(text, lit(ipRe)).cast("long")
-
-  /** Total PII hits across all types. */
-  def piiCount(text: Column): Column =
-    countEmails(text) + countCards(text) + countSsns(text) +
-      countPhones(text) + countIps(text)
 }

@@ -84,15 +84,6 @@ object TextFunctions {
     })
   }
 
-  /** Language scores: for each (lang, markers) pair, the count of
-    * tokens that are marker words for that language.
-    */
-  def langScore(text: Column, markers: Seq[String]): Column = {
-    val ms = array(markers.map(lit): _*)
-    bindOnce(tokens(text), ts =>
-      size(filter(ts, t => array_contains(ms, t))).cast("long"))
-  }
-
   /** Argmax language id over marker lists; ties break by list order
     * (first wins), unknown when all scores are 0. Tokens are split
     * once and the score vector is bound once — the naive when-chain

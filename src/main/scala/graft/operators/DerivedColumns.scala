@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Derived-column builders (silver layer).
@@ -33,13 +33,4 @@ object DerivedColumns {
   /** Deterministic composite business key. */
   def uniqueKey(cols: Seq[Column], sep: String = "_"): Column =
     concat_ws(sep, cols: _*)
-
-  def withTipoPersona(df: DataFrame, classCol: String, out: String = "tipo_persona"): DataFrame =
-    df.withColumn(out, conditionalCode(col(classCol), "NIT"))
-
-  def withAge(df: DataFrame, dateCol: String, baseYear: Int, out: String): DataFrame =
-    df.withColumn(out, ageYears(col(dateCol), baseYear))
-
-  def withUniqueKey(df: DataFrame, parts: Seq[String], out: String = "id_unico"): DataFrame =
-    df.withColumn(out, uniqueKey(parts.map(col)))
 }

@@ -114,12 +114,6 @@ object Profiler {
       .limit(topN)
   }
 
-  /** Seeded sample profile (the reference profiles a 1% sample to
-    * bound cost on large inputs).
-    */
-  def sampledNullProfile(df: DataFrame, fraction: Double, seed: Long = 42L): DataFrame =
-    nullProfile(df.sample(withReplacement = false, fraction, seed))
-
   /** Consolidated validations: arbitrary named boolean rules counted
     * in one pass (reference: validaciones_consolidadas).
     */

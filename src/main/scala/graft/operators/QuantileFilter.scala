@@ -66,13 +66,4 @@ object QuantileFilter {
           .when(col("frac_better") < lit(headFrac + midFrac), lit("middle"))
           .otherwise(lit("tail")))
   }
-
-  /** Keep only the head bucket — "top headFrac of each group" as a
-    * pure filter over [[buckets]].
-    */
-  def topFraction(df: DataFrame, groupCol: String, score: Column,
-                  headFrac: Double): DataFrame =
-    buckets(df, groupCol, score, headFrac, midFrac = (1.0 - headFrac) / 2)
-      .filter(col("bucket") === "head")
-      .drop("bucket")
 }

@@ -23,11 +23,6 @@ object Sampling {
       .drop("__rank")
   }
 
-  /** Deterministic pseudo-random n-per-key sample. */
-  def randomPerKey(df: DataFrame, keys: Seq[String], idCol: String,
-                   n: Int, salt: Int = 0): DataFrame =
-    perKey(df, keys, Seq(xxhash64(col(idCol), lit(salt)), col(idCol)), n)
-
   /** Seeded global random sample — the scalable `ORDER BY RAND()
     * LIMIT n` (reference gold validations V4 sampling, cf.
     * query_gold_validations.sql:164). Ordering by a seeded hash of a

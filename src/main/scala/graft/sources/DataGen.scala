@@ -100,8 +100,7 @@ object DataGen {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args.take(3)
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // The replicate cross-join inherits the source tier's (often

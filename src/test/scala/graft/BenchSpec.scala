@@ -2,149 +2,76 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guard-the-guard: [[BenchGuard]] is pure logic, so we can feed it the
-  * exact telemetry of past poisoned artifacts and assert they now classify
-  * as contended. No SparkSession needed.
+/** [[Bench]]'s pure parts: the per-gate summary, its two verdicts, the
+  * reference read and the compact stdout line. No SparkSession needed.
   */
 class BenchSpec extends AnyFunSuite {
 
-  // r6's official artifact: loadavg 20.31 on a 32-cpu box, sentinel 0.661 s
-  // — the old fixed 1.0 s bound signed off on it ("contended": false).
-  test("r6 poisoned telemetry classifies as contended") {
-    assert(!BenchGuard.quiet(load1 = 20.31, cores = 32, sentinelSec = 0.661,
-      idleSentinelSec = 0.272))
-    // each signal trips independently
-    assert(!BenchGuard.quiet(20.31, 32, 0.30, 0.272)) // load alone
-    assert(!BenchGuard.quiet(2.0, 32, 0.661, 0.272))  // sentinel alone
+  private def summary(median: Double, q1: Double, q3: Double, steal: Double = 0.0) =
+    Bench.Summary(median, q1, q3, median, steal)
+
+  test("median and quartiles interpolate linearly at odd and even N") {
+    val odd = Bench.summarize(Seq(5.0, 1.0, 4.0, 2.0, 3.0).map(Bench.Sample(_, 0.0)))
+    assert((odd.q1, odd.median, odd.q3) === ((2.0, 3.0, 4.0)))
+    val even = Bench.summarize(Seq(4.0, 1.0, 3.0, 2.0).map(Bench.Sample(_, 0.0)))
+    assert((even.q1, even.median, even.q3) === ((1.75, 2.5, 3.25)))
+    val one = Bench.summarize(Seq(Bench.Sample(7.0, 0.0)))
+    assert((one.q1, one.median, one.q3) === ((7.0, 7.0, 7.0)))
   }
 
-  test("clean-run telemetry stays quiet") {
-    // committed clean run at 1a54514: sentinels 0.272 / 0.342 s, idle box
-    assert(BenchGuard.quiet(1.5, 32, 0.272, 0.272))
-    assert(BenchGuard.quiet(0.02, 32, 0.342, 0.28))
-    // exactly at the gates is still quiet (bounds are inclusive)
-    assert(BenchGuard.quiet(4.8, 32, 0.56, 0.28))
-    assert(!BenchGuard.quiet(4.81, 32, 0.56, 0.28))
-    assert(!BenchGuard.quiet(4.8, 32, 0.561, 0.28))
+  test("runs are steal-corrected; a gate is dirty only above the steal bound") {
+    // a run that lost a fifth of its CPU to other guests counts 4 of 5 s
+    assert(Bench.Sample(5.0, 0.2).corrected === 4.0)
+    val quiet = Bench.summarize(Seq(Bench.Sample(1.0, 0.0), Bench.Sample(3.0, 0.02)))
+    assert(quiet.wallMedian === 2.0 && math.abs(quiet.median - (1.0 + 2.94) / 2) < 1e-12)
+    // the gate's share is the wall-weighted share of its runs
+    assert(math.abs(quiet.steal - 0.06 / 4) < 1e-12)
+    assert(!quiet.dirty)
+    val hot = Bench.summarize(Seq(Bench.Sample(1.0, Bench.StealBound * 3),
+      Bench.Sample(1.0, 0.0)))
+    assert(hot.steal > Bench.StealBound && hot.dirty)
+    assert(!summary(1, 1, 1, steal = Bench.StealBound).dirty) // bound is inclusive
   }
 
-  test("r8 pre-tier telemetry (load 6.3-7.3/32) now classifies as hot") {
-    // the r8 sf0.1 tier started at load 6.3-7.3 against the old
-    // 0.25x-cores gate (8.0) and shipped inverted timings under
-    // clean:true — the 0.15x gate (4.8 on 32 cpus) refuses to start
-    assert(!BenchGuard.quiet(6.3, 32, 0.30, 0.28))
-    assert(!BenchGuard.quiet(7.3, 32, 0.30, 0.28))
+  test("regression bound: 10 % floor, or the reference IQR when wider") {
+    // tight reference (IQR 2 % of the median): the 10 % floor rules
+    val tight = summary(1.0, 0.99, 1.01)
+    assert(!Bench.regressed(summary(1.09, 1.0, 1.2), tight))
+    assert(Bench.regressed(summary(1.11, 1.1, 1.2), tight))
+    // wide reference (IQR 30 % of the median): only its spread counts
+    val wide = summary(1.0, 0.8, 1.1)
+    assert(!Bench.regressed(summary(1.29, 1.2, 1.4), wide))
+    assert(Bench.regressed(summary(1.31, 1.3, 1.4), wide))
+    // faster is never a regression; a zero reference gives no verdict
+    assert(!Bench.regressed(summary(0.5, 0.4, 0.6), tight))
+    assert(!Bench.regressed(summary(9.0, 9.0, 9.0), summary(0.0, 0.0, 0.0)))
   }
 
-  test("unreadable loadavg (-1) falls back to sentinel-only gating") {
-    assert(BenchGuard.quiet(-1.0, 32, 0.30, 0.28))
-    assert(!BenchGuard.quiet(-1.0, 32, 0.70, 0.28))
-  }
-
-  test("post-tier gate ignores self-load but still catches a storm") {
-    // a clean 32-thread tier ends at loadavg 11-13 by its own doing;
-    // the sentinel (0.22-0.39 s, r7 clean run) proves cores are free
-    assert(BenchGuard.quietPost(0.22, 0.28))
-    assert(BenchGuard.quietPost(0.391, 0.28))
-    // r6's external storm: sentinel 0.661 s trips regardless of loadavg
-    assert(!BenchGuard.quietPost(0.661, 0.28))
-  }
-
-  test("crossTierViolations catches the r8 inverted timings") {
-    // r8 artifact: q_passage_dedup 0.72 s at sf0.1 vs 0.17 s at sf10,
-    // q_v4_ml_dataset 1.28 s at sf0.1 vs 0.77 s at sf1 — physically
-    // backwards, yet the tier shipped clean:true
-    val small = Seq("q_passage_dedup" -> 0.72, "q_v4_ml_dataset" -> 1.28)
-    assert(BenchGuard.crossTierViolations(small,
-      Seq("q_passage_dedup" -> 0.17, "q_v4_ml_dataset" -> 0.77))
-      == Seq("q_passage_dedup", "q_v4_ml_dataset"))
-  }
-
-  test("crossTierViolations tolerates floor jitter and missing/failed rows") {
-    // sub-floor times jitter freely (scheduling noise dominates)
-    assert(BenchGuard.crossTierViolations(
-      Seq("a" -> 0.29), Seq("a" -> 0.05)).isEmpty)
-    // within the 1.5x slack is noise, not inversion
-    assert(BenchGuard.crossTierViolations(
-      Seq("a" -> 0.9), Seq("a" -> 0.7)).isEmpty)
-    // queries absent from (or failed, -1.0, in) the big tier can't vote
-    assert(BenchGuard.crossTierViolations(
-      Seq("a" -> 5.0, "b" -> 5.0), Seq("b" -> -1.0)).isEmpty)
-  }
-
-  test("prior tripwire catches the r11 q_token_count blip") {
-    // r11's driver-stamped artifact: q_token_count 2.389 s at sf0.1 vs
-    // 0.235 s in the committed same-day run (and 0.298 s in r10) — an
-    // 8x box-noise blip that shipped inside contended:false because it
-    // fit between two quiet sentinels. The cross-round tripwire flags
-    // it against either prior record.
-    assert(BenchGuard.priorOutlier(2.389, Some(0.235)))
-    assert(BenchGuard.priorOutlier(2.389, Some(0.298)))
-    // the committed same-day measurement itself is NOT an outlier
-    assert(!BenchGuard.priorOutlier(0.298, Some(0.235)))
-    // healthy round-over-round drift (set growth, small regressions)
-    // stays under the 3x factor
-    assert(!BenchGuard.priorOutlier(0.66, Some(0.235)))
-    // newborn operators have no prior record and never trip
-    assert(!BenchGuard.priorOutlier(9.9, None))
-    // sub-floor times jitter freely (r11's sf0.1 tier is full of
-    // 0.1-0.3 s rows whose ratios are scheduling noise)
-    assert(!BenchGuard.priorOutlier(0.29, Some(0.05)))
-    // a failed query (-1) is handled by the failed list, not this
-    assert(!BenchGuard.priorOutlier(-1.0, Some(0.235)))
-  }
-
-  test("prior timings parse committed artifacts per tier, min-merged") {
-    // BENCH_r11.json is the committed driver-stamped artifact whose
-    // sf0.1 block carries the blip itself; parsing it must yield the
-    // per-tier per-query maps the tripwire compares against
-    val r11 = Bench.artifactTierTimings("BENCH_r11.json")
-    if (r11.nonEmpty) { // absent in fresh checkouts; spec is then vacuous
-      assert(r11.contains("sf01") && r11("sf01").contains("q_token_count"))
-      // extras are merged in (they are timed rows too)
-      assert(r11("sf01").contains("q_lsh_ingest_dedup"))
-      val merged = Bench.priorTimings(Seq("BENCH_r11.json", "BENCH_LAST.json"))
-      // min-of-artifacts: the reference can only get tighter
-      assert(merged("sf01")("q_token_count") <=
-        r11("sf01")("q_token_count"))
-    }
-    // unreadable paths parse to empty, never throw
-    assert(Bench.artifactTierTimings("/nonexistent.json").isEmpty)
-  }
-
-  test("tripwire priors include the COMMITTED artifact, surviving a rerun") {
-    // the r12 masking case: run 1 flags a 4.8x outlier, its artifact
-    // overwrites BENCH_LAST.json on disk, and a same-session rerun
-    // must still compare against the committed prior — not the
-    // outlier it just wrote
-    val committed = Bench.committedTierTimings()
-    if (committed.nonEmpty) { // fresh checkouts without git history skip
-      assert(committed.contains("sf01"))
-      val merged = Bench.priorTimings(Seq("BENCH_LAST.json"),
-        extra = Seq(committed))
-      committed("sf01").foreach { case (q, t) =>
-        assert(merged("sf01").get(q).exists(_ <= t),
-          s"$q: merged prior must be <= committed $t")
-      }
-    }
-    // malformed json parses to empty, never throws
-    assert(Bench.tierTimingsFromJson("not json at all").isEmpty)
+  test("an absent or malformed BENCH_REF.json gives no verdicts and does not throw") {
+    assert(Bench.readReference("/nonexistent/BENCH_REF.json").isEmpty)
+    assert(Bench.reference("not json at all").isEmpty)
+    assert(Bench.reference("""{"sf01":{"gates":{"q_a":{"median":"x"}}}}""").isEmpty)
+    assert(Bench.reference("""{"sf01":{"total":1.0}}""").isEmpty)
+    val ref = Bench.reference(
+      """{"sf":"x","sf01":{"gates":{"q_a":{"median":0.5,"q1":0.4,"q3":0.6,"wall_median":0.52,"steal":0.01}}},"sf1":{"gates":{}}}""")
+    assert(ref === Map("sf01" -> Map("q_a" -> Bench.Summary(0.5, 0.4, 0.6, 0.52, 0.01)),
+      "sf1" -> Map.empty))
   }
 
   test("compact stdout line fits the driver's 2000-char tail window") {
-    // r7-r9's full multi-tier line outgrew the driver's tail and the
-    // round artifact shipped `"parsed": null`. The compact line is
-    // rebuilt here from the LIVE headliner list with worst-case-width
-    // values, so growing the headliner set past the window fails CI,
-    // not the round artifact.
+    // The compact line is built here from the LIVE headliner list with
+    // worst-case-width values, so growing the headliner set past the
+    // window fails CI, not the bench artifact.
     val headline = Bench.headliners.map(_ -> 99.999)
-    val tiers = """"sf1":{"total":99999.99,"clean":false},"sf10":{"total":99999.99,"clean":false},"sf30":{"total":99999.99,"clean":false},"xtier_dirty":99"""
+    val tiers = Seq("sf01", "sf1").map(t =>
+      s""""$t":{"total":99999.99,"clean":false,"dirty":999,"regressed":999,"ratio":999.99}""")
+      .mkString(",")
     val line = Bench.compactLine(9999.999, headline,
       failedJson = """["q_a_long_failed_query_name"]""",
-      sfDir = "/root/testdata/sf0.1", contended = true,
-      stale = Seq("sf30"), tiers = tiers)
+      sfDir = "/data/testdata/sf0.1", contended = true, stale = Seq("sf1"), tiers = tiers)
     assert(line.length <= 1900, s"compact bench line ${line.length} chars")
     assert(line.contains("\"metric\":\"total\"") && line.contains("\"queries\":{"))
+    assert(line.contains(s""","tiers":{$tiers}"""), "tier brief dropped")
   }
 
   test("warm-up tier is the sf0.001 directory beside any data root") {

@@ -33,4 +33,9 @@ class EntryPointsSpec extends AnyFunSuite {
     assert(root.isDirectory, s"no source tree at $root")
     assert(mains === Set("Verify", "Bench", "sources.DataGen", "Probe"))
   }
+
+  test("every main runs at SPARK_GRAFT_CPUS, else at this machine's core count") {
+    assert(GraftSession.cores(Map("SPARK_GRAFT_CPUS" -> "3")) === 3)
+    assert(GraftSession.cores(Map.empty) === Runtime.getRuntime.availableProcessors)
+  }
 }

@@ -1,16 +1,12 @@
 #!/usr/bin/env python3
 """Record the oracle-engine baseline for the bench headliners: time each
 headliner's oracle SQL in DuckDB (all cores, same parquet, same box) and
-write BASELINE.md. This is the number BENCH_r{N}.json is graded against
-("within 2x of baseline at the same SF").
+write BASELINE.md, stamped with the box's core count and DuckDB's thread
+count. Bench's `ratio` fields divide its medians by these timings.
 
-Usage: python3 tools/baseline.py <sfDir> <oracle_sql.json> [runs] [out_md] [q1,q2,...]
-
-The optional 5th arg restricts the run to a comma-separated query
-subset (used for the sf10 tier, which only re-measures the queries
-whose sf1 ratios sat near the per-job scheduling floor).
+Usage: python3 tools/baseline.py <sfDir> <oracle_sql.json> [runs] [out_md]
 """
-import hashlib, json, sys, os, time
+import json, sys, os, time
 
 import duckdb
 
@@ -213,22 +209,9 @@ sf_dir = sys.argv[1]
 oracle = json.load(open(sys.argv[2]))
 runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
 out_md = sys.argv[4] if len(sys.argv) > 4 else "BASELINE.md"
-merged = {}
-FULL_LIST = list(HEADLINERS)
-if len(sys.argv) > 5:
-    subset = sys.argv[5].split(",")
-    HEADLINERS = [q for q in HEADLINERS if q in subset]
-    # subset runs MERGE into the existing record (re-measuring only the
-    # named queries) instead of overwriting the whole tier with a
-    # subset-only file — the embedded json block is the merge source
-    if os.path.exists(out_md):
-        import re as _re
-        m = _re.search(r"```json\n(.*?)\n```", open(out_md).read(), _re.S)
-        if m:
-            prev = json.loads(m.group(1))
-            merged = dict(prev.get("queries", {}))
 
 con = duckdb.connect()
+threads = con.execute("SELECT current_setting('threads')").fetchone()[0]
 for t in ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]:
     p = f"{sf_dir}/{t}.parquet"
@@ -263,84 +246,22 @@ extras_sql = dict(EXTRAS_BASELINE_SQL)
 for q, src in EXTRAS_BASELINE_FROM_ORACLE.items():
     if src in oracle:
         extras_sql[q] = oracle[src]
-extras_subset = [q for q in extras_sql
-                 if len(sys.argv) <= 5 or q in sys.argv[5].split(",")]
-
-
-def entry_sql_md5(e):
-    blob = ("\n".join(e.get("setup", [])) + "\n" + e["query"]) \
-        if isinstance(e, dict) else e
-    return hashlib.md5(blob.encode()).hexdigest()[:12]
-
-
-def sf_data_stamp():
-    """Cheap FS-metadata stamp of the tier's parquet (sizes+mtimes):
-    carried-forward extras are dropped when it changes — regenerated
-    data must not keep stale seconds alive (r11 advice item 4)."""
-    parts = []
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.isfile(p):
-            st = os.stat(p)
-            parts.append(f"{t}:{st.st_size}:{int(st.st_mtime)}")
-        elif os.path.isdir(p):
-            for f in sorted(os.listdir(p)):
-                st = os.stat(os.path.join(p, f))
-                parts.append(f"{t}/{f}:{st.st_size}:{int(st.st_mtime)}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-
-
-cur_stamp = sf_data_stamp()
-extras_prev, meta_prev = {}, {}
-if os.path.exists(out_md):
-    import re as _re2
-    m2 = _re2.search(r"```json\n(.*?)\n```", open(out_md).read(), _re2.S)
-    if m2:
-        blk_prev = json.loads(m2.group(1))
-        extras_prev = dict(blk_prev.get("extras", {}))
-        meta_prev = dict(blk_prev.get("extras_meta", {}))
-# carry forward ONLY entries that are still defined, whose SQL is
-# unchanged and whose data stamp matches (r11 advice item 4: the old
-# unconditional carry let stale seconds persist across SQL changes
-# and data regeneration and flow into extras_ratio as if fresh).
-# Entries recorded before extras_meta existed carry no stamp → dropped
-# here once, re-measured on the next full run.
-extras, extras_meta = {}, {}
-for q, v in extras_prev.items():
-    mp = meta_prev.get(q, {})
-    if (q in extras_sql and mp.get("sql_md5") == entry_sql_md5(extras_sql[q])
-            and mp.get("sf_stamp") == cur_stamp):
-        extras[q] = v
-        extras_meta[q] = mp
-for q in extras_subset:
-    e = extras_sql[q]
+extras = {}
+for q, e in extras_sql.items():
     if isinstance(e, dict):
         for stmt in e.get("setup", []):
             con.execute(stmt)
         extras[q] = time_sql(e["query"])
     else:
         extras[q] = time_sql(e)
-    extras_meta[q] = {"sql_md5": entry_sql_md5(e), "sf_stamp": cur_stamp,
-                      "recorded": time.strftime("%Y-%m-%d")}
-
-if merged:
-    # drop carried keys no longer in the headliner list (a query moved
-    # to extras keeps its extras row; its stale headline seconds must
-    # not linger in the comparable record)
-    merged = {q: v for q, v in merged.items() if q in FULL_LIST}
-    merged.update(timings)
-    timings = merged
-    HEADLINERS = [q for q in FULL_LIST if q in timings]
 total = sum(timings.values())
 lines = [
     "# BASELINE — oracle-engine (DuckDB) headliner timings",
     "",
-    f"DuckDB {duckdb.__version__}, all cores, parquet at `{sf_dir}`,",
-    f"min of {runs} runs per query, recorded by `tools/baseline.py`.",
-    "This is the reference number the per-round `BENCH_r{N}.json`",
-    "(Spark local[32], min of 2, same box) is compared against — the",
-    "perf gate is \"within 2x of baseline at the same SF\".",
+    f"DuckDB {duckdb.__version__}, {threads} threads on a {os.cpu_count()}-core box,",
+    f"parquet at `{sf_dir}`, min of {runs} runs per query, recorded by",
+    "`tools/baseline.py`. Bench's `ratio` fields divide its medians by",
+    "these timings.",
     "",
     "| query | seconds |",
     "|---|---|",
@@ -369,10 +290,10 @@ lines += [
     "Spark total as well.",
     "",
     "```json",
-    json.dumps({"sf": sf_dir, "runs": runs, "total_sec": round(total, 3),
+    json.dumps({"sf": sf_dir, "runs": runs, "cpus": os.cpu_count(),
+                "duckdb_threads": threads, "total_sec": round(total, 3),
                 "queries": {k: round(v, 3) for k, v in timings.items()},
                 "extras": {k: round(v, 3) for k, v in extras.items()},
-                "extras_meta": extras_meta,
                 "skipped": skipped}),
     "```",
 ]
