@@ -3,12 +3,15 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.gates.Role
+import graft.sources.Readers
 
 /** Benchmark main: times every benched gate ([[graft.gates.Role]]) on
   * SPARK_GRAFT_SF_DIR (tier `sf01`) and, when present, on DataGen's 10x
   * tier SPARK_GRAFT_SF1_DIR (`sf1`, default testdata/sf1). It writes
   * the full artifact to BENCH_LAST.json and prints one compact JSON
-  * line as the last line of stdout.
+  * line as its last stdout line. Under `sbt runMain` sbt's own
+  * `[success]` line follows it: find the JSON with
+  * `grep '^{"metric"'`, not by taking the last line.
   *
   * Each gate runs once untimed on the sf0.001 tier beside the data dir
   * (JIT and codegen warm-up), then [[Runs]] times through [[timedRun]].
@@ -255,7 +258,7 @@ object Bench {
   private def tierFresh(spark: SparkSession, dir: String, factor: Long,
                         baseDir: String): Boolean = {
     def n(d: String, t: String): Long =
-      try spark.read.parquet(s"$d/$t.parquet").count()
+      try Readers.parquet(spark, s"$d/$t.parquet").count()
       catch { case _: Throwable => -1L }
     Seq("lineitem", "documents", "events").forall { t =>
       val base = n(baseDir, t)
@@ -295,7 +298,7 @@ object Bench {
             try exec(fn(spark, warm)) catch { case _: Throwable => () }
           }
         }
-      case None => spark.read.parquet(s"$sfDir/nation.parquet").count()
+      case None => Readers.parquet(spark, s"$sfDir/nation.parquet").count()
     }
 
     val ref = readReference(RefFile)
@@ -331,10 +334,10 @@ object Bench {
     val out = new java.io.PrintWriter("BENCH_LAST.json")
     try out.println(json) finally out.close()
 
-    // stdout gets the COMPACT line, and it must be the LAST line: the
-    // driver keeps only the final ~2000 chars of stdout and parses the
-    // JSON line it finds there. Per-gate quartiles live in
-    // BENCH_LAST.json.
+    // stdout gets the COMPACT line, and it must be Bench's LAST line: a
+    // reader of the final ~2000 chars of stdout finds the JSON line
+    // there (sbt's `[success]` line may follow it). Per-gate quartiles
+    // live in BENCH_LAST.json.
     val briefs = tiers.map { case (tag, _, base, t) =>
       val ratio = comparable(t, base).collect {
         case (_, sp, b) if b > 0 => f""","ratio":${sp / b}%.2f""" }.getOrElse("")

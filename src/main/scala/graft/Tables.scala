@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Readers
+
 /** Loaders for the driver-generated testdata star schema.
   *
   * Every table is a plain parquet file under `\$sfDir/<name>.parquet`.
@@ -14,7 +16,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    Readers.parquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

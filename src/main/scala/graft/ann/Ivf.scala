@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.functions.VectorFunctions
+import graft.sources.Readers
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -212,7 +213,7 @@ object Ivf {
     */
   def appendToIndex(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = Readers.parquet(spark, s"$path/centroids")
     index(batch, cents)
       .repartition(col("cluster_id"))
       .write.mode("append").partitionBy("cluster_id").parquet(s"$path/cells")
@@ -262,11 +263,11 @@ object Ivf {
   def topKIndexed(path: String, queries: DataFrame, k: Int,
                   nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = Readers.parquet(spark, s"$path/centroids")
     val probed = probe(queryEmb(queries), cents, nprobe).cache()
     val cells: Array[Int] = probed.select("cluster_id").distinct()
       .collect().map(_.getInt(0)).sorted
-    val indexed = spark.read.parquet(s"$path/cells")
+    val indexed = Readers.parquet(spark, s"$path/cells")
       .filter(col("cluster_id").isin(cells.map(x => x: Any): _*))
     scoreAndRank(indexed, probed, k)
   }

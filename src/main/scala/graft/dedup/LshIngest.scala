@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Readers
+
 /** Incremental NEAR-duplicate ingest against a persisted LSH index —
   * the MinHash analog of [[graft.operators.BloomDedup]]'s exact form:
   * a continuous crawl must screen each incoming batch against the
@@ -134,7 +136,7 @@ object LshIngest {
     val (batchBands, batchSigsRaw) = indexRows(incoming, idCol, textCol,
       shingleK, numHashes, numBands)
     val batchSigs = batchSigsRaw.cache()
-    val storedBandsRaw = spark.read.parquet(s"$indexPath/bands")
+    val storedBandsRaw = Readers.parquet(spark, s"$indexPath/bands")
     // one pass, one exchange: the window count applies the bucket
     // bound on the index's CURRENT state (counting only — a
     // degenerate bucket sorts and spills, it never materializes a
@@ -148,7 +150,7 @@ object LshIngest {
     val storedBands = storedBandsRaw
       .withColumn("__n", count(lit(1)).over(w))
       .filter(col("__n") <= maxBucket)
-    val storedSigs = spark.read.parquet(s"$indexPath/sigs")
+    val storedSigs = Readers.parquet(spark, s"$indexPath/sigs")
     val candidates = batchBands
       .join(storedBands
           .select(col("band_id"), col("band_hash"), col("doc_id").as("hist_id")),

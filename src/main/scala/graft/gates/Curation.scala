@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators._
 import graft.functions.{TextFunctions => TF}
+import graft.sources.Readers
 import Fixtures.{withRecrawls, stopwords, pround, stagePath, ensureBloomBatch}
 
 /** Family G, `graft.operators` data curation: exact/bloom/line/URL
@@ -498,7 +499,7 @@ object Curation {
       // incrementalKeepStaged's size gate (single-pass plan); past
       // the cap it flips to the miss/verify branch split.
       val batch = ensureBloomBatch(s, d)
-      BloomDedup.incrementalKeepStaged(s.read.parquet(batch), "text", idx)
+      BloomDedup.incrementalKeepStaged(Readers.parquet(s, batch), "text", idx)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
           sum(length(col("text"))).as("n_chars"))

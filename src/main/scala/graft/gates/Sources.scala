@@ -64,7 +64,7 @@ object Sources {
       val tmp = s"/tmp/graft_part_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
       graft.sources.Writers.parquetByYear(
         Tables.orders(s, d), tmp, "o_orderdate")
-      s.read.parquet(tmp)
+      Readers.parquet(s, tmp)
         .filter(col("year_partition") === 1996)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
@@ -82,7 +82,7 @@ object Sources {
       graft.sources.Writers.parquetByYear(Tables.orders(s, d), tmp, "o_orderdate")
       graft.sources.Writers.dropPartitions(s, tmp, "year_partition",
         keep = _.toInt >= 1996)
-      s.read.parquet(tmp)
+      Readers.parquet(s, tmp)
         .groupBy(col("year_partition").cast("long").as("yr"))
         .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("sum_total"))
     },
@@ -195,7 +195,7 @@ object Sources {
       graft.sources.ZOrder.rangeSortedWrite(
         Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"),
         base, "o_orderkey", numFiles = 8)
-      s.read.parquet(base)
+      Readers.parquet(s, base)
         .groupBy((col("o_orderkey") % 5).cast("long").as("grp"))
         .agg(count(lit(1)).as("n"),
           round(sum("o_totalprice"), 2).as("sum_total"),
@@ -214,7 +214,7 @@ object Sources {
       graft.sources.ZOrder.zorderWrite(
         Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_totalprice"),
         base, "o_custkey", "o_orderkey", numFiles = 8)
-      s.read.parquet(base)
+      Readers.parquet(s, base)
         .groupBy((col("o_custkey") % 7).cast("long").as("grp"))
         .agg(count(lit(1)).as("n"),
           round(sum("o_totalprice"), 2).as("sum_total"),
@@ -233,7 +233,7 @@ object Sources {
         .write.mode("overwrite").parquet(s"$base/small")
       graft.sources.Writers.compactParquet(s, s"$base/small", s"$base/out",
         targetFileBytes = 64L * 1024 * 1024)
-      s.read.parquet(s"$base/out")
+      Readers.parquet(s, s"$base/out")
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("sum_total"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Readers
+
 /** Bloom-prefiltered incremental corpus dedup — the membership-sketch
   * form of the continuous-ingest anti-join ([[graft.streaming.Ingest]]).
   *
@@ -213,7 +215,7 @@ object BloomDedup {
         p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .getContentSummary(p).getLength
       } catch { case _: java.io.IOException => Long.MaxValue }
-    val digests = spark.read.parquet(s"$path/digests")
+    val digests = Readers.parquet(spark, s"$path/digests")
     if (digestBytes <= broadcastDigestCap) {
       incoming
         .withColumn("__dig", when(hit, unhex(md5(col(textCol).cast("binary")))))

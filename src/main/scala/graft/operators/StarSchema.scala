@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: `distinct()` on a projection shuffles only the
   * projected columns (column pruning reaches the scan). The integrity
-  * check aggregates each side to distinct keys BEFORE the anti-join,
-  * so the join operands are key-only. At 100 TB both sides would be
-  * bucketed on the key; with AQE the distinct-key side is usually
-  * small enough to broadcast automatically.
+  * check anti-joins the key-only projections and only then takes the
+  * distinct orphan keys, so its one aggregate runs over the (usually
+  * empty) orphans and the dimension side is never aggregated: an
+  * anti-join's answer does not depend on duplicate right-side keys.
+  * At 100 TB both sides would be bucketed on the key; with AQE the
+  * dimension's key column is usually small enough to broadcast.
   */
 object StarSchema {
 
@@ -45,12 +47,14 @@ object StarSchema {
     "flag_vencido" -> when(expiry < asOf, lit(1L)).otherwise(lit(0L))
   )
 
-  /** Fact keys with no matching dimension key (anti-join on distinct
-    * key sets). Empty result ⇒ integrity holds.
+  /** Distinct fact keys with no matching dimension key (anti-join,
+    * then distinct). A NULL fact key matches nothing, so it is one
+    * orphan. Empty result ⇒ integrity holds.
     */
   def orphans(fact: DataFrame, dim: DataFrame, key: String): DataFrame =
-    fact.select(col(key)).distinct()
-      .join(dim.select(col(key)).distinct(), Seq(key), "left_anti")
+    fact.select(col(key))
+      .join(dim.select(col(key)), Seq(key), "left_anti")
+      .distinct()
 
   def orphanCount(fact: DataFrame, dim: DataFrame, key: String): DataFrame =
     orphans(fact, dim, key).agg(count(lit(1)).as("orphan_count"))

@@ -7,6 +7,7 @@ import graft.functions.{TextFunctions => TF}
 import graft.Spread
 import graft.dedup.MinHashLSH
 import graft.operators.Deduplicator
+import graft.sources.Readers
 
 /** Training-corpus preparation: the LLM-data analogue of the
   * medallion silver chain. One declarative composition:
@@ -88,7 +89,7 @@ object CorpusPrep {
                  minTokens: Int, stagePath: String): DataFrame = {
     scoredFrame(docs, idCol, textCol, stopwords, langMarkers)
       .write.mode("overwrite").parquet(stagePath)
-    val scored = docs.sparkSession.read.parquet(stagePath)
+    val scored = Readers.parquet(docs.sparkSession, stagePath)
     gateAndDedup(scored, minQuality, allowedLangs, minTokens)
   }
 

@@ -74,6 +74,9 @@ object Medallion {
   /** Gold star schema from a silver frame: dimension (distinct
     * projection), fact (vigencia arithmetic), and the referential
     * integrity orphan count — reference src/gold/job-gold-rues.py.
+    * The dimension is a distinct projection of `silver`, so its key
+    * set is silver's: the check anti-joins against silver's key column
+    * and never re-aggregates the dimension.
     */
   def gold(silver: DataFrame, dimCols: Seq[String], factCols: Seq[String],
            vigenciaDate: java.sql.Date): (DataFrame, DataFrame, DataFrame) = {
@@ -82,7 +85,7 @@ object Medallion {
       StarSchema.vigencia(col("fecha_matricula"), lit(vigenciaDate)))
     val orphans = StarSchema.orphanCount(
       fact.select(col(factCols.head).as("k")),
-      dim.select(col(dimCols.head).as("k")), "k")
+      silver.select(col(dimCols.head).as("k")), "k")
     (dim, fact, orphans)
   }
 

@@ -115,7 +115,7 @@ object DataGen {
         .parquet(s"$outDir/$name.parquet")
       println(s"[datagen] $name done")
     }
-    def src(name: String) = spark.read.parquet(s"$srcDir/$name.parquet")
+    def src(name: String) = Readers.parquet(spark, s"$srcDir/$name.parquet")
 
     // fixed-size dims: copy (single file — they're a handful of rows)
     Seq("region", "nation").foreach(t => write(t, src(t), parts = 1))

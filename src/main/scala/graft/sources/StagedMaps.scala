@@ -78,5 +78,5 @@ object StagedMaps {
 
   /** Read a staged order→nation map. */
   def orderNationMap(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/map")
+    Readers.parquet(spark, s"$path/map")
 }

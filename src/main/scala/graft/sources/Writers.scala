@@ -124,7 +124,7 @@ object Writers {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(p).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    spark.read.parquet(inPath)
+    Readers.parquet(spark, inPath)
       .repartition(nFiles)
       .write.mode(SaveMode.Overwrite)
       .option("compression", "snappy")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.sources.Readers
+
 /** Structured Streaming operators over the `events` table shape
   * (event_id, ts, user_id, event_type, value, props).
   *
@@ -200,7 +202,7 @@ object Events {
     */
   def windowedAggFileStream(spark: SparkSession, sfDir: String,
                             windowLen: String = "1 hour"): DataFrame = {
-    val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val rawSchema = Readers.parquet(spark, s"$sfDir/events.parquet").schema
     // file streaming sources take a directory; filter to the one table
     val stream = spark.readStream.schema(rawSchema)
       .option("pathGlobFilter", "events.parquet")
@@ -246,7 +248,7 @@ object Events {
                            watermark: String = "1 hour"): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import spark.implicits._
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = Readers.parquet(spark, s"$sfDir/events.parquet")
     val rawSchema = raw.schema
     val isLongTs =
       rawSchema("ts").dataType == org.apache.spark.sql.types.LongType
@@ -379,7 +381,7 @@ object Events {
   def attributionOuterFileStream(spark: SparkSession, sfDir: String,
                                  withinMinutes: Int = 30): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = Readers.parquet(spark, s"$sfDir/events.parquet")
     val isLongTs =
       raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
     val stage = Files.createTempDirectory("graft_attr_outer")
@@ -444,7 +446,7 @@ object Events {
     */
   def attributionFileStream(spark: SparkSession, sfDir: String,
                             withinMinutes: Int = 30): DataFrame = {
-    val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val rawSchema = Readers.parquet(spark, s"$sfDir/events.parquet").schema
     // stream-stream joins require LTZ event time (EVENT_TIME_IS_NOT_ON
     // _TIMESTAMP_TYPE on NTZ); outputs are cast back to NTZ below to
     // match the batch tables (session TZ is UTC)
@@ -499,7 +501,7 @@ object Events {
         val p = new org.apache.hadoop.fs.Path(tablePath)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val cur =
-          if (fs.exists(p)) spark.read.parquet(tablePath)
+          if (fs.exists(p)) Readers.parquet(spark, tablePath)
           else spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
         val merged = graft.operators.Upsert(
@@ -515,7 +517,7 @@ object Events {
   /** Live view of an [[upsertSink]] table: deleted keys filtered. */
   def upsertSinkView(spark: SparkSession, tablePath: String,
                      tombstoneCol: String): DataFrame =
-    spark.read.parquet(tablePath)
+    Readers.parquet(spark, tablePath)
       .filter(!coalesce(col(tombstoneCol), lit(false)))
 
   /** Streaming MERGE sink as a REAL file-source query (the
@@ -599,7 +601,7 @@ object Events {
         val merged =
           if (fs.exists(p))
             graft.operators.SketchStore.mergeIncremental(
-              spark.read.parquet(tablePath), delta, partCol)
+              Readers.parquet(spark, tablePath), delta, partCol)
           else delta
         merged.localCheckpoint(true)
           .write.mode("overwrite").parquet(tablePath)
@@ -621,7 +623,7 @@ object Events {
     val work = Files.createTempDirectory("graft_sketch_store")
     try {
       stageEventsFeed(sfDir, stage, "00_events")
-      val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
+      val rawSchema = Readers.parquet(spark, s"$sfDir/events.parquet").schema
       val stream = spark.readStream.schema(rawSchema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "*.parquet")
@@ -631,7 +633,7 @@ object Events {
         s"$work/store", s"$work/cp")
       try q.processAllAvailable() finally q.stop()
       val est = graft.operators.SketchStore.estimates(
-        spark.read.parquet(s"$work/store"))
+        Readers.parquet(spark, s"$work/store"))
       val exact = graft.Tables.events(spark, sfDir)
         .groupBy("event_type")
         .agg(count_distinct(col("user_id")).as("exact_distinct"))
@@ -665,7 +667,7 @@ object Events {
     val work = Files.createTempDirectory("graft_eo_sink")
     try {
       stageEventsFeed(sfDir, stage, "00_events")
-      val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
+      val rawSchema = Readers.parquet(spark, s"$sfDir/events.parquet").schema
       def runOnce(): Unit = {
         val q = spark.readStream.schema(rawSchema)
           .option("pathGlobFilter", "*.parquet")
@@ -679,7 +681,7 @@ object Events {
       }
       runOnce()
       runOnce() // the restart
-      spark.read.parquet(s"$work/out")
+      Readers.parquet(spark, s"$work/out")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           (sum(floor(col("value") * lit(100.0) + lit(0.5)).cast("long"))
@@ -718,7 +720,7 @@ object Events {
   def dedupFileStream(spark: SparkSession, sfDir: String,
                       watermark: String = "1 hour"): DataFrame = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val rawSchema = Readers.parquet(spark, s"$sfDir/events.parquet").schema
     val stage = Files.createTempDirectory("graft_dedup_stream")
     try {
       stageEventsFeed(sfDir, stage, "00_events")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.sources.Readers
+
 /** Continuous-ingest deduplication: a STREAM of incoming documents
   * anti-joined against the STATIC historical corpus — the shape a
   * continuous web-crawl pipeline runs forever: every arriving batch
@@ -97,7 +99,7 @@ object Ingest {
     import java.nio.file.Files
     import scala.jdk.CollectionConverters._
     import graft.dedup.LshIngest
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Readers.parquet(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     val stage = Files.createTempDirectory("graft_lsh_stream")
     val work = Files.createTempDirectory("graft_lsh_stream_work")
@@ -136,7 +138,7 @@ object Ingest {
       val q = lshIngestSink(stream, "doc_id", "text", indexPath,
         verdictsPath, s"$work/cp")
       try q.processAllAvailable() finally q.stop()
-      val streamed = spark.read.parquet(verdictsPath)
+      val streamed = Readers.parquet(spark, verdictsPath)
       val designed = when(col("batch_src") === "recrawl", !col("novel"))
         .otherwise(col("novel"))
       incoming.select("doc_id", "batch_src")
@@ -172,7 +174,7 @@ object Ingest {
   def ingestDedupFileStream(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.Files
     import scala.jdk.CollectionConverters._
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Readers.parquet(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "text", "source")
     // corpus-derived id offset (the r7 convention: never a magic
     // constant that a bigger SF could collide with)

@@ -160,6 +160,21 @@ class OperatorsSpec extends SparkSpec {
     assert(orphans == Seq(9))
   }
 
+  test("StarSchema orphans: NULL fact key is one orphan, duplicates collapse, empty dim") {
+    def count(fact: Seq[Option[Int]], dim: Seq[Option[Int]]): Long =
+      StarSchema.orphanCount(fact.toDF("k"), dim.toDF("k"), "k").as[Long].head()
+    // NULL matches nothing, a NULL dim key included: one orphan, as the
+    // q_integrity_orphans oracle counts DISTINCT o_custkey rows with no match
+    assert(count(Seq(Some(1), None, None), Seq(Some(1), None)) == 1L)
+    // duplicate keys on either side: each distinct orphan once
+    assert(count(Seq(Some(1), Some(9), Some(9), Some(8)), Seq(Some(1), Some(1))) == 2L)
+    assert(StarSchema.orphans(Seq(1, 9, 9).toDF("k"), Seq(1, 1, 2).toDF("k"), "k")
+      .as[Int].collect().toSeq == Seq(9))
+    // empty dimension: every distinct fact key, NULL included
+    assert(count(Seq(Some(1), Some(1), Some(2), None), Nil) == 3L)
+    assert(count(Nil, Seq(Some(1))) == 0L)
+  }
+
   test("globalSample: deterministic, seed-sensitive, exactly n rows") {
     val docs = Tables.documents(spark, sf()).select("doc_id", "lang")
     val a = Sampling.globalSample(docs, "doc_id", n = 10).as[(Long, String)].collect().toSeq

@@ -9,12 +9,15 @@ class ProbeSpec extends SparkSpec {
     val r = Probe.measure(spark, sf(), "q_token_count").fold(fail(_), identity)
     val s = r.summary
     assert(s.q1 > 0 && s.q1 <= s.median && s.median <= s.q3 && s.wallMedian > 0, r.line)
+    // the parquet schema is read on the driver: building the plan starts no job
+    assert(r.buildJobs === 0, r.line)
     // the small-regime round-robin spread PlanSpec pins for this gate
     assert(r.exchanges === 1, r.plan)
     assert(!r.bnlj, r.plan)
     assert(r.plan.contains("isFinalPlan=true"), r.plan)
     assert(r.line.startsWith("PROBE q_token_count median="), r.line)
     assert(r.line.endsWith("exchanges=1 bnlj=false"), r.line)
+    assert(r.line.contains(" build_jobs=0 exchanges="), r.line)
   }
 
   test("Probe.measure reports an unknown gate instead of throwing") {
