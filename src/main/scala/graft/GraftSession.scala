@@ -88,15 +88,13 @@ object GraftSession {
       // is modest on any modern cluster; the knob that matters at
       // 100 TB is that conversion uses runtime sizes, not estimates.
       .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
-      // Testdata `events.ts` is parquet TIMESTAMP(NANOS). Older Spark
-      // readers only expose it through this legacy conf as a raw long
-      // (ns since epoch); the current runtime IGNORES the conf and
-      // reads NANOS natively as µs-truncated TIMESTAMP_NTZ (verified
-      // r9 — this silent change is what broke every unconditional
-      // `ts div 1000` stream stager in the r8 gate). The conf stays
-      // for portability to readers that honor it; every consumer
-      // (Tables.events, Events.tsNormalized) guards on the actual
-      // dtype, so either encoding works.
+      // Spark reads a parquet TIMESTAMP(NANOS) column only under this
+      // legacy conf, as a raw long (ns since epoch); Spark 4.1.2
+      // honours it (ReadersSpec pins LongType). The testdata tiers
+      // write `events.ts` as TIMESTAMP(MICROS), which reads as a
+      // timestamp either way. Every consumer (Tables.events,
+      // Events.tsNormalized) guards on the actual dtype, so either
+      // encoding works.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Hybrid-calendar rebase-on-write is deliberately NOT set here:
       // the reference scopes those confs to its silver/gold jobs, so

@@ -25,11 +25,13 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
-  /** `events.ts` is parquet TIMESTAMP(NANOS): read as long ns (see
-    * GraftSession nanosAsLong) and truncate to µs TIMESTAMP_NTZ —
-    * the same truncation DuckDB applies casting TIMESTAMP_NS →
-    * TIMESTAMP, so both engines see identical values. Integer `div`
-    * (not `/`) so the int64 ns value never routes through a double.
+  /** `events.ts` is parquet TIMESTAMP(MICROS) in the testdata tiers
+    * and reads as a timestamp. A TIMESTAMP(NANOS) file reads as long
+    * ns (GraftSession's nanosAsLong) and is truncated here to µs
+    * TIMESTAMP_NTZ — the same truncation DuckDB applies casting
+    * TIMESTAMP_NS → TIMESTAMP, so both engines see identical values.
+    * Integer `div` (not `/`) so the int64 ns value never routes
+    * through a double.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
 object NgramJaccard {
 
   /** (doc_id, shingle-hash) inverted index with per-doc set sizes. The
-    * raw text is repartitioned BEFORE shingling so the per-doc
-    * expression parallelizes even off a single-task scan. Shingling
+    * raw text is repartitioned to `n` (> 0) BEFORE shingling so the
+    * per-doc expression parallelizes even off a single-task scan. Shingling
     * and hashing happen in one native pass (`shingle_hash64`,
     * graft.functions.ShingleHash64): Jaccard only ever compares
     * shingles for equality, and 64-bit hash equality is string
@@ -31,10 +31,10 @@ object NgramJaccard {
     * shrinks from a multi-word string to a long, and the per-doc CPU
     * drops out of the interpreted HOF chain into a tight loop.
     */
-  def invertedIndex(docs: DataFrame, idCol: String, textCol: String, k: Int,
-                    spreadN: Int = 0): DataFrame = {
+  private def invertedIndex(docs: DataFrame, idCol: String, textCol: String, k: Int,
+                            n: Int): DataFrame = {
     val raw = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    Spread.ifNarrow(raw, spreadN)
+    (if (n > 0) raw.repartition(n) else raw)
       .select(col("doc_id"), call_function("shingle_hash64",
         TextFunctions.tokens(col("__text")), lit(k)).as("sh"))
       .withColumn("set_size", size(col("sh")).cast("long"))
@@ -59,16 +59,16 @@ object NgramJaccard {
     * ObjectHashAggregate fallback, into sort-based aggregation.)
     */
   def pairs(docs: DataFrame, idCol: String, textCol: String,
-            k: Int = 3, threshold: Double = 0.3, maxDf: Int = 50,
-            spreadN: Int = 0): DataFrame = {
+            k: Int = 3, threshold: Double = 0.3, maxDf: Int = 50): DataFrame = {
     // co-locate postings by shingle ONCE; everything heavy is below
     // this exchange, everything above it is sorts/joins on longs.
-    // spreadN > 0 (small-input regime only — Spread.scanFanout)
-    // makes the exchange explicit-width: AQE's size-based coalesce
-    // otherwise folds a small tier's postings to ONE partition and
-    // the df window + self-join + pair count all run serial.
-    val idx = invertedIndex(docs, idCol, textCol, k, spreadN)
-    val co = if (spreadN > 0) idx.repartition(spreadN, col("shingle"))
+    // A narrow `docs` (Spread) makes the exchange explicit-width:
+    // AQE's size-based coalesce otherwise folds a small tier's
+    // postings to ONE partition and the df window + self-join + pair
+    // count all run serial.
+    val n = Spread.width(docs)
+    val idx = invertedIndex(docs, idCol, textCol, k, n)
+    val co = if (n > 0) idx.repartition(n, col("shingle"))
              else idx.repartition(col("shingle"))
     // df prefilter: drop shingles shared by >maxDf docs (near-zero
     // Jaccard signal, quadratic pair fanout) and by exactly 1 (no
@@ -95,10 +95,9 @@ object NgramJaccard {
 
   /** Per-document best-match summary (one row per doc). */
   def summary(docs: DataFrame, idCol: String, textCol: String,
-              k: Int = 3, maxDf: Int = 50, spreadN: Int = 0): DataFrame = {
+              k: Int = 3, maxDf: Int = 50): DataFrame = {
     // cached: the sym union below evaluates the pair pipeline twice
-    val p = pairs(docs, idCol, textCol, k, threshold = 0.0, maxDf = maxDf,
-      spreadN = spreadN).cache()
+    val p = pairs(docs, idCol, textCol, k, threshold = 0.0, maxDf = maxDf).cache()
     val sym = p.select(col("id_a").as("doc_id"), col("id_b").as("other_id"), col("jaccard"))
       .union(p.select(col("id_b").as("doc_id"), col("id_a").as("other_id"), col("jaccard")))
     val best = sym.groupBy("doc_id").agg(

@@ -1,6 +1,5 @@
 package graft.dedup
 
-import graft.Spread
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -65,15 +64,9 @@ object SimHash {
     * Oversized buckets are dropped: a degenerate chunk value shared
     * by everything would otherwise emit O(n²) pairs on one task.
     */
-  /** (doc_id, simhash) with the fingerprint computed AFTER a
-    * repartition of the raw text — the 64-bit-vote expression is the
-    * heavy per-doc work and must not run inside a single-task scan.
-    */
-  def fingerprints(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val raw = docs.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-    Spread.ifNarrow(raw)
-      .select(col("doc_id"), simhash("__text").as("simhash"))
-  }
+  /** (doc_id, simhash) per document. */
+  def fingerprints(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"), simhash(textCol).as("simhash"))
 
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3, maxBucket: Int = 256): DataFrame =

@@ -51,14 +51,6 @@ object TextFunctions {
     when(length(text) === 0, lit(0.0)).otherwise(
       regexp_count(text, lit("[A-Za-z]")).cast("double") / length(text))
 
-  /** Fraction of tokens found in `stopwords`. */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val stops = array(stopwords.map(lit): _*)
-    bindOnce(tokens(text), ts =>
-      when(size(ts) === 0, lit(0.0)).otherwise(
-        size(filter(ts, t => array_contains(stops, t))).cast("double") / size(ts)))
-  }
-
   /** Composite quality score in [0,1]: favors mid-length docs with
     * alphabetic content and a natural stopword rate. Deterministic,
     * engine-portable arithmetic (the exact formula matters less than

@@ -219,12 +219,12 @@ object Curation {
       // subset. md5 bucketing + integerized log-ratios make every
       // weight engine-portable → full DuckDB oracle. One bucket-keyed
       // token exchange; the B-row model broadcasts (PlanSpec).
-      // size-gated spread (r13): both DSIR passes (the pass-1 model
-      // job and the scan-pure scoring projection) otherwise run off a
-      // single-split tier scan; at-scale shape pinned by the regime
-      // test
+      // scan spread (graft.Spread): both DSIR passes (the pass-1
+      // model job and the scan-pure scoring projection) otherwise run
+      // off a single-split tier scan; at-scale shape pinned by the
+      // regime test
       graft.operators.Dsir.weights(
-        Spread.ifSmall(s, d, "documents")(Tables.documents(s, d)), "doc_id",
+        Spread.ifNarrow(Tables.documents(s, d)), "doc_id",
         "text", col("lang") === "en"),
       oracle = Some("""WITH t AS (
            SELECT doc_id, lang = 'en' AS is_t,
@@ -266,8 +266,8 @@ object Curation {
       // before plan construction, as Ivf collects its cell list);
       // the one exchange is the small-regime scan spread (a
       // round-robin exchange of the tiny tier file so the fused
-      // pass fills the cores); PlanSpec's at-scale test pins 0 with
-      // the spread gate off
+      // pass fills the cores); PlanSpec's at-scale test pins 0 when
+      // the scan is wide
       ceiling = Some(Ceiling(1, 1, bnljOk = false))),
 
     Gate("q_dsir_sample", (s, d) =>
@@ -414,7 +414,7 @@ object Curation {
       graft.operators.Novelty.report(
         docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L),
         docs.filter(pmod(col("doc_id"), lit(5L)) === 0L),
-        "doc_id", "text", k = 3, spreadN = Spread.scanFanout(s, d, "documents"))
+        "doc_id", "text", k = 3)
     },
       oracle = Some("""WITH t AS (
            SELECT doc_id,
@@ -663,11 +663,11 @@ object Curation {
         (20000004L, ("the tag # of # and # that # have # with #\n" * 6)),
         (20000005L, ("the quick brown fox jumps over that lazy dog to be of and have with great zeal " * 5)))
         .toDF("doc_id", "text")
-      // size-gated spread of the corpus side only (r13): the fused
+      // scan spread of the corpus side only (graft.Spread): the fused
       // rules pass otherwise runs as ONE task off a single-split tier
       // file; at-scale zero-shuffle shape pinned by the regime test
       GopherRules.signals(
-        Spread.ifSmall(s, d, "documents")(
+        Spread.ifNarrow(
           Tables.documents(s, d).select("doc_id", "text")).unionByName(planted))
     },
       oracle = Some("""WITH corpus AS (
@@ -726,7 +726,7 @@ object Curation {
       // a pure scan pass; the one exchange is the small-regime scan
       // spread (a round-robin exchange of the tiny tier file so the
       // fused pass fills the cores); PlanSpec's at-scale test pins
-      // 0 with the spread gate off
+      // 0 when the scan is wide
       ceiling = Some(Ceiling(1, 2, bnljOk = false))),
 
     Gate("q_ccnet_buckets", (s, d) =>

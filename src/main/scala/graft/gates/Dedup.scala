@@ -322,8 +322,7 @@ object Dedup {
            TRUE AS all_zero_hamming""")),
 
     Gate("q_ngram_jaccard", (s, d) =>
-      NgramJaccard.summary(Tables.documents(s, d), "doc_id", "text", k = 3, maxDf = 100,
-        spreadN = Spread.scanFanout(s, d, "documents")),
+      NgramJaccard.summary(Tables.documents(s, d), "doc_id", "text", k = 3, maxDf = 100),
       // exact mirror of NgramJaccard.summary(k=3, maxDf=100): shingling
       // (distinct word 3-grams; short docs → whole text), df-capped
       // inverted index (HAVING df BETWEEN 2 AND maxDf == the bounded
@@ -387,8 +386,7 @@ object Dedup {
       graft.dedup.Components.clusters(
         Tables.documents(s, d), "doc_id",
         NgramJaccard.pairs(Tables.documents(s, d), "doc_id", "text",
-          k = 3, threshold = 0.5, maxDf = 20,
-          spreadN = Spread.scanFanout(s, d, "documents")),
+          k = 3, threshold = 0.5, maxDf = 20),
         "id_a", "id_b"),
       oracle = Some("""WITH RECURSIVE toks AS (
            SELECT doc_id,

@@ -360,8 +360,7 @@ object Silver {
       // broadcast df table, two exchanges total)
       Cooccur.pmi(Tables.documents(s, d).select("doc_id", "text"),
         "doc_id", TF.tokens(col("text")),
-        minDf = 5, minPairCount = 5, topK = 40,
-        spreadPairGrid = Spread.scanFanout(s, d, "documents")),
+        minDf = 5, minPairCount = 5, topK = 40),
       oracle = Some("""WITH tok0 AS (
            SELECT DISTINCT doc_id, t AS token FROM (
              SELECT doc_id, unnest(CASE WHEN length(trim(lower(text))) = 0
@@ -398,7 +397,7 @@ object Silver {
       // the pair-keyed count, the vocab-bounded scoring joins'
       // duplicated df branches (pre-AQE; ReusedExchange collapses
       // them at runtime), and the small-regime respread of the
-      // doc-token frame before the pair grid (spreadPairGrid keeps
+      // doc-token frame before the pair grid (Cooccur.pmi: it keeps
       // AQE's size-based coalesce from serializing the O(k²) grid
       // stage; absent at scale)
       ceiling = Some(Ceiling(7, 5, bnljOk = true))),
@@ -409,10 +408,10 @@ object Silver {
       // which-dumps-duplicate-each-other audit (operators.SourceOverlap:
       // one shingle-keyed exchange with set-valued partial agg, pair
       // grid as a |sources|²-bounded HOF, totals broadcast). The scan
-      // fans out only when the tier file is single-split (scanFanout):
-      // the native shingle pass is the dominant CPU and must not run
-      // as one task on a tiny single-row-group file
-      SourceOverlap.matrix(Spread.ifSmall(s, d, "documents")(
+      // fans out only when it is narrow (graft.Spread): the native
+      // shingle pass is the dominant CPU and must not run as one task
+      // on a tiny single-row-group file
+      SourceOverlap.matrix(Spread.ifNarrow(
         Tables.documents(s, d)), "source", col("text"), k = 3),
       oracle = Some("""WITH toks AS (
            SELECT source,
@@ -470,7 +469,7 @@ object Silver {
       // SourceOverlap.sketchMatrix for pipelines that DON'T carry the
       // exact side. Report is |sources|²-bounded → materialized
       // eagerly, cache released (the SourceOverlap.matrix contract).
-      val docs = Spread.ifSmall(s, d, "documents")(Tables.documents(s, d))
+      val docs = Spread.ifNarrow(Tables.documents(s, d))
       val bySh = SourceOverlap.shingleSets(docs, "source", col("text"), k = 3)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val exact = SourceOverlap.matrixFromSets(bySh)
@@ -519,7 +518,7 @@ object Silver {
       // matrix SQL (EXTRAS_BASELINE_FROM_ORACLE in tools/baseline.py).
       graft.operators.SourceOverlap.materialized(
         SourceOverlap.sketchMatrix(
-          Spread.ifSmall(s, d, "documents")(Tables.documents(s, d)), "source",
+          Spread.ifNarrow(Tables.documents(s, d)), "source",
           col("text"), k = 3)),
       // rows-only (sketch estimates are not SQL); the
       // comparable-work baseline (DuckDB answering the same
@@ -721,8 +720,7 @@ object Silver {
       // → RN-008 enrich → RN-009/004/006 derivations
       val raw = graft.pipeline.Medallion.rawFromOrders(s, d)
       val catalog = Tables.customer(s, d).select(col("c_custkey"), col("c_name"))
-      graft.pipeline.Medallion.silver(raw, catalog, "c_custkey", "c_name", 2026,
-        dedupSpreadN = Spread.scanFanout(s, d, "orders"))
+      graft.pipeline.Medallion.silver(raw, catalog, "c_custkey", "c_name", 2026)
         .select(col("matricula"), col("estado"),
           date_format(col("fecha_matricula"), "yyyy-MM-dd").as("fecha_matricula"),
           col("clase_identificacion"), col("id_titular"), col("titular_name"),

@@ -127,8 +127,7 @@ object Streaming {
         Tables.events(s, d), "user_id", "ts", "event_id",
         turn = concat(col("event_type"), lit(":"),
           floor(col("value") * lit(100.0) + lit(0.5)).cast("long").cast("string")),
-        gapMinutes = 30, sep = "\n",
-        spreadN = Spread.scanFanout(s, d, "events")),
+        gapMinutes = 30, sep = "\n"),
       // q_sessionize's session identity + ordered string_agg turn
       // concat; cent-long turn values keep the text engine-portable
       oracle = Some("""WITH e AS (

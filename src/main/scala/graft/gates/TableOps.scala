@@ -496,7 +496,7 @@ object TableOps {
             "timestamp'2024-02-01 00:00:00')").as("ts"))
       val all = ev.select("event_id", "user_id", "ts").unionByName(bot)
       graft.operators.Burstiness.report(all, "user_id", "ts", "event_id",
-        minGaps = 5, cvBelow = 0.3, spreadN = Spread.scanFanout(s, d, "events"))
+        minGaps = 5, cvBelow = 0.3)
     },
       oracle = Some("""WITH base AS (
            SELECT event_id, user_id, ts FROM events
@@ -925,8 +925,7 @@ object TableOps {
       // engine-internal)
       Resample.rolling(
         Tables.events(s, d).select("event_id", "user_id", "ts", "value"),
-        Seq("user_id"), "ts", "value", windowSec = 3600,
-        spreadN = Spread.scanFanout(s, d, "events"))
+        Seq("user_id"), "ts", "value", windowSec = 3600)
         .select(col("event_id"), col("user_id"), col("n_window"), col("sum_window")),
       oracle = Some("""WITH e AS (
            SELECT event_id, user_id,

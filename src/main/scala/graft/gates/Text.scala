@@ -34,8 +34,8 @@ object Text {
          LIMIT 100""")),
 
     Gate("q_token_count", (s, d) =>
-      // size-gated spread (r13, the q_quality_score pattern)
-      Spread.ifSmall(s, d, "documents")(Tables.documents(s, d))
+      // no scan spread: it did not win its on/off A/B (CHANGES.md)
+      Tables.documents(s, d)
         .select(col("doc_id"),
           TF.tokenCount(col("text")).as("ws_tokens"),
           TF.bpeTokenCount(col("text")).as("bpe_tokens")),
@@ -47,13 +47,13 @@ object Text {
              AS bpe_tokens
          FROM documents"""),
       bench = Role.Headline,
-      ceiling = Some(Ceiling(1, 1, bnljOk = false))),
+      ceiling = Some(Ceiling(0, 1, bnljOk = false))),
 
     Gate("q_quality_score", (s, d) =>
-      // scan-pure rules pass; the size-gated spread (r13) fans the
+      // scan-pure rules pass; the scan spread (graft.Spread) fans the
       // single-split tier scan out — the 100 TB zero-shuffle contract
       // is pinned by PlanSpec's at-scale regime test
-      Spread.ifSmall(s, d, "documents")(Tables.documents(s, d)).select(col("doc_id"),
+      Spread.ifNarrow(Tables.documents(s, d)).select(col("doc_id"),
         TF.qualityScore(col("text"), stopwords).as("quality"),
         pround(TF.meanTokenLen(col("text")), 2).as("mean_token_len"),
         pround(TF.alphaRatio(col("text")), 4).as("alpha_ratio")),
@@ -82,8 +82,8 @@ object Text {
       bench = Role.Headline,
       // scan-pure: the one exchange is the small-regime scan spread
       // (a round-robin exchange of the tiny tier file so the fused
-      // pass fills the cores); PlanSpec's at-scale test pins 0 with
-      // the spread gate off
+      // pass fills the cores); PlanSpec's at-scale test pins 0 when
+      // the scan is wide
       ceiling = Some(Ceiling(1, 1, bnljOk = false))),
 
     Gate("q_mix_report", (s, d) => {

@@ -145,9 +145,9 @@ object Tokenizers {
       // (r9 verdict item 7): portable md5 bucket + pinned integer
       // milli-weights make every margin an exact integer DuckDB
       // reproduces bit-for-bit — see QualityClassifier.marginCheck
-      // size-gated spread (r13, the q_quality_score pattern)
+      // scan spread (graft.Spread, the q_quality_score pattern)
       graft.operators.QualityClassifier.marginCheck(
-        Spread.ifSmall(s, d, "documents")(Tables.documents(s, d)),
+        Spread.ifNarrow(Tables.documents(s, d)),
         "doc_id", "text"),
       // exact-integer replay of the scoring machinery: portable md5
       // bucket (the CorpusShuffle hex recipe), pinned milli-weights
@@ -171,7 +171,7 @@ object Tokenizers {
       // a pure scan pass; the one exchange is the small-regime scan
       // spread (a round-robin exchange of the tiny tier file so the
       // fused pass fills the cores); PlanSpec's at-scale test pins
-      // 0 with the spread gate off
+      // 0 when the scan is wide
       ceiling = Some(Ceiling(1, 1, bnljOk = false))),
 
     Gate("q_classifier_train_check", (s, d) => {
@@ -414,10 +414,9 @@ object Tokenizers {
           col("doc_id").as("rel_id"))
         .filter(size(col("terms")) > 0)
       // the corpus pass (native vocab_term_counts postings build) is
-      // the dominant CPU: fan it out when the tier file is
-      // single-split (scanFanout — no-op at scale)
+      // the dominant CPU: fan a narrow scan out (graft.Spread)
       graft.operators.Bm25.retrievalEval(
-        Spread.ifSmall(s, d, "documents")(docs), "doc_id", "text", queries, k = 10)
+        Spread.ifNarrow(docs), "doc_id", "text", queries, k = 10)
     },
       // the eval metric replayed exactly: same tokenize, same Okapi/
       // Lucene idf constants as q_bm25_search, per-term micro
@@ -634,8 +633,7 @@ object Tokenizers {
       // n_hit3/2/1 tallies make each level's firing oracle-visible
       val docs = Tables.documents(s, d)
       graft.operators.BackoffLm.scores(
-        docs, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-        spreadTypes = Spread.scanFanout(s, d, "documents"))
+        docs, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text")
     },
       oracle = Some("""WITH t AS (
            SELECT doc_id,
@@ -710,17 +708,14 @@ object Tokenizers {
       // ReusedExchange) plus type-keyed joins. The doc side folds
       // the type table off the (h3, doc) aggregate (one
       // type-bounded exchange instead of a second corpus trigram
-      // scan), and the small-regime spreadTypes respread guards the
-      // five-join chain's parallelism (absent at scale). The BNLJ
-      // is the 1-row (N, V) broadcast
-      ceiling = Some(Ceiling(13, 9, bnljOk = true))),
+      // scan). The BNLJ is the 1-row (N, V) broadcast
+      ceiling = Some(Ceiling(12, 9, bnljOk = true))),
 
     Gate("q_tfidf", (s, d) =>
       // top-3 TF-IDF terms per doc: tf and df from ONE tokenize pass,
       // vocabulary join keyed by term (not broadcast — vocab is big at
       // corpus scale), WindowGroupLimit top-k on the 4dp-rounded score
-      graft.operators.TfIdf.topTerms(Tables.documents(s, d), "doc_id", "text", k = 3,
-        spreadN = Spread.scanFanout(s, d, "documents")),
+      graft.operators.TfIdf.topTerms(Tables.documents(s, d), "doc_id", "text", k = 3),
       oracle = Some("""WITH t AS (
            SELECT doc_id,
              CASE WHEN length(trim(lower(text))) = 0 THEN CAST([] AS VARCHAR[])

@@ -75,7 +75,7 @@ object BackoffLm {
     * than three tokens carry (0, 0, 0, 0, 0.0).
     */
   def scores(docs: DataFrame, model: DataFrame, idCol: String,
-      textCol: String, spreadTypes: Int = 0): DataFrame = {
+      textCol: String): DataFrame = {
     // ---- model count tables, hash-keyed (one partial-agged groupBy
     // and one corpus scan per n-gram order) ---------------------------
     val uni = model
@@ -103,9 +103,7 @@ object BackoffLm {
     // table folds off THAT — (type × doc)-bounded rows — instead of a
     // second full tokenize+trigram-HOF scan of the corpus. The tfd
     // exchange widens by four longs per row; at any scale that is
-    // cheaper than re-reading and re-hashing the whole corpus
-    // (measured sf0.1: 1.16 s → 1.04 s with spreadTypes; output
-    // bit-identical).
+    // cheaper than re-reading and re-hashing the whole corpus.
     val docTri = docs
       .select(col(idCol), explode(trigramHashArr(col(textCol))).as("t"))
     val tfd0 = docTri.groupBy(col("t.h3").as("h3"), col(idCol))
@@ -113,17 +111,10 @@ object BackoffLm {
         first(col("t.h12")).as("h12"), first(col("t.h23")).as("h23"),
         first(col("t.hw2")).as("hw2"), first(col("t.hw3")).as("hw3"))
     val tfd = tfd0.select(col("h3"), col(idCol), col("tf"))
-    val types0 = tfd0
+    val types = tfd0
       .groupBy(col("h3"))
       .agg(first(col("h12")).as("h12"), first(col("h23")).as("h23"),
         first(col("hw2")).as("hw2"), first(col("hw3")).as("hw3"))
-    // spreadTypes > 0 re-spreads the type table before the five-join
-    // chain: post-shuffle AQE coalescing folds the (small-tier) type
-    // frame to one partition and the joins run serial — gates pass a
-    // width only in the small-corpus regime (Spread.scanFanout);
-    // at scale the frame is huge, AQE keeps parallelism, no extra
-    // exchange runs.
-    val types = if (spreadTypes > 0) types0.repartition(spreadTypes) else types0
 
     // ---- one score per trigram TYPE (all model joins happen here,
     // every key 8 bytes) ----------------------------------------------

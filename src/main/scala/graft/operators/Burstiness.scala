@@ -40,13 +40,13 @@ object Burstiness {
     * not, so the sort must be deterministic.
     */
   def report(df: DataFrame, keyCol: String, tsCol: String, idCol: String,
-      minGaps: Int = 8, cvBelow: Double = 0.3, spreadN: Int = 0): DataFrame = {
+      minGaps: Int = 8, cvBelow: Double = 0.3): DataFrame = {
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(tsCol), col(idCol))
-    // spreadN > 0: explicit-width key exchange so AQE's size-based
-    // coalesce can't serialize the window+agg on a small tier
-    // (Spread.scanFanout gates it to the small regime; 0 = as-is)
-    val dfS = if (spreadN > 0) df.repartition(spreadN, col(keyCol)) else df
+    // a narrow input (graft.Spread): explicit-width key exchange so
+    // AQE's size-based coalesce can't serialize the window+agg
+    val n = graft.Spread.width(df)
+    val dfS = if (n > 0) df.repartition(n, col(keyCol)) else df
     // whole seconds since the NTZ epoch: timezone-free, DST-immune
     // (timestampdiff truncates toward zero; all event data is
     // post-epoch, so this equals the floor of fractional seconds)

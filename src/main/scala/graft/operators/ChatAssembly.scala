@@ -29,19 +29,16 @@ object ChatAssembly {
     */
   def transcripts(events: DataFrame, userCol: String, tsCol: String,
                   orderTieBreak: String, turn: Column,
-                  gapMinutes: Int = 30, sep: String = "\n",
-                  spreadN: Int = 0): DataFrame = {
+                  gapMinutes: Int = 30, sep: String = "\n"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy(userCol).orderBy(col(tsCol), col(orderTieBreak))
     val gapSec = gapMinutes * 60L
-    // spreadN > 0 makes the user-keyed exchange explicit-width (the
-    // window and the session agg both reuse it): AQE's size-based
-    // coalesce folds a small tier's exchange to one partition and the
-    // whole lag+sum+collect chain runs serial (measured sf0.1:
-    // 0.50 s → 0.36 s). Gates pass a width only in the small-corpus
-    // regime (Spread.scanFanout); 0 keeps the plan untouched.
-    val spread = if (spreadN > 0) events.repartition(spreadN, col(userCol))
-                 else events
+    // a narrow input (graft.Spread) makes the user-keyed exchange
+    // explicit-width (the window and the session agg both reuse it):
+    // AQE's size-based coalesce folds a small tier's exchange to one
+    // partition and the whole lag+sum+collect chain runs serial
+    val n = graft.Spread.width(events)
+    val spread = if (n > 0) events.repartition(n, col(userCol)) else events
     val sessions = spread
       .withColumn("__turn", turn)
       .withColumn("__prev", lag(col(tsCol), 1).over(byUser))

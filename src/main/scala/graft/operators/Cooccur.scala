@@ -46,18 +46,16 @@ object Cooccur {
     *    end via the broadcast df table, which the query joins anyway;
     *    a collision would need two kept tokens in one 2⁶⁴ cell —
     *    the BackoffLm/NgramJaccard bound applies);
-    *  - `spreadPairGrid` > 0 re-spreads the doc-token frame BEFORE
-    *    the grid explode: the frame is KBs after aggregation, so
-    *    AQE's size-based coalesce folds it to ONE partition and the
-    *    whole O(k²) grid+count stage runs serial (measured: the grid
-    *    stage was 1.5 s of the 1.69 s total, 31 cores idle). Gates
-    *    pass a width only in the small-corpus regime
-    *    (Spread.scanFanout); at scale the aggregated frame is
-    *    TBs, AQE keeps full parallelism, and no extra exchange runs.
+    *  - a narrow `docs` ([[graft.Spread]]) re-spreads the doc-token
+    *    frame BEFORE the grid explode: the frame is KBs after
+    *    aggregation, so AQE's size-based coalesce folds it to ONE
+    *    partition and the whole O(k²) grid+count stage runs serial.
+    *    At scale the aggregated frame is TBs, AQE keeps full
+    *    parallelism, and no extra exchange runs.
     */
   def pmi(docs: DataFrame, idCol: String, tokensCol: Column,
-          minDf: Int = 2, minPairCount: Int = 2, topK: Int = 50,
-          spreadPairGrid: Int = 0): DataFrame = {
+          minDf: Int = 2, minPairCount: Int = 2, topK: Int = 50): DataFrame = {
+    val n = graft.Spread.width(docs)
     val pres = presence(docs, idCol, tokensCol)
       .select(col(idCol), col("token"), xxhash64(col("token")).as("h"))
     // df per token; minDf prunes the rare tail before any pair work.
@@ -76,8 +74,7 @@ object Cooccur {
     val docToks0 = pres.join(broadcast(dfTab.select("h")), "h")
       .groupBy(col(idCol))
       .agg(sort_array(collect_set(col("h"))).as("toks"))
-    val docToks =
-      if (spreadPairGrid > 0) docToks0.repartition(spreadPairGrid) else docToks0
+    val docToks = if (n > 0) docToks0.repartition(n) else docToks0
 
     // narrow pair grid: for token i, pair with every later token —
     // flatten(transform_i(transform_j>i)) stays inside codegen and is

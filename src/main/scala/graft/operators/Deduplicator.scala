@@ -28,16 +28,15 @@ object Deduplicator {
     * makes the winner deterministic when order values collide.
     */
   def latestWins(df: DataFrame, keys: Seq[String], orderCol: String,
-                 tieBreak: Option[String] = None,
-                 spreadN: Int = 0): DataFrame = {
+                 tieBreak: Option[String] = None): DataFrame = {
     val ordering: Seq[Column] =
       col(orderCol).desc_nulls_last +: tieBreak.map(col(_).desc).toSeq
     val w = Window.partitionBy(keys.map(col): _*).orderBy(ordering: _*)
-    // spreadN > 0: explicit-width key exchange (the window reuses its
-    // clustering) so AQE's size-based coalesce can't serialize the
-    // sort+rank on a small tier; gates pass a width only in the
-    // small-input regime (Spread.scanFanout), 0 = plan unchanged
-    val dfS = if (spreadN > 0) df.repartition(spreadN, keys.map(col): _*) else df
+    // a narrow input (graft.Spread): explicit-width key exchange (the
+    // window reuses its clustering) so AQE's size-based coalesce can't
+    // serialize the sort+rank on a small tier
+    val n = graft.Spread.width(df)
+    val dfS = if (n > 0) df.repartition(n, keys.map(col): _*) else df
     dfS.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")

@@ -20,44 +20,15 @@ object Normalizer {
     df.select(out.toIndexedSeq: _*)
   }
 
-  /** Winsorization (quantile clipping) of a numeric column: values
-    * below the pLo / above the pHi percentile clamp to the bound —
-    * the standard outlier treatment before ML feature extraction.
-    *
-    * One stats aggregation (a 1-row broadcast) + a narrow clamp pass.
-    * `exact = true` uses the exact interpolated `percentile` (its
-    * state grows with distinct values — fine to sf0.1, and it is what
-    * a DuckDB `quantile_cont` oracle can reproduce); production at
-    * 100 TB flips to `approx_percentile`, whose t-digest state is
-    * fixed-size and mergeable (same call shape). Bounds are rounded
-    * to `dp` decimals BEFORE clamping so clipped rows carry an
-    * engine-portable value.
-    */
-  def winsorize(df: DataFrame, valueCol: String, pLo: Double, pHi: Double,
-                exact: Boolean = true, dp: Int = 2): DataFrame = {
-    val fn = if (exact) "percentile" else "approx_percentile"
-    val f = math.pow(10, dp)
-    val bounds = df
-      .agg(expr(s"$fn(`$valueCol`, array($pLo, $pHi))").as("b"))
-      .select(
-        (floor(element_at(col("b"), 1) * lit(f) + lit(0.5)) / lit(f)).as("__lo"),
-        (floor(element_at(col("b"), 2) * lit(f) + lit(0.5)) / lit(f)).as("__hi"))
-    df.crossJoin(broadcast(bounds))
-      .withColumn(s"${valueCol}_w",
-        least(greatest(col(valueCol), col("__lo")), col("__hi")))
-      .withColumn("__clipped",
-        when(col(valueCol) < col("__lo"), lit(-1L))
-          .when(col(valueCol) > col("__hi"), lit(1L)).otherwise(lit(0L)))
-      .drop("__lo", "__hi")
-  }
-
-  /** Rank-exact winsorization over cent-scaled longs. The bound at
-    * percentile p is the actual data value at 0-indexed rank
-    * floor(p*(n-1)) — no interpolation, so any two engines sorting the
-    * same integers pick bit-identical bounds (the interpolated form
-    * above differs cross-engine in the final ulp of `percentile` vs
-    * `quantile_cont` and can flake a value-hash gate at a .005
-    * boundary; q_group_percentiles applies the same rank rule).
+  /** Winsorization (quantile clipping) of a numeric column, rank-exact
+    * over cent-scaled longs: values below the pLo / above the pHi
+    * percentile clamp to the bound. The bound at percentile p is the
+    * actual data value at 0-indexed rank floor(p*(n-1)) — no
+    * interpolation, so any two engines sorting the same integers pick
+    * bit-identical bounds (an interpolated `percentile` differs from
+    * DuckDB's `quantile_cont` in the final ulp and can flake a
+    * value-hash gate at a .005 boundary; q_group_percentiles applies
+    * the same rank rule).
     *
     * Scale shape: ranks are located on the VALUE HISTOGRAM (groupBy
     * cent-value, running count over distinct values) — the

@@ -39,7 +39,7 @@ object Novelty {
     * their whole text as one shingle.
     */
   def report(candidates: DataFrame, reference: DataFrame, idCol: String,
-             textCol: String, k: Int, spreadN: Int = 0): DataFrame = {
+             textCol: String, k: Int): DataFrame = {
     // ONE tokenize pass: n_grams rides through the explode, so no
     // separate totals branch re-shingles the corpus, and the
     // membership probe is a LEFT join against a hit marker rather
@@ -62,10 +62,9 @@ object Novelty {
     // reports the documented zero-gram 0.0 via the coalesce, and
     // explode_outer keeps zero-gram docs (their null hash never
     // matches and is excluded from the novel count).
-    // spreadN > 0 (small-input regime only — Spread.scanFanout)
-    // fans the candidate scan out so the shingle pass parallelizes
-    // off a single-split tier file; identity at scale.
-    val cand = if (spreadN > 0) candidates.repartition(spreadN) else candidates
+    // a narrow candidate scan is fanned out (graft.Spread) so the
+    // shingle pass parallelizes off a single-split tier file
+    val cand = graft.Spread.ifNarrow(candidates)
     val pairs = cand
       .select(col(idCol),
         call_function("shingle_hash64", TF.tokens(col(textCol)), lit(k)).as("__shs"))

@@ -52,17 +52,12 @@ object Resample {
     * doubles here would be a cross-engine coin flip.
     */
   def rolling(df: DataFrame, keyCols: Seq[String], tsCol: String,
-              valueCol: String, windowSec: Long, scale: Int = 100,
-              spreadN: Int = 0): DataFrame = {
+              valueCol: String, windowSec: Long, scale: Int = 100): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*)
       .orderBy(unix_timestamp(col(tsCol)))
       .rangeBetween(-windowSec, 0)
-    // spreadN > 0: explicit-width key exchange so AQE's size-based
-    // coalesce can't serialize the range-frame scan on a small tier
-    // (Spread.scanFanout gates it; 0 = plan unchanged)
-    val dfS = if (spreadN > 0) df.repartition(spreadN, keyCols.map(col): _*) else df
-    dfS.withColumn("__v", floor(col(valueCol) * lit(scale.toDouble) + lit(0.5)).cast("long"))
+    df.withColumn("__v", floor(col(valueCol) * lit(scale.toDouble) + lit(0.5)).cast("long"))
       .withColumn("n_window", count(lit(1)).over(w))
       .withColumn("sum_window", sum(col("__v")).over(w).cast("double") / lit(scale.toDouble))
       .drop("__v")

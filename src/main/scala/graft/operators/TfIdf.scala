@@ -39,21 +39,20 @@ object TfIdf {
 
   /** (doc, term, tf) with smooth-idf TF-IDF score: tf * (ln((1+N)/(1+df)) + 1).
     *
-    * `spreadN` > 0 makes the term repartition explicit-width: AQE's
-    * size-based coalesce otherwise folds a small tier's term exchange
-    * to ONE partition, serializing every downstream stage (tf, df,
-    * join, top-k window all hang off this partitioning — measured
-    * sf0.1: 0.67 s → 0.49 s). Explicit-N repartitions are exempt from
-    * AQE coalescing by design. Gates pass a width only in the
-    * small-corpus regime (Spread.scanFanout); at scale the
-    * keyed repartition stays AQE-managed, exactly as before.
+    * A narrow `docs` ([[graft.Spread]]) makes the term repartition
+    * explicit-width: AQE's size-based coalesce otherwise folds a small
+    * tier's term exchange to ONE partition, serializing every
+    * downstream stage (tf, df, join, top-k window all hang off this
+    * partitioning). Explicit-N repartitions are exempt from AQE
+    * coalescing by design; at scale the keyed repartition stays
+    * AQE-managed.
     */
-  def scores(docs: DataFrame, idCol: String, textCol: String,
-             spreadN: Int = 0): DataFrame = {
+  def scores(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val n = graft.Spread.width(docs)
     val pairs0 = docs
       .select(col(idCol), explode(TF.tokens(col(textCol))).as("term"))
       .filter(length(col("term")) > 0)
-    val pairs = if (spreadN > 0) pairs0.repartition(spreadN, col("term"))
+    val pairs = if (n > 0) pairs0.repartition(n, col("term"))
                 else pairs0.repartition(col("term"))
     val tf = pairs.groupBy("term", idCol).agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -69,11 +68,10 @@ object TfIdf {
   /** Top-k terms per document by TF-IDF (rank on the rounded score,
     * term-asc tie-break — total order, engine-portable).
     */
-  def topTerms(docs: DataFrame, idCol: String, textCol: String, k: Int,
-               spreadN: Int = 0): DataFrame = {
+  def topTerms(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("tfidf").desc, col("term").asc)
-    scores(docs, idCol, textCol, spreadN)
+    scores(docs, idCol, textCol)
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
   }

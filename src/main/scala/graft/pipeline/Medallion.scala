@@ -34,14 +34,13 @@ object Medallion {
     * wall-clock dependency.
     */
   def silver(raw: DataFrame, catalog: DataFrame, catalogKey: String,
-             catalogValue: String, currentYear: Int,
-             dedupSpreadN: Int = 0): DataFrame =
+             catalogValue: String, currentYear: Int): DataFrame =
     raw
       .transform(ColumnStandardizer.standardize)
       .transform(DateStandardizer.standardize(_, Seq("fecha_matricula")))
       .transform(Normalizer.normalize(_, Seq("estado")))
       .transform(Deduplicator.latestWins(_, Seq("matricula"), "fecha_matricula",
-        tieBreak = Some("id_titular"), spreadN = dedupSpreadN))
+        tieBreak = Some("id_titular")))
       .transform(CatalogEnricher.enrich(_, catalog, "id_titular", catalogKey,
         catalogValue, "titular_name", normalizeKeys = false))
       .withColumn("tipo_persona",

@@ -18,15 +18,13 @@ import graft.sources.Readers
 object Events {
 
   /** Event-time column normalized from either raw encoding the events
-    * feed arrives in: BIGINT ns-since-epoch (a reader honoring the
-    * legacy `nanosAsLong` conf renders parquet TIMESTAMP(NANOS) as a
-    * raw long) or a native timestamp (current Spark reads NANOS as
-    * TIMESTAMP_NTZ directly, µs-truncated — the r8 driver runtime
-    * does this, which is what silently broke every unconditional
-    * `ts div 1000` stream stager that round). Mirrors the dtype guard
-    * `Tables.events` has always had; `to` picks the flavor the
-    * consumer needs (stream watermarks/joins require LTZ, batch
-    * tables are NTZ — session TZ is UTC so the values agree).
+    * feed arrives in: BIGINT ns-since-epoch (parquet TIMESTAMP(NANOS)
+    * under the session's legacy `nanosAsLong` conf, which Spark 4.1.2
+    * honours) or a native timestamp (TIMESTAMP(MICROS), as the
+    * testdata tiers write `events.ts`). Mirrors the dtype guard of
+    * `Tables.events`; `to` picks the flavor the consumer needs
+    * (stream watermarks/joins require LTZ, batch tables are NTZ —
+    * session TZ is UTC so the values agree).
     */
   private def tsNormalized(schema: org.apache.spark.sql.types.StructType,
                            to: String): org.apache.spark.sql.Column =

@@ -99,13 +99,6 @@ class FunctionsSpec extends SparkSpec {
     assert(bm == Seq(2L, 1L, 0L))
   }
 
-  test("stopwordRatio") {
-    val df = Seq("the cat and the hat").toDF("text")
-    val r = df.select(TF.stopwordRatio(col("text"), Seq("the", "and")))
-      .as[Double].head()
-    assert(math.abs(r - 3.0 / 5.0) < 1e-9)
-  }
-
   test("langId picks argmax, und when no markers") {
     val markers = Seq("en" -> Seq("the"), "es" -> Seq("el", "la"))
     val df = Seq("the dog", "el perro la casa", "xyzzy").toDF("text")

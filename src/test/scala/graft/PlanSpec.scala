@@ -49,11 +49,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("text stats: only the small-regime fan-out, projection scan-fused") {
-    // r13: the gate takes the size-gated spread, so the small-regime
-    // plan carries exactly ONE round-robin exchange below the fused
+    // the gate spreads its narrow scan, so the small-regime plan
+    // carries exactly ONE round-robin exchange below the fused
     // projection; the zero-exchange 100 TB contract is pinned by the
-    // at-scale regime test (q_token_count with the spread gate off)
-    val p = plan("q_token_count")
+    // at-scale regime test (q_quality_score with a wide scan)
+    val p = plan("q_quality_score")
     assert("Exchange".r.findAllIn(p).size == 1, p)
     assert(p.contains("RoundRobinPartitioning"), p)
   }
@@ -243,29 +243,34 @@ class PlanSpec extends SparkSpec {
   }
 
   test("at-scale regime: spread-free plans hold tighter ceilings") {
-    // r12 verdict item 8 + advice item 4. Two regime pins:
+    // Two regime pins on Spread's decision:
     // (1) the spec fixture must BE in the small regime — if data or
-    //     conf growth ever flips scanFanout to 0 here, the golden
-    //     ceilings above would break with an opaque count mismatch,
-    //     so fail with the reason instead;
-    // (2) with the gate forced OFF (maxPartitionBytes shrunk until
-    //     every table "already scans wide" — the same arithmetic a
-    //     100 TB input satisfies naturally), the small-regime spread
+    //     conf growth ever makes its scans wide, the golden ceilings
+    //     above would break with an opaque count mismatch, so fail
+    //     with the reason instead;
+    // (2) with maxPartitionBytes shrunk until every table scans into
+    //     at least a split per core (what a 100 TB input does
+    //     naturally), the decision is "leave alone", the spread
     //     exchanges must be ABSENT and these TIGHTER ceilings hold.
     //     A spread leaking into the at-scale plan fails here, not in
     //     a cluster deployment.
-    assert(Spread.scanFanout(spark, sf(), "documents") > 0,
-      "fixture regime flipped: scanFanout = 0 in the spec fixture — " +
-        "the golden ceilings above assume the small-input spreads are present")
+    val tables = Seq("documents", "events", "orders")
+    tables.foreach { t =>
+      assert(Spread.width(Tables.load(spark, sf(), t)) > 0,
+        s"fixture regime flipped: $t scans wide in the spec fixture — " +
+          "the golden ceilings above assume the small-input spreads are present")
+    }
     val key = "spark.sql.files.maxPartitionBytes"
     val prev = spark.conf.get(key)
     val cores = spark.sparkContext.defaultParallelism
-    val tables = Seq("documents", "events", "orders")
     val minBytes = tables.map(t => Tables.bytesOnDisk(spark, sf(), t)).min
     try {
       spark.conf.set(key, math.max(1L, minBytes / cores).toString)
+      // a frame an earlier gate left cached keeps the partitions it was
+      // cached with, and the decision reads them: plan fresh scans only
+      spark.catalog.clearCache()
       tables.foreach { t =>
-        assert(Spread.scanFanout(spark, sf(), t) == 0,
+        assert(Spread.width(Tables.load(spark, sf(), t)) == 0,
           s"$t still spreads under the at-scale conf")
       }
       val atScale = Seq(
@@ -296,6 +301,21 @@ class PlanSpec extends SparkSpec {
       }
       assert(failures.isEmpty, failures.mkString("\n"))
     } finally spark.conf.set(key, prev)
+  }
+
+  test("the spread decision starts no Spark job and leaves a plan that needs a shuffle alone") {
+    // A joined frame already needs an exchange: asking it for its
+    // partition count would run its upstream stages under AQE while
+    // the plan is built. A bare tier scan is narrow and is spread.
+    val docs = Tables.documents(spark, sf())
+    val joined = docs.join(Tables.orders(spark, sf()),
+      docs("doc_id") === org.apache.spark.sql.functions.col("o_orderkey"))
+    val (wide, wideJobs) = Probe.jobsStarted(spark)(Spread.ifNarrow(joined))
+    assert(wideJobs === 0)
+    assert(wide eq joined)
+    val (narrow, narrowJobs) = Probe.jobsStarted(spark)(Spread.ifNarrow(docs))
+    assert(narrowJobs === 0)
+    assert(narrow.queryExecution.optimizedPlan.toString.contains("Repartition"))
   }
 
   private def audit(q: String, p: org.apache.spark.sql.execution.SparkPlan,

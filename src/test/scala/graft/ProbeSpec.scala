@@ -5,8 +5,8 @@ package graft
   */
 class ProbeSpec extends SparkSpec {
 
-  test("Probe.measure: q_token_count has positive times and one exchange") {
-    val r = Probe.measure(spark, sf(), "q_token_count").fold(fail(_), identity)
+  test("Probe.measure: q_quality_score has positive times and one exchange") {
+    val r = Probe.measure(spark, sf(), "q_quality_score").fold(fail(_), identity)
     val s = r.summary
     assert(s.q1 > 0 && s.q1 <= s.median && s.median <= s.q3 && s.wallMedian > 0, r.line)
     // the parquet schema is read on the driver: building the plan starts no job
@@ -15,7 +15,7 @@ class ProbeSpec extends SparkSpec {
     assert(r.exchanges === 1, r.plan)
     assert(!r.bnlj, r.plan)
     assert(r.plan.contains("isFinalPlan=true"), r.plan)
-    assert(r.line.startsWith("PROBE q_token_count median="), r.line)
+    assert(r.line.startsWith("PROBE q_quality_score median="), r.line)
     assert(r.line.endsWith("exchanges=1 bnlj=false"), r.line)
     assert(r.line.contains(" build_jobs=0 exchanges="), r.line)
   }

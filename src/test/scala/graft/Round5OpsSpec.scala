@@ -324,21 +324,6 @@ class Round5OpsSpec extends SparkSpec {
     assert(!plan.contains("Join") && !plan.contains("CartesianProduct"), plan)
   }
 
-  // ---------------------------------------------------------- winsorize
-  test("winsorize clamps outliers to rounded percentile bounds") {
-    // 1..100 plus two wild outliers; p05/p95 of the 102 values
-    val vals = ((1 to 100).map(_.toDouble) ++ Seq(-1000.0, 1000.0))
-    val df = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
-    val w = graft.operators.Normalizer.winsorize(df, "v", 0.05, 0.95)
-    val clipped = w.filter(col("__clipped") =!= 0L).count()
-    assert(clipped >= 2)                                   // at least the outliers
-    val (mn, mx) = w.agg(min("v_w"), max("v_w")).as[(Double, Double)].head()
-    assert(mn > -1000.0 && mx < 1000.0)                    // outliers clamped
-    assert(w.count() == 102)                               // row-preserving
-    // interior values untouched
-    assert(w.filter(col("v") === 50.0 && col("v_w") === 50.0).count() == 1)
-  }
-
   // ------------------------------------------------------ forward as-of
   test("asOfForward picks the EARLIEST right row at/after left time") {
     def t(min: Long) = new java.sql.Timestamp(1700000000000L + min * 60000)
