@@ -1,10 +1,12 @@
 package graft.ann
 
-import graft.functions.VectorFunctions
+import graft.functions.{CentroidSet, VectorFunctions}
 import graft.sources.Readers
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** IVF (inverted-file) approximate nearest neighbor.
   *
@@ -16,40 +18,46 @@ import org.apache.spark.sql.functions._
   * is the whole point at 100 TB. Here assignment runs inline because
   * the testdata is unindexed.
   *
+  * A centroid set is a driver-side value: at most `c` rows, held as
+  * a local relation (or read from an index's parquet) and handed to
+  * each plan that reads it as one [[CentroidSet]] leaf, decoded once.
+  * Assignment and probe read that leaf; no plan re-aggregates or
+  * broadcasts the centroids.
+  *
   * Everything is deterministic: centroid seeds are the top-C vectors
   * by xxhash64(vec_id) (a seedless pseudo-random draw), refined by a
-  * fixed number of Lloyd iterations (each cell's mean is one
-  * `vector_mean` aggregate grouped by cluster_id — partial-aggregated
-  * to c·dim sums per partition, one exchange, no driver-side math).
+  * fixed number of Lloyd iterations. Each cell's mean is one
+  * `vector_mean` aggregate grouped by cluster_id, partial-aggregated
+  * to c·dim sums per partition over one exchange; only its ≤ c
+  * result rows come to the driver.
   */
 object Ivf {
 
-  /** (cluster_id, centroid: array<double>) — deterministic k-means
-    * with `iters` Lloyd refinements. Each refinement drops a cell no
-    * non-NULL embedding reached, so at most `c` rows come back (none
-    * for an empty corpus).
+  /** (cluster_id, centroid) — deterministic k-means with `iters`
+    * Lloyd refinements, as a local relation sorted by cluster_id. The
+    * seeds keep the stored element width (`iters = 0` returns them
+    * as stored); each refinement's means are `array<double>` and drop
+    * a cell no non-NULL embedding reached, so at most `c` rows come
+    * back (none for an empty or all-NULL corpus). Runs at call time:
+    * one job for the seeds and one aggregate per iteration.
     */
   def centroids(corpus: DataFrame, c: Int, iters: Int = 2): DataFrame = {
     // keep the STORED element width (float for the testdata corpus):
-    // the native cosine casts per element inside its fused loop, so
-    // results are bit-identical to an up-front toDouble while every
-    // assignment/pair pass moves half the bytes; Lloyd means
-    // accumulate in double (vector_mean) so centroids come out
-    // array<double> after the first refinement either way
+    // the kernel widens per element, so results are bit-identical to
+    // an up-front toDouble while every assignment pass moves half the
+    // bytes
     val emb = corpus.select(col("vec_id"), col("embedding").as("emb"))
-    // Seed selection: top-c by a pseudo-random hash order. The
-    // orderBy().limit(c) plans as TakeOrderedAndProject — per-partition
-    // top-c then c rows merged on one task — never a whole-corpus
-    // single-task Window (the r1 row_number() form funneled the full
-    // corpus through one partition). Ids come from each seed's sorted
-    // position via one bounded collect (c elements) + posexplode.
-    var cents = emb
-      .select(xxhash64(col("vec_id")).as("hk"), col("vec_id"), col("emb"))
-      .orderBy(col("hk"), col("vec_id"))
-      .limit(c)
-      .agg(array_sort(collect_list(struct(col("hk"), col("vec_id"), col("emb")))).as("seeds"))
-      .select(posexplode(col("seeds")).as(Seq("cluster_id", "seed")))
-      .select(col("cluster_id").cast("int").as("cluster_id"), col("seed.emb").as("centroid"))
+    // Seed selection: top-c by a pseudo-random hash order, planned as
+    // TakeOrderedAndProject — per-partition top-c then c rows merged
+    // on one task, never a whole-corpus single-task Window (the r1
+    // row_number() form funneled the full corpus through one
+    // partition). A seed's id is its position in that order.
+    val seeds = emb.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(c)
+      .select(col("emb")).collect()
+    val seedSchema = StructType(Seq(StructField("cluster_id", IntegerType, nullable = false),
+      StructField("centroid", emb.schema("emb").dataType)))
+    var cents = local(corpus, seedSchema,
+      seeds.toSeq.zipWithIndex.map { case (r, i) => Row(i, r.get(0)) })
     // Lloyd update: each cell's positional mean in ONE cluster-keyed
     // exchange of c·dim partial sums per partition. A cell only NULL
     // or empty embeddings reached has no mean (NULL) and is dropped;
@@ -57,37 +65,39 @@ object Ivf {
     // own group.
     var i = 0
     while (i < iters) {
-      cents = assignTo(emb, cents)
+      val means = assignTo(emb, cents)
         .groupBy("cluster_id")
         .agg(VectorFunctions.vectorMean(col("emb")).as("centroid"))
         .filter(col("centroid").isNotNull)
+      cents = local(corpus, means.schema,
+        means.collect().toSeq.sortBy(r => Option(r.getAs[Integer](0)).map(_.intValue)))
       i += 1
     }
     cents
   }
 
-  /** Nearest-centroid assignment: ALL centroids ride as one broadcast
-    * 1-row array and each row picks its cell with the codegen'd
-    * `nearest_centroid` kernel — a narrow per-row argmax, ZERO
-    * shuffles (r13; §2.4), no per-pair allocation. The kernel ranks
-    * `(cosine, -cluster_id)` with Spark's double ordering: NaN ranks
-    * highest (a zero vector ties every cell at NaN), `-0.0 == 0.0`,
-    * and a tie goes to the smaller cluster_id — the answer of the
-    * interpreted `aggregate` struct fold it replaced, bit for bit
-    * (FunctionsSpec keeps that fold as the reference). `cluster_id`
-    * is NULL for a NULL embedding, an empty centroid set, or when no
-    * centroid has a comparable (equal-width, non-NULL) vector. Each
-    * input row gets one output row: `emb` is expected unique by
-    * vec_id, nothing here dedupes it.
+  /** `rows` as a local relation in `like`'s session. */
+  private def local(like: DataFrame, schema: StructType, rows: Seq[Row]): DataFrame =
+    like.sparkSession.createDataFrame(rows.asJava, schema)
+
+  /** Nearest-centroid assignment: `cents` is read once into a
+    * [[CentroidSet]] leaf (no job for a local relation) and each row
+    * picks its cell with the codegen'd `nearest_centroid` kernel — a
+    * narrow per-row argmax, ZERO shuffles, no per-pair allocation. The
+    * kernel ranks `(cosine, -cluster_id)` with Spark's double
+    * ordering: NaN ranks highest (a zero vector ties every cell at
+    * NaN), `-0.0 == 0.0`, and a tie goes to the smaller cluster_id —
+    * the answer of the interpreted `aggregate` struct fold it
+    * replaced, bit for bit (FunctionsSpec keeps that fold as the
+    * reference). `cluster_id` is NULL for a NULL embedding, an empty
+    * centroid set, or when no centroid has a comparable (equal-width,
+    * non-NULL) vector. Each input row gets one output row: `emb` is
+    * expected unique by vec_id, nothing here dedupes it.
     */
-  private def assignTo(emb: DataFrame, cents: DataFrame): DataFrame = {
-    val centsRow = cents.agg(
-      collect_list(struct(col("cluster_id"), col("centroid"))).as("__cents"))
-    emb.crossJoin(broadcast(centsRow))
-      .select(col("vec_id"),
-        VectorFunctions.nearestCentroid(col("emb"), col("__cents")).as("cluster_id"),
-        col("emb"))
-  }
+  private def assignTo(emb: DataFrame, cents: DataFrame): DataFrame =
+    emb.select(col("vec_id"),
+      VectorFunctions.nearestCentroid(col("emb"), CentroidSet.of(cents)).as("cluster_id"),
+      col("emb"))
 
   /** Corpus index: (vec_id, cluster_id, embedding). At scale, write
     * this partitioned by cluster_id once and reuse.
@@ -95,11 +105,13 @@ object Ivf {
   def index(corpus: DataFrame, cents: DataFrame): DataFrame =
     assignTo(corpus.select(col("vec_id"), col("embedding").as("emb")), cents)
 
-  /** nprobe nearest cells per query: (query_id, cluster_id, q_emb). */
+  /** nprobe nearest cells per query: (query_id, cluster_id, q_emb).
+    * Each query row expands the centroid set read once from `cents`.
+    */
   private def probe(qEmb: DataFrame, cents: DataFrame, nprobe: Int): DataFrame = {
     val probeW = Window.partitionBy("query_id")
       .orderBy(col("c_sim").desc, col("cluster_id").asc)
-    qEmb.crossJoin(broadcast(cents))
+    qEmb.select(col("query_id"), col("q_emb"), inline(CentroidSet.of(cents)))
       .withColumn("c_sim", VectorFunctions.cosine(col("q_emb"), col("centroid")))
       .withColumn("c_rank", row_number().over(probeW))
       .filter(col("c_rank") <= nprobe)
@@ -125,7 +137,7 @@ object Ivf {
   /** Approximate top-k: probe the `nprobe` nearest cells per query. */
   def topK(corpus: DataFrame, queries: DataFrame, k: Int,
            c: Int = 16, nprobe: Int = 4, iters: Int = 2): DataFrame = {
-    val cents = centroids(corpus, c, iters).cache()
+    val cents = centroids(corpus, c, iters)
     // cluster_id equality join == partition pruning on an indexed corpus
     scoreAndRank(index(corpus, cents), probe(queryEmb(queries), cents, nprobe), k)
   }
@@ -147,7 +159,7 @@ object Ivf {
               c: Int = 16, nprobe: Int = 4, refine: Int = 4,
               iters: Int = 2): DataFrame = {
     val stats = Quantize.statsRow(corpus, "embedding")
-    val cents = centroids(corpus, c, iters).cache()
+    val cents = centroids(corpus, c, iters)
     def dequantized(encoded: DataFrame): DataFrame =
       encoded.withColumn("deq", transform(col("codes"), (code, i) => {
         val mn = element_at(col("mns"), i + 1)
@@ -194,7 +206,7 @@ object Ivf {
     */
   def writeIndex(corpus: DataFrame, path: String,
                  c: Int = 16, iters: Int = 2): Unit = {
-    val cents = centroids(corpus, c, iters).cache()
+    val cents = centroids(corpus, c, iters)
     cents.write.mode("overwrite").parquet(s"$path/centroids")
     index(corpus, cents)
       .repartition(col("cluster_id"))

@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
   * different densities, so one global threshold over-prunes tight
   * cells and under-prunes loose ones).
   *
-  * Plan shape: centroids broadcast (reusing [[Ivf.centroids]] — the
-  * same coarse quantizer IVF and SemDeDup use, trained once per
-  * corpus); assignment is the one narrow argmax pass; the per-cell
+  * Plan shape: the centroids ([[Ivf.centroids]] — the same coarse
+  * quantizer IVF and SemDeDup use, trained on the driver once per
+  * corpus) are a local relation: the assignment reads them as one
+  * set inside its narrow argmax pass, and the own-centroid cosine
+  * joins them back as a C-row broadcast; the per-cell
   * threshold aggregates (cluster_id → percentile) over ONE
   * cluster-keyed exchange of (cluster_id, sim) pairs — 12 B/row —
   * and joins back as a C-row broadcast. The embeddings themselves
@@ -32,7 +34,7 @@ object Outliers {
     * the bound OutlierSpec pins.
     */
   def verdicts(emb: DataFrame, c: Int, p: Double, iters: Int = 2): DataFrame = {
-    val cents = Ivf.centroids(emb, c, iters).cache()
+    val cents = Ivf.centroids(emb, c, iters)
     val idx = Ivf.index(emb, cents).cache()
     val sims = idx.join(broadcast(cents), Seq("cluster_id"))
       .select(col("vec_id"), col("cluster_id"),

@@ -22,11 +22,15 @@ import org.apache.spark.sql.functions._
   * all-pairs grid is cluster-diagonal, so cost is Σ|cell|² ≈ n²/C —
   * C grows with the corpus ([[autoCells]]; the paper uses 50k
   * clusters for 100M+ embeddings) so each cell's block stays small
-  * regardless of corpus size. In Spark terms: centroids
-  * broadcast (C·dim doubles), ONE cluster-keyed exchange of
-  * (id, vec) per join side, and the pair grid never materializes
-  * beyond each cell's hash-join block. Cross-cell near-dups are
-  * missed by construction — that is SemDeDup's documented recall
+  * regardless of corpus size. In Spark terms: the centroid set is
+  * trained on the driver ([[graft.ann.Ivf.centroids]], C·dim
+  * doubles) and rides in the assignment plan; the self-join keyed on
+  * cluster_id is a hash join of the cached index against itself —
+  * broadcast, with no exchange, while the index is under the
+  * broadcast threshold (the gate and benchmark sizes), one
+  * cluster-keyed shuffle per side above it — and the pair grid never
+  * materializes beyond each cell's join block. Cross-cell near-dups
+  * are missed by construction — that is SemDeDup's documented recall
   * trade, not an implementation gap (the MinHash-LSH family covers
   * surface dups; this operator targets semantic ones).
   *
@@ -52,11 +56,11 @@ object SemDeDup {
     * quadratic (the r9 builder bench measured c = 8 at 200k
     * vectors: 114 s; auto-scaled + cached + float-width arrays:
     * ~13 s). Clamped to [8, 4096]: below 8 the gate corpus
-    * degenerates, above 4096 the broadcast centroid table stops
-    * being "tiny". On a real 100 TB corpus the assignment is paid
-    * once at WRITE time ([[graft.ann.Ivf.writeIndex]]) and only
-    * n²/c recurs, so there you push c higher still (the paper uses
-    * 50k cells for 100M+).
+    * degenerates, above 4096 the driver-held centroid table that
+    * every assignment task carries stops being "tiny". On a real
+    * 100 TB corpus the assignment is paid once at WRITE time
+    * ([[graft.ann.Ivf.writeIndex]]) and only n²/c recurs, so there
+    * you push c higher still (the paper uses 50k cells for 100M+).
     */
   def autoCells(n: Long): Int =
     math.max(8, math.min(4096, math.sqrt(n.toDouble).round.toInt))
@@ -75,7 +79,7 @@ object SemDeDup {
     val train =
       if (n > cap) emb.filter(pmod(xxhash64(col("vec_id")), lit(n / cap + 1)) === 0)
       else emb
-    verdictsWith(emb, Ivf.centroids(train, c, iters).cache(), eps)
+    verdictsWith(emb, Ivf.centroids(train, c, iters), eps)
   }
 
   /** Per-vector verdict: (vec_id, cluster_id, removed). `emb` needs
@@ -83,10 +87,7 @@ object SemDeDup {
     * `eps` the cosine threshold (the paper sweeps 0.7–0.95).
     */
   def verdicts(emb: DataFrame, c: Int, eps: Double, iters: Int = 2): DataFrame =
-    // cache the tiny centroid table (C rows): the self-join below
-    // evaluates the assignment plan once per side, and without the
-    // cache each side would re-run the Lloyd iterations too
-    verdictsWith(emb, Ivf.centroids(emb, c, iters).cache(), eps)
+    verdictsWith(emb, Ivf.centroids(emb, c, iters), eps)
 
   private def verdictsWith(emb: DataFrame, cents: DataFrame, eps: Double): DataFrame = {
     // cache the assignment too: the plan below references idx THREE
@@ -95,7 +96,7 @@ object SemDeDup {
     // uncached it would run three times (builder A/B at 200k vectors:
     // auto-C alone 17.1 s; + this cache and float-width arrays
     // ~12.4 s)
-    val idx = Ivf.index(emb, cents).cache() // (vec_id, cluster_id, emb) — one cluster-keyed shuffle
+    val idx = Ivf.index(emb, cents).cache() // (vec_id, cluster_id, emb), no shuffle
     // probe side renames ALL columns (incl. the join key): a
     // self-join keyed on df("c") === df2("c") makes Spark detect and
     // rewrite a trivially-true predicate — correct, but the rename

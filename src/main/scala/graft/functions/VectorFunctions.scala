@@ -38,8 +38,10 @@ object VectorFunctions {
 
   /** The `cluster_id` of the centroid nearest `emb` by cosine, from
     * `cents: array<struct<cluster_id:int, centroid:array<num>>>`
-    * (graft.functions.NearestCentroid, registered by GraftExtensions).
-    * Ties go to the smaller id; NULL when no centroid is comparable.
+    * (graft.functions.NearestCentroid, registered by GraftExtensions):
+    * any such column, or a driver-held set from [[CentroidSet.of]],
+    * which the kernel decodes once instead of per row. Ties go to the
+    * smaller id; NULL when no centroid is comparable.
     */
   def nearestCentroid(emb: Column, cents: Column): Column =
     call_function("nearest_centroid", emb, cents)

@@ -99,6 +99,37 @@ class DedupSpec extends SparkSpec {
     assert(cents.map(_._2).toSet == Set(Seq(1.0, 0.0), Seq(0.0, 1.0)), cents)
   }
 
+  test("IVF Lloyd with more cells than rows gives one centroid per distinct row") {
+    val rows = Seq(Seq(1.0f, 0.0f, 0.0f), Seq(0.0f, 1.0f, 0.0f), Seq(0.0f, 0.0f, 1.0f))
+    val corpus = rows.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding")
+    val cents = graft.ann.Ivf.centroids(corpus, c = 16)
+      .as[(Option[Int], Seq[Double])].collect().toSeq
+    assert(cents.size == 3 && cents.flatMap(_._1).distinct.size == 3, cents)
+    assert(cents.map(_._1) == cents.map(_._1).sorted, s"not sorted by cluster_id: $cents")
+    assert(cents.map(_._2).toSet == rows.map(_.map(_.toDouble)).toSet, cents)
+  }
+
+  test("IVF Lloyd with iters = 0 returns the seeds at their stored float width") {
+    val corpus = (0L until 10L).map(i => (i, Seq(i.toFloat, 1.0f))).toDF("vec_id", "embedding")
+    val cents = graft.ann.Ivf.centroids(corpus, c = 4, iters = 0)
+    assert(cents.schema("centroid").dataType == corpus.schema("embedding").dataType, cents.schema)
+    // ids number the seeds in (xxhash64(vec_id), vec_id) order
+    val expected = corpus.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(4)
+      .select("embedding").as[Seq[Float]].collect().toSeq
+    val got = cents.as[(Int, Seq[Float])].collect().toSeq
+    assert(got == expected.zipWithIndex.map { case (v, i) => (i, v) }, got)
+  }
+
+  test("IVF Lloyd over an all-NULL corpus gives no centroids and NULL cells") {
+    val corpus = Seq((0L, Option.empty[Seq[Float]]), (1L, None), (2L, None))
+      .toDF("vec_id", "embedding")
+    val cents = graft.ann.Ivf.centroids(corpus, c = 16)
+    assert(cents.count() == 0, cents.collect().toSeq)
+    val cells = graft.ann.Ivf.index(corpus, cents)
+      .select("cluster_id").as[Option[Int]].collect().toSeq
+    assert(cells == Seq(None, None, None), cells)
+  }
+
   test("SemDeDup over identical vectors keeps only the smallest id") {
     val same = (0L until 40L).map(i => (100L + i * 3, Seq(0.6f, -0.8f, 0.0f)))
       .toDF("vec_id", "embedding")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.functions.{CentroidSet, TextFunctions => TF, VectorFunctions => VF}
 
 object FunctionsSpec {
   case class Cent(cluster_id: Int, centroid: Seq[Double])
@@ -172,15 +172,19 @@ class FunctionsSpec extends SparkSpec {
       for ((name, (cents, centWidth)) <- centSets; embWidth <- Seq("float", "double")) {
         val centsRow = Seq(Tuple1(cents)).toDF("__cents").select(col("__cents").cast(
           s"array<struct<cluster_id:int,centroid:array<$centWidth>>>").as("__cents"))
+        // the same centroids as a driver-held set leaf (Ivf's form)
+        val set = CentroidSet.of(centsRow.select(inline(col("__cents"))))
         val out = vecs.select(col("vec_id"), col("emb").cast(s"array<$embWidth>").as("emb"))
           .crossJoin(broadcast(centsRow))
           .select(col("vec_id"),
             VF.nearestCentroid(col("emb"), col("__cents")).as("kernel"),
-            nearestCentroidFold(col("emb"), col("__cents")).as("fold"))
-          .as[(Long, Option[Int], Option[Int])].collect().sortBy(_._1)
+            nearestCentroidFold(col("emb"), col("__cents")).as("fold"),
+            VF.nearestCentroid(col("emb"), set).as("set"))
+          .as[(Long, Option[Int], Option[Int], Option[Int])].collect().sortBy(_._1)
         val label = s"$name centroids, $embWidth vectors, $mode"
         assert(out.length == rows.length, label)
-        out.foreach { case (id, k, f) => assert(k == f && k.nonEmpty, s"$label: vec $id") }
+        out.foreach { case (id, k, f, t) =>
+          assert(k == f && k.nonEmpty && t == f, s"$label: vec $id") }
         assert(!out.exists(r => r._2.contains(30) || r._2.contains(31)),
           s"$label: a duplicate must lose its tie to the smaller id")
         assert(out(400)._2.contains(0) && out(401)._2.contains(0),
@@ -211,6 +215,14 @@ class FunctionsSpec extends SparkSpec {
       val got = df.select(col("i"), VF.nearestCentroid(col("emb"), col("cents")))
         .as[(Int, Option[Int])].collect().sortBy(_._1).map(_._2).toSeq
       assert(got == cases.map(_._3), mode)
+      // each case's centroids as a set leaf: a NULL element arrives
+      // as a (NULL, NULL) row, which never wins either
+      val viaSet = cases.indices.map { i =>
+        val one = df.filter(col("i") === i)
+        val set = CentroidSet.of(one.select(inline(col("cents"))))
+        one.select(VF.nearestCentroid(col("emb"), set)).as[Option[Int]].head()
+      }
+      assert(viaSet == cases.map(_._3), s"set form, $mode")
     }
   }
 

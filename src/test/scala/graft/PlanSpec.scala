@@ -8,6 +8,46 @@ class PlanSpec extends SparkSpec {
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf()).queryExecution.executedPlan.toString
 
+  /** The executed plans of the Dataset actions `body` runs (e.g. the
+    * collects a builder makes while it builds), in completion order.
+    */
+  private def actionPlans(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.synchronized { seen += qe.executedPlan }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val bus = org.apache.spark.graft.ListenerBusAccess
+    bus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; bus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    seen.synchronized(seen.toList)
+  }
+
+  /** A copy of the embeddings no spec caches, so plans and job counts
+    * over it do not depend on which specs ran before.
+    */
+  private lazy val lloydCorpus = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_lloyd_spec").resolve("emb").toString
+    Tables.embeddings(spark, sf()).write.parquet(dir)
+    graft.sources.Readers.parquet(spark, dir)
+  }
+
+  /** Centroid training runs while an IVF plan is built: these are the
+    * plans of its collected queries, the seed draw then one per Lloyd
+    * iteration. Each iteration also reads the previous centroids, a
+    * local relation, into its set: a jobless LocalTableScan, left out
+    * here.
+    */
+  private lazy val lloydPlans = {
+    val corpus = lloydCorpus // written before the capture starts
+    actionPlans(graft.ann.Ivf.centroids(corpus, c = 12))
+      .filterNot(_.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec])
+  }
+
   test("q1: ship-date filter reaches the parquet scan") {
     val p = plan("q1_pricing_summary")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"), p)
@@ -67,7 +107,11 @@ class PlanSpec extends SparkSpec {
         if w.partitionSpec.isEmpty => w
     }
     assert(globalWindows.isEmpty, globalWindows.mkString("\n"))
-    assert(qe.executedPlan.toString.contains("TakeOrdered"), qe.executedPlan.toString)
+    // the seed draw runs at build time, so its plan is the first
+    // collected training query, not part of the gate's plan
+    val seeding = lloydPlans.head
+    assert(seeding.toString.contains("TakeOrdered"), seeding.toString)
+    assert(!seeding.toString.contains("Window"), seeding.toString)
   }
 
   test("IVF: cell assignment runs the nearest_centroid kernel, not an interpreted fold") {
@@ -194,27 +238,42 @@ class PlanSpec extends SparkSpec {
 
   test("Lloyd: each iteration is one vector_mean aggregate, no positional avg") {
     // the update is vector_mean grouped by cell; the (cell, pos) avg
-    // of the posexplode chain it replaced is gone (seeding still
-    // numbers its c seeds with a posexplode — not part of the update)
-    for (q <- Seq("q_ann_ivf", "q_semdedup")) {
-      val p = plan(q)
-      assert(p.contains("vector_mean("), s"$q:\n$p")
-      assert(!p.contains("avg("), s"$q:\n$p")
-    }
-    // shuffles of the bare training plan (2 Lloyd iterations); c = 12
-    // is a cell count no gate caches, so the plan is never an
-    // in-memory scan of an earlier spec's centroids. Ceiling 3: one
-    // cell-keyed exchange per iteration plus one single-partition
-    // exchange collecting iteration 1's centroids for the broadcast.
-    // The posexplode → (cell, pos) avg → collect_list chain planned 5.
+    // of the posexplode chain it replaced is gone. Lloyd runs on the
+    // driver's behalf while the plan is built, so the property is read
+    // from the collected iteration queries, not from a gate's plan.
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val p = graft.ann.Ivf.centroids(Tables.embeddings(spark, sf()), c = 12)
-      .queryExecution.executedPlan
-    assert(!p.toString.contains("avg("), s"Ivf.centroids:\n$p")
-    val shuffles = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
-      def count: Int = collect(p) { case e: ShuffleExchangeExec => e }.size
-    }.count
-    assert(shuffles <= 3, s"Ivf.centroids: $shuffles shuffles > ceiling 3\n$p")
+    assert(lloydPlans.size == 3, lloydPlans.mkString("\n\n"))
+    lloydPlans.tail.foreach { p =>
+      assert(p.toString.contains("vector_mean("), p)
+      assert(!p.toString.contains("avg("), p)
+      // one cell-keyed exchange per iteration; the centroids are a
+      // set in the plan, not a collected-and-broadcast frame
+      val shuffles = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+        def count: Int = collect(p) { case e: ShuffleExchangeExec => e }.size
+      }.count
+      assert(shuffles == 1, s"Lloyd iteration: $shuffles shuffles\n$p")
+      assert(!p.toString.contains("BroadcastNestedLoop"), p)
+    }
+    // jobs: one for the seed draw, two per iteration (the aggregate's
+    // shuffle stage, then its result)
+    val (_, jobs) = Probe.jobsStarted(spark)(graft.ann.Ivf.centroids(lloydCorpus, c = 12))
+    assert(jobs == 5, s"Ivf.centroids started $jobs jobs")
+  }
+
+  test("IVF plan text does not grow with the centroid set") {
+    // the set is a leaf printed by its shape: a Literal would print
+    // every centroid into each plan string (c·dim numbers)
+    val rnd = new scala.util.Random(20261019L)
+    import spark.implicits._
+    val corpus = (0L until 300L).map(i => (i, Seq.fill(32)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    def planLength(c: Int): Int = {
+      val cents = graft.ann.Ivf.centroids(corpus, c, iters = 1)
+      assert(cents.count() == c)
+      graft.ann.Ivf.index(corpus, cents).queryExecution.toString.length
+    }
+    val (small, large) = (planLength(8), planLength(64))
+    assert(math.abs(large - small) < 200, s"plan text: c = 8 $small chars, c = 64 $large")
   }
 
   test("metadata projections prune unused wide columns") {
