@@ -1,11 +1,12 @@
 package graft.ann
 
-import graft.functions.{CentroidSet, VectorFunctions}
+import graft.functions.{CentroidSet, VectorFunctions, VectorMean}
 import graft.sources.Readers
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** IVF (inverted-file) approximate nearest neighbor.
@@ -21,15 +22,17 @@ import scala.jdk.CollectionConverters._
   * A centroid set is a driver-side value: at most `c` rows, held as
   * a local relation (or read from an index's parquet) and handed to
   * each plan that reads it as one [[CentroidSet]] leaf, decoded once.
-  * Assignment and probe read that leaf; no plan re-aggregates or
-  * broadcasts the centroids.
+  * Assignment (`nearest_centroid`) and probe (`nearest_centroids`,
+  * each query's top-nprobe cells, no window) read that leaf; no plan
+  * re-aggregates or broadcasts the centroids.
   *
   * Everything is deterministic: centroid seeds are the top-C vectors
   * by xxhash64(vec_id) (a seedless pseudo-random draw), refined by a
-  * fixed number of Lloyd iterations. Each cell's mean is one
-  * `vector_mean` aggregate grouped by cluster_id, partial-aggregated
-  * to c·dim sums per partition over one exchange; only its ≤ c
-  * result rows come to the driver.
+  * fixed number of Lloyd iterations. Each iteration is one Spark job
+  * with no exchange: the assignment pass folds every partition's rows
+  * into one `VectorMean.Sums` per cell (c·dim sums), the buffers
+  * combine in a `treeAggregate`, and only the ≤ c means stay on the
+  * driver.
   */
 object Ivf {
 
@@ -39,7 +42,7 @@ object Ivf {
     * as stored); each refinement's means are `array<double>` and drop
     * a cell no non-NULL embedding reached, so at most `c` rows come
     * back (none for an empty or all-NULL corpus). Runs at call time:
-    * one job for the seeds and one aggregate per iteration.
+    * one job for the seeds and one per iteration.
     */
   def centroids(corpus: DataFrame, c: Int, iters: Int = 2): DataFrame = {
     // keep the STORED element width (float for the testdata corpus):
@@ -58,19 +61,42 @@ object Ivf {
       StructField("centroid", emb.schema("emb").dataType)))
     var cents = local(corpus, seedSchema,
       seeds.toSeq.zipWithIndex.map { case (r, i) => Row(i, r.get(0)) })
-    // Lloyd update: each cell's positional mean in ONE cluster-keyed
-    // exchange of c·dim partial sums per partition. A cell only NULL
-    // or empty embeddings reached has no mean (NULL) and is dropped;
-    // rows with no comparable centroid (a NULL cluster_id) form their
-    // own group.
+    // Lloyd update: each cell's positional mean, `vector_mean`'s
+    // arithmetic, in ONE job over the assignment plan: every partition
+    // folds its rows into one Sums per cell and treeAggregate combines
+    // the buffers (one stage at a few partitions; it adds a level only
+    // at many, so the driver never receives P full c·dim buffers). A
+    // float sum is exact in double, so float means do not depend on
+    // partitioning or merge order; double means do, to rounding. A
+    // cell only NULL or empty embeddings reached has no mean and is
+    // dropped; rows with no comparable centroid (a NULL cluster_id)
+    // form their own cell.
+    val meanSchema = StructType(Seq(StructField("cluster_id", IntegerType),
+      StructField("centroid", ArrayType(DoubleType, containsNull = true))))
     var i = 0
     while (i < iters) {
-      val means = assignTo(emb, cents)
-        .groupBy("cluster_id")
-        .agg(VectorFunctions.vectorMean(col("emb")).as("centroid"))
-        .filter(col("centroid").isNotNull)
-      cents = local(corpus, means.schema,
-        means.collect().toSeq.sortBy(r => Option(r.getAs[Integer](0)).map(_.intValue)))
+      val assigned = index(corpus, cents)
+      val et = assigned.schema("emb").dataType.asInstanceOf[ArrayType].elementType
+      val sums = assigned.queryExecution.toRdd
+        .treeAggregate(mutable.HashMap.empty[Option[Int], VectorMean.Sums])(
+          (cells, row) => {
+            val cell = if (row.isNullAt(1)) None else Some(row.getInt(1))
+            cells.getOrElseUpdate(cell, new VectorMean.Sums(0))
+              .add(row.getArray(2), et)
+            cells
+          },
+          (a, b) => {
+            b.foreach { case (cell, s) =>
+              a.get(cell) match {
+                case Some(sum) => sum.merge(s)
+                case None => a(cell) = s
+              }
+            }
+            a
+          })
+      cents = local(corpus, meanSchema, sums.toSeq.sortBy(_._1).flatMap { case (cell, s) =>
+        Option(s.mean).map(m => Row(cell.map(Int.box).orNull, m.toSeq[Any](DoubleType)))
+      })
       i += 1
     }
     cents
@@ -106,17 +132,15 @@ object Ivf {
     assignTo(corpus.select(col("vec_id"), col("embedding").as("emb")), cents)
 
   /** nprobe nearest cells per query: (query_id, cluster_id, q_emb).
-    * Each query row expands the centroid set read once from `cents`.
+    * The `nearest_centroids` kernel ranks the set read once from
+    * `cents` per query row and the cells are exploded in place: a
+    * narrow pass, no query-keyed exchange.
     */
-  private def probe(qEmb: DataFrame, cents: DataFrame, nprobe: Int): DataFrame = {
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(col("c_sim").desc, col("cluster_id").asc)
-    qEmb.select(col("query_id"), col("q_emb"), inline(CentroidSet.of(cents)))
-      .withColumn("c_sim", VectorFunctions.cosine(col("q_emb"), col("centroid")))
-      .withColumn("c_rank", row_number().over(probeW))
-      .filter(col("c_rank") <= nprobe)
-      .select("query_id", "cluster_id", "q_emb")
-  }
+  private def probe(qEmb: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
+    qEmb.select(col("query_id"),
+      explode(VectorFunctions.nearestCentroids(col("q_emb"), CentroidSet.of(cents), nprobe))
+        .as("cluster_id"),
+      col("q_emb"))
 
   /** Score probed cells and keep the per-query top-k. */
   private def scoreAndRank(indexed: DataFrame, probed: DataFrame, k: Int): DataFrame = {

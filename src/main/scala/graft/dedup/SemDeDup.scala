@@ -66,7 +66,9 @@ object SemDeDup {
     math.max(8, math.min(4096, math.sqrt(n.toDouble).round.toInt))
 
   /** Per-vector verdict with the cell count auto-scaled to the
-    * corpus (counts once — a parquet metadata read, not a scan) and
+    * corpus (counts once: over a parquet file that can be a metadata
+    * read, but over a checkpointed or computed frame, like the
+    * embedding benchmark's, it is a scan of two jobs) and
     * centroid TRAINING capped at 256·c hash-sampled rows (the FAISS
     * training convention: Lloyd converges on a sample; only the
     * one-pass assignment needs the full corpus). The sample draw is

@@ -1,12 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graft.ExpressionColumn
 import org.apache.spark.sql.types._
 
@@ -147,6 +147,57 @@ case class NearestCentroid(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The top-`n` form of [[NearestCentroid]]:
+  * `nearest_centroids(emb, set, n)` returns the `cluster_id`s of the
+  * `n` cells of a [[CentroidSet]] ranked first for `emb`, as an
+  * `array<int>` (best first; all cells when `n` exceeds the set, none
+  * for `n <= 0`), for IVF's probe to explode per query. It picks what
+  *
+  *   inline(set) → row_number() OVER (PARTITION BY query
+  *     ORDER BY cosine_sim(emb, centroid) DESC, cluster_id ASC) <= n
+  *
+  * picks, with no query-keyed exchange: the same cosine arithmetic as
+  * the assignment kernel, ranked by Spark's default orderings (DESC
+  * puts NULL cosines last, ASC puts NULL ids first), so a NULL `emb`
+  * still probes `n` cells, in id order ([[CentroidTable.top]]).
+  * The generated code and `eval` call the same method.
+  */
+case class NearestCentroids(left: Expression, right: Expression, n: Int)
+    extends BinaryExpression {
+
+  override def prettyName: String = "nearest_centroids"
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right) match {
+    case (ArrayType(_: NumericType, _), _: CentroidSet) => TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires (array<numeric>, a centroid set), got " +
+        s"${left.dataType.catalogString} and $right")
+  }
+
+  private def embType: DataType = left.dataType.asInstanceOf[ArrayType].elementType
+
+  private def table: CentroidTable = right.asInstanceOf[CentroidSet].table
+
+  override def eval(input: InternalRow): Any =
+    table.top(left.eval(input).asInstanceOf[ArrayData], embType, n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("centroidTable", table, classOf[CentroidTable].getName)
+    val et = ctx.addReferenceObj("embType", embType, classOf[DataType].getName)
+    val e = left.genCode(ctx)
+    ev.copy(code = code"""
+      |${e.code}
+      |ArrayData ${ev.value} = $t.top(${e.isNull} ? null : ${e.value}, $et, $n);
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): NearestCentroids =
+    copy(left = newLeft, right = newRight)
+}
+
 /** A centroid array decoded for scoring: per element its id and
   * whether that is NULL, its vector as `double[]` (null when the
   * element, its vector or one of its values is NULL: such a centroid
@@ -161,22 +212,14 @@ final class CentroidTable(val ids: Array[Int], val idNull: Array[Boolean],
     * comparable.
     */
   def nearest(x: Array[Double], rowNorm: Double): Int = {
-    val n = x.length
     var best = -1
     var bestSim = Double.NegativeInfinity
     var bestNeg = Int.MinValue
     var bestNegNull = false
     var j = 0
     while (j < vecs.length) {
-      val v = vecs(j)
-      if (v != null && v.length == n) {
-        var dot = 0.0
-        var i = 0
-        while (i < n) {
-          dot += x(i) * v(i)
-          i += 1
-        }
-        val sim = dot / (rowNorm * norms(j))
+      if (comparable(j, x.length)) {
+        val sim = cosine(x, rowNorm, j)
         val cmp = SQLOrderingUtil.compareDoubles(sim, bestSim)
         if (cmp > 0 || (cmp == 0 && !idNull(j) && (bestNegNull || -ids(j) > bestNeg))) {
           bestSim = sim; bestNeg = -ids(j); bestNegNull = idNull(j); best = j
@@ -185,6 +228,48 @@ final class CentroidTable(val ids: Array[Int], val idNull: Array[Boolean],
       j += 1
     }
     best
+  }
+
+  /** The `cluster_id`s of the `n` centroids [[NearestCentroids]] ranks
+    * first for `emb` (element type `et`), best first: by cosine
+    * descending, NULL cosines last (NaN highest, `-0.0 == 0.0`), then
+    * by id ascending, NULL ids first. A cosine is NULL when `emb` is
+    * NULL or holds a NULL, or the centroid is not comparable, so a
+    * NULL query still gets `n` cells, in id order.
+    */
+  def top(emb: ArrayData, et: DataType, n: Int): ArrayData = {
+    val x = if (emb == null || (0 until emb.numElements()).exists(emb.isNullAt)) null
+      else Array.tabulate(emb.numElements())(CosineSimilarity.getDouble(et, emb, _))
+    val rowNorm = if (x == null) 0.0 else math.sqrt(x.foldLeft(0.0)((na, xi) => na + xi * xi))
+    val sims = Array.tabulate(vecs.length) { j =>
+      if (x != null && comparable(j, x.length)) Some(cosine(x, rowNorm, j)) else None
+    }
+    def before(a: Int, b: Int): Boolean = (sims(a), sims(b)) match {
+      case (Some(sa), Some(sb)) if SQLOrderingUtil.compareDoubles(sa, sb) != 0 =>
+        SQLOrderingUtil.compareDoubles(sa, sb) > 0
+      case (Some(_), None) => true
+      case (None, Some(_)) => false
+      case _ => if (idNull(a) || idNull(b)) idNull(a) && !idNull(b) else ids(a) < ids(b)
+    }
+    val picked = vecs.indices.sortWith(before).take(n)
+    new GenericArrayData(picked.map(j => if (idNull(j)) null else ids(j)).toArray[Any])
+  }
+
+  private def comparable(j: Int, width: Int): Boolean =
+    vecs(j) != null && vecs(j).length == width
+
+  /** `dot / (rowNorm * norm_j)`, the dot accumulated in index order:
+    * [[CosineSimilarity]]'s arithmetic.
+    */
+  private def cosine(x: Array[Double], rowNorm: Double, j: Int): Double = {
+    val v = vecs(j)
+    var dot = 0.0
+    var i = 0
+    while (i < x.length) {
+      dot += x(i) * v(i)
+      i += 1
+    }
+    dot / (rowNorm * norms(j))
   }
 }
 
@@ -257,14 +342,15 @@ case class CentroidSet(rows: ArrayData, dataType: ArrayType) extends LeafExpress
 
 object CentroidSet {
 
-  /** The set of `cents`' `(cluster_id, centroid)` rows as a column:
-    * one collect, which starts no Spark job when `cents` is a local
-    * relation.
+  /** The set of `cents`' `(cluster_id, centroid)` rows as a column,
+    * read by executing its physical plan directly: no SQL execution
+    * and no listener event. A local relation's rows come back with no
+    * job; a parquet centroid table is one scan.
     */
   def of(cents: DataFrame): Column = {
     val frame = cents.select("cluster_id", "centroid")
-    val dt = ArrayType(frame.schema, containsNull = false)
-    val rows = CatalystTypeConverters.createToCatalystConverter(dt)(frame.collect().toSeq)
-    ExpressionColumn(CentroidSet(rows.asInstanceOf[ArrayData], dt))
+    val rows = frame.queryExecution.executedPlan.executeCollect()
+    ExpressionColumn(CentroidSet(new GenericArrayData(rows.toArray[Any]),
+      ArrayType(frame.schema, containsNull = false)))
   }
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExpressionColumn
 
 /** Dense-vector column math over `array<float|double>` columns.
   *
@@ -45,6 +46,15 @@ object VectorFunctions {
     */
   def nearestCentroid(emb: Column, cents: Column): Column =
     call_function("nearest_centroid", emb, cents)
+
+  /** The `cluster_id`s of the `n` cells of a [[CentroidSet.of]] set
+    * nearest `emb` by cosine, best first, ties to the smaller id, a
+    * NULL id first (graft.functions.NearestCentroids): IVF's probe,
+    * one array per query row.
+    */
+  def nearestCentroids(emb: Column, set: Column, n: Int): Column =
+    ExpressionColumn(NearestCentroids(ExpressionColumn.expression(emb),
+      ExpressionColumn.expression(set), n))
 
   /** Positional mean of `array<float|double>` rows per group, as
     * `array<double>` (graft.functions.VectorMean, registered by

@@ -69,44 +69,18 @@ case class VectorMean(
       s"$prettyName requires array<float> or array<double>, got ${other.catalogString}")
   }
 
-  private lazy val floatInput: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  private lazy val elementType: DataType = child.dataType.asInstanceOf[ArrayType].elementType
 
   override def createAggregationBuffer(): Sums = new Sums(0)
 
   override def update(buf: Sums, input: InternalRow): Sums = {
-    val arr = child.eval(input).asInstanceOf[ArrayData]
-    if (arr != null) {
-      val n = arr.numElements()
-      buf.widen(n)
-      var i = 0
-      while (i < n) {
-        if (!arr.isNullAt(i)) {
-          buf.sums(i) += (if (floatInput) arr.getFloat(i).toDouble else arr.getDouble(i))
-          buf.counts(i) += 1
-        }
-        i += 1
-      }
-    }
+    buf.add(child.eval(input).asInstanceOf[ArrayData], elementType)
     buf
   }
 
-  override def merge(buf: Sums, other: Sums): Sums = {
-    buf.widen(other.width)
-    var i = 0
-    while (i < other.width) {
-      buf.sums(i) += other.sums(i)
-      buf.counts(i) += other.counts(i)
-      i += 1
-    }
-    buf
-  }
+  override def merge(buf: Sums, other: Sums): Sums = buf.merge(other)
 
-  override def eval(buf: Sums): Any =
-    if (buf.width == 0) null
-    else new GenericArrayData(Array.tabulate[Any](buf.width) { i =>
-      if (buf.counts(i) == 0) null else buf.sums(i) / buf.counts(i)
-    })
+  override def eval(buf: Sums): Any = buf.mean
 
   // [width][width sums][width counts]
   override def serialize(buf: Sums): Array[Byte] = {
@@ -139,9 +113,12 @@ case class VectorMean(
 object VectorMean {
 
   /** Per-position running sums and non-NULL counts; `width` grows to
-    * the widest input, new positions starting at (0.0, 0).
+    * the widest input, new positions starting at (0.0, 0). The
+    * arithmetic of `vector_mean` and of the Lloyd update in
+    * [[graft.ann.Ivf.centroids]], which folds partitions into one
+    * `Sums` per cell without a SQL aggregate.
     */
-  final class Sums(var width: Int) {
+  final class Sums(var width: Int) extends Serializable {
     var sums: Array[Double] = new Array[Double](width)
     var counts: Array[Long] = new Array[Long](width)
 
@@ -150,5 +127,42 @@ object VectorMean {
       counts = java.util.Arrays.copyOf(counts, n)
       width = n
     }
+
+    /** Adds one row's elements (of numeric type `et`, widened to
+      * double) in index order; a NULL row or element adds nothing.
+      */
+    def add(arr: ArrayData, et: DataType): Unit = if (arr != null) {
+      val n = arr.numElements()
+      widen(n)
+      var i = 0
+      while (i < n) {
+        if (!arr.isNullAt(i)) {
+          sums(i) += CosineSimilarity.getDouble(et, arr, i)
+          counts(i) += 1
+        }
+        i += 1
+      }
+    }
+
+    /** Adds `other`'s sums and counts into this buffer. */
+    def merge(other: Sums): Sums = {
+      widen(other.width)
+      var i = 0
+      while (i < other.width) {
+        sums(i) += other.sums(i)
+        counts(i) += other.counts(i)
+        i += 1
+      }
+      this
+    }
+
+    /** `sum / count` per position, NULL where the count is 0; NULL
+      * when no position was seen.
+      */
+    def mean: ArrayData =
+      if (width == 0) null
+      else new GenericArrayData(Array.tabulate[Any](width) { i =>
+        if (counts(i) == 0) null else sums(i) / counts(i)
+      })
   }
 }

@@ -60,13 +60,15 @@ class DedupSpec extends SparkSpec {
 
   test("ivfTopK recall against brute force is reasonable") {
     val emb = Tables.embeddings(spark, sf()).cache()
-    val q = emb.filter(col("vec_id") < 8)
-    val exact = Knn.bruteForceTopK(emb, q, k = 5)
-      .select("query_id", "nbr_id").as[(Long, Long)].collect().toSet
-    val approx = graft.ann.Ivf.topK(emb, q, k = 5, c = 16, nprobe = 6)
-      .select("query_id", "nbr_id").as[(Long, Long)].collect().toSet
-    val recall = (exact intersect approx).size.toDouble / exact.size
-    assert(recall > 0.2, s"recall=$recall")
+    try {
+      val q = emb.filter(col("vec_id") < 8)
+      val exact = Knn.bruteForceTopK(emb, q, k = 5)
+        .select("query_id", "nbr_id").as[(Long, Long)].collect().toSet
+      val approx = graft.ann.Ivf.topK(emb, q, k = 5, c = 16, nprobe = 6)
+        .select("query_id", "nbr_id").as[(Long, Long)].collect().toSet
+      val recall = (exact intersect approx).size.toDouble / exact.size
+      assert(recall > 0.2, s"recall=$recall")
+    } finally emb.unpersist()
   }
 
   test("IVF index over an empty centroid set assigns NULL, not Int.MinValue") {
@@ -130,6 +132,77 @@ class DedupSpec extends SparkSpec {
     assert(cells == Seq(None, None, None), cells)
   }
 
+  /** The Lloyd update `Ivf.centroids` replaced: from the same seeds,
+    * each iteration is one `vector_mean` aggregate grouped by the
+    * assigned cell, its non-NULL means collected sorted by cluster_id.
+    */
+  private def lloydByAggregate(corpus: org.apache.spark.sql.DataFrame, c: Int,
+      iters: Int): org.apache.spark.sql.DataFrame = {
+    var cents = graft.ann.Ivf.centroids(corpus, c, iters = 0)
+    for (_ <- 0 until iters) {
+      val means = graft.ann.Ivf.index(corpus, cents)
+        .groupBy("cluster_id")
+        .agg(graft.functions.VectorFunctions.vectorMean(col("emb")).as("centroid"))
+        .filter(col("centroid").isNotNull)
+      val rows = means.collect().toSeq.sortBy(r => Option(r.getAs[Integer](0)).map(_.intValue))
+      cents = spark.createDataFrame(java.util.Arrays.asList(rows: _*), means.schema)
+    }
+    cents
+  }
+
+  test("IVF Lloyd gives the vector_mean aggregate's centroids at any partitioning") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(20261019L)
+    // 8-wide rows, NULL embeddings, and 5-wide rows that no seed
+    // matches, so they land in a NULL-cluster_id cell of their own
+    val rows: Seq[Row] = (0 until 240).map { i =>
+      val v: Seq[Float] =
+        if (i % 37 == 5) null
+        else if (i % 53 == 7) Seq.fill(5)(rnd.nextGaussian().toFloat)
+        else Seq.fill(8)((rnd.nextGaussian() + (i % 3)).toFloat)
+      Row(i.toLong, v)
+    }
+    def bits(x: Double): Long = java.lang.Double.doubleToLongBits(x)
+    for (width <- Seq("float", "double")) {
+      val schema = StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(if (width == "float") FloatType else DoubleType))))
+      val typed = if (width == "float") rows
+        else rows.map(r => Row(r.getLong(0), Option(r.getSeq[Float](1)).map(_.map(_.toDouble)).orNull))
+      // `p` partitions; every odd-numbered one is empty
+      def corpus(p: Int) = {
+        val full = (p + 1) / 2
+        val chunks = typed.grouped((typed.size + full - 1) / full).toSeq
+        val parts = (0 until p).map(k => if (k % 2 == 0) chunks(k / 2) else Seq.empty[Row])
+        val df = spark.createDataFrame(spark.sparkContext.parallelize(parts, p).flatMap(identity), schema)
+        assert(df.rdd.getNumPartitions == p)
+        df
+      }
+      val ref = lloydByAggregate(corpus(1), c = 6, iters = 2)
+      val want = ref.as[(Option[Int], Seq[Double])].collect().toSeq
+      assert(want.exists(_._1.isEmpty) && want.size > 3, s"$width: $want")
+      for (p <- Seq(1, 4, 7)) {
+        val cents = graft.ann.Ivf.centroids(corpus(p), c = 6, iters = 2)
+        val label = s"$width vectors, $p partitions"
+        assert(cents.schema == ref.schema, label)
+        val got = cents.as[(Option[Int], Seq[Double])].collect().toSeq
+        assert(got.map(_._1) == want.map(_._1), s"$label: $got")
+        got.zip(want).foreach { case ((id, a), (_, b)) =>
+          assert(a.size == b.size, s"$label: cell $id")
+          // A float sum is exact in double, so the means are the
+          // aggregate's bit for bit. A double sum depends on the order
+          // partial sums merge in, which differs between the two
+          // forms: equal to rounding only.
+          a.zip(b).foreach { case (x, y) => assert(
+            if (width == "float") bits(x) == bits(y)
+            else math.abs(x - y) <= 1e-12 * math.max(1.0, math.abs(y)),
+            s"$label: cell $id: $x vs $y")
+          }
+        }
+      }
+    }
+  }
+
   test("SemDeDup over identical vectors keeps only the smallest id") {
     val same = (0L until 40L).map(i => (100L + i * 3, Seq(0.6f, -0.8f, 0.0f)))
       .toDF("vec_id", "embedding")
@@ -141,13 +214,15 @@ class DedupSpec extends SparkSpec {
 
   test("lshTopK recall against brute force is reasonable") {
     val emb = Tables.embeddings(spark, sf()).cache()
-    val q = emb.filter(col("vec_id") < 8)
-    val exact = Knn.bruteForceTopK(emb, q, k = 5)
-      .select("query_id", "nbr_id").as[(Long, Long)].collect().toSet
-    val approx = Knn.lshTopK(emb, q, k = 5)
-      .select("query_id", "nbr_id").as[(Long, Long)].collect().toSet
-    val recall = (exact intersect approx).size.toDouble / exact.size
-    assert(recall > 0.2, s"recall=$recall") // SRP-LSH with 1 table is coarse; >0 proves bucketing works
+    try {
+      val q = emb.filter(col("vec_id") < 8)
+      val exact = Knn.bruteForceTopK(emb, q, k = 5)
+        .select("query_id", "nbr_id").as[(Long, Long)].collect().toSet
+      val approx = Knn.lshTopK(emb, q, k = 5)
+        .select("query_id", "nbr_id").as[(Long, Long)].collect().toSet
+      val recall = (exact intersect approx).size.toDouble / exact.size
+      assert(recall > 0.2, s"recall=$recall") // SRP-LSH with 1 table is coarse; >0 proves bucketing works
+    } finally emb.unpersist()
   }
 
   test("connected components: chains, stars, and singletons resolve to min-id clusters") {

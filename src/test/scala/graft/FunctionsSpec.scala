@@ -305,6 +305,60 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  /** The IVF probe `nearest_centroids` replaced: every set row per
+    * query, ranked by a query-keyed window — (query_id, rank,
+    * cluster_id) for the first `n`.
+    */
+  private def probeWindow(q: DataFrame, set: Column, n: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+      .orderBy(col("c_sim").desc, col("cluster_id").asc)
+    q.select(col("query_id"), col("q_emb"), inline(set))
+      .withColumn("c_sim", VF.cosine(col("q_emb"), col("centroid")))
+      .withColumn("c_rank", row_number().over(w))
+      .filter(col("c_rank") <= n)
+      .select(col("query_id"), col("c_rank"), col("cluster_id"))
+  }
+
+  test("nearest_centroids picks the probe window's cells, in its order") {
+    val rnd = new scala.util.Random(20261019L)
+    val dim = 8
+    def v(xs: Seq[Double]): Vec = Some(xs.map(Some(_)))
+    def gauss(): Seq[Double] = Seq.fill(dim)(rnd.nextGaussian())
+    val base = Seq.fill(12)(gauss())
+    // exact-tie duplicates under larger and NULL ids, a repeated id, a
+    // NULL vector, a vector with a NULL element and one of another width
+    val cents: Seq[CentOpt] =
+      base.zipWithIndex.map { case (c, i) => CentOpt(Some(i), v(c)) } ++ Seq(
+        CentOpt(Some(30), v(base(3))), CentOpt(Some(31), v(base(7))),
+        CentOpt(None, v(base(5))), CentOpt(Some(2), v(gauss())),
+        CentOpt(Some(40), None), CentOpt(Some(41), Some(Some(1.0) +: None +: gauss().drop(2).map(Some(_)))),
+        CentOpt(Some(42), v(Seq.fill(5)(1.0))))
+    val queries: Seq[Vec] = Seq.fill(60)(v(gauss())) ++ base.take(4).map(v) ++
+      Seq(v(Seq.fill(dim)(0.0)), v(Seq.fill(dim)(-0.0)),      // every sim NaN
+        v(Double.NaN +: gauss().tail),                        // NaN again
+        None,                                                 // NULL query
+        Some(None +: gauss().tail.map(Some(_))),              // NULL element
+        v(Seq.fill(5)(1.0)))                                  // one comparable cell
+    val c = cents.size
+    underBothPaths { mode =>
+      for (width <- Seq("float", "double")) {
+        val q = queries.zipWithIndex.map { case (e, i) => (i.toLong, e) }.toDF("query_id", "q_emb")
+          .select(col("query_id"), col("q_emb").cast(s"array<$width>").as("q_emb"))
+        val set = CentroidSet.of(cents.toDF("cluster_id", "centroid"))
+        for (n <- Seq(0, 1, 4, c, c + 5)) {
+          val got = q.select(col("query_id"),
+              posexplode(VF.nearestCentroids(col("q_emb"), set, n)).as(Seq("pos", "cluster_id")))
+            .select(col("query_id"), (col("pos") + 1).as("rank"), col("cluster_id"))
+            .as[(Long, Int, Option[Int])].collect().sorted.toSeq
+          val want = probeWindow(q, set, n).as[(Long, Int, Option[Int])].collect().sorted.toSeq
+          val label = s"$width queries, n = $n, $mode"
+          assert(got.size == queries.size * math.min(n, c), label)
+          assert(got == want, s"$label: ${got.diff(want).take(5)} vs ${want.diff(got).take(5)}")
+        }
+      }
+    }
+  }
+
   test("minhash64 native is bit-identical to the builtin HOF composition") {
     val docs = Tables.documents(spark, sf())
       .select(col("doc_id"), col("text"))

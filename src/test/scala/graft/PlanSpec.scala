@@ -27,25 +27,13 @@ class PlanSpec extends SparkSpec {
     seen.synchronized(seen.toList)
   }
 
-  /** A copy of the embeddings no spec caches, so plans and job counts
-    * over it do not depend on which specs ran before.
+  /** Centroid training runs while an IVF plan is built. Its only
+    * Dataset action is the seed draw: each Lloyd iteration runs its
+    * assignment plan as one RDD job, which is no query.
     */
-  private lazy val lloydCorpus = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lloyd_spec").resolve("emb").toString
-    Tables.embeddings(spark, sf()).write.parquet(dir)
-    graft.sources.Readers.parquet(spark, dir)
-  }
-
-  /** Centroid training runs while an IVF plan is built: these are the
-    * plans of its collected queries, the seed draw then one per Lloyd
-    * iteration. Each iteration also reads the previous centroids, a
-    * local relation, into its set: a jobless LocalTableScan, left out
-    * here.
-    */
-  private lazy val lloydPlans = {
-    val corpus = lloydCorpus // written before the capture starts
+  private lazy val trainingPlans = {
+    val corpus = Tables.embeddings(spark, sf())
     actionPlans(graft.ann.Ivf.centroids(corpus, c = 12))
-      .filterNot(_.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec])
   }
 
   test("q1: ship-date filter reaches the parquet scan") {
@@ -107,11 +95,14 @@ class PlanSpec extends SparkSpec {
         if w.partitionSpec.isEmpty => w
     }
     assert(globalWindows.isEmpty, globalWindows.mkString("\n"))
-    // the seed draw runs at build time, so its plan is the first
+    // the seed draw runs at build time, so its plan is the one
     // collected training query, not part of the gate's plan
-    val seeding = lloydPlans.head
+    assert(trainingPlans.size == 1, trainingPlans.mkString("\n\n"))
+    val seeding = trainingPlans.head
     assert(seeding.toString.contains("TakeOrdered"), seeding.toString)
     assert(!seeding.toString.contains("Window"), seeding.toString)
+    // the corpus file itself: no spec leaves the embeddings cached
+    assert(!seeding.toString.contains("InMemoryTableScan"), seeding.toString)
   }
 
   test("IVF: cell assignment runs the nearest_centroid kernel, not an interpreted fold") {
@@ -236,28 +227,43 @@ class PlanSpec extends SparkSpec {
       s"corpus-wide unpartitioned window:\n${badWindows.mkString("\n")}")
   }
 
-  test("Lloyd: each iteration is one vector_mean aggregate, no positional avg") {
-    // the update is vector_mean grouped by cell; the (cell, pos) avg
-    // of the posexplode chain it replaced is gone. Lloyd runs on the
-    // driver's behalf while the plan is built, so the property is read
-    // from the collected iteration queries, not from a gate's plan.
+  test("Lloyd: each iteration's assignment plan has no exchange and runs the kernel") {
+    // an iteration folds the rows of exactly this plan into per-cell
+    // sums on each partition and combines them in a treeAggregate:
+    // no cell-keyed exchange and no SQL aggregate
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    assert(lloydPlans.size == 3, lloydPlans.mkString("\n\n"))
-    lloydPlans.tail.foreach { p =>
-      assert(p.toString.contains("vector_mean("), p)
-      assert(!p.toString.contains("avg("), p)
-      // one cell-keyed exchange per iteration; the centroids are a
-      // set in the plan, not a collected-and-broadcast frame
-      val shuffles = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
-        def count: Int = collect(p) { case e: ShuffleExchangeExec => e }.size
-      }.count
-      assert(shuffles == 1, s"Lloyd iteration: $shuffles shuffles\n$p")
-      assert(!p.toString.contains("BroadcastNestedLoop"), p)
+    val corpus = Tables.embeddings(spark, sf())
+    val cents = graft.ann.Ivf.centroids(corpus, c = 12, iters = 1)
+    val p = graft.ann.Ivf.index(corpus, cents).queryExecution.executedPlan
+    assert(p.toString.contains("nearest_centroid("), p)
+    assert(!p.toString.contains("vector_mean(") && !p.toString.contains("avg("), p)
+    val shuffles = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+      def count: Int = collect(p) { case e: ShuffleExchangeExec => e }.size
+    }.count
+    assert(shuffles == 0, s"Lloyd assignment: $shuffles shuffles\n$p")
+    assert(!p.toString.contains("BroadcastNestedLoop"), p)
+    // jobs: one for the seed draw, one per iteration
+    val (_, jobs) = Probe.jobsStarted(spark)(graft.ann.Ivf.centroids(corpus, c = 12))
+    assert(jobs == 3, s"Ivf.centroids started $jobs jobs")
+  }
+
+  test("a centroid set over a local relation is read with no job and no query event") {
+    val cents = graft.ann.Ivf.centroids(Tables.embeddings(spark, sf()), c = 8, iters = 1)
+    val (events, jobs) = Probe.jobsStarted(spark)(
+      actionPlans(graft.functions.CentroidSet.of(cents)))
+    assert(jobs == 0 && events.isEmpty, s"$jobs jobs, query events: $events")
+  }
+
+  test("IVF probe: the top-nprobe kernel, no query-keyed Window below the scoring join") {
+    val qe = SparkEntry.queries("q_ann_ivf")(spark, sf()).queryExecution
+    assert(qe.executedPlan.toString.contains("nearest_centroids("), qe.executedPlan)
+    // one Window: the final per-query top-k over the scored pairs
+    val windows = qe.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }
-    // jobs: one for the seed draw, two per iteration (the aggregate's
-    // shuffle stage, then its result)
-    val (_, jobs) = Probe.jobsStarted(spark)(graft.ann.Ivf.centroids(lloydCorpus, c = 12))
-    assert(jobs == 5, s"Ivf.centroids started $jobs jobs")
+    assert(windows.size == 1 &&
+      windows.head.orderSpec.exists(_.child.references.exists(_.name == "sim")),
+      windows.mkString("\n"))
   }
 
   test("IVF plan text does not grow with the centroid set") {

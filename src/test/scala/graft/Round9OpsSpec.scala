@@ -192,22 +192,24 @@ class Round9OpsSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf()).cache()
     val queries = emb.filter(col("vec_id") < 8)
     val hn = Knn.hardNegatives(emb, queries, k = 5).cache()
-    val labels = queries.select("vec_id", "label")
-      .as[(Long, Int)].collect().toMap
-    val rows = hn.select("query_id", "nbr_label", "sim")
-      .as[(Long, Int, Double)].collect()
-    assert(rows.nonEmpty)
-    rows.foreach { case (q, nl, _) =>
-      assert(nl !== labels(q), s"query $q got a same-label 'negative'")
-    }
-    // the unrestricted top-1 dominates the label-restricted top-1
-    val unrestricted = Knn.bruteForceTopK(emb, queries, k = 1)
-      .select("query_id", "sim").as[(Long, Double)].collect().toMap
-    hn.filter(col("rank") === 1).select("query_id", "sim")
-      .as[(Long, Double)].collect().foreach { case (q, s) =>
-        assert(s <= unrestricted(q) + 1e-9, s"query $q: $s > ${unrestricted(q)}")
+    try {
+      val labels = queries.select("vec_id", "label")
+        .as[(Long, Int)].collect().toMap
+      val rows = hn.select("query_id", "nbr_label", "sim")
+        .as[(Long, Int, Double)].collect()
+      assert(rows.nonEmpty)
+      rows.foreach { case (q, nl, _) =>
+        assert(nl !== labels(q), s"query $q got a same-label 'negative'")
       }
-    assert(hn.queryExecution.executedPlan.toString.contains("WindowGroupLimit"))
+      // the unrestricted top-1 dominates the label-restricted top-1
+      val unrestricted = Knn.bruteForceTopK(emb, queries, k = 1)
+        .select("query_id", "sim").as[(Long, Double)].collect().toMap
+      hn.filter(col("rank") === 1).select("query_id", "sim")
+        .as[(Long, Double)].collect().foreach { case (q, s) =>
+          assert(s <= unrestricted(q) + 1e-9, s"query $q: $s > ${unrestricted(q)}")
+        }
+      assert(hn.queryExecution.executedPlan.toString.contains("WindowGroupLimit"))
+    } finally { hn.unpersist(); emb.unpersist() }
   }
 
   test("DSIR plan: scoring pass is a scan-pure narrow projection; no global window/sort") {
