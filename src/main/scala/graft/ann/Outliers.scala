@@ -35,7 +35,9 @@ object Outliers {
     */
   def verdicts(emb: DataFrame, c: Int, p: Double, iters: Int = 2): DataFrame = {
     val cents = Ivf.centroids(emb, c, iters)
-    val idx = Ivf.index(emb, cents).cache()
+    // read twice (the threshold aggregate and the verdict join): a
+    // lazy local checkpoint runs the assignment once, leaving no cache
+    val idx = Ivf.index(emb, cents).localCheckpoint(eager = false)
     val sims = idx.join(broadcast(cents), Seq("cluster_id"))
       .select(col("vec_id"), col("cluster_id"),
         round(VectorFunctions.cosine(col("emb"), col("centroid")), 4).as("sim"))

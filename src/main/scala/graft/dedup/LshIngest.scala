@@ -33,11 +33,9 @@ import graft.sources.Readers
   * dropped by hash luck alone. The batch's own index rows are
   * returned for an idempotent append, making the store incremental.
   *
-  * `screen` caches the batch signature frame (three consumers:
-  * candidate build, verify, delta return); the caller owns the
-  * session cache (the gate harness runs under Bench's per-run
-  * cache clear — library callers should clear or unpersist after
-  * materializing the four frames).
+  * `screen` materializes the batch signature frame once (three
+  * consumers: candidate build, verify, delta return) as a lazy local
+  * checkpoint, so it leaves no cache entry behind.
   */
 object LshIngest {
 
@@ -135,7 +133,7 @@ object LshIngest {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val (batchBands, batchSigsRaw) = indexRows(incoming, idCol, textCol,
       shingleK, numHashes, numBands)
-    val batchSigs = batchSigsRaw.cache()
+    val batchSigs = batchSigsRaw.localCheckpoint(eager = false)
     val storedBandsRaw = Readers.parquet(spark, s"$indexPath/bands")
     // one pass, one exchange: the window count applies the bucket
     // bound on the index's CURRENT state (counting only — a

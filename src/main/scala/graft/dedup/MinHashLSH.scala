@@ -135,7 +135,9 @@ object MinHashLSH {
                      shingleK: Int = 3, numHashes: Int = 64,
                      numBands: Int = 16, threshold: Double = 0.5): DataFrame = {
     val rowsPerBand = numHashes / numBands
-    val sigs = signatures(docs, idCol, textCol, shingleK, numHashes).cache()
+    // read by the bands, both verify joins and the per-doc frame
+    val sigs = signatures(docs, idCol, textCol, shingleK, numHashes)
+      .localCheckpoint(eager = false)
     val pairs = candidatePairs(bands(sigs, numBands, rowsPerBand))
     val verified = verifiedPairs(sigs, pairs, threshold = 0.0)
     val sym = verified.select(col("id_a").as("doc_id"), col("id_b").as("other_id"), col("jaccard"))

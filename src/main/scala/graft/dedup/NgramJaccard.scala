@@ -96,8 +96,9 @@ object NgramJaccard {
   /** Per-document best-match summary (one row per doc). */
   def summary(docs: DataFrame, idCol: String, textCol: String,
               k: Int = 3, maxDf: Int = 50): DataFrame = {
-    // cached: the sym union below evaluates the pair pipeline twice
-    val p = pairs(docs, idCol, textCol, k, threshold = 0.0, maxDf = maxDf).cache()
+    // both sym union branches project this one subtree, so they share
+    // its exchanges
+    val p = pairs(docs, idCol, textCol, k, threshold = 0.0, maxDf = maxDf)
     val sym = p.select(col("id_a").as("doc_id"), col("id_b").as("other_id"), col("jaccard"))
       .union(p.select(col("id_b").as("doc_id"), col("id_a").as("other_id"), col("jaccard")))
     val best = sym.groupBy("doc_id").agg(

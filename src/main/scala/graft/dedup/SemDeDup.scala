@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * regardless of corpus size. In Spark terms: the centroid set is
   * trained on the driver ([[graft.ann.Ivf.centroids]], C·dim
   * doubles) and rides in the assignment plan; the self-join keyed on
-  * cluster_id is a hash join of the cached index against itself —
+  * cluster_id is a hash join of the checkpointed index against itself —
   * broadcast, with no exchange, while the index is under the
   * broadcast threshold (the gate and benchmark sizes), one
   * cluster-keyed shuffle per side above it — and the pair grid never
@@ -50,7 +50,7 @@ object SemDeDup {
 
   /** The cell count the paper's C ∝ n rule implies for this runtime
     * shape. Inline cost is `n·c` assignment cosines (ONCE — the
-    * index is cached below; Lloyd trains on a capped sample) plus
+    * index is checkpointed below; Lloyd trains on a capped sample) plus
     * `n²/c` pairwise cosines; the sum is minimized at c = √n, where
     * BOTH terms are O(n^1.5) — a fixed c turns the pairwise term
     * quadratic (the r9 builder bench measured c = 8 at 200k
@@ -92,13 +92,13 @@ object SemDeDup {
     verdictsWith(emb, Ivf.centroids(emb, c, iters), eps)
 
   private def verdictsWith(emb: DataFrame, cents: DataFrame, eps: Double): DataFrame = {
-    // cache the assignment too: the plan below references idx THREE
+    // materialize the assignment once: the plan below reads idx THREE
     // times (both self-join sides + the verdict select), and the n·c
-    // assignment pass is the second-biggest cost after the pair grid —
-    // uncached it would run three times (builder A/B at 200k vectors:
-    // auto-C alone 17.1 s; + this cache and float-width arrays
-    // ~12.4 s)
-    val idx = Ivf.index(emb, cents).cache() // (vec_id, cluster_id, emb), no shuffle
+    // assignment pass is the second-biggest cost after the pair grid
+    // (builder A/B at 200k vectors: auto-C alone 17.1 s; + a cache
+    // here and float-width arrays ~12.4 s). A lazy local checkpoint
+    // starts no job here (no exchange) and leaves no cache entry.
+    val idx = Ivf.index(emb, cents).localCheckpoint(eager = false) // (vec_id, cluster_id, emb)
     // probe side renames ALL columns (incl. the join key): a
     // self-join keyed on df("c") === df2("c") makes Spark detect and
     // rewrite a trivially-true predicate — correct, but the rename

@@ -25,33 +25,12 @@ object SimHash {
 
   /** 64-bit simhash of whitespace tokens via the native one-pass
     * `simhash64` expression (graft.functions.SimHash64, registered by
-    * GraftExtensions) — bit-identical to the HOF composition below,
-    * but hashes each token once instead of 64 times.
+    * GraftExtensions): bit-identical to the higher-order-function
+    * composition ExtensionsSpec checks it against, but hashes each
+    * token once instead of 64 times.
     */
   def simhash(textCol: String): Column =
     call_function("simhash64", graft.functions.TextFunctions.tokens(col(textCol)))
-
-  /** Composable-builtin form, kept as the spec cross-check for the
-    * native expression.
-    *
-    * The bit-index lambda variable feeds the shift amount via
-    * `call_function` ("shiftright"/"shiftleft" accept a column shift
-    * amount even though the typed `functions.shiftright` wrapper only
-    * takes an Int). The fingerprint assembles via shiftleft + bitwise
-    * OR — no `acc*2+bit` multiply, which would ANSI-overflow when bit
-    * 63 is set. (The nested-CASE SQL-text form of this expression
-    * trips a Spark 4.1 parser bug, hence no `expr()`.)
-    */
-  def simhashHof(textCol: String): Column = {
-    val toks = graft.functions.TextFunctions.tokens(col(textCol))
-    val bits = transform(sequence(lit(0), lit(63)), i => {
-      val vote = aggregate(toks, lit(0L), (acc, t) =>
-        acc + when(call_function("shiftright", xxhash64(t), i)
-          .bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L))
-      when(vote > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))
-    })
-    aggregate(bits, lit(0L), (acc, b) => acc.bitwiseOR(b))
-  }
 
   /** (doc_id, simhash, chunk_id, chunk_value) — 4 rows per doc. */
   def chunked(fps: DataFrame): DataFrame =
@@ -114,10 +93,11 @@ object SimHash {
     */
   def summary(docs: DataFrame, idCol: String, textCol: String,
               maxHamming: Int = 3): DataFrame = {
-    // fps cached: consumed by pair generation AND the final left join;
-    // pairs cached: the sym union evaluates it twice
-    val fps = fingerprints(docs, idCol, textCol).cache()
-    val pairs = nearDupPairsFromFps(fps, maxHamming).cache()
+    // fps materialized once: consumed by pair generation AND the final
+    // left join; both sym union branches project one pairs subtree, so
+    // they share its exchanges
+    val fps = fingerprints(docs, idCol, textCol).localCheckpoint(eager = false)
+    val pairs = nearDupPairsFromFps(fps, maxHamming)
     val sym = pairs.select(col("id_a").as("doc_id"), col("id_b").as("other_id"), col("hamming"))
       .union(pairs.select(col("id_b").as("doc_id"), col("id_a").as("other_id"), col("hamming")))
     val best = sym.groupBy("doc_id").agg(

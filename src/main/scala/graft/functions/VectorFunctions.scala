@@ -23,14 +23,6 @@ object VectorFunctions {
     aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => x * y),
       lit(0.0), (acc, x) => acc + x)
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Reference (composable-builtin) cosine — three operand walks plus
-    * an intermediate array; kept as the spec cross-check for the
-    * native expression.
-    */
-  def cosineHof(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Native single-pass codegen'd cosine (graft.functions.
     * CosineSimilarity, registered by GraftExtensions) — the hot-loop
     * form ANN scoring uses.

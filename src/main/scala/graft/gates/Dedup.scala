@@ -223,7 +223,7 @@ object Dedup {
           concat_ws(" ", reverse(split(trim(lower(col("text"))), "\\s+")))
             .as("text"),
           lit("fresh_reversed").as("batch_src"))
-      val incoming = recrawl.unionByName(fresh).cache()
+      val incoming = recrawl.unionByName(fresh).localCheckpoint(eager = false)
       val (novel, dups, _, _) = graft.dedup.LshIngest.screen(
         s, incoming, "doc_id", "text", base, threshold = 0.5)
       incoming.groupBy("batch_src").agg(count(lit(1)).as("n_in"))

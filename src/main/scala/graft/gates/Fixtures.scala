@@ -41,6 +41,19 @@ object Fixtures {
     */
   private[gates] def pround = graft.functions.Rounding.pround _
 
+  /** The 1-row frame (`__off`) holding the smallest power of 10 above
+    * max(`idCol`): the shift that moves planted rows into an id
+    * namespace disjoint from `df`'s, computed in the plan (no driver
+    * round-trip) and identically in the oracle SQL. An empty frame
+    * yields NULL max, so the offset falls back to 1e6; a negative max
+    * would count its '-' sign as a digit, so it is clamped to 0
+    * (offset 10, still above every id).
+    */
+  private[gates] def idOffset(df: DataFrame, idCol: String): DataFrame =
+    df.agg(coalesce(pow(lit(10.0),
+      length(greatest(coalesce(max(col(idCol)), lit(0L)), lit(0L))
+        .cast("string"))).cast("long"), lit(1000000L)).as("__off"))
+
   /** Re-crawl a deterministic 10% of docs under shifted ids: the
     * 500-doc gate corpora have no naturally planted duplicates
     * (generator rate is 1/625), so dedup gates would verify a no-op.
@@ -56,16 +69,12 @@ object Fixtures {
   private[gates] def withRecrawls(docs: DataFrame): DataFrame = {
     // One materialized scan feeds all three consumers (offset agg, base
     // branch, recrawl branch) — unstaged, the gate paid three document
-    // scans and benched the planting, not the dedup operator. The cache
-    // is per-gate-run (Bench clears the cache manager between runs).
-    // coalesce/greatest guard: an empty corpus yields NULL max (offset
-    // falls back to 1e6) and a negative max would count its '-' sign as
-    // a digit (clamped to 0 → offset 10, still above every id).
-    val cached = docs.cache()
-    val off = cached.agg(coalesce(pow(lit(10.0),
-      length(greatest(coalesce(max(col("doc_id")), lit(0L)), lit(0L))
-        .cast("string"))).cast("long"), lit(1000000L)).as("__off"))
-    cached.unionByName(cached.filter(pmod(col("doc_id"), lit(10L)) === 3L)
+    // scans and benched the planting, not the dedup operator. A lazy
+    // local checkpoint, not a cache: no later query can match it, and
+    // its blocks go when the frame does.
+    val ckpt = docs.localCheckpoint(eager = false)
+    val off = idOffset(ckpt, "doc_id")
+    ckpt.unionByName(ckpt.filter(pmod(col("doc_id"), lit(10L)) === 3L)
       .crossJoin(broadcast(off))
       .withColumn("doc_id", col("doc_id") + col("__off"))
       .drop("__off"))
@@ -90,10 +99,8 @@ object Fixtures {
     * per (doc, i) so they never collide across plantings.
     */
   private[gates] def withNearRecrawls(docs: DataFrame): DataFrame = {
-    val cached = docs.cache()
-    val off = cached.agg(coalesce(pow(lit(10.0),
-      length(greatest(coalesce(max(col("doc_id")), lit(0L)), lit(0L))
-        .cast("string"))).cast("long"), lit(1000000L)).as("__off"))
+    val ckpt = docs.localCheckpoint(eager = false)
+    val off = idOffset(ckpt, "doc_id")
     def letters(c: Column): Column =
       translate(c.cast("string"), "0123456789", "abcdefghij")
     val g = ceil(lit(1.2) * size(split(trim(lower(col("text"))), "\\s+")))
@@ -102,13 +109,13 @@ object Fixtures {
       array_join(transform(sequence(lo, hi),
         i => concat(lit("zz"), letters(col("doc_id")), lit("x"), letters(i))), " ")
     def chainBranch(mult: Int, textCol: Column): DataFrame =
-      cached.filter(pmod(col("doc_id"), lit(50L)) === 11L)
+      ckpt.filter(pmod(col("doc_id"), lit(50L)) === 11L)
         .withColumn("text", textCol)
         .crossJoin(broadcast(off))
         .withColumn("doc_id", col("doc_id") + lit(mult.toLong) * col("__off"))
         .drop("__off")
-    cached
-      .unionByName(cached.filter(pmod(col("doc_id"), lit(25L)) === 4L)
+    ckpt
+      .unionByName(ckpt.filter(pmod(col("doc_id"), lit(25L)) === 4L)
         .crossJoin(broadcast(off))
         .withColumn("doc_id", col("doc_id") + col("__off"))
         .drop("__off")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators._
-import Fixtures.{withRecrawls, pround, upsertMergeSql, pagerankOracleSql}
+import Fixtures.{idOffset, pround, upsertMergeSql, pagerankOracleSql}
 
 /** Family G, `graft.operators` table and event analytics: cubes
   * and windows, incremental aggregates, snapshots and SCD2,
@@ -237,13 +237,11 @@ object TableOps {
       // %97, re-keyed inserts from %89). Insert keys shift by the
       // smallest power of 10 above max(o_orderkey) — corpus-derived,
       // so the synthetic namespace stays disjoint at any SF (see
-      // withRecrawls).
+      // Fixtures.idOffset).
       val base = Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-        .cache() // one scan for offset + base + both v2 branches
-      val off = base.agg(coalesce(pow(lit(10.0),
-        length(greatest(coalesce(max(col("o_orderkey")), lit(0L)), lit(0L))
-          .cast("string"))).cast("long"), lit(1000000L)).as("__off"))
+        .localCheckpoint(eager = false) // one scan for offset + base + both v2 branches
+      val off = idOffset(base, "o_orderkey")
       val v2 = base.filter(pmod(col("o_orderkey"), lit(101)) =!= 0)
         .withColumn("o_totalprice",
           when(pmod(col("o_orderkey"), lit(97)) === 0, col("o_totalprice") * 2)

@@ -63,26 +63,26 @@ object HeavyHitters {
     // whole point is the vocab-independent per-partition blob, so
     // building it from the counted vocabulary would fake the shape)
     val exact = topTerms(docs, textCol, k).cache()
-    // k-row broadcast probe table: (term, est) straight off the
-    // sketch. Explicit schema (not a product-encoder toDF): the
-    // runtime TypeTag reflection behind implicits breaks under REPL
-    // classloaders, and a literal schema needs no reflection at all.
-    val probes = exact.select("term").collect().map(_.getString(0)).toSeq
-    val est = spark.createDataFrame(
-      java.util.Arrays.asList(probes.map(t => Row(t, cms.estimateCount(t))): _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("term", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("est", org.apache.spark.sql.types.LongType))))
-    val report = exact.join(broadcast(est), Seq("term"))
-      .select(col("term"), col("cnt"),
-        (col("est") >= col("cnt")).as("est_ge_exact"),
-        (col("est") <= col("cnt") + lit(slack)).as("est_within_eps"))
-      .orderBy(col("cnt").desc, col("term").asc)
-    // k-row report → materialize eagerly and release the top-k cache
-    // (the madReport/SourceOverlap contract: no session-lifetime
-    // cache entries left for callers that never clear the manager)
-    val rows = report.collectAsList()
-    exact.unpersist(blocking = false)
-    spark.createDataFrame(rows, report.schema)
+    // k-row report → materialized eagerly and the top-k cache released
+    // here (the madReport/SourceOverlap contract: no cache entry
+    // outlives the call)
+    try {
+      // k-row broadcast probe table: (term, est) straight off the
+      // sketch. Explicit schema (not a product-encoder toDF): the
+      // runtime TypeTag reflection behind implicits breaks under REPL
+      // classloaders, and a literal schema needs no reflection at all.
+      val probes = exact.select("term").collect().map(_.getString(0)).toSeq
+      val est = spark.createDataFrame(
+        java.util.Arrays.asList(probes.map(t => Row(t, cms.estimateCount(t))): _*),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("term", org.apache.spark.sql.types.StringType),
+          org.apache.spark.sql.types.StructField("est", org.apache.spark.sql.types.LongType))))
+      val report = exact.join(broadcast(est), Seq("term"))
+        .select(col("term"), col("cnt"),
+          (col("est") >= col("cnt")).as("est_ge_exact"),
+          (col("est") <= col("cnt") + lit(slack)).as("est_within_eps"))
+        .orderBy(col("cnt").desc, col("term").asc)
+      spark.createDataFrame(report.collectAsList(), report.schema)
+    } finally exact.unpersist(blocking = false)
   }
 }

@@ -79,56 +79,57 @@ object PageRank {
     val edgesIn = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
     val nodesP = nodesL.persist()
-    val n = nodesP.count().max(1L)
-    // hybrid small-graph path: node count is already known (the base
-    // rank needs it), so the extra edge-count job runs ONLY in the
-    // small-n regime; both bounds inside → collect, iterate exactly
-    // (same integral `div` recursion — Long / truncates identically
-    // on the non-negative operands used here), return a local frame.
-    // Set localNodeLimit = 0 to force the distributed path (the spec
-    // asserts both paths bit-equal).
-    if (n <= localNodeLimit) {
-      val eCount = edgesIn.count()
-      if (eCount <= localEdgeLimit) {
-        val nodeArr = nodesP.select(col("node")).collect().map(_.getLong(0))
-        val edgeArr = edgesIn.collect().map(r => (r.getLong(0), r.getLong(1)))
-        nodesP.unpersist(blocking = false)
-        val spark = nodes.sparkSession
-        import spark.implicits._
-        return localRanks(nodeArr, edgeArr, n, iterations, dampNano)
-          .toSeq.toDF("node", "rank")
+    try {
+      val n = nodesP.count().max(1L)
+      // hybrid small-graph path: node count is already known (the base
+      // rank needs it), so the extra edge-count job runs ONLY in the
+      // small-n regime; both bounds inside → collect, iterate exactly
+      // (same integral `div` recursion — Long / truncates identically
+      // on the non-negative operands used here), return a local frame.
+      // Set localNodeLimit = 0 to force the distributed path (the spec
+      // asserts both paths bit-equal).
+      if (n <= localNodeLimit) {
+        val eCount = edgesIn.count()
+        if (eCount <= localEdgeLimit) {
+          val nodeArr = nodesP.select(col("node")).collect().map(_.getLong(0))
+          val edgeArr = edgesIn.collect().map(r => (r.getLong(0), r.getLong(1)))
+          val spark = nodes.sparkSession
+          import spark.implicits._
+          return localRanks(nodeArr, edgeArr, n, iterations, dampNano)
+            .toSeq.toDF("node", "rank")
+        }
       }
-    }
-    val base = (1000000000L - dampNano) / n
-    val outd = edgesIn.groupBy("src").agg(count(lit(1)).as("deg"))
-    // degree-annotated edges, partitioned ONCE on the per-iteration
-    // join key so only the rank frame moves each round
-    val e = edgesIn.join(outd, "src")
-      .repartition(col("src")).persist()
-    // integral division via SQL `div` throughout — floor(a/b) through
-    // doubles can round a whole quotient down near 2^53; div cannot
-    var r = nodesP.select(col("node"), lit(1000000000L / n).as("rank"))
-    (1 to iterations).foreach { i =>
-      val contrib = e.join(r, col("src") === col("node"))
-        .select(col("dst"), expr("rank div deg").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("cs"))
-      // the node-universe side is the PERSISTED node table, not the
-      // rank frame: self-referencing r here duplicates the whole
-      // un-checkpointed prior-iteration chain into both join inputs
-      // (A/B'd at sf10: 12.3 s vs 10.1 s — ReusedExchange does not
-      // collapse the clones across the aggregate boundary)
-      val next = nodesP.join(contrib, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(base) +
-            expr(s"($dampNano * coalesce(cs, 0L)) div 1000000000"))
-            .as("rank"))
-      r = if (i % checkpointEvery == 0 || i == iterations)
-        next.localCheckpoint(true)
-      else next
-    }
-    e.unpersist(blocking = false)
-    nodesP.unpersist(blocking = false)
-    r
+      val base = (1000000000L - dampNano) / n
+      val outd = edgesIn.groupBy("src").agg(count(lit(1)).as("deg"))
+      // degree-annotated edges, partitioned ONCE on the per-iteration
+      // join key so only the rank frame moves each round
+      val e = edgesIn.join(outd, "src")
+        .repartition(col("src")).persist()
+      try {
+        // integral division via SQL `div` throughout — floor(a/b) through
+        // doubles can round a whole quotient down near 2^53; div cannot
+        var r = nodesP.select(col("node"), lit(1000000000L / n).as("rank"))
+        (1 to iterations).foreach { i =>
+          val contrib = e.join(r, col("src") === col("node"))
+            .select(col("dst"), expr("rank div deg").as("c"))
+            .groupBy("dst").agg(sum(col("c")).as("cs"))
+          // the node-universe side is the PERSISTED node table, not the
+          // rank frame: self-referencing r here duplicates the whole
+          // un-checkpointed prior-iteration chain into both join inputs
+          // (A/B'd at sf10: 12.3 s vs 10.1 s — ReusedExchange does not
+          // collapse the clones across the aggregate boundary)
+          val next = nodesP.join(contrib, col("node") === col("dst"), "left")
+            .select(col("node"),
+              (lit(base) +
+                expr(s"($dampNano * coalesce(cs, 0L)) div 1000000000"))
+                .as("rank"))
+          r = if (i % checkpointEvery == 0 || i == iterations)
+            next.localCheckpoint(true)
+          else next
+        }
+        r
+      } finally e.unpersist(blocking = false)
+    } finally nodesP.unpersist(blocking = false)
   }
 
   /** Driver-local replay of the exact distributed recursion: per

@@ -57,29 +57,30 @@ object QualityClassifier {
             dims: Int = 4096, iters: Int = 30, lr: Double = 4.0,
             reg: Double = 1e-6): Model = {
     val base = tokenized(docs, textCol, Seq(labelCol)).cache()
-    val n = base.count().toDouble
-    val coef = new Array[Double](dims)
-    var intercept = 0.0
-    var i = 0
-    while (i < iters) {
-      val resid = base.withColumn("__resid",
-        col(labelCol) - lit(1.0) / (lit(1.0) + exp(-marginCol(coef, intercept, dims))))
-      // gradient: one token-keyed partial agg, ≤D rows on the exchange
-      val grad = resid
-        .select(col("__resid"), col("__len"), explode(col("__toks")).as("__t"))
-        .groupBy(pmod(hash(col("__t")), lit(dims)).as("__idx"))
-        .agg(sum(col("__resid") / col("__len")).as("__g"))
-        .collect()
-      val db = resid.agg(sum("__resid")).head().getDouble(0)
-      grad.foreach { r =>
-        val j = r.getInt(0)
-        coef(j) += lr * (r.getDouble(1) / n - reg * coef(j))
+    try {
+      val n = base.count().toDouble
+      val coef = new Array[Double](dims)
+      var intercept = 0.0
+      var i = 0
+      while (i < iters) {
+        val resid = base.withColumn("__resid",
+          col(labelCol) - lit(1.0) / (lit(1.0) + exp(-marginCol(coef, intercept, dims))))
+        // gradient: one token-keyed partial agg, ≤D rows on the exchange
+        val grad = resid
+          .select(col("__resid"), col("__len"), explode(col("__toks")).as("__t"))
+          .groupBy(pmod(hash(col("__t")), lit(dims)).as("__idx"))
+          .agg(sum(col("__resid") / col("__len")).as("__g"))
+          .collect()
+        val db = resid.agg(sum("__resid")).head().getDouble(0)
+        grad.foreach { r =>
+          val j = r.getInt(0)
+          coef(j) += lr * (r.getDouble(1) / n - reg * coef(j))
+        }
+        intercept += lr * db / n
+        i += 1
       }
-      intercept += lr * db / n
-      i += 1
-    }
-    base.unpersist()
-    Model(coef, intercept, dims)
+      Model(coef, intercept, dims)
+    } finally base.unpersist()
   }
 
   /** Per-document `quality_prob` in [0,1] plus the hard `predicted`
@@ -173,31 +174,32 @@ object QualityClassifier {
     val bucket = (t: Column) =>
       conv(substring(md5(t.cast("binary")), 1, 8), 16, 10).cast("long") % dims
     val base = tokenized(docs, textCol, Seq(labelCol)).cache()
-    val n = math.max(base.count(), 1L)
     val w = new Array[Long](dims)
     var intercept = 0L
-    var i = 0
-    while (i < iters) {
-      val margin = aggregate(col("__toks"), lit(intercept),
-        (acc, t) => acc + element_at(lit(w), (bucket(t) + 1).cast("int")))
-      // p_micro = 1e6·σfast(m/1000) = 500000 + trunc(500000·m / (1000+|m|));
-      // bounds: |m| ≤ n_tok·max|w| ≲ 5e6 ⇒ numerator ≤ 2.5e12 < 2^53
-      val pMicro = lit(500000L) +
-        tdiv(lit(500000L) * margin, lit(1000L) + abs(margin))
-      val resid = base.withColumn("__resid",
-        col(labelCol).cast("long") * lit(1000000L) - pMicro)
-      val grad = resid
-        .select(col("__resid"), explode(col("__toks")).as("__t"))
-        .groupBy(bucket(col("__t")).as("__b"))
-        .agg(sum(col("__resid")).as("__g"))
-        .collect()
-      val db = resid.agg(coalesce(sum(col("__resid")), lit(0L)))
-        .head().getLong(0)
-      grad.foreach { r => w(r.getLong(0).toInt) += r.getLong(1) / (n * 1000L) }
-      intercept += db / (n * 1000L)
-      i += 1
-    }
-    base.unpersist()
+    try {
+      val n = math.max(base.count(), 1L)
+      var i = 0
+      while (i < iters) {
+        val margin = aggregate(col("__toks"), lit(intercept),
+          (acc, t) => acc + element_at(lit(w), (bucket(t) + 1).cast("int")))
+        // p_micro = 1e6·σfast(m/1000) = 500000 + trunc(500000·m / (1000+|m|));
+        // bounds: |m| ≤ n_tok·max|w| ≲ 5e6 ⇒ numerator ≤ 2.5e12 < 2^53
+        val pMicro = lit(500000L) +
+          tdiv(lit(500000L) * margin, lit(1000L) + abs(margin))
+        val resid = base.withColumn("__resid",
+          col(labelCol).cast("long") * lit(1000000L) - pMicro)
+        val grad = resid
+          .select(col("__resid"), explode(col("__toks")).as("__t"))
+          .groupBy(bucket(col("__t")).as("__b"))
+          .agg(sum(col("__resid")).as("__g"))
+          .collect()
+        val db = resid.agg(coalesce(sum(col("__resid")), lit(0L)))
+          .head().getLong(0)
+        grad.foreach { r => w(r.getLong(0).toInt) += r.getLong(1) / (n * 1000L) }
+        intercept += db / (n * 1000L)
+        i += 1
+      }
+    } finally base.unpersist()
     import spark.implicits._
     ((-1L, intercept) +: (0 until dims).map(b => (b.toLong, w(b))))
       .toDF("bucket", "w_milli")

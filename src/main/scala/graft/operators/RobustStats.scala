@@ -37,32 +37,30 @@ object RobustStats {
     * (n, median_cents, mad_cents, n_outliers, outlier_frac 6dp).
     */
   def madReport(df: DataFrame, valueCol: String): DataFrame = {
-    val (hist, report) = madReportFrame(df, valueCol)
-    // the report is ONE row, so it is materialized eagerly and the
-    // bounded histogram cache released here — a lazy return would pin
-    // a session-lifetime cache entry per distinct input plan on any
-    // caller that (unlike Bench) never clears the cache manager
-    val row = report.head()
-    hist.unpersist(blocking = false)
-    df.sparkSession.createDataFrame(
-      java.util.Collections.singletonList(row), report.schema)
-  }
-
-  /** The lazy (histogram, report) pair behind [[madReport]] — exposed
-    * so PlanSpec can assert the report's plan shape (the public entry
-    * point returns an eagerly-materialized local row). Caller owns
-    * the histogram's unpersist.
-    */
-  private[graft] def madReportFrame(df: DataFrame, valueCol: String): (DataFrame, DataFrame) = {
-    val cents = floor(col(valueCol) * lit(100.0) + lit(0.5)).cast("long")
     // cached: the med/dev/tally branches prune different columns, so
     // their hist subtrees differ and ReusedExchange does NOT collapse
     // them — uncached, this report re-scanned the corpus 6 times
     // (measured). The cache is |distinct cent values|-sized, bounded
-    // by the value space at any corpus size.
-    val hist = df.select(cents.as("c"))
+    // by the value space at any corpus size. The report is ONE row, so
+    // it is materialized eagerly and the cache released here.
+    val hist = histogram(df, valueCol).cache()
+    try {
+      val report = madReportFrame(hist)
+      df.sparkSession.createDataFrame(
+        java.util.Collections.singletonList(report.head()), report.schema)
+    } finally hist.unpersist(blocking = false)
+  }
+
+  /** The (cent value `c`, count `n`) histogram [[madReport]] folds. */
+  private[graft] def histogram(df: DataFrame, valueCol: String): DataFrame =
+    df.select(floor(col(valueCol) * lit(100.0) + lit(0.5)).cast("long").as("c"))
       .groupBy("c").agg(count(lit(1)).as("n"))
-      .cache()
+
+  /** The lazy report behind [[madReport]] over a [[histogram]] —
+    * exposed so PlanSpec can assert the report's plan shape (the
+    * public entry point returns an eagerly-materialized local row).
+    */
+  private[graft] def madReportFrame(hist: DataFrame): DataFrame = {
     // rank-exact median: smallest value whose running count passes
     // floor(0.5·(n−1)); the unpartitioned windows run over DISTINCT
     // values, never rows
@@ -83,7 +81,7 @@ object RobustStats {
     val mad = dcum.agg(min(when(
         col("cum") - 1 >= floor(lit(0.5) * (col("tot") - 1)), col("d")))
       .as("mad"))
-    val report = dev.crossJoin(broadcast(mad)).crossJoin(broadcast(med))
+    dev.crossJoin(broadcast(mad)).crossJoin(broadcast(med))
       .agg(
         sum("n").as("n"),
         max(col("med")).as("median_cents"),
@@ -94,6 +92,5 @@ object RobustStats {
         col("n_outliers"),
         (floor(col("n_outliers").cast("double") / col("n") * lit(1e6)
           + lit(0.5)) / lit(1e6)).as("outlier_frac"))
-    (hist, report)
   }
 }

@@ -51,9 +51,11 @@ object SketchStore {
     store.agg(sum(col("n_rows")).as("n_rows"),
       hll_union_agg(col("sketch")).as("sketch"))
 
-  /** Estimates from a store: (partCol?, n_rows, distinct_est). */
+  /** Estimates from a store: (partCol?, n_rows, distinct_est), each
+    * read as a merged sketch's: a store straight from [[build]] gives
+    * the estimate its merged form would, at any partitioning.
+    */
   def estimates(store: DataFrame): DataFrame =
-    store.withColumn("distinct_est",
-        hll_sketch_estimate(col("sketch")).cast("long"))
+    store.withColumn("distinct_est", SourceOverlap.mergedEstimate(col("sketch")))
       .drop("sketch")
 }

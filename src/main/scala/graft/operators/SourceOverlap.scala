@@ -174,7 +174,7 @@ object SourceOverlap {
     */
   private def pairEstimates(sketches: DataFrame): DataFrame = {
     val perSrc = sketches.select(col("src"), col("sk"),
-      hll_sketch_estimate(col("sk")).cast("long").as("est_n"))
+      mergedEstimate(col("sk")).as("est_n"))
     val a = perSrc.select(col("src").as("src_a"), col("sk").as("sk_a"),
       col("est_n").as("est_a"))
     val b = perSrc.select(col("src").as("src_b"), col("sk").as("sk_b"),
@@ -182,7 +182,17 @@ object SourceOverlap {
     a.join(broadcast(b), col("src_a") < col("src_b"))
       .select(col("src_a"), col("src_b"), col("est_a"), col("est_b"),
         (col("est_a") + col("est_b") -
-          hll_sketch_estimate(hll_union(col("sk_a"), col("sk_b")))
-            .cast("long")).as("est_shared"))
+          mergedEstimate(hll_union(col("sk_a"), col("sk_b")))).as("est_shared"))
   }
+
+  /** An HLL sketch's estimate read through a union with itself: the
+    * merged (composite) estimate over its registers alone, the same at
+    * any partition count. A sketch built in one buffer keeps
+    * DataSketches' HIP estimator, and one a union promoted from coupon
+    * mode keeps an estimate that depends on the coupons' insertion
+    * order; both differ from it within HLL error ("Approximation
+    * Algorithms for Large Scale Data Analysis", PODS 2021).
+    */
+  private[operators] def mergedEstimate(sk: Column): Column =
+    hll_sketch_estimate(hll_union(sk, sk)).cast("long")
 }

@@ -65,20 +65,23 @@ object CorpusPrep {
            minQuality: Double, allowedLangs: Seq[String],
            minTokens: Int): DataFrame = {
     val scored = scoredFrame(docs, idCol, textCol, stopwords, langMarkers)
-      // cache: (a) the gate predicates would otherwise PUSH DOWN past
-      // the repartition and re-inline the full clean+stat expressions
-      // into the (single-task) scan stage; against a cached relation
-      // they evaluate on materialized columns. (b) exact dedup
-      // consumes this frame twice (group + semi-join), so the pipeline
-      // runs once, not three times.
-      .cache()
+      // materialized: (a) the gate predicates would otherwise PUSH
+      // DOWN past the repartition and re-inline the full clean+stat
+      // expressions into the (single-task) scan stage; against a
+      // materialized relation they evaluate on stored columns. (b)
+      // exact dedup consumes this frame twice (group + semi-join), so
+      // the pipeline runs once, not three times. A lazy local
+      // checkpoint leaves no cache entry; over the spread's exchange
+      // it runs that map stage here. Local checkpoints die with their
+      // executor, so [[prepStaged]] stays the 100 TB form.
+      .localCheckpoint(eager = false)
     gateAndDedup(scored, minQuality, allowedLangs, minTokens)
   }
 
   /** The 100 TB form of [[prep]]: the scored corpus is STAGED TO
-    * STORAGE (write barrier) instead of executor memory — a cache of
-    * the full scored corpus doesn't fit at scale, evicts under
-    * pressure (re-running the regex pipeline), and dies with the job;
+    * STORAGE (write barrier) instead of executor blocks — a checkpoint
+    * of the full scored corpus doesn't fit executor storage at scale,
+    * and it dies with its executor and with the job;
     * a parquet stage is durable, spillless, column-pruned on re-read,
     * and doubles as the pipeline's checkpoint for downstream jobs.
     * Same semantics (oracle-checked against the same SQL as prep).

@@ -33,6 +33,12 @@ class FunctionsSpec extends SparkSpec {
       }
     }
 
+  /** The composable-builtin cosine the native `cosine_sim` replaced:
+    * three operand walks plus an intermediate array.
+    */
+  private def cosineHof(a: Column, b: Column): Column =
+    VF.dot(a, b) / (sqrt(VF.dot(a, a)) * sqrt(VF.dot(b, b)))
+
   /** The r13 IVF cell assignment, an interpreted `aggregate` struct
     * fold — the reference `nearest_centroid` must reproduce.
     */
@@ -135,7 +141,7 @@ class FunctionsSpec extends SparkSpec {
     val pairs = emb.as("l").crossJoin(emb.as("r"))
       .select(
         VF.cosine(col("l.embedding"), col("r.embedding")).as("native"),
-        VF.cosineHof(col("l.embedding"), col("r.embedding")).as("hof"))
+        cosineHof(col("l.embedding"), col("r.embedding")).as("hof"))
       .as[(Double, Double)].collect()
     assert(pairs.nonEmpty)
     pairs.foreach { case (n, h) => assert(math.abs(n - h) < 1e-12, s"$n vs $h") }

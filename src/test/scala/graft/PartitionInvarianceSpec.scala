@@ -35,7 +35,8 @@ class PartitionInvarianceSpec extends SparkSpec {
     "q_vocab_drift",       // nano-integerized JS divergence sums
     "q_retrieval_eval",    // micro-integerized BM25 sums + ranks
     "q_dedup_clusters",    // iterative connected components
-    "q_bpe_train")         // trained vocabulary (merge order)
+    "q_bpe_train",         // trained vocabulary (merge order)
+    "q_overlap_sketch")    // HLL estimates (sketch estimator state)
 
   private def canonical(name: String): Seq[String] = {
     val df = SparkEntry.queries(name)(spark, sf())
@@ -50,10 +51,13 @@ class PartitionInvarianceSpec extends SparkSpec {
       conf.set("spark.sql.shuffle.partitions", sp0)
       conf.set("spark.sql.files.maxPartitionBytes", mpb0)
       val base = canonical(name)
-      // a different shuffle width AND a 64 KB split size (the sf0.001
-      // parquet then scans as many small splits instead of few)
+      // a different shuffle width AND an 8 KB split size: the sf0.001
+      // parquet then scans as many small splits instead of few, and
+      // even the 65 KB documents file yields a split per core, so
+      // Spread leaves its scan alone instead of round-robining it as
+      // at the default
       conf.set("spark.sql.shuffle.partitions", "7")
-      conf.set("spark.sql.files.maxPartitionBytes", "65536")
+      conf.set("spark.sql.files.maxPartitionBytes", "8192")
       val alt =
         try canonical(name)
         finally {

@@ -331,9 +331,6 @@ class PlanSpec extends SparkSpec {
     val minBytes = tables.map(t => Tables.bytesOnDisk(spark, sf(), t)).min
     try {
       spark.conf.set(key, math.max(1L, minBytes / cores).toString)
-      // a frame an earlier gate left cached keeps the partitions it was
-      // cached with, and the decision reads them: plan fresh scans only
-      spark.catalog.clearCache()
       tables.foreach { t =>
         assert(Spread.width(Tables.load(spark, sf(), t)) == 0,
           s"$t still spreads under the at-scale conf")
@@ -413,9 +410,8 @@ class PlanSpec extends SparkSpec {
     val bySh = SourceOverlap.shingleSets(docs, "source", col("text"), 3)
     val exact = SourceOverlap.matrixFromSets(bySh).queryExecution.executedPlan
     val sketch = SourceOverlap.sketchFromSets(bySh).queryExecution.executedPlan
-    val (hist, report) = RobustStats.madReportFrame(
-      Tables.events(spark, sf()), "value")
-    val mad = report.queryExecution.executedPlan
+    val hist = RobustStats.histogram(Tables.events(spark, sf()), "value").cache()
+    val mad = RobustStats.madReportFrame(hist).queryExecution.executedPlan
     hist.unpersist(blocking = false)
     val failures =
       audit("overlap_matrix_lazy", exact, 7, 3, bnljOk = false) ++
