@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, StringTrim, Up
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.functions.{CharDiversityStats, CollectMinK, CosineSimilarity, MinHash64, NearestCentroid, NfcNormalize, NgramHash64, NgramRepetition, ShingleHash64, SimHash64, TrigramHashBundle, VectorMean, VocabTermCounts, VocabTermCountsDyn}
+import graft.functions.{CharDiversityStats, CollectMinK, CosineSimilarity, MinHash64, NearestCentroid, NfcNormalize, NgramHash64, NgramRepetition, ShingleHash64, SimHash64, TrigramHashBundle, VectorMean, VocabTermCounts}
 
 /** Engine extensions, registered through the public
   * `spark.sql.extensions` hook (GraftSession sets it). Native
@@ -74,21 +74,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
         require(children.size == 2,
           "vocab_term_counts(tokens, vocab) takes exactly two arguments")
-        // literal vocab → probe set built once at plan construction;
-        // column vocab (e.g. a broadcast 1-row aggregate) → the
-        // per-task content-cached form (r13: removes the gate-side
-        // collect job the literal needed)
-        if (children(1).foldable) {
-          val arr = children(1).eval().asInstanceOf[
-            org.apache.spark.sql.catalyst.util.ArrayData]
-          val vocab =
-            if (arr == null) Seq.empty[String]
-            else (0 until arr.numElements()).map { i =>
-              val u = arr.getUTF8String(i)
-              if (u == null) null else u.toString
-            }
-          VocabTermCounts(children.head, vocab)
-        } else VocabTermCountsDyn(children.head, children(1))
+        VocabTermCounts(children.head, children(1))
       }))
     ext.injectFunction((
       FunctionIdentifier("ngram_hash64"),

@@ -65,7 +65,9 @@ object SemDeDup {
   def autoCells(n: Long): Int =
     math.max(8, math.min(4096, math.sqrt(n.toDouble).round.toInt))
 
-  /** Per-vector verdict with the cell count auto-scaled to the
+  /** Per-vector verdict: (vec_id, cluster_id, removed). `emb` needs
+    * (vec_id, embedding); `eps` is the cosine threshold (the paper
+    * sweeps 0.7–0.95). The cell count is auto-scaled to the
     * corpus (counts once: over a parquet file that can be a metadata
     * read, but over a checkpointed or computed frame, like the
     * embedding benchmark's, it is a scan of two jobs) and
@@ -83,13 +85,6 @@ object SemDeDup {
       else emb
     verdictsWith(emb, Ivf.centroids(train, c, iters), eps)
   }
-
-  /** Per-vector verdict: (vec_id, cluster_id, removed). `emb` needs
-    * (vec_id, embedding); `c` is the cell count (scale knob),
-    * `eps` the cosine threshold (the paper sweeps 0.7–0.95).
-    */
-  def verdicts(emb: DataFrame, c: Int, eps: Double, iters: Int = 2): DataFrame =
-    verdictsWith(emb, Ivf.centroids(emb, c, iters), eps)
 
   private def verdictsWith(emb: DataFrame, cents: DataFrame, eps: Double): DataFrame = {
     // materialize the assignment once: the plan below reads idx THREE
@@ -118,9 +113,4 @@ object SemDeDup {
       .select(col("vec_id"), col("cluster_id"),
         coalesce(col("removed"), lit(false)).as("removed"))
   }
-
-  /** The deduplicated corpus: survivors only. */
-  def dedup(emb: DataFrame, c: Int, eps: Double, iters: Int = 2): DataFrame =
-    emb.join(verdicts(emb, c, eps, iters).filter(!col("removed"))
-      .select("vec_id"), Seq("vec_id"), "left_semi")
 }

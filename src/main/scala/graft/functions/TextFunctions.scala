@@ -153,24 +153,6 @@ object TextFunctions {
           (x, i) => concat_ws(" ", x, element_at(ts, i + lit(2)))))
     })
 
-  /** Highest multiplicity of any element in `arr` (0 for empty):
-    * sort, then the longest equal-run in one aggregate pass —
-    * O(n log n) per row inside the projection, no explode, no
-    * shuffle. The narrow form of "mode count" that survives a
-    * 100 TB corpus scan (the explode+groupBy form shuffles every
-    * token of every document).
-    */
-  def maxMultiplicity(arr: Column): Column =
-    bindOnce(array_sort(arr), sorted =>
-      aggregate(sorted,
-        struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-        (acc, x) => {
-          val run = when(x === acc("prev"), acc("run") + lit(1L)).otherwise(lit(1L))
-          struct(x.as("prev"), run.as("run"),
-            greatest(acc("best"), run).as("best"))
-        },
-        acc => acc("best")))
-
   /** Fraction of tokens that repeat an earlier token
     * (1 - distinct/total; 0.0 for empty docs).
     */

@@ -207,9 +207,9 @@ object Text {
       // `ngram_repetition` expression (functions/NgramRepetition —
       // one codegen'd pass + a per-row hash map), never an
       // explode+groupBy (which would shuffle every token at 100 TB).
-      // FunctionsSpec pins top_cnt bit-identical to the interpreted
-      // TF.maxMultiplicity HOF this query used through r8, so the
-      // oracle below is unchanged. k-gram count = n_words - k + 1,
+      // FunctionsSpec pins top_cnt bit-identical to an interpreted
+      // sort-and-count HOF (its `maxMultiplicity`), so the oracle
+      // below holds for both. k-gram count = n_words - k + 1,
       // so the bigram denominator is n_words - 1.
       val ts = TF.tokens(col("text"))
       Tables.documents(s, d).select(

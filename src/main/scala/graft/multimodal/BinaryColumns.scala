@@ -303,13 +303,4 @@ object BinaryColumns {
           lit(null).cast("long").as("duration_ms"),
           lit(null).cast("string").as("codec")).as("meta"),
         col("path"), col("length"))
-
-  /** Metadata-only projection — must not deserialize payloads
-    * (verify with explain: ReadSchema excludes `payload`).
-    */
-  def metadataSummary(media: DataFrame): DataFrame =
-    media.groupBy("media_type").agg(
-      count(lit(1)).as("n_media"),
-      avg(col("meta.width")).as("avg_width"),
-      avg(col("meta.duration_ms")).as("avg_duration_ms"))
 }

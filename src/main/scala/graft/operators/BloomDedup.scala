@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Readers
@@ -41,11 +41,10 @@ import graft.sources.Readers
   *
   * Cluster sizing note: one filter over the whole corpus only scales
   * to ~100M items at 1% fpp (Spark's sketch caps at 8 MB by default;
-  * lifting the caps trades executor memory). Past that, the 100 TB
-  * form is one bloom PER corpus shard with the probe OR-ing a bounded
-  * set of shard sketches, or a higher-fpp sketch — fpp only widens the
-  * verify set, never corrupts the result, which is why the exact
-  * verify join stays in the plan unconditionally.
+  * lifting the caps trades executor memory). Past that a higher-fpp
+  * sketch still answers exactly — fpp only widens the verify set,
+  * never corrupts the result, which is why the exact verify join
+  * stays in the plan unconditionally.
   *
   * Reference anchor: the workshop's silver job dedups within one batch
   * (job-silver-rues.py dropDuplicates); this is the cross-batch,
@@ -99,29 +98,32 @@ object BloomDedup {
   def incrementalKeep(corpus: DataFrame, incoming: DataFrame, textCol: String,
                       expectedItems: Long, numBits: Long): DataFrame = {
     val bloom = buildBloom(corpus, textCol, expectedItems, numBits)
-    val hit = call_function("bloom_might_contain", lit(bloom), xxhash64(col(textCol)))
-    // The two branches read the incoming scan twice but the miss branch
-    // is scan→filter→output (no exchange); fusing them through a single
-    // outer join would drag every miss through the shuffle this
-    // operator exists to avoid.
-    val misses = incoming.filter(!hit)
-    val verified = incoming.filter(hit)
-      .withColumn("__dig", md5(col(textCol).cast("binary")))
-      .join(corpus.select(md5(col(textCol).cast("binary")).as("__dig")).distinct(),
-        Seq("__dig"), "left_anti")
-      .drop("__dig")
-    misses.unionByName(verified)
+    screen(incoming, textCol, bloom,
+      corpus.select(digest(col(textCol)).as("__dig")).distinct())
   }
 
-  /** Convenience sizing: ~`bitsPerItem` bits per corpus row (10 ≈ 1%
-    * fpp at the optimal hash count). Counts the corpus once — at
-    * cluster scale the cardinality would come from table statistics
-    * instead of a count job.
+  // the 16-byte binary md5 content digest both verify sides key on
+  private def digest(text: Column): Column =
+    unhex(md5(text.cast("binary")))
+
+  private def probe(bloom: Array[Byte], textCol: String): Column =
+    call_function("bloom_might_contain", lit(bloom), xxhash64(col(textCol)))
+
+  /** The miss/verify split: bloom misses pass with ZERO join, only
+    * hits (~dup rate + fpp) reach the anti-join against `digests`
+    * (one binary `__dig` column). The two branches read the incoming
+    * scan twice but the miss branch is scan→filter→output (no
+    * exchange); fusing them through a single outer join would drag
+    * every miss through the shuffle this operator exists to avoid.
     */
-  def sizedKeep(spark: SparkSession, corpus: DataFrame, incoming: DataFrame,
-                textCol: String, bitsPerItem: Int = 10): DataFrame = {
-    val n = math.max(corpus.count(), 1L)
-    incrementalKeep(corpus, incoming, textCol, n, n * bitsPerItem)
+  private def screen(incoming: DataFrame, textCol: String,
+                     bloom: Array[Byte], digests: DataFrame): DataFrame = {
+    val hit = probe(bloom, textCol)
+    val verified = incoming.filter(hit)
+      .withColumn("__dig", digest(col(textCol)))
+      .join(digests, Seq("__dig"), "left_anti")
+      .drop("__dig")
+    incoming.filter(!hit).unionByName(verified)
   }
 
   /** Build the PERSISTED ingest index — the two artifacts a continuous
@@ -142,7 +144,7 @@ object BloomDedup {
     // half the stored/broadcast bytes and a cheaper join key (A/B at
     // sf10: broadcast-relation build is a visible slice of the
     // staged screen)
-    corpus.select(unhex(md5(col(textCol).cast("binary"))).as("dig")).distinct()
+    corpus.select(digest(col(textCol)).as("dig")).distinct()
       .write.mode("overwrite").parquet(s"$path/digests")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
     java.nio.file.Files.write(java.nio.file.Paths.get(path, "bloom.bin"), bloom)
@@ -180,6 +182,8 @@ object BloomDedup {
     !fresh
   }
 
+  private val BroadcastDigestCap = 256L << 20
+
   /** [[incrementalKeep]] against a STAGED ingest index — the per-batch
     * production path: bloom misses pass join-free (one codegen'd probe
     * of the deserialized on-disk sketch), bloom hits anti-join the
@@ -189,7 +193,7 @@ object BloomDedup {
     *
     * Two plans by digest-table size (the branch question is really
     * "does the verify side shuffle?"):
-    *  - digests fit a broadcast (≤ `broadcastDigestCap` on disk):
+    *  - digests fit a broadcast (≤ `BroadcastDigestCap`, 256 MB on disk):
     *    SINGLE PASS — one batch scan computes the bloom flag, md5
     *    only on hits (`when(hit, md5)`; a NULL digest never matches a
     *    join key, so misses sail through the same broadcast left
@@ -198,85 +202,26 @@ object BloomDedup {
     *    the split's second batch scan was ~40% of the staged gate's
     *    sf10 time (0.28 s bare scan; 0.88 s split vs ~0.5 s fused).
     *  - digests too big to broadcast (the true 100 TB regime): the
-    *    [[incrementalKeep]] branch split — misses pass with ZERO
-    *    join, only hits (~dup rate + fpp) reach the digest-keyed
-    *    shuffled anti-join.
+    *    [[incrementalKeep]] branch split.
     */
   def incrementalKeepStaged(incoming: DataFrame, textCol: String,
-                            path: String,
-                            broadcastDigestCap: Long = 256L << 20): DataFrame = {
+                            path: String): DataFrame = {
     val spark = incoming.sparkSession
     val bloom = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path, "bloom.bin"))
-    val hit = call_function("bloom_might_contain", lit(bloom), xxhash64(col(textCol)))
     val digestBytes =
       try {
         val p = new org.apache.hadoop.fs.Path(s"$path/digests")
         p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .getContentSummary(p).getLength
       } catch { case _: java.io.IOException => Long.MaxValue }
-    val digests = Readers.parquet(spark, s"$path/digests")
-    if (digestBytes <= broadcastDigestCap) {
+    val digests = Readers.parquet(spark, s"$path/digests").select(col("dig").as("__dig"))
+    if (digestBytes <= BroadcastDigestCap) {
       incoming
-        .withColumn("__dig", when(hit, unhex(md5(col(textCol).cast("binary")))))
-        .join(broadcast(digests.select(col("dig").as("__dig"),
-          lit(true).as("__seen"))), Seq("__dig"), "left")
+        .withColumn("__dig", when(probe(bloom, textCol), digest(col(textCol))))
+        .join(broadcast(digests.withColumn("__seen", lit(true))), Seq("__dig"), "left")
         .filter(col("__seen").isNull)
         .drop("__dig", "__seen")
-    } else {
-      val misses = incoming.filter(!hit)
-      val verified = incoming.filter(hit)
-        .withColumn("__dig", unhex(md5(col(textCol).cast("binary"))))
-        .join(digests.select(col("dig").as("__dig")), Seq("__dig"), "left_anti")
-        .drop("__dig")
-      misses.unionByName(verified)
-    }
-  }
-
-  /** The >100M-item form the single-sketch scaladoc points at: the
-    * corpus hash space splits into `shards` by `hash % shards`, each
-    * shard folds into its OWN sketch (one partial-aggregated pass,
-    * `shards` rows collected — bounded by shards · numBits/8), and the
-    * probe routes each incoming row to exactly ONE sketch by the same
-    * modulus. Total capacity scales linearly in `shards` while every
-    * probe stays O(1).
-    *
-    * The router is a `shards`-arm CASE over foldable-literal
-    * `bloom_might_contain` calls rather than `element_at(arrayLit,
-    * pmod)`: Spark's probe expression requires its filter child to be
-    * a CONSTANT (foldable or scalar subquery) — an array lookup with a
-    * row-dependent index is not, but each CASE arm is. Codegen keeps
-    * the arms branch-cheap; only the selected arm evaluates.
-    *
-    * A shard with no corpus rows yields no sketch row; its arm is a
-    * constant false (nothing was inserted, so nothing can match —
-    * exactly what an empty filter answers).
-    */
-  def shardedKeep(corpus: DataFrame, incoming: DataFrame, textCol: String,
-                  shards: Int, expectedItemsPerShard: Long,
-                  numBitsPerShard: Long): DataFrame = {
-    require(shards > 0, "shards must be positive")
-    val h = xxhash64(col(textCol))
-    val shardOf = pmod(h, lit(shards.toLong))
-    val sketches: Map[Long, Array[Byte]] = corpus
-      .groupBy(shardOf.as("shard"))
-      .agg(call_function("bloom_agg", h,
-        lit(expectedItemsPerShard), lit(numBitsPerShard)).as("bf"))
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]]("bf")).toMap
-    val hit = (0L until shards.toLong).foldLeft(lit(false)) { (acc, s) =>
-      sketches.get(s) match {
-        case Some(bytes) =>
-          when(shardOf === lit(s),
-            call_function("bloom_might_contain", lit(bytes), h)).otherwise(acc)
-        case None => acc
-      }
-    }
-    val misses = incoming.filter(!hit)
-    val verified = incoming.filter(hit)
-      .withColumn("__dig", md5(col(textCol).cast("binary")))
-      .join(corpus.select(md5(col(textCol).cast("binary")).as("__dig")).distinct(),
-        Seq("__dig"), "left_anti")
-      .drop("__dig")
-    misses.unionByName(verified)
+    } else screen(incoming, textCol, bloom, digests)
   }
 }

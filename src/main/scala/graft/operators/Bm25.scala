@@ -83,9 +83,9 @@ object Bm25 {
   /** MULTI-query BM25 — the retrieval-eval/batch-curation form of
     * [[topK]] (r12): `queries` is (query_id, terms: array<string>),
     * and the whole batch scores in ONE corpus pass. The postings
-    * build plants the (collected, eval-set-bounded) union query
-    * vocabulary as the literal of the native one-pass
-    * `vocab_term_counts` counter, so each document emits its
+    * build feeds the (eval-set-bounded) union query vocabulary to
+    * the native one-pass `vocab_term_counts` counter as a broadcast
+    * 1-row column, so each document emits its
     * (term, tf) MAP straight from the scan — rows ∝ matches from the
     * first operator, with no token explode and no corpus-tokens-
     * sized hash aggregate (the first form exploded every token and
@@ -122,12 +122,9 @@ object Bm25 {
     // postings emerge as rows ∝ MATCHES (46M at sf30) instead of the
     // explode + semi-join + corpus-tokens-sized string hash-agg form
     // (450M exploded rows; the agg was ~half the query — measured
-    // r12, see VocabTermCounts). Since r13 the vocabulary rides as a
-    // broadcast 1-row aggregate (eval-set-bounded) crossed into the
-    // corpus pass — the collect() job the literal form needed at
-    // plan construction is gone; the column form dispatches to
-    // VocabTermCountsDyn (same counting loop, per-task cached probe
-    // set, spec-pinned equal).
+    // r12, see VocabTermCounts). The vocabulary rides as a broadcast
+    // 1-row aggregate (eval-set-bounded) crossed into the corpus
+    // pass, so building the plan starts no collect() job.
     val vocabRow = qt.agg(
       sort_array(coalesce(collect_set(col("term")),
         array().cast("array<string>"))).as("__vocab"))

@@ -82,9 +82,4 @@ object GopherRules {
         pround(col("ellipsis_line_ratio"), 4).as("ellipsis_line_ratio"),
         col("keep"))
   }
-
-  /** Surviving documents only — the corpus-prep form. */
-  def filterDocs(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.join(signals(docs, textCol).filter(col("keep")).select("doc_id"),
-      Seq("doc_id"), "left_semi")
 }

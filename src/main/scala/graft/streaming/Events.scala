@@ -159,7 +159,9 @@ object Events {
           <= greatest(col("n_users_exact") * 0.20, lit(5.0)))
           .as("within_envelope"))
 
-  /** Streaming form of the same aggregation. */
+  /** Streaming form of the same aggregation. Distinct aggregates
+    * aren't supported on streams, so it carries count + sum only.
+    */
   def windowedAggStream(events: DataFrame, windowLen: String = "1 hour",
                         watermark: String = "2 hours"): DataFrame =
     events.withWatermark("ts", watermark)
@@ -205,15 +207,13 @@ object Events {
     val stream = spark.readStream.schema(rawSchema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir)
-    val events = stream.withColumn("ts", tsNormalized(rawSchema, "timestamp_ntz"))
-    // distinct aggregates aren't supported on streams; the stream form
-    // carries count + sum (the oracle matches this column set)
-    val agg = events
-      .groupBy(window(col("ts"), windowLen), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"), col("sum_value"))
+    // the watermark needs LTZ event time; window_start goes back to
+    // the batch tables' NTZ (session TZ is UTC, so the values agree).
+    // Complete mode keeps every window, and the one-file feed is one
+    // micro-batch, so the watermark drops nothing here.
+    val events = stream.withColumn("ts", tsNormalized(rawSchema, "timestamp_ltz"))
+    val agg = windowedAggStream(events, windowLen)
+      .withColumn("window_start", col("window_start").cast("timestamp_ntz"))
     val name = "graft_stream_windows"
     val q = agg.writeStream
       .format("memory").queryName(name)

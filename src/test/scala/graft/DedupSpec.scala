@@ -206,7 +206,7 @@ class DedupSpec extends SparkSpec {
   test("SemDeDup over identical vectors keeps only the smallest id") {
     val same = (0L until 40L).map(i => (100L + i * 3, Seq(0.6f, -0.8f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val kept = graft.dedup.SemDeDup.verdicts(same, c = 8, eps = 0.95)
+    val kept = graft.dedup.SemDeDup.verdictsAuto(same, eps = 0.95)
       .as[(Long, Option[Int], Boolean)].collect().toSeq
     assert(kept.size == 40, kept)
     assert(kept.filterNot(_._3).map(_._1) == Seq(100L), kept)

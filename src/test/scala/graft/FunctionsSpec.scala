@@ -39,6 +39,21 @@ class FunctionsSpec extends SparkSpec {
   private def cosineHof(a: Column, b: Column): Column =
     VF.dot(a, b) / (sqrt(VF.dot(a, a)) * sqrt(VF.dot(b, b)))
 
+  /** Highest multiplicity of any element in `arr` (0 for empty):
+    * sort, then the longest equal-run in one `aggregate` — the
+    * interpreted form native `ngram_repetition`'s top_cnt replaced.
+    */
+  private def maxMultiplicity(arr: Column): Column =
+    TF.bindOnce(array_sort(arr), sorted =>
+      aggregate(sorted,
+        struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
+        (acc, x) => {
+          val run = when(x === acc("prev"), acc("run") + lit(1L)).otherwise(lit(1L))
+          struct(x.as("prev"), run.as("run"),
+            greatest(acc("best"), run).as("best"))
+        },
+        acc => acc("best")))
+
   /** The r13 IVF cell assignment, an interpreted `aggregate` struct
     * fold — the reference `nearest_centroid` must reproduce.
     */
@@ -93,14 +108,14 @@ class FunctionsSpec extends SparkSpec {
 
   test("maxMultiplicity is the mode count; dupTokenFrac the repeat share") {
     val df = Seq("a b a c a b", "x y z", "").toDF("text")
-    val m = df.select(TF.maxMultiplicity(TF.tokens(col("text"))))
+    val m = df.select(maxMultiplicity(TF.tokens(col("text"))))
       .as[Long].collect().toSeq
     assert(m == Seq(3L, 1L, 0L)) // "a" ×3; all distinct; empty
     val f = df.select(TF.dupTokenFrac(col("text"))).as[Double].collect().toSeq
     assert(math.abs(f.head - 0.5) < 1e-9) // 6 tokens, 3 distinct
     assert(f(1) == 0.0 && f(2) == 0.0)
     // bigram mode: "a b" appears twice of 5 bigrams
-    val bm = df.select(TF.maxMultiplicity(TF.bigrams(col("text"))))
+    val bm = df.select(maxMultiplicity(TF.bigrams(col("text"))))
       .as[Long].collect().toSeq
     assert(bm == Seq(2L, 1L, 0L))
   }
@@ -429,7 +444,7 @@ class FunctionsSpec extends SparkSpec {
 
   test("ngram_repetition top_cnt is bit-identical to the HOF composition") {
     // the exact swap q_repetition_stats made in r9: native top_cnt at
-    // k=1/k=2 must reproduce the interpreted TF.maxMultiplicity path
+    // k=1/k=2 must reproduce the interpreted maxMultiplicity path
     // over TF.tokens / TF.bigrams on real corpus text + edge docs
     val docs = Tables.documents(spark, sf())
       .select(col("doc_id"), col("text"))
@@ -438,10 +453,10 @@ class FunctionsSpec extends SparkSpec {
     val both = docs.select(
       call_function("ngram_repetition", TF.tokens(col("text")), lit(1))
         .getField("top_cnt").as("uni_native"),
-      TF.maxMultiplicity(TF.tokens(col("text"))).as("uni_hof"),
+      maxMultiplicity(TF.tokens(col("text"))).as("uni_hof"),
       call_function("ngram_repetition", TF.tokens(col("text")), lit(2))
         .getField("top_cnt").as("bi_native"),
-      TF.maxMultiplicity(TF.bigrams(col("text"))).as("bi_hof"))
+      maxMultiplicity(TF.bigrams(col("text"))).as("bi_hof"))
     assert(both.filter(!(col("uni_native") <=> col("uni_hof")) ||
       !(col("bi_native") <=> col("bi_hof"))).count() == 0)
     assert(both.count() > 100)
@@ -549,53 +564,59 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("vocab_term_counts: column vocabulary (Dyn) equals the literal form") {
-    // the q_retrieval_eval r13 swap: the vocabulary arrives as a
-    // broadcast 1-row aggregate column instead of a plan-time literal
+    // one expression serves a plan-time literal vocabulary and a
+    // broadcast 1-row aggregate column alike
     val docs = Seq(
       (1L, Seq("a", "b", "a", "c", "a")),
       (2L, Seq("b", "b")),
       (3L, Seq.empty[String]),
       (4L, Seq("z", "z", "q"))).toDF("doc_id", "toks")
     val vocab = Seq("a", "b", "q")
-    val vocabRow = Seq(Tuple1(vocab)).toDF("__vocab")
-    val dyn = docs.crossJoin(broadcast(vocabRow))
-      .select(col("doc_id"),
-        explode(call_function("vocab_term_counts", col("toks"), col("__vocab"))))
-      .select(col("doc_id"), col("key"), col("value"))
-      .as[(Long, String, Long)].collect().toSet
-    assert(dyn === Set((1L, "a", 3L), (1L, "b", 1L), (2L, "b", 2L),
-      (4L, "q", 1L)))
-    // per-row DIFFERENT vocabularies exercise the cache-rebuild path:
-    // each row is counted under its own vocabulary, never a stale set
-    val perRow = Seq(
-      (1L, Seq("a", "b", "a"), Seq("a")),
-      (2L, Seq("a", "b", "a"), Seq("b")),
-      (3L, Seq("a", "b", "a"), Seq("a", "b"))).toDF("doc_id", "toks", "voc")
-      .repartition(1) // one task, one thread: consecutive distinct vocabs
-      .select(col("doc_id"),
-        explode(call_function("vocab_term_counts", col("toks"), col("voc"))))
-      .select(col("doc_id"), col("key"), col("value"))
-      .as[(Long, String, Long)].collect().toSet
-    assert(perRow === Set((1L, "a", 2L), (2L, "b", 1L),
-      (3L, "a", 2L), (3L, "b", 1L)))
-    // empty vocabulary column → empty maps, no rows
-    val emptyRow = Seq(Tuple1(Seq.empty[String])).toDF("__vocab")
-    assert(docs.crossJoin(broadcast(emptyRow))
-      .select(explode(call_function("vocab_term_counts", col("toks"),
-        col("__vocab")))).count() === 0)
-    // NULL vocabulary → the empty map on both forms and on both the
-    // codegen and the interpreted path. Asserted on the map itself:
-    // NULL and an empty map both explode to 0 rows
-    val nullVocab = Seq(Tuple1(Option.empty[Seq[String]])).toDF("__vocab")
-    def maps(vocab: org.apache.spark.sql.Column): Seq[Map[String, Long]] =
-      docs.crossJoin(broadcast(nullVocab))
-        .select(call_function("vocab_term_counts", col("toks"), vocab))
+    val expected = Set((1L, "a", 3L), (1L, "b", 1L), (2L, "b", 2L), (4L, "q", 1L))
+    val vocabRow = Seq((vocab, Seq("b", "z"), Seq.empty[String], Option.empty[Seq[String]]))
+      .toDF("__vocab", "__vocab2", "__empty", "__null")
+    val crossed = docs.crossJoin(broadcast(vocabRow))
+    def counts(df: DataFrame, vocab: Column): Set[(Long, String, Long)] =
+      df.select(col("doc_id"), explode(call_function("vocab_term_counts", col("toks"), vocab)))
+        .select(col("doc_id"), col("key"), col("value"))
+        .as[(Long, String, Long)].collect().toSet
+    def maps(vocab: Column): Seq[Map[String, Long]] =
+      crossed.orderBy("doc_id").select(call_function("vocab_term_counts", col("toks"), vocab))
         .as[Map[String, Long]].collect().toSeq
+    val noCounts = Seq.fill(4)(Map.empty[String, Long])
     underBothPaths { mode =>
-      assert(maps(lit(null).cast("array<string>")) === Seq.fill(4)(Map.empty[String, Long]),
-        s"literal form, $mode")
-      assert(maps(col("__vocab")) === Seq.fill(4)(Map.empty[String, Long]),
-        s"column form, $mode")
+      assert(counts(crossed, array(vocab.map(lit): _*)) === expected, s"literal, $mode")
+      assert(counts(crossed, col("__vocab")) === expected, s"column, $mode")
+      // per-row DIFFERENT vocabularies exercise the rebuild path: each
+      // row is counted under its own vocabulary, never a stale set
+      val perRow = Seq(
+        (1L, Seq("a", "b", "a"), Seq("a")),
+        (2L, Seq("a", "b", "a"), Seq("b")),
+        (3L, Seq("a", "b", "a"), Seq("a", "b"))).toDF("doc_id", "toks", "voc")
+        .repartition(1) // one task, one thread: consecutive distinct vocabs
+      assert(counts(perRow, col("voc")) === Set((1L, "a", 2L), (2L, "b", 1L),
+        (3L, "a", 2L), (3L, "b", 1L)), s"per-row, $mode")
+      // two calls with different vocabulary columns in one projection
+      // each keep their own probe set
+      val both = crossed.orderBy("doc_id").select(
+          call_function("vocab_term_counts", col("toks"), col("__vocab")),
+          call_function("vocab_term_counts", col("toks"), col("__vocab2")))
+        .as[(Map[String, Long], Map[String, Long])].collect().toSeq
+      assert(both === Seq(
+        (Map("a" -> 3L, "b" -> 1L), Map("b" -> 1L)),
+        (Map("b" -> 2L), Map("b" -> 2L)),
+        (Map.empty[String, Long], Map.empty[String, Long]),
+        (Map("q" -> 1L), Map("z" -> 2L))), s"two vocabularies, $mode")
+      // empty and NULL vocabularies → the empty map (asserted on the
+      // map itself: NULL and an empty map both explode to 0 rows)
+      assert(maps(array().cast("array<string>")) === noCounts, s"empty literal, $mode")
+      assert(maps(col("__empty")) === noCounts, s"empty column, $mode")
+      assert(maps(lit(null).cast("array<string>")) === noCounts, s"NULL literal, $mode")
+      assert(maps(col("__null")) === noCounts, s"NULL column, $mode")
+      // NULL tokens → NULL
+      assert(Seq(Tuple1(Option.empty[Seq[String]])).toDF("toks")
+        .select(call_function("vocab_term_counts", col("toks"), array(lit("a"))))
+        .head().isNullAt(0), s"NULL tokens, $mode")
     }
   }
 

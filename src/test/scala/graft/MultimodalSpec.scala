@@ -123,18 +123,4 @@ class MultimodalSpec extends SparkSpec {
         "true decoded dimensions from disk-ingested payloads")
     }
   }
-
-  test("metadataSummary never reads the payload column (column pruning)") {
-    val dir = s"/tmp/graft_media_spec"
-    BinaryColumns.syntheticMedia(spark, 30).write.mode("overwrite").parquet(dir)
-    val onDisk = spark.read.parquet(dir)
-    val summary = BinaryColumns.metadataSummary(onDisk)
-    val scanSchema = summary.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString("\n")
-    assert(scanSchema.contains("media_type"))
-    assert(!scanSchema.contains("payload"),
-      s"payload column must be pruned from the scan:\n$scanSchema")
-    val out = summary.collect()
-    assert(out.map(_.getAs[Long]("n_media")).sum == 30L)
-  }
 }

@@ -329,8 +329,9 @@ class Round9OpsSpec extends SparkSpec {
     val reference = incoming
       .join(corpus.select("text").distinct(), Seq("text"), "left_anti")
       .select("doc_id").as[Long].collect().sorted.toSeq
-    // well-sized sketch
-    val sized = BloomDedup.sizedKeep(spark, corpus, incoming, "text")
+    // well-sized sketch: ~10 bits per corpus row (≈ 1% fpp)
+    val n = corpus.count()
+    val sized = BloomDedup.incrementalKeep(corpus, incoming, "text", n, n * 10L)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(sized === reference)
     // pathological sketch: 64 bits for the whole corpus — nearly every
@@ -348,11 +349,12 @@ class Round9OpsSpec extends SparkSpec {
     // replaying the corpus against itself must drop every row: a
     // single survivor would be a bloom false NEGATIVE (impossible by
     // construction) or a broken verify join
-    assert(BloomDedup.sizedKeep(spark, corpus, corpus, "text").count() === 0L)
+    val n = corpus.count()
+    assert(BloomDedup.incrementalKeep(corpus, corpus, "text", n, n * 10L).count() === 0L)
     // plan shape: exactly ONE join in the whole query — the exact
     // verify on the hit branch; the miss branch is scan→filter→union
-    val out = BloomDedup.sizedKeep(spark, corpus,
-      corpus.withColumn("text", concat(col("text"), lit(" salt"))), "text")
+    val out = BloomDedup.incrementalKeep(corpus,
+      corpus.withColumn("text", concat(col("text"), lit(" salt"))), "text", n, n * 10L)
     val p = out.queryExecution.executedPlan.toString
     val joins = "(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin)".r
       .findAllIn(p).size
@@ -360,43 +362,13 @@ class Round9OpsSpec extends SparkSpec {
     // sketch build is bounded: serialized bytes ≤ numBits/8 + header
     val bytes = BloomDedup.buildBloom(corpus, "text", 1000L, 10000L)
     assert(bytes.length <= 10000 / 8 + 64, s"bloom unexpectedly large: ${bytes.length}")
-  }
-
-  test("sharded bloom dedup: shard-routed probe == plain anti-join; empty shards answer false") {
-    import graft.operators.BloomDedup
-    val corpus = docs.select("doc_id", "text", "source")
-    val incoming = corpus.unionByName(
-      corpus.select(col("doc_id"),
-        concat(lit("fresh "), col("doc_id").cast("string"), lit(" "), col("text"))
-          .as("text"),
-        col("source"))).cache()
-    val reference = incoming
-      .join(corpus.select("text").distinct(), Seq("text"), "left_anti")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    val sharded = BloomDedup.shardedKeep(corpus, incoming, "text",
-        shards = 5, expectedItemsPerShard = 200L, numBitsPerShard = 4096L)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(sharded === reference)
-    // empty shards: a 3-row corpus over 16 shards leaves most shards
-    // sketch-less; novel rows routing there must pass join-free
-    // (constant-false arm), and replayed rows must still vanish
-    val tinyCorpus = Seq((1L, "alpha doc"), (2L, "beta doc"), (3L, "gamma doc"))
-      .toDF("doc_id", "text")
+    // EMPTY corpus: the empty sketch must answer false everywhere —
+    // every incoming row is novel and must survive
     val tinyIncoming = Seq((10L, "alpha doc"), (11L, "novel one"),
       (12L, "novel two"), (13L, "novel three")).toDF("doc_id", "text")
-    val kept = BloomDedup.shardedKeep(tinyCorpus, tinyIncoming, "text",
-        shards = 16, expectedItemsPerShard = 8L, numBitsPerShard = 256L)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept === Seq(11L, 12L, 13L))
-    // EMPTY corpus: an empty sketch (single form) / no sketch rows
-    // (sharded form) must answer false everywhere — every incoming row
-    // is novel and must survive
-    val empty = tinyCorpus.filter(lit(false))
-    val allIds = Seq(10L, 11L, 12L, 13L)
-    assert(BloomDedup.incrementalKeep(empty, tinyIncoming, "text", 8L, 256L)
-      .select("doc_id").as[Long].collect().sorted.toSeq === allIds)
-    assert(BloomDedup.shardedKeep(empty, tinyIncoming, "text", 4, 8L, 256L)
-      .select("doc_id").as[Long].collect().sorted.toSeq === allIds)
+    assert(BloomDedup.incrementalKeep(corpus.filter(lit(false)), tinyIncoming, "text",
+        8L, 256L).select("doc_id").as[Long].collect().sorted.toSeq
+      === Seq(10L, 11L, 12L, 13L))
   }
 
   test("sketch store: incremental union is lossless and estimates stay in envelope") {
