@@ -91,4 +91,41 @@ object Tables {
         Some(md.digest(blob.getBytes("UTF-8")).map("%02x".format(_)).mkString)
       }
     } catch { case _: java.io.IOException => None }
+
+  /** Build into `path` once per distinct fingerprint: a `_FINGERPRINT`
+    * marker holding `fp` skips `build`; otherwise `build` runs and the
+    * marker is written after it, so a build that throws leaves no
+    * marker and re-runs. Returns true when a build ran.
+    */
+  def ensureStaged(path: String, fp: String)(build: => Unit): Boolean = {
+    import java.nio.file.Files
+    val marker = java.nio.file.Paths.get(path, "_FINGERPRINT")
+    val fresh = Files.exists(marker) &&
+      new String(Files.readAllBytes(marker), "UTF-8").trim == fp
+    if (!fresh) {
+      build
+      Files.write(marker, fp.getBytes("UTF-8"))
+    }
+    !fresh
+  }
+
+  /** Fingerprint of a text corpus for [[ensureStaged]], suffixed with
+    * the build's `params`: the caller's [[sourceStamp]] when given (no
+    * scan), else one scan pass of count, Σlength and a CONTENT term —
+    * (count, Σchars) alone reuses a stale artifact across regenerated
+    * data with permuted content. The content term is bit_xor of
+    * xxhash64: order-independent, and it can never overflow under
+    * ANSI (a sum of full-range xxhash64 longs does).
+    */
+  def textFingerprint(corpus: DataFrame, textCol: String,
+                      sourceFp: Option[String], params: String): String = {
+    import org.apache.spark.sql.functions._
+    val stamp = sourceFp.map(s => s"src:$s").getOrElse {
+      val r = corpus.agg(count(lit(1)),
+        coalesce(sum(length(col(textCol))), lit(0L)),
+        coalesce(bit_xor(xxhash64(col(textCol))), lit(0L))).head
+      s"${r.getLong(0)}_${r.getLong(1)}_x${r.getLong(2)}"
+    }
+    s"${stamp}_$params"
+  }
 }

@@ -278,15 +278,10 @@ object Ivf {
       }
       s"${sig(base)}_${sig(batch)}_c${c}_i$iters"
     }
-    val marker = java.nio.file.Paths.get(path, "_FINGERPRINT")
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim == fp
-    if (!fresh) {
+    graft.Tables.ensureStaged(path, fp) {
       writeIndex(base, path, c, iters)
       appendToIndex(batch, path)
-      java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
     }
-    !fresh
   }
 
   /** Search a written index. The union of probed cells is collected

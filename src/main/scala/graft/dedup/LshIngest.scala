@@ -82,31 +82,15 @@ object LshIngest {
                   path: String, shingleK: Int = 3, numHashes: Int = 64,
                   numBands: Int = 16, maxBucket: Int = 64,
                   sourceFp: Option[String] = None): Boolean = {
-    // fingerprint = params + either the caller's SOURCE stamp (FS
-    // metadata — Tables.sourceStamp; the hot path then never scans the
-    // corpus: r11 advice, the old hit path re-ran count+sum(length)
-    // per bench run) or a scan fingerprint. The scan form carries a
-    // CONTENT term (sum of per-doc xxhash64, same single pass):
-    // (count, Σchars) alone silently reused a stale index across
-    // regenerated data with permuted content (r11 advice).
-    val params = s"k${shingleK}_h${numHashes}_b${numBands}_m$maxBucket"
-    val fp = sourceFp.map(s => s"src:${s}_$params").getOrElse {
-      val r = corpus.agg(count(lit(1)),
-        coalesce(sum(length(col(textCol))), lit(0L)),
-        // bit_xor, not sum: xor is order-independent and can never
-        // overflow under ANSI (a sum of full-range xxhash64 longs does)
-        coalesce(bit_xor(xxhash64(col(textCol))), lit(0L))).head
-      s"${r.getLong(0)}_${r.getLong(1)}_x${r.getLong(2)}_$params"
-    }
-    val marker = java.nio.file.Paths.get(path, "_FINGERPRINT")
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim == fp
-    if (!fresh) {
+    // the caller's SOURCE stamp (Tables.sourceStamp) keeps the hot
+    // path from scanning the corpus (r11 advice: the old hit path
+    // re-ran count+sum(length) per bench run)
+    val fp = graft.Tables.textFingerprint(corpus, textCol, sourceFp,
+      s"k${shingleK}_h${numHashes}_b${numBands}_m$maxBucket")
+    graft.Tables.ensureStaged(path, fp) {
       writeIndex(corpus, idCol, textCol, path, shingleK, numHashes,
         numBands, maxBucket)
-      java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
     }
-    !fresh
   }
 
   /** Screen `incoming` against the stored index: returns

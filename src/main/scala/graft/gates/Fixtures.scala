@@ -151,11 +151,8 @@ object Fixtures {
     */
   private[graft] def ensureBloomBatch(s: SparkSession, d: String): String = {
     val path = stagePath("bloombatch", d)
-    val fp = s"src:${Tables.sourceStamp(s, d, "documents").getOrElse("none")}"
-    val marker = java.nio.file.Paths.get(path, "_FINGERPRINT")
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim == fp
-    if (!fresh) {
+    Tables.ensureStaged(path,
+        s"src:${Tables.sourceStamp(s, d, "documents").getOrElse("none")}") {
       val docs = Tables.documents(s, d).select("doc_id", "text", "source")
       docs.filter(pmod(col("doc_id"), lit(10L)) === 3L)
         .unionByName(docs.select(col("doc_id"),
@@ -163,7 +160,6 @@ object Fixtures {
             .as("text"),
           col("source")))
         .write.mode("overwrite").parquet(s"$path/batch")
-      java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
     }
     s"$path/batch"
   }

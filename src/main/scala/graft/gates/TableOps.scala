@@ -45,10 +45,11 @@ object TableOps {
         .select(col("c_mktsegment").as("seg"), col("o_orderstatus").as("st"),
           col("o_totalprice"))
         .createOrReplaceTempView("rollup_in")
-      s.sql("""SELECT coalesce(seg, 'ALL') AS segment,
+      try s.sql("""SELECT coalesce(seg, 'ALL') AS segment,
                       coalesce(st, 'ALL') AS status,
                       count(*) AS n, round(sum(o_totalprice), 2) AS total
                FROM rollup_in GROUP BY ROLLUP(seg, st)""")
+      finally s.catalog.dropTempView("rollup_in")
     },
       oracle = Some("""SELECT coalesce(c_mktsegment, 'ALL') AS segment,
            coalesce(o_orderstatus, 'ALL') AS status,
@@ -85,12 +86,13 @@ object TableOps {
         .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
         .select(col("c_mktsegment").as("seg"), col("o_orderstatus").as("st"))
         .createOrReplaceTempView("gs_in")
-      s.sql("""SELECT coalesce(seg, 'ALL') AS segment,
+      try s.sql("""SELECT coalesce(seg, 'ALL') AS segment,
                       coalesce(st, 'ALL') AS status,
                       CAST(grouping(seg) AS BIGINT) AS g_seg,
                       CAST(grouping(st) AS BIGINT) AS g_st,
                       count(*) AS n
                FROM gs_in GROUP BY GROUPING SETS ((seg), (st), ())""")
+      finally s.catalog.dropTempView("gs_in")
     },
       oracle = Some("""SELECT coalesce(c_mktsegment, 'ALL') AS segment,
            coalesce(o_orderstatus, 'ALL') AS status,
@@ -108,10 +110,11 @@ object TableOps {
         .select(col("c_mktsegment").as("seg"), col("o_orderstatus").as("st"),
           col("o_totalprice"))
         .createOrReplaceTempView("cube_in")
-      s.sql("""SELECT coalesce(seg, 'ALL') AS segment,
+      try s.sql("""SELECT coalesce(seg, 'ALL') AS segment,
                       coalesce(st, 'ALL') AS status,
                       count(*) AS n, round(sum(o_totalprice), 2) AS total
                FROM cube_in GROUP BY CUBE(seg, st)""")
+      finally s.catalog.dropTempView("cube_in")
     },
       oracle = Some("""SELECT coalesce(c_mktsegment, 'ALL') AS segment,
            coalesce(o_orderstatus, 'ALL') AS status,

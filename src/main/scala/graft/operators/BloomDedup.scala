@@ -162,24 +162,12 @@ object BloomDedup {
   def ensureIngestIndex(corpus: DataFrame, textCol: String, path: String,
                         expectedItems: Long, numBits: Long,
                         sourceFp: Option[String] = None): Boolean = {
-    // scan-fallback content term is bit_xor (order-independent, never
-    // overflows under ANSI — a sum of full-range xxhash64 longs does).
     // v2: binary digest storage (stale v1 hex-string indexes rebuild)
-    val params = s"e${expectedItems}_b${numBits}_v2"
-    val fp = sourceFp.map(s => s"src:${s}_$params").getOrElse {
-      val r = corpus.agg(count(lit(1)),
-        coalesce(sum(length(col(textCol))), lit(0L)),
-        coalesce(bit_xor(xxhash64(col(textCol))), lit(0L))).head
-      s"${r.getLong(0)}_${r.getLong(1)}_x${r.getLong(2)}_$params"
-    }
-    val marker = java.nio.file.Paths.get(path, "_FINGERPRINT")
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim == fp
-    if (!fresh) {
+    val fp = graft.Tables.textFingerprint(corpus, textCol, sourceFp,
+      s"e${expectedItems}_b${numBits}_v2")
+    graft.Tables.ensureStaged(path, fp) {
       writeIngestIndex(corpus, textCol, path, expectedItems, numBits)
-      java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
     }
-    !fresh
   }
 
   private val BroadcastDigestCap = 256L << 20

@@ -95,11 +95,6 @@ object QualityClassifier {
       .withColumn("predicted", (col("quality_prob") >= 0.5).cast("long"))
       .drop("__toks", "__len")
 
-  /** The filtered corpus: docs scoring ≥ threshold. */
-  def filterDocs(model: Model, docs: DataFrame, textCol: String,
-                 threshold: Double): DataFrame =
-    score(model, docs, textCol).filter(col("quality_prob") >= threshold)
-
   /** Cross-engine check harness for the SCORING machinery (the
     * q_hll_store_check pattern): the same tokenize → bucket →
     * weight-lookup → margin-accumulate → threshold pipeline as

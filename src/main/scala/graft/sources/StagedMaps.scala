@@ -65,15 +65,9 @@ object StagedMaps {
     val src = Seq("orders", "customer", "nation", "region")
       .map(t => Tables.sourceStamp(spark, sfDir, t).getOrElse("none"))
       .mkString("-")
-    val fp = s"src:${src}_${regionName}_${from}_$until"
-    val marker = java.nio.file.Paths.get(path, "_FINGERPRINT")
-    val fresh = java.nio.file.Files.exists(marker) &&
-      new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim == fp
-    if (!fresh) {
+    Tables.ensureStaged(path, s"src:${src}_${regionName}_${from}_$until") {
       writeOrderNationMap(spark, sfDir, path, regionName, from, until)
-      java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
     }
-    !fresh
   }
 
   /** Read a staged order→nation map. */

@@ -32,38 +32,27 @@ object Events {
       timestamp_micros(expr("ts div 1000")).cast(to)
     else col("ts").cast(to)
 
-  /** Stage the `events.parquet` feed into a file-stream source dir as
-    * `tag*.parquet`, returning the staged paths. Handles both a single
-    * parquet file and a Spark-written DIRECTORY of part files — a bare
-    * `Files.copy` of a directory creates an empty directory, and the
-    * stream would then silently see only the sentinel rows.
+  /** The raw events feed (long or native ts, as the tier stores it). */
+  private def rawEvents(spark: SparkSession, sfDir: String): DataFrame =
+    Readers.parquet(spark, s"$sfDir/events.parquet")
+
+  /** A far-future sentinel row: `raw`'s latest row moved `minutes`
+    * later as user_id = -1 (filtered from every result), so its
+    * micro-batch drags the watermark past every real row. Bumping a
+    * real row keeps it type-generic across both ts encodings.
     */
-  private def stageEventsFeed(sfDir: String, stage: java.nio.file.Path,
-                              tag: String): Seq[java.nio.file.Path] = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    val src = Paths.get(s"$sfDir/events.parquet")
-    if (Files.isDirectory(src)) {
-      // Files.list holds a directory fd until closed — materialize the
-      // listing inside try/finally (the lazy stream otherwise leaks one
-      // fd per staged feed)
-      val listing = Files.list(src)
-      val parts =
-        try listing.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.getFileName.toString)
-        finally listing.close()
-      require(parts.nonEmpty, s"no parquet part files under $src")
-      parts.zipWithIndex.map { case (p, i) =>
-        val dst = stage.resolve(f"${tag}_part$i%05d.parquet")
-        Files.copy(p, dst, StandardCopyOption.REPLACE_EXISTING)
-        dst
-      }
-    } else {
-      val dst = stage.resolve(s"$tag.parquet")
-      Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
-      Seq(dst)
-    }
+  private def sentinel(raw: DataFrame, minutes: Long, eventId: Long,
+                       eventType: String): DataFrame = {
+    val ts =
+      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+        col("ts") + lit(minutes * 60L * 1000 * 1000 * 1000)
+      else col("ts") + expr(s"INTERVAL $minutes MINUTES")
+    raw.orderBy(col("ts").desc).limit(1)
+      .withColumn("ts", ts)
+      .withColumn("event_id", lit(eventId))
+      .withColumn("user_id", lit(-1L))
+      .withColumn("event_type", lit(eventType))
+      .withColumn("value", lit(0.0))
   }
 
   /** Tumbling-window aggregation (batch form). `window(ts, w)` with
@@ -197,31 +186,22 @@ object Events {
   /** Run the windowed aggregation as a REAL file-source streaming
     * query (Trigger.AvailableNow → memory sink) and return the final
     * result — the correctness gate compares it to the same DuckDB
-    * oracle as the batch form. `rawEvents` must be the raw (long ts)
-    * streaming frame; conversion mirrors Tables.events.
+    * oracle as the batch form.
     */
   def windowedAggFileStream(spark: SparkSession, sfDir: String,
                             windowLen: String = "1 hour"): DataFrame = {
-    val rawSchema = Readers.parquet(spark, s"$sfDir/events.parquet").schema
-    // file streaming sources take a directory; filter to the one table
-    val stream = spark.readStream.schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    // the watermark needs LTZ event time; window_start goes back to
-    // the batch tables' NTZ (session TZ is UTC, so the values agree).
-    // Complete mode keeps every window, and the one-file feed is one
-    // micro-batch, so the watermark drops nothing here.
-    val events = stream.withColumn("ts", tsNormalized(rawSchema, "timestamp_ltz"))
-    val agg = windowedAggStream(events, windowLen)
-      .withColumn("window_start", col("window_start").cast("timestamp_ntz"))
-    val name = "graft_stream_windows"
-    val q = agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    spark.table(name)
+    val raw = rawEvents(spark, sfDir)
+    Feed(raw) { feed =>
+      // the watermark needs LTZ event time; window_start goes back to
+      // the batch tables' NTZ (session TZ is UTC, so the values agree).
+      // Complete mode keeps every window, and the one-tag feed is one
+      // micro-batch, so the watermark drops nothing here.
+      val events = feed.stream()
+        .withColumn("ts", tsNormalized(raw.schema, "timestamp_ltz"))
+      Feed.toMemory(windowedAggStream(events, windowLen)
+        .withColumn("window_start", col("window_start").cast("timestamp_ntz")),
+        OutputMode.Complete(), "graft_stream_windows")
+    }
   }
 
   /** Run sessionization as a REAL file-source streaming query
@@ -232,11 +212,9 @@ object Events {
     *
     * Append-mode flatMapGroupsWithState only emits a session once the
     * event-time watermark passes `last + gap`, so a plain one-shot
-    * read would leave every trailing session stuck in state. The
-    * input is therefore staged into a temp dir as the real events
-    * file plus two far-future sentinel rows (user_id = -1, filtered
-    * from the result), processed one file per micro-batch: the first
-    * sentinel drags the watermark past every real session's timeout,
+    * read would leave every trailing session stuck in state. The feed
+    * is therefore the events plus two far-future [[sentinel]] tags:
+    * the first drags the watermark past every real session's timeout,
     * the second gives the engine a further batch in which those
     * timeouts fire. This is exactly how a production stream drains —
     * event-time progress, not query shutdown, closes sessions.
@@ -244,75 +222,24 @@ object Events {
   def sessionizeFileStream(spark: SparkSession, sfDir: String,
                            gapMinutes: Int = 30,
                            watermark: String = "1 hour"): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     import spark.implicits._
-    val raw = Readers.parquet(spark, s"$sfDir/events.parquet")
-    val rawSchema = raw.schema
-    val isLongTs =
-      rawSchema("ts").dataType == org.apache.spark.sql.types.LongType
-
-    val stage = Files.createTempDirectory("graft_sess_stream")
-    try {
-      stageEventsFeed(sfDir, stage, "00_events")
-      // sentinels: far enough past max(ts) + gap + watermark that every
-      // real session's event-time timeout is behind the new watermark.
-      // Built by bumping the latest real row (type-generic across both
-      // ts encodings) rather than hand-assembling an InternalRow.
-      val last = raw.orderBy(col("ts").desc).limit(1)
-      for (i <- 0 to 1) {
-        val bumpMinutes = (i + 1) * (gapMinutes + 180L)
-        val bumped =
-          if (isLongTs) last.withColumn("ts",
-            col("ts") + lit(bumpMinutes * 60L * 1000 * 1000 * 1000))
-          else last.withColumn("ts",
-            col("ts") + expr(s"INTERVAL $bumpMinutes MINUTES"))
-        val rows = bumped
-          .withColumn("event_id", lit(-1L - i))
-          .withColumn("user_id", lit(-1L))
-          .withColumn("event_type", lit("sentinel"))
-          .withColumn("value", lit(0.0))
-        val scratch = stage.resolve(s"scratch_$i")
-        rows.coalesce(1).write.parquet(scratch.toString)
-        val part = Files.list(scratch).filter(_.toString.endsWith(".parquet"))
-          .findFirst().get()
-        val dst = stage.resolve(f"0${i + 1}_sentinel.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        // file source orders batches by modification time
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + (i + 1) * 60000L))
-      }
-
-      val stream = spark.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(stage.toString)
-      val events = stream
-        .select(col("event_id"), tsNormalized(rawSchema, "timestamp_ltz").as("ts"),
+    val raw = rawEvents(spark, sfDir)
+    // far enough past max(ts) + gap + watermark that every real
+    // session's event-time timeout is behind the new watermark
+    val bump = gapMinutes + 180L
+    Feed(raw, sentinel(raw, bump, -1L, "sentinel"),
+        sentinel(raw, 2 * bump, -2L, "sentinel")) { feed =>
+      val events = feed.stream()
+        .select(col("event_id"), tsNormalized(raw.schema, "timestamp_ltz").as("ts"),
           col("user_id"), col("event_type"), col("value"))
         .as[Event]
-      val name = "graft_sessionize_stream"
-      val q = sessionizeStream(events, gapMinutes, watermark).writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      spark.table(name)
+      Feed.toMemory(sessionizeStream(events, gapMinutes, watermark).toDF(),
+          OutputMode.Append(), "graft_sessionize_stream")
         .filter(col("user_id") >= 0)
         .select(col("user_id"),
           col("session_start").cast("timestamp_ntz").as("session_start"),
           col("session_end").cast("timestamp_ntz").as("session_end"),
           col("n_events"), round(col("sum_value"), 2).as("sum_value"))
-        // the memory sink holds rows in driver memory, so the staged
-        // input files can be deleted before this frame is consumed
-        .localCheckpoint(eager = true)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      // Files.walk holds directory handles until closed — leaking it
-      // costs a file descriptor per invocation
-      val walked = Files.walk(stage)
-      try walked.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-      finally walked.close()
     }
   }
 
@@ -369,72 +296,30 @@ object Events {
 
   /** [[attributionStreamOuter]] as a REAL staged file-stream query.
     * Outer (no-match) rows can only emit in a micro-batch AFTER the
-    * watermark has passed their eviction point, so the staged feed
-    * appends two far-future sentinel files (user_id = -1, one purchase
-    * + one click each, +10/+20 days) that drag BOTH sides' watermarks
-    * past every real purchase — the unmatched rows then flush
-    * deterministically and the sentinels are filtered from the result.
-    * Gate-compared to the equivalent batch LEFT JOIN in DuckDB.
+    * watermark has passed their eviction point, so the feed appends
+    * two far-future [[sentinel]] tags (one purchase + one click each,
+    * +10/+20 days) that drag BOTH sides' watermarks past every real
+    * purchase — the unmatched rows then flush deterministically and
+    * the sentinels are filtered from the result. Gate-compared to the
+    * equivalent batch LEFT JOIN in DuckDB.
     */
   def attributionOuterFileStream(spark: SparkSession, sfDir: String,
                                  withinMinutes: Int = 30): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val raw = Readers.parquet(spark, s"$sfDir/events.parquet")
-    val isLongTs =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val stage = Files.createTempDirectory("graft_attr_outer")
-    try {
-      stageEventsFeed(sfDir, stage, "00_events")
-      def sentinel(idx: Int, days: Int): Unit = {
-        val last = raw.orderBy(col("ts").desc).limit(1)
-        val bumped =
-          if (isLongTs) last.withColumn("ts", col("ts") + lit(days * 86400L * 1000000000L))
-          else last.withColumn("ts", col("ts") + expr(s"INTERVAL $days DAYS"))
-        val rows = bumped.withColumn("user_id", lit(-1L))
-          .withColumn("event_id", lit(-1L - idx))
-          .withColumn("event_type", lit("purchase"))
-          .unionByName(bumped.withColumn("user_id", lit(-1L))
-            .withColumn("event_id", lit(-100L - idx))
-            .withColumn("event_type", lit("click")))
-        val tmp = stage.resolve(s"w$idx")
-        rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        import scala.jdk.CollectionConverters._
-        val part = Files.list(tmp).iterator().asScala
-          .find(_.toString.endsWith(".parquet")).get
-        val dst = stage.resolve(f"0${idx}%d_sentinel.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(
-            System.currentTimeMillis() + idx * 60000L))
-      }
-      sentinel(1, 10)
-      sentinel(2, 20)
+    val raw = rawEvents(spark, sfDir)
+    def sentinels(idx: Int, days: Long): DataFrame =
+      sentinel(raw, days * 1440L, -1L - idx, "purchase")
+        .unionByName(sentinel(raw, days * 1440L, -100L - idx, "click"))
+    Feed(raw, sentinels(1, 10), sentinels(2, 20)) { feed =>
       def stream(eventType: String): DataFrame =
-        spark.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(stage.toString)
+        feed.stream()
           .withColumn("ts", tsNormalized(raw.schema, "timestamp_ltz"))
           .filter(col("event_type") === eventType)
-      val joined = attributionStreamOuter(
-        stream("purchase"), stream("click"), withinMinutes)
-      val name = "graft_attribution_outer"
-      val q = joined.writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      spark.table(name)
+      Feed.toMemory(attributionStreamOuter(
+          stream("purchase"), stream("click"), withinMinutes),
+          OutputMode.Append(), "graft_attribution_outer")
         .filter(col("user_id") >= 0)
         .withColumn("purchase_ts", col("purchase_ts").cast("timestamp_ntz"))
         .withColumn("click_ts", col("click_ts").cast("timestamp_ntz"))
-        .localCheckpoint(eager = true)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walked = Files.walk(stage)
-      try walked.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-      finally walked.close()
     }
   }
 
@@ -444,27 +329,20 @@ object Events {
     */
   def attributionFileStream(spark: SparkSession, sfDir: String,
                             withinMinutes: Int = 30): DataFrame = {
-    val rawSchema = Readers.parquet(spark, s"$sfDir/events.parquet").schema
-    // stream-stream joins require LTZ event time (EVENT_TIME_IS_NOT_ON
-    // _TIMESTAMP_TYPE on NTZ); outputs are cast back to NTZ below to
-    // match the batch tables (session TZ is UTC)
-    def stream(eventType: String): DataFrame =
-      spark.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sfDir)
-        .withColumn("ts", tsNormalized(rawSchema, "timestamp_ltz"))
-        .filter(col("event_type") === eventType)
-    val joined = attributionStream(stream("purchase"), stream("click"), withinMinutes)
-      .withColumn("purchase_ts", col("purchase_ts").cast("timestamp_ntz"))
-      .withColumn("click_ts", col("click_ts").cast("timestamp_ntz"))
-    val name = "graft_attribution_stream"
-    val q = joined.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    spark.table(name).localCheckpoint(eager = true)
+    val raw = rawEvents(spark, sfDir)
+    Feed(raw) { feed =>
+      // stream-stream joins require LTZ event time (EVENT_TIME_IS_NOT_ON
+      // _TIMESTAMP_TYPE on NTZ); outputs are cast back to NTZ below to
+      // match the batch tables (session TZ is UTC)
+      def stream(eventType: String): DataFrame =
+        feed.stream()
+          .withColumn("ts", tsNormalized(raw.schema, "timestamp_ltz"))
+          .filter(col("event_type") === eventType)
+      Feed.toMemory(attributionStream(stream("purchase"), stream("click"), withinMinutes)
+          .withColumn("purchase_ts", col("purchase_ts").cast("timestamp_ntz"))
+          .withColumn("click_ts", col("click_ts").cast("timestamp_ntz")),
+        OutputMode.Append(), "graft_attribution_stream")
+    }
   }
 
   /** Streaming MERGE sink: maintain a latest-state keyed table from a
@@ -488,29 +366,35 @@ object Events {
     */
   def upsertSink(changes: DataFrame, keys: Seq[String], versionCol: String,
                  tombstoneCol: Option[String], tablePath: String,
-                 checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = changes.sparkSession
+                 checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    foldSink(changes, tablePath, checkpoint) { (cur, batch) =>
+      graft.operators.Upsert(cur.getOrElse(batch.limit(0)), batch, keys,
+        versionCol, tombstoneCol, keepTombstones = true)
+    }
+
+  /** foreachBatch sink over the parquet table at `tablePath`: each
+    * micro-batch replaces the table with `fold(current, batch)`, where
+    * `current` is None until the first batch has written it.
+    */
+  private def foldSink(changes: DataFrame, tablePath: String, checkpoint: String)
+                      (fold: (Option[DataFrame], DataFrame) => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     changes.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        val spark = batch.sparkSession
         // existence through the SAME filesystem Spark reads with —
         // java.io.File would always say "no" on hdfs://, s3a://, or
         // file:/ URIs and silently reset the table to one batch
         val p = new org.apache.hadoop.fs.Path(tablePath)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val cur =
-          if (fs.exists(p)) Readers.parquet(spark, tablePath)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-        val merged = graft.operators.Upsert(
-          cur, batch, keys, versionCol, tombstoneCol, keepTombstones = true)
+        val cur = if (fs.exists(p)) Some(Readers.parquet(spark, tablePath)) else None
         // materialize BEFORE overwriting the directory being read
-        merged.localCheckpoint(true)
+        fold(cur, batch).localCheckpoint(true)
           .write.mode("overwrite").parquet(tablePath)
         ()
       }
       .start()
-  }
 
   /** Live view of an [[upsertSink]] table: deleted keys filtered. */
   def upsertSinkView(spark: SparkSession, tablePath: String,
@@ -518,11 +402,11 @@ object Events {
     Readers.parquet(spark, tablePath)
       .filter(!coalesce(col(tombstoneCol), lit(false)))
 
-  /** Streaming MERGE sink as a REAL file-source query (the
-    * dedupFileStream harness pattern): three staged changeset files —
+  /** Streaming MERGE sink as a REAL file-source query: three staged
+    * changeset tags —
     * v1 snapshot, v2 updates (every 97th key repriced), v3 tombstones
     * (every 101st key deleted), the q_upsert construction — stream one
-    * file per micro-batch through [[upsertSink]], and the read-back
+    * micro-batch each through [[upsertSink]], and the read-back
     * state table must equal the one-shot batch MERGE, which the shared
     * DuckDB oracle asserts value-for-value. Because the winner per key
     * is version-ordered, the result is micro-batch-boundary-invariant
@@ -530,8 +414,6 @@ object Events {
     * streaming merge possible at all.
     */
   def upsertFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
     val base = graft.Tables.orders(spark, sfDir)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
     val snap = base.withColumn("version", lit(1L)).withColumn("deleted", lit(false))
@@ -541,39 +423,12 @@ object Events {
       .withColumn("version", lit(2L)).withColumn("deleted", lit(false))
     val dels = base.filter(pmod(col("o_orderkey"), lit(101)) === 0)
       .withColumn("version", lit(3L)).withColumn("deleted", lit(true))
-    val stage = Files.createTempDirectory("graft_upsert_stream")
-    val work = Files.createTempDirectory("graft_upsert_work")
-    try {
-      Seq(snap, ups, dels).zipWithIndex.foreach { case (df, i) =>
-        val sub = work.resolve(f"b$i%02d")
-        df.coalesce(1).write.mode("overwrite").parquet(sub.toString)
-        val listing = Files.list(sub)
-        val part =
-          try listing.iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-          finally listing.close()
-        val dst = stage.resolve(f"$i%02d_changes.parquet")
-        Files.copy(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        // ordered modification times -> deterministic micro-batch order
-        Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime
-          .fromMillis(System.currentTimeMillis() + i * 60000L))
-      }
-      val stream = spark.readStream.schema(snap.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(stage.toString)
-      val q = upsertSink(stream, Seq("o_orderkey"), "version", Some("deleted"),
-        s"$work/table", s"$work/cp")
+    Feed(snap, ups, dels) { feed =>
+      val q = upsertSink(feed.stream(), Seq("o_orderkey"), "version", Some("deleted"),
+        feed.path("table"), feed.path("cp"))
       try q.processAllAvailable() finally q.stop()
-      upsertSinkView(spark, s"$work/table", "deleted")
+      upsertSinkView(spark, feed.path("table"), "deleted")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus", "version")
-        .localCheckpoint(eager = true) // materialize before the dirs die
-    } finally {
-      Seq(stage, work).foreach { d =>
-        val walked = Files.walk(d)
-        try walked.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-        finally walked.close()
-      }
     }
   }
 
@@ -588,50 +443,25 @@ object Events {
     */
   def sketchStoreSink(changes: DataFrame, partCol: String, key: String,
                       tablePath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = changes.sparkSession
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = graft.operators.SketchStore.build(batch, partCol, col(key))
-        val p = new org.apache.hadoop.fs.Path(tablePath)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val merged =
-          if (fs.exists(p))
-            graft.operators.SketchStore.mergeIncremental(
-              Readers.parquet(spark, tablePath), delta, partCol)
-          else delta
-        merged.localCheckpoint(true)
-          .write.mode("overwrite").parquet(tablePath)
-        ()
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    foldSink(changes, tablePath, checkpoint) { (cur, batch) =>
+      val delta = graft.operators.SketchStore.build(batch, partCol, col(key))
+      cur.fold(delta)(graft.operators.SketchStore.mergeIncremental(_, delta, partCol))
+    }
 
   /** The sketch-store sink as a gate harness: the events feed streams
-    * one file per micro-batch through [[sketchStoreSink]] (partition =
-    * event_type, key = user_id), and the read-back store is checked
-    * against exact per-type distincts — estimates inside the 10%
-    * envelope, row counts EXACT (the oracle's side of the compare).
+    * through [[sketchStoreSink]] (partition = event_type, key =
+    * user_id), and the read-back store is checked against exact
+    * per-type distincts — estimates inside the 10% envelope, row
+    * counts EXACT (the oracle's side of the compare).
     */
-  def sketchStoreFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val stage = Files.createTempDirectory("graft_sketch_stream")
-    val work = Files.createTempDirectory("graft_sketch_store")
-    try {
-      stageEventsFeed(sfDir, stage, "00_events")
-      val rawSchema = Readers.parquet(spark, s"$sfDir/events.parquet").schema
-      val stream = spark.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(stage.toString)
-        .select(col("event_type"), col("user_id"))
-      val q = sketchStoreSink(stream, "event_type", "user_id",
-        s"$work/store", s"$work/cp")
+  def sketchStoreFileStream(spark: SparkSession, sfDir: String): DataFrame =
+    Feed(rawEvents(spark, sfDir)) { feed =>
+      val q = sketchStoreSink(feed.stream().select(col("event_type"), col("user_id")),
+        "event_type", "user_id", feed.path("store"), feed.path("cp"))
       try q.processAllAvailable() finally q.stop()
       val est = graft.operators.SketchStore.estimates(
-        Readers.parquet(spark, s"$work/store"))
+        Readers.parquet(spark, feed.path("store")))
       val exact = graft.Tables.events(spark, sfDir)
         .groupBy("event_type")
         .agg(count_distinct(col("user_id")).as("exact_distinct"))
@@ -639,15 +469,7 @@ object Events {
         .select(col("event_type"), col("n_rows"), col("exact_distinct"),
           (abs(col("distinct_est") - col("exact_distinct")).cast("double")
             / col("exact_distinct") <= 0.1).as("within_10pct"))
-        .localCheckpoint(eager = true)
-    } finally {
-      Seq(stage, work).foreach { d =>
-        val walked = Files.walk(d)
-        try walked.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-        finally walked.close()
-      }
     }
-  }
 
   /** Exactly-once file sink across a RESTART, as a gate query: the
     * events feed streams through an AvailableNow parquet-sink query
@@ -658,41 +480,31 @@ object Events {
     * feed, which the DuckDB oracle asserts; a broken restart would
     * double every count.
     */
-  def exactlyOnceFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val stage = Files.createTempDirectory("graft_eo_stream")
-    val work = Files.createTempDirectory("graft_eo_sink")
-    try {
-      stageEventsFeed(sfDir, stage, "00_events")
-      val rawSchema = Readers.parquet(spark, s"$sfDir/events.parquet").schema
+  def exactlyOnceFileStream(spark: SparkSession, sfDir: String): DataFrame =
+    Feed(rawEvents(spark, sfDir)) { feed =>
       def runOnce(): Unit = {
-        val q = spark.readStream.schema(rawSchema)
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(stage.toString)
+        val q = feed.stream()
           .select(col("event_id"), col("event_type"), col("value"))
           .writeStream.format("parquet")
-          .option("path", s"$work/out").option("checkpointLocation", s"$work/cp")
+          .option("path", feed.path("out")).option("checkpointLocation", feed.path("cp"))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         try q.awaitTermination() finally q.stop()
       }
       runOnce()
       runOnce() // the restart
-      Readers.parquet(spark, s"$work/out")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"),
-          (sum(floor(col("value") * lit(100.0) + lit(0.5)).cast("long"))
-            .cast("double") / lit(100.0)).as("sum_value"))
-        .localCheckpoint(eager = true)
-    } finally {
-      Seq(stage, work).foreach { d =>
-        val walked = Files.walk(d)
-        try walked.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-        finally walked.close()
-      }
+      centSums(Readers.parquet(spark, feed.path("out")))
     }
-  }
+
+  /** Per-type count and value sum, the sum carried as exact
+    * cent-longs (the per-type groups are thousands of doubles; float
+    * summation order is not portable).
+    */
+  private def centSums(events: DataFrame): DataFrame =
+    events.groupBy("event_type")
+      .agg(count(lit(1)).as("n_events"),
+        (sum(floor(col("value") * lit(100.0) + lit(0.5)).cast("long"))
+          .cast("double") / lit(100.0)).as("sum_value"))
 
   /** Streaming exact dedup: drop events whose (event_id) was already
     * seen, with state bounded by the watermark —
@@ -705,53 +517,24 @@ object Events {
       .dropDuplicatesWithinWatermark("event_id")
 
   /** Streaming dedup as a REAL file-source query with a REAL
-    * re-delivery: the events file is staged TWICE (at-least-once
-    * delivery of the whole feed), streamed one file per micro-batch
-    * through [[dedupStream]], and the surviving rows are aggregated
-    * per type. Batch 2's rows die one of the two ways a late duplicate
-    * dies in production: still in state (dropped as duplicate) or
-    * behind the watermark (dropped as late) — either way the result
-    * equals one clean copy, which is what the DuckDB oracle asserts.
-    * Sums are carried as exact cent-longs (the per-type groups are
-    * thousands of doubles; float summation order is not portable).
+    * re-delivery: the events feed is staged TWICE (at-least-once
+    * delivery of the whole feed, one micro-batch each) through
+    * [[dedupStream]], and the surviving rows are aggregated per type.
+    * Batch 2's rows die one of the two ways a late duplicate dies in
+    * production: still in state (dropped as duplicate) or behind the
+    * watermark (dropped as late) — either way the result equals one
+    * clean copy, which is what the DuckDB oracle asserts.
     */
   def dedupFileStream(spark: SparkSession, sfDir: String,
                       watermark: String = "1 hour"): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val rawSchema = Readers.parquet(spark, s"$sfDir/events.parquet").schema
-    val stage = Files.createTempDirectory("graft_dedup_stream")
-    try {
-      stageEventsFeed(sfDir, stage, "00_events")
-      stageEventsFeed(sfDir, stage, "01_redelivered").foreach(p =>
-        Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime
-          .fromMillis(System.currentTimeMillis() + 60000L)))
+    val raw = rawEvents(spark, sfDir)
+    Feed(raw, raw) { feed =>
       // watermarks require LTZ event time (session TZ is UTC, so the
       // values match the batch NTZ form; ts is dropped by the rollup)
-      val stream = spark.readStream.schema(rawSchema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(stage.toString)
-        .withColumn("ts", tsNormalized(rawSchema, "timestamp_ltz"))
-      val name = "graft_stream_dedup"
-      val q = dedupStream(stream, watermark).writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      spark.table(name)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"),
-          (sum(floor(col("value") * lit(100.0) + lit(0.5)).cast("long"))
-            .cast("double") / lit(100.0)).as("sum_value"))
-        .localCheckpoint(eager = true)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      // Files.walk holds directory handles until closed — leaking it
-      // costs a file descriptor per invocation
-      val walked = Files.walk(stage)
-      try walked.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-      finally walked.close()
+      val events = feed.stream()
+        .withColumn("ts", tsNormalized(raw.schema, "timestamp_ltz"))
+      centSums(Feed.toMemory(dedupStream(events, watermark),
+        OutputMode.Append(), "graft_stream_dedup"))
     }
   }
 

@@ -23,31 +23,6 @@ import graft.sources.Readers
   */
 object Ingest {
 
-  /** Write `df` as parquet part files named `tag_partNNNNN.parquet`
-    * directly inside the stream source dir (file-stream sources list
-    * files, not directories).
-    */
-  private[graft] def stageBatch(df: DataFrame, stage: java.nio.file.Path, tag: String): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    val tmp = stage.resolve(s"__tmp_$tag")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val listing = Files.list(tmp)
-    val parts =
-      try listing.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally listing.close()
-    require(parts.nonEmpty, s"staging produced no parquet parts for $tag")
-    parts.zipWithIndex.foreach { case (p, i) =>
-      Files.move(p, stage.resolve(f"${tag}_part$i%05d.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    val walked = Files.walk(tmp)
-    try walked.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-    finally walked.close()
-  }
-
   /** Streaming NEAR-dup ingest (r11 verdict item 6): the persisted
     * LSH band index composed with foreachBatch — the sketch-store
     * sink precedent ([[Events.sketchStoreSink]]) applied to
@@ -96,26 +71,22 @@ object Ingest {
     * floor), and boundary_invariant pinned TRUE.
     */
   def lshIngestFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
     import graft.dedup.LshIngest
     val docs = Readers.parquet(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "text")
-    val stage = Files.createTempDirectory("graft_lsh_stream")
-    val work = Files.createTempDirectory("graft_lsh_stream_work")
-    try {
-      val indexPath = s"$work/index"
+    val recrawl = docs.filter(pmod(col("doc_id"), lit(10L)) === 3L)
+      .select((col("doc_id") + 10000000L).as("doc_id"),
+        concat(col("text"), lit(" zzrecrawlpad")).as("text"),
+        lit("recrawl").as("batch_src"))
+    val fresh = docs.filter(pmod(col("doc_id"), lit(10L)) === 4L)
+      .select((col("doc_id") + 20000000L).as("doc_id"),
+        concat_ws(" ", reverse(split(trim(lower(col("text"))), "\\s+")))
+          .as("text"),
+        lit("fresh_reversed").as("batch_src"))
+    val incoming = recrawl.unionByName(fresh).localCheckpoint(true)
+    Feed((0 until 3).map(i => incoming.filter(pmod(col("doc_id"), lit(3L)) === i)): _*) { feed =>
+      val indexPath = feed.path("index")
       LshIngest.writeIndex(docs, "doc_id", "text", indexPath)
-      val recrawl = docs.filter(pmod(col("doc_id"), lit(10L)) === 3L)
-        .select((col("doc_id") + 10000000L).as("doc_id"),
-          concat(col("text"), lit(" zzrecrawlpad")).as("text"),
-          lit("recrawl").as("batch_src"))
-      val fresh = docs.filter(pmod(col("doc_id"), lit(10L)) === 4L)
-        .select((col("doc_id") + 20000000L).as("doc_id"),
-          concat_ws(" ", reverse(split(trim(lower(col("text"))), "\\s+")))
-            .as("text"),
-          lit("fresh_reversed").as("batch_src"))
-      val incoming = recrawl.unionByName(fresh).localCheckpoint(true)
       // one-shot reference BEFORE any append mutates the index
       val (_, dups1, _, sigs1) = LshIngest.screen(
         spark, incoming, "doc_id", "text", indexPath)
@@ -126,19 +97,10 @@ object Ingest {
           coalesce(col("novel_oneshot"), lit(true)).as("novel_oneshot"))
         .localCheckpoint(true)
       sigs1.unpersist()
-      (0 until 3).foreach { i =>
-        stageBatch(incoming.filter(pmod(col("doc_id"), lit(3L)) === i)
-          .coalesce(1), stage, f"$i%02d_batch")
-      }
-      val verdictsPath = s"$work/verdicts"
-      val stream = spark.readStream.schema(incoming.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(stage.toString)
-      val q = lshIngestSink(stream, "doc_id", "text", indexPath,
-        verdictsPath, s"$work/cp")
+      val q = lshIngestSink(feed.stream(), "doc_id", "text", indexPath,
+        feed.path("verdicts"), feed.path("cp"))
       try q.processAllAvailable() finally q.stop()
-      val streamed = Readers.parquet(spark, verdictsPath)
+      val streamed = Readers.parquet(spark, feed.path("verdicts"))
       val designed = when(col("batch_src") === "recrawl", !col("novel"))
         .otherwise(col("novel"))
       incoming.select("doc_id", "batch_src")
@@ -152,13 +114,6 @@ object Ingest {
             >= count(lit(1)) * 0.9).as("verdict_ok"),
           (sum(when(col("novel") <=> col("novel_oneshot"), 1L).otherwise(0L))
             === count(lit(1))).as("boundary_invariant"))
-        .localCheckpoint(eager = true)
-    } finally {
-      Seq(stage, work).foreach { d =>
-        val walked = Files.walk(d)
-        try walked.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-        finally walked.close()
-      }
     }
   }
 
@@ -172,44 +127,25 @@ object Ingest {
     * recrawled ones) flips both counts and char sums red.
     */
   def ingestDedupFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
     val docs = Readers.parquet(spark, s"$sfDir/documents.parquet")
       .select("doc_id", "text", "source")
     // corpus-derived id offset (the r7 convention: never a magic
     // constant that a bigger SF could collide with)
     val offset = docs.agg(coalesce(max("doc_id"), lit(0L))).head().getLong(0) + 1L
-    val stage = Files.createTempDirectory("graft_ingest_dedup")
-    try {
-      stageBatch(docs.select((col("doc_id") + offset).as("doc_id"),
-        col("text"), col("source")), stage, "00_recrawl")
-      stageBatch(docs.select((col("doc_id") + lit(2L) * offset).as("doc_id"),
-        concat(lit("fresh "), col("doc_id").cast("string"), lit(" "), col("text")).as("text"),
-        col("source")), stage, "01_fresh")
+    val recrawl = docs.select((col("doc_id") + offset).as("doc_id"),
+      col("text"), col("source"))
+    val fresh = docs.select((col("doc_id") + lit(2L) * offset).as("doc_id"),
+      concat(lit("fresh "), col("doc_id").cast("string"), lit(" "), col("text")).as("text"),
+      col("source"))
+    Feed(recrawl, fresh) { feed =>
       val historical = docs.select(xxhash64(col("text")).as("h")).distinct()
-      val incoming = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "64")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(stage.toString)
-      val novel = incoming.withColumn("h", xxhash64(col("text")))
+      val novel = feed.stream().withColumn("h", xxhash64(col("text")))
         .join(historical, Seq("h"), "left_anti")
         .drop("h")
-      val name = "graft_ingest_dedup"
-      val q = novel.writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      spark.table(name)
+      Feed.toMemory(novel, OutputMode.Append(), "graft_ingest_dedup")
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
           sum(length(col("text"))).as("n_chars"))
-        .localCheckpoint(eager = true)
-    } finally {
-      val walked = Files.walk(stage)
-      try walked.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-      finally walked.close()
     }
   }
 }

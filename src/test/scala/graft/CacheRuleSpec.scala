@@ -9,26 +9,33 @@ package graft
   * or through a lazy local checkpoint (no `CacheManager` entry) when
   * it returns a lazy frame.
   *
+  * The same holds for temporary views: a view left in the session
+  * catalog outlives the call, and a later call's `s.sql` over the same
+  * name reads whatever the last caller registered.
+  *
   * The sweep builds and collects every registered gate at sf0.001 and
-  * records each one that leaves an entry behind; the cache is cleared
-  * after each so one offender does not mask the next.
+  * records each one that leaves a cache entry or a temp view behind;
+  * both are cleared after each so one offender does not mask the next.
   */
 class CacheRuleSpec extends SparkSpec {
 
   test("no gate leaves a CacheManager entry after its collect") {
     val cm = spark.sharedState.cacheManager
+    val catalog = spark.sessionState.catalog
     spark.catalog.clearCache()
-    def leaked(name: String)(body: => Unit): Option[String] = {
+    catalog.getTempViewNames().foreach(spark.catalog.dropTempView)
+    def leaked(name: String)(body: => Unit): Seq[String] = {
       body
-      val left = !cm.isEmpty
+      val views = catalog.getTempViewNames()
+      val left = (if (cm.isEmpty) Nil else Seq(s"$name: cache entry")) ++
+        views.map(v => s"$name: temp view $v")
       spark.catalog.clearCache()
-      if (left) Some(name) else None
+      views.foreach(spark.catalog.dropTempView)
+      left
     }
-    val staged = leaked("stageTier")(SparkEntry.stageTier(spark, sf()))
-    val failures = staged.toSeq ++ SparkEntry.gates.flatMap { g =>
-      leaked(g.name)(g.build(spark, sf()).collect())
-    }
+    val failures = leaked("stageTier")(SparkEntry.stageTier(spark, sf())) ++
+      SparkEntry.gates.flatMap(g => leaked(g.name)(g.build(spark, sf()).collect()))
     assert(failures.isEmpty,
-      s"\n${failures.size} calls left a cache entry:\n  ${failures.mkString("\n  ")}")
+      s"\n${failures.size} leftovers:\n  ${failures.mkString("\n  ")}")
   }
 }

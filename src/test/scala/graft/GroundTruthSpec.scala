@@ -162,8 +162,8 @@ class GroundTruthSpec extends SparkSpec {
     assert(byLabel(1.0)._1 > 0 && byLabel(0.0)._1 > 0)
     assert(byLabel(1.0) === (byLabel(1.0)._1, byLabel(1.0)._1), s"pos: $byLabel")
     assert(byLabel(0.0) === (byLabel(0.0)._1, byLabel(0.0)._1), s"neg: $byLabel")
-    // filterDocs at 0.5 keeps exactly the reference-like half
-    val kept = QualityClassifier.filterDocs(model, all.filter(col("is_eval")), "text", 0.5)
+    // filtering the scores at 0.5 keeps exactly the reference-like half
+    val kept = eval.filter(col("quality_prob") >= 0.5)
     assert(kept.count() === byLabel(1.0)._1)
     assert(kept.filter(col("label") =!= 1.0).count() === 0L)
     // margin-formula hand-pin: with every coefficient 1.0 the

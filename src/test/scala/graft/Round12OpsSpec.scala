@@ -198,26 +198,18 @@ class Round12OpsSpec extends SparkSpec {
     // a near-dup of a batch-1 INCOMING doc arriving in batch 2 must
     // flag against it — proving the per-batch index append is live,
     // not just harmless
-    import java.nio.file.Files
     import spark.implicits._
-    val stage = Files.createTempDirectory("graft_lsh_sink_spec")
-    val work = Files.createTempDirectory("graft_lsh_sink_spec_w")
     val base = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta")).toDF("doc_id", "text")
-    graft.dedup.LshIngest.writeIndex(base, "doc_id", "text", s"$work/index")
     // batch 1: a NOVEL doc; batch 2: a one-token-appended near-dup of it
     val b1 = Seq((10L, "red orange yellow green blue indigo violet ultraviolet")).toDF("doc_id", "text")
     val b2 = Seq((20L, "red orange yellow green blue indigo violet ultraviolet extra")).toDF("doc_id", "text")
-    graft.streaming.Ingest.stageBatch(b1.coalesce(1), stage, "00_b1")
-    graft.streaming.Ingest.stageBatch(b2.coalesce(1), stage, "01_b2")
-    val stream = spark.readStream.schema(b1.schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(stage.toString)
-    val q = graft.streaming.Ingest.lshIngestSink(stream, "doc_id", "text",
-      s"$work/index", s"$work/verdicts", s"$work/cp")
-    try q.processAllAvailable() finally q.stop()
-    val verdicts = spark.read.parquet(s"$work/verdicts")
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val verdicts = graft.streaming.Feed(b1, b2) { feed =>
+      graft.dedup.LshIngest.writeIndex(base, "doc_id", "text", feed.path("index"))
+      val q = graft.streaming.Ingest.lshIngestSink(feed.stream(), "doc_id", "text",
+        feed.path("index"), feed.path("verdicts"), feed.path("cp"))
+      try q.processAllAvailable() finally q.stop()
+      spark.read.parquet(feed.path("verdicts"))
+    }.collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(verdicts(10L) === true)   // novel vs the base index
     assert(verdicts(20L) === false)  // flagged against batch 1's delta
   }

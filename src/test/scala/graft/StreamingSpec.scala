@@ -262,6 +262,33 @@ class StreamingSpec extends SparkSpec {
     assert(out === expected, s"stream=$out batch=$expected")
   }
 
+  test("stream gates give the same rows over a directory-form events table") {
+    // the layout DataGen.write gives a generated tier: events.parquet as
+    // a Spark-written directory of round-robin parts, every other table
+    // as on sf0.001
+    import java.nio.file.{Files, Paths}
+    val tier = Files.createTempDirectory("graft_dir_tier")
+    try {
+      Tables.all.filterNot(_ == "events").foreach { t =>
+        Files.copy(Paths.get(sf(), s"$t.parquet"), tier.resolve(s"$t.parquet"))
+      }
+      Tables.events(spark, sf()).repartition(3)
+        .write.parquet(tier.resolve("events.parquet").toString)
+      def rows(q: String, dir: String): Seq[String] =
+        SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+      val differing = Seq("q_stream_windows", "q_sessionize_stream", "q_stream_join",
+          "q_stream_join_outer", "q_stream_dedup", "q_stream_sketch_store",
+          "q_stream_exactly_once").flatMap { q =>
+        val flat = rows(q, sf())
+        assert(flat.nonEmpty, q)
+        scala.util.Try(rows(q, tier.toString)).fold(
+          e => Some(s"$q: ${e.getMessage.linesIterator.next().take(200)}"),
+          dir => if (dir == flat) None else Some(s"$q: ${dir.size} rows vs ${flat.size}"))
+      }
+      assert(differing.isEmpty, differing.mkString("\n"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tier.toFile)
+  }
+
   private implicit class MapOps(rows: Array[(String, Long, Double)]) {
     def toMap2: Map[String, (Long, Double)] =
       rows.map { case (k, a, b) => k -> (a, b) }.toMap
