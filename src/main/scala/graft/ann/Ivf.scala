@@ -1,11 +1,14 @@
 package graft.ann
 
-import graft.functions.{CentroidSet, VectorFunctions, VectorMean}
+import graft.functions.{CentroidSet, CentroidTable, VectorFunctions, VectorMean}
 import graft.sources.Readers
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types._
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -26,13 +29,16 @@ import scala.jdk.CollectionConverters._
   * each query's top-nprobe cells, no window) read that leaf; no plan
   * re-aggregates or broadcasts the centroids.
   *
-  * Everything is deterministic: centroid seeds are the top-C vectors
-  * by xxhash64(vec_id) (a seedless pseudo-random draw), refined by a
-  * fixed number of Lloyd iterations. Each iteration is one Spark job
-  * with no exchange: the assignment pass folds every partition's rows
-  * into one `VectorMean.Sums` per cell (c·dim sums), the buffers
-  * combine in a `treeAggregate`, and only the ≤ c means stay on the
-  * driver.
+  * Everything is deterministic: centroid seeds are the first C
+  * vectors by xxhash64(vec_id) (a seedless pseudo-random draw),
+  * refined by a fixed number of Lloyd iterations. Training plans its
+  * corpus once, as one RDD, and runs `1 + iters` jobs over it: one
+  * returns the row count and the corpus head in that hash order, and
+  * each Lloyd iteration is one job with no exchange: every partition
+  * assigns its rows with [[CentroidTable.assign]], the call
+  * `nearest_centroid` makes, and folds them into one `VectorMean.Sums`
+  * per cell (c·dim sums); the buffers combine in a `treeAggregate`,
+  * and only the ≤ c means stay on the driver.
   */
 object Ivf {
 
@@ -41,65 +47,195 @@ object Ivf {
     * seeds keep the stored element width (`iters = 0` returns them
     * as stored); each refinement's means are `array<double>` and drop
     * a cell no non-NULL embedding reached, so at most `c` rows come
-    * back (none for an empty or all-NULL corpus). Runs at call time:
-    * one job for the seeds and one per iteration.
+    * back (none for an empty, all-NULL or all-zero corpus). Runs at
+    * call time: `1 + iters` jobs over one plan of `corpus` ([[train]]).
     */
-  def centroids(corpus: DataFrame, c: Int, iters: Int = 2): DataFrame = {
+  def centroids(corpus: DataFrame, c: Int, iters: Int = 2): DataFrame =
+    train(corpus, c, iters, sampled = false)(_ => c).cents
+
+  /** A corpus planned once and what [[train]] learned on it. `rows`
+    * are `(vec_id: long, xxhash64(vec_id), embedding)` with the
+    * embedding's element type `et`; `table` is the final centroid set
+    * as [[CentroidTable.assign]] reads it and `cents` the same set as
+    * [[centroids]] returns it.
+    */
+  private[graft] final class Trained(val rows: RDD[InternalRow], val et: DataType,
+      val table: CentroidTable, val cents: DataFrame)
+
+  /** Trains centroids on `corpus` (vec_id, embedding), planned once.
+    *
+    * One job counts the rows and keeps the first `maxCells` of the
+    * corpus head (a bounded heap per partition, merged by the tree):
+    * the rows in `(xxhash64(vec_id), vec_id)` order (for a long id
+    * the hash is `XXH64.hashLong(id, 42)`; a NULL id hashes to 42 and
+    * sorts first among its hash), copies of one id in the order of
+    * their vectors ([[compareVectors]]), skipping NULL embeddings and
+    * those whose norm is not a positive number (zero: their cosine to
+    * every row is NaN, which ranks highest, so a zero seed would pull
+    * every row into its cell). With the count known, `cells(n)` (at
+    * most `maxCells`) picks c, and the first c of the head are the
+    * seeds, numbered in that order. With no seed there is nothing to
+    * refine.
+    *
+    * Each Lloyd update is one job: a cell's positional mean,
+    * `vector_mean`'s arithmetic, folded per partition into one Sums
+    * per cell and combined by `treeAggregate` (one stage at a few
+    * partitions; a level more only at many, so the driver never
+    * receives P full c·dim buffers). A float sum is exact in double, so
+    * float means do not depend on partitioning or merge order;
+    * double means do, to rounding. A cell only NULL or empty
+    * embeddings reached has no mean and is dropped; rows with no
+    * comparable centroid (a NULL cluster_id) form their own cell.
+    *
+    * With `sampled`, once n > 256·c Lloyd trains on the rows with
+    * `pmod(xxhash64(vec_id), n / (256·c) + 1) = 0` (the FAISS
+    * convention: k-means converges on a sample, only the assignment
+    * needs the full corpus), filtered as each pass reads the rows. The
+    * seeds stay the first c of the whole corpus's head, so no second
+    * seed pass runs; at n ≤ 256·c the sample is the corpus.
+    */
+  private[graft] def train(corpus: DataFrame, maxCells: Int, iters: Int, sampled: Boolean)(
+      cells: Long => Int): Trained = {
     // keep the STORED element width (float for the testdata corpus):
-    // the kernel widens per element, so results are bit-identical to
-    // an up-front toDouble while every assignment pass moves half the
-    // bytes
-    val emb = corpus.select(col("vec_id"), col("embedding").as("emb"))
-    // Seed selection: top-c by a pseudo-random hash order, planned as
-    // TakeOrderedAndProject — per-partition top-c then c rows merged
-    // on one task, never a whole-corpus single-task Window (the r1
-    // row_number() form funneled the full corpus through one
-    // partition). A seed's id is its position in that order.
-    val seeds = emb.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(c)
-      .select(col("emb")).collect()
-    val seedSchema = StructType(Seq(StructField("cluster_id", IntegerType, nullable = false),
-      StructField("centroid", emb.schema("emb").dataType)))
-    var cents = local(corpus, seedSchema,
-      seeds.toSeq.zipWithIndex.map { case (r, i) => Row(i, r.get(0)) })
-    // Lloyd update: each cell's positional mean, `vector_mean`'s
-    // arithmetic, in ONE job over the assignment plan: every partition
-    // folds its rows into one Sums per cell and treeAggregate combines
-    // the buffers (one stage at a few partitions; it adds a level only
-    // at many, so the driver never receives P full c·dim buffers). A
-    // float sum is exact in double, so float means do not depend on
-    // partitioning or merge order; double means do, to rounding. A
-    // cell only NULL or empty embeddings reached has no mean and is
-    // dropped; rows with no comparable centroid (a NULL cluster_id)
-    // form their own cell.
-    val meanSchema = StructType(Seq(StructField("cluster_id", IntegerType),
-      StructField("centroid", ArrayType(DoubleType, containsNull = true))))
-    var i = 0
-    while (i < iters) {
-      val assigned = index(corpus, cents)
-      val et = assigned.schema("emb").dataType.asInstanceOf[ArrayType].elementType
-      val sums = assigned.queryExecution.toRdd
-        .treeAggregate(mutable.HashMap.empty[Option[Int], VectorMean.Sums])(
-          (cells, row) => {
-            val cell = if (row.isNullAt(1)) None else Some(row.getInt(1))
-            cells.getOrElseUpdate(cell, new VectorMean.Sums(0))
-              .add(row.getArray(2), et)
-            cells
-          },
-          (a, b) => {
-            b.foreach { case (cell, s) =>
-              a.get(cell) match {
-                case Some(sum) => sum.merge(s)
-                case None => a(cell) = s
-              }
+    // rows are widened as they are read, so results are bit-identical
+    // to an up-front toDouble while every pass moves half the bytes
+    val planned = corpus.select(col("vec_id").cast(LongType), xxhash64(col("vec_id")),
+      col("embedding"))
+    val embType = planned.schema(2).dataType
+    val et = embType.asInstanceOf[ArrayType].elementType
+    val rows = planned.queryExecution.toRdd
+    val head = rows.treeAggregate(new Head(maxCells, et))(_ add _, _ merge _)
+    val c = math.min(cells(head.n), maxCells)
+    val seeds = head.sorted.take(c)
+    val every = if (sampled && head.n > 256L * c) head.n / (256L * c) + 1 else 1L
+    // (cluster_id, centroid) in cluster_id order: the seeds at their
+    // stored width, then each iteration's means
+    var set: Seq[(Option[Int], ArrayData)] =
+      seeds.toSeq.zipWithIndex.map { case (s, i) => (Some(i), s.emb) }
+    var table = CentroidTable(set, et)
+    for (_ <- 0 until (if (seeds.isEmpty) 0 else iters)) {
+      val t = table
+      val sums = rows.mapPartitions { it =>
+        val cells: CellSums = mutable.HashMap.empty
+        var x = new Array[Double](0)
+        it.foreach { row =>
+          if (every == 1L || java.lang.Math.floorMod(row.getLong(1), every) == 0L) {
+            val emb = if (row.isNullAt(2)) null else row.getArray(2)
+            val j = if (emb == null) -1 else {
+              if (x.length != emb.numElements()) x = new Array[Double](emb.numElements())
+              t.assign(emb, et, x)
             }
-            a
-          })
-      cents = local(corpus, meanSchema, sums.toSeq.sortBy(_._1).flatMap { case (cell, s) =>
-        Option(s.mean).map(m => Row(cell.map(Int.box).orNull, m.toSeq[Any](DoubleType)))
-      })
-      i += 1
+            cells.getOrElseUpdate(if (j < 0 || t.idNull(j)) None else Some(t.ids(j)),
+              new VectorMean.Sums(0)).add(emb, et)
+          }
+        }
+        Iterator.single(cells)
+      }.treeAggregate(mutable.HashMap.empty: CellSums)(merge, merge)
+      set = sums.toSeq.sortBy(_._1).flatMap { case (cell, s) => Option(s.mean).map(cell -> _) }
+      table = CentroidTable(set, DoubleType)
     }
-    cents
+    val (schema, vt) =
+      if (iters == 0) (StructType(Seq(StructField("cluster_id", IntegerType, nullable = false),
+        StructField("centroid", embType))), et)
+      else (StructType(Seq(StructField("cluster_id", IntegerType),
+        StructField("centroid", ArrayType(DoubleType, containsNull = true)))), DoubleType)
+    val cents = local(corpus, schema, set.map { case (cell, v) =>
+      Row(cell.map(Int.box).orNull, v.toSeq[Any](vt)) })
+    new Trained(rows, et, table, cents)
+  }
+
+  /** Per-cell sums; a NULL cluster_id is the cell `None`. */
+  private type CellSums = mutable.HashMap[Option[Int], VectorMean.Sums]
+
+  /** Adds `b`'s cell sums into `a`. */
+  private def merge(a: CellSums, b: CellSums): CellSums = {
+    b.foreach { case (cell, s) =>
+      a.get(cell) match {
+        case Some(sum) => sum.merge(s)
+        case None => a(cell) = s
+      }
+    }
+    a
+  }
+
+  /** Orders two widened vectors element by element with
+    * `java.lang.Double.compare`, a shorter prefix first; NULL first.
+    */
+  private[graft] def compareVectors(a: Array[Double], b: Array[Double]): Int =
+    if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
+    else {
+      var i = 0
+      while (i < a.length && i < b.length && java.lang.Double.compare(a(i), b(i)) == 0) i += 1
+      if (i < a.length && i < b.length) java.lang.Double.compare(a(i), b(i))
+      else Integer.compare(a.length, b.length)
+    }
+
+  /** A seed candidate: its place in the hash order and its stored
+    * embedding.
+    */
+  private final class Seed(val hash: Long, val id: java.lang.Long, val emb: ArrayData)
+    extends Serializable
+
+  /** Hash ascending, then a NULL id first, then id ascending, then
+    * the vectors (of element type `et`) by [[compareVectors]].
+    */
+  private final class SeedOrder(et: DataType) extends Ordering[Seed] {
+    /** `(hash, id)` against `b`'s. */
+    def compareKey(hash: Long, id: java.lang.Long, b: Seed): Int = {
+      val byHash = java.lang.Long.compare(hash, b.hash)
+      if (byHash != 0) byHash
+      else if (id == null || b.id == null) java.lang.Boolean.compare(id != null, b.id != null)
+      else java.lang.Long.compare(id, b.id)
+    }
+
+    private def widened(v: ArrayData): Array[Double] = {
+      val x = new Array[Double](v.numElements())
+      CentroidTable.widen(v, et, x)
+      x
+    }
+
+    def compare(a: Seed, b: Seed): Int = {
+      val byKey = compareKey(a.hash, a.id, b)
+      if (byKey != 0) byKey else compareVectors(widened(a.emb), widened(b.emb))
+    }
+  }
+
+  /** The row count and the first `k` seed candidates in [[SeedOrder]]:
+    * a bounded max-heap per partition, merged by the tree. A row is
+    * widened and copied only when its key can still enter the heap.
+    */
+  private final class Head(k: Int, et: DataType) extends Serializable {
+    var n = 0L
+    private val order = new SeedOrder(et)
+    private val heap = new java.util.PriorityQueue[Seed](math.max(1, k), order.reverse)
+
+    def add(row: InternalRow): Head = {
+      n += 1
+      if (k > 0 && !row.isNullAt(2)) {
+        val (hash, id) = (row.getLong(1), if (row.isNullAt(0)) null else Long.box(row.getLong(0)))
+        if (heap.size < k || order.compareKey(hash, id, heap.peek()) <= 0) {
+          val emb = row.getArray(2)
+          val norm = CentroidTable.widen(emb, et, new Array[Double](emb.numElements()))
+          if (norm > 0 && norm < Double.PositiveInfinity) offer(new Seed(hash, id, emb.copy()))
+        }
+      }
+      this
+    }
+
+    private def offer(s: Seed): Unit =
+      if (heap.size < k) heap.add(s)
+      else if (order.lt(s, heap.peek())) {
+        heap.poll()
+        heap.add(s)
+      }
+
+    def merge(o: Head): Head = {
+      n += o.n
+      o.heap.forEach(s => offer(s))
+      this
+    }
+
+    def sorted: Array[Seed] = heap.toArray(new Array[Seed](0)).sorted(order)
   }
 
   /** `rows` as a local relation in `like`'s session. */

@@ -75,49 +75,29 @@ case class NearestCentroid(left: Expression, right: Expression)
 
   override def nullSafeEval(e: Any, c: Any): Any = {
     val emb = e.asInstanceOf[ArrayData]
-    val n = emb.numElements()
-    val et = embType
-    val x = new Array[Double](n)
-    var na = 0.0
-    var i = 0
-    while (i < n) {
-      if (emb.isNullAt(i)) return null
-      x(i) = CosineSimilarity.getDouble(et, emb, i)
-      na += x(i) * x(i)
-      i += 1
-    }
     val table = right match {
       case s: CentroidSet => s.table
       case _ => CentroidTable.decode(c.asInstanceOf[ArrayData], centStruct)
     }
-    val j = table.nearest(x, math.sqrt(na))
+    val j = table.assign(emb, embType, new Array[Double](emb.numElements()))
     if (j < 0 || table.idNull(j)) null else table.ids(j)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val tableClass = classOf[CentroidTable].getName
     val buf = ctx.addMutableState("double[]", "embBuf", v => s"$v = new double[0];")
+    val et = ctx.addReferenceObj("embType", embType, classOf[DataType].getName)
     def assign(emb: String, table: String): String = {
-      val Seq(n, na, i, xi, t, j) = Seq("n", "na", "i", "xi", "t", "j").map(ctx.freshName)
+      val Seq(n, t, j) = Seq("n", "t", "j").map(ctx.freshName)
       s"""
          |int $n = $emb.numElements();
          |if ($buf.length != $n) $buf = new double[$n];
-         |double $na = 0.0;
-         |int $i = 0;
-         |for (; $i < $n; $i++) {
-         |  if ($emb.isNullAt($i)) break;
-         |  double $xi = ${CosineSimilarity.getter(embType, emb, i)};
-         |  $buf[$i] = $xi;
-         |  $na += $xi * $xi;
-         |}
+         |$tableClass $t = $table;
+         |int $j = $t.assign($emb, $et, $buf);
          |${ev.isNull} = true;
-         |if ($i == $n) {
-         |  $tableClass $t = $table;
-         |  int $j = $t.nearest($buf, java.lang.Math.sqrt($na));
-         |  if ($j >= 0 && !$t.idNull()[$j]) {
-         |    ${ev.isNull} = false;
-         |    ${ev.value} = $t.ids()[$j];
-         |  }
+         |if ($j >= 0 && !$t.idNull()[$j]) {
+         |  ${ev.isNull} = false;
+         |  ${ev.value} = $t.ids()[$j];
          |}
        """.stripMargin
     }
@@ -207,6 +187,17 @@ case class NearestCentroids(left: Expression, right: Expression, n: Int)
 final class CentroidTable(val ids: Array[Int], val idNull: Array[Boolean],
     val vecs: Array[Array[Double]], val norms: Array[Double]) extends Serializable {
 
+  /** The row assignment [[NearestCentroid]] makes, and the only one:
+    * `emb` (elements of numeric type `et`) is widened into `x`, which
+    * must have its length, and the index of the centroid [[nearest]]
+    * picks for it comes back; -1 when `emb` holds a NULL or no
+    * centroid is comparable.
+    */
+  def assign(emb: ArrayData, et: DataType, x: Array[Double]): Int = {
+    val norm = CentroidTable.widen(emb, et, x)
+    if (norm < 0) -1 else nearest(x, norm)
+  }
+
   /** The index of the centroid [[NearestCentroid]] picks for the
     * NULL-free vector `x` of norm `rowNorm`, or -1 when none is
     * comparable.
@@ -238,11 +229,10 @@ final class CentroidTable(val ids: Array[Int], val idNull: Array[Boolean],
     * NULL query still gets `n` cells, in id order.
     */
   def top(emb: ArrayData, et: DataType, n: Int): ArrayData = {
-    val x = if (emb == null || (0 until emb.numElements()).exists(emb.isNullAt)) null
-      else Array.tabulate(emb.numElements())(CosineSimilarity.getDouble(et, emb, _))
-    val rowNorm = if (x == null) 0.0 else math.sqrt(x.foldLeft(0.0)((na, xi) => na + xi * xi))
+    val x = if (emb == null) null else new Array[Double](emb.numElements())
+    val rowNorm = if (x == null) -1.0 else CentroidTable.widen(emb, et, x)
     val sims = Array.tabulate(vecs.length) { j =>
-      if (x != null && comparable(j, x.length)) Some(cosine(x, rowNorm, j)) else None
+      if (rowNorm >= 0 && comparable(j, x.length)) Some(cosine(x, rowNorm, j)) else None
     }
     def before(a: Int, b: Int): Boolean = (sims(a), sims(b)) match {
       case (Some(sa), Some(sb)) if SQLOrderingUtil.compareDoubles(sa, sb) != 0 =>
@@ -275,36 +265,55 @@ final class CentroidTable(val ids: Array[Int], val idNull: Array[Boolean],
 
 object CentroidTable {
 
+  /** Widens `v`'s elements (numeric type `et`) into `x`, which must
+    * have its length, and returns `sqrt(Σx²)` accumulated in index
+    * order ([[CosineSimilarity]]'s arithmetic); -1 when an element is
+    * NULL.
+    */
+  def widen(v: ArrayData, et: DataType, x: Array[Double]): Double = {
+    var sq = 0.0
+    var i = 0
+    while (i < x.length) {
+      if (v.isNullAt(i)) return -1.0
+      x(i) = CosineSimilarity.getDouble(et, v, i)
+      sq += x(i) * x(i)
+      i += 1
+    }
+    math.sqrt(sq)
+  }
+
+  /** The table of `cells`: each a `cluster_id` (None for NULL) and a
+    * vector of element type `et` (NULL, or holding a NULL, for a
+    * centroid that is never comparable).
+    */
+  def apply(cells: Seq[(Option[Int], ArrayData)], et: DataType): CentroidTable = {
+    val c = cells.size
+    val (ids, idNull) = (new Array[Int](c), new Array[Boolean](c))
+    val (vecs, norms) = (new Array[Array[Double]](c), new Array[Double](c))
+    cells.zipWithIndex.foreach { case ((id, v), j) =>
+      idNull(j) = id.isEmpty
+      id.foreach(ids(j) = _)
+      if (v != null) {
+        val y = new Array[Double](v.numElements())
+        val norm = widen(v, et, y)
+        if (norm >= 0) {
+          vecs(j) = y
+          norms(j) = norm
+        }
+      }
+    }
+    new CentroidTable(ids, idNull, vecs, norms)
+  }
+
   /** Decodes `array<struct<cluster_id:int, centroid:array<num>>>`. */
   def decode(cents: ArrayData, st: StructType): CentroidTable = {
     val (idOrd, vecOrd) = (st.fieldIndex("cluster_id"), st.fieldIndex("centroid"))
     val et = st("centroid").dataType.asInstanceOf[ArrayType].elementType
-    val c = cents.numElements()
-    val (ids, idNull) = (new Array[Int](c), new Array[Boolean](c))
-    val (vecs, norms) = (new Array[Array[Double]](c), new Array[Double](c))
-    var j = 0
-    while (j < c) {
+    CentroidTable((0 until cents.numElements()).map { j =>
       val r: InternalRow = if (cents.isNullAt(j)) null else cents.getStruct(j, st.length)
-      idNull(j) = r == null || r.isNullAt(idOrd)
-      if (!idNull(j)) ids(j) = r.getInt(idOrd)
-      if (r != null && !r.isNullAt(vecOrd)) {
-        val v = r.getArray(vecOrd)
-        val y = new Array[Double](v.numElements())
-        var nb = 0.0
-        var i = 0
-        while (i < y.length && !v.isNullAt(i)) {
-          y(i) = CosineSimilarity.getDouble(et, v, i)
-          nb += y(i) * y(i)
-          i += 1
-        }
-        if (i == y.length) {
-          vecs(j) = y
-          norms(j) = math.sqrt(nb)
-        }
-      }
-      j += 1
-    }
-    new CentroidTable(ids, idNull, vecs, norms)
+      (if (r == null || r.isNullAt(idOrd)) None else Some(r.getInt(idOrd)),
+        if (r == null || r.isNullAt(vecOrd)) null else r.getArray(vecOrd))
+    }, et)
   }
 }
 

@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ExpressionUtils, SparkSession => ClassicSession}
+import org.apache.spark.sql.types.StructType
 
 /** Wraps a Catalyst expression as a `Column`, and back. Spark keeps this
   * conversion package-private; graft needs it for expressions that
@@ -14,4 +17,15 @@ object ExpressionColumn {
 
   /** The Catalyst expression of `c`. */
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+}
+
+/** A DataFrame over an RDD of Catalyst rows of `schema`, read as an
+  * existing-RDD scan: building it starts no job. Spark keeps
+  * `internalCreateDataFrame` package-private; graft needs it for an
+  * operator that computes its rows with an RDD kernel
+  * (`graft.dedup.SemDeDup`).
+  */
+object InternalFrame {
+  def apply(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[ClassicSession].internalCreateDataFrame(rows, schema)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.{MinHashLSH, NgramJaccard, SimHash}
 import graft.ann.Knn
@@ -210,6 +211,120 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Option[Int], Boolean)].collect().toSeq
     assert(kept.size == 40, kept)
     assert(kept.filterNot(_._3).map(_._1) == Seq(100L), kept)
+  }
+
+  /** The verdict SemDeDup computed before its cell kernel: the index
+    * joined to itself on the cell in a left-semi existence test (x is
+    * removed iff a smaller id in its cell is within `eps`), then joined
+    * back on vec_id.
+    */
+  private def semDeDupByJoin(emb: DataFrame, cents: DataFrame, eps: Double): DataFrame = {
+    val idx = graft.ann.Ivf.index(emb, cents)
+    val probe = idx.select(col("cluster_id").as("dup_cluster"),
+      col("vec_id").as("dup_id"), col("emb").as("dup_emb"))
+    val removed = idx.join(probe,
+        col("cluster_id") === col("dup_cluster") &&
+          col("dup_id") < col("vec_id") &&
+          graft.functions.VectorFunctions.cosine(col("emb"), col("dup_emb")) >= lit(eps),
+        "left_semi")
+      .select(col("vec_id"))
+    idx.join(removed.withColumn("removed", lit(true)), Seq("vec_id"), "left")
+      .select(col("vec_id"), col("cluster_id"),
+        coalesce(col("removed"), lit(false)).as("removed"))
+  }
+
+  private def vectors(rows: Seq[(Long, Seq[Float])], partitions: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (id, v) => Row(id, v) }, partitions), schema)
+    assert(df.rdd.getNumPartitions == partitions)
+    df
+  }
+
+  private def verdictRows(df: DataFrame): Seq[(Option[Long], Option[Int], Boolean)] =
+    df.as[(Option[Long], Option[Int], Boolean)].collect().toSeq.sorted
+
+  test("SemDeDup's cell kernel gives the left-semi join's verdicts at 1, 3 and 8 partitions") {
+    import graft.dedup.SemDeDup
+    // 12 tight clusters in 16 dims, ids shuffled against generation
+    // order, so many rows have a near twin on either side of their id
+    val rnd = new scala.util.Random(20261020L)
+    val centers = Seq.fill(12)(Seq.fill(16)(rnd.nextGaussian()))
+    val ids = rnd.shuffle((0L until 480L).map(_ * 7 + 3))
+    val rows = ids.zipWithIndex.map { case (id, i) =>
+      val spread = 0.05 + 0.4 * (i % 5)
+      id -> centers(i % 12).map(x => (x + spread * rnd.nextGaussian()).toFloat)
+    }
+    val c = SemDeDup.autoCells(rows.size.toLong)
+    for (eps <- Seq(0.5, 0.95)) {
+      val want = verdictRows(semDeDupByJoin(vectors(rows, 1),
+        graft.ann.Ivf.centroids(vectors(rows, 1), c), eps))
+      assert(want.size == rows.size && want.count(_._3) > 60,
+        s"eps $eps: ${want.count(_._3)} removed")
+      for (p <- Seq(1, 3, 8)) {
+        val got = verdictRows(SemDeDup.verdictsAuto(vectors(rows, p), eps))
+        assert(got == want, s"eps $eps, $p partitions: only kernel ${got.diff(want).take(5)}, " +
+          s"only join ${want.diff(got).take(5)}")
+      }
+    }
+  }
+
+  test("SemDeDup: a zero vector removes nothing and pulls no row into its cell") {
+    val rnd = new scala.util.Random(41L)
+    val rows = (1L to 40L).map(i => i -> Seq.fill(16)(rnd.nextGaussian().toFloat))
+    val without = graft.dedup.SemDeDup.verdictsAuto(vectors(rows, 2), eps = 0.95)
+    assert(without.filter(col("removed")).count() == 0)
+    val withZero = verdictRows(graft.dedup.SemDeDup.verdictsAuto(
+      vectors((0L -> Seq.fill(16)(0.0f)) +: rows, 2), eps = 0.95))
+    assert(withZero.size == 41 && withZero.forall(!_._3), withZero.filter(_._3))
+    // the zero row seeds no cell, so the 40 others do not share one
+    assert(withZero.flatMap(_._2).distinct.size > 1, withZero)
+  }
+
+  test("SemDeDup gives one row per input row when a vec_id repeats") {
+    val v = Seq(0.6f, -0.8f, 0.0f)
+    // the repeated id above the smallest: both copies removed
+    val eleven = ((100L to 109L) :+ 103L).map(_ -> v)
+    val got = verdictRows(graft.dedup.SemDeDup.verdictsAuto(vectors(eleven, 3), eps = 0.95))
+    assert(got.size == 11 && got.count(_._1.contains(103L)) == 2, got)
+    assert(got.filterNot(_._3).flatMap(_._1) == Seq(100L), got)
+    // the repeated id is the smallest: exactly one of its copies stays
+    val smallest = Seq(7L, 7L, 8L, 9L).map(_ -> v)
+    val kept = verdictRows(graft.dedup.SemDeDup.verdictsAuto(vectors(smallest, 2), eps = 0.95))
+    assert(kept.size == 4 && kept.filterNot(_._3).flatMap(_._1) == Seq(7L), kept)
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val bus = org.apache.spark.graft.ListenerBusAccess
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    bus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      bus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("IVF training runs 1 + iters jobs; a SemDeDup verdict runs one more to read") {
+    val emb = Tables.embeddings(spark, sf()).select("vec_id", "embedding")
+    for (iters <- Seq(0, 1, 3)) {
+      val (_, train) = jobsIn(graft.ann.Ivf.centroids(emb, c = 12, iters = iters))
+      assert(train == 1 + iters, s"Ivf.centroids, iters $iters: $train jobs")
+      val (verdicts, build) = jobsIn(graft.dedup.SemDeDup.verdictsAuto(emb, 0.95, iters))
+      assert(build == 1 + iters, s"SemDeDup.verdictsAuto, iters $iters: $build jobs")
+      val (_, read) = jobsIn(verdicts.collect())
+      assert(read == 1, s"SemDeDup verdict collect, iters $iters: $read jobs")
+    }
   }
 
   test("lshTopK recall against brute force is reasonable") {

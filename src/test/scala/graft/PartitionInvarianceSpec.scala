@@ -36,7 +36,9 @@ class PartitionInvarianceSpec extends SparkSpec {
     "q_retrieval_eval",    // micro-integerized BM25 sums + ranks
     "q_dedup_clusters",    // iterative connected components
     "q_bpe_train",         // trained vocabulary (merge order)
-    "q_overlap_sketch")    // HLL estimates (sketch estimator state)
+    "q_overlap_sketch",    // HLL estimates (sketch estimator state)
+    "q_semdedup",          // k-means cells + per-cell kernel shuffle
+    "q_semdedup_check")
 
   private def canonical(name: String): Seq[String] = {
     val df = SparkEntry.queries(name)(spark, sf())

@@ -27,9 +27,9 @@ class PlanSpec extends SparkSpec {
     seen.synchronized(seen.toList)
   }
 
-  /** Centroid training runs while an IVF plan is built. Its only
-    * Dataset action is the seed draw: each Lloyd iteration runs its
-    * assignment plan as one RDD job, which is no query.
+  /** Centroid training runs while an IVF plan is built. It runs its
+    * corpus plan as one RDD (the seed pass and each Lloyd iteration
+    * are RDD jobs), which is no query.
     */
   private lazy val trainingPlans = {
     val corpus = Tables.embeddings(spark, sf())
@@ -86,7 +86,7 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("RoundRobinPartitioning"), p)
   }
 
-  test("IVF: no unpartitioned Window — seeding is TakeOrdered, not a global sort") {
+  test("IVF: no unpartitioned Window — seeding runs no query, so no global sort") {
     val qe = SparkEntry.queries("q_ann_ivf")(spark, sf()).queryExecution
     // every Window must carry a partition key; an empty partitionBy
     // funnels the whole corpus through one task
@@ -95,14 +95,9 @@ class PlanSpec extends SparkSpec {
         if w.partitionSpec.isEmpty => w
     }
     assert(globalWindows.isEmpty, globalWindows.mkString("\n"))
-    // the seed draw runs at build time, so its plan is the one
-    // collected training query, not part of the gate's plan
-    assert(trainingPlans.size == 1, trainingPlans.mkString("\n\n"))
-    val seeding = trainingPlans.head
-    assert(seeding.toString.contains("TakeOrdered"), seeding.toString)
-    assert(!seeding.toString.contains("Window"), seeding.toString)
-    // the corpus file itself: no spec leaves the embeddings cached
-    assert(!seeding.toString.contains("InMemoryTableScan"), seeding.toString)
+    // the seeds are a bounded per-partition head of the training
+    // RDD, drawn at build time: no training query, sorted or not
+    assert(trainingPlans.isEmpty, trainingPlans.mkString("\n\n"))
   }
 
   test("IVF: cell assignment runs the nearest_centroid kernel, not an interpreted fold") {
