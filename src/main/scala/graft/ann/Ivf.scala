@@ -3,9 +3,10 @@ package graft.ann
 import graft.functions.{CentroidSet, CentroidTable, VectorFunctions, VectorMean}
 import graft.sources.Readers
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -39,6 +40,13 @@ import scala.jdk.CollectionConverters._
   * `nearest_centroid` makes, and folds them into one `VectorMean.Sums`
   * per cell (c·dim sums); the buffers combine in a `treeAggregate`,
   * and only the ≤ c means stay on the driver.
+  *
+  * Search ([[topK]], [[topKIndexed]]) is the distributed top-k: the
+  * queries are collected to the driver and probe the set there, then
+  * one job scores each corpus row against the queries probing its
+  * cell. Its bound: queries·dim doubles go to each task, and each task
+  * keeps a list of up to queries·k entries; no (query, row) pair is
+  * materialized, shuffled or sorted.
   */
 object Ivf {
 
@@ -253,8 +261,9 @@ object Ivf {
     * replaced, bit for bit (FunctionsSpec keeps that fold as the
     * reference). `cluster_id` is NULL for a NULL embedding, an empty
     * centroid set, or when no centroid has a comparable (equal-width,
-    * non-NULL) vector. Each input row gets one output row: `emb` is
-    * expected unique by vec_id, nothing here dedupes it.
+    * non-NULL) vector. Each input row gets one output row, so a
+    * repeated vec_id gives a row per copy; the search lists an id once
+    * ([[TopK]]).
     */
   private def assignTo(emb: DataFrame, cents: DataFrame): DataFrame =
     emb.select(col("vec_id"),
@@ -278,29 +287,235 @@ object Ivf {
         .as("cluster_id"),
       col("q_emb"))
 
-  /** Score probed cells and keep the per-query top-k. */
-  private def scoreAndRank(indexed: DataFrame, probed: DataFrame, k: Int): DataFrame = {
-    val scored = indexed.join(broadcast(probed), Seq("cluster_id"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("sim", round(VectorFunctions.cosine(col("q_emb"), col("emb")), 4))
-      .select(col("query_id"), col("vec_id").as("nbr_id"), col("sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("nbr_id"), col("sim"))
-  }
-
   private def queryEmb(queries: DataFrame): DataFrame =
     queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
 
-  /** Approximate top-k: probe the `nprobe` nearest cells per query. */
+  /** Approximate top-k: `(query_id, rank: long, nbr_id, sim)`, at most
+    * k rows per distinct query_id, ranked by `sim` descending (NaN
+    * highest, NULL last) then `nbr_id` ascending, where `sim` is
+    * `round(cosine_sim(q, x), 4)` over the rows of the query's
+    * `nprobe` nearest cells, its own id and NULL ids excluded. A
+    * neighbour id is listed once, at its best score over its copies
+    * and over the rows of a repeated query_id. Returned as a local
+    * relation: building it trains the centroids (`1 + iters` jobs over
+    * one plan of `corpus`), collects the queries (one job, none for a
+    * local relation) and runs the search (one job, [[search]]) over
+    * the trained rows.
+    */
   def topK(corpus: DataFrame, queries: DataFrame, k: Int,
-           c: Int = 16, nprobe: Int = 4, iters: Int = 2): DataFrame = {
-    val cents = centroids(corpus, c, iters)
-    // cluster_id equality join == partition pruning on an indexed corpus
-    scoreAndRank(index(corpus, cents), probe(queryEmb(queries), cents, nprobe), k)
+           c: Int = 16, nprobe: Int = 4, iters: Int = 2): DataFrame =
+    topKScored(corpus, queries, k, c, nprobe, iters)._1
+
+  /** [[topK]] and the number of (query, row) pairs its search scored. */
+  private[graft] def topKScored(corpus: DataFrame, queries: DataFrame, k: Int,
+      c: Int, nprobe: Int, iters: Int): (DataFrame, Long) = {
+    val trained = train(corpus, c, iters, sampled = false)(_ => c)
+    search(corpus.sparkSession, trained.rows, trained.et, Some(trained.table),
+      Probes(queries, trained.table, nprobe), k, corpus.schema("vec_id"))
   }
+
+  /** The queries of a search, collected to the driver once. Per query
+    * row with a non-NULL id: the list it ranks into (one per distinct
+    * query_id, `listIds`), its id, its widened vector and norm (the
+    * vector is null when the embedding is NULL or holds a NULL: every
+    * cosine is then NULL) and the cells it probes, its `nprobe` first
+    * by [[CentroidTable.top]] (the `nearest_centroids` kernel).
+    */
+  private final class Probes(val idField: StructField, val listIds: Array[Long],
+      val list: Array[Int], val ids: Array[Long], val vecs: Array[Array[Double]],
+      val norms: Array[Double], val byCell: Map[Int, Array[Int]]) {
+    /** The probed cells, ascending. */
+    def cells: Seq[Int] = byCell.keys.toSeq.sorted
+  }
+
+  private object Probes {
+    def apply(queries: DataFrame, table: CentroidTable, nprobe: Int): Probes = {
+      val frame = queries.select(col("vec_id").cast(LongType), col("embedding"))
+      val et = frame.schema(1).dataType.asInstanceOf[ArrayType].elementType
+      // the rows of the executed plan: a local relation is read with
+      // no job, any other plan is one
+      val rows = frame.queryExecution.executedPlan.executeCollect().filterNot(_.isNullAt(0))
+      val ids = rows.map(_.getLong(0))
+      val embs = rows.map(r => if (r.isNullAt(1)) null else r.getArray(1))
+      val byCell = mutable.LinkedHashMap.empty[Int, mutable.ArrayBuffer[Int]]
+      embs.zipWithIndex.foreach { case (emb, i) =>
+        val cells = table.top(emb, et, nprobe)
+        (0 until cells.numElements()).filterNot(cells.isNullAt).foreach { j =>
+          byCell.getOrElseUpdate(cells.getInt(j), mutable.ArrayBuffer.empty) += i
+        }
+      }
+      val vecs = embs.map(emb => if (emb == null) null else new Array[Double](emb.numElements()))
+      val norms = embs.indices.map(i =>
+        if (vecs(i) == null) -1.0 else CentroidTable.widen(embs(i), et, vecs(i))).toArray
+      val listIds = ids.distinct
+      val listOf = listIds.zipWithIndex.toMap
+      new Probes(queries.schema("vec_id"), listIds, ids.map(listOf), ids,
+        vecs.indices.map(i => if (norms(i) < 0) null else vecs(i)).toArray, norms,
+        byCell.map { case (cell, qs) => cell -> qs.toArray }.toMap)
+    }
+  }
+
+  /** The search of [[topK]] and [[topKIndexed]], one job over `rows`:
+    * `(vec_id: long, cell, embedding)`, the embedding's elements of
+    * type `et`. With `assign` each row's cell is the centroid
+    * [[CentroidTable.assign]] picks (the `cell` column is not read);
+    * without, it is the `cell` column, an int `cluster_id`. A row is
+    * scored against each query row probing its cell, skipping a NULL
+    * id and the query's own: [[CosineSimilarity]]'s arithmetic, the
+    * row's norm computed once. Each score is offered to its query's
+    * [[TopK]], which rounds it (Spark's `round(sim, 4)`) only when it
+    * can enter. The query vectors (queries·dim doubles) go to each
+    * task, each task keeps a list of up to k per query_id, the lists
+    * merge in a `treeAggregate`, and the driver emits them ranked as a
+    * local relation: `(query_id, rank, nbr_id, sim)`, the ids typed
+    * as `p.idField` and `nbrField`. Also returns the pairs scored.
+    */
+  private def search(spark: SparkSession, rows: RDD[InternalRow], et: DataType,
+      assign: Option[CentroidTable], p: Probes, k: Int, nbrField: StructField): (DataFrame, Long) = {
+    val (qId, nbrId) = (boxId(p.idField.dataType), boxId(nbrField.dataType))
+    // the task closure reads these, not the driver-side Probes
+    val (nLists, list, ids, vecs, norms, byCell) =
+      (p.listIds.length, p.list, p.ids, p.vecs, p.norms, p.byCell)
+    val zero = new Ranked(nLists, k)
+    val ranked = if (byCell.isEmpty) zero else rows.mapPartitions { it =>
+      val acc = new Ranked(nLists, k)
+      var x = new Array[Double](0)
+      it.foreach { row =>
+        val emb = if (row.isNullAt(2)) null else row.getArray(2)
+        if (emb != null && x.length != emb.numElements()) x = new Array[Double](emb.numElements())
+        val norm = if (emb == null) -1.0 else CentroidTable.widen(emb, et, x)
+        val probing = assign match {
+          case Some(t) =>
+            // CentroidTable.assign, with the widened row kept for scoring
+            val j = if (norm < 0) -1 else t.nearest(x, norm)
+            if (j < 0 || t.idNull(j)) null else byCell.getOrElse(t.ids(j), null)
+          case None => if (row.isNullAt(1)) null else byCell.getOrElse(row.getInt(1), null)
+        }
+        if (probing != null && !row.isNullAt(0)) {
+          val id = row.getLong(0)
+          probing.foreach { q =>
+            if (ids(q) != id) {
+              val v = vecs(q)
+              // cosine_sim is NULL for a NULL element or unequal widths
+              val isNull = v == null || norm < 0 || v.length != x.length
+              var dot = 0.0
+              var i = 0
+              while (!isNull && i < v.length) {
+                dot += v(i) * x(i)
+                i += 1
+              }
+              acc.scored += 1
+              acc.lists(list(q)).offer(isNull, if (isNull) 0.0 else dot / (norms(q) * norm), id)
+            }
+          }
+        }
+      }
+      Iterator.single(acc)
+    }.treeAggregate(zero)(_ merge _, _ merge _)
+    val schema = StructType(Seq(
+      StructField("query_id", p.idField.dataType, p.idField.nullable, p.idField.metadata),
+      StructField("rank", LongType, nullable = false),
+      StructField("nbr_id", nbrField.dataType, nbrField.nullable, nbrField.metadata),
+      StructField("sim", DoubleType)))
+    val out = for {
+      (l, h) <- ranked.lists.toSeq.zipWithIndex
+      r <- 0 until l.size
+    } yield Row(qId(p.listIds(h)), (r + 1).toLong, nbrId(l.id(r)), l.sim(r))
+    (spark.createDataFrame(out.asJava, schema), ranked.scored)
+  }
+
+  /** The typed value of a long id for an integral id column. */
+  private def boxId(t: DataType): Long => Any = t match {
+    case LongType => identity
+    case IntegerType => _.toInt
+    case ShortType => _.toShort
+    case ByteType => _.toByte
+    case other => throw new IllegalArgumentException(
+      s"IVF vec_id must be integral, got ${other.catalogString}")
+  }
+
+  /** Per query_id list, the [[TopK]] of each, and the pairs scored. */
+  private final class Ranked(n: Int, k: Int) extends Serializable {
+    val lists: Array[TopK] = Array.fill(n)(new TopK(k))
+    var scored = 0L
+
+    def merge(o: Ranked): Ranked = {
+      lists.indices.foreach(i => lists(i).merge(o.lists(i)))
+      scored += o.scored
+      this
+    }
+  }
+
+  /** One query_id's best `k` neighbours so far, best first, in the
+    * order of `row_number() OVER (ORDER BY sim DESC, nbr_id ASC)`:
+    * `sim` under Spark's double ordering (NaN highest, `-0.0 == 0.0`),
+    * NULL last, then id ascending. An id is listed once, at its best
+    * score: an entry it beats is replaced, so a list never holds an id
+    * twice, and merging lists gives the list of all their offers.
+    */
+  private final class TopK(k: Int) extends Serializable {
+    private var n = 0
+    private var nulls = new Array[Boolean](0)
+    private var sims = new Array[Double](0)
+    private var ids = new Array[Long](0)
+
+    def size: Int = n
+    def id(i: Int): Long = ids(i)
+    def sim(i: Int): Any = if (nulls(i)) null else sims(i)
+
+    /** Whether `(isNull, s, id)` ranks before entry `i`. */
+    private def before(isNull: Boolean, s: Double, id: Long, i: Int): Boolean =
+      if (isNull != nulls(i)) !isNull
+      else {
+        val c = if (isNull) 0 else SQLOrderingUtil.compareDoubles(s, sims(i))
+        if (c != 0) c > 0 else id < ids(i)
+      }
+
+    /** Offers a pair's cosine, `isNull` for a NULL one. It is rounded
+      * only when it can enter: rounding to 4 places moves a cosine by
+      * at most 0.00005, so one more than 0.0001 below a full list's
+      * last entry rounds below it too.
+      */
+    def offer(isNull: Boolean, cos: Double, id: Long): Unit =
+      if (k > 0 && !(n == k && !nulls(n - 1) && (isNull || cos + 1e-4 < sims(n - 1))))
+        add(isNull, if (isNull) cos else round4(cos), id)
+
+    private def add(isNull: Boolean, s: Double, id: Long): Unit =
+      if (n < k || before(isNull, s, id, n - 1)) {
+        var at = 0
+        while (at < n && ids(at) != id) at += 1
+        if (at == n || before(isNull, s, id, at)) {
+          if (at < n) {
+            // the id's earlier, worse entry leaves
+            System.arraycopy(nulls, at + 1, nulls, at, n - at - 1)
+            System.arraycopy(sims, at + 1, sims, at, n - at - 1)
+            System.arraycopy(ids, at + 1, ids, at, n - at - 1)
+            n -= 1
+          } else if (n == k) n -= 1
+          if (n == ids.length) {
+            val cap = math.min(k, math.max(4, 2 * n))
+            nulls = java.util.Arrays.copyOf(nulls, cap)
+            sims = java.util.Arrays.copyOf(sims, cap)
+            ids = java.util.Arrays.copyOf(ids, cap)
+          }
+          var i = n
+          while (i > 0 && before(isNull, s, id, i - 1)) {
+            nulls(i) = nulls(i - 1); sims(i) = sims(i - 1); ids(i) = ids(i - 1)
+            i -= 1
+          }
+          nulls(i) = isNull; sims(i) = s; ids(i) = id
+          n += 1
+        }
+      }
+
+    def merge(o: TopK): Unit = (0 until o.n).foreach(i => add(o.nulls(i), o.sims(i), o.ids(i)))
+  }
+
+  /** Spark's `round(d, 4)`, evaluated by its `Round` expression: HALF_UP
+    * on the double's decimal string; NaN and infinities pass unchanged.
+    */
+  private def round4(d: Double): Double =
+    Round(Literal(d), Literal(4)).eval().asInstanceOf[Double]
 
   /** IVF search over SQ8-QUANTIZED cells with exact rerank — the full
     * 100 TB ANN recipe: cells store 1-byte codes (4× less to read
@@ -420,22 +635,30 @@ object Ivf {
     }
   }
 
-  /** Search a written index. The union of probed cells is collected
-    * to the driver — bounded by `c` (tens to low hundreds) regardless
-    * of corpus size — and pushed into the scan as a LITERAL partition
-    * filter, so the plan reads nprobe-ish/c of the data (PartitionFilters,
-    * plan-asserted in spec). This, not the inline form, is what runs
-    * against a 100 TB corpus.
+  /** Search a written index: [[topK]]'s result over its cells. The
+    * centroid table is read into a set (one scan job) and the queries
+    * probe it on the driver, so the probed cells are known before the
+    * cells are read: their union, bounded by `c` (tens to low hundreds)
+    * regardless of corpus size, reaches the scan as a LITERAL partition
+    * filter ([[cellScan]]), and the search reads each row's
+    * `cluster_id` from its directory. This, not the inline form, is what
+    * runs against a 100 TB corpus. Building it starts three jobs: the
+    * centroid read, the query collect and the search.
     */
   def topKIndexed(path: String, queries: DataFrame, k: Int,
                   nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    val cents = Readers.parquet(spark, s"$path/centroids")
-    val probed = probe(queryEmb(queries), cents, nprobe)
-    val cells: Array[Int] = probed.select("cluster_id").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val indexed = Readers.parquet(spark, s"$path/cells")
-      .filter(col("cluster_id").isin(cells.map(x => x: Any): _*))
-    scoreAndRank(indexed, probed, k)
+    val table = CentroidSet.read(Readers.parquet(spark, s"$path/centroids")).table
+    val p = Probes(queries, table, nprobe)
+    val cells = cellScan(spark, path, p.cells)
+    val et = cells.schema("emb").dataType.asInstanceOf[ArrayType].elementType
+    search(spark, cells.select(col("vec_id").cast(LongType), col("cluster_id"), col("emb"))
+      .queryExecution.toRdd, et, None, p, k, cells.schema("vec_id"))._1
   }
+
+  /** The rows of `cells` in the index at `path`: the scan carries them
+    * as `PartitionFilters`, so it reads those cell directories only.
+    */
+  private[graft] def cellScan(spark: SparkSession, path: String, cells: Seq[Int]): DataFrame =
+    Readers.parquet(spark, s"$path/cells").filter(col("cluster_id").isin(cells.map(x => x: Any): _*))
 }

@@ -356,10 +356,14 @@ object CentroidSet {
     * and no listener event. A local relation's rows come back with no
     * job; a parquet centroid table is one scan.
     */
-  def of(cents: DataFrame): Column = {
+  def of(cents: DataFrame): Column = ExpressionColumn(read(cents))
+
+  /** The set [[of]] wraps, for a caller that scores on the driver or
+    * in an RDD kernel ([[CentroidSet.table]]).
+    */
+  def read(cents: DataFrame): CentroidSet = {
     val frame = cents.select("cluster_id", "centroid")
     val rows = frame.queryExecution.executedPlan.executeCollect()
-    ExpressionColumn(CentroidSet(new GenericArrayData(rows.toArray[Any]),
-      ArrayType(frame.schema, containsNull = false)))
+    CentroidSet(new GenericArrayData(rows.toArray[Any]), ArrayType(frame.schema, containsNull = false))
   }
 }

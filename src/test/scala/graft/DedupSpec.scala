@@ -233,13 +233,20 @@ class DedupSpec extends SparkSpec {
         coalesce(col("removed"), lit(false)).as("removed"))
   }
 
-  private def vectors(rows: Seq[(Long, Seq[Float])], partitions: Int): DataFrame = {
+  private def vectors(rows: Seq[(Long, Seq[Float])], partitions: Int): DataFrame =
+    nullableVectors(rows.map { case (id, v) => Option(id) -> v.map(Float.box) }, partitions)
+
+  /** `(vec_id, embedding)` rows, either part NULL where given so, in
+    * `partitions` partitions.
+    */
+  private def nullableVectors(rows: Seq[(Option[Long], Seq[java.lang.Float])],
+      partitions: Int): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType))))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(
-      rows.map { case (id, v) => Row(id, v) }, partitions), schema)
+      rows.map { case (id, v) => Row(id.orNull, v) }, partitions), schema)
     assert(df.rdd.getNumPartitions == partitions)
     df
   }
@@ -325,6 +332,181 @@ class DedupSpec extends SparkSpec {
       val (_, read) = jobsIn(verdicts.collect())
       assert(read == 1, s"SemDeDup verdict collect, iters $iters: $read jobs")
     }
+  }
+
+  /** The search `Ivf.topK` ran before its kernel, as pairs: the
+    * assigned corpus joined to the exploded probe on cluster_id, a
+    * query's own id excluded, each pair scored `round(cosine_sim, 4)`.
+    */
+  private def ivfPairsByJoin(corpus: DataFrame, queries: DataFrame,
+      c: Int, nprobe: Int, iters: Int): DataFrame = {
+    import graft.functions.{CentroidSet, VectorFunctions}
+    val cents = graft.ann.Ivf.centroids(corpus, c, iters)
+    val probed = queries.select(col("vec_id").as("query_id"),
+      explode(VectorFunctions.nearestCentroids(col("embedding"), CentroidSet.of(cents), nprobe))
+        .as("cluster_id"),
+      col("embedding").as("q_emb"))
+    graft.ann.Ivf.index(corpus, cents).join(broadcast(probed), Seq("cluster_id"))
+      .filter(col("query_id") =!= col("vec_id"))
+      .withColumn("sim", round(VectorFunctions.cosine(col("q_emb"), col("emb")), 4))
+      .select(col("query_id"), col("vec_id").as("nbr_id"), col("sim"))
+  }
+
+  /** `Ivf.topK`'s join + window form: [[ivfPairsByJoin]], then the
+    * per-query top-k by `row_number` over `sim DESC, nbr_id ASC`.
+    */
+  private def topKByWindow(corpus: DataFrame, queries: DataFrame, k: Int,
+      c: Int, nprobe: Int, iters: Int = 2): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+      .orderBy(col("sim").desc, col("nbr_id").asc)
+    ivfPairsByJoin(corpus, queries, c, nprobe, iters)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank").cast("long").as("rank"), col("nbr_id"), col("sim"))
+  }
+
+  private def rowStrings(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  test("IVF top-k kernel gives the join + window's rows on the degenerate-input battery") {
+    val rnd = new scala.util.Random(20261021L)
+    def box(v: Seq[Float]): Seq[java.lang.Float] = v.map(Float.box)
+    val centers = Seq.fill(10)(Seq.fill(16)(rnd.nextGaussian()))
+    val clustered = rnd.shuffle((0L until 400L).map(_ * 3 + 1)).zipWithIndex.map { case (id, i) =>
+      Option(id) -> box(centers(i % 10).map(x => (x + 0.3 * rnd.nextGaussian()).toFloat))
+    }
+    val queryIds = clustered.take(20).flatMap(_._1).toSet
+    def same(corpus: DataFrame, queries: DataFrame, k: Int, c: Int, nprobe: Int,
+        label: String): Seq[String] = {
+      val want = topKByWindow(corpus, queries, k, c, nprobe)
+      val got = graft.ann.Ivf.topK(corpus, queries, k, c, nprobe)
+      assert(got.schema == want.schema, s"$label: ${got.schema} vs ${want.schema}")
+      val (g, w) = (rowStrings(got), rowStrings(want))
+      assert(g == w, s"$label: only kernel ${g.diff(w).take(5)}, only window ${w.diff(g).take(5)}")
+      g
+    }
+    def queriesOf(corpus: DataFrame) = corpus.filter(col("vec_id").isin(queryIds.toSeq: _*))
+    for (p <- Seq(1, 3, 8)) {
+      val corpus = nullableVectors(clustered, p)
+      val rows = same(corpus, queriesOf(corpus), k = 7, c = 8, nprobe = 3, s"clustered, $p partitions")
+      assert(rows.size == 20 * 7, rows.size)
+    }
+    val corpus = nullableVectors(clustered, 3)
+    assert(same(nullableVectors(Seq.empty, 2), queriesOf(corpus), 5, 8, 3, "empty corpus").isEmpty)
+    assert(same(corpus, corpus.filter(lit(false)), 5, 8, 3, "empty queries").isEmpty)
+    // k above every query's candidate count: each list is its whole cell set
+    val few = nullableVectors(clustered.take(60), 2)
+    assert(same(few, queriesOf(few), 1000, 4, 1, "k above the candidates").size > 60)
+    // a zero query: every cosine is NaN (ranked highest, so by id);
+    // NULL embeddings in the corpus (never assigned) and in a query
+    // (every sim NULL), a NULL element, a NULL id on either side
+    val zero = Option(5000L) -> box(Seq.fill(16)(0f))
+    val nullEmb = Option(5001L) -> (null: Seq[java.lang.Float])
+    val nullElem = Option(5002L) -> (box(Seq.fill(15)(1f)) :+ (null: java.lang.Float))
+    val nullId = Option.empty[Long] -> clustered(3)._2
+    val odd = nullableVectors(clustered ++ Seq(nullEmb, nullElem, nullId), 3)
+    val oddQueries = nullableVectors(Seq(zero, nullEmb, nullElem, nullId, clustered(5)), 2)
+    val rows = same(odd, oddQueries, 6, 8, 3, "zero, NULL vectors and ids")
+    assert(rows.exists(_.endsWith(",NaN]")) && rows.exists(_.endsWith(",null]")), rows)
+    // ties at the 4th decimal: exact copies under other ids, and copies
+    // nudged so their cosines differ but round alike
+    val q = clustered.head
+    val nudged = (1 to 12).map { i =>
+      Option(9000L + i) -> q._2.zipWithIndex.map { case (x, j) =>
+        Float.box(if (j == i % 16) x + 1e-5f * i else x) }
+    } ++ (1 to 4).map(i => Option(8000L - i) -> q._2)
+    val tied = same(nullableVectors(clustered ++ nudged, 3),
+      nullableVectors(Seq(q), 1), 10, 8, 3, "ties at the 4th decimal")
+    assert(tied.count(_.endsWith(",1.0]")) == 10, tied)
+  }
+
+  test("IVF top-k lists a neighbour id once, at its best copy, and one list per query_id") {
+    // every cell probed, so the search is exact and the expected lists
+    // follow from brute force with the same arithmetic
+    val rnd = new scala.util.Random(20261022L)
+    val base = (0L until 30L).map(i => i -> Seq.fill(8)(rnd.nextGaussian().toFloat))
+    val (qa, qb) = (Seq.fill(8)(rnd.nextGaussian().toFloat), Seq.fill(8)(rnd.nextGaussian().toFloat))
+    // id 3 again as a copy of one query vector, id 7 again as another
+    val corpus = base ++ Seq(3L -> qa, 7L -> qb.map(_ * 2f))
+    val queries = Seq(100L -> qa, 100L -> qb, 200L -> base(7)._2)
+    def cos(a: Seq[Float], b: Seq[Float]): Double = {
+      var (dot, na, nb) = (0.0, 0.0, 0.0)
+      a.indices.foreach { i => dot += a(i) * b(i).toDouble; na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i) }
+      BigDecimal(dot / (math.sqrt(na) * math.sqrt(nb))).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+    val k = 5
+    val want = queries.groupBy(_._1).toSeq.flatMap { case (qid, qs) =>
+      corpus.filter(_._1 != qid).groupBy(_._1).toSeq
+        .map { case (id, copies) => (id, (for (q <- qs; x <- copies) yield cos(q._2, x._2)).max) }
+        .sortBy { case (id, s) => (-s, id) }.take(k).zipWithIndex
+        .map { case ((id, s), r) => (qid, r + 1L, id, s) }
+    }.sortBy(r => (r._1, r._2))
+    val got = graft.ann.Ivf.topK(vectors(corpus, 2), vectors(queries, 1), k, c = 4, nprobe = 4)
+      .as[(Long, Long, Long, Double)].collect().toSeq.sortBy(r => (r._1, r._2))
+    assert(got.map(r => (r._1, r._3)).distinct.size == got.size, got)
+    assert(got.groupBy(_._1).values.forall(l => l.map(_._2).sorted == (1L to l.size.toLong)), got)
+    assert(got == want, s"got $got\nwant $want")
+    // the copy of qa is query 100's first neighbour, at 1.0
+    assert(got.contains((100L, 1L, 3L, 1.0)), got)
+  }
+
+  test("IVF top-k builds in 1 + iters + 2 jobs, a written-index search in 3; reading starts none") {
+    val emb = Tables.embeddings(spark, sf()).select("vec_id", "embedding")
+    val q = emb.filter(col("vec_id") < 8)
+    for (iters <- Seq(0, 1, 3)) {
+      val (top, build) = jobsIn(graft.ann.Ivf.topK(emb, q, k = 5, c = 12, nprobe = 4, iters = iters))
+      assert(build == 1 + iters + 2, s"Ivf.topK, iters $iters: $build jobs")
+      val (rows, read) = jobsIn(top.collect())
+      assert(read == 0 && rows.length == 8 * 5, s"Ivf.topK collect, iters $iters: $read jobs")
+    }
+    val tmp = "/tmp/graft_ivf_jobs_spec"
+    try {
+      graft.ann.Ivf.writeIndex(emb, tmp, c = 12)
+      // the centroid read, the query collect and the search
+      val (top, build) = jobsIn(graft.ann.Ivf.topKIndexed(tmp, q, k = 5, nprobe = 4))
+      assert(build == 3, s"Ivf.topKIndexed: $build jobs")
+      val (rows, read) = jobsIn(top.collect())
+      assert(read == 0 && rows.length == 8 * 5, s"Ivf.topKIndexed collect: $read jobs")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
+  /** perfbench's embedding_dedup input of `seed` (`Gen.embedding`,
+    * draw for draw): 8,000 64-dim unit vectors around 32 centres, 80
+    * planted 0.99-scaled copies, and the 80 query ids.
+    */
+  private def benchVectors(seed: Long): (Seq[(Long, Seq[Float])], Seq[Long]) = {
+    val rnd = new java.util.SplittableRandom(seed * 31 + 3)
+    def gauss(): Double = {
+      val u1 = 1.0 - rnd.nextDouble()
+      val u2 = rnd.nextDouble()
+      math.sqrt(-2.0 * math.log(u1)) * math.cos(2 * math.Pi * u2)
+    }
+    def unit(v: Array[Double]): Array[Float] = {
+      val n = math.sqrt(v.map(x => x * x).sum)
+      v.map(x => (x / n).toFloat)
+    }
+    val (vectors, copies, queries, dim) = (8000, 80, 80, 64)
+    val centres = Array.fill(32)(Array.fill(dim)(gauss()))
+    val vecs = (0 until vectors).map { i =>
+      val c = centres(i % centres.length)
+      unit(Array.tabulate(dim)(j => c(j) + 1.2 * gauss()))
+    }
+    val origs = scala.collection.mutable.LinkedHashSet.empty[Int]
+    while (origs.size < copies) origs += rnd.nextInt(vectors)
+    val all = vecs ++ origs.toSeq.map(o => vecs(o).map(x => x * 0.99f))
+    val qs = scala.collection.mutable.LinkedHashSet.empty[Int]
+    origs.take(queries / 2).foreach(qs += _)
+    while (qs.size < queries) qs += rnd.nextInt(vectors)
+    (all.zipWithIndex.map { case (v, id) => id.toLong -> v.toSeq }, qs.toSeq.map(_.toLong))
+  }
+
+  test("IVF top-k scores the join's pairs: 162,366 on the seed-1000 benchmark vectors") {
+    val (rows, queryIds) = benchVectors(1000L)
+    val corpus = vectors(rows, 8)
+    val queries = corpus.filter(col("vec_id").isin(queryIds: _*))
+    val (top, scored) = graft.ann.Ivf.topKScored(corpus, queries, k = 10, c = 16, nprobe = 4, iters = 2)
+    val joined = ivfPairsByJoin(corpus, queries, c = 16, nprobe = 4, iters = 2).count()
+    assert(scored == joined && joined == 162366L, s"kernel $scored pairs, join $joined")
+    assert(top.count() == 80 * 10)
   }
 
   test("lshTopK recall against brute force is reasonable") {

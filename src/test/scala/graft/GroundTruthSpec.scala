@@ -275,8 +275,10 @@ class GroundTruthSpec extends SparkSpec {
     assert(indexed.collect().map(_.toString).sorted.toSeq ==
       inline.collect().map(_.toString).sorted.toSeq)
     // the probed-cells filter must reach the scan as a partition filter
-    // (reads nprobe-ish of 16 cell directories, not the corpus)
-    val scans = indexed.queryExecution.executedPlan.collectLeaves().map(_.toString)
+    // (reads nprobe-ish of 16 cell directories, not the corpus); the
+    // search runs that scan in its kernel, so its plan is read here
+    val scans = graft.ann.Ivf.cellScan(spark, tmp, Seq(1, 4, 9))
+      .queryExecution.executedPlan.collectLeaves().map(_.toString)
     val cellScan = scans.find(_.contains("cells"))
     assert(cellScan.exists(_.contains("PartitionFilters: [cluster_id")),
       s"expected partition-pruned cells scan:\n${scans.mkString("\n")}")

@@ -38,7 +38,9 @@ class PartitionInvarianceSpec extends SparkSpec {
     "q_bpe_train",         // trained vocabulary (merge order)
     "q_overlap_sketch",    // HLL estimates (sketch estimator state)
     "q_semdedup",          // k-means cells + per-cell kernel shuffle
-    "q_semdedup_check")
+    "q_semdedup_check",
+    "q_ann_ivf",           // trained cells + per-partition top-k lists
+    "q_ann_ivf_indexed")   // the same search over the written cells
 
   private def canonical(name: String): Seq[String] = {
     val df = SparkEntry.queries(name)(spark, sf())

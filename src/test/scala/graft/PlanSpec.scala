@@ -87,12 +87,14 @@ class PlanSpec extends SparkSpec {
   }
 
   test("IVF: no unpartitioned Window — seeding runs no query, so no global sort") {
-    val qe = SparkEntry.queries("q_ann_ivf")(spark, sf()).queryExecution
     // every Window must carry a partition key; an empty partitionBy
-    // funnels the whole corpus through one task
-    val globalWindows = qe.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-        if w.partitionSpec.isEmpty => w
+    // funnels the whole corpus through one task (q_ann_ivf's search
+    // plans none; q_ann_sq8 still ranks by window)
+    val globalWindows = Seq("q_ann_ivf", "q_ann_sq8").flatMap { q =>
+      SparkEntry.queries(q)(spark, sf()).queryExecution.optimizedPlan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window
+          if w.partitionSpec.isEmpty => w
+      }
     }
     assert(globalWindows.isEmpty, globalWindows.mkString("\n"))
     // the seeds are a bounded per-partition head of the training
@@ -101,7 +103,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("IVF: cell assignment runs the nearest_centroid kernel, not an interpreted fold") {
-    val p = plan("q_ann_ivf")
+    // the search assigns in its RDD kernel; Ivf.index is the plan that
+    // assigns (writeIndex, topKSq8)
+    val corpus = Tables.embeddings(spark, sf())
+    val p = graft.ann.Ivf.index(corpus, graft.ann.Ivf.centroids(corpus, c = 16))
+      .queryExecution.executedPlan.toString
     assert(p.contains("nearest_centroid("), p)
     // the r13 form: an `aggregate` lambda over the broadcast centroid
     // array, which Spark evaluates interpreted (CodegenFallback)
@@ -250,15 +256,19 @@ class PlanSpec extends SparkSpec {
   }
 
   test("IVF probe: the top-nprobe kernel, no query-keyed Window below the scoring join") {
-    val qe = SparkEntry.queries("q_ann_ivf")(spark, sf()).queryExecution
+    // topKSq8 still plans its probe (topK and topKIndexed probe on the
+    // driver, with the same kernel's CentroidTable.top)
+    val qe = SparkEntry.queries("q_ann_sq8")(spark, sf()).queryExecution
     assert(qe.executedPlan.toString.contains("nearest_centroids("), qe.executedPlan)
-    // one Window: the final per-query top-k over the scored pairs
+    // two Windows, each a per-query top-k over scored pairs: the coarse
+    // one over the dequantized `qsim`, the rerank over the exact `sim`
     val windows = qe.optimizedPlan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }
-    assert(windows.size == 1 &&
-      windows.head.orderSpec.exists(_.child.references.exists(_.name == "sim")),
-      windows.mkString("\n"))
+    def ranks(w: org.apache.spark.sql.catalyst.plans.logical.Window): Set[String] =
+      w.orderSpec.flatMap(_.child.references.map(_.name)).toSet
+    val scored = windows.map(w => ranks(w).filter(Set("qsim", "sim")).mkString).sorted
+    assert(scored == Seq("qsim", "sim"), windows.mkString("\n"))
   }
 
   test("IVF plan text does not grow with the centroid set") {
